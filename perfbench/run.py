@@ -17,6 +17,7 @@ import argparse
 import json
 import os
 import shutil
+import signal
 import sys
 import threading
 import time
@@ -28,12 +29,13 @@ import workloads  # noqa: E402
 from workloads import Context, median  # noqa: E402
 
 # name -> unit; the order and names of BENCHMARK.json. Every workload
-# reports every one: a step is a micro-batch on follow_* and a query on
-# query_mix, and throughput counts blocks or queries.
+# reports every one: throughput counts blocks on follow_* and queries on
+# query_mix. The median step (micro-batch or query) is printed and traced
+# but not bounded: a run holds 3 batches or 10 queries of five kinds, and
+# its median moved 0.17-0.31 of itself between seeds.
 END_TO_END = {
     "setup_s": "s",
     "throughput_per_s": "1/s",
-    "step_p50_s": "s",
     "peak_rss_mb": "MB",
 }
 _SINK = {
@@ -77,9 +79,10 @@ PER_LAYER = {
         for m, u in (("build_s", "s"), ("execute_s", "s"), ("stages", "count"), ("shuffle_bytes", "B"))
     },
     **_SPARK,
-    # the end-to-end metrics as the traced run measured them; tracing
-    # overhead is each minus the untraced run's value at the same seed
-    **{f"trace.{k}": u for k, u in END_TO_END.items()},
+    # the end-to-end metrics and the median step as the traced run
+    # measured them; tracing overhead is each minus the untraced run's
+    # value at the same seed
+    **{f"trace.{k}": u for k, u in {**END_TO_END, "step_p50_s": "s"}.items()},
 }
 
 
@@ -94,6 +97,77 @@ def tail(xs: list[float]) -> tuple[float, float] | None:
     return pct, sorted(xs)[n - 11]
 
 
+def _proc_state(pid: int) -> tuple[str, int] | None:
+    """(state letter, parent pid) of a live process, None once it is gone."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            fields = f.read().rsplit(")", 1)[1].split()
+        return fields[0], int(fields[1])
+    except (OSError, IndexError, ValueError):
+        return None
+
+
+def process_tree() -> set[int]:
+    """This process and all its descendants."""
+    parent: dict[int, int] = {}
+    for name in os.listdir("/proc"):
+        if name.isdigit() and (st := _proc_state(int(name))) is not None:
+            parent[int(name)] = st[1]
+    tree, todo = set(), [os.getpid()]
+    while todo:
+        p = todo.pop()
+        tree.add(p)
+        todo.extend(c for c, pp in parent.items() if pp == p and c not in tree)
+    return tree
+
+
+def _alive(pid: int) -> bool:
+    st = _proc_state(pid)
+    return st is not None and st[0] not in "ZX"
+
+
+def stop_spark(spark) -> None:
+    """Stop the session and end the JVM and every process under it, waiting
+    for each. ``spark.stop()`` alone leaves the JVM exiting on its own after
+    this process has gone."""
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    try:
+        if spark is not None:
+            spark.stop()
+    except Exception as e:  # noqa: BLE001 - e.g. a py4j call cut by SIGTERM; the JVM is ended below
+        print(f"perfbench: spark.stop() failed: {e}"[:300], file=sys.stderr)
+    descendants = process_tree() - {os.getpid()}
+    proc = getattr(gateway, "proc", None)
+    if gateway is not None:
+        try:
+            gateway.shutdown()
+        except Exception:  # noqa: BLE001 - the JVM is ended below regardless
+            pass
+    if proc is not None:
+        # the gateway server exits when its stdin closes
+        try:
+            proc.stdin.close()
+            proc.wait(timeout=20)
+        except Exception:  # noqa: BLE001
+            proc.kill()
+            proc.wait()
+    for sig, wait_s in ((signal.SIGTERM, 10.0), (signal.SIGKILL, 10.0)):
+        left = [p for p in descendants if _alive(p)]
+        for p in left:
+            try:
+                os.kill(p, sig)
+            except OSError:
+                pass
+        deadline = time.monotonic() + wait_s
+        while left and time.monotonic() < deadline:
+            time.sleep(0.05)
+            left = [p for p in left if _alive(p)]
+        if not left:
+            break
+
+
 class RssSampler(threading.Thread):
     """Peak resident set of this process and all its descendants (JVM and
     Python workers), sampled every 0.2 s."""
@@ -105,21 +179,8 @@ class RssSampler(threading.Thread):
         self._page = os.sysconf("SC_PAGE_SIZE")
 
     def _tree_rss(self) -> int:
-        parent: dict[int, int] = {}
-        for name in os.listdir("/proc"):
-            if name.isdigit():
-                try:
-                    with open(f"/proc/{name}/stat") as f:
-                        parent[int(name)] = int(f.read().rsplit(")", 1)[1].split()[1])
-                except (OSError, IndexError, ValueError):
-                    pass
-        tree, todo = set(), [os.getpid()]
-        while todo:
-            p = todo.pop()
-            tree.add(p)
-            todo.extend(c for c, pp in parent.items() if pp == p and c not in tree)
         total = 0
-        for p in tree:
+        for p in process_tree():
             try:
                 with open(f"/proc/{p}/statm") as f:
                     total += int(f.read().split()[1]) * self._page
@@ -236,6 +297,8 @@ def main(argv=None) -> int:
         print(f"perfbench: cannot import the program from {root}: {e}", file=sys.stderr)
         return 2
 
+    # a run stopped from outside still ends the processes it started
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     runs = os.path.join(root, ".perfbench")
     scratch = os.path.join(runs, f"run-{os.getpid()}")
     pin_environment(root, scratch)
@@ -259,8 +322,9 @@ def main(argv=None) -> int:
         if args.trace:
             tracer.dump(os.path.join(runs, f"spans-{args.workload}-{args.seed}.json"))
     finally:
-        if spark is not None:
-            spark.stop()
+        # a second SIGTERM must not cut the clean-up short
+        signal.signal(signal.SIGTERM, signal.SIG_IGN)
+        stop_spark(spark)
         rss.stop()
         shutil.rmtree(scratch, ignore_errors=True)
 

@@ -29,14 +29,33 @@ BENCH = json.load(open(os.path.join(ROOT, "BENCHMARK.json")))
 SEED = 7
 
 
+def _leftovers(scratch: str) -> list[str]:
+    """Command lines of live processes that name a run's scratch dir (the
+    JVM names it in its warehouse setting)."""
+    found = []
+    for name in os.listdir("/proc"):
+        if name.isdigit() and run._alive(int(name)):
+            try:
+                with open(f"/proc/{name}/cmdline", "rb") as f:
+                    cmd = f.read().replace(b"\0", b" ").decode(errors="replace")
+            except OSError:
+                continue
+            if scratch in cmd:
+                found.append(cmd[:200])
+    return found
+
+
 def _run(workload: str, trace: int) -> tuple[list[str], dict]:
-    p = subprocess.run(
+    p = subprocess.Popen(
         [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(SEED),
          "--seconds", "1", "--trace", str(trace)],
-        cwd=ROOT, capture_output=True, text=True, timeout=180,
+        cwd=ROOT, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
     )
-    assert p.returncode == 0, p.stderr[-2000:]
-    lines = p.stdout.strip().splitlines()
+    out, err = p.communicate(timeout=180)
+    assert p.returncode == 0, err[-2000:]
+    # the run has ended every process it started, the JVM included
+    assert _leftovers(os.path.join(ROOT, ".perfbench", f"run-{p.pid}")) == []
+    lines = out.strip().splitlines()
     return lines, json.loads(lines[-1])
 
 
@@ -136,4 +155,4 @@ def test_checker_rejects_missing_witness_edge(tmp_path):
         errors = chain.check_store(spark, planted, set(heights), heights)
         assert len(errors) == 1 and errors[0].startswith("poc_receipts: 1 missing"), errors
     finally:
-        spark.stop()
+        run.stop_spark(spark)
