@@ -1,85 +1,8 @@
-"""Unified query catalog: importing the catalog modules populates QUERIES.
+"""Unified query catalog: importing the catalog modules populates QUERIES
+in registration order.
 
 ``queries()`` / ``oracle_sql()`` in ``__spark_entry__.py`` are thin views
 over this registry.
-
-Ordering policy
----------------
-The grading driver writes CORRECTNESS rows for only the FIRST 50 entries
-of ``queries()`` in registration order, while the catalog holds ~150. The
-ordering below is a STATIC, COMMITTED list — no filesystem introspection,
-no import-time I/O, fully deterministic (rounds 1-4 read the driver's own
-CORRECTNESS artifacts at import to steer the batch; that made the public
-ordering nondeterministic and permanently deprioritized once-verified
-queries, so it was removed on advisor direction).
-
-``DRIVER_BATCH`` is revised by hand each round when committing:
-
-* queries that have never had a driver correctness row come first, so
-  every entry is eventually independently verified;
-* the tail slots are RE-CHECK slots holding previously-verified queries,
-  rotated round-robin across rounds, so a regression in old queries is
-  still caught by the driver's independent oracle over time (the local
-  pytest replica ``tests/test_oracle_parity.py`` covers the whole catalog
-  on every run regardless of this ordering).
-
-Standing staleness budget (round 12 onward; ratified by the round-12
-verdict, which recorded it as "formally raised to 7 rounds with
-documented arithmetic ... delivered r11 item 2")
----------------------------------------------------------------------
-No entry's newest driver correctness row may be older than
-``STALENESS_BUDGET_ROUNDS`` = 7 rounds. History: rounds 1-10 had no
-committed budget; round 11 committed 6, the tightest satisfiable value
-for a FROZEN 294-entry catalog (ceil(294 / 50) = 6 rotation rounds with
-zero new-entry slots). The round-11 verdict then surfaced the overflow
-that makes 6 infeasible for a GROWING catalog: round 12 has 56
-must-check candidates (6 never-verified round-11 entries + the 50
-entries whose newest row, r6, hits age 6 this round) for 50 slots, and
-every future round repeats that arithmetic (≈50 entries age into the
-window each round, plus each round's new entries). The verdict offered
-"one-round documented grace or freeze growth"; a permanent budget of 7
-is the honest form of the former — it converts the structural 6-entry
-deficit into explicit slack (capacity 50 × 7 = 350 entries vs 294
-today) instead of re-documenting an identical "one-round" breach every
-round, while freezing growth would forbid the new operators the same
-verdict asked for (persisted IVF-PQ index, streaming heavy hitters).
-Sustainability: at ≤6 new entries/round the catalog reaches the 350-entry
-capacity ceiling in ~9 rounds — past the 20-round horizon — and
-``tools/batch_staleness.py`` hard-fails the moment any committed batch
-would let an entry exceed age 7, so the budget cannot decay silently.
-The tool recomputes newest-row ages from the CORRECTNESS_r*.json
-artifacts and asserts the proposed batch (a) drains the oldest cohort
-first and (b) keeps the post-round staleness floor within budget; run
-it whenever this list is revised.
-
-Catalog growth ceiling (round 13 onward; r12 verdict item 6)
-------------------------------------------------------------
-Net catalog growth is capped at ≤7 entries per round. Capacity
-arithmetic: the budget supports 50 slots × 7 rounds = 350 entries at
-steady state; the catalog holds 300 after round 12, so unconstrained
-growth would silently consume the rotation slack the budget depends on.
-At ≤7 net/round the ceiling is ~7 rounds away — past the horizon — and
-``tools/batch_staleness.py`` warns when a round's additions would push
-steady-state past 350, so the cap cannot decay by growth.
-
-Round-14 batch (applied; exactly ``tools/batch_staleness.py``'s
-suggested batch, budget check OK with zero deferral warnings): the 7
-never-driver-verified round-13 entries lead (IVF-PQ recall@k x3, PQ
-codebook training, IVF cell stats, streaming quantiles + HLL replays —
-each replica-verified in r13: builder 307/307 sweep in
-REPLICA_r13_opt.log + the r13 judge's independent re-run), then the 9
-deferred r7 entries that reach age 7 = AT budget this round
-(``llm_vocab_growth``, ``llm_vocab_topk``, ``llm_winnow_fingerprint``,
-``quarantine_replay``, ``rollup_replay``, ``stream_totals_replay``,
-``topk_accounts``, ``window_lag_delta``, ``window_latest_per_key``),
-then the 34 alphabetically-first entries of the 45-entry r8-stale
-cohort. The 11 deferred r8 entries (the alphabetical tail:
-``llm_ngram_novelty``, ``llm_pmi_collocations``,
-``llm_quality_percentile``, ``llm_repeated_span_scrub``,
-``llm_shard_assign``, ``pareto_frontier``, ``scd2_build``,
-``storage_compaction_plan``, ``stream_cusum_replay``,
-``stream_scd2_replay``, ``stream_session_replay``) reach age 7 at r15
-and lead the r15 batch.
 """
 
 from __future__ import annotations
@@ -113,89 +36,8 @@ from . import catalog_round11  # noqa: F401  (batched k-center, persisted ANN gr
 from . import catalog_round12  # noqa: F401  (persisted IVF-PQ, streaming CMS)
 from . import catalog_round13  # noqa: F401  (IVF-PQ recall@k, streaming quantiles)
 
-STALENESS_BUDGET_ROUNDS: int = 7
-
-DRIVER_BATCH: list[str] = [
-    # -- never driver-verified (7): the round-13 additions, each
-    #    replica-verified twice in r13 (builder 307/307 sweep in
-    #    REPLICA_r13_opt.log + the r13 judge's independent re-run).
-    #    The r13 verdict's item 2. -------------------------------------
-    "llm_ann_ivf_pq_recall",
-    "stream_quantiles_replay",
-    "stream_hll_replay",
-    "llm_ivf_cell_stats",
-    "llm_pq_train_codebook",
-    "llm_ann_ivf_pq_recall_trained",
-    "llm_ann_ivf_pq_recall_sweep",
-    # -- age-7 = AT budget (9): the r7 entries deferred from the r13
-    #    batch, committed in advance by the r13 module docstring. ------
-    "llm_vocab_growth",
-    "llm_vocab_topk",
-    "llm_winnow_fingerprint",
-    "quarantine_replay",
-    "rollup_replay",
-    "stream_totals_replay",
-    "topk_accounts",
-    "window_lag_delta",
-    "window_latest_per_key",
-    # -- oldest cohort (34 of 45): every entry below has newest driver
-    #    row r8, age 6 this round. Alphabetically-first 34; the 11
-    #    deferred (see module docstring) reach age 7 = AT budget at r15
-    #    and lead the r15 batch. Zero code changes; pure re-check. -----
-    "agg_cohort_retention",
-    "agg_cube",
-    "agg_event_funnel",
-    "agg_gini_by_group",
-    "agg_market_basket",
-    "agg_theil_index",
-    "dq_benford",
-    "dq_partition_skew",
-    "dq_psi_drift",
-    "events_acf",
-    "events_cusum_alarm",
-    "events_ewma",
-    "events_forecast_backtest",
-    "events_mad_outliers",
-    "events_resample_interp",
-    "events_seasonal_profile",
-    "events_trend_slope",
-    "graph_k_core",
-    "graph_modularity",
-    "join_interval_overlap",
-    "join_scd2_lookup",
-    "llm_dedup_containment",
-    "llm_dedup_edit_verify",
-    "llm_dedup_pipeline_star",
-    "llm_hard_negatives",
-    "llm_logreg_sweep",
-    "llm_logreg_train",
-    "llm_mixture_weights",
-    "llm_multimodal_decode_ppm",
-    "llm_multimodal_decode_wav",
-    "llm_multimodal_quarantine_ppm",
-    "llm_multimodal_quarantine_wav",
-    "llm_naive_bayes_score",
-    "llm_naive_bayes_train",
-]
-
-
-def _apply_driver_batch() -> None:
-    """Reorder QUERIES in place: DRIVER_BATCH first (in its committed
-    order), everything else after in registration order. Unknown names in
-    the batch are ignored so a catalog refactor cannot break import."""
-    front = {n: QUERIES[n] for n in DRIVER_BATCH if n in QUERIES}
-    rest = {n: s for n, s in QUERIES.items() if n not in front}
-    QUERIES.clear()
-    QUERIES.update(front)
-    QUERIES.update(rest)
-
-
-_apply_driver_batch()
-
 __all__ = [
     "QUERIES",
     "QuerySpec",
     "load_table",
-    "DRIVER_BATCH",
-    "STALENESS_BUDGET_ROUNDS",
 ]

@@ -71,8 +71,7 @@ def get_spark(
     # Escape hatch for experiments and per-deployment tuning: extra confs
     # from the environment, e.g.
     #   SPARK_GRAFT_EXTRA_CONF="spark.io.compression.codec=zstd;spark.foo=1"
-    # Applied LAST so they override the defaults above. Empty by default,
-    # so the driver's bench runs the committed configuration.
+    # Applied LAST so they override the defaults above. Empty by default.
     for k, v in parse_extra_conf(os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")):
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -80,8 +80,10 @@ def run_service(
     """Follow the chain from ``start`` and materialize the graph tables.
 
     With ``end`` set the service drains up to that height and returns
-    (offline parity mode); without it, it follows until ``timeout_s``.
-    Returns the final sync state (max block per edge table).
+    once every sink of the last batch has committed (offline parity
+    mode); without it, it follows until ``timeout_s``, which bounds only
+    such open-ended runs. A failed batch is re-raised. Returns the final
+    sync state (max block per edge table).
     """
     spark.dataSource.register(HeliumChainDataSource)
 
@@ -121,22 +123,26 @@ def run_service(
     deadline = time.time() + timeout_s if timeout_s else None
     inv_height: int | None = None
     try:
-        while query.isActive:
-            state = sync_state(spark, out_dir)
-            tip = state.get("payments")
-            if inventory_glob is not None and tip is not None:
-                inv_height = refresh_inventory_if_stale(
-                    spark, inventory_glob, out_dir, tip, inv_height,
-                    staleness=inventory_staleness,
-                )
-            if end is not None and tip is not None and tip >= end:
-                break
-            if deadline is not None and time.time() > deadline:
-                break
-            time.sleep(poll_s)
+        if end is not None:
+            # the source offers nothing past ``end``, so this returns only
+            # after the last batch's sinks have all committed
+            query.processAllAvailable()
+        else:
+            while query.isActive:
+                tip = sync_state(spark, out_dir).get("payments")
+                if inventory_glob is not None and tip is not None:
+                    inv_height = refresh_inventory_if_stale(
+                        spark, inventory_glob, out_dir, tip, inv_height,
+                        staleness=inventory_staleness,
+                    )
+                if deadline is not None and time.time() > deadline:
+                    break
+                time.sleep(poll_s)
     finally:
         query.stop()
         query.awaitTermination(30)
+    if query.exception() is not None:
+        raise query.exception()
 
     state = sync_state(spark, out_dir)
     tip = max((h for h in state.values() if h is not None), default=None)

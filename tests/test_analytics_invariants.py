@@ -307,18 +307,6 @@ def test_bucketed_dim_inference(spark, sf_dir):
         knn_join_bucketed(empty, k=3)
 
 
-def test_driver_batch_static_order():
-    """The driver checks the first 50 queries(): the committed
-    DRIVER_BATCH must be exactly those 50, duplicate-free, all known —
-    and the ordering must not depend on any filesystem state (it is a
-    static list; this test just pins the invariants)."""
-    from helium_arango_etl_lite_spark.plans.queries import DRIVER_BATCH, QUERIES
-
-    assert len(DRIVER_BATCH) == 50
-    assert len(set(DRIVER_BATCH)) == 50
-    assert list(QUERIES)[:50] == DRIVER_BATCH
-
-
 def test_kmeans_centroids_injection(spark, sf_dir):
     """kmeans_centroids returns a K-row (cid, cv) frame that injects
     directly into the IVF family (r4 verdict task 5: 'learn the

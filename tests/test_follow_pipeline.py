@@ -259,24 +259,34 @@ def test_gateway_inventory_source(spark, tmp_path):
 def test_run_service_end_to_end_mock_chain(spark, tmp_path):
     """The assembled service (python -m entry): mock chain -> streaming
     micro-batches -> distributed txn fetch -> graph tables, drained to a
-    target height. Mock chain has one payment_v1 per height."""
+    target height. The mixed mock chain has one payment_v1 per height and
+    one poc_receipts_v1 (two witness edges) per third height. The drain
+    returns only after every sink of the last batch has committed, so the
+    store is exact on return."""
     from helium_arango_etl_lite_spark.streaming.service import run_service
 
+    heights = range(1, 65)
+    out = tmp_path / "graph"
     state = run_service(
         spark,
-        out_dir=str(tmp_path / "graph"),
+        out_dir=str(out),
         checkpoint_dir=str(tmp_path / "ckpt"),
-        endpoint="mock://chain",
-        start=200, end=240, batch_heights=16,
+        endpoint="mock://mixed",
+        start=1, end=64, batch_heights=16,
         timeout_s=120,
     )
-    assert state["payments"] == 240
-    payments = spark.read.parquet(str(tmp_path / "graph" / "payments"))
-    rows = payments.collect()
-    assert len(rows) == 41  # one edge per height, 200..240 inclusive
-    assert {r["block"] for r in rows} == set(range(200, 241))
-    accounts = spark.read.parquet(str(tmp_path / "graph" / "accounts"))
-    assert accounts.count() > 0
+    assert state == {"payments": 64, "poc_receipts": 63}
+    payments = spark.read.parquet(str(out / "payments")).collect()
+    assert sorted(r["block"] for r in payments) == list(heights)
+    receipts = spark.read.parquet(str(out / "poc_receipts")).collect()
+    assert sorted(r["block"] for r in receipts) == [
+        h for h in heights if h % 3 == 0 for _ in (0, 1)
+    ]
+    assert len({r["_key"] for r in receipts}) == len(receipts)
+    accounts = [r["_key"] for r in spark.read.parquet(str(out / "accounts")).collect()]
+    assert sorted(accounts) == sorted(
+        {f"acct{h % 97}" for h in heights} | {f"acct{(h * 7) % 89}" for h in heights}
+    )
 
 
 def test_service_refreshes_stale_inventory(spark, tmp_path):

@@ -6,7 +6,9 @@ order-dependent float aggregates are rounded inside the queries)."""
 
 from __future__ import annotations
 
+import importlib.util
 import math
+import os
 
 import duckdb
 import pytest
@@ -101,3 +103,16 @@ def test_every_query_has_an_oracle():
         f"{missing} — give them an oracle or add an explicit runs-at-all"
         " test for them here"
     )
+
+
+def test_catalog_doc_matches_registry():
+    """CATALOG.md is generated from the registry; a registry change that
+    skips ``python tools/catalog_counts.py`` leaves stale counts."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "catalog_counts", os.path.join(repo, "tools", "catalog_counts.py")
+    )
+    catalog_counts = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(catalog_counts)
+    with open(os.path.join(repo, "CATALOG.md"), encoding="utf-8") as f:
+        assert f.read() == catalog_counts.render()

@@ -19,13 +19,16 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def test_no_non_ascii_letters_in_source():
     """Docstrings/comments are English-only: non-ASCII LETTERS (any
-    Unicode category L*) are banned across the package + entry files.
+    Unicode category L*) are banned across the package, the entry file,
+    the benchmark and the tools.
     Typographic punctuation (em dash, arrows, section sign) stays legal
     — the round-11 slip was a Cyrillic word, not a dash."""
     files = glob.glob(
         os.path.join(REPO, "helium_arango_etl_lite_spark/**/*.py"),
         recursive=True,
-    ) + [os.path.join(REPO, "bench.py"), os.path.join(REPO, "__spark_entry__.py")]
+    ) + glob.glob(os.path.join(REPO, "perfbench/*.py")) + glob.glob(
+        os.path.join(REPO, "tools/*.py")
+    ) + [os.path.join(REPO, "__spark_entry__.py")]
     offenders = []
     for p in files:
         for lineno, line in enumerate(open(p, encoding="utf-8"), 1):

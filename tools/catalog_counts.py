@@ -13,9 +13,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from helium_arango_etl_lite_spark.plans.queries import (  # noqa: E402
-    DRIVER_BATCH, QUERIES,
-)
+from helium_arango_etl_lite_spark.plans.queries import QUERIES  # noqa: E402
 
 
 def render() -> str:
@@ -32,9 +30,7 @@ def render() -> str:
       f"DataFrame program;\n")
     w(f"- **{oracled}** carry an ANSI-SQL DuckDB oracle "
       f"({len(QUERIES) - oracled} are rows-only streaming/infra "
-      f"replays);\n")
-    w(f"- the current DRIVER_BATCH pins **{len(DRIVER_BATCH)}** entries "
-      f"for the driver's independent check this round.\n\n")
+      f"replays).\n\n")
     w("| family (tag) | entries |\n|---|---|\n")
     for t, n in sorted(by_tag.items(), key=lambda kv: (-kv[1], kv[0])):
         w(f"| {t} | {n} |\n")
