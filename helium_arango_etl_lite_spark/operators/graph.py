@@ -107,12 +107,10 @@ def payment_edges(blocks: DataFrame, txns: DataFrame) -> DataFrame:
     ).dropDuplicates(["_key"])
 
 
-def witness_edges(blocks: DataFrame, txns: DataFrame, strict_path0: bool = True) -> DataFrame:
+def witness_edges(blocks: DataFrame, txns: DataFrame) -> DataFrame:
     """poc_receipts v1/v2 -> one edge per witness (follower.py:177-202).
 
-    ``strict_path0=True`` reproduces the reference's ``path[0]``-only read
-    (follower.py:180); False explodes every path element (the engine's more
-    complete semantics, flagged in SURVEY.md section 7).
+    Only ``path[0]`` is read, as in the reference (follower.py:180).
 
     Null-receipt handling: ``tx_power`` / ``processing_time_s`` are NULL when
     the path element has no receipt struct — the columnar equivalent of the
@@ -128,15 +126,9 @@ def witness_edges(blocks: DataFrame, txns: DataFrame, strict_path0: bool = True)
         F.from_json("json", POC_RECEIPTS_SCHEMA).alias("t"),
     )
     joined = stubs.join(F.broadcast(parsed), "txn_hash")
-
-    if strict_path0:
-        with_path = joined.select(
-            "block", "block_time", "txn_hash", F.col("t.path").getItem(0).alias("pe")
-        )
-    else:
-        with_path = joined.select(
-            "block", "block_time", "txn_hash", F.explode("t.path").alias("pe")
-        )
+    with_path = joined.select(
+        "block", "block_time", "txn_hash", F.col("t.path").getItem(0).alias("pe")
+    )
 
     exploded = with_path.select(
         "block",

@@ -851,6 +851,29 @@ def _replay_dir(name: str) -> str:
 
 _FOLLOW_N = 120
 
+
+def _chain_frames(
+    spark: SparkSession, endpoint: str, start: int, end: int, heights_per_partition: int = 16
+) -> tuple[DataFrame, DataFrame]:
+    """(blocks, txns) of heights ``start..end`` from the ``helium_chain``
+    batch reader: the inputs of one follower batch."""
+    from ..sources.datasource import HeliumChainDataSource
+
+    spark.dataSource.register(HeliumChainDataSource)
+
+    def read(what: str) -> DataFrame:
+        return (
+            spark.read.format("helium_chain")
+            .option("endpoint", endpoint)
+            .option("start", start).option("end", end)
+            .option("what", what)
+            .option("heights_per_partition", heights_per_partition)
+            .load()
+        )
+
+    return read("blocks"), read("txns")
+
+
 _FOLLOW_SQL = f"""WITH h AS (SELECT i.i AS h FROM generate_series(1, {_FOLLOW_N}) i(i)),
 e AS (SELECT
         'accounts/acct' || (h % 97)::VARCHAR AS _from,
@@ -885,25 +908,13 @@ FROM e"""
     tags=("streaming", "pipeline", "sink"),
 )
 def follow_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.datasource import HeliumChainDataSource
     from ..streaming.follow import PAYMENTS, process_batch
 
-    spark.dataSource.register(HeliumChainDataSource)
     out = _replay_dir("follow_replay")
 
-    def read(what: str) -> DataFrame:
-        return (
-            spark.read.format("helium_chain")
-            .option("endpoint", "mock://replay")
-            .option("start", 1).option("end", _FOLLOW_N)
-            .option("what", what)
-            .option("heights_per_partition", 16)
-            .load()
-        )
-
-    process_batch(spark, read("blocks"), read("txns"), out)
+    process_batch(spark, *_chain_frames(spark, "mock://replay", 1, _FOLLOW_N), out)
     # replay the identical batch: the anti-join sink must add zero rows
-    process_batch(spark, read("blocks"), read("txns"), out)
+    process_batch(spark, *_chain_frames(spark, "mock://replay", 1, _FOLLOW_N), out)
     pay = spark.read.parquet(f"{out}/{PAYMENTS}")
     return pay.select(
         "_from", "_to", "hash", "amount", "block", "timestamp", "_key",
@@ -958,24 +969,12 @@ FROM e"""
 )
 def follow_replay_receipts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
-    from ..sources.datasource import HeliumChainDataSource
     from ..streaming.follow import RECEIPTS, process_batch
 
-    spark.dataSource.register(HeliumChainDataSource)
     out = _replay_dir("follow_replay_rx")
 
-    def read(what: str) -> DataFrame:
-        return (
-            spark.read.format("helium_chain")
-            .option("endpoint", "mock://mixed")
-            .option("start", 1).option("end", _FOLLOW_N)
-            .option("what", what)
-            .option("heights_per_partition", 16)
-            .load()
-        )
-
-    process_batch(spark, read("blocks"), read("txns"), out)
-    process_batch(spark, read("blocks"), read("txns"), out)
+    process_batch(spark, *_chain_frames(spark, "mock://mixed", 1, _FOLLOW_N), out)
+    process_batch(spark, *_chain_frames(spark, "mock://mixed", 1, _FOLLOW_N), out)
     rec = spark.read.parquet(f"{out}/{RECEIPTS}")
     return rec.select(
         "_from", "_to", "frequency", "datarate", "is_valid", "signal",
@@ -1001,24 +1000,12 @@ def follow_replay_receipts(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def follow_replay_accounts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
-    from ..sources.datasource import HeliumChainDataSource
     from ..streaming.follow import ACCOUNTS, process_batch
 
-    spark.dataSource.register(HeliumChainDataSource)
     out = _replay_dir("follow_replay_ac")
 
-    def read(what: str) -> DataFrame:
-        return (
-            spark.read.format("helium_chain")
-            .option("endpoint", "mock://replay")
-            .option("start", 1).option("end", _FOLLOW_N)
-            .option("what", what)
-            .option("heights_per_partition", 16)
-            .load()
-        )
-
-    process_batch(spark, read("blocks"), read("txns"), out)
-    process_batch(spark, read("blocks"), read("txns"), out)
+    process_batch(spark, *_chain_frames(spark, "mock://replay", 1, _FOLLOW_N), out)
+    process_batch(spark, *_chain_frames(spark, "mock://replay", 1, _FOLLOW_N), out)
     return spark.read.parquet(f"{out}/{ACCOUNTS}").select("_key")
 
 
@@ -1177,24 +1164,12 @@ FROM e""",
 )
 def follow_retention_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
-    from ..sources.datasource import HeliumChainDataSource
     from ..streaming.follow import PAYMENTS, process_batch
     from ..streaming.sink import apply_retention
 
-    spark.dataSource.register(HeliumChainDataSource)
     out = _replay_dir("follow_retention")
 
-    def read(what: str) -> DataFrame:
-        return (
-            spark.read.format("helium_chain")
-            .option("endpoint", "mock://replay")
-            .option("start", _RET_START).option("end", _RET_END)
-            .option("what", what)
-            .option("heights_per_partition", 512)
-            .load()
-        )
-
-    process_batch(spark, read("blocks"), read("txns"), out)
+    process_batch(spark, *_chain_frames(spark, "mock://replay", _RET_START, _RET_END, 512), out)
     dropped = apply_retention(
         spark, f"{out}/{PAYMENTS}", tip_height=_RET_END, window=_RET_WINDOW
     )
@@ -1212,7 +1187,7 @@ def follow_retention_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q_N = 200  # landing-zone lines; every 7th is a truncated JSON line
+_Q_N = 200  # dump lines; every 7th is a truncated JSON line
 
 
 @register(
@@ -1226,7 +1201,7 @@ SELECT CASE WHEN h % 7 <> 0 THEN h END::BIGINT AS block,
             THEN '{{"height": ' || h::VARCHAR || ', "bro' END AS raw
 FROM h""",
     doc="The ValidationError stand-in under the value hash: a JSON-lines "
-        "landing zone where every 7th line is truncated mid-object is "
+        "block dump where every 7th line is truncated mid-object is "
         "read schema-first in PERMISSIVE mode (sources/jsonl.py "
         "read_blocks); split_corrupt must route exactly the broken lines "
         "— raw bytes preserved — to quarantine and parse every other "

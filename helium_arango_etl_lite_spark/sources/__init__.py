@@ -1,17 +1,15 @@
-from .jsonl import read_blocks, read_txns, split_corrupt, stream_blocks
+from .jsonl import read_blocks, read_txns, split_corrupt
 from .inventory import enrich_inventory, read_gateway_inventory
-from .rpc import RpcError, RpcLandingZone, rpc_call
+from .rpc import RpcError, rpc_call
 from .datasource import HeliumChainDataSource
 
 __all__ = [
     "HeliumChainDataSource",
     "RpcError",
-    "RpcLandingZone",
     "rpc_call",
     "read_blocks",
     "read_txns",
     "split_corrupt",
-    "stream_blocks",
     "read_gateway_inventory",
     "enrich_inventory",
 ]

@@ -1,8 +1,9 @@
 """Python DataSource (PySpark >= 4): DISTRIBUTED chain ingestion.
 
-``sources/rpc.py`` keeps the reference's driver-side fetch topology; this
-module removes it. The reference hints at the parallel shape itself — its
-unused ``process_block_parallel`` (follower.py:216-289) fans a block's
+The reference fetches the chain from one driver loop; this module removes
+that topology and keeps its wire contract (``sources/rpc.py``). The
+reference hints at the parallel shape itself — its unused
+``process_block_parallel`` (follower.py:216-289) fans a block's
 transactions over multiprocessing workers. The Python DataSource API is
 the Spark-native version of that idea at cluster scale: each *executor*
 task owns a height range and speaks JSON-RPC (client.py:55-82 wire
@@ -276,7 +277,7 @@ class ChainReader(DataSourceReader):
 
 
 class ChainStreamReader(SimpleDataSourceStreamReader):
-    """Streaming tail-follow straight off the node — no landing zone.
+    """Streaming tail-follow straight off the node.
 
     The offset is simply ``{"height": next_unread}``; each micro-batch
     reads up to ``max_heights_per_batch`` blocks behind the chain tip

@@ -1,18 +1,16 @@
-"""Schema-first JSON-lines sources (SURVEY.md section 2.1).
+"""Schema-first batch readers for JSON-lines block/txn dumps (SURVEY.md
+section 2.1).
 
-The reference pulls blocks and transactions over JSON-RPC one object at a
-time (client.py:25-36, :39-51 — an N+1 request pattern). The engine's
-equivalent source is a height-ordered JSON-lines landing zone: one file per
-fetch window, one block/txn per line. ``spark.read.json`` with an explicit
-``StructType`` replaces pydantic ``parse_obj`` (client.py:36); PERMISSIVE
-mode with a ``_corrupt_record`` column replaces the ValidationError retry
-loop (follower.py:58-69) — bad lines are quarantined, not retried, and a
-re-fetch simply lands a new file that the stream picks up.
+A dump holds one block or txn envelope per line. ``spark.read.json`` with an
+explicit ``StructType`` replaces pydantic ``parse_obj`` (client.py:36);
+PERMISSIVE mode with a ``_corrupt_record`` column replaces the
+ValidationError retry loop (follower.py:58-69) — bad lines are quarantined,
+not retried (``split_corrupt``, or ``streaming.follow.process_batch``'s
+quarantine branch). The live follower reads the chain through
+``sources/datasource.py`` instead; these readers serve replays of dumps.
 
-Scale notes: a JSON-lines directory is splittable per-file; at 100 TB the
-landing zone would be thousands of files and every executor reads its own
-slice — no driver bottleneck, no N+1. Schema is always supplied explicitly
-(never inferred), so the reader makes exactly one pass.
+Schema is always supplied explicitly (never inferred), so the reader makes
+exactly one pass over a splittable directory.
 """
 
 from __future__ import annotations
@@ -43,26 +41,6 @@ def read_blocks(spark: SparkSession, path: str) -> DataFrame:
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .json(path)
     )
-
-
-def stream_blocks(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """Streaming tail-follow of the block landing zone — the engine's
-    ``while True: process_block(sync_height)`` (follower.py:55-75).
-
-    Each newly landed file becomes (part of) a micro-batch; offsets live in
-    the query's checkpoint, replacing the hand-rolled ``follower_info``
-    state document (follower.py:116-128).
-    """
-    reader = (
-        spark.readStream.schema(_with_corrupt(BLOCK_SCHEMA))
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.json(path)
 
 
 def read_txns(spark: SparkSession, path: str) -> DataFrame:

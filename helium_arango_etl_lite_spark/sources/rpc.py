@@ -1,5 +1,4 @@
-"""JSON-RPC landing-zone fetcher (SURVEY.md section 2.1; reference
-client.py:21-82).
+"""JSON-RPC wire contract (SURVEY.md section 2.1; reference client.py:21-82).
 
 The reference asks a Helium blockchain-node for data object-by-object over
 JSON-RPC: ``block_height`` (client.py:21-23), ``block_get`` by height/hash
@@ -7,23 +6,16 @@ JSON-RPC: ``block_height`` (client.py:21-23), ``block_get`` by height/hash
 an N+1 pattern). Error code -100 means "not available" and maps to None
 (client.py:76-81); anything else raises.
 
-The engine keeps that wire protocol but changes the topology: the fetcher
-is a thin DRIVER-SIDE (or external) process that drains heights into
-JSON-lines landing files; Spark never blocks on per-row HTTP. The landing
-zone is the streaming source for the follow pipeline (sources/jsonl.py →
-streaming/follow.py), files are splittable, and a re-fetch after an error
-just lands a newer file — the retry loop (follower.py:58-69) becomes
-"write again", with the idempotent sink absorbing replays.
-
-Transport is injectable; the default uses stdlib urllib so there is no
-hard dependency on any HTTP library.
+The engine keeps that wire protocol; the topology lives in
+``sources/datasource.py``, whose executor tasks call :func:`rpc_call` for
+their own height ranges. Transport is injectable; the default uses stdlib
+urllib so there is no hard dependency on any HTTP library.
 """
 
 from __future__ import annotations
 
 import json
-import os
-from collections.abc import Callable, Iterable
+from collections.abc import Callable
 
 #: transport(endpoint, payload_dict) -> response_dict (parsed JSON body)
 Transport = Callable[[str, dict], dict]
@@ -65,74 +57,3 @@ def rpc_call(
     if error.get("code") == -100:
         return None
     raise RpcError(f"{method} with params {params} failed: {error}")
-
-
-class RpcLandingZone:
-    """Drains a node into the JSON-lines landing zone the streaming follow
-    pipeline tails. One file per fetch window — never per object."""
-
-    def __init__(
-        self,
-        endpoint: str,
-        blocks_dir: str,
-        txns_dir: str,
-        transport: Transport | None = None,
-    ):
-        self.endpoint = endpoint
-        self.blocks_dir = blocks_dir
-        self.txns_dir = txns_dir
-        self.transport = transport
-        os.makedirs(blocks_dir, exist_ok=True)
-        os.makedirs(txns_dir, exist_ok=True)
-
-    def height(self) -> int:
-        """Chain tip (client.py:21-23)."""
-        return rpc_call(self.endpoint, "block_height", transport=self.transport)
-
-    def fetch_window(self, start: int, end: int) -> tuple[str, str]:
-        """Fetch blocks [start, end] and their transactions into one
-        blocks file + one txn-envelope file; returns the two paths.
-
-        Missing blocks/txns (-100) are skipped — the next window retries
-        them, and deterministic keys make the eventual replay idempotent.
-        Transactions land as ``(hash, type, json)`` envelopes
-        (schemas.TXN_ENVELOPE_SCHEMA), preserving the raw payload so each
-        type branch applies its own schema engine-side.
-        """
-        blocks: list[dict] = []
-        txns: list[dict] = []
-        for h in range(start, end + 1):
-            block = rpc_call(
-                self.endpoint, "block_get", {"height": h}, transport=self.transport
-            )
-            if block is None:
-                continue
-            blocks.append(block)
-            for stub in block.get("transactions", []):
-                txn = rpc_call(
-                    self.endpoint,
-                    "transaction_get",
-                    {"hash": stub["hash"]},
-                    transport=self.transport,
-                )
-                if txn is not None:
-                    txns.append(
-                        {
-                            "hash": stub["hash"],
-                            "type": stub["type"],
-                            "json": json.dumps(txn, sort_keys=True),
-                        }
-                    )
-        bpath = os.path.join(self.blocks_dir, f"blocks_{start:012d}_{end:012d}.jsonl")
-        tpath = os.path.join(self.txns_dir, f"txns_{start:012d}_{end:012d}.jsonl")
-        _write_jsonl(bpath, blocks)
-        _write_jsonl(tpath, txns)
-        return bpath, tpath
-
-
-def _write_jsonl(path: str, rows: Iterable[dict]) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        for r in rows:
-            f.write(json.dumps(r) + "\n")
-    os.replace(tmp, path)  # atomic: the file source never sees partial files

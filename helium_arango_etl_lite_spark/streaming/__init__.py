@@ -2,10 +2,9 @@ from .sink import (
     RETENTION_BLOCKS,
     apply_retention,
     idempotent_append,
-    read_sink,
     with_block_bucket,
 )
-from .follow import follow, process_batch, sync_state
+from .follow import process_batch, sync_state
 from .rollup import continuous_rollup, merge_rollup
 from .stateful import running_totals
 from .windows import (
@@ -22,9 +21,7 @@ __all__ = [
     "RETENTION_BLOCKS",
     "apply_retention",
     "idempotent_append",
-    "read_sink",
     "with_block_bucket",
-    "follow",
     "process_batch",
     "sync_state",
 ]

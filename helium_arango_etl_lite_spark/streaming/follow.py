@@ -1,10 +1,10 @@
-"""Incremental tail-follow pipeline (SURVEY.md sections 2.6, 3.1-3.2).
+"""The follower's micro-batch body (SURVEY.md sections 2.6, 3.1-3.2).
 
 The reference's service loop (etl.py:3-5 -> Follower.run, follower.py:55-75)
-re-expressed as Structured Streaming:
+is re-expressed as Structured Streaming in :mod:`streaming.service`, whose
+``foreachBatch`` calls :func:`process_batch` once per micro-batch of chain
+heights, replacing ``while True: process_block(sync_height)``:
 
-* micro-batch = the newly landed block files (``stream_blocks``), replacing
-  ``while True: process_block(sync_height)``;
 * the batch body is the section 3.2 dataflow — type dispatch, explode,
   project, deterministic key — built from ``operators.graph``;
 * the sink is :func:`streaming.sink.idempotent_append`, replacing
@@ -12,27 +12,23 @@ re-expressed as Structured Streaming:
   keys + anti-join make replays no-ops, so Spark's at-least-once
   ``foreachBatch`` delivery composes to exactly-once table contents — the
   same idempotence argument the reference relies on;
-* offsets live in the checkpoint dir, replacing the hand-rolled
-  ``follower_info`` state doc (follower.py:116-128);
-* ``Trigger.AvailableNow`` gives the offline/batch parity mode (drain the
-  landing zone, then stop); leaving ``available_now=False`` follows the
-  zone continuously like the reference's tip-poll loop.
+* :func:`sync_state` reads the synced tip back from the sink, replacing the
+  hand-rolled ``follower_info`` state doc (follower.py:100-103, 116-128).
 
-Scale notes: the txn envelope table is read per micro-batch and pruned by
-the inner join on the batch's stub hashes; block headers are tiny and ride
-the broadcast side. Nothing here collects to the driver except the batch's
-distinct bucket list (a handful of longs).
+Scale notes: the batch's txn envelopes are pruned by the inner join on the
+batch's stub hashes; block headers are tiny and ride the broadcast side.
+Nothing here collects to the driver except the batch's distinct bucket list
+(a handful of longs).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.graph import account_vertices, payment_edges, witness_edges
-from .sink import idempotent_append
-from ..sources.jsonl import CORRUPT_COL, read_txns, stream_blocks
+from ..sources.jsonl import CORRUPT_COL
+from .sink import has_data_files, idempotent_append
 
 PAYMENTS = "payments"
 RECEIPTS = "poc_receipts"
@@ -45,7 +41,6 @@ def process_batch(
     blocks: DataFrame,
     txns: DataFrame,
     out_dir: str,
-    strict_path0: bool = True,
 ) -> None:
     """One micro-batch of the follower dataflow (follower.py:135-207).
 
@@ -73,14 +68,8 @@ def process_batch(
     txns = txns.persist()
     try:
         idempotent_append(spark, payment_edges(blocks, txns), f"{out_dir}/{PAYMENTS}")
-        idempotent_append(
-            spark,
-            witness_edges(blocks, txns, strict_path0=strict_path0),
-            f"{out_dir}/{RECEIPTS}",
-        )
-        idempotent_append(
-            spark, account_vertices(blocks, txns), f"{out_dir}/{ACCOUNTS}", partitioned=False
-        )
+        idempotent_append(spark, witness_edges(blocks, txns), f"{out_dir}/{RECEIPTS}")
+        idempotent_append(spark, account_vertices(blocks, txns), f"{out_dir}/{ACCOUNTS}")
     finally:
         blocks.unpersist()
         txns.unpersist()
@@ -88,48 +77,17 @@ def process_batch(
             raw_blocks.unpersist()
 
 
-def follow(
-    spark: SparkSession,
-    blocks_path: str,
-    txns_path: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-    strict_path0: bool = True,
-) -> StreamingQuery:
-    """Start the follow query. With ``available_now`` it drains everything
-    currently landed and stops (offline parity); otherwise it keeps
-    following new files like the reference's 10 s tip poll
-    (follower.py:74-75), with the poll interval owned by Spark's source.
-    """
-    stream = stream_blocks(spark, blocks_path, max_files_per_trigger)
-
-    def batch_fn(batch_blocks: DataFrame, epoch_id: int) -> None:
-        txns = read_txns(spark, txns_path)
-        process_batch(spark, batch_blocks, txns, out_dir, strict_path0=strict_path0)
-
-    writer = stream.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def sync_state(spark: SparkSession, out_dir: str) -> dict[str, int | None]:
     """Engine analog of the ``follower_info`` doc read-back
     (follower.py:100-103) and the chain-tip probe (client.py:21-23): max
-    synced block per edge table, from the sink itself."""
+    synced block per edge table, from the sink itself. A table with no data
+    files yet is ``None``; an unreadable one raises."""
     state: dict[str, int | None] = {}
     for table in (PAYMENTS, RECEIPTS):
-        try:
-            row = (
-                spark.read.parquet(f"{out_dir}/{table}")
-                .agg(F.max("block").alias("h"))
-                .collect()[0]
-            )
-            state[table] = row["h"]
-        except Exception:
-            state[table] = None
+        path = f"{out_dir}/{table}"
+        state[table] = (
+            spark.read.parquet(path).agg(F.max("block")).collect()[0][0]
+            if has_data_files(path)
+            else None
+        )
     return state

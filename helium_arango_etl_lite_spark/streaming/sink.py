@@ -42,28 +42,26 @@ def with_block_bucket(df: DataFrame, blocks_per_bucket: int = RETENTION_BLOCKS) 
     )
 
 
-def _existing_keys(
-    spark: SparkSession, path: str, key_col: str, buckets: list[int] | None
-) -> DataFrame | None:
-    if not os.path.isdir(path) or not any(
+def has_data_files(path: str) -> bool:
+    """True when ``path`` holds a bucket directory or a parquet file, i.e.
+    when ``spark.read.parquet(path)`` has something to read."""
+    return os.path.isdir(path) and any(
         n.startswith(f"{BUCKET_COL}=") or n.endswith(".parquet") for n in os.listdir(path)
-    ):
+    )
+
+
+def _existing_keys(spark: SparkSession, path: str, buckets: list[int] | None) -> DataFrame | None:
+    if not has_data_files(path):
         return None
     existing = spark.read.parquet(path)
     if buckets is not None and BUCKET_COL in existing.columns:
         # partition pruning: only scan the buckets this batch can collide with
         existing = existing.filter(F.col(BUCKET_COL).isin(buckets))
-    return existing.select(key_col)
+    return existing.select("_key")
 
 
-def idempotent_append(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    key_col: str = "_key",
-    partitioned: bool | None = None,
-) -> None:
-    """Append rows whose ``key_col`` is not already present — the engine's
+def idempotent_append(spark: SparkSession, df: DataFrame, path: str) -> None:
+    """Append rows whose ``_key`` is not already present — the engine's
     ``onDuplicate="ignore"`` (follower.py:205-207).
 
     ``df`` must already be deduplicated within itself (the graph operators
@@ -71,8 +69,7 @@ def idempotent_append(
     column the table is written partitioned by ``block_bucket`` and the
     existing-keys probe is pruned to the touched buckets.
     """
-    if partitioned is None:
-        partitioned = "block" in df.columns
+    partitioned = "block" in df.columns
 
     buckets: list[int] | None = None
     persisted = None
@@ -84,9 +81,9 @@ def idempotent_append(
         buckets = [r[0] for r in df.select(BUCKET_COL).distinct().collect()]
 
     try:
-        existing = _existing_keys(spark, path, key_col, buckets)
+        existing = _existing_keys(spark, path, buckets)
         if existing is not None:
-            df = df.join(existing, key_col, "left_anti")
+            df = df.join(existing, "_key", "left_anti")
 
         writer = df.write.mode("append")
         if partitioned:
@@ -95,11 +92,6 @@ def idempotent_append(
     finally:
         if persisted is not None:
             persisted.unpersist()
-
-
-def read_sink(spark: SparkSession, path: str) -> DataFrame:
-    """Read a sink table back (empty frame semantics left to the caller)."""
-    return spark.read.parquet(path)
 
 
 def apply_retention(

@@ -1,7 +1,9 @@
-"""End-to-end tests for the M4 incremental follow pipeline (SURVEY.md
-sections 2.6, 3.1-3.2, 5): sources -> graph transforms -> idempotent sink,
-replay idempotence, incremental catch-up, retention partition drop, and the
-corrupt-record quarantine path. Fixture shapes follow FIXTURES.md F1-F6."""
+"""End-to-end tests for the incremental follower (SURVEY.md sections 2.6,
+3.1-3.2, 5): the batch body (sources -> graph transforms -> idempotent
+sink) with replay idempotence, incremental catch-up, retention partition
+drop and the corrupt-record quarantine path, then the streaming service
+bounded, crashed and restarted, and open-ended. Fixture shapes follow
+FIXTURES.md F1-F6."""
 
 from __future__ import annotations
 
@@ -9,20 +11,24 @@ import json
 import os
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from helium_arango_etl_lite_spark.sources import (
     enrich_inventory,
     read_blocks,
     read_gateway_inventory,
+    read_txns,
     split_corrupt,
 )
 from helium_arango_etl_lite_spark.streaming import (
     apply_retention,
-    follow,
     idempotent_append,
+    process_batch,
     sync_state,
 )
+from helium_arango_etl_lite_spark.streaming import follow, service
+from helium_arango_etl_lite_spark.streaming.service import run_service
 
 NS = 1_000_000_000
 
@@ -126,14 +132,13 @@ def landing(tmp_path):
         "blocks": str(blocks_dir),
         "txns": str(txns_dir),
         "out": str(tmp_path / "out"),
-        "ckpt": str(tmp_path / "ckpt"),
-        "ckpt2": str(tmp_path / "ckpt2"),
     }
 
 
-def _run(spark, env, ckpt):
-    q = follow(spark, env["blocks"], env["txns"], env["out"], ckpt)
-    q.awaitTermination()
+def _process(spark, env, blocks_path=None):
+    """The follower's batch body over a JSON-lines dump (PERMISSIVE reads)."""
+    blocks = read_blocks(spark, blocks_path or env["blocks"])
+    process_batch(spark, blocks, read_txns(spark, env["txns"]), env["out"])
 
 
 def _table(spark, env, name):
@@ -141,7 +146,7 @@ def _table(spark, env, name):
 
 
 def test_follow_end_to_end_replay_and_incremental(spark, landing):
-    _run(spark, landing, landing["ckpt"])
+    _process(spark, landing)
 
     payments = _table(spark, landing, "payments")
     receipts = _table(spark, landing, "poc_receipts")
@@ -168,24 +173,26 @@ def test_follow_end_to_end_replay_and_incremental(spark, landing):
 
     assert {r["_key"] for r in accounts.collect()} == {"A", "B", "C", "D"}
 
-    # --- replay: fresh checkpoint reprocesses every file; anti-join sink
-    # must keep tables byte-identical (FIXTURES.md F6 replay determinism)
+    # --- replay: the same batch again (at-least-once delivery); anti-join
+    # sink must keep tables byte-identical (FIXTURES.md F6 replay determinism)
     before = {
         t: sorted(r["_key"] for r in _table(spark, landing, t).collect())
         for t in ("payments", "poc_receipts", "accounts")
     }
-    _run(spark, landing, landing["ckpt2"])
+    _process(spark, landing)
     after = {
         t: sorted(r["_key"] for r in _table(spark, landing, t).collect())
         for t in ("payments", "poc_receipts", "accounts")
     }
     assert before == after
 
-    # --- incremental: land one more block file, same checkpoint -> only the
-    # new block is processed and appended (follower.py:55-75 catch-up)
-    with open(os.path.join(landing["blocks"], "blocks_0002.jsonl"), "w") as f:
+    # --- incremental: land one more block file; the next batch is that
+    # file alone and only the new block is appended (follower.py:55-75
+    # catch-up)
+    new_file = os.path.join(landing["blocks"], "blocks_0002.jsonl")
+    with open(new_file, "w") as f:
         f.write(json.dumps(BLOCK_NEW) + "\n")
-    _run(spark, landing, landing["ckpt"])
+    _process(spark, landing, new_file)
     payments2 = _table(spark, landing, "payments")
     assert payments2.count() == 4
     ef = payments2.filter(F.col("_from") == "accounts/E").collect()
@@ -203,11 +210,11 @@ def test_corrupt_record_quarantine(spark, tmp_path, landing):
     good, bad = split_corrupt(read_blocks(spark, str(bad_dir)))
     assert good.count() == 1 and bad.count() == 1
 
-    # quarantine flows through the streaming batch path too
+    # quarantine flows through the follower's batch body too
     env = dict(landing)
     env["blocks"] = str(bad_dir)
     env["out"] = str(tmp_path / "out_bad")
-    _run(spark, env, str(tmp_path / "ckpt_bad"))
+    _process(spark, env)
     quarantined = spark.read.parquet(f"{env['out']}/quarantine")
     assert quarantined.count() == 1
     assert "not json" in quarantined.collect()[0]["raw"]
@@ -256,26 +263,10 @@ def test_gateway_inventory_source(spark, tmp_path):
     assert docs["hs1"]["location_geo"]["type"] == "Point"
 
 
-def test_run_service_end_to_end_mock_chain(spark, tmp_path):
-    """The assembled service (python -m entry): mock chain -> streaming
-    micro-batches -> distributed txn fetch -> graph tables, drained to a
-    target height. The mixed mock chain has one payment_v1 per height and
-    one poc_receipts_v1 (two witness edges) per third height. The drain
-    returns only after every sink of the last batch has committed, so the
-    store is exact on return."""
-    from helium_arango_etl_lite_spark.streaming.service import run_service
-
-    heights = range(1, 65)
-    out = tmp_path / "graph"
-    state = run_service(
-        spark,
-        out_dir=str(out),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        endpoint="mock://mixed",
-        start=1, end=64, batch_heights=16,
-        timeout_s=120,
-    )
-    assert state == {"payments": 64, "poc_receipts": 63}
+def _assert_mixed_store(spark, out, heights):
+    """The exact store of the mixed mock chain over ``heights``: one
+    payment_v1 per height, one poc_receipts_v1 (two witness edges) per third
+    height, and the payer/payee account set — every edge once."""
     payments = spark.read.parquet(str(out / "payments")).collect()
     assert sorted(r["block"] for r in payments) == list(heights)
     receipts = spark.read.parquet(str(out / "poc_receipts")).collect()
@@ -289,14 +280,108 @@ def test_run_service_end_to_end_mock_chain(spark, tmp_path):
     )
 
 
+def _mixed_drain(spark, tmp_path):
+    return run_service(
+        spark,
+        out_dir=str(tmp_path / "graph"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        endpoint="mock://mixed",
+        start=1, end=64, batch_heights=16,
+        timeout_s=120,
+    )
+
+
+def test_run_service_end_to_end_mock_chain(spark, tmp_path):
+    """The assembled service (python -m entry): mock chain -> streaming
+    micro-batches -> distributed txn fetch -> graph tables, drained to a
+    target height. The drain returns only after every sink of the last
+    batch has committed, so the store is exact on return."""
+    state = _mixed_drain(spark, tmp_path)
+    assert state == {"payments": 64, "poc_receipts": 63}
+    _assert_mixed_store(spark, tmp_path / "graph", range(1, 65))
+
+
+def test_run_service_crash_restart_from_checkpoint(spark, tmp_path, monkeypatch):
+    """A crash after the second batch's payments commit and before its
+    receipts is re-raised; a rerun on the same checkpoint replays that
+    batch and the store equals the chain exactly."""
+    original = follow.idempotent_append
+    receipt_appends = []
+
+    def crash_on_second_receipts(spark, df, path):
+        if os.path.basename(path) == follow.RECEIPTS:
+            receipt_appends.append(path)
+            if len(receipt_appends) == 2:
+                raise RuntimeError("injected crash before receipts commit")
+        original(spark, df, path)
+
+    monkeypatch.setattr(follow, "idempotent_append", crash_on_second_receipts)
+    with pytest.raises(Exception, match="injected crash"):
+        _mixed_drain(spark, tmp_path)
+    assert sync_state(spark, str(tmp_path / "graph")) == {"payments": 32, "poc_receipts": 15}
+
+    monkeypatch.setattr(follow, "idempotent_append", original)
+    state = _mixed_drain(spark, tmp_path)
+    assert state == {"payments": 64, "poc_receipts": 63}
+    _assert_mixed_store(spark, tmp_path / "graph", range(1, 65))
+
+
+def test_run_service_open_ended_applies_retention_per_batch(spark, tmp_path, monkeypatch):
+    """Without ``end`` the service follows until ``timeout_s`` and drops
+    old buckets as it goes: the first batch (7185..7216) puts the floor at
+    7216 - 16 = 7200, so bucket 0 is gone while the stream still runs."""
+    original = service.apply_retention
+    retention_tips = []
+
+    def recording_retention(spark, path, tip, window):
+        retention_tips.append(tip)
+        return original(spark, path, tip, window)
+
+    monkeypatch.setattr(service, "apply_retention", recording_retention)
+    out = tmp_path / "graph"
+    ckpt = tmp_path / "ckpt"
+    state = run_service(
+        spark,
+        out_dir=str(out),
+        checkpoint_dir=str(ckpt),
+        endpoint="mock://mixed",
+        start=7185, batch_heights=32, retention_window=16,
+        timeout_s=60,
+    )
+    assert [n for n in os.listdir(ckpt / "commits") if n.isdigit()]
+    assert state["payments"] >= 7216
+    assert retention_tips[:2] == [7216, 7216]  # both edge tables, first batch
+    for table in ("payments", "poc_receipts"):
+        rows = spark.read.parquet(str(out / table)).collect()
+        assert min(r["block"] for r in rows) >= 7200
+        assert len({r["_key"] for r in rows}) == len(rows)
+
+
+def test_sync_state_none_only_for_missing_tables(spark, tmp_path):
+    out = tmp_path / "graph"
+    assert sync_state(spark, str(out)) == {"payments": None, "poc_receipts": None}
+
+    idempotent_append(
+        spark, spark.createDataFrame([("k1", 10)], ["_key", "block"]), str(out / "payments")
+    )
+    assert sync_state(spark, str(out)) == {"payments": 10, "poc_receipts": None}
+
+    part = next(
+        os.path.join(d, n)
+        for d, _, names in os.walk(out / "payments")
+        for n in names
+        if n.endswith(".parquet")
+    )
+    with open(part, "r+b") as f:
+        f.truncate(os.path.getsize(part) // 2)
+    with pytest.raises(Py4JJavaError, match="Footer"):
+        sync_state(spark, str(out))
+
+
 def test_service_refreshes_stale_inventory(spark, tmp_path):
     """The dimension-staleness path (follower.py:61-62 + 130-133): the
     service loads the newest inventory drop into the hotspots table when
     the sync height runs past it, and skips the reload while fresh."""
-    from helium_arango_etl_lite_spark.streaming.service import (
-        refresh_inventory_if_stale, run_service,
-    )
-
     inv_dir = tmp_path / "inv"
     inv_dir.mkdir()
     (inv_dir / "gateway_inventory_100.csv").write_text(
@@ -322,12 +407,12 @@ def test_service_refreshes_stale_inventory(spark, tmp_path):
     (inv_dir / "gateway_inventory_110.csv").write_text(
         "address,owner,location,name\nhs2,own2,8c2a100acc5ffff,beta\n"
     )
-    h = refresh_inventory_if_stale(
+    h = service.refresh_inventory_if_stale(
         spark, str(inv_dir), str(out), sync_height=500, inventory_height=100
     )
     assert h == 100  # within staleness: untouched
     # stale again -> newest drop replaces the dimension
-    h = refresh_inventory_if_stale(
+    h = service.refresh_inventory_if_stale(
         spark, str(inv_dir), str(out), sync_height=700, inventory_height=100
     )
     assert h == 110

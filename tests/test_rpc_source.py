@@ -1,16 +1,11 @@
-"""RPC landing-zone fetcher tests: JSON-RPC result/error contract
-(client.py:66-82 parity) and end-to-end fetch -> land -> Spark transform."""
+"""JSON-RPC wire contract tests: result/error mapping (client.py:66-82
+parity)."""
 
 from __future__ import annotations
 
-import json
-
 import pytest
 
-from helium_arango_etl_lite_spark.operators.graph import payment_edges
-from helium_arango_etl_lite_spark.sources import (
-    RpcError, RpcLandingZone, read_blocks, read_txns, rpc_call, split_corrupt,
-)
+from helium_arango_etl_lite_spark.sources import RpcError, rpc_call
 
 CHAIN = {
     100: {"hash": "bh100", "height": 100, "prev_hash": "bh099",
@@ -50,24 +45,3 @@ def test_rpc_error_contract():
     ) is None
     with pytest.raises(RpcError):
         rpc_call("x", "nope", transport=fake_transport)
-
-
-def test_fetch_window_lands_files_spark_can_process(spark, tmp_path):
-    zone = RpcLandingZone(
-        "http://node:4467",
-        str(tmp_path / "blocks"),
-        str(tmp_path / "txns"),
-        transport=fake_transport,
-    )
-    assert zone.height() == 101
-    bpath, tpath = zone.fetch_window(99, 101)  # 99 missing -> skipped
-
-    landed = [json.loads(x) for x in open(bpath)]
-    assert [b["height"] for b in landed] == [100, 101]
-
-    blocks, bad = split_corrupt(read_blocks(spark, str(tmp_path / "blocks")))
-    txns, _ = split_corrupt(read_txns(spark, str(tmp_path / "txns")))
-    assert bad.count() == 0
-    edges = payment_edges(blocks, txns).collect()
-    assert len(edges) == 1
-    assert edges[0]["_from"] == "accounts/A" and edges[0]["amount"] == 10
