@@ -13,7 +13,7 @@ BOTH engines so summation-order noise cannot flip the value hash.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.keys import canonical_md5_key
@@ -21,6 +21,7 @@ from ..functions.geo import geo_index_udf
 from ..operators import aggregates as agg
 from ..operators import relational as rel
 from .registry import EVENTS_NORM, load_events, load_table, register
+from .replay import last_emission, run_replay, scratch_dir
 
 
 # --------------------------------------------------------------------------
@@ -515,8 +516,9 @@ FROM y GROUP BY user_id, sid""",
     doc="Per-user session windows (30 min inactivity gap) via the native "
         "session_window operator — Spark merges/expands windows inside one "
         "shuffle-and-merge pass; the oracle is the classic gaps-and-islands "
-        "rewrite. Streaming twin: streaming/windows.py sessionized_activity "
-        "(same operator, plus watermark-driven state eviction).",
+        "rewrite. Streaming twin: stream_session_replay (the same gap "
+        "semantics as a stateful stream, checked against the same "
+        "gaps-and-islands oracle).",
     tags=("agg", "window", "session"),
 )
 def agg_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -783,72 +785,6 @@ def dq_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _replay_dir(name: str) -> str:
-    """Deterministic per-query scratch dir, wiped on entry.
-
-    The replay queries materialize sink tables; one well-known path per
-    (process, query) — instead of ``mkdtemp`` per call — keeps repeated
-    runs from leaking a directory per invocation (ADVICE r4), and the
-    wipe guarantees each run starts from an empty table so the value
-    hash is independent of run order. The path is keyed by PID because
-    a path shared ACROSS processes races: two concurrent Spark sessions
-    running the same replay (e.g. pytest alongside the driver replica)
-    both wipe/write ``.../<name>/_temporary/0`` and one aborts with
-    FileNotFoundException. Scratch roots left by exited processes are
-    swept opportunistically so the per-PID scheme cannot accumulate;
-    because a dead owner's PID can be recycled by an unrelated live
-    process (which would make the liveness probe keep the orphan
-    forever) — and because pre-PID-scheme legacy dirs are not
-    digit-named at all — entries ALSO age out by mtime after one day
-    (ADVICE r10). Liveness wins over age: a dir whose PID is alive and
-    probe-able is never swept, however old (its owner may still be
-    reading nested files the dir mtime doesn't reflect — review r11);
-    the age path reclaims only dirs whose owner is gone (dead PID),
-    un-probe-able (recycled PID now owned by another user), or unnamed
-    (legacy non-digit dirs).
-    """
-    import os
-    import shutil
-    import tempfile
-    import time
-
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_replay")
-    stale_before = time.time() - 24 * 3600
-    try:
-        for entry in os.listdir(root):
-            path = os.path.join(root, entry)
-            if entry.isdigit() and int(entry) == os.getpid():
-                continue
-            try:
-                aged_out = os.path.getmtime(path) < stale_before
-            except OSError:
-                aged_out = False
-            if not entry.isdigit():
-                # legacy/unknown dir: no PID to probe — age is the only
-                # signal, so sweep once it's a day old, never sooner
-                if aged_out:
-                    shutil.rmtree(path, ignore_errors=True)
-                continue
-            try:
-                os.kill(int(entry), 0)  # raises if that PID is gone
-            except ProcessLookupError:
-                shutil.rmtree(path, ignore_errors=True)
-            except PermissionError:
-                # PID exists but isn't ours: the process is ALIVE, so
-                # the dir is never swept regardless of age (ADVICE r11:
-                # the old age-based reclaim here could remove a >24h
-                # other-user session's in-use scratch; a recycled PID
-                # whose dir truly is orphaned gets cleaned the next
-                # time that PID is unoccupied)
-                pass
-    except FileNotFoundError:
-        pass
-    d = os.path.join(root, str(os.getpid()), name)
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d, exist_ok=True)
-    return d
-
-
 _FOLLOW_N = 120
 
 
@@ -910,7 +846,7 @@ FROM e"""
 def follow_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.follow import PAYMENTS, process_batch
 
-    out = _replay_dir("follow_replay")
+    out = scratch_dir("follow_replay")
 
     process_batch(spark, *_chain_frames(spark, "mock://replay", 1, _FOLLOW_N), out)
     # replay the identical batch: the anti-join sink must add zero rows
@@ -971,7 +907,7 @@ def follow_replay_receipts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.follow import RECEIPTS, process_batch
 
-    out = _replay_dir("follow_replay_rx")
+    out = scratch_dir("follow_replay_rx")
 
     process_batch(spark, *_chain_frames(spark, "mock://mixed", 1, _FOLLOW_N), out)
     process_batch(spark, *_chain_frames(spark, "mock://mixed", 1, _FOLLOW_N), out)
@@ -1002,7 +938,7 @@ def follow_replay_accounts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.follow import ACCOUNTS, process_batch
 
-    out = _replay_dir("follow_replay_ac")
+    out = scratch_dir("follow_replay_ac")
 
     process_batch(spark, *_chain_frames(spark, "mock://replay", 1, _FOLLOW_N), out)
     process_batch(spark, *_chain_frames(spark, "mock://replay", 1, _FOLLOW_N), out)
@@ -1037,7 +973,7 @@ def rollup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_events(spark, sf_dir).withColumn(
         "value_c", F.round(F.col("value") * 100).cast("long")
     )
-    out = _replay_dir("rollup_replay")
+    out = scratch_dir("rollup_replay")
     for i in range(3):
         batch = ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == i)
         merge_rollup(
@@ -1065,7 +1001,8 @@ def rollup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="The custom stateful operator (streaming/stateful.py "
         "running_totals, applyInPandasWithState) under the driver's "
         "value hash: events replay as three parquet micro-batches "
-        "(maxFilesPerTrigger=1, availableNow), per-user state carries "
+        "(event_id mod 3, one file per trigger, availableNow; "
+        "plans/replay.py), per-user state carries "
         "across batches, and each user's LAST update-mode emission must "
         "equal a one-shot GROUP BY over the whole table. Values are "
         "integer cents so state accumulation is exact; state lives in "
@@ -1074,7 +1011,6 @@ def rollup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful", "agg"),
 )
 def stream_totals_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-
     from ..streaming.stateful import running_totals
 
     ev = load_events(spark, sf_dir).select(
@@ -1084,50 +1020,23 @@ def stream_totals_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("value"),
     )
-    src = _replay_dir("stream_totals/src")
-    res = _replay_dir("stream_totals/res")
-    ckpt = _replay_dir("stream_totals/ckpt")
     ev = ev.persist()  # one execution for all three batch slices
-    for i in range(3):
-        (
-            ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == i)
-            .select("user_id", "value")
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(src)
-        )
-    ev.unpersist()
-    stream = (
-        spark.readStream.schema("user_id long, value double")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    from ..streaming.tuning import stream_partitions, stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark, stream_partitions(src)):
-        q = (
-            running_totals(stream)
-            .writeStream.foreachBatch(
-                lambda df, bid: df.withColumn("batch_id", F.lit(bid))
-                .write.mode("append")
-                .parquet(res)
+    outs = run_replay(
+        spark,
+        "stream_totals",
+        running_totals,
+        [
+            ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == i).select(
+                "user_id", "value"
             )
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    outs = spark.read.parquet(res)
-    w = Window.partitionBy("user_id").orderBy(F.desc("batch_id"))
-    return (
-        outs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            "n_events_total",
-            F.col("total_value").cast("long").alias("total_value_c"),
-        )
+            for i in range(3)
+        ],
+    )
+    ev.unpersist()
+    return last_emission(outs, "user_id").select(
+        "user_id",
+        "n_events_total",
+        F.col("total_value").cast("long").alias("total_value_c"),
     )
 
 
@@ -1167,7 +1076,7 @@ def follow_retention_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.follow import PAYMENTS, process_batch
     from ..streaming.sink import apply_retention
 
-    out = _replay_dir("follow_retention")
+    out = scratch_dir("follow_retention")
 
     process_batch(spark, *_chain_frames(spark, "mock://replay", _RET_START, _RET_END, 512), out)
     dropped = apply_retention(
@@ -1217,7 +1126,7 @@ def quarantine_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.jsonl import read_blocks, split_corrupt
 
-    land = _replay_dir("quarantine_land")
+    land = scratch_dir("quarantine_land")
     lines = []
     for h in range(1, _Q_N + 1):
         if h % 7 == 0:
@@ -1283,8 +1192,8 @@ def inventory_refresh_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.service import refresh_inventory_if_stale
 
-    land = _replay_dir("inventory/land")
-    out = _replay_dir("inventory/dim")
+    land = scratch_dir("inventory/land")
+    out = scratch_dir("inventory/dim")
 
     def write_drop(height: int, n: int) -> None:
         rows = ["address,owner,location,name"]

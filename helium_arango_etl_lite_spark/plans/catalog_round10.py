@@ -250,7 +250,7 @@ SELECT DISTINCT src, dst FROM ({" UNION ALL ".join(sels)})"""
         "the corpus-so-far, replays the asymmetric top-k and the "
         "back-link insertion, so the driver hash certifies the "
         "arrival-order semantics end to end. Arrival order is pinned "
-        "by file mtimes (the stream_late_replay discipline). SCALE: "
+        "by file mtimes (plans/replay.py: slice i is batch i). SCALE: "
         "per batch O(|batch| x bucket density) — the streaming twin of "
         "the append soak's economics "
         "(operators/llm/similarity.py:knn_join_bucketed corpus= form; "
@@ -258,43 +258,16 @@ SELECT DISTINCT src, dst FROM ({" UNION ALL ".join(sels)})"""
     tags=("streaming", "similarity", "graph", "state", "scale"),
 )
 def stream_ann_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from ..operators.llm.similarity import knn_join_bucketed
-    from .catalog_core import _replay_dir
     from .catalog_llm import EMB_DIM, NEAR_DUP_PLANES
+    from .replay import run_replay, scratch_dir
 
-    src = _replay_dir("stream_ann/src")
-    corpus = _replay_dir("stream_ann/corpus")
-    res = _replay_dir("stream_ann/res")
-    ckpt = _replay_dir("stream_ann/ckpt")
-
-    tbl = pq.read_table(
-        f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    pdf = tbl.to_pandas()
-    schema = pa.schema(
-        [("vec_id", pa.int64()), ("embedding", pa.list_(pa.float64()))]
-    )
-    for b in range(_INGEST_BATCHES):
-        part = pdf[pdf["vec_id"] % _INGEST_BATCHES == b]
-        path = os.path.join(src, f"b{b}.parquet")
-        pq.write_table(
-            pa.Table.from_pandas(part, schema=schema, preserve_index=False),
-            path,
-        )
-        os.utime(path, (1_000_000 + b, 1_000_000 + b))
+    corpus = scratch_dir("stream_ann/corpus")
 
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<double>")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-
-    def sink(df: DataFrame, bid: int) -> None:
+    def link(df: DataFrame, bid: int) -> DataFrame:
         df.write.mode("append").parquet(corpus)
         full = spark.read.parquet(corpus)
         per = [
@@ -310,20 +283,20 @@ def stream_ann_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         back = out.select(
             F.col("dst").alias("src"), F.col("src").alias("dst")
         )
-        out.unionByName(back).write.mode("append").parquet(res)
+        return out.unionByName(back)
 
-    from ..streaming.tuning import stream_partitions, stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark, stream_partitions(src)):
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(res).distinct()
+    outs = run_replay(
+        spark,
+        "stream_ann",
+        lambda s: s,
+        [
+            emb.filter(F.pmod(F.col("vec_id"), F.lit(_INGEST_BATCHES)) == b)
+            for b in range(_INGEST_BATCHES)
+        ],
+        output_mode="append",
+        per_batch=link,
+    )
+    return outs.select("src", "dst").distinct()
 
 
 # ---------------------------------------------------------------------------

@@ -166,65 +166,22 @@ def cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful", "cdc"),
 )
 def stream_cdc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from ..streaming.stateful import cdc_stream
-    from .catalog_core import _replay_dir
+    from .replay import last_emission, run_replay, time_thirds
 
     log = _cdc_log(spark, sf_dir)
-    src = _replay_dir("stream_cdc/src")
-    res = _replay_dir("stream_cdc/res")
-    ckpt = _replay_dir("stream_cdc/ckpt")
     # one execution for min/max + all three slices (see catalog_round8)
     log = log.persist()
-    lo, hi = log.agg(F.min("ts_us"), F.max("ts_us")).collect()[0]
-    c1 = lo + (hi - lo) // 3
-    c2 = lo + 2 * (hi - lo) // 3
-    for i, cond in enumerate(
-        [
-            F.col("ts_us") < c1,
-            (F.col("ts_us") >= c1) & (F.col("ts_us") < c2),
-            F.col("ts_us") >= c2,
-        ]
-    ):
-        pdf = log.filter(cond).drop("ts_us").toPandas()
-        # nullable long -> pandas float64 (NaN for NULL); pin the Arrow
-        # type back to int64-with-nulls or the stream schema mismatches
-        pdf["valc"] = pdf["valc"].astype("Int64")
-        path = os.path.join(src, f"b{i}.parquet")
-        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), path)
-        os.utime(path, (1_000_000 + i, 1_000_000 + i))
-    log.unpersist()
-
-    stream = (
-        spark.readStream.schema(
-            "user_id long, seq long, op string, valc long, attr string"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    outs = run_replay(
+        spark,
+        "stream_cdc",
+        cdc_stream,
+        [s.drop("ts_us") for s in time_thirds(log, "ts_us")],
     )
-    from ..streaming.tuning import stream_partitions, stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark, stream_partitions(src)):
-        q = (
-            cdc_stream(stream)
-            .writeStream.foreachBatch(
-                lambda df, bid: df.withColumn("batch_id", F.lit(bid))
-                .write.mode("append")
-                .parquet(res)
-            )
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    outs = spark.read.parquet(res)
-    w = Window.partitionBy("user_id").orderBy(F.desc("batch_id"))
+    log.unpersist()
     return (
-        outs.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("n_live") > 0))
+        last_emission(outs, "user_id")
+        .filter(F.col("n_live") > 0)
         .select("user_id", "last_valc", "last_attr", "last_seq", "n_live")
     )
 
@@ -499,9 +456,9 @@ def _bucketed_sides(
 ) -> tuple[DataFrame, DataFrame]:
     """Write orders + customer as bucketed tables and read them back.
     Shared by the catalog entry and the plan-assertion test."""
-    from .catalog_core import _replay_dir
+    from .replay import scratch_dir
 
-    scratch = _replay_dir("bucket_tables")
+    scratch = scratch_dir("bucket_tables")
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_totalprice"
     )

@@ -85,9 +85,9 @@ def storage_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write events partitioned by event_type into scratch and read the
     partitioned table back (shared with the plan-assertion test)."""
-    from .catalog_core import _replay_dir
+    from .replay import scratch_dir
 
-    scratch = _replay_dir("part_events")
+    scratch = scratch_dir("part_events")
     ev = load_events(spark, sf_dir).select(
         "event_id", "event_type", "value"
     )

@@ -182,7 +182,7 @@ FROM unioned GROUP BY 1"""
     tags=("storage", "physical", "etl"),
 )
 def storage_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .catalog_core import _replay_dir
+    from .replay import scratch_dir
 
     ev = load_events(spark, sf_dir)
     lo, hi = ev.agg(
@@ -195,7 +195,7 @@ def storage_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100).cast("long").alias("cents"),
         F.unix_micros("ts").alias("ts_us"),
     )
-    scratch = _replay_dir("schema_evolution")
+    scratch = scratch_dir("schema_evolution")
     old_p = os.path.join(scratch, "v1")
     new_p = os.path.join(scratch, "v2")
     base.filter(F.col("ts_us") < cut).drop("ts_us").write.mode(

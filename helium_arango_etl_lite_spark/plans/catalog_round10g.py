@@ -242,13 +242,8 @@ def events_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful", "analytics"),
 )
 def stream_attribution_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from ..streaming.stateful import attribution_stream
-    from .catalog_core import _replay_dir
+    from .replay import run_replay, time_thirds
 
     ev = load_events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -259,53 +254,16 @@ def stream_attribution_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
-    src = _replay_dir("stream_attr/src")
-    res = _replay_dir("stream_attr/res")
-    ckpt = _replay_dir("stream_attr/ckpt")
     # one execution for min/max + all three slices (see catalog_round8)
     base = base.persist()
-    lo, hi = base.agg(F.min("ts_us"), F.max("ts_us")).collect()[0]
-    c1 = lo + (hi - lo) // 3
-    c2 = lo + 2 * (hi - lo) // 3
-    for i, cond in enumerate(
-        [
-            F.col("ts_us") < c1,
-            (F.col("ts_us") >= c1) & (F.col("ts_us") < c2),
-            F.col("ts_us") >= c2,
-        ]
-    ):
-        pdf = base.filter(cond).drop("ts_us").toPandas()
-        path = os.path.join(src, f"b{i}.parquet")
-        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), path)
-        os.utime(path, (1_000_000 + i, 1_000_000 + i))
-    base.unpersist()
-
-    stream = (
-        spark.readStream.schema(
-            "user_id long, seq long, event_type string, cents long"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    outs = run_replay(
+        spark,
+        "stream_attr",
+        attribution_stream,
+        [s.drop("ts_us") for s in time_thirds(base, "ts_us")],
     )
-    from ..streaming.tuning import stream_partitions, stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark, stream_partitions(src)):
-        q = (
-            attribution_stream(stream)
-            .writeStream.foreachBatch(
-                lambda df, bid: df.write.mode("append").parquet(res)
-            )
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return (
-        spark.read.parquet(res)
-        .groupBy("channel")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("conversions"),
-            F.sum("cents").cast("long").alias("cents"),
-        )
+    base.unpersist()
+    return outs.groupBy("channel").agg(
+        F.count(F.lit(1)).cast("long").alias("conversions"),
+        F.sum("cents").cast("long").alias("cents"),
     )

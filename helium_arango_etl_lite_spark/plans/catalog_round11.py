@@ -191,10 +191,10 @@ def llm_ann_graph_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_route_graph, knn_join_bucketed, route_on_graph,
     )
     from ..operators.storage import write_bucketed
-    from .catalog_core import _replay_dir
+    from .replay import scratch_dir
     from .catalog_llm import EMB_DIM, NEAR_DUP_PLANES
 
-    scratch = _replay_dir("ann_graph_persist")
+    scratch = scratch_dir("ann_graph_persist")
     emb = load_table(spark, sf_dir, "embeddings")
     old = emb.filter(F.col("vec_id") % _APPEND_MOD != 0)
     new = emb.filter(F.col("vec_id") % _APPEND_MOD == 0)

@@ -59,13 +59,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .catalog_core import _replay_dir
 from .catalog_llm import EMB_DIM, IVF_K
 from .catalog_round5 import (
     _adc_lut_sql, _CMS_D, _CMS_K, _CMS_SQL, _CMS_W, _pq_block_sql,
     _PQ_BLOCKS, _PQ_CODES,
 )
 from .registry import load_table, register
+from .replay import last_emission, run_replay, scratch_dir
 
 # ---------------------------------------------------------------------------
 # persisted IVF-PQ index: train -> persist -> load -> search
@@ -218,7 +218,7 @@ def llm_ann_ivf_pq_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..operators.storage import write_bucketed
 
-    scratch = _replay_dir("ivf_pq_persist")
+    scratch = scratch_dir("ivf_pq_persist")
     emb = load_table(spark, sf_dir, "embeddings")
 
     # ---- TRAIN + ENCODE (shared kernel with the round-12 soak) ---------
@@ -284,14 +284,16 @@ def stream_heavy_hitters_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import cms_cells_stream
 
     docs = load_table(spark, sf_dir, "documents")
-    src = _replay_dir("stream_cms/src")
-    res = _replay_dir("stream_cms/res")
-    ckpt = _replay_dir("stream_cms/ckpt")
-    for i in range(3):
-        batch = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i)
-        (
+    outs = run_replay(
+        spark,
+        "stream_cms",
+        cms_cells_stream,
+        [
             cms_cell_increments(
-                cms_token_buckets(batch, depth=_CMS_D, width=_CMS_W),
+                cms_token_buckets(
+                    docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i),
+                    depth=_CMS_D, width=_CMS_W,
+                ),
                 depth=_CMS_D,
             )
             # map-side combine BEFORE the state store: each batch ships
@@ -300,37 +302,11 @@ def stream_heavy_hitters_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("d").cast("int").alias("d"),
                      F.col("b").cast("int").alias("b"))
             .agg(F.count(F.lit(1)).cast("long").alias("c"))
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(src)
-        )
-    stream = (
-        spark.readStream.schema("d int, b int, c long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+            for i in range(3)
+        ],
     )
-    from ..streaming.tuning import stream_partitions, stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark, stream_partitions(src)):
-        q = (
-            cms_cells_stream(stream)
-            .writeStream.foreachBatch(
-                lambda df, bid: df.withColumn("batch_id", F.lit(bid))
-                .write.mode("append")
-                .parquet(res)
-            )
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    outs = spark.read.parquet(res)
-    w = Window.partitionBy("d", "b").orderBy(F.desc("batch_id"))
-    cells = (
-        outs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("d", "b", F.col("c").cast("long").alias("c"))
+    cells = last_emission(outs, "d", "b").select(
+        "d", "b", F.col("c").cast("long").alias("c")
     )
     tb = cms_token_buckets(docs, depth=_CMS_D, width=_CMS_W).localCheckpoint(
         eager=False
@@ -380,41 +356,20 @@ def stream_session_ooo_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         F.round(F.col("value") * 100).cast("long").alias("value_c"),
     )
-    src = _replay_dir("stream_sess_ooo/src")
-    res = _replay_dir("stream_sess_ooo/res")
-    ckpt = _replay_dir("stream_sess_ooo/ckpt")
     base = base.persist()  # one execution for all three batch slices
-    for i in range(3):
-        (
-            base.filter(F.pmod(F.col("event_id"), F.lit(3)) == i)
-            .select("user_id", "ts_us", "value_c")
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(src)
-        )
-    base.unpersist()
-    stream = (
-        spark.readStream.schema("user_id long, ts_us long, value_c long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    from ..streaming.tuning import stream_partitions, stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark, stream_partitions(src)):
-        q = (
-            sessionize_ooo(stream)
-            .writeStream.foreachBatch(
-                lambda df, bid: df.withColumn("batch_id", F.lit(bid))
-                .write.mode("append")
-                .parquet(res)
+    outs = run_replay(
+        spark,
+        "stream_sess_ooo",
+        sessionize_ooo,
+        [
+            base.filter(F.pmod(F.col("event_id"), F.lit(3)) == i).select(
+                "user_id", "ts_us", "value_c"
             )
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    outs = spark.read.parquet(res)
+            for i in range(3)
+        ],
+    )
+    base.unpersist()
+    # a user's whole last batch is their session list, so keep all of it
     last_b = outs.groupBy("user_id").agg(F.max("batch_id").alias("mb"))
     return (
         outs.join(last_b, "user_id")
@@ -626,7 +581,7 @@ def llm_ann_ivf_pq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..operators.storage import write_bucketed
 
-    scratch = _replay_dir("ivf_pq_append")
+    scratch = scratch_dir("ivf_pq_append")
     emb = load_table(spark, sf_dir, "embeddings")
     old = emb.filter(F.col("vec_id") % _IPQ_APP_MOD != 0)
     new = emb.filter(F.col("vec_id") % _IPQ_APP_MOD == 0)

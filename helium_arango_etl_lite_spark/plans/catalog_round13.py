@@ -62,7 +62,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .catalog_core import _replay_dir
 from .catalog_llm import EMB_DIM, IVF_K
 from .catalog_round5 import (
     _adc_lut_sql, _pq_block_sql, _PQ_BLOCKS, _PQ_CODES,
@@ -73,6 +72,7 @@ from .catalog_round12 import (
     _ivf_pq_cand_sql, _lloyd_c_sql,
 )
 from .registry import load_table, register
+from .replay import last_emission, run_replay
 
 # ---------------------------------------------------------------------------
 # recall@k for the quantized index (r12 verdict item 2)
@@ -211,14 +211,14 @@ def stream_quantiles_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n"),
     ).localCheckpoint(eager=True)
 
-    src = _replay_dir("stream_hq/src")
-    res = _replay_dir("stream_hq/res")
-    ckpt = _replay_dir("stream_hq/ckpt")
     binned = li.crossJoin(F.broadcast(st)).withColumn(
         "bin", F.expr(f"((pc - minc) * {_HQ_BINS}) div (maxc - minc + 1)")
     ).persist()  # one execution for all three batch slices
-    for i in range(3):
-        (
+    outs = run_replay(
+        spark,
+        "stream_hq",
+        cms_cells_stream,
+        [
             binned.filter(F.pmod(F.col("l_orderkey"), F.lit(3)) == i)
             # map-side combine BEFORE the state store: each batch ships
             # <= _HQ_BINS pre-summed bin counts, never one row per line
@@ -227,41 +227,13 @@ def stream_quantiles_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("bin").cast("int").alias("b"),
             )
             .agg(F.count(F.lit(1)).cast("long").alias("c"))
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(src)
-        )
-    binned.unpersist()
-    stream = (
-        spark.readStream.schema("d int, b int, c long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+            for i in range(3)
+        ],
     )
-    from ..streaming.tuning import stream_partitions, stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark, stream_partitions(src)):
-        q = (
-            cms_cells_stream(stream)
-            .writeStream.foreachBatch(
-                lambda df, bid: df.withColumn("batch_id", F.lit(bid))
-                .write.mode("append")
-                .parquet(res)
-            )
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    outs = spark.read.parquet(res)
-    last = Window.partitionBy("d", "b").orderBy(F.desc("batch_id"))
-    bins = (
-        outs.withColumn("rn", F.row_number().over(last))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("b").cast("long").alias("bin"),
-            F.col("c").cast("long").alias("cnt"),
-        )
+    binned.unpersist()
+    bins = last_emission(outs, "d", "b").select(
+        F.col("b").cast("long").alias("bin"),
+        F.col("c").cast("long").alias("cnt"),
     )
     # bounded readout: <= _HQ_BINS rows ever enter this window
     w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
@@ -327,54 +299,27 @@ def stream_hll_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .registry import load_events
 
     en = load_events(spark, sf_dir)
-    src = _replay_dir("stream_hll/src")
-    res = _replay_dir("stream_hll/res")
-    ckpt = _replay_dir("stream_hll/ckpt")
-    for i in range(3):
-        (
+    outs = run_replay(
+        spark,
+        "stream_hll",
+        hll_registers_stream,
+        [
             # map-side combine BEFORE the state store: each batch ships
             # <= groups x m partial register maxima, never one row per
             # event (max-merge makes the pre-reduction exact)
             hll_registers(
                 en.filter(F.pmod(F.col("event_id"), F.lit(3)) == i),
                 group="event_type", value="user_id",
-            )
-            .select(
+            ).select(
                 F.col("event_type").alias("g"),
                 F.col("b").cast("long").alias("b"),
                 F.col("r").cast("long").alias("r"),
             )
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(src)
-        )
-    stream = (
-        spark.readStream.schema("g string, b long, r long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+            for i in range(3)
+        ],
     )
-    from ..streaming.tuning import stream_partitions, stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark, stream_partitions(src)):
-        q = (
-            hll_registers_stream(stream)
-            .writeStream.foreachBatch(
-                lambda df, bid: df.withColumn("batch_id", F.lit(bid))
-                .write.mode("append")
-                .parquet(res)
-            )
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    outs = spark.read.parquet(res)
-    last = Window.partitionBy("g", "b").orderBy(F.desc("batch_id"))
-    regs = (
-        outs.withColumn("rn", F.row_number().over(last))
-        .filter(F.col("rn") == 1)
-        .select(F.col("g").alias("event_type"), "b", "r")
+    regs = last_emission(outs, "g", "b").select(
+        F.col("g").alias("event_type"), "b", "r"
     )
     return hll_estimate(regs, en, group="event_type", value="user_id")
 

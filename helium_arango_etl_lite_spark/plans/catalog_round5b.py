@@ -26,9 +26,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.llm import similarity
-from .catalog_core import _replay_dir
 from .catalog_llm import EMB_DIM, LSH_SEED, NEAR_DUP_PLANES
 from .registry import EVENTS_NORM, load_events, load_table, register
+from .replay import last_emission, run_replay
 
 # ---------------------------------------------------------------------------
 # ANN recall@k evaluation
@@ -228,11 +228,6 @@ FROM kept GROUP BY 1"""
     tags=("streaming", "watermark", "agg"),
 )
 def stream_late_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     ev = load_events(spark, sf_dir).select(
         "event_id",
         "ts",
@@ -240,74 +235,38 @@ def stream_late_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("value_c"),
     )
-    src = _replay_dir("stream_late/src")
-    res = _replay_dir("stream_late/res")
-    ckpt = _replay_dir("stream_late/ckpt")
 
-    # One parquet file per micro-batch, written with pyarrow so the file
-    # NAME and MTIME are ours: the file stream source orders batches by
-    # (mtime, path), so both orderings agree on b0 < b1 < b2 and the
-    # watermark progression is deterministic run-to-run.
-    # one execution for all three mod-slices (see catalog_round8)
-    ev = ev.persist()
-    for i in range(_WM_BATCHES):
-        pdf = (
-            ev.filter(F.pmod(F.col("event_id"), F.lit(_WM_BATCHES)) == i)
-            .select("ts", "value_c")
-            .toPandas()
-        )
-        # micros + UTC so Spark reads TimestampType (TIMESTAMP(NANOS)
-        # would come back as a bare INT64 — SPARK-40819)
-        pdf["ts"] = pdf["ts"].dt.tz_localize("UTC").astype("datetime64[us, UTC]")
-        path = os.path.join(src, f"b{i}.parquet")
-        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), path)
-        os.utime(path, (1_000_000 + i, 1_000_000 + i))
-    ev.unpersist()
-
-    stream = (
-        spark.readStream.schema("ts timestamp, value_c long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    agg = (
-        stream.withWatermark("ts", _WM_DELAY)
-        .groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            F.sum("value_c").cast("long").alias("sum_value_c"),
-        )
-    )
-
-    def sink(df: DataFrame, bid: int) -> None:
-        (
-            df.select(
+    def windowed(stream: DataFrame) -> DataFrame:
+        return (
+            stream.withWatermark("ts", _WM_DELAY)
+            .groupBy(F.window("ts", "1 hour").alias("w"))
+            .agg(
+                F.count("*").cast("long").alias("n_events"),
+                F.sum("value_c").cast("long").alias("sum_value_c"),
+            )
+            .select(
                 F.col("w.start").alias("window_start"),
                 "n_events",
                 "sum_value_c",
-                F.lit(bid).alias("batch_id"),
             )
-            .write.mode("append")
-            .parquet(res)
         )
 
-    from ..streaming.tuning import stream_partitions, stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark, stream_partitions(src)):
-        q = (
-            agg.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    outs = spark.read.parquet(res)
-    w = Window.partitionBy("window_start").orderBy(F.desc("batch_id"))
-    return (
-        outs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("window_start", "n_events", "sum_value_c")
+    # one execution for all three mod-slices; the runner pins slice i to
+    # micro-batch i, so the watermark progression is deterministic
+    ev = ev.persist()
+    outs = run_replay(
+        spark,
+        "stream_late",
+        windowed,
+        [
+            ev.filter(F.pmod(F.col("event_id"), F.lit(_WM_BATCHES)) == i)
+            .select("ts", "value_c")
+            for i in range(_WM_BATCHES)
+        ],
+    )
+    ev.unpersist()
+    return last_emission(outs, "window_start").select(
+        "window_start", "n_events", "sum_value_c"
     )
 
 
@@ -434,7 +393,8 @@ def zorder_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
        SELECT DISTINCT user_id, event_type FROM events_norm""",
     doc="Streaming exact dedup at ingest (dropDuplicatesWithinWatermark "
         "over a real multi-batch stream) under the driver's value hash: "
-        "events replay as three micro-batches (maxFilesPerTrigger=1); "
+        "events replay as three micro-batches (event_id mod 3, one "
+        "file per trigger); "
         "per-key state dedups ACROSS batches, append mode emits each "
         "key exactly once on first arrival, and the materialized table "
         "must equal a one-shot DISTINCT. The watermark delay (40 days) "
@@ -448,36 +408,22 @@ def zorder_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "dedup", "state"),
 )
 def stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_events(spark, sf_dir).select("user_id", "event_type", "ts")
-    src = _replay_dir("stream_dedup/src")
-    res = _replay_dir("stream_dedup/res")
-    ckpt = _replay_dir("stream_dedup/ckpt")
-    ev.repartition(3).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema("user_id long, event_type string, ts timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    ev = load_events(spark, sf_dir)
+    outs = run_replay(
+        spark,
+        "stream_dedup",
+        lambda s: s.withWatermark("ts", "40 days").dropDuplicatesWithinWatermark(
+            ["user_id", "event_type"]
+        ),
+        [
+            ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == i).select(
+                "user_id", "event_type", "ts"
+            )
+            for i in range(3)
+        ],
+        output_mode="append",
     )
-    deduped = stream.withWatermark("ts", "40 days").dropDuplicatesWithinWatermark(
-        ["user_id", "event_type"]
-    )
-
-    def sink(df: DataFrame, bid: int) -> None:
-        df.select("user_id", "event_type").write.mode("append").parquet(res)
-
-    from ..streaming.tuning import stream_partitions, stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark, stream_partitions(src)):
-        q = (
-            deduped.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(res).select("user_id", "event_type")
+    return outs.select("user_id", "event_type")
 
 
 @register(
@@ -488,7 +434,9 @@ def stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
          AND l.l_shipdate < o.o_orderdate + INTERVAL 180 DAY""",
     doc="Stream-stream inner interval join under the driver's value "
         "hash: orders and lineitem each replay as independent file "
-        "streams (three micro-batches per side), joined on orderkey "
+        "streams (three micro-batches per side: orders by orderkey mod "
+        "3, lineitem by (orderkey + linenumber) mod 3, so an order's "
+        "lines arrive before, with and after it), joined on orderkey "
         "with an event-time range (ship within 180 days of order) and "
         "watermarks on BOTH sides — the symmetric-hash-join state shape "
         "Spark uses for stream/stream correlation. Each matching pair "
@@ -503,55 +451,41 @@ def stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join", "state"),
 )
 def stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", F.col("o_orderdate").cast("timestamp").alias("o_orderdate")
+    )
     items = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_shipdate"
+        "l_orderkey",
+        "l_linenumber",
+        F.col("l_shipdate").cast("timestamp").alias("l_shipdate"),
     )
-    osrc = _replay_dir("stream_join/orders")
-    lsrc = _replay_dir("stream_join/lineitem")
-    res = _replay_dir("stream_join/res")
-    ckpt = _replay_dir("stream_join/ckpt")
-    orders.repartition(3).write.mode("append").parquet(osrc)
-    items.repartition(3).write.mode("append").parquet(lsrc)
 
-    so = (
-        spark.readStream.schema("o_orderkey long, o_orderdate timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(osrc)
-        .withWatermark("o_orderdate", "3000 days")
-    )
-    sl = (
-        spark.readStream.schema(
-            "l_orderkey long, l_linenumber int, l_shipdate timestamp"
+    def interval_join(so: DataFrame, sl: DataFrame) -> DataFrame:
+        return sl.withWatermark("l_shipdate", "3000 days").join(
+            so.withWatermark("o_orderdate", "3000 days"),
+            F.expr(
+                "l_orderkey = o_orderkey AND "
+                "l_shipdate >= o_orderdate AND "
+                "l_shipdate < o_orderdate + INTERVAL 180 DAYS"
+            ),
         )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(lsrc)
-        .withWatermark("l_shipdate", "3000 days")
+
+    # an order's lines are spread over all three batches (mod 3 of
+    # orderkey + linenumber), so partners arrive before, with and after it
+    outs = run_replay(
+        spark,
+        "stream_join",
+        interval_join,
+        [orders.filter(F.pmod(F.col("o_orderkey"), F.lit(3)) == i) for i in range(3)],
+        [
+            items.filter(
+                F.pmod(F.col("l_orderkey") + F.col("l_linenumber"), F.lit(3)) == i
+            )
+            for i in range(3)
+        ],
+        output_mode="append",
     )
-    joined = sl.join(
-        so,
-        F.expr(
-            "l_orderkey = o_orderkey AND "
-            "l_shipdate >= o_orderdate AND "
-            "l_shipdate < o_orderdate + INTERVAL 180 DAYS"
-        ),
-    ).select("l_orderkey", "l_linenumber", "o_orderdate", "l_shipdate")
-
-    def sink(df: DataFrame, bid: int) -> None:
-        df.write.mode("append").parquet(res)
-
-    from ..streaming.tuning import stream_partitions, stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark, stream_partitions(osrc, lsrc)):
-        q = (
-            joined.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(res)
+    return outs.select("l_orderkey", "l_linenumber", "o_orderdate", "l_shipdate")
 
 
 # ---------------------------------------------------------------------------

@@ -9,14 +9,12 @@ from .rollup import continuous_rollup, merge_rollup
 from .stateful import running_totals
 from .windows import (
     dedup_within_watermark,
-    sessionized_activity,
     windowed_activity,
 )
 
 __all__ = [
     "running_totals",
     "dedup_within_watermark",
-    "sessionized_activity",
     "windowed_activity",
     "RETENTION_BLOCKS",
     "apply_retention",

@@ -50,33 +50,6 @@ def windowed_activity(
     )
 
 
-def sessionized_activity(
-    events: DataFrame,
-    ts_col: str = "ts",
-    value_col: str = "value",
-    key_col: str = "user_id",
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming session windows (inactivity gap). Same operator as the
-    batch ``agg_session_window`` query; in streaming, the watermark decides
-    when a session can no longer grow and its state is emitted/evicted."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.col(key_col), F.session_window(ts_col, gap))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(value_col), 2).alias("total_value"),
-        )
-        .select(
-            key_col,
-            F.col("session_window.start").alias("session_start"),
-            "n_events",
-            "total_value",
-        )
-    )
-
-
 def dedup_within_watermark(
     events: DataFrame,
     keys: list[str],

@@ -38,6 +38,20 @@ def test_no_non_ascii_letters_in_source():
     assert not offenders, "\n".join(offenders)
 
 
+def test_stream_drivers_only_in_the_replay_runner():
+    """Every catalog stream replay goes through plans/replay.py: no other
+    module under plans/ builds its own stream query."""
+    banned = ("readStream", "writeStream", "trigger(availableNow",
+              'option("maxFilesPerTrigger"')
+    offenders = []
+    for p in glob.glob(os.path.join(REPO, "helium_arango_etl_lite_spark/plans/*.py")):
+        if os.path.basename(p) == "replay.py":
+            continue
+        for lineno, line in enumerate(open(p, encoding="utf-8"), 1):
+            offenders += [f"{p}:{lineno}: {b}" for b in banned if b in line]
+    assert not offenders, "\n".join(offenders)
+
+
 def test_kcenter_missing_seed_raises_descriptive_error(spark):
     from helium_arango_etl_lite_spark.operators.llm.similarity import (
         kcenter_coreset,
@@ -114,10 +128,10 @@ def test_scratch_sweep_never_removes_alive_foreign_pid(monkeypatch, tmp_path):
     which could delete another user's in-use scratch mid-run)."""
     import tempfile
 
-    import helium_arango_etl_lite_spark.plans.catalog_core as cc
+    from helium_arango_etl_lite_spark.plans.replay import scratch_dir
 
-    # _replay_dir imports os/tempfile locally — patch the shared module
-    # objects, not attributes on catalog_core
+    # scratch_dir imports tempfile locally — patch the shared module
+    # objects, not attributes on the replay module
     monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
     root = tmp_path / "spark_graft_replay"
     foreign = root / "424242"
@@ -135,7 +149,7 @@ def test_scratch_sweep_never_removes_alive_foreign_pid(monkeypatch, tmp_path):
         return real_kill(pid, sig)
 
     monkeypatch.setattr(os, "kill", fake_kill)
-    d = cc._replay_dir("round12_fix_test")
+    d = scratch_dir("round12_fix_test")
     assert os.path.isdir(d)
     assert (foreign / "data").exists(), "alive foreign PID dir was swept"
 
@@ -152,6 +166,6 @@ def test_scratch_sweep_never_removes_alive_foreign_pid(monkeypatch, tmp_path):
         return real_kill(pid, sig)
 
     monkeypatch.setattr(os, "kill", fake_kill2)
-    cc._replay_dir("round12_fix_test")
+    scratch_dir("round12_fix_test")
     assert not dead.exists(), "dead PID dir should be reclaimed"
     assert (foreign / "data").exists()

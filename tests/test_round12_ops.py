@@ -129,14 +129,14 @@ def test_stream_cms_state_is_bounded(spark, sf_dir):
     from helium_arango_etl_lite_spark.streaming.stateful import (
         cms_cells_stream,
     )
-    from helium_arango_etl_lite_spark.plans.catalog_core import _replay_dir
+    from helium_arango_etl_lite_spark.plans.replay import run_replay
 
     docs = load_table(spark, sf_dir, "documents")
-    src = _replay_dir("stream_cms_test/src")
-    res = _replay_dir("stream_cms_test/res")
-    ckpt = _replay_dir("stream_cms_test/ckpt")
-    for i in range(2):
-        (
+    cells = run_replay(
+        spark,
+        "stream_cms_test",
+        cms_cells_stream,
+        [
             cms_cell_increments(
                 cms_token_buckets(
                     docs.filter(F.pmod(F.col("doc_id"), F.lit(2)) == i),
@@ -147,24 +147,9 @@ def test_stream_cms_state_is_bounded(spark, sf_dir):
             .groupBy(F.col("d").cast("int").alias("d"),
                      F.col("b").cast("int").alias("b"))
             .agg(F.count(F.lit(1)).cast("long").alias("c"))
-            .coalesce(1).write.mode("append").parquet(src)
-        )
-    stream = (
-        spark.readStream.schema("d int, b int, c long")
-        .option("maxFilesPerTrigger", "1").parquet(src)
+            for i in range(2)
+        ],
     )
-    q = (
-        cms_cells_stream(stream)
-        .writeStream.foreachBatch(
-            lambda df, bid: df.write.mode("append").parquet(res)
-        )
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    cells = spark.read.parquet(res)
     distinct_cells = cells.select("d", "b").distinct().count()
     assert distinct_cells <= _CMS_D * _CMS_W
     bad = cells.filter(

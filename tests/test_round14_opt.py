@@ -8,8 +8,6 @@ Pins the behaviours the r13 verdict asked for:
 * the walk's batching (tuple ``query_rem``) still returns row-for-row
   what separate calls return, with the re-materialized frontier
   (VERDICT r13 item 3 — the fix must not change results);
-* a non-local stream source path warns instead of silently sizing the
-  stream to the floor (ADVICE r13);
 * malformed SPARK_GRAFT_EXTRA_CONF entries are skipped, not applied as
   empty-string configs (ADVICE r13).
 """
@@ -63,18 +61,6 @@ def test_walk_batched_rems_equal_separate_calls(spark, sf_dir):
         .collect()
     )
     assert tags <= {0, 1}
-
-
-def test_stream_partitions_warns_on_missing_source(tmp_path):
-    import pytest
-
-    from helium_arango_etl_lite_spark.streaming.tuning import (
-        stream_partitions,
-    )
-
-    with pytest.warns(RuntimeWarning, match="not a local directory"):
-        n = stream_partitions(str(tmp_path / "nope"))
-    assert n == 8  # floor — but no longer silently
 
 
 def test_parse_extra_conf_skips_malformed(capsys):
