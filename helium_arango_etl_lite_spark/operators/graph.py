@@ -5,8 +5,14 @@ Input shapes (see ``schemas.py``):
  * ``blocks``  — BLOCK_SCHEMA rows (one per block, txn stubs nested)
  * ``txns``    — TXN_ENVELOPE_SCHEMA rows (hash, type, json payload),
    standing in for the reference's N+1 ``transaction_get`` RPC
-   (client.py:39-51); in Spark the "N+1 fetch" becomes a broadcast join
-   of block headers onto a columnar txn table — one scan, zero RPCs.
+   (client.py:39-51); in Spark the "N+1 fetch" becomes one join of the
+   blocks' txn stubs onto a columnar txn table — one scan, zero RPCs.
+
+:func:`graph_documents` does that join once per batch, parses each
+payload once, keeps the result persisted while the batch's sinks run, and
+derives all three outputs from it. It carries no broadcast hint: a
+follower batch plans its joins under its own execution profile
+(``streaming/follow.py``), and any other caller leaves the choice to AQE.
 
 Output shapes (FIXTURES.md F6):
  * payment edges  ``_from _to hash amount block timestamp _key``
@@ -19,6 +25,9 @@ Output shapes (FIXTURES.md F6):
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -30,6 +39,8 @@ RECEIPT_KEY_COLS = [
     "_from", "_to", "frequency", "datarate", "is_valid", "signal", "snr",
     "timestamp", "hash", "block", "tx_power", "processing_time_s",
 ]
+PAYMENT_TYPES = ("payment_v1", "payment_v2")
+RECEIPT_TYPES = ("poc_receipts_v1", "poc_receipts_v2")
 
 
 def explode_txn_stubs(blocks: DataFrame) -> DataFrame:
@@ -46,68 +57,89 @@ def explode_txn_stubs(blocks: DataFrame) -> DataFrame:
     ).select("block", "block_time", F.col("txn.hash").alias("txn_hash"), F.col("txn.type").alias("txn_type"))
 
 
-def parse_txns(txns: DataFrame, txn_type: str, schema) -> DataFrame:
-    """Type-dispatch + schema parse (client.py:39-51): filter rows of one
-    ``type`` and apply that type's schema to the raw JSON payload.
+def _in_block_txns(blocks: DataFrame, txns: DataFrame) -> DataFrame:
+    """The payment and receipt txns a stub in ``blocks`` references, with
+    the stub's block and time and the payload parsed once by its type's
+    schema: ``pay1`` (payment_v1), ``pay2`` (payment_v2) or ``poc``
+    (poc_receipts v1/v2), NULL for the other types.
 
-    PERMISSIVE mode: a malformed payload yields a NULL struct rather than an
+    Only referenced txns count — the reference walks
+    ``block.transactions`` (follower.py:143), never the txn store at large
+    — and an envelope counts only under the type its stub declares.
+    PERMISSIVE parse: a malformed payload yields NULL fields rather than an
     exception — the engine's stand-in for the reference's ValidationError
-    retry (follower.py:66-69); callers quarantine NULLs.
+    retry (follower.py:66-69).
     """
-    return (
-        txns.filter(F.col("type") == txn_type)
-        .select(
-            F.col("hash").alias("txn_hash"),
-            F.from_json("json", schema).alias("t"),
-        )
+    types = PAYMENT_TYPES + RECEIPT_TYPES
+    stubs = explode_txn_stubs(blocks).filter(F.col("txn_type").isin(*types))
+    envelopes = txns.filter(F.col("type").isin(*types))
+    joined = stubs.join(
+        envelopes,
+        (stubs["txn_hash"] == envelopes["hash"]) & (stubs["txn_type"] == envelopes["type"]),
+    )
+    return joined.select(
+        "block",
+        "block_time",
+        "txn_hash",
+        "type",
+        F.when(F.col("type") == "payment_v1", F.from_json("json", PAYMENT_V1_SCHEMA)).alias("pay1"),
+        F.when(F.col("type") == "payment_v2", F.from_json("json", PAYMENT_V2_SCHEMA)).alias("pay2"),
+        F.when(F.col("type").isin(*RECEIPT_TYPES), F.from_json("json", POC_RECEIPTS_SCHEMA)).alias("poc"),
     )
 
 
-def payment_edges_v1(blocks: DataFrame, txns: DataFrame) -> DataFrame:
-    """payment_v1 -> one payment edge per txn (follower.py:145-159)."""
-    stubs = explode_txn_stubs(blocks).filter(F.col("txn_type") == "payment_v1")
-    parsed = parse_txns(txns, "payment_v1", PAYMENT_V1_SCHEMA)
-    joined = stubs.join(F.broadcast(parsed), "txn_hash")
-    edges = joined.select(
-        F.concat(F.lit("accounts/"), F.col("t.payer")).alias("_from"),
-        F.concat(F.lit("accounts/"), F.col("t.payee")).alias("_to"),
-        F.col("t.hash").alias("hash"),
-        F.col("t.amount").alias("amount"),
-        F.col("block"),
-        F.col("block_time").alias("timestamp"),
-    )
-    return edges.withColumn("_key", canonical_md5_key(*PAYMENT_KEY_COLS))
+@contextmanager
+def graph_documents(blocks: DataFrame, txns: DataFrame) -> Iterator[tuple[DataFrame, DataFrame, DataFrame]]:
+    """Yield one batch's ``(payment edges, witness edges, account
+    vertices)``, all derived from one :func:`_in_block_txns` frame that
+    stays persisted until the block exits, so the stub-envelope join and
+    the payload parse run once for the three sinks."""
+    in_block = _in_block_txns(blocks, txns).persist()
+    try:
+        yield _payment_edges(in_block), _witness_edges(in_block), _account_vertices(in_block)
+    finally:
+        in_block.unpersist()
 
 
-def payment_edges_v2(blocks: DataFrame, txns: DataFrame) -> DataFrame:
-    """payment_v2 -> explode nested payments array, one edge per payment
-    (follower.py:160-176)."""
-    stubs = explode_txn_stubs(blocks).filter(F.col("txn_type") == "payment_v2")
-    parsed = parse_txns(txns, "payment_v2", PAYMENT_V2_SCHEMA)
-    joined = stubs.join(F.broadcast(parsed), "txn_hash")
-    exploded = joined.select(
-        "block", "block_time", "t.hash", "t.payer", F.explode("t.payments").alias("p")
+def _payment_edges(txns: DataFrame) -> DataFrame:
+    """payment_v1 -> one edge per txn (follower.py:145-159); payment_v2 ->
+    one edge per element of its ``payments`` array (follower.py:160-176).
+    Keyed and deduplicated — the onDuplicate=ignore contract of
+    follower.py:205-207."""
+    v1 = txns.filter(F.col("type") == "payment_v1").select(
+        F.col("pay1.payer").alias("payer"),
+        F.col("pay1.payee").alias("payee"),
+        F.col("pay1.hash").alias("hash"),
+        F.col("pay1.amount").alias("amount"),
+        "block",
+        "block_time",
     )
-    edges = exploded.select(
-        F.concat(F.lit("accounts/"), F.col("payer")).alias("_from"),
-        F.concat(F.lit("accounts/"), F.col("p.payee")).alias("_to"),
-        F.col("hash"),
+    v2 = txns.filter(F.col("type") == "payment_v2").select(
+        F.col("pay2.payer").alias("payer"),
+        F.col("pay2.hash").alias("hash"),
+        "block",
+        "block_time",
+        F.explode("pay2.payments").alias("p"),
+    ).select(
+        "payer",
+        F.col("p.payee").alias("payee"),
+        "hash",
         F.col("p.amount").alias("amount"),
-        F.col("block"),
+        "block",
+        "block_time",
+    )
+    edges = v1.unionByName(v2).select(
+        F.concat(F.lit("accounts/"), F.col("payer")).alias("_from"),
+        F.concat(F.lit("accounts/"), F.col("payee")).alias("_to"),
+        "hash",
+        "amount",
+        "block",
         F.col("block_time").alias("timestamp"),
     )
-    return edges.withColumn("_key", canonical_md5_key(*PAYMENT_KEY_COLS))
+    return edges.withColumn("_key", canonical_md5_key(*PAYMENT_KEY_COLS)).dropDuplicates(["_key"])
 
 
-def payment_edges(blocks: DataFrame, txns: DataFrame) -> DataFrame:
-    """All payment edges (v1 union v2), keyed and deduplicated — the
-    idempotent-sink contract of follower.py:205-207 (onDuplicate=ignore)."""
-    return payment_edges_v1(blocks, txns).unionByName(
-        payment_edges_v2(blocks, txns)
-    ).dropDuplicates(["_key"])
-
-
-def witness_edges(blocks: DataFrame, txns: DataFrame) -> DataFrame:
+def _witness_edges(txns: DataFrame) -> DataFrame:
     """poc_receipts v1/v2 -> one edge per witness (follower.py:177-202).
 
     Only ``path[0]`` is read, as in the reference (follower.py:180).
@@ -116,21 +148,11 @@ def witness_edges(blocks: DataFrame, txns: DataFrame) -> DataFrame:
     the path element has no receipt struct — the columnar equivalent of the
     reference's try/except AttributeError (follower.py:194-198).
     """
-    stubs = explode_txn_stubs(blocks).filter(
-        F.col("txn_type").isin("poc_receipts_v1", "poc_receipts_v2")
-    )
-    parsed = txns.filter(
-        F.col("type").isin("poc_receipts_v1", "poc_receipts_v2")
+    exploded = txns.filter(F.col("type").isin(*RECEIPT_TYPES)).select(
+        "block",
+        "txn_hash",
+        F.col("poc.path").getItem(0).alias("pe"),
     ).select(
-        F.col("hash").alias("txn_hash"),
-        F.from_json("json", POC_RECEIPTS_SCHEMA).alias("t"),
-    )
-    joined = stubs.join(F.broadcast(parsed), "txn_hash")
-    with_path = joined.select(
-        "block", "block_time", "txn_hash", F.col("t.path").getItem(0).alias("pe")
-    )
-
-    exploded = with_path.select(
         "block",
         "txn_hash",
         F.col("pe.challengee").alias("challengee"),
@@ -158,27 +180,18 @@ def witness_edges(blocks: DataFrame, txns: DataFrame) -> DataFrame:
     return edges.withColumn("_key", canonical_md5_key(*RECEIPT_KEY_COLS)).dropDuplicates(["_key"])
 
 
-def account_vertices(blocks: DataFrame, txns: DataFrame) -> DataFrame:
+def _account_vertices(txns: DataFrame) -> DataFrame:
     """Distinct account vertices: payer union payee across payment types
-    (follower.py:147,156,162,173 + duplicate-ignore import :206).
-
-    Only transactions referenced by a stub in ``blocks`` count — the
-    reference walks ``block.transactions`` (follower.py:143), never the txn
-    store at large; a left-semi join on the (broadcast) stub hashes
-    enforces that without moving the txn rows.
-    """
-    stubs = explode_txn_stubs(blocks).select("txn_hash")
-    in_block = txns.join(
-        F.broadcast(stubs), txns["hash"] == stubs["txn_hash"], "left_semi"
-    )
-    v1 = parse_txns(in_block, "payment_v1", PAYMENT_V1_SCHEMA)
-    v2 = parse_txns(in_block, "payment_v2", PAYMENT_V2_SCHEMA)
+    (follower.py:147,156,162,173 + duplicate-ignore import :206). A
+    payment_v2 payer counts even when its ``payments`` array is empty."""
+    v1 = txns.filter(F.col("type") == "payment_v1")
+    v2 = txns.filter(F.col("type") == "payment_v2")
     keys = (
-        v1.select(F.col("t.payer").alias("_key"))
-        .unionByName(v1.select(F.col("t.payee").alias("_key")))
-        .unionByName(v2.select(F.col("t.payer").alias("_key")))
+        v1.select(F.col("pay1.payer").alias("_key"))
+        .unionByName(v1.select(F.col("pay1.payee").alias("_key")))
+        .unionByName(v2.select(F.col("pay2.payer").alias("_key")))
         .unionByName(
-            v2.select(F.explode("t.payments").alias("p")).select(
+            v2.select(F.explode("pay2.payments").alias("p")).select(
                 F.col("p.payee").alias("_key")
             )
         )

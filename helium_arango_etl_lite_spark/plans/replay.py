@@ -29,6 +29,8 @@ from typing import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import scoped_conf
+
 # A stateful stream pins its state-store partitioning to
 # spark.sql.shuffle.partitions at the first micro-batch, and AQE never
 # resizes a streaming exchange. Each partition commits one delta file per
@@ -164,9 +166,7 @@ def run_replay(
         out = per_batch(df, bid) if per_batch else df
         out.withColumn("batch_id", F.lit(bid)).write.mode("append").parquet(res)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(STREAM_SHUFFLE_PARTITIONS)}):
         q = (
             operator(*streams)
             .writeStream.foreachBatch(sink)
@@ -179,8 +179,6 @@ def run_replay(
             q.awaitTermination()
         finally:
             q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.read.parquet(res)
 
 

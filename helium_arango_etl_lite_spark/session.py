@@ -10,6 +10,8 @@ from __future__ import annotations
 import os
 import sys
 import tempfile
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -75,6 +77,20 @@ def get_spark(
     for k, v in parse_extra_conf(os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")):
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def scoped_conf(session: SparkSession, conf: dict[str, str]) -> Iterator[None]:
+    """Set ``conf`` on ``session`` inside the block and restore the
+    previous values when it exits, however it exits."""
+    prev = {k: session.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        session.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            session.conf.set(k, v)
 
 
 def parse_extra_conf(extra: str) -> list[tuple[str, str]]:

@@ -25,7 +25,7 @@ Usage::
 
 ``what=blocks`` yields BLOCK_SCHEMA rows; ``what=txns`` yields
 TXN_ENVELOPE_SCHEMA rows (raw JSON payload preserved — each type branch
-applies its own schema downstream, operators/graph.py:parse_txns).
+applies its own schema downstream, operators/graph.py:graph_documents).
 
 Endpoints with the ``mock://`` scheme serve a deterministic synthetic
 chain (seeded per height) so the full distributed path is testable —

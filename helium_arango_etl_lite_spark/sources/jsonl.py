@@ -47,7 +47,7 @@ def read_txns(spark: SparkSession, path: str) -> DataFrame:
     """Transaction envelopes ``(hash, type, json)`` — the columnar stand-in
     for the reference's per-txn RPC (client.py:39-51). Each type-dispatched
     branch applies its own schema later via ``F.from_json``
-    (operators/graph.py:parse_txns)."""
+    (operators/graph.py:graph_documents)."""
     return (
         spark.read.schema(_with_corrupt(TXN_ENVELOPE_SCHEMA))
         .option("mode", "PERMISSIVE")

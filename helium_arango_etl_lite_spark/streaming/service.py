@@ -102,9 +102,9 @@ def run_service(
 
     def batch_fn(batch_blocks: DataFrame, epoch_id: int) -> None:
         nonlocal inv_height
-        if batch_blocks.isEmpty():
-            return
         lo, hi = batch_blocks.agg(F.min("height"), F.max("height")).collect()[0]
+        if lo is None:  # an empty batch
+            return
         txns = (
             spark.read.format("helium_chain")
             .option("endpoint", endpoint)

@@ -8,16 +8,24 @@ by block bucket:
 * **idempotence** — incoming keys are anti-joined against the keys already
   present, so re-processing a micro-batch (Structured Streaming's replay
   model) inserts nothing twice;
-* **partition pruning** — the table is laid out as
-  ``block_bucket = block // 7200`` directories. The anti-join's probe of
-  existing keys is pruned to only the buckets the incoming batch touches,
-  so the "read existing keys" cost is proportional to the batch's block
-  span, not the table size — load-bearing at 100 TB;
+* **ranged probe** — an edge table is laid out as
+  ``block_bucket = block // 7200`` directories. The caller passes the
+  batch's block span ``(lo, hi)``; the probe of existing keys reads only
+  the buckets ``lo // 7200 .. hi // 7200`` (partition pruning, computed
+  from the span, not collected from the batch) and only rows with ``block
+  BETWEEN lo AND hi`` (a pushed parquet filter). The range is exact: both
+  edge keys hash ``block``, so a row outside it cannot share a key with
+  the batch. The probe is read with a known schema, so it costs no footer
+  read, and the "read existing keys" cost follows the batch's span, not
+  the table size;
 * **retention** — the reference's disabled AQL delete (follower.py:210-214,
   "deletions not optimized yet") becomes a metadata-only partition drop:
   remove whole ``block_bucket=N`` directories below the floor. No row-level
   rewrite. On a lakehouse table (Delta/Iceberg) this is
   ``DELETE WHERE block_bucket < floor`` / ``DROP PARTITION``.
+
+The account table has no ``block`` column: it is unpartitioned and probed
+by ``_key`` alone.
 """
 
 from __future__ import annotations
@@ -50,48 +58,50 @@ def has_data_files(path: str) -> bool:
     )
 
 
-def _existing_keys(spark: SparkSession, path: str, buckets: list[int] | None) -> DataFrame | None:
+def _existing_keys(spark: SparkSession, path: str, span: tuple[int, int] | None) -> DataFrame | None:
     if not has_data_files(path):
         return None
-    existing = spark.read.parquet(path)
-    if buckets is not None and BUCKET_COL in existing.columns:
-        # partition pruning: only scan the buckets this batch can collide with
-        existing = existing.filter(F.col(BUCKET_COL).isin(buckets))
-    return existing.select("_key")
+    if span is None:
+        return spark.read.schema("_key string").parquet(path)
+    lo, hi = span
+    existing = spark.read.schema(f"_key string, block long, {BUCKET_COL} long").parquet(path)
+    return existing.filter(
+        F.col(BUCKET_COL).between(lo // RETENTION_BLOCKS, hi // RETENTION_BLOCKS)
+        & F.col("block").between(lo, hi)
+    ).select("_key")
 
 
-def idempotent_append(spark: SparkSession, df: DataFrame, path: str) -> None:
+def _new_rows(
+    spark: SparkSession, df: DataFrame, path: str, span: tuple[int, int] | None
+) -> DataFrame:
+    """The rows of ``df`` whose ``_key`` is not in ``path`` yet, with the
+    bucket column added to an edge frame."""
+    edges = "block" in df.columns
+    if edges:
+        if span is None:
+            raise ValueError(f"{path}: an edge frame needs its batch's (lo, hi) block span")
+        df = with_block_bucket(df)
+    existing = _existing_keys(spark, path, span if edges else None)
+    return df if existing is None else df.join(existing, "_key", "left_anti")
+
+
+def idempotent_append(
+    spark: SparkSession, df: DataFrame, path: str, span: tuple[int, int] | None = None
+) -> None:
     """Append rows whose ``_key`` is not already present — the engine's
     ``onDuplicate="ignore"`` (follower.py:205-207).
 
     ``df`` must already be deduplicated within itself (the graph operators
-    end in ``dropDuplicates(["_key"])``). When the frame carries a ``block``
-    column the table is written partitioned by ``block_bucket`` and the
-    existing-keys probe is pruned to the touched buckets.
+    end in ``dropDuplicates(["_key"])``). A frame with a ``block`` column is
+    an edge frame: ``span`` must give its lowest and highest block, the
+    table is written partitioned by ``block_bucket`` and the probe of
+    existing keys reads only that span. A frame without one (the account
+    vertices) is probed by ``_key`` alone and ``span`` is not used.
     """
-    partitioned = "block" in df.columns
-
-    buckets: list[int] | None = None
-    persisted = None
-    if partitioned:
-        # the bucket probe and the write both consume the batch: persist it
-        # so the upstream dataflow (parse -> explode -> key) runs once
-        persisted = df = with_block_bucket(df).persist()
-        # micro-batch block span is tiny (a handful of buckets): cheap collect
-        buckets = [r[0] for r in df.select(BUCKET_COL).distinct().collect()]
-
-    try:
-        existing = _existing_keys(spark, path, buckets)
-        if existing is not None:
-            df = df.join(existing, "_key", "left_anti")
-
-        writer = df.write.mode("append")
-        if partitioned:
-            writer = writer.partitionBy(BUCKET_COL)
-        writer.parquet(path)
-    finally:
-        if persisted is not None:
-            persisted.unpersist()
+    writer = _new_rows(spark, df, path, span).write.mode("append")
+    if "block" in df.columns:
+        writer = writer.partitionBy(BUCKET_COL)
+    writer.parquet(path)
 
 
 def apply_retention(

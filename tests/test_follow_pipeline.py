@@ -11,6 +11,8 @@ import json
 import os
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
@@ -21,6 +23,7 @@ from helium_arango_etl_lite_spark.sources import (
     read_txns,
     split_corrupt,
 )
+from helium_arango_etl_lite_spark.sources.datasource import HeliumChainDataSource
 from helium_arango_etl_lite_spark.streaming import (
     apply_retention,
     idempotent_append,
@@ -225,7 +228,7 @@ def test_retention_partition_drop(spark, tmp_path):
     df = spark.createDataFrame(
         [("k1", 100), ("k2", 15_000), ("k3", 16_000)], ["_key", "block"]
     )
-    idempotent_append(spark, df, out)
+    idempotent_append(spark, df, out, (100, 16_000))
     buckets = {n for n in os.listdir(out) if n.startswith("block_bucket=")}
     assert buckets == {"block_bucket=0", "block_bucket=2"}
     dropped = apply_retention(spark, out, tip_height=17_000)
@@ -237,11 +240,14 @@ def test_retention_partition_drop(spark, tmp_path):
 def test_idempotent_append_antijoin(spark, tmp_path):
     out = str(tmp_path / "t")
     a = spark.createDataFrame([("k1", 10), ("k2", 20)], ["_key", "block"])
-    idempotent_append(spark, a, out)
+    idempotent_append(spark, a, out, (10, 20))
     b = spark.createDataFrame([("k2", 20), ("k3", 30)], ["_key", "block"])
-    idempotent_append(spark, b, out)
+    idempotent_append(spark, b, out, (20, 30))
     got = sorted(r["_key"] for r in spark.read.parquet(out).collect())
     assert got == ["k1", "k2", "k3"]
+    # one probe path: an edge frame without its block span is refused
+    with pytest.raises(ValueError, match="block span"):
+        idempotent_append(spark, b, out)
 
 
 def test_gateway_inventory_source(spark, tmp_path):
@@ -280,6 +286,65 @@ def _assert_mixed_store(spark, out, heights):
     )
 
 
+def _mixed_batch(spark, lo, hi):
+    """(blocks, txns) of heights ``lo..hi`` of the mixed mock chain, as the
+    service's batch reader delivers them."""
+    spark.dataSource.register(HeliumChainDataSource)
+
+    def read(what):
+        return (
+            spark.read.format("helium_chain")
+            .option("endpoint", "mock://mixed")
+            .option("what", what)
+            .option("start", lo).option("end", hi)
+            .load()
+        )
+
+    return read("blocks"), read("txns")
+
+
+def test_warm_batch_runs_four_spark_jobs(spark, tmp_path):
+    """A warm batch over a seeded store, replaying part of it: the span
+    aggregate and one write per sink, counted by Spark's status tracker
+    under a job group, and the store still equals the chain."""
+    out = tmp_path / "graph"
+    process_batch(spark, *_mixed_batch(spark, 1, 64), str(out))
+    sc = spark.sparkContext
+    group = "warm-follower-batch"
+    sc.setJobGroup(group, "one warm follower batch")
+    try:
+        process_batch(spark, *_mixed_batch(spark, 49, 96), str(out))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+    _assert_mixed_store(spark, out, range(1, 97))
+
+
+@settings(max_examples=4, deadline=None)
+@given(
+    lo=st.integers(7200 - 64, 7200 + 8),
+    n=st.integers(3, 64),  # at least one receipt height: every table exists
+    cuts=st.sets(st.integers(1, 63), max_size=3),
+    replayed=st.integers(0, 4),
+)
+def test_any_split_and_replayed_prefix_give_the_chain(spark, tmp_path_factory, lo, n, cuts, replayed):
+    """Split a height range of the mixed chain (which may straddle a bucket
+    boundary) into batches at ``cuts``, then replay the heights of the
+    first ``replayed`` batches as one batch: the store equals the chain.
+    Guards the sink's ranged probe (``block_bucket`` and ``block BETWEEN
+    lo AND hi``) against a span that drops or admits an edge."""
+    out = tmp_path_factory.mktemp("split")
+    bounds = [lo, *sorted(lo + c for c in cuts if c < n), lo + n]
+    batches = [(a, b - 1) for a, b in zip(bounds, bounds[1:])]
+    for a, b in batches:
+        process_batch(spark, *_mixed_batch(spark, a, b), str(out))
+    if replayed:
+        process_batch(spark, *_mixed_batch(spark, lo, batches[: replayed][-1][1]), str(out))
+    _assert_mixed_store(spark, out, range(lo, lo + n))
+
+
 def _mixed_drain(spark, tmp_path):
     return run_service(
         spark,
@@ -308,12 +373,12 @@ def test_run_service_crash_restart_from_checkpoint(spark, tmp_path, monkeypatch)
     original = follow.idempotent_append
     receipt_appends = []
 
-    def crash_on_second_receipts(spark, df, path):
+    def crash_on_second_receipts(spark, df, path, *args):
         if os.path.basename(path) == follow.RECEIPTS:
             receipt_appends.append(path)
             if len(receipt_appends) == 2:
                 raise RuntimeError("injected crash before receipts commit")
-        original(spark, df, path)
+        original(spark, df, path, *args)
 
     monkeypatch.setattr(follow, "idempotent_append", crash_on_second_receipts)
     with pytest.raises(Exception, match="injected crash"):
@@ -324,6 +389,27 @@ def test_run_service_crash_restart_from_checkpoint(spark, tmp_path, monkeypatch)
     state = _mixed_drain(spark, tmp_path)
     assert state == {"payments": 64, "poc_receipts": 63}
     _assert_mixed_store(spark, tmp_path / "graph", range(1, 65))
+
+
+def test_small_batch_profile_reaches_the_stream_batch(spark, tmp_path, monkeypatch):
+    """``foreachBatch`` runs the body on a clone of the stream's session, so
+    the profile is set on the batch's own session: every sink of every
+    batch plans under it, and the outer session is unchanged by the run."""
+    keys = list(follow.SMALL_BATCH_PROFILE)
+    outer = {k: spark.conf.get(k) for k in keys}
+    assert outer != follow.SMALL_BATCH_PROFILE
+    original = follow.idempotent_append
+    seen = []
+
+    def recording_append(spark, df, path, *args):
+        seen.append({k: df.sparkSession.conf.get(k) for k in keys})
+        original(spark, df, path, *args)
+
+    monkeypatch.setattr(follow, "idempotent_append", recording_append)
+    _mixed_drain(spark, tmp_path)
+    assert len(seen) == 3 * 4  # three sinks, 64 heights in batches of 16
+    assert all(conf == follow.SMALL_BATCH_PROFILE for conf in seen)
+    assert {k: spark.conf.get(k) for k in keys} == outer
 
 
 def test_run_service_open_ended_applies_retention_per_batch(spark, tmp_path, monkeypatch):
@@ -362,7 +448,7 @@ def test_sync_state_none_only_for_missing_tables(spark, tmp_path):
     assert sync_state(spark, str(out)) == {"payments": None, "poc_receipts": None}
 
     idempotent_append(
-        spark, spark.createDataFrame([("k1", 10)], ["_key", "block"]), str(out / "payments")
+        spark, spark.createDataFrame([("k1", 10)], ["_key", "block"]), str(out / "payments"), (10, 10)
     )
     assert sync_state(spark, str(out)) == {"payments": 10, "poc_receipts": None}
 
@@ -392,12 +478,13 @@ def test_service_refreshes_stale_inventory(spark, tmp_path):
         spark,
         out_dir=str(out),
         checkpoint_dir=str(tmp_path / "ckpt"),
-        endpoint="mock://chain",
+        endpoint="mock://mixed",
         start=700, end=720, batch_heights=16,
         timeout_s=120,
         inventory_glob=str(inv_dir),
     )
-    assert state["payments"] == 720
+    assert state == {"payments": 720, "poc_receipts": 720}
+    _assert_mixed_store(spark, out, range(700, 721))
     hotspots = {r["_key"]: r for r in spark.read.parquet(str(out / "hotspots")).collect()}
     assert set(hotspots) == {"hs1"}
     assert hotspots["hs1"]["_id"] == "hotspots/hs1"

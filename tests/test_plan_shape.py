@@ -11,6 +11,7 @@ even when every value still matches the oracle.
 from __future__ import annotations
 
 import io
+import re
 from contextlib import redirect_stdout
 
 from helium_arango_etl_lite_spark.plans.queries import QUERIES
@@ -90,7 +91,7 @@ def test_sink_layout_prunes_block_buckets(spark, tmp_path):
     df = spark.createDataFrame(
         [("k1", 100), ("k2", 8_000), ("k3", 15_000)], ["_key", "block"]
     )
-    idempotent_append(spark, df, out)
+    idempotent_append(spark, df, out, (100, 15_000))
 
     from pyspark.sql import functions as F
 
@@ -103,6 +104,51 @@ def test_sink_layout_prunes_block_buckets(spark, tmp_path):
     pf = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
     assert "block_bucket" in pf  # pruning predicate reached the scan
     assert filtered.count() == 1
+
+
+def test_follower_sink_plan_has_no_broadcast_and_a_ranged_probe(spark, tmp_path):
+    """Under the follower's small-batch profile the payments sink's plan has
+    no BroadcastExchange (each broadcast build would be a Spark job of its
+    own), and the probe of existing keys is ranged at the scan:
+    ``block_bucket`` in its PartitionFilters, ``block`` in its
+    PushedFilters."""
+    from helium_arango_etl_lite_spark.operators.graph import graph_documents
+    from helium_arango_etl_lite_spark.session import scoped_conf
+    from helium_arango_etl_lite_spark.sources.datasource import HeliumChainDataSource
+    from helium_arango_etl_lite_spark.streaming import follow, sink
+
+    spark.dataSource.register(HeliumChainDataSource)
+
+    def read(what, lo, hi):
+        return (
+            spark.read.format("helium_chain")
+            .option("endpoint", "mock://mixed")
+            .option("what", what)
+            .option("start", lo).option("end", hi)
+            .load()
+        )
+
+    out = str(tmp_path / "store")
+    follow.process_batch(spark, read("blocks", 1, 32), read("txns", 1, 32), out)
+    with scoped_conf(spark, follow.SMALL_BATCH_PROFILE), graph_documents(
+        read("blocks", 17, 48), read("txns", 17, 48)
+    ) as (payments, _, _):
+        new_rows = sink._new_rows(spark, payments, f"{out}/{follow.PAYMENTS}", (17, 48))
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            new_rows.explain("formatted")
+    plan = buf.getvalue()
+    assert "LeftAnti" in plan
+    assert "BroadcastExchange" not in plan
+    # the node details follow the tree; the only parquet scan is the probe
+    scans = [ln for ln in plan.splitlines() if re.match(r"\(\d+\) Scan parquet", ln)]
+    assert len(scans) == 1, scans
+    probe = plan.split(scans[0], 1)[1]
+    partition_filters = probe.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+    pushed_filters = probe.split("PushedFilters: [", 1)[1].split("]", 1)[0]
+    assert "block_bucket" in partition_filters
+    assert "GreaterThanOrEqual(block,17)" in pushed_filters
+    assert "LessThanOrEqual(block,48)" in pushed_filters
 
 
 def test_range_join_is_not_nested_loop(spark, sf_dir):
