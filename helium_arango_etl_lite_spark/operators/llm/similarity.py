@@ -1,15 +1,55 @@
 """Similarity search over embedding columns (SURVEY.md section 2.8).
 
-* :func:`cosine_topk` — brute-force exact top-k: the correctness baseline
-  (oracle-checkable). One broadcast of the query vector, a linear scan,
-  TakeOrderedAndProject for the top-k — no shuffle of the corpus.
-* :func:`lsh_bucket_topk` — random-hyperplane LSH: sign-bit bucket per
-  vector, candidates = query's bucket only. The 100 TB path: the bucket id
-  is a partition-prunable column when materialized, so a query touches
-  1/2^H of the data.
-* :func:`embedding_near_dup_pairs` — all-pairs cosine >= threshold; brute
-  force at oracle scale, LSH-bucketed (join on bucket) at scale.
+Every index path is assembled from one copy of each kernel:
 
+==============================  ==========================  =============================
+kernel                          helper                      index paths that use it
+==============================  ==========================  =============================
+rounded cosine, norms hoisted   ``_cos``                    every JVM-side path
+one query's top-k               ``_query_topk``             cosine_topk, lsh_bucket_topk
+pairs at or above a threshold   ``_pairs_at_least``         embedding_near_dup_pairs,
+                                                            embedding_near_dup_lsh,
+                                                            semdedup
+LSH sign-bit bucket             :func:`lsh_bucket`          lsh_bucket_topk,
+                                                            embedding_near_dup_lsh,
+                                                            knn_join_bucketed
+per-query top-k window          ``_top_per_query``          knn_join_bucketed,
+                                                            knn_join_sampled,
+                                                            route_on_graph,
+                                                            _knn_join_expr
+GEMM exact top-k (numpy)        ``_gemm_topk``              knn_join, knn_join_sampled
+IVF cell assignment (E-step)    :func:`ivf_assign_cells`    ivf_topk, semdedup,
+                                                            lloyd_refine, ivf_pq_encode,
+                                                            llm_kmeans_iter,
+                                                            llm_ivf_cell_stats
+per-key component mean (M-step) ``_component_means``       lloyd_refine, pq_train_blocks,
+                                                            llm_kmeans_iter
+PQ block squared L2             ``_l2`` + ``_block``        pq_quantize, pq_train_blocks,
+                                                            ivf_pq_encode, ADC LUTs
+PQ seed codebook                ``_seed_codebook``          ivf_pq_build, llm_pq_train_codebook
+PQ code assignment              ``_pq_codes``               pq_train_blocks, ivf_pq_encode
+IVF probe order                 ``_probe_ranks``            ivf_pq_adc_search,
+                                                            llm_ann_ivf_pq_recall_sweep
+ADC LUT and per-block lookup    ``_pq_luts``, ``_adc``      ivf_pq_adc_search,
+                                                            llm_ann_ivf_pq_recall_sweep
+LSH neighbour edges per seed    ``_lsh_edges``              build_route_graph,
+                                                            append_route_graph
+==============================  ==========================  =============================
+
+The index paths: exact (:func:`cosine_topk`, :func:`knn_join`,
+:func:`knn_join_sampled`), LSH (:func:`lsh_bucket_topk`,
+:func:`embedding_near_dup_lsh`, :func:`knn_join_bucketed`), IVF
+(:func:`ivf_topk`, :func:`semdedup`), PQ (:func:`pq_quantize`,
+:func:`pq_adc_topk`), IVF-PQ (:func:`ivf_pq_build`,
+:func:`ivf_pq_encode`, :func:`ivf_pq_adc_search`, trained by
+:func:`lloyd_refine` and :func:`pq_train_blocks`), the routing graph
+(:func:`build_route_graph`, :func:`append_route_graph`,
+:func:`route_on_graph`, :func:`graph_route_topk`) and the k-center
+coreset. :func:`rrf_fuse`, :func:`precision_recall_at_k` and
+:func:`ndcg_at_k` grade rankings.
+
+Embedding frames carry ``ID_COL`` and ``VEC_COL``; the rounding
+precisions every engine and oracle share are the ``*_DP`` constants.
 Dot products use zip_with + aggregate over DOUBLE — built-in JVM
 expressions, no UDF; embeddings are cast float -> double first so the
 DuckDB oracle (which computes in double) matches to ~1e-15.
@@ -17,21 +57,44 @@ DuckDB oracle (which computes in double) matches to ~1e-15.
 
 from __future__ import annotations
 
+import functools
 import logging
 import random
 import warnings
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType, IntegerType, LongType, StructField, StructType,
+)
 
 from ...functions.hashing import hash32
 
 _LOG = logging.getLogger(__name__)
 
+ID_COL = "vec_id"  # id column of every embedding frame
+VEC_COL = "embedding"  # vector column of every embedding frame
+COS_DP = 4  # cosine similarity is rounded to this before ranking
+ASSIGN_DP = 6  # centroid similarity is rounded to this before the argmax
+DIST_DP = 6  # PQ block distances are rounded to this before the argmin
+CENT_DP = 6  # refined centroid and codeword components
+MSE_DP = 4  # pq_quantize's reconstruction error
+#: knn_join's exact-route row threshold; None derives it from the byte
+#: budget below and the corpus dim
+MAX_BROADCAST_ROWS: int | None = None
+BROADCAST_BUDGET_BYTES = 2 << 30
+#: knn_join_sampled raises rather than broadcast a larger query sample
+MAX_SAMPLE_ROWS = 1_000_000
+
 
 def _as_double(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.transform(c, lambda x: x.cast("double"))
+
+
+def _embeddings(emb: DataFrame) -> DataFrame:
+    """``(vec_id, v)``: the id and the vector as array<double>."""
+    return emb.select(F.col(ID_COL), _as_double(VEC_COL).alias("v"))
 
 
 def _id_rank_penalty(ids, round_dp: int):
@@ -80,15 +143,39 @@ def _topk_cols(key, kk: int):
     )
 
 
-def _infer_dim(e: DataFrame, vec_col: str = "v") -> int:
-    """Embedding dimension from one sampled row (single-row job).
+def _unit(m):
+    """Rows of ``m`` scaled to unit L2 norm."""
+    import numpy as np
+
+    return m / np.linalg.norm(m, axis=1, keepdims=True)
+
+
+def _gemm_topk(q, qids, c, cids, cpen, kk: int):
+    """Exact top-``kk`` corpus columns per query row, the kernel of both
+    GEMM paths. ``q`` and ``c`` hold unit rows, so ``q @ c.T`` is the
+    cosine; it is rounded half away from zero at ``COS_DP``,
+    self-matches (equal ids) are masked to -inf, and ties break on
+    ascending corpus id through ``cpen`` (:func:`_id_rank_penalty`), so
+    the top-k is argpartition O(n), not a full-row lexsort O(n log n).
+    Returns ``(sims, top)``."""
+    import numpy as np
+
+    scale = 10.0 ** COS_DP
+    sims = q @ c.T
+    sims = np.floor(np.abs(sims) * scale + 0.5) / scale * np.sign(sims)
+    sims[qids[:, None] == cids[None, :]] = -np.inf
+    return sims, _topk_cols(sims - cpen[None, :], kk)
+
+
+def _infer_dim(e: DataFrame) -> int:
+    """Embedding dimension of ``e.v`` from one sampled row (single-row job).
 
     Called only when the caller did not pass ``dim`` explicitly — a wrong
     hardcoded dim makes zip_with pad with nulls, every bucket id NULL, and
     the bucket join silently empty; inferring (or failing loudly on an
     empty frame) removes that silent-wrong-answer mode.
     """
-    row = e.select(F.size(F.col(vec_col)).alias("d")).first()
+    row = e.select(F.size(F.col("v")).alias("d")).first()
     if row is None or row["d"] is None:
         raise ValueError(
             "cannot infer embedding dim from an empty DataFrame; pass dim="
@@ -128,6 +215,20 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def _cos(a, b, na, nb, dp: int = COS_DP) -> Column:
+    """``round(a . b / (na * nb), dp)``: the rounded cosine every JVM path
+    ranks by. The norms are passed in, so a caller computes each
+    vector's norm once per row rather than once per pair; ``na=None``
+    folds ``a``'s norm here instead. Each argument is a column name or a
+    Column."""
+    def col(c):
+        return F.col(c) if isinstance(c, str) else c
+
+    a, b = col(a), col(b)
+    d = dot(a, b)  # built before norm(a): the plan text keeps its order
+    return F.round(d / ((norm(a) if na is None else col(na)) * col(nb)), dp)
+
+
 def hyperplanes(num_planes: int, dim: int, seed: int = 7) -> list[list[float]]:
     """Seeded random hyperplanes, rounded to 6dp so the same decimal
     literals parse to identical doubles in Spark and the SQL oracle."""
@@ -146,175 +247,83 @@ def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
     return acc
 
 
-def fixed_centroids(
-    e: DataFrame, k: int = 32, id_col: str = "vec_id", vec_col: str = "v"
-) -> DataFrame:
-    """Deterministic K-row centroid subset whose size does NOT grow with
-    the corpus — the scale-correct default for :func:`ivf_topk` /
-    :func:`semdedup` (the ``id % mod`` form keeps O(n/mod) centroids and
-    makes assignment O(n^2/mod); SCALE_SOAK.md measured it super-linear
-    at 10x).
+def _planes(e: DataFrame, num_planes: int, seed: int, dim: int | None):
+    """The LSH hyperplanes for ``e``, inferring ``dim`` when not given."""
+    return hyperplanes(num_planes, _infer_dim(e) if dim is None else dim, seed)
+
+
+def fixed_centroids(e: DataFrame, k: int = 32) -> DataFrame:
+    """Deterministic K-row ``(cid, cv)`` centroid subset of ``(vec_id,
+    v)`` vectors whose size does NOT grow with the corpus — the
+    scale-correct default for :func:`ivf_topk` / :func:`semdedup` (an
+    ``id % mod`` subset keeps O(n/mod) centroids and makes assignment
+    O(n^2/mod); SCALE_SOAK.md measured it super-linear at 10x).
 
     Selection is "order by md5(id), take K": a seeded uniform shuffle
     both engines reproduce exactly (oracle mirror: ``ORDER BY
     md5(id::VARCHAR), id LIMIT K``). ``orderBy().limit(K)`` compiles to
     TakeOrderedAndProject — per-partition top-K then a K-row merge, one
-    linear pass, no global sort shuffle. A production index k-means-
-    refines this seed set (:data:`llm_kmeans_iter` is the M-step); the
-    assignment dataflow is identical either way.
+    linear pass, no global sort shuffle. :func:`lloyd_refine`
+    k-means-refines this seed set; the assignment dataflow is identical
+    either way.
     """
     return (
-        e.orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
+        e.orderBy(F.md5(F.col(ID_COL).cast("string")), F.col(ID_COL))
         .limit(k)
-        .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"))
+        .select(F.col(ID_COL).alias("cid"), F.col("v").alias("cv"))
     )
 
 
-def _centroid_set(
-    e: DataFrame,
-    centroids: DataFrame | None,
-    centroid_mod: int | None,
-    num_centroids: int,
-    id_col: str,
+def _query_topk(
+    e: DataFrame, query_id: int, k: int, key: str | None = None,
 ) -> DataFrame:
-    """Resolve the centroid frame: explicit > mod fixture > fixed-K."""
-    if centroids is not None:
-        return centroids
-    if centroid_mod is not None:
-        return e.filter((F.col(id_col) % centroid_mod) == 1).select(
-            F.col(id_col).alias("cid"), F.col("v").alias("cv")
-        )
-    return fixed_centroids(e, num_centroids, id_col=id_col, vec_col="v")
+    """Top-``k`` rows of ``e`` (``vec_id, v`` and ``key``) by rounded
+    cosine to row ``query_id``, ties on ascending id. With ``key``, only
+    rows sharing the query's ``key`` are candidates.
 
-
-def kmeans_centroids(
-    emb: DataFrame, k: int = 32, iterations: int = 3,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    assign_dp: int = 6,
-) -> DataFrame:
-    """Spherical-k-means-refined centroid frame for the IVF family.
-
-    Seeds with :func:`fixed_centroids`, then alternates the E-step
-    (broadcast-argmax assignment — identical dataflow to
-    :func:`ivf_topk`) and the M-step (per-cell per-dimension mean — the
-    posexplode + (cell, dim) partial-agg shuffle of ``llm_kmeans_iter``)
-    for ``iterations`` rounds. Returns ``(cid, cv)`` ready to inject as
-    ``centroids=`` into :func:`ivf_topk` / :func:`semdedup`.
-
-    Scale shape: every iteration is O(n·K) assignment + one shuffle of
-    O(n·d) components partial-aggregated to O(K·d) rows; ONLY the K·d
-    means are collected to the driver (k=32, d=64 → 2048 rows) to
-    rebuild the centroid arrays, so the driver never sees the corpus.
-    Empty cells keep their previous centroid (a cell that captures no
-    vectors must not produce a null array). The payoff measured in
-    SCALE_SOAK.md: learned centroids bound the largest cell, and the
-    semdedup pair stage is quadratic in exactly that largest cell.
+    The query row is broadcast with its norm hoisted into it, so each
+    scanned row costs one dot fold and one self-norm fold, and the top-k
+    is a TakeOrderedAndProject — no shuffle of the corpus.
     """
-    spark = emb.sparkSession
-    e = emb.select(
-        F.col(id_col), _as_double(vec_col).alias("v")
-    ).withColumn("nrm", norm(F.col("v")))  # invariant across iterations
-    cents = fixed_centroids(e.drop("nrm"), k, id_col=id_col, vec_col="v")
-    for _ in range(iterations):
-        scored = e.crossJoin(
-            F.broadcast(cents.withColumn("ncv", norm(F.col("cv"))))
-        ).select(
-            F.col(id_col),
-            F.col("cid"),
-            F.round(
-                dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("ncv")),
-                assign_dp,
-            ).alias("asim"),
-        )
-        assigned = scored.groupBy(id_col).agg(
-            F.max(F.struct("asim", "cid"))["cid"].alias("cell")
-        )
-        comp = (
-            e.join(assigned, id_col)
-            .select("cell", F.posexplode("v").alias("pos", "x"))
-            .groupBy("cell", "pos")
-            .agg(F.avg("x").alias("m"))
-        )
-        # O(K*d) rows -> driver; rebuild array centroids deterministically
-        means: dict[int, dict[int, float]] = {}
-        for r in comp.collect():
-            means.setdefault(r["cell"], {})[r["pos"]] = r["m"]
-        prev = {r["cid"]: list(r["cv"]) for r in cents.collect()}
-        rows = []
-        for cid, vec in sorted(prev.items()):
-            if cid in means:
-                vec = [means[cid][i] for i in range(len(vec))]
-            rows.append((cid, vec))
-        cents = spark.createDataFrame(
-            rows, "cid long, cv array<double>"
-        )
-    return cents
+    keys = [key] if key else []
+    q = e.filter(F.col(ID_COL) == query_id).select(
+        F.col("v").alias("qv"), *[F.col(c).alias("q" + c) for c in keys],
+        norm(F.col("v")).alias("qn"),
+    )
+    cands = e.filter(F.col(ID_COL) != query_id).crossJoin(F.broadcast(q))
+    for c in keys:
+        cands = cands.filter(F.col(c) == F.col("q" + c))
+    scored = cands.select(
+        F.col(ID_COL), *keys,
+        _cos("v", "qv", None, "qn").alias("cos_sim"),
+    )
+    return scored.orderBy(F.desc("cos_sim"), F.asc(ID_COL)).limit(k)
 
 
-def cosine_topk(
-    emb: DataFrame, query_id: int, k: int = 10,
-    id_col: str = "vec_id", vec_col: str = "embedding", round_dp: int = 4,
-) -> DataFrame:
+def cosine_topk(emb: DataFrame, query_id: int, k: int = 10) -> DataFrame:
     """Exact top-k by cosine similarity to the vector with id ``query_id``.
 
-    Rounded to ``round_dp`` before ranking (ties broken by id) so that
+    Rounded to ``COS_DP`` before ranking (ties broken by id) so that
     engine-specific summation order cannot flip the boundary.
     """
-    e = emb.select(F.col(id_col), _as_double(vec_col).alias("v"))
-    # query norm hoisted into the broadcast side: per scanned row the
-    # remaining work is one dot fold + one self-norm fold (was three)
-    q = e.filter(F.col(id_col) == query_id).select(
-        F.col("v").alias("qv"), norm(F.col("v")).alias("qn")
-    )
-    scored = (
-        e.filter(F.col(id_col) != query_id)
-        .crossJoin(F.broadcast(q))
-        .select(
-            F.col(id_col),
-            F.round(
-                dot(F.col("v"), F.col("qv")) / (norm(F.col("v")) * F.col("qn")),
-                round_dp,
-            ).alias("cos_sim"),
-        )
-    )
-    return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
+    return _query_topk(_embeddings(emb), query_id, k)
 
 
 def lsh_bucket_topk(
     emb: DataFrame, query_id: int, k: int = 5, num_planes: int = 6,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    seed: int = 7, dim: int | None = None, round_dp: int = 4,
+    seed: int = 7, dim: int | None = None,
 ) -> DataFrame:
     """ANN: candidates restricted to the query's LSH bucket, exact cosine
     within. At scale the bucket column is precomputed + partitioned-by, so
     this is a partition-pruned scan, not a full pass."""
-    e0 = emb.select(F.col(id_col), _as_double(vec_col).alias("v"))
-    if dim is None:
-        dim = _infer_dim(e0)
-    planes = hyperplanes(num_planes, dim, seed)
-    e = e0.withColumn("bucket", lsh_bucket(F.col("v"), planes))
-    q = e.filter(F.col(id_col) == query_id).select(
-        F.col("v").alias("qv"), F.col("bucket").alias("qbucket"),
-        norm(F.col("v")).alias("qn"),  # hoisted out of the per-candidate scan
-    )
-    cands = e.filter(F.col(id_col) != query_id).crossJoin(F.broadcast(q)).filter(
-        F.col("bucket") == F.col("qbucket")
-    )
-    scored = cands.select(
-        F.col(id_col),
-        F.col("bucket"),
-        F.round(
-            dot(F.col("v"), F.col("qv")) / (norm(F.col("v")) * F.col("qn")),
-            round_dp,
-        ).alias("cos_sim"),
-    )
-    return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
+    e = _embeddings(emb)
+    planes = _planes(e, num_planes, seed, dim)
+    e = e.withColumn("bucket", lsh_bucket(F.col("v"), planes))
+    return _query_topk(e, query_id, k, "bucket")
 
 
 def ivf_topk(
-    emb: DataFrame, query_id: int, k: int = 5, centroid_mod: int | None = None,
-    nprobe: int = 2, id_col: str = "vec_id", vec_col: str = "embedding",
-    round_dp: int = 4, assign_dp: int = 6,
+    emb: DataFrame, query_id: int, k: int = 5, nprobe: int = 2,
     centroids: DataFrame | None = None, num_centroids: int = 32,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: one-pass centroid assignment, probe the
@@ -324,109 +333,86 @@ def ivf_topk(
     ``num_centroids``-row subset whose size is independent of the corpus,
     so assignment stays O(n*K) at any scale (pass ``centroids`` to use a
     k-means-refined set instead; the dataflow is identical). Assignment
-    is a broadcast cross join against the tiny centroid set followed by a
-    max(struct) argmax — the shuffle carries only ``(id, cell_sim,
-    cell_id)`` triples, never the vectors. At 100 TB the cell id becomes
-    a partition column, so a query scans ~nprobe/K of the corpus; this is
-    the standard IVF trade that LSH bucketing (``lsh_bucket_topk``) makes
-    with hashes instead of learned cells.
+    is :func:`ivf_assign_cells` — a broadcast cross join against the tiny
+    centroid set followed by a max(struct) argmax; the shuffle carries
+    only ``(id, cell_sim, cell_id)`` triples, never the vectors. At
+    100 TB the cell id becomes a partition column, so a query scans
+    ~nprobe/K of the corpus; this is the standard IVF trade that LSH
+    bucketing (``lsh_bucket_topk``) makes with hashes instead of learned
+    cells.
 
-    Similarities are rounded (``assign_dp``) with cell-id tiebreak before
-    the argmax so the assignment is engine-order independent.
-
-    ``centroid_mod`` keeps the legacy ``id % mod == 1`` subset as a TEST
-    FIXTURE only: it grows the centroid set WITH the corpus, making
-    assignment O(n^2/mod) — measured super-linear at 10x
-    (SCALE_SOAK.md). Never use it at scale.
+    Probe similarities are rounded (``ASSIGN_DP``) with a larger-cid
+    tiebreak, mirrored by the oracle's ORDER BY sim DESC, cid DESC.
     """
-    e = emb.select(
-        F.col(id_col), _as_double(vec_col).alias("v")
-    ).withColumn("nrm", norm(F.col("v")))  # once per row, not per centroid
-    cents = _centroid_set(
-        e.drop("nrm"), centroids, centroid_mod, num_centroids, id_col
-    ).withColumn("ncv", norm(F.col("cv")))
-    scored = e.crossJoin(F.broadcast(cents)).select(
-        F.col(id_col),
-        F.col("cid"),
-        F.round(
-            dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("ncv")),
-            assign_dp,
-        ).alias("asim"),
-    )
-    # argmax centroid per vector: max over (sim, cid) structs — ties go to
-    # the larger cid, mirrored by the oracle's ORDER BY sim DESC, cid DESC
-    assigned = scored.groupBy(id_col).agg(
-        F.max(F.struct("asim", "cid"))["cid"].alias("cell")
-    )
-    cells = e.join(assigned, id_col)
-
-    q = e.filter(F.col(id_col) == query_id).select(
+    e = _embeddings(emb)
+    cents = centroids if centroids is not None else fixed_centroids(e, num_centroids)
+    e = e.withColumn("nrm", norm(F.col("v")))  # once per row, not per centroid
+    cells = e.join(ivf_assign_cells(e, cents), ID_COL)
+    q = e.filter(F.col(ID_COL) == query_id).select(
         F.col("v").alias("qv"), F.col("nrm").alias("qn")
     )
     probe = (
-        cents.crossJoin(F.broadcast(q))
-        .select(
-            "cid",
-            F.round(
-                dot(F.col("cv"), F.col("qv")) / (F.col("ncv") * F.col("qn")),
-                assign_dp,
-            ).alias("qsim"),
-        )
+        cents.withColumn("ncv", norm(F.col("cv")))
+        .crossJoin(F.broadcast(q))
+        .select("cid", _cos("cv", "qv", "ncv", "qn", ASSIGN_DP).alias("qsim"))
         .orderBy(F.desc("qsim"), F.desc("cid"))
         .limit(nprobe)
         .select("cid")
     )
     cands = cells.join(
         F.broadcast(probe), cells["cell"] == probe["cid"]
-    ).filter(F.col(id_col) != query_id)
+    ).filter(F.col(ID_COL) != query_id)
     out = cands.crossJoin(F.broadcast(q)).select(
-        F.col(id_col),
-        F.col("cell"),
-        F.round(
-            dot(F.col("v"), F.col("qv")) / (F.col("nrm") * F.col("qn")),
-            round_dp,
-        ).alias("cos_sim"),
+        F.col(ID_COL), F.col("cell"), _cos("v", "qv", "nrm", "qn").alias("cos_sim"),
     )
-    return out.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
+    return out.orderBy(F.desc("cos_sim"), F.asc(ID_COL)).limit(k)
 
 
-def embedding_near_dup_pairs(
-    emb: DataFrame, threshold: float = 0.45,
-    id_col: str = "vec_id", vec_col: str = "embedding", round_dp: int = 4,
+def _pairs_at_least(
+    e: DataFrame, threshold: float, keys: tuple[str, ...] = (),
 ) -> DataFrame:
-    """All pairs with cosine >= threshold. Brute-force O(n^2) — the oracle
-    baseline; swap the join condition to an LSH bucket equality for scale
-    (same output contract, approximate recall)."""
-    # norm hoist: each vector's norm is computed ONCE pre-join instead of
-    # per pair — same doubles, same cosine value (dot/(na*nb)), but the
-    # per-pair interpreted fold count drops from 3 to 1 (round-7 measure:
-    # the aggregate() fold is the interpreter-bound kernel of this family)
-    e = emb.select(
-        F.col(id_col), _as_double(vec_col).alias("v")
-    ).withColumn("nrm", norm(F.col("v")))
+    """``(vec_a, vec_b, cos_sim)`` for every pair ``vec_a < vec_b`` of
+    ``e`` (``vec_id, v, nrm`` and ``keys``) that agrees on every key
+    column and has rounded cosine >= ``threshold``.
+
+    Without keys this is the brute-force O(n^2) pair join; key columns
+    (an LSH bucket, an IVF cell and its salt) make it an equi-join whose
+    shuffle keys are the keys, so pairs form only within a group. Norms
+    come precomputed in ``nrm``: the per-pair work is one dot fold.
+    """
     a = e.select(
-        F.col(id_col).alias("vec_a"), F.col("v").alias("va"),
+        F.col(ID_COL).alias("vec_a"), F.col("v").alias("va"), *keys,
         F.col("nrm").alias("na"),
     )
     b = e.select(
-        F.col(id_col).alias("vec_b"), F.col("v").alias("vb"),
-        F.col("nrm").alias("nb"),
+        F.col(ID_COL).alias("vec_b"), F.col("v").alias("vb"),
+        *[F.col(c).alias(c + "_b") for c in keys], F.col("nrm").alias("nb"),
     )
-    pairs = a.join(b, F.col("vec_a") < F.col("vec_b"))
-    scored = pairs.select(
-        "vec_a", "vec_b",
-        F.round(
-            dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
-            round_dp,
-        ).alias("cos_sim"),
+    cond = functools.reduce(
+        lambda x, y: x & y,
+        [F.col(c) == F.col(c + "_b") for c in keys]
+        + [F.col("vec_a") < F.col("vec_b")],
     )
-    return scored.filter(F.col("cos_sim") >= threshold)
+    return (
+        a.join(b, cond)
+        .select("vec_a", "vec_b", _cos("va", "vb", "na", "nb").alias("cos_sim"))
+        .filter(F.col("cos_sim") >= threshold)
+    )
+
+
+def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.45) -> DataFrame:
+    """All pairs with cosine >= threshold. Brute-force O(n^2) — the oracle
+    baseline; :func:`embedding_near_dup_lsh` is the same pair search
+    restricted to LSH-bucket mates (same output contract, approximate
+    recall)."""
+    return _pairs_at_least(
+        _embeddings(emb).withColumn("nrm", norm(F.col("v"))), threshold
+    )
 
 
 def embedding_near_dup_lsh(
     emb: DataFrame, threshold: float = 0.45, num_planes: int = 6,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    seed: int = 7, dim: int | None = None, round_dp: int = 4,
+    seed: int = 7, dim: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs with the LSH-bucket equality join — the 100 TB shape.
 
@@ -437,211 +423,155 @@ def embedding_near_dup_lsh(
     raise recall with fewer planes or multiple plane tables); precision is
     exact because every emitted pair is cosine-verified.
     """
-    e0 = emb.select(F.col(id_col), _as_double(vec_col).alias("v"))
-    if dim is None:
-        dim = _infer_dim(e0)
-    planes = hyperplanes(num_planes, dim, seed)
-    e = e0.withColumn("bucket", lsh_bucket(F.col("v"), planes)).withColumn(
+    e = _embeddings(emb)
+    planes = _planes(e, num_planes, seed, dim)
+    e = e.withColumn("bucket", lsh_bucket(F.col("v"), planes)).withColumn(
         "nrm", norm(F.col("v"))  # once per row, not per candidate pair
     )
-    a = e.select(
-        F.col(id_col).alias("vec_a"), F.col("v").alias("va"), F.col("bucket"),
-        F.col("nrm").alias("na"),
-    )
-    b = e.select(
-        F.col(id_col).alias("vec_b"), F.col("v").alias("vb"),
-        F.col("bucket").alias("bucket_b"), F.col("nrm").alias("nb"),
-    )
-    pairs = a.join(
-        b, (F.col("bucket") == F.col("bucket_b")) & (F.col("vec_a") < F.col("vec_b"))
-    )
-    scored = pairs.select(
-        "vec_a", "vec_b",
-        F.round(
-            dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
-            round_dp,
-        ).alias("cos_sim"),
-    )
-    return scored.filter(F.col("cos_sim") >= threshold)
+    return _pairs_at_least(e, threshold, ("bucket",))
 
 
-def knn_join(
-    emb: DataFrame, k: int = 3,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    round_dp: int = 4, engine: str = "auto",
-    max_broadcast_rows: int | None = None,
-    broadcast_budget_bytes: int = 2 << 30,
-    num_planes: int | None = None, seed: int = 7, dim: int | None = None,
-) -> DataFrame:
+def _top_per_query(scored: DataFrame, k: int, query: str = "qid") -> DataFrame:
+    """Per ``query``, the ``k`` best ``nid`` rows by ``cos_sim`` (ties on
+    ascending nid), numbered 1..k in ``rank`` by a row_number window."""
+    w = Window.partitionBy(query).orderBy(F.desc("cos_sim"), F.asc("nid"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def knn_join(emb: DataFrame, k: int = 3) -> DataFrame:
     """All-pairs k-NN self-join: for EVERY vector, its ``k`` nearest
     neighbours by cosine — the per-document neighbourhood pass curation
     pipelines run (near-dup clustering, diversity sampling, retrieval
-    eval). Brute-force exact form; the ANN entries (LSH buckets, IVF
-    cells) are the candidate-pruned scale path for corpora whose matrix
-    can't be broadcast.
+    eval). Output ``(qid, nid, cos_sim, rank)``.
 
-    ``engine="auto"`` (default): route WITHOUT a full corpus scan — use
-    the optimizer's row-count estimate when the catalog has one, else a
-    bounded ``limit(threshold + 1)`` probe on the pruned id column
-    (stops as soon as the threshold is exceeded; never pays a second
-    full pass over the vectors). The threshold is a MEMORY budget, not
-    a bare row count: when ``max_broadcast_rows`` is None (default) it
-    is derived as ``broadcast_budget_bytes // (dim * 8 + 16)`` — dim
-    float64s plus id + rank-penalty per corpus row — because the
-    failure the guard prevents (a corpus matrix that doesn't fit the
-    driver/executor broadcast) happens in BYTES: a 4096-dim corpus
-    exhausts a 2 GiB budget at ~65k rows, a 64-dim one at ~4M (r8
-    verdict item 4). dim comes from the ``dim`` param or a one-row
-    probe. The routing decision and its byte math are logged; pass
-    ``max_broadcast_rows`` explicitly to pin a row threshold.
-    At or below the threshold run
-    the exact arrow GEMM; above it route to :func:`knn_join_bucketed` —
-    the LSH-candidate approximate form whose joins are all bucket
-    equi-joins (no driver collect, no cross join). The exact form CANNOT
-    scale past a broadcastable matrix by construction, so the engine
-    degrades to documented-approximate instead of collecting 100 TB to
-    the driver; the degradation is surfaced with a ``UserWarning``
-    (neighbour lists may be shorter than ``k`` in the approximate form).
+    The route is chosen WITHOUT a full corpus scan: the optimizer's
+    row-count estimate when the catalog has one, else a bounded
+    ``limit(threshold + 1)`` probe on the pruned id column (stops as
+    soon as the threshold is exceeded; never pays a second full pass
+    over the vectors). The threshold is a MEMORY budget, not a bare row
+    count: when ``MAX_BROADCAST_ROWS`` is None it is derived as
+    ``BROADCAST_BUDGET_BYTES // (dim * 8 + 16)`` — dim float64s plus id
+    + rank-penalty per corpus row, with dim from a one-row probe —
+    because the failure the guard prevents (a corpus matrix that
+    doesn't fit the driver/executor broadcast) happens in BYTES: a
+    4096-dim corpus exhausts a 2 GiB budget at ~65k rows, a 64-dim one
+    at ~4M (r8 verdict item 4). The routing decision and its byte math
+    are logged.
 
-    ``engine="arrow"``: the corpus collects into ONE normalised numpy
-    matrix broadcast to executors (rows x dim floats — fine up to ~10M
-    rows), and each Arrow batch of queries scores against it with a
-    single GEMM, then vectorised exact top-k — argpartition over a
-    composite sim/id key (:func:`_id_rank_penalty`), O(n) per query row
-    instead of a full-row lexsort. Python runs matrix-at-a-time.
+    At or below the threshold the corpus collects into ONE normalised
+    numpy matrix broadcast to executors, and each Arrow batch of queries
+    scores against it with a single GEMM (:func:`_gemm_topk`) — exact,
+    Python runs matrix-at-a-time. Above it the route is
+    :func:`knn_join_bucketed`, the LSH-candidate approximate form whose
+    joins are all bucket equi-joins (no driver collect, no cross join):
+    the exact form CANNOT scale past a broadcastable matrix by
+    construction, so the engine degrades to documented-approximate
+    instead of collecting 100 TB to the driver, and says so with a
+    ``UserWarning`` (neighbour lists may be shorter than ``k``).
 
-    ``engine="expr"``: crossJoin + fold-based cosine + partitioned
-    row_number window — all JVM, quadratic expression work.
-
-    ``engine="bucketed"``: :func:`knn_join_bucketed` explicitly.
-
-    Determinism: similarity rounds half-away-from-zero to ``round_dp``
+    Determinism: similarity rounds half-away-from-zero to ``COS_DP``
     before ranking, ties break on ascending neighbour id.
     """
-    from pyspark.sql import Window
+    e = _embeddings(emb)
+    max_rows = MAX_BROADCAST_ROWS
+    if max_rows is None:
+        first = e.select(F.size("v").alias("d")).first()
+        d = int(first["d"]) if first and first["d"] else 1
+        # bytes per broadcast corpus row: dim float64s + int64 id
+        # + float64 rank penalty
+        row_bytes = d * 8 + 16
+        max_rows = max(1, BROADCAST_BUDGET_BYTES // row_bytes)
+        budget_msg = (
+            f"{max_rows} rows = budget {BROADCAST_BUDGET_BYTES} B / "
+            f"{row_bytes} B-per-row (dim={d})"
+        )
+    else:
+        budget_msg = f"{max_rows} rows (MAX_BROADCAST_ROWS)"
+    est = _estimated_row_count(e)
+    if est is None:
+        # bounded probe: pruned id column, stops at threshold + 1
+        est = e.select(ID_COL).limit(max_rows + 1).count()
+    if est > max_rows:
+        warnings.warn(
+            f"knn_join: corpus (>{est - 1} rows) exceeds the "
+            f"broadcast threshold [{budget_msg}]; routing "
+            "exact->approximate (LSH-bucketed): neighbour lists "
+            "may be shorter than k",
+            UserWarning,
+            stacklevel=2,
+        )
+        return knn_join_bucketed(emb, k=k)
+    _LOG.info(
+        "knn_join auto-route: exact arrow GEMM (corpus %d rows "
+        "<= threshold [%s])", est, budget_msg,
+    )
+    return _knn_join_arrow(e, k)
 
-    e = emb.select(F.col(id_col), _as_double(vec_col).alias("v"))
-    if engine == "auto":
-        if max_broadcast_rows is None:
-            d = dim
-            if d is None:
-                first = e.select(F.size("v").alias("d")).first()
-                d = int(first["d"]) if first and first["d"] else 1
-            # bytes per broadcast corpus row: dim float64s + int64 id
-            # + float64 rank penalty
-            row_bytes = d * 8 + 16
-            max_broadcast_rows = max(1, broadcast_budget_bytes // row_bytes)
-            budget_msg = (
-                f"{max_broadcast_rows} rows = budget "
-                f"{broadcast_budget_bytes} B / {row_bytes} B-per-row "
-                f"(dim={d})"
-            )
-        else:
-            budget_msg = f"{max_broadcast_rows} rows (explicit)"
-        est = _estimated_row_count(e)
-        if est is None:
-            # bounded probe: pruned id column, stops at threshold + 1
-            est = (
-                e.select(id_col).limit(max_broadcast_rows + 1).count()
-            )
-        if est > max_broadcast_rows:
-            warnings.warn(
-                f"knn_join: corpus (>{est - 1} rows) exceeds the "
-                f"broadcast threshold [{budget_msg}]; routing "
-                "exact->approximate (LSH-bucketed): neighbour lists "
-                "may be shorter than k",
-                UserWarning,
-                stacklevel=2,
-            )
-            engine = "bucketed"
-        else:
-            _LOG.info(
-                "knn_join auto-route: exact arrow GEMM (corpus %d rows "
-                "<= threshold [%s])", est, budget_msg,
-            )
-            engine = "arrow"
-    if engine == "bucketed":
-        return knn_join_bucketed(
-            emb, k=k, id_col=id_col, vec_col=vec_col, round_dp=round_dp,
-            num_planes=num_planes, seed=seed, dim=dim,
-        )
-    if engine == "expr":
-        en = e.withColumn("nrm", norm(F.col("v")))  # once per row
-        a = en.select(
-            F.col(id_col).alias("qid"), F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-        )
-        b = en.select(
-            F.col(id_col).alias("nid"), F.col("v").alias("nv"),
-            F.col("nrm").alias("nn"),
-        )
-        scored = (
-            a.crossJoin(F.broadcast(b))
-            .filter(F.col("qid") != F.col("nid"))
-            .select(
-                "qid", "nid",
-                F.round(
-                    dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn")),
-                    round_dp,
-                ).alias("cos_sim"),
-            )
-        )
-        w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("nid"))
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
 
+# what the GEMM paths' mapInPandas emits: candidates, then ranked pairs
+_CAND_SCHEMA = StructType(
+    [
+        StructField("qid", LongType(), False),
+        StructField("nid", LongType(), False),
+        StructField("cos_sim", DoubleType(), False),
+    ]
+)
+_KNN_SCHEMA = StructType(
+    _CAND_SCHEMA.fields + [StructField("rank", IntegerType(), False)]
+)
+
+
+def _knn_join_arrow(e: DataFrame, k: int) -> DataFrame:
+    """:func:`knn_join`'s exact path over ``(vec_id, v)``: the corpus
+    collects into one unit-row matrix broadcast to executors (rows x dim
+    floats — fine up to ~10M rows) and every Arrow batch of queries is
+    one :func:`_gemm_topk` against it."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType, IntegerType, LongType, StructField, StructType,
-    )
 
-    corpus = e.collect()  # the broadcastable corpus matrix (see docstring)
-    ids = np.array([r[id_col] for r in corpus], dtype=np.int64)
-    mat = np.array([r["v"] for r in corpus], dtype=np.float64)
-    mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+    corpus = e.collect()  # the broadcastable corpus matrix (see knn_join)
+    ids = np.array([r[ID_COL] for r in corpus], dtype=np.int64)
+    mat = _unit(np.array([r["v"] for r in corpus], dtype=np.float64))
     # id-rank penalty computed ONCE at broadcast time (driver side), so
     # the per-batch kernel is argpartition-only (_id_rank_penalty)
-    pen = _id_rank_penalty(ids, round_dp)
+    pen = _id_rank_penalty(ids, COS_DP)
     bc = e.sparkSession.sparkContext.broadcast((ids, mat, pen))
-
-    out_schema = StructType(
-        [
-            StructField("qid", LongType(), False),
-            StructField("nid", LongType(), False),
-            StructField("cos_sim", DoubleType(), False),
-            StructField("rank", IntegerType(), False),
-        ]
-    )
-    scale = 10.0 ** round_dp
 
     def batches(it):
         nids, nmat, npen = bc.value
         for pdf in it:
-            q = np.stack(pdf["v"].to_numpy())
-            q = q / np.linalg.norm(q, axis=1, keepdims=True)
-            sims = q @ nmat.T
-            # half-away-from-zero at round_dp, then rank by (-sim, nid):
-            # the id tie-break rides inside one composite key so top-k
-            # is argpartition O(n), not a full-row lexsort O(n log n)
-            sims = np.floor(np.abs(sims) * scale + 0.5) / scale * np.sign(sims)
-            qids = pdf[id_col].to_numpy(dtype=np.int64)
-            self_mask = qids[:, None] == nids[None, :]
-            sims[self_mask] = -np.inf
-            top = _topk_cols(sims - npen[None, :], k)
-            rows = len(qids)
+            q = _unit(np.stack(pdf["v"].to_numpy()))
+            qids = pdf[ID_COL].to_numpy(dtype=np.int64)
+            sims, top = _gemm_topk(q, qids, nmat, nids, npen, k)
             yield pd.DataFrame(
                 {
                     "qid": np.repeat(qids, k),
                     "nid": nids[top].ravel(),
                     "cos_sim": np.take_along_axis(sims, top, axis=1).ravel(),
-                    "rank": np.tile(np.arange(1, k + 1, dtype=np.int32), rows),
+                    "rank": np.tile(np.arange(1, k + 1, dtype=np.int32), len(qids)),
                 }
             )
 
-    return e.mapInPandas(batches, out_schema)
+    return e.mapInPandas(batches, _KNN_SCHEMA)
+
+
+def _knn_join_expr(emb: DataFrame, k: int) -> DataFrame:
+    """JVM-only reference for :func:`knn_join`'s exact path: cross join,
+    fold-based cosine and a per-query row_number window — quadratic
+    expression work, kept so tests can check the GEMM path against it."""
+    e = _embeddings(emb).withColumn("nrm", norm(F.col("v")))  # once per row
+    a = e.select(
+        F.col(ID_COL).alias("qid"), F.col("v").alias("qv"), F.col("nrm").alias("qn"),
+    )
+    b = e.select(
+        F.col(ID_COL).alias("nid"), F.col("v").alias("nv"), F.col("nrm").alias("nn"),
+    )
+    scored = (
+        a.crossJoin(F.broadcast(b))
+        .filter(F.col("qid") != F.col("nid"))
+        .select("qid", "nid", _cos("qv", "nv", "qn", "nn").alias("cos_sim"))
+    )
+    return _top_per_query(scored, k)
 
 
 LSH_TARGET_BUCKET_ROWS = 512  # auto plane count aims for ~this bucket size
@@ -659,11 +589,8 @@ def _auto_planes(n_rows: int) -> int:
 
 
 def knn_join_bucketed(
-    emb: DataFrame, k: int = 3,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    round_dp: int = 4, num_planes: int | None = None, seed: int = 7,
-    dim: int | None = None,
-    corpus: DataFrame | None = None,
+    emb: DataFrame, k: int = 3, num_planes: int | None = None, seed: int = 7,
+    dim: int | None = None, corpus: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate all-pairs k-NN via LSH-candidate generation — the
     100 TB shape of :func:`knn_join`. Same output contract (qid, nid,
@@ -694,21 +621,14 @@ def knn_join_bucketed(
     :func:`append_route_graph` to link a NEW batch of vectors into an
     existing neighbour graph without recomputing old-old edges.
     """
-    from pyspark.sql import Window
-
-    e = emb.select(F.col(id_col), _as_double(vec_col).alias("v"))
-    c = (
-        e if corpus is None
-        else corpus.select(F.col(id_col), _as_double(vec_col).alias("v"))
-    )
-    if dim is None:
-        dim = _infer_dim(e)
+    e = _embeddings(emb)
+    c = e if corpus is None else _embeddings(corpus)
     if num_planes is None:
         est = _estimated_row_count(c)
         if est is None:
-            est = c.select(id_col).count()
+            est = c.select(ID_COL).count()
         num_planes = _auto_planes(est)
-    planes = hyperplanes(num_planes, dim, seed)
+    planes = _planes(e, num_planes, seed, dim)
 
     def stamp(df: DataFrame) -> DataFrame:
         return df.withColumn(
@@ -718,33 +638,21 @@ def knn_join_bucketed(
         )
 
     a = stamp(e).select(
-        F.col(id_col).alias("qid"), F.col("v").alias("qv"), F.col("bucket"),
+        F.col(ID_COL).alias("qid"), F.col("v").alias("qv"), F.col("bucket"),
         F.col("nrm").alias("qn"),
     )
     b = stamp(c).select(
-        F.col(id_col).alias("nid"), F.col("v").alias("nv"),
+        F.col(ID_COL).alias("nid"), F.col("v").alias("nv"),
         F.col("bucket").alias("bucket_b"), F.col("nrm").alias("nn"),
     )
     scored = (
         a.join(b, (F.col("bucket") == F.col("bucket_b")) & (F.col("qid") != F.col("nid")))
-        .select(
-            "qid", "nid",
-            F.round(
-                dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn")),
-                round_dp,
-            ).alias("cos_sim"),
-        )
+        .select("qid", "nid", _cos("qv", "nv", "qn", "nn").alias("cos_sim"))
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_per_query(scored, k)
 
 
-def quantize_int8(
-    df: DataFrame, vec: str = "embedding", id_col: str = "vec_id"
-) -> DataFrame:
+def quantize_int8(df: DataFrame) -> DataFrame:
     """Symmetric int8 quantization of an embedding column, with per-vector
     reconstruction error — the compression pass that shrinks an ANN serving
     index 4x before the similarity ops run on it.
@@ -754,7 +662,7 @@ def quantize_int8(
     index-order fold — deterministic cross-engine, no shuffle at any
     scale. Degenerate all-zero vectors keep scale 0 and rmse 0.
     """
-    v = _as_double(F.col(vec))
+    v = _as_double(F.col(VEC_COL))
     amax = F.array_max(F.transform(v, lambda x: F.abs(x)))
     scale = amax / F.lit(127.0)
     q = F.transform(
@@ -765,9 +673,9 @@ def quantize_int8(
         F.lit(0.0),
         lambda acc, e: acc + e,
     )
-    dim = F.size(F.col(vec)).cast("double")
+    dim = F.size(F.col(VEC_COL)).cast("double")
     return df.select(
-        id_col,
+        ID_COL,
         F.round(scale, 6).alias("scale"),
         F.round(
             F.when(amax == 0, F.lit(0.0)).otherwise(F.sqrt(err2 / dim)), 6
@@ -777,9 +685,7 @@ def quantize_int8(
 
 
 def semdedup(
-    emb: DataFrame, threshold: float = 0.5, centroid_mod: int | None = None,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    round_dp: int = 4, assign_dp: int = 6,
+    emb: DataFrame, threshold: float = 0.5,
     centroids: DataFrame | None = None, num_centroids: int = 32,
     max_cell_size: int | None = None,
 ) -> DataFrame:
@@ -795,9 +701,7 @@ def semdedup(
     dataflow is identical.
 
     Like :func:`ivf_topk`, centroids default to the fixed-K
-    :func:`fixed_centroids` subset (``centroid_mod`` keeps the corpus-
-    growing ``id % mod`` form as a test fixture only — SCALE_SOAK.md
-    measured it super-linear at 10x). Sizing: assignment costs O(n*K),
+    :func:`fixed_centroids` subset. Sizing: assignment costs O(n*K),
     intra-cell pairing O(n^2 / K) *if cells are balanced* — K ~ sqrt(n)
     balances the two, but balance matters more than K: the pair stage is
     quadratic in the LARGEST cell (measured 10x swings between same-K
@@ -813,25 +717,12 @@ def semdedup(
     cosine-verified). The reported ``cell`` stays the original cell id,
     so downstream grouping is unaffected.
     """
-    e = emb.select(
-        F.col(id_col), _as_double(vec_col).alias("v")
-    ).withColumn("nrm", norm(F.col("v")))  # once per row, reused by both
-    # the K-centroid assignment scan and the intra-cell pair stage
-    cents = _centroid_set(
-        e.drop("nrm"), centroids, centroid_mod, num_centroids, id_col
-    ).withColumn("ncv", norm(F.col("cv")))
-    scored = e.crossJoin(F.broadcast(cents)).select(
-        F.col(id_col),
-        F.col("cid"),
-        F.round(
-            dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("ncv")),
-            assign_dp,
-        ).alias("asim"),
-    )
-    assigned = scored.groupBy(id_col).agg(
-        F.max(F.struct("asim", "cid"))["cid"].alias("cell")
-    )
-    cells = e.join(assigned, id_col)
+    e = _embeddings(emb)
+    cents = centroids if centroids is not None else fixed_centroids(e, num_centroids)
+    # norm once per row, reused by the K-centroid assignment scan and
+    # the intra-cell pair stage
+    e = e.withColumn("nrm", norm(F.col("v")))
+    cells = e.join(ivf_assign_cells(e, cents), ID_COL)
     if max_cell_size is not None:
         # salt-split oversized cells: the pairing key becomes (cell,
         # salt) where salt = hash(id) % ceil(cell_size / cap). The size
@@ -853,7 +744,7 @@ def semdedup(
                 # operands are non-negative, so pmod == %
                 "_salt",
                 F.pmod(
-                    hash32(F.concat(F.col(id_col).cast("string"), F.lit(":sd"))),
+                    hash32(F.concat(F.col(ID_COL).cast("string"), F.lit(":sd"))),
                     F.col("_nsplit"),
                 ),
             )
@@ -861,47 +752,42 @@ def semdedup(
         )
     else:
         cells = cells.withColumn("_salt", F.lit(0).cast("long"))
-    a = cells.select(
-        F.col(id_col).alias("vec_a"), F.col("v").alias("va"), F.col("cell"),
-        F.col("_salt"), F.col("nrm").alias("na"),
-    )
-    b = cells.select(
-        F.col(id_col).alias("vec_b"), F.col("v").alias("vb"),
-        F.col("cell").alias("cell_b"), F.col("_salt").alias("_salt_b"),
-        F.col("nrm").alias("nb"),
-    )
     # within-(cell, salt) pairs only; a < b keeps the earliest id in a group
     dup_b = (
-        a.join(
-            b,
-            (F.col("cell") == F.col("cell_b"))
-            & (F.col("_salt") == F.col("_salt_b"))
-            & (F.col("vec_a") < F.col("vec_b")),
-        )
-        .filter(
-            F.round(
-                dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
-                round_dp,
-            )
-            >= threshold
-        )
-        .select(F.col("vec_b").alias(id_col))
+        _pairs_at_least(cells, threshold, ("cell", "_salt"))
+        .select(F.col("vec_b").alias(ID_COL))
         .distinct()
     )
     return (
-        cells.join(dup_b.withColumn("dup", F.lit(1)), id_col, "left")
+        cells.join(dup_b.withColumn("dup", F.lit(1)), ID_COL, "left")
         .select(
-            id_col,
+            ID_COL,
             "cell",
             F.when(F.col("dup").isNull(), F.lit(1)).otherwise(F.lit(0)).alias("keep"),
         )
     )
 
 
+def _block(col: str, bi: int, sub: int) -> Column:
+    """Block ``bi`` (``sub`` components) of an array column."""
+    return F.slice(F.col(col), bi * sub + 1, sub)
+
+
+def _l2(a: Column, b: Column) -> Column:
+    """Squared L2 distance of two array columns rounded to ``DIST_DP``:
+    the distance every PQ code choice and ADC lookup ranks by."""
+    return F.round(
+        F.aggregate(
+            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0),
+            lambda s, x: s + x,
+        ),
+        DIST_DP,
+    )
+
+
 def pq_quantize(
-    emb: DataFrame, n_blocks: int = 4, n_codes: int = 8,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    dim: int | None = None, dist_dp: int = 6, mse_dp: int = 4,
+    emb: DataFrame, n_blocks: int = 4, n_codes: int = 8, dim: int | None = None,
 ) -> DataFrame:
     """Product quantization (the FAISS IVF-PQ memory-compression step):
     the vector is split into ``n_blocks`` contiguous sub-vectors, each
@@ -912,48 +798,44 @@ def pq_quantize(
 
     Codebook: the first ``n_codes`` corpus vectors by id, sliced per
     block — deterministic and oracle-mirrorable (``ORDER BY id LIMIT
-    n_codes``; a production index k-means-refines the codebook exactly
-    like :func:`kmeans_centroids` refines IVF centroids; the assignment
+    n_codes``; :func:`pq_train_blocks` k-means-refines such a codebook
+    the way :func:`lloyd_refine` refines IVF centroids; the assignment
     dataflow — the part that sees all 100 TB — is identical either way).
 
     Scale shape: the codebook collect is O(n_codes) rows (bounded,
     driver-side control like :func:`fixed_centroids`); assignment is
     per-row JVM expressions over literal arrays — map-only, zero
-    shuffle. Distances round to ``dist_dp`` before the argmin so Spark
+    shuffle. Distances round to ``DIST_DP`` before the argmin so Spark
     and the SQL oracle pick identical codes; ties break to the lowest
     code (first-occurrence ``array_position``).
 
     Output: ``(id, code_0..code_{B-1}, mse)`` where mse is the mean
     squared reconstruction error implied by the chosen codes.
     """
-    e = emb.select(F.col(id_col), _as_double(vec_col).alias("v"))
+    e = _embeddings(emb)
     if dim is None:
         dim = _infer_dim(e)
     if dim % n_blocks != 0:
         raise ValueError(f"dim={dim} not divisible by n_blocks={n_blocks}")
     sub = dim // n_blocks
-    cb_rows = e.orderBy(F.col(id_col)).limit(n_codes).collect()
+    cb_rows = e.orderBy(F.col(ID_COL)).limit(n_codes).collect()
     if len(cb_rows) < n_codes:
         raise ValueError(
             f"corpus has {len(cb_rows)} rows < n_codes={n_codes}"
         )
-    cb = [list(r["v"]) for r in sorted(cb_rows, key=lambda r: r[id_col])]
-    cols: list[Column] = [F.col(id_col)]
+    cb = [list(r["v"]) for r in sorted(cb_rows, key=lambda r: r[ID_COL])]
+    cols: list[Column] = [F.col(ID_COL)]
     min_dists: list[Column] = []
     for bi in range(n_blocks):
-        sl = F.slice(F.col("v"), bi * sub + 1, sub)
-        dists = []
-        for c in range(n_codes):
-            cvec = F.array(
-                *[F.lit(float(x)) for x in cb[c][bi * sub : (bi + 1) * sub]]
-            )
-            d2 = F.aggregate(
-                F.zip_with(sl, cvec, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda s, x: s + x,
-            )
-            dists.append(F.round(d2, dist_dp))
-        darr = F.array(*dists)
+        darr = F.array(
+            *[
+                _l2(
+                    _block("v", bi, sub),
+                    F.array(*[F.lit(float(x)) for x in cb[c][bi * sub : (bi + 1) * sub]]),
+                )
+                for c in range(n_codes)
+            ]
+        )
         cols.append(
             F.array_position(darr, F.array_min(darr)).alias(f"code_{bi}")
         )
@@ -961,15 +843,13 @@ def pq_quantize(
     total = min_dists[0]
     for m in min_dists[1:]:
         total = total + m
-    cols.append(F.round(total / F.lit(float(dim)), mse_dp).alias("mse"))
+    cols.append(F.round(total / F.lit(float(dim)), MSE_DP).alias("mse"))
     return e.select(*cols)
 
 
 def pq_adc_topk(
     emb: DataFrame, k: int = 10, query_id: int | None = None,
     n_blocks: int = 4, n_codes: int = 8,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    dim: int | None = None, dist_dp: int = 6,
 ) -> DataFrame:
     """ANN search over product-quantized codes via Asymmetric Distance
     Computation (the FAISS IVF-PQ query path): the query vector stays
@@ -989,22 +869,18 @@ def pq_adc_topk(
     Output: ``(id, adc_dist)`` for the k nearest by approximate
     distance, ties broken on ascending id.
     """
-    e = emb.select(F.col(id_col), _as_double(vec_col).alias("v"))
-    if dim is None:
-        dim = _infer_dim(e)
+    e = _embeddings(emb)
+    dim = _infer_dim(e)
     sub = dim // n_blocks
-    cb_rows = e.orderBy(F.col(id_col)).limit(n_codes).collect()
-    cb = [list(r["v"]) for r in sorted(cb_rows, key=lambda r: r[id_col])]
+    cb_rows = e.orderBy(F.col(ID_COL)).limit(n_codes).collect()
+    cb = [list(r["v"]) for r in sorted(cb_rows, key=lambda r: r[ID_COL])]
     if query_id is None:
-        query_id = min(r[id_col] for r in cb_rows)
-    q_rows = e.filter(F.col(id_col) == query_id).limit(1).collect()
+        query_id = min(r[ID_COL] for r in cb_rows)
+    q_rows = e.filter(F.col(ID_COL) == query_id).limit(1).collect()
     if not q_rows:
         raise ValueError(f"query_id={query_id} not found")
     q = list(q_rows[0]["v"])
-    codes = pq_quantize(
-        emb, n_blocks=n_blocks, n_codes=n_codes, id_col=id_col,
-        vec_col=vec_col, dim=dim, dist_dp=dist_dp,
-    )
+    codes = pq_quantize(emb, n_blocks=n_blocks, n_codes=n_codes, dim=dim)
     dist = F.lit(0.0)
     for bi in range(n_blocks):
         lut = [
@@ -1016,7 +892,7 @@ def pq_adc_topk(
                     * (q[bi * sub + i] - cb[c][bi * sub + i])
                     for i in range(sub)
                 ),
-                dist_dp,
+                DIST_DP,
             )
             for c in range(n_codes)
         ]
@@ -1024,51 +900,43 @@ def pq_adc_topk(
             F.array(*[F.lit(x) for x in lut]), F.col(f"code_{bi}").cast("int")
         )
     return (
-        codes.filter(F.col(id_col) != query_id)
-        .select(F.col(id_col), F.round(dist, dist_dp).alias("adc_dist"))
-        .orderBy(F.asc("adc_dist"), F.asc(id_col))
+        codes.filter(F.col(ID_COL) != query_id)
+        .select(F.col(ID_COL), F.round(dist, DIST_DP).alias("adc_dist"))
+        .orderBy(F.asc("adc_dist"), F.asc(ID_COL))
         .limit(k)
     )
 
 
-def knn_join_sampled(
-    emb: DataFrame, k: int = 3, sample_mod: int = 4,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    round_dp: int = 4, max_sample_rows: int = 1_000_000,
-) -> DataFrame:
+def knn_join_sampled(emb: DataFrame, k: int = 3, sample_mod: int = 4) -> DataFrame:
     """EXACT k-NN for a deterministic hash-sample of query vectors against
     the FULL corpus — the evaluation shape that stays linear at 100 TB.
 
-    :func:`knn_join`'s arrow engine broadcasts the CORPUS matrix, so it is
+    :func:`knn_join`'s exact path broadcasts the CORPUS matrix, so it is
     bounded by corpus size. Recall evaluation doesn't need every query:
     it needs an unbiased sample scored exactly. This operator inverts the
     broadcast — the (small) query sample (``id % sample_mod == 0``)
     collects and broadcasts, each corpus partition scores its rows
-    against the sample with one GEMM and keeps a per-partition top-k PER
-    QUERY, and a final qid-keyed aggregation merges the bounded
-    candidate set (|sample| * k * n_partitions rows, never the corpus).
-    Top-k is distributive, so the result is exactly
+    against the sample with one GEMM (:func:`_gemm_topk`) and keeps a
+    per-partition top-k PER QUERY, and a final qid-keyed aggregation
+    merges the bounded candidate set (|sample| * k * n_partitions rows,
+    never the corpus). Top-k is distributive, so the result is exactly
     ``knn_join(...)`` restricted to sampled qids — pinned by test.
 
     Same determinism contract as knn_join: similarity rounded
-    half-away-from-zero at ``round_dp`` before ranking, ties break on
+    half-away-from-zero at ``COS_DP`` before ranking, ties break on
     ascending neighbour id. Raises if the sample exceeds
-    ``max_sample_rows`` instead of silently collecting too much.
+    ``MAX_SAMPLE_ROWS`` instead of silently collecting too much.
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql.types import (
-        DoubleType, IntegerType, LongType, StructField, StructType,
-    )
 
-    e = emb.select(F.col(id_col), _as_double(vec_col).alias("v"))
-    sample = e.filter(F.pmod(F.col(id_col), F.lit(sample_mod)) == 0)
-    qrows = sample.limit(max_sample_rows + 1).collect()
-    if len(qrows) > max_sample_rows:
+    e = _embeddings(emb)
+    sample = e.filter(F.pmod(F.col(ID_COL), F.lit(sample_mod)) == 0)
+    qrows = sample.limit(MAX_SAMPLE_ROWS + 1).collect()
+    if len(qrows) > MAX_SAMPLE_ROWS:
         raise ValueError(
-            f"knn_join_sampled: query sample exceeds max_sample_rows="
-            f"{max_sample_rows}; raise sample_mod (or the cap) so the "
+            f"knn_join_sampled: query sample exceeds MAX_SAMPLE_ROWS="
+            f"{MAX_SAMPLE_ROWS}; raise sample_mod (or the cap) so the "
             "broadcast side stays bounded"
         )
     if not qrows:
@@ -1079,19 +947,9 @@ def knn_join_sampled(
             [],
             "qid long, nid long, cos_sim double, rank int",
         )
-    qids = np.array([r[id_col] for r in qrows], dtype=np.int64)
-    qmat = np.array([r["v"] for r in qrows], dtype=np.float64)
-    qmat = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
+    qids = np.array([r[ID_COL] for r in qrows], dtype=np.int64)
+    qmat = _unit(np.array([r["v"] for r in qrows], dtype=np.float64))
     bc = e.sparkSession.sparkContext.broadcast((qids, qmat))
-
-    cand_schema = StructType(
-        [
-            StructField("qid", LongType(), False),
-            StructField("nid", LongType(), False),
-            StructField("cos_sim", DoubleType(), False),
-        ]
-    )
-    scale = 10.0 ** round_dp
 
     # Query-block tiling (round 8): the GEMM's |sample| x |batch| sims
     # matrix is the kernel's only unbounded memory — at a 50k-query
@@ -1107,20 +965,13 @@ def knn_join_sampled(
         for pdf in it:
             if not len(pdf):
                 continue
-            c = np.stack(pdf["v"].to_numpy())
-            c = c / np.linalg.norm(c, axis=1, keepdims=True)
-            cids = pdf[id_col].to_numpy(dtype=np.int64)
-            cpen = _id_rank_penalty(cids, round_dp)  # once per batch
+            c = _unit(np.stack(pdf["v"].to_numpy()))
+            cids = pdf[ID_COL].to_numpy(dtype=np.int64)
+            cpen = _id_rank_penalty(cids, COS_DP)  # once per batch
             for q0 in range(0, len(sq), q_block):
                 bq, bm = sq[q0 : q0 + q_block], sm[q0 : q0 + q_block]
-                sims = bm @ c.T  # q_block x |partition rows|
-                sims = (
-                    np.floor(np.abs(sims) * scale + 0.5) / scale
-                    * np.sign(sims)
-                )
-                sims[bq[:, None] == cids[None, :]] = -np.inf  # self-match
-                kk = min(k, sims.shape[1])
-                top = _topk_cols(sims - cpen[None, :], kk)
+                kk = min(k, len(cids))
+                sims, top = _gemm_topk(bm, bq, c, cids, cpen, kk)
                 tops = np.take_along_axis(sims, top, axis=1)
                 keep = np.isfinite(tops).ravel()
                 yield pd.DataFrame(
@@ -1131,22 +982,15 @@ def knn_join_sampled(
                     }
                 )
 
-    cand = e.mapInPandas(batches, cand_schema)
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("nid"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
+    cand = e.mapInPandas(batches, _CAND_SCHEMA)
+    return _top_per_query(cand, k)
 
 
 def graph_route_topk(
     emb: DataFrame, k: int = 5,
     hops: int = 3, beam: int = 8, n_entries: int = 4, entry_mod: int = 16,
-    query_mod: int = 25, edge_k: int = 3,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    round_dp: int = 4, num_planes: int | None = None,
-    seeds: tuple[int, ...] = (7, 11),
-    dim: int | None = None,
+    query_mod: int = 25, edge_k: int = 3, num_planes: int | None = None,
+    seeds: tuple[int, ...] = (7, 11), dim: int | None = None,
 ) -> DataFrame:
     """Graph-ROUTED approximate nearest-neighbour search — the
     HNSW-class family member the LSH/IVF/PQ entries don't cover: a
@@ -1192,21 +1036,36 @@ def graph_route_topk(
     standard beam-search ANN trade-off dial.
     """
     edges = build_route_graph(
-        emb, edge_k=edge_k, seeds=seeds, id_col=id_col, vec_col=vec_col,
-        round_dp=round_dp, num_planes=num_planes, dim=dim,
+        emb, edge_k=edge_k, seeds=seeds, num_planes=num_planes, dim=dim,
     )
     return route_on_graph(
         emb, edges, k=k, hops=hops, beam=beam, n_entries=n_entries,
-        entry_mod=entry_mod, query_mod=query_mod, id_col=id_col,
-        vec_col=vec_col, round_dp=round_dp,
+        entry_mod=entry_mod, query_mod=query_mod,
+    )
+
+
+def _lsh_edges(
+    emb: DataFrame, edge_k: int, seeds: tuple[int, ...],
+    num_planes: int | None, dim: int | None, corpus: DataFrame | None = None,
+) -> DataFrame:
+    """``(src, dst)``: the union over ``seeds`` of each ``emb`` row's
+    top-``edge_k`` :func:`knn_join_bucketed` neighbours (in ``corpus``
+    when given), one plane table per seed. May hold duplicates."""
+    return functools.reduce(
+        DataFrame.unionByName,
+        [
+            knn_join_bucketed(
+                emb, k=edge_k, num_planes=num_planes, seed=s, dim=dim,
+                corpus=corpus,
+            ).select(F.col("qid").alias("src"), F.col("nid").alias("dst"))
+            for s in seeds
+        ],
     )
 
 
 def build_route_graph(
     emb: DataFrame, edge_k: int = 3, seeds: tuple[int, ...] = (7, 11),
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    round_dp: int = 4, num_planes: int | None = None,
-    dim: int | None = None,
+    num_planes: int | None = None, dim: int | None = None,
 ) -> DataFrame:
     """BUILD half of the graph-routed ANN: the (src, dst) neighbour
     graph — the union over ``seeds`` of each node's top-``edge_k``
@@ -1217,26 +1076,14 @@ def build_route_graph(
     :func:`route_on_graph` — the second batch pays search cost only
     (the amortization the r9 verdict asked for; certified by
     llm_ann_graph_route_reuse)."""
-    per_table = [
-        knn_join_bucketed(
-            emb, k=edge_k, id_col=id_col, vec_col=vec_col,
-            round_dp=round_dp, num_planes=num_planes, seed=s, dim=dim,
-        ).select(F.col("qid").alias("src"), F.col("nid").alias("dst"))
-        for s in seeds
-    ]
-    edges = per_table[0]
-    for t in per_table[1:]:
-        edges = edges.unionByName(t)
-    edges = edges.distinct()
+    edges = _lsh_edges(emb, edge_k, seeds, num_planes, dim).distinct()
     return edges.localCheckpoint(eager=False)  # scanned once per hop
 
 
 def append_route_graph(
     emb: DataFrame, new_mod: int = 10,
     edge_k: int = 3, seeds: tuple[int, ...] = (7, 11),
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    round_dp: int = 4, num_planes: int | None = None,
-    dim: int | None = None,
+    num_planes: int | None = None, dim: int | None = None,
 ) -> DataFrame:
     """INCREMENTAL index maintenance for the graph-routed ANN: link a
     NEW batch of vectors (``id % new_mod == 0``) into the graph built
@@ -1262,23 +1109,12 @@ def append_route_graph(
     pays O(|new| x bucket density) — never O(|old|^2) — so continuous
     ingest amortizes exactly like build-once/route-many does for
     queries (SCALE_SOAK round 10)."""
-    old = emb.filter(F.col(id_col) % new_mod != 0)
-    new = emb.filter(F.col(id_col) % new_mod == 0)
+    old = emb.filter(F.col(ID_COL) % new_mod != 0)
+    new = emb.filter(F.col(ID_COL) % new_mod == 0)
     old_edges = build_route_graph(
-        old, edge_k=edge_k, seeds=seeds, id_col=id_col, vec_col=vec_col,
-        round_dp=round_dp, num_planes=num_planes, dim=dim,
+        old, edge_k=edge_k, seeds=seeds, num_planes=num_planes, dim=dim,
     )
-    per_seed = [
-        knn_join_bucketed(
-            new, k=edge_k, id_col=id_col, vec_col=vec_col,
-            round_dp=round_dp, num_planes=num_planes, seed=s, dim=dim,
-            corpus=emb,
-        ).select(F.col("qid").alias("src"), F.col("nid").alias("dst"))
-        for s in seeds
-    ]
-    new_out = per_seed[0]
-    for t in per_seed[1:]:
-        new_out = new_out.unionByName(t)
+    new_out = _lsh_edges(new, edge_k, seeds, num_planes, dim, corpus=emb)
     back = new_out.select(
         F.col("dst").alias("src"), F.col("src").alias("dst")
     )
@@ -1290,26 +1126,23 @@ def append_route_graph(
 WALK_STATE_ROWS_PER_PARTITION = 100_000
 
 
-def walk_state_partitions(
-    n_rows: int, rows_per_partition: int = WALK_STATE_ROWS_PER_PARTITION,
-) -> int:
+def walk_state_partitions(n_rows: int) -> int:
     """Partition count for the beam walk's per-hop state checkpoints:
-    ceil(n_rows / rows_per_partition), clamped to [1, 4096]. The state
-    is queries x beam rows; at bench scale that is ~1k rows -> 1
-    partition (a 32-partition layout scheduled 32 near-empty tasks per
-    downstream scan, r13), while a production batch of 1e6 queries x
-    beam 8 gets 80 partitions instead of funnelling through one task
+    ceil(n_rows / WALK_STATE_ROWS_PER_PARTITION), clamped to [1, 4096].
+    The state is queries x beam rows; at bench scale that is ~1k rows
+    -> 1 partition (a 32-partition layout scheduled 32 near-empty tasks
+    per downstream scan, r13), while a production batch of 1e6 queries
+    x beam 8 gets 80 partitions instead of funnelling through one task
     (ADVICE r13 / VERDICT r13 item 5 — the hard ``coalesce(1)`` was a
     local-mode assumption)."""
-    return max(1, min(4096, -(-n_rows // rows_per_partition)))
+    return max(1, min(4096, -(-n_rows // WALK_STATE_ROWS_PER_PARTITION)))
 
 
 def route_on_graph(
     emb: DataFrame, edges: DataFrame, k: int = 5,
     hops: int = 3, beam: int = 8, n_entries: int = 4, entry_mod: int = 16,
     query_mod: int = 25, query_rem: int | tuple[int, ...] = 0,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    round_dp: int = 4, entries: DataFrame | None = None,
+    entries: DataFrame | None = None,
 ) -> DataFrame:
     """SEARCH half of the graph-routed ANN: coarse entry layer + beam
     walk over a prebuilt ``edges`` graph (see :func:`build_route_graph`
@@ -1331,16 +1164,14 @@ def route_on_graph(
     calls return — while paying the per-hop job/checkpoint overhead
     once instead of N times (optimization round 13: the two-batch
     replay entry was job-count-bound, 143 jobs for ~1k tiny tasks)."""
-    from pyspark.sql import Window
-
     rems = (query_rem,) if isinstance(query_rem, int) else tuple(query_rem)
-    e = emb.select(F.col(id_col), _as_double(vec_col).alias("v"))
+    e = _embeddings(emb)
     nodes = e.select(
-        F.col(id_col).alias("nid"), F.col("v").alias("nv"),
+        F.col(ID_COL).alias("nid"), F.col("v").alias("nv"),
         norm(F.col("v")).alias("nn"),
     )
-    queries = e.filter((F.col(id_col) % query_mod).isin(list(rems))).select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("qv"),
+    queries = e.filter((F.col(ID_COL) % query_mod).isin(list(rems))).select(
+        F.col(ID_COL).alias("query_id"), F.col("v").alias("qv"),
         norm(F.col("v")).alias("qn"),
     # O(query batch) rows, broadcast into score() once per hop plus the
     # entry layer — pin it so each consumer reads one materialization
@@ -1352,8 +1183,8 @@ def route_on_graph(
     sample = (
         entries.select("nid")
         if entries is not None
-        else e.filter(F.col(id_col) % entry_mod == 0).select(
-            F.col(id_col).alias("nid")
+        else e.filter(F.col(ID_COL) % entry_mod == 0).select(
+            F.col(ID_COL).alias("nid")
         )
     )
 
@@ -1364,14 +1195,7 @@ def route_on_graph(
             cand.join(nodes, "nid")
             .join(F.broadcast(queries), "query_id")
             .filter(F.col("nid") != F.col("query_id"))
-            .select(
-                "query_id", "nid",
-                F.round(
-                    dot(F.col("qv"), F.col("nv"))
-                    / (F.col("qn") * F.col("nn")),
-                    round_dp,
-                ).alias("cos_sim"),
-            )
+            .select("query_id", "nid", _cos("qv", "nv", "qn", "nn").alias("cos_sim"))
         )
 
     w = Window.partitionBy("query_id").orderBy(
@@ -1447,16 +1271,11 @@ def route_on_graph(
             seen.unionByName(score(new))
             .dropDuplicates(["query_id", "nid"])
         )
-    return (
-        seen.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_per_query(seen, k, "query_id")
 
 
 def kcenter_coreset(
     emb: DataFrame, k: int, m: int = 1, seed_id: int = 0,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    round_dp: int = 4,
 ) -> DataFrame:
     """k-center coreset by (batched) farthest-point traversal
     (Gonzalez 1985). ``m=1`` is the pure greedy: each corpus scan adds
@@ -1477,19 +1296,16 @@ def kcenter_coreset(
     corpus size the traversal stops when the corpus is exhausted and
     returns every vector (fewer than k rows) rather than spinning on
     empty scans (review r11 — the pre-refactor code crashed here)."""
-    e = emb.select(
-        F.col(id_col).alias("vec_id"), _as_double(vec_col).alias("v")
-    )
-    e = e.localCheckpoint(eager=False)  # scanned once per batch
-    seed_rows = e.filter(F.col("vec_id") == seed_id).collect()
+    e = _embeddings(emb).localCheckpoint(eager=False)  # scanned once per batch
+    seed_rows = e.filter(F.col(ID_COL) == seed_id).collect()
     if not seed_rows:  # empty corpus or absent seed (ADVICE r11)
         raise ValueError(
-            f"kcenter_coreset: seed {id_col}={seed_id} not present in "
+            f"kcenter_coreset: seed {ID_COL}={seed_id} not present in "
             "the corpus (or the corpus is empty)"
         )
     first = seed_rows[0]
-    picked = [(1, int(first["vec_id"]), 1.0)]
-    sel = [(int(first["vec_id"]), first["v"])]
+    picked = [(1, int(first[ID_COL]), 1.0)]
+    sel = [(int(first[ID_COL]), first["v"])]
     while len(picked) < k:
         take = min(m, k - len(picked))
         sel_df = F.broadcast(
@@ -1498,51 +1314,42 @@ def kcenter_coreset(
             )
         )
         batch = (
-            e.filter(~F.col("vec_id").isin([s[0] for s in sel]))
+            e.filter(~F.col(ID_COL).isin([s[0] for s in sel]))
             .crossJoin(sel_df)
-            .groupBy("vec_id")
+            .groupBy(ID_COL)
             .agg(
                 F.max(
-                    F.round(cosine(F.col("v"), F.col("sv")), round_dp)
+                    F.round(cosine(F.col("v"), F.col("sv")), COS_DP)
                 ).alias("ms")
             )
-            .orderBy("ms", "vec_id")
+            .orderBy("ms", ID_COL)
             .limit(take)
-            .join(e, "vec_id")
+            .join(e, ID_COL)
             .collect()
         )
         if not batch:  # k > corpus size: nothing left to select
             break
         # the limit->join can reorder the batch; rank follows the same
         # (ms, vec_id) order the unrolled oracle's row_number uses
-        for row in sorted(batch, key=lambda r: (r["ms"], r["vec_id"])):
+        for row in sorted(batch, key=lambda r: (r["ms"], r[ID_COL])):
             picked.append(
-                (len(picked) + 1, int(row["vec_id"]), float(row["ms"]))
+                (len(picked) + 1, int(row[ID_COL]), float(row["ms"]))
             )
-            sel.append((int(row["vec_id"]), row["v"]))
+            sel.append((int(row[ID_COL]), row["v"]))
     out = e.sparkSession.createDataFrame(
         picked, "rank int, vec_id long, maxsim double"
     )
-    return out.select(
-        "rank",
-        F.col("vec_id").alias(id_col) if id_col != "vec_id" else "vec_id",
-        F.round("maxsim", round_dp).alias("maxsim"),
-    )
+    return out.select("rank", ID_COL, F.round("maxsim", COS_DP).alias("maxsim"))
 
 
-def rrf_fuse(
-    rankings: list[DataFrame],
-    id_col: str = "doc_id",
-    k0: int = 60,
-    k: int = 10,
-) -> DataFrame:
+def rrf_fuse(rankings: list[DataFrame], k0: int = 60, k: int = 10) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al.) of N ranked lists into one:
     ``score(d) = sum over systems of 1 / (k0 + rank_s(d))`` — the standard
     way hybrid retrieval merges a lexical (BM25) and a vector (cosine)
     ranking without score calibration, and the candidate-merge step a
     training-data curation pipeline runs before dedup/selection.
 
-    Each input must carry ``(id_col, rank)`` with rank 1-based. The
+    Each input must carry ``(doc_id, rank)`` with rank 1-based. The
     contribution is fixed-pointed per (system, rank) as
     ``floor(1e9 / (k0 + rank))`` BEFORE summing, so the fused score is an
     exact integer — identical across engines regardless of float addition
@@ -1557,26 +1364,23 @@ def rrf_fuse(
         .cast("long")
         .alias("contrib")
     )
-    parts = [r.select(F.col(id_col), contrib) for r in rankings]
+    parts = [r.select(F.col("doc_id"), contrib) for r in rankings]
     allc = parts[0]
     for p in parts[1:]:
         allc = allc.unionByName(p)
-    fused = allc.groupBy(id_col).agg(
+    fused = allc.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_systems"),
         F.sum("contrib").alias("rrf9"),
     )
-    return fused.orderBy(F.desc("rrf9"), F.asc(id_col)).limit(k)
+    return fused.orderBy(F.desc("rrf9"), F.asc("doc_id")).limit(k)
 
 
 def precision_recall_at_k(
-    ranked: DataFrame,
-    positives: DataFrame,
-    cutoffs: list[int],
-    id_col: str = "vec_id",
+    ranked: DataFrame, positives: DataFrame, cutoffs: list[int],
 ) -> DataFrame:
     """Precision@K / recall@K sweep for a ranked retrieval list against a
     binary relevance table — the eval readout any retrieval/dedup ranker
-    ships with. ``ranked`` carries ``(id_col, rank)`` (1-based, top-N
+    ships with. ``ranked`` carries ``(vec_id, rank)`` (1-based, top-N
     only); ``positives`` carries the ids of ALL relevant items.
 
     tp@K is a running sum over the ranked list (a window over at most
@@ -1586,13 +1390,11 @@ def precision_recall_at_k(
     fixed-pointed to 1e-6 AFTER the integer counts, so both engines
     agree exactly.
     """
-    from pyspark.sql import Window
-
     max_k = max(cutoffs)
-    pos = positives.select(F.col(id_col), F.lit(1).alias("rel"))
+    pos = positives.select(F.col(ID_COL), F.lit(1).alias("rel"))
     marked = (
         ranked.filter(F.col("rank") <= max_k)
-        .join(F.broadcast(pos), id_col, "left")
+        .join(F.broadcast(pos), ID_COL, "left")
         .select("rank", F.coalesce(F.col("rel"), F.lit(0)).alias("rel"))
     )
     w = Window.orderBy("rank").rowsBetween(Window.unboundedPreceding, 0)
@@ -1626,16 +1428,14 @@ def ndcg_at_k(
     labels: DataFrame,
     discounts: list[tuple[int, float]],
     cutoffs: list[int],
-    id_col: str = "vec_id",
-    label_col: str = "label",
 ) -> DataFrame:
     """nDCG@K sweep with GRADED relevance — the ranking-quality readout
     for a retrieval/curation ranker when relevance isn't binary.
 
-    ``ranked`` carries ``(id_col, rank)`` (1-based top-N); ``labels``
-    maps every id to an integer gain; ``discounts`` is the
-    ``rank -> 1/log2(rank+1)`` table PRECOMPUTED in Python and passed in
-    as literals — the SQL oracle injects the same repr-round-tripped
+    ``ranked`` carries ``(vec_id, rank)`` (1-based top-N); ``labels``
+    maps every ``vec_id`` to an integer gain ``label``; ``discounts`` is
+    the ``rank -> 1/log2(rank+1)`` table PRECOMPUTED in Python and passed
+    in as literals — the SQL oracle injects the same repr-round-tripped
     constants, so neither engine evaluates a transcendental and the
     JVM-vs-libm 1-ulp class is gone at the source. Per-rank
     contributions fixed-point to 1e-6 BEFORE summing (gain * discount
@@ -1646,14 +1446,12 @@ def ndcg_at_k(
     a TakeOrdered top-N like the actual ranking; all windows run over
     max(cutoffs) rows, never the corpus.
     """
-    from pyspark.sql import Window
-
     spark = ranked.sparkSession
     max_k = max(cutoffs)
     disc = spark.createDataFrame(discounts, "rank long, disc double")
     contrib = (
         F.floor(
-            F.lit(1_000_000.0) * F.col(label_col) * F.col("disc")
+            F.lit(1_000_000.0) * F.col("label") * F.col("disc")
             + F.lit(0.5)
         )
         .cast("long")
@@ -1661,18 +1459,18 @@ def ndcg_at_k(
     )
     actual = (
         ranked.filter(F.col("rank") <= max_k)
-        .join(labels, id_col)
+        .join(labels, ID_COL)
         .join(F.broadcast(disc), "rank")
         .select("rank", contrib)
     )
     ideal = (
-        labels.filter(F.col(id_col).isNotNull())
-        .orderBy(F.desc(label_col), F.asc(id_col))
+        labels.filter(F.col(ID_COL).isNotNull())
+        .orderBy(F.desc("label"), F.asc(ID_COL))
         .limit(max_k)
         .select(
-            F.col(label_col),
+            F.col("label"),
             F.row_number()
-            .over(Window.orderBy(F.desc(label_col), F.asc(id_col)))
+            .over(Window.orderBy(F.desc("label"), F.asc(ID_COL)))
             .alias("rank"),
         )
         .join(F.broadcast(disc), "rank")
@@ -1707,73 +1505,69 @@ def ndcg_at_k(
 
 
 # ---------------------------------------------------------------------------
-# persisted IVF-PQ index kernels (round 12 — r11 verdict item 7)
+# IVF and IVF-PQ index kernels
 # ---------------------------------------------------------------------------
 
 
-def ivf_assign_cells(
-    e: DataFrame, cents: DataFrame, assign_dp: int = 6,
-) -> DataFrame:
-    """The shared IVF E-step: assign every ``(vec_id, v)`` vector to its
-    argmax-cosine centroid cell — similarity rounded to ``assign_dp``
-    BEFORE the argmax, ties to the larger cid, so every engine (and the
-    SQL oracle's row_number mirror) picks identically. One O(n*K)
-    broadcast pass + a per-vector partial-agg; returns
-    ``(vec_id, cell)``. Used by :func:`ivf_pq_encode`,
-    :func:`lloyd_refine`, and the cell-balance stats entry."""
+def ivf_assign_cells(e: DataFrame, cents: DataFrame) -> DataFrame:
+    """The IVF E-step, the one copy every IVF path uses: assign every
+    ``(vec_id, v)`` vector to its argmax-cosine ``(cid, cv)`` centroid
+    cell — similarity rounded to ``ASSIGN_DP`` BEFORE the argmax, ties to
+    the larger cid (a max over ``(asim, cid)`` structs), so every engine
+    (and the SQL oracle's row_number mirror) picks identically. One
+    O(n*K) broadcast pass + a per-vector partial-agg: the shuffle
+    carries ``(id, asim, cid)`` triples, never the vectors. Returns
+    ``(vec_id, cell)``."""
     return (
         e.withColumn("nrm", norm(F.col("v")))
         .crossJoin(F.broadcast(cents.withColumn("ncv", norm(F.col("cv")))))
-        .select(
-            "vec_id",
-            "cid",
-            F.round(
-                dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("ncv")),
-                assign_dp,
-            ).alias("asim"),
-        )
-        .groupBy("vec_id")
+        .select(ID_COL, "cid", _cos("v", "cv", "nrm", "ncv", ASSIGN_DP).alias("asim"))
+        .groupBy(ID_COL)
         .agg(F.max(F.struct("asim", "cid"))["cid"].alias("cell"))
     )
 
 
-def lloyd_refine(
-    e: DataFrame, cents: DataFrame, iters: int = 1,
-    assign_dp: int = 6, cent_dp: int = 6,
-) -> DataFrame:
-    """Lloyd-refine a ``(cid, cv)`` centroid frame over ``(vec_id, v)``
-    vectors — the oracle-reproducible form of :func:`kmeans_centroids`
-    (r12 verdict item 3: balanced cells are what make nprobe/K scan
-    economics hold on skewed corpora; the md5-ordered seed set leaves
-    cell sizes uncontrolled).
+def _component_means(df: DataFrame, key: str) -> DataFrame:
+    """The M-step, ``(key, pos, m)``: per ``key``, the mean of each
+    component of the array column ``v``, rounded to ``CENT_DP`` so both
+    engines carry bit-identical centroids into the next assignment. A
+    posexplode + one partial-agg shuffle keyed on ``(key, pos)``:
+    O(rows*d) components in, O(keys*d) rows out."""
+    return (
+        df.select(key, F.posexplode("v").alias("pos", "x"))
+        .groupBy(key, "pos")
+        .agg(F.round(F.avg("x"), CENT_DP).alias("m"))
+    )
 
-    Each iteration: E-step = the broadcast-argmax cosine assignment
-    every IVF kernel uses (rounded to ``assign_dp`` before the argmax,
-    tie larger cid); M-step = per-(cell, dim) mean via posexplode + one
-    partial-agg shuffle — O(n*d) components in, O(K*d) rows out — with
-    each mean ROUNDED to ``cent_dp`` before reuse so both engines carry
-    bit-identical centroids into the next assignment (the unrounded
-    means of :func:`kmeans_centroids` are fine for injection but not
-    for a cross-engine value hash). Empty cells keep their previous
-    centroid. Fully declarative: the refined arrays are rebuilt with
-    array_sort(collect_list(struct(pos, m))) — no driver collect at
-    all, unlike :func:`kmeans_centroids`'s bounded O(K*d) one.
+
+def _mean_arrays(means: DataFrame, key: str, out: str) -> DataFrame:
+    """``(key, out)``: :func:`_component_means` rows reassembled into one
+    array per key in position order — array_sort(collect_list(struct)),
+    no driver collect."""
+    return (
+        means.groupBy(key)
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
+        .select(key, F.transform("pm", lambda s: s["m"]).alias(out))
+    )
+
+
+def lloyd_refine(e: DataFrame, cents: DataFrame, iters: int = 1) -> DataFrame:
+    """Lloyd-refine a ``(cid, cv)`` centroid frame over ``(vec_id, v)``
+    vectors — the package's k-means (r12 verdict item 3: balanced cells
+    are what make nprobe/K scan economics hold on skewed corpora; the
+    md5-ordered seed set leaves cell sizes uncontrolled).
+
+    Each iteration: E-step = :func:`ivf_assign_cells`; M-step =
+    :func:`_component_means` per cell, reassembled into arrays by
+    :func:`_mean_arrays`. Empty cells keep their previous centroid.
+    Fully declarative — no driver collect at all. Scale shape: every
+    iteration is O(n*K) assignment + one shuffle of O(n*d) components
+    partial-aggregated to O(K*d) rows.
     """
     for _ in range(iters):
-        assigned = ivf_assign_cells(e, cents, assign_dp=assign_dp)
-        comp = (
-            e.join(assigned, "vec_id")
-            .select("cell", F.posexplode("v").alias("pos", "x"))
-            .groupBy("cell", "pos")
-            .agg(F.round(F.avg("x"), cent_dp).alias("m"))
-        )
-        refined = (
-            comp.groupBy("cell")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select(
-                F.col("cell").alias("cid"),
-                F.transform("pm", lambda s: s["m"]).alias("rcv"),
-            )
+        means = _component_means(e.join(ivf_assign_cells(e, cents), ID_COL), "cell")
+        refined = _mean_arrays(means, "cell", "rcv").select(
+            F.col("cell").alias("cid"), "rcv"
         )
         cents = cents.join(refined, "cid", "left").select(
             "cid", F.coalesce("rcv", "cv").alias("cv")
@@ -1781,22 +1575,52 @@ def lloyd_refine(
     return cents
 
 
+def _seed_codebook(e: DataFrame, n_codes: int) -> DataFrame:
+    """``(code, cv)``: the first ``n_codes`` vectors by id as the PQ seed
+    codebook, codes 1-based to match array_position/list_position."""
+    return e.orderBy(ID_COL).limit(n_codes).select(
+        F.row_number().over(Window.orderBy(ID_COL)).alias("code"),
+        F.col("v").alias("cv"),
+    )
+
+
+def _pq_codes(e: DataFrame, cb: DataFrame, n_blocks: int, sub: int) -> DataFrame:
+    """``(vec_id, code_0..code_{B-1})``: per block, the ``(code, cv)``
+    codebook entry nearest by rounded block L2, ties to the lower code
+    (a min over ``(dist, code)`` structs). One broadcast scoring pass
+    against the small codebook + one per-vector partial aggregation."""
+    scored = e.crossJoin(F.broadcast(cb)).select(
+        ID_COL,
+        "code",
+        *[
+            _l2(_block("v", bi, sub), _block("cv", bi, sub)).alias(f"d_{bi}")
+            for bi in range(n_blocks)
+        ],
+    )
+    return scored.groupBy(ID_COL).agg(
+        *[
+            F.min(F.struct(F.col(f"d_{bi}"), F.col("code")))["code"]
+            .alias(f"code_{bi}")
+            for bi in range(n_blocks)
+        ]
+    )
+
+
 def pq_train_blocks(
-    e: DataFrame, cb: DataFrame, n_blocks: int = 4,
-    dim: int | None = None, dist_dp: int = 6, cent_dp: int = 6,
+    e: DataFrame, cb: DataFrame, n_blocks: int = 4, dim: int | None = None,
 ) -> DataFrame:
     """One k-means iteration PER BLOCK on a PQ codebook — the product-
     quantization analogue of :func:`lloyd_refine`: each code's block-
     ``bi`` codeword moves to the mean of the subvectors assigned to it
-    (assignment = rounded block-L2 argmin, tie lower code — the exact
-    rule :func:`ivf_pq_encode` ranks with), means rounded to
-    ``cent_dp`` so the oracle carries bit-identical codewords. Blocks
-    train INDEPENDENTLY (that is what makes PQ codes multiplicative:
-    8 codes x 4 blocks = 4096 distinct reconstructions from 32
-    codewords), so the returned frame keeps the ``(code, cv)`` shape —
-    ``cv``'s block ``bi`` slice is block ``bi``'s trained codeword —
-    and every downstream kernel (encode / LUT / ADC) runs unchanged on
-    it. Codes that capture no vectors in a block keep their seed slice.
+    (assignment = :func:`_pq_codes`, the exact rule
+    :func:`ivf_pq_encode` ranks with), means rounded to ``CENT_DP`` so
+    the oracle carries bit-identical codewords. Blocks train
+    INDEPENDENTLY (that is what makes PQ codes multiplicative: 8 codes x
+    4 blocks = 4096 distinct reconstructions from 32 codewords), so the
+    returned frame keeps the ``(code, cv)`` shape — ``cv``'s block
+    ``bi`` slice is block ``bi``'s trained codeword — and every
+    downstream kernel (encode / LUT / ADC) runs unchanged on it. Codes
+    that capture no vectors in a block keep their seed slice.
 
     Measured on the isotropic synthetic corpus (sf0.01, SCALE_SOAK
     round 13): recall@5 of the production config triples (0.02 -> 0.06
@@ -1811,50 +1635,16 @@ def pq_train_blocks(
     if dim is None:
         dim = _infer_dim(e)
     sub = dim // n_blocks
-
-    def block_d(bi: int):
-        vsl = F.slice(F.col("v"), bi * sub + 1, sub)
-        csl = F.slice(F.col("cv"), bi * sub + 1, sub)
-        return F.round(
-            F.aggregate(
-                F.zip_with(vsl, csl, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda s, x: s + x,
-            ),
-            dist_dp,
-        )
-
-    scored = e.crossJoin(F.broadcast(cb)).select(
-        "vec_id",
-        "code",
-        *[block_d(bi).alias(f"d_{bi}") for bi in range(n_blocks)],
-    )
-    codes = scored.groupBy("vec_id").agg(
-        *[
-            F.min(F.struct(F.col(f"d_{bi}"), F.col("code")))["code"]
-            .alias(f"code_{bi}")
-            for bi in range(n_blocks)
-        ]
-    )
-    ecb = e.join(codes, "vec_id")
+    ecb = e.join(_pq_codes(e, cb, n_blocks, sub), ID_COL)
     out = cb
     for bi in range(n_blocks):
-        blk = (
-            ecb.select(
-                F.col(f"code_{bi}").alias("code"),
-                F.posexplode(F.slice(F.col("v"), bi * sub + 1, sub)).alias(
-                    "pos", "x"
-                ),
-            )
-            .groupBy("code", "pos")
-            .agg(F.round(F.avg("x"), cent_dp).alias("m"))
-            .groupBy("code")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select(
-                "code", F.transform("pm", lambda s: s["m"]).alias(f"blk_{bi}")
-            )
+        blk = ecb.select(
+            F.col(f"code_{bi}").alias("code"), _block("v", bi, sub).alias("v")
         )
-        out = out.join(blk, "code", "left")
+        out = out.join(
+            _mean_arrays(_component_means(blk, "code"), "code", f"blk_{bi}"),
+            "code", "left",
+        )
     # O(codes) rows consumed by BOTH the encode pass and the ADC LUT —
     # pin the training result so each consumer doesn't re-run the
     # scoring pass + n_blocks posexplode shuffles (opt round 13: the
@@ -1865,10 +1655,7 @@ def pq_train_blocks(
         F.flatten(
             F.array(
                 *[
-                    F.coalesce(
-                        F.col(f"blk_{bi}"),
-                        F.slice(F.col("cv"), bi * sub + 1, sub),
-                    )
+                    F.coalesce(F.col(f"blk_{bi}"), _block("cv", bi, sub))
                     for bi in range(n_blocks)
                 ]
             )
@@ -1878,9 +1665,7 @@ def pq_train_blocks(
 
 def ivf_pq_build(
     emb: DataFrame, num_centroids: int = 32, n_blocks: int = 4,
-    n_codes: int = 8, id_col: str = "vec_id", vec_col: str = "embedding",
-    dim: int | None = None, assign_dp: int = 6, dist_dp: int = 6,
-    lloyd_iters: int = 0, cent_dp: int = 6,
+    n_codes: int = 8, dim: int | None = None, lloyd_iters: int = 0,
 ):
     """TRAIN + ENCODE for the persisted IVF-PQ index: returns
     ``(index, cents, cb)`` where ``index`` is the encoded corpus
@@ -1892,51 +1677,33 @@ def ivf_pq_build(
     production index sets 1), and ``cb`` the ``(code, cv)`` PQ codebook
     with 1-based codes matching array_position/list_position.
 
-    Scale shape: one O(n*K) broadcast argmax pass for cells (the
-    ivf_topk assignment dataflow) + the O(n*codes) map-only
-    :func:`pq_quantize` encode; both round before their arg-extremum
-    (ties: larger cid, lower code) so the oracle picks identically.
-    Each Lloyd iteration adds one more O(n*K) assignment + one O(n*d)
-    component shuffle partial-aggregated to O(K*d) rows. Shared by
-    ``llm_ann_ivf_pq_persist`` and the round-12 soak.
+    Scale shape: one O(n*K) broadcast argmax pass for cells + one
+    O(n*codes) broadcast pass for codes (:func:`ivf_pq_encode`); both
+    round before their arg-extremum (ties: larger cid, lower code) so
+    the oracle picks identically. Each Lloyd iteration adds one more
+    O(n*K) assignment + one O(n*d) component shuffle partial-aggregated
+    to O(K*d) rows. Shared by ``llm_ann_ivf_pq_persist`` and the
+    round-12 soak.
     """
-    from pyspark.sql import Window
-
-    e = emb.select(
-        F.col(id_col).alias("vec_id"), _as_double(vec_col).alias("v")
-    )
+    e = _embeddings(emb)
     if dim is None:
         dim = _infer_dim(e)
     cents = fixed_centroids(e, num_centroids)
     if lloyd_iters > 0:
-        cents = lloyd_refine(
-            e, cents, iters=lloyd_iters, assign_dp=assign_dp,
-            cent_dp=cent_dp,
         # consumed by the encode AND persisted/read separately: pin the
         # refinement result so each consumer doesn't re-run the E/M pass
-        ).localCheckpoint(eager=False)
-    cb = (
-        e.orderBy("vec_id")
-        .limit(n_codes)
-        .select(
-            F.row_number().over(Window.orderBy("vec_id")).alias("code"),
-            F.col("v").alias("cv"),
-        )
-        # n_codes rows consumed by encode + ADC LUT (+ codebook training
-        # in the trained-recall twin): pin so each consumer doesn't
-        # re-run the corpus sort/limit (see pq_train_blocks)
-        .localCheckpoint(eager=False)
-    )
-    index = ivf_pq_encode(
-        e, cents, cb, n_blocks=n_blocks, dim=dim,
-        assign_dp=assign_dp, dist_dp=dist_dp,
-    )
+        cents = lloyd_refine(e, cents, iters=lloyd_iters).localCheckpoint(eager=False)
+    # n_codes rows consumed by encode + ADC LUT (+ codebook training in
+    # the trained-recall twin): pin so each consumer doesn't re-run the
+    # corpus sort/limit (see pq_train_blocks)
+    cb = _seed_codebook(e, n_codes).localCheckpoint(eager=False)
+    index = ivf_pq_encode(e, cents, cb, n_blocks=n_blocks, dim=dim)
     return index, cents, cb
 
 
 def ivf_pq_encode(
     e: DataFrame, cents: DataFrame, cb: DataFrame, n_blocks: int = 4,
-    dim: int | None = None, assign_dp: int = 6, dist_dp: int = 6,
+    dim: int | None = None,
 ) -> DataFrame:
     """Encode ``(vec_id, v)`` vectors against FROZEN index artifacts —
     the daily-ingest half of the persisted-index lifecycle: new vectors
@@ -1946,131 +1713,53 @@ def ivf_pq_encode(
     make old and new codes incomparable). :func:`ivf_pq_build` is this
     function applied to training-time artifacts.
 
-    Both argmax (cell, tie larger cid) and per-block argmin (code, tie
-    lower code via min-struct) round before the extremum, mirroring the
+    Cells come from :func:`ivf_assign_cells` and codes from
+    :func:`_pq_codes`; both round before the extremum, mirroring the
     oracle's row_number/list_position. Map-only against two broadcast
-    frames — zero shuffles besides the final per-vector groupBys'
-    partial aggregation.
+    frames — zero shuffles besides the per-vector groupBys' partial
+    aggregation.
     """
     if dim is None:
         dim = _infer_dim(e)
-    sub = dim // n_blocks
-    assigned = ivf_assign_cells(e, cents, assign_dp=assign_dp)
-
-    def block_d(bi: int):
-        vsl = F.slice(F.col("v"), bi * sub + 1, sub)
-        csl = F.slice(F.col("cv"), bi * sub + 1, sub)
-        return F.round(
-            F.aggregate(
-                F.zip_with(vsl, csl, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda s, x: s + x,
-            ),
-            dist_dp,
-        )
-
-    scored = e.crossJoin(F.broadcast(cb)).select(
-        "vec_id",
-        "code",
-        *[block_d(bi).alias(f"d_{bi}") for bi in range(n_blocks)],
-    )
-    codes = scored.groupBy("vec_id").agg(
-        *[
-            F.min(F.struct(F.col(f"d_{bi}"), F.col("code")))["code"]
-            .alias(f"code_{bi}")
-            for bi in range(n_blocks)
-        ]
-    )
-    return assigned.join(codes, "vec_id").select(
-        "vec_id", *[f"code_{bi}" for bi in range(n_blocks)], "cell"
+    codes = _pq_codes(e, cb, n_blocks, dim // n_blocks)
+    return ivf_assign_cells(e, cents).join(codes, ID_COL).select(
+        ID_COL, *[f"code_{bi}" for bi in range(n_blocks)], "cell"
     )
 
 
-def ivf_pq_adc_search(
-    queries: DataFrame, codes: DataFrame, cents: DataFrame, cb: DataFrame,
-    dim: int, n_blocks: int = 4, nprobe: int = 2, topk: int = 5,
-    assign_dp: int = 6, dist_dp: int = 6,
-) -> DataFrame:
-    """ADC search over a (typically read-back) IVF-PQ index.
-
-    ``queries`` is ``(qid, qv)`` full-precision query vectors; ``codes``
-    / ``cents`` / ``cb`` are the stored index artifacts (the caller
-    reads them back — this function never touches the original corpus
-    floats, the asymmetric-distance contract).
-
-    Plan shape, scale-first: (1) probe — broadcast the K-row centroid
-    frame against the query batch, top-``nprobe`` cells per query by
-    rounded cosine (window, tie larger cid); (2) a bounded O(K) collect
-    of the DISTINCT probed cells becomes a literal IN filter, so the
-    index scan prunes unprobed cell PARTITIONS at plan time
-    (PartitionFilters — the point of persisting partitioned by cell);
-    (3) the per-query LUT (``queries x codes`` rows, each a rounded
-    block-L2 against the 8-row broadcast codebook) is materialized once
-    and broadcast into one join per block; (4) per-candidate distance
-    is ``n_blocks`` lookups summed left-to-right, rounded, ranked per
-    query by (adc_dist, vec_id) — TakeOrdered semantics via
-    row_number <= topk. Returns ``(qid, vec_id, rnk, adc_dist)``.
-    """
-    from pyspark.sql import Window
-
-    sub = dim // n_blocks
-    qs = queries.select(
-        "qid", "qv", norm(F.col("qv")).alias("qn")
-    )
-    probe = (
+def _probe_ranks(qs: DataFrame, cents: DataFrame) -> DataFrame:
+    """``(qid, cid, rn)``: every ``(cid, cv)`` centroid ranked per
+    ``(qid, qv, qn)`` query by rounded cosine (``ASSIGN_DP``), ties to
+    the larger cid — the IVF probe order. The K-row centroid frame is
+    broadcast against the query batch; the window holds K rows per
+    query."""
+    w = Window.partitionBy("qid").orderBy(F.desc("qsim"), F.desc("cid"))
+    return (
         qs.crossJoin(F.broadcast(cents.withColumn("ncv", norm(F.col("cv")))))
-        .select(
-            "qid",
-            "cid",
-            F.round(
-                dot(F.col("cv"), F.col("qv")) / (F.col("ncv") * F.col("qn")),
-                assign_dp,
-            ).alias("qsim"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(
-                    F.desc("qsim"), F.desc("cid")
-                )
-            ),
-        )
-        .filter(F.col("rn") <= nprobe)
-        .select("qid", "cid")
-        .localCheckpoint(eager=True)  # consumed twice: cell list + join
-    )
-    probed_cells = sorted(
-        r["cid"] for r in probe.select("cid").distinct().collect()
+        .select("qid", "cid", _cos("cv", "qv", "ncv", "qn", ASSIGN_DP).alias("qsim"))
+        .withColumn("rn", F.row_number().over(w))
     )
 
-    def lut_dist(bi: int):
-        qsl = F.slice(F.col("qv"), bi * sub + 1, sub)
-        csl = F.slice(F.col("cv"), bi * sub + 1, sub)
-        return F.round(
-            F.aggregate(
-                F.zip_with(qsl, csl, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda s, x: s + x,
-            ),
-            dist_dp,
-        )
 
-    luts = (
-        qs.crossJoin(F.broadcast(cb))
-        .select(
-            "qid",
-            "code",
-            *[lut_dist(bi).alias(f"ld_{bi}") for bi in range(n_blocks)],
-        )
-        # consumed once per block join: materialize the O(queries x
-        # codes) LUT once instead of re-scanning the query batch +
-        # codebook n_blocks times
-        .localCheckpoint(eager=False)
+def _pq_luts(qs: DataFrame, cb: DataFrame, n_blocks: int, sub: int) -> DataFrame:
+    """``(qid, code, ld_0..ld_{B-1})``: the ADC lookup table, one rounded
+    block L2 per (query, codebook entry, block) against the broadcast
+    codebook."""
+    return qs.crossJoin(F.broadcast(cb)).select(
+        "qid",
+        "code",
+        *[
+            _l2(_block("qv", bi, sub), _block("cv", bi, sub)).alias(f"ld_{bi}")
+            for bi in range(n_blocks)
+        ],
     )
 
-    cand = codes.filter(F.col("cell").isin(probed_cells)).join(
-        F.broadcast(probe), codes["cell"] == probe["cid"]
-    )
+
+def _adc(cand: DataFrame, luts: DataFrame, n_blocks: int, *keep: str) -> DataFrame:
+    """``(qid, *keep, vec_id, adc_dist)`` for ``(qid, vec_id,
+    code_0..)`` candidates: one broadcast LUT join per block, the
+    ``n_blocks`` lookups summed left to right and rounded to
+    ``DIST_DP``; a query never scores itself."""
     for bi in range(n_blocks):
         # LUT-side key columns get block-local aliases (q{bi}/c{bi}) so
         # the join never leaves a duplicate code_{bi} in the candidate
@@ -2088,17 +1777,54 @@ def ivf_pq_adc_search(
     adc = F.lit(0.0)
     for bi in range(n_blocks):
         adc = adc + F.col(f"ld_{bi}")
+    return cand.filter(F.col(ID_COL) != F.col("qid")).select(
+        "qid", *keep, ID_COL, F.round(adc, DIST_DP).alias("adc_dist")
+    )
+
+
+def ivf_pq_adc_search(
+    queries: DataFrame, codes: DataFrame, cents: DataFrame, cb: DataFrame,
+    dim: int, n_blocks: int = 4, nprobe: int = 2, topk: int = 5,
+) -> DataFrame:
+    """ADC search over a (typically read-back) IVF-PQ index.
+
+    ``queries`` is ``(qid, qv)`` full-precision query vectors; ``codes``
+    / ``cents`` / ``cb`` are the stored index artifacts (the caller
+    reads them back — this function never touches the original corpus
+    floats, the asymmetric-distance contract).
+
+    Plan shape, scale-first: (1) probe — :func:`_probe_ranks`, top-
+    ``nprobe`` cells per query; (2) a bounded O(K) collect of the
+    DISTINCT probed cells becomes a literal IN filter, so the index scan
+    prunes unprobed cell PARTITIONS at plan time (PartitionFilters — the
+    point of persisting partitioned by cell); (3) the per-query LUT
+    (:func:`_pq_luts`, ``queries x codes`` rows) is materialized once
+    and broadcast into one join per block (:func:`_adc`); (4) per-
+    candidate distance is ranked per query by (adc_dist, vec_id) —
+    TakeOrdered semantics via row_number <= topk. Returns ``(qid,
+    vec_id, rnk, adc_dist)``.
+    """
+    qs = queries.select("qid", "qv", norm(F.col("qv")).alias("qn"))
+    probe = (
+        _probe_ranks(qs, cents)
+        .filter(F.col("rn") <= nprobe)
+        .select("qid", "cid")
+        .localCheckpoint(eager=True)  # consumed twice: cell list + join
+    )
+    probed_cells = sorted(
+        r["cid"] for r in probe.select("cid").distinct().collect()
+    )
+    # consumed once per block join: materialize the O(queries x codes)
+    # LUT once instead of re-scanning the query batch + codebook
+    # n_blocks times
+    luts = _pq_luts(qs, cb, n_blocks, dim // n_blocks).localCheckpoint(eager=False)
+    cand = codes.filter(F.col("cell").isin(probed_cells)).join(
+        F.broadcast(probe), codes["cell"] == probe["cid"]
+    )
+    w = Window.partitionBy("qid").orderBy(F.asc("adc_dist"), F.asc(ID_COL))
     return (
-        cand.filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", F.round(adc, dist_dp).alias("adc_dist"))
-        .withColumn(
-            "rnk",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(
-                    F.asc("adc_dist"), F.asc("vec_id")
-                )
-            ),
-        )
+        _adc(cand, luts, n_blocks)
+        .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= topk)
-        .select("qid", "vec_id", "rnk", "adc_dist")
+        .select("qid", ID_COL, "rnk", "adc_dist")
     )

@@ -744,7 +744,7 @@ _CENTROID_SQL = """WITH e AS (
     tags=("llm", "similarity", "clustering"),
 )
 def llm_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.llm.similarity import dot, norm
+    from ..operators.llm.similarity import _cos, norm
 
     emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select(
@@ -769,7 +769,7 @@ def llm_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "label",
         "clabel",
-        F.round(dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("ncv")), 4).alias("cos"),
+        _cos("v", "cv", "nrm", "ncv").alias("cos"),
     )
     w = Window.partitionBy("vec_id").orderBy(F.desc("cos"), F.asc("clabel"))
     best = scored.withColumn("rn", F.row_number().over(w)).filter(

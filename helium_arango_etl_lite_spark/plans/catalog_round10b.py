@@ -304,9 +304,7 @@ def llm_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(Window.orderBy(F.desc("cos_sim"), F.asc("vec_id")))
         .alias("rank"),
     )
-    return similarity.rrf_fuse(
-        [lexr, vecr], id_col="doc_id", k0=_RRF_K0, k=_RRF_K
-    )
+    return similarity.rrf_fuse([lexr, vecr], k0=_RRF_K0, k=_RRF_K)
 
 
 # ---------------------------------------------------------------------------
@@ -381,9 +379,7 @@ def llm_eval_pr_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("label") == _PR_LABEL) & (F.col("vec_id") != 0)
     ).select("vec_id")
     cutoffs = list(range(_PR_STEP, _PR_MAX_K + 1, _PR_STEP))
-    return similarity.precision_recall_at_k(
-        ranked, positives, cutoffs, id_col="vec_id"
-    )
+    return similarity.precision_recall_at_k(ranked, positives, cutoffs)
 
 
 # ---------------------------------------------------------------------------
@@ -594,9 +590,7 @@ def llm_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ideal ranking (the query can't be its own retrieval result)
     labels = emb.filter(F.col("vec_id") != 0).select("vec_id", "label")
     cutoffs = list(range(_NDCG_STEP, _NDCG_MAX_K + 1, _NDCG_STEP))
-    return similarity.ndcg_at_k(
-        ranked, labels, _ndcg_discounts(), cutoffs, id_col="vec_id"
-    )
+    return similarity.ndcg_at_k(ranked, labels, _ndcg_discounts(), cutoffs)
 
 
 # ---------------------------------------------------------------------------

@@ -508,18 +508,13 @@ SELECT code, dim::BIGINT AS dim, val FROM (
     tags=("llm", "similarity", "ann", "iterative"),
 )
 def llm_pq_train_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.llm.similarity import _as_double, pq_train_blocks
+    from ..operators.llm.similarity import (
+        _as_double, _seed_codebook, pq_train_blocks,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select("vec_id", _as_double("embedding").alias("v"))
-    cb = (
-        e.orderBy("vec_id")
-        .limit(_PQ_CODES)
-        .select(
-            F.row_number().over(Window.orderBy("vec_id")).alias("code"),
-            F.col("v").alias("cv"),
-        )
-    )
+    cb = _seed_codebook(e, _PQ_CODES)
     tcb = pq_train_blocks(e, cb, n_blocks=_PQ_BLOCKS, dim=EMB_DIM)
     return tcb.select(
         "code", F.posexplode("cv").alias("pos", "val")
@@ -684,7 +679,8 @@ FROM hits GROUP BY 1"""
 )
 def llm_ann_ivf_pq_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.llm.similarity import (
-        _as_double, dot, ivf_pq_build, knn_join_sampled, norm,
+        _adc, _as_double, _pq_luts, _probe_ranks, ivf_pq_build,
+        knn_join_sampled, norm,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -697,67 +693,15 @@ def llm_ann_ivf_pq_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("qid") % _IPQ_QMOD == 0)
 
     # probe ranks ALL K cells per query (cell_rn 1..K) — one pass
-    probe = (
-        qs.withColumn("qn", norm(F.col("qv")))
-        .crossJoin(F.broadcast(cents.withColumn("ncv", norm(F.col("cv")))))
-        .select(
-            "qid",
-            "cid",
-            F.round(
-                dot(F.col("cv"), F.col("qv")) / (F.col("ncv") * F.col("qn")),
-                6,
-            ).alias("qsim"),
-        )
-        .withColumn(
-            "cell_rn",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(
-                    F.desc("qsim"), F.desc("cid")
-                )
-            ),
-        )
-        .select("qid", "cid", "cell_rn")
-    )
-
-    sub = EMB_DIM // _PQ_BLOCKS
-
-    def lut_dist(bi: int):
-        qsl = F.slice(F.col("qv"), bi * sub + 1, sub)
-        csl = F.slice(F.col("cv"), bi * sub + 1, sub)
-        return F.round(
-            F.aggregate(
-                F.zip_with(qsl, csl, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda s, x: s + x,
-            ),
-            6,
-        )
-
-    luts = qs.crossJoin(F.broadcast(cb)).select(
-        "qid",
-        "code",
-        *[lut_dist(bi).alias(f"ld_{bi}") for bi in range(_PQ_BLOCKS)],
+    probe = _probe_ranks(qs.withColumn("qn", norm(F.col("qv"))), cents).select(
+        "qid", "cid", F.col("rn").alias("cell_rn")
     )
     cand = index.join(F.broadcast(probe), index["cell"] == probe["cid"]).drop(
         "cid"
     )
-    for bi in range(_PQ_BLOCKS):
-        lb = luts.select(
-            F.col("qid").alias(f"q{bi}"),
-            F.col("code").alias(f"c{bi}"),
-            f"ld_{bi}",
-        )
-        cand = cand.join(
-            F.broadcast(lb),
-            (F.col("qid") == F.col(f"q{bi}"))
-            & (F.col(f"code_{bi}") == F.col(f"c{bi}")),
-        ).drop(f"q{bi}", f"c{bi}")
-    adc = F.lit(0.0)
-    for bi in range(_PQ_BLOCKS):
-        adc = adc + F.col(f"ld_{bi}")
-    cand = cand.filter(F.col("vec_id") != F.col("qid")).select(
-        "qid", "cell_rn", "vec_id", F.round(adc, 6).alias("adc_dist")
-    ).localCheckpoint(eager=False)  # one scan feeds every nprobe filter
+    luts = _pq_luts(qs, cb, _PQ_BLOCKS, EMB_DIM // _PQ_BLOCKS)
+    # one scan feeds every nprobe filter
+    cand = _adc(cand, luts, _PQ_BLOCKS, "cell_rn").localCheckpoint(eager=False)
 
     nps = spark.createDataFrame(
         [(p,) for p in _SWEEP_NPROBES], "nprobe long"

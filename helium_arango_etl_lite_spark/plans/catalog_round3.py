@@ -678,29 +678,14 @@ GROUP BY 1, 2"""
     tags=("llm", "similarity", "iterative"),
 )
 def llm_kmeans_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.llm.similarity import _as_double, dot, norm
+    from ..operators.llm.similarity import _component_means, _embeddings
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", _as_double("embedding").alias("v")).withColumn(
-        "nrm", norm(F.col("v"))  # once per row, not per centroid
-    )
-    cents = similarity.fixed_centroids(e.drop("nrm"), IVF_K)
-    scored = e.crossJoin(
-        F.broadcast(cents.withColumn("ncv", norm(F.col("cv"))))
-    ).select(
-        "vec_id",
-        "cid",
-        F.round(dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("ncv")), 6).alias("asim"),
-    )
-    assigned = scored.groupBy("vec_id").agg(
-        F.max(F.struct("asim", "cid"))["cid"].alias("cell")
-    )
-    cells = e.join(assigned, "vec_id")
-    comp = cells.select(
-        "cell", F.posexplode("v").alias("pos", "x")
-    ).select("cell", (F.col("pos") + 1).cast("long").alias("dim"), "x")
-    return comp.groupBy("cell", "dim").agg(
-        F.round(F.avg("x"), 6).alias("mean_val")
+    e = _embeddings(load_table(spark, sf_dir, "embeddings"))
+    cents = similarity.fixed_centroids(e, IVF_K)
+    assigned = similarity.ivf_assign_cells(e, cents)
+    return _component_means(e.join(assigned, "vec_id"), "cell").select(
+        "cell", (F.col("pos") + 1).cast("long").alias("dim"),
+        F.col("m").alias("mean_val"),
     )
 
 

@@ -165,35 +165,36 @@ def test_sentence_split_udtf_matches_posexplode(spark):
 
 
 def test_knn_join_engines_agree(spark, sf_dir):
-    """The GEMM-based Arrow engine and the JVM expression engine must
-    produce identical neighbour sets, similarities, and ranks."""
-    from helium_arango_etl_lite_spark.operators.llm.similarity import knn_join
+    """knn_join's GEMM-based Arrow path and the JVM expression reference
+    must produce identical neighbour sets, similarities, and ranks."""
+    from helium_arango_etl_lite_spark.operators.llm.similarity import (
+        _knn_join_expr, knn_join,
+    )
     from helium_arango_etl_lite_spark.plans.registry import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    a = sorted(tuple(r) for r in knn_join(emb, k=3, engine="arrow").collect())
-    b = sorted(tuple(r) for r in knn_join(emb, k=3, engine="expr").collect())
+    a = sorted(tuple(r) for r in knn_join(emb, k=3).collect())
+    b = sorted(tuple(r) for r in _knn_join_expr(emb, k=3).collect())
     assert a == b
 
 
-def test_knn_join_auto_routes_by_corpus_size(spark, sf_dir):
-    """engine='auto' must run the exact arrow GEMM while the corpus fits
-    the broadcast budget and degrade to the bucketed LSH-candidate form
+def test_knn_join_auto_routes_by_corpus_size(spark, sf_dir, monkeypatch):
+    """knn_join must run the exact arrow GEMM while the corpus fits the
+    broadcast budget and degrade to the bucketed LSH-candidate form
     (documented-approximate, no driver collect) above it."""
+    from helium_arango_etl_lite_spark.operators.llm import similarity
     from helium_arango_etl_lite_spark.operators.llm.similarity import (
-        knn_join, knn_join_bucketed,
+        _knn_join_expr, knn_join, knn_join_bucketed,
     )
     from helium_arango_etl_lite_spark.plans.registry import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    exact = sorted(tuple(r) for r in knn_join(emb, k=3, engine="arrow").collect())
-    auto_small = sorted(tuple(r) for r in knn_join(emb, k=3, engine="auto").collect())
+    exact = sorted(tuple(r) for r in _knn_join_expr(emb, k=3).collect())
+    auto_small = sorted(tuple(r) for r in knn_join(emb, k=3).collect())
     assert auto_small == exact  # under the threshold: identical to exact
 
-    routed = sorted(
-        tuple(r)
-        for r in knn_join(emb, k=3, engine="auto", max_broadcast_rows=1).collect()
-    )
+    monkeypatch.setattr(similarity, "MAX_BROADCAST_ROWS", 1)
+    routed = sorted(tuple(r) for r in knn_join(emb, k=3).collect())
     bucketed = sorted(
         tuple(r) for r in knn_join_bucketed(emb, k=3).collect()
     )
@@ -261,25 +262,28 @@ def test_semdedup_cell_cap_bounds_pairing(spark, sf_dir):
     assert huge == base
 
 
-def test_knn_join_auto_degradation_warns(spark, sf_dir):
-    """Crossing max_broadcast_rows flips the contract exact->approximate;
+def test_knn_join_auto_degradation_warns(spark, sf_dir, monkeypatch):
+    """Crossing MAX_BROADCAST_ROWS flips the contract exact->approximate;
     the routing must surface that (ADVICE r4) instead of silently
     returning possibly-short neighbour lists."""
     import warnings
 
+    from helium_arango_etl_lite_spark.operators.llm import similarity
     from helium_arango_etl_lite_spark.operators.llm.similarity import knn_join
     from helium_arango_etl_lite_spark.plans.registry import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    with warnings.catch_warnings(record=True) as rec:
-        warnings.simplefilter("always")
-        knn_join(emb, k=3, engine="auto", max_broadcast_rows=1)
+    with monkeypatch.context() as m:
+        m.setattr(similarity, "MAX_BROADCAST_ROWS", 1)
+        with warnings.catch_warnings(record=True) as rec:
+            warnings.simplefilter("always")
+            knn_join(emb, k=3)
     assert any("exact->approximate" in str(w.message) for w in rec)
 
     # below the threshold: no degradation warning
     with warnings.catch_warnings(record=True) as rec:
         warnings.simplefilter("always")
-        knn_join(emb, k=3, engine="auto")
+        knn_join(emb, k=3)
     assert not any("exact->approximate" in str(w.message) for w in rec)
 
 
@@ -308,18 +312,19 @@ def test_bucketed_dim_inference(spark, sf_dir):
 
 
 def test_kmeans_centroids_injection(spark, sf_dir):
-    """kmeans_centroids returns a K-row (cid, cv) frame that injects
-    directly into the IVF family (r4 verdict task 5: 'learn the
-    centroids, same dataflow'). K and dim must be preserved, empty
-    cells must keep a non-null centroid, and semdedup/ivf_topk must
-    accept the learned frame unchanged."""
+    """Lloyd k-means (lloyd_refine over a fixed_centroids seed) returns a
+    K-row (cid, cv) frame that injects directly into the IVF family (r4
+    verdict task 5: 'learn the centroids, same dataflow'). K and dim
+    must be preserved, empty cells must keep a non-null centroid, and
+    semdedup/ivf_topk must accept the learned frame unchanged."""
     from helium_arango_etl_lite_spark.operators.llm.similarity import (
-        ivf_topk, kmeans_centroids, semdedup,
+        _embeddings, fixed_centroids, ivf_topk, lloyd_refine, semdedup,
     )
     from helium_arango_etl_lite_spark.plans.registry import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = kmeans_centroids(emb, k=8, iterations=2)
+    e = _embeddings(emb)
+    cents = lloyd_refine(e, fixed_centroids(e, 8), iters=2)
     rows = cents.collect()
     assert len(rows) == 8
     assert all(r["cv"] is not None and len(r["cv"]) == 64 for r in rows)
@@ -331,13 +336,14 @@ def test_kmeans_centroids_injection(spark, sf_dir):
     assert sd.count() == emb.count()
 
 
-def test_knn_join_broadcast_threshold_is_byte_budget(spark, sf_dir):
+def test_knn_join_broadcast_threshold_is_byte_budget(spark, sf_dir, monkeypatch):
     """The auto-route threshold must be derived in BYTES (r8 verdict
     item 4): a high-dim corpus with few rows must route approximate
     under a small byte budget — the unit the broadcast actually fails
     in — while the same rows at default budget route exact."""
     import warnings as _w
 
+    from helium_arango_etl_lite_spark.operators.llm import similarity
     from helium_arango_etl_lite_spark.operators.llm.similarity import (
         knn_join,
     )
@@ -350,10 +356,11 @@ def test_knn_join_broadcast_threshold_is_byte_budget(spark, sf_dir):
     # row_bytes = dim*8 + 16, so (n-1) rows' worth of budget must route
     # approximate even though the ROW count is tiny
     small_budget = (dim * 8 + 16) * (n - 1)
-    with _w.catch_warnings(record=True) as rec:
-        _w.simplefilter("always")
-        knn_join(emb, k=3, engine="auto",
-                 broadcast_budget_bytes=small_budget)
+    with monkeypatch.context() as m:
+        m.setattr(similarity, "BROADCAST_BUDGET_BYTES", small_budget)
+        with _w.catch_warnings(record=True) as rec:
+            _w.simplefilter("always")
+            knn_join(emb, k=3)
     msgs = [str(w.message) for w in rec]
     assert any("exact->approximate" in m for m in msgs)
     # the decision surfaces its byte math: budget and per-row bytes
@@ -363,5 +370,5 @@ def test_knn_join_broadcast_threshold_is_byte_budget(spark, sf_dir):
     # same corpus, default 2 GiB budget: routes exact, no warning
     with _w.catch_warnings(record=True) as rec:
         _w.simplefilter("always")
-        knn_join(emb, k=3, engine="auto")
+        knn_join(emb, k=3)
     assert not any("exact->approximate" in str(w.message) for w in rec)

@@ -11,7 +11,7 @@ import json
 import os
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import Phase, example, given, settings
 from hypothesis import strategies as st
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
@@ -32,6 +32,7 @@ from helium_arango_etl_lite_spark.streaming import (
 )
 from helium_arango_etl_lite_spark.streaming import follow, service
 from helium_arango_etl_lite_spark.streaming.service import run_service
+from helium_arango_etl_lite_spark.streaming.sink import has_data_files
 
 NS = 1_000_000_000
 
@@ -272,15 +273,21 @@ def test_gateway_inventory_source(spark, tmp_path):
 def _assert_mixed_store(spark, out, heights):
     """The exact store of the mixed mock chain over ``heights``: one
     payment_v1 per height, one poc_receipts_v1 (two witness edges) per third
-    height, and the payer/payee account set — every edge once."""
-    payments = spark.read.parquet(str(out / "payments")).collect()
+    height, and the payer/payee account set — every edge once. A table the
+    sink never created (no batch had rows for it) reads as empty."""
+
+    def rows(table):
+        path = str(out / table)
+        return spark.read.parquet(path).collect() if has_data_files(path) else []
+
+    payments = rows("payments")
     assert sorted(r["block"] for r in payments) == list(heights)
-    receipts = spark.read.parquet(str(out / "poc_receipts")).collect()
+    receipts = rows("poc_receipts")
     assert sorted(r["block"] for r in receipts) == [
         h for h in heights if h % 3 == 0 for _ in (0, 1)
     ]
     assert len({r["_key"] for r in receipts}) == len(receipts)
-    accounts = [r["_key"] for r in spark.read.parquet(str(out / "accounts")).collect()]
+    accounts = [r["_key"] for r in rows("accounts")]
     assert sorted(accounts) == sorted(
         {f"acct{h % 97}" for h in heights} | {f"acct{(h * 7) % 89}" for h in heights}
     )
@@ -322,13 +329,21 @@ def test_warm_batch_runs_four_spark_jobs(spark, tmp_path):
     _assert_mixed_store(spark, out, range(1, 97))
 
 
-@settings(max_examples=4, deadline=None)
+# No shrink phase: a failing example is reported as found. Shrinking
+# re-runs process_batch dozens of times and turned a ~50 s pass into a
+# ~385 s failure; the check itself is unchanged.
+@settings(
+    max_examples=4, deadline=None,
+    phases=(Phase.explicit, Phase.reuse, Phase.generate),
+)
 @given(
     lo=st.integers(7200 - 64, 7200 + 8),
-    n=st.integers(3, 64),  # at least one receipt height: every table exists
+    n=st.integers(1, 64),
     cuts=st.sets(st.integers(1, 63), max_size=3),
     replayed=st.integers(0, 4),
 )
+# one height and no receipt: the sink never creates poc_receipts
+@example(lo=7136, n=1, cuts=set(), replayed=0)
 def test_any_split_and_replayed_prefix_give_the_chain(spark, tmp_path_factory, lo, n, cuts, replayed):
     """Split a height range of the mixed chain (which may straddle a bucket
     boundary) into batches at ``cuts``, then replay the heights of the

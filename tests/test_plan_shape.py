@@ -52,6 +52,31 @@ def test_topk_avoids_global_sort(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan
 
 
+def test_topk_cosine_scans_against_one_broadcast_query(spark, sf_dir):
+    """llm_topk_cosine (a query_mix query) scans the corpus once against
+    the broadcast query row: top-10 by TakeOrderedAndProject, one
+    BroadcastExchange carrying the query vector with its norm hoisted
+    in, no hash shuffle, and one dot fold per scanned row in the
+    projection above the nested-loop join."""
+    plan = plan_of(spark, sf_dir, "llm_topk_cosine")
+    assert re.search(
+        r"\(\d+\) TakeOrderedAndProject\nInput [^\n]*\nArguments: 10, ", plan
+    )
+    assert len(re.findall(r"^\(\d+\) BroadcastExchange$", plan, re.M)) == 1
+    assert re.search(
+        r"\(\d+\) BroadcastExchange\nInput \[2\]: \[qv#\d+, qn#\d+\]", plan
+    )
+    assert "hashpartitioning" not in plan
+    above = re.search(
+        r"\+- Project \((\d+)\)\n\s*\+- BroadcastNestedLoopJoin", plan
+    )
+    assert above, plan
+    proj = re.search(
+        rf"\n\({above.group(1)}\) Project\nOutput [^\n]*", plan
+    ).group(0)
+    assert proj.count("zip_with(") == 1
+
+
 def test_aggregation_is_partial_then_final(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "agg_payment_volume")
     # map-side partial agg before the shuffle, final after: two HashAggregates

@@ -151,7 +151,7 @@ def test_rrf_fuse_integer_scores(spark):
     b = spark.createDataFrame([(3, 1), (1, 2)], "doc_id long, rank long")
     got = {
         r.doc_id: (r.n_systems, r.rrf9)
-        for r in rrf_fuse([a, b], id_col="doc_id", k0=60, k=10).collect()
+        for r in rrf_fuse([a, b], k0=60, k=10).collect()
     }
     assert got == {
         1: (2, 1_000_000_000 // 61 + 1_000_000_000 // 62),

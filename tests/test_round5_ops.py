@@ -402,7 +402,7 @@ def test_knn_join_sampled_matches_full_exact(spark, sf_dir):
 
     e = load_table(spark, sf_dir, "embeddings")
     full = (
-        similarity.knn_join(e, k=3, engine="arrow")
+        similarity.knn_join(e, k=3)
         .filter(F.pmod(F.col("qid"), F.lit(4)) == 0)
     )
     sampled = similarity.knn_join_sampled(e, k=3, sample_mod=4)
@@ -411,17 +411,18 @@ def test_knn_join_sampled_matches_full_exact(spark, sf_dir):
     assert a == b
 
 
-def test_knn_join_sampled_caps_broadcast_side(spark, sf_dir):
+def test_knn_join_sampled_caps_broadcast_side(spark, sf_dir, monkeypatch):
     """The query sample collect must be bounded: exceeding
-    max_sample_rows raises instead of silently collecting the corpus."""
+    MAX_SAMPLE_ROWS raises instead of silently collecting the corpus."""
     import pytest
 
     from helium_arango_etl_lite_spark.operators.llm import similarity
     from helium_arango_etl_lite_spark.plans.registry import load_table
 
     e = load_table(spark, sf_dir, "embeddings")
-    with pytest.raises(ValueError, match="max_sample_rows"):
-        similarity.knn_join_sampled(e, k=3, sample_mod=1, max_sample_rows=5)
+    monkeypatch.setattr(similarity, "MAX_SAMPLE_ROWS", 5)
+    with pytest.raises(ValueError, match="MAX_SAMPLE_ROWS"):
+        similarity.knn_join_sampled(e, k=3, sample_mod=1)
 
 
 def test_knn_join_sampled_empty_sample_returns_empty(spark, sf_dir):

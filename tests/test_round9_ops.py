@@ -264,7 +264,7 @@ def test_graph_route_recall_on_clustered_corpus(spark):
         emb, k=5, hops=4, beam=12, n_entries=6, entry_mod=16,
         query_mod=25, edge_k=8, num_planes=3, seeds=(7, 11), dim=64,
     ).toPandas()
-    exact = knn_join(emb, k=5, engine="arrow").toPandas()
+    exact = knn_join(emb, k=5).toPandas()
     qset = set(route["query_id"])
     ex = exact[exact["qid"].isin(qset)].groupby("qid")["nid"].apply(set)
     got = route.groupby("query_id")["nid"].apply(set)

@@ -13,6 +13,11 @@ entry (no execution) and flag the 100 TB anti-patterns:
 
 Usage:  python tools/plan_audit.py [--json PLAN_AUDIT.json] [name ...]
 
+It audits the checkout it lives in, from any working directory: the repo
+root is put on the driver's path and on ``PYTHONPATH`` for the Python
+workers. The data comes from ``SPARK_GRAFT_TEST_SF_DIR`` (default as in
+``tests/conftest.py``).
+
 Exit code 1 iff a non-whitelisted flag fires — usable as a regression
 gate next to the plan-shape pytest file (which pins specific shapes;
 this sweeps everything, including entries added in a hurry).
@@ -21,11 +26,17 @@ from __future__ import annotations
 
 import io
 import json
+import os
 import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python UDF workers import the package too; they inherit the environment
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from helium_arango_etl_lite_spark.plans.queries import QUERIES  # noqa: E402
 from helium_arango_etl_lite_spark.session import get_spark  # noqa: E402
@@ -158,6 +169,7 @@ def main() -> int:
         out_json = args[i + 1]
         args = args[:i] + args[i + 2:]
     sf_dir = "/root/testdata/sf0.001"
+    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", sf_dir)  # as tests/conftest.py
     names = args or [
         n for n in QUERIES
         if not n.startswith(REPLAY_OK_PREFIXES)
