@@ -24,19 +24,18 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 
-def canonical_md5_key(*cols: Column | str, null_token: str = "\x00") -> Column:
-    """MD5 over a ``|``-joined rendering of ``cols`` (engine canonical form).
+def canonical_md5_key(*cols: str) -> Column:
+    """MD5 over a ``|``-joined rendering of the columns named ``cols``
+    (engine canonical form).
 
     ``concat_ws`` skips NULLs, which would make ``(a, NULL, b)`` collide with
-    ``(a, b)``; each column is therefore coalesced to a sentinel first so
-    NULL is a distinct value. Stays fully JVM-side (no UDF).
+    ``(a, b)``; each column is therefore coalesced to ``chr(0)`` first so
+    NULL is a distinct value. Stays fully JVM-side (no UDF), and is built as
+    one SQL expression, so the driver pays one call however many columns
+    are keyed.
     """
-    safe = [
-        F.coalesce(F.col(c).cast("string") if isinstance(c, str) else c.cast("string"),
-                   F.lit(null_token))
-        for c in cols
-    ]
-    return F.md5(F.concat_ws("|", *safe))
+    safe = ", ".join(f"coalesce(CAST(`{c}` AS STRING), chr(0))" for c in cols)
+    return F.expr(f"md5(concat_ws('|', {safe}))")
 
 
 def reference_key_of_dict(d: dict) -> str:

@@ -10,9 +10,16 @@ Input shapes (see ``schemas.py``):
 
 :func:`graph_documents` does that join once per batch, parses each
 payload once, keeps the result persisted while the batch's sinks run, and
-derives all three outputs from it. It carries no broadcast hint: a
-follower batch plans its joins under its own execution profile
-(``streaming/follow.py``), and any other caller leaves the choice to AQE.
+derives all three outputs from it, each with one generator (``inline`` or
+``explode``) over the persisted frame, so each sink's plan scans it once.
+It carries no broadcast hint: a follower batch plans its joins under its
+own execution profile (``streaming/follow.py``), and any other caller
+leaves the choice to AQE.
+
+Every projection is constant SQL text built at import. A follower batch is
+small enough that building its plans on the driver costs as much as
+running them, and each ``F.col``-style call is a round trip to the JVM;
+a ``selectExpr`` over fixed strings is one call per string.
 
 Output shapes (FIXTURES.md F6):
  * payment edges  ``_from _to hash amount block timestamp _key``
@@ -43,18 +50,84 @@ PAYMENT_TYPES = ("payment_v1", "payment_v2")
 RECEIPT_TYPES = ("poc_receipts_v1", "poc_receipts_v2")
 
 
-def explode_txn_stubs(blocks: DataFrame) -> DataFrame:
-    """Block rows -> one row per transaction stub, block header attached.
+def _in(types: tuple[str, ...]) -> str:
+    return ", ".join(f"'{t}'" for t in types)
 
-    Equivalent of the reference's ``for txn in block.transactions`` loop
-    (follower.py:143); block-level height/time ride along so no later join
-    is needed (follower.py:153-154).
-    """
-    return blocks.select(
-        F.col("height").alias("block"),
-        F.col("time").alias("block_time"),
-        F.explode("transactions").alias("txn"),
-    ).select("block", "block_time", F.col("txn.hash").alias("txn_hash"), F.col("txn.type").alias("txn_type"))
+
+_HANDLED = f"IN ({_in(PAYMENT_TYPES + RECEIPT_TYPES)})"
+
+#: One row per txn stub, block header attached — the reference's ``for txn
+#: in block.transactions`` loop (follower.py:143); block height and time
+#: ride along so no later join is needed (follower.py:153-154).
+STUB_COLS = ("height AS block", "time AS block_time", "inline(transactions) AS (txn_hash, txn_type)")
+#: The joined stub and envelope, payload parsed once by its type's schema.
+IN_BLOCK_COLS = (
+    "block",
+    "block_time",
+    "txn_hash",
+    "type",
+    f"CASE WHEN type = 'payment_v1' THEN from_json(json, '{PAYMENT_V1_SCHEMA.simpleString()}') END AS pay1",
+    f"CASE WHEN type = 'payment_v2' THEN from_json(json, '{PAYMENT_V2_SCHEMA.simpleString()}') END AS pay2",
+    f"CASE WHEN type IN ({_in(RECEIPT_TYPES)}) "
+    f"THEN from_json(json, '{POC_RECEIPTS_SCHEMA.simpleString()}') END AS poc",
+)
+
+#: payment_v1 -> one edge per txn (follower.py:145-159); payment_v2 -> one
+#: edge per element of its ``payments`` array (follower.py:160-176).
+PAYMENT_ROWS = (
+    "block",
+    "block_time",
+    """inline(CASE type
+        WHEN 'payment_v1' THEN array(named_struct(
+            'payer', pay1.payer, 'payee', pay1.payee, 'hash', pay1.hash, 'amount', pay1.amount))
+        WHEN 'payment_v2' THEN transform(pay2.payments, p -> named_struct(
+            'payer', pay2.payer, 'payee', p.payee, 'hash', pay2.hash, 'amount', p.amount))
+    END)""",
+)
+PAYMENT_COLS = (
+    "concat('accounts/', payer) AS _from",
+    "concat('accounts/', payee) AS _to",
+    "hash",
+    "amount",
+    "block",
+    "block_time AS timestamp",
+)
+
+#: One row per witness of ``path[0]`` — only the first path element is
+#: read, as in the reference (follower.py:180).
+WITNESS_ROWS = (
+    "block",
+    "txn_hash",
+    "poc.path[0].challengee AS challengee",
+    "poc.path[0].receipt AS receipt",
+    "explode(poc.path[0].witnesses) AS w",
+)
+#: Null-receipt handling: ``tx_power`` / ``processing_time_s`` are NULL when
+#: the path element has no receipt struct — the columnar equivalent of the
+#: reference's try/except AttributeError (follower.py:194-198).
+WITNESS_COLS = (
+    "concat('hotspots/', challengee) AS _from",
+    "concat('hotspots/', w.gateway) AS _to",
+    "w.frequency AS frequency",
+    "w.datarate AS datarate",
+    "w.is_valid AS is_valid",
+    "w.signal AS signal",
+    "w.snr AS snr",
+    "w.timestamp AS timestamp",
+    "txn_hash AS hash",
+    "block",
+    "receipt.tx_power AS tx_power",
+    "CASE WHEN receipt IS NOT NULL THEN (w.timestamp - receipt.timestamp) / 1e9 END AS processing_time_s",
+)
+
+#: Payer and payees of every payment (follower.py:147,156,162,173). A
+#: payment_v2 payer counts even when its ``payments`` array is empty or
+#: unreadable.
+ACCOUNT_KEYS = """explode(CASE type
+    WHEN 'payment_v1' THEN array(pay1.payer, pay1.payee)
+    WHEN 'payment_v2' THEN concat(
+        array(pay2.payer), coalesce(transform(pay2.payments, p -> p.payee), array()))
+END) AS _key"""
 
 
 def _in_block_txns(blocks: DataFrame, txns: DataFrame) -> DataFrame:
@@ -70,22 +143,10 @@ def _in_block_txns(blocks: DataFrame, txns: DataFrame) -> DataFrame:
     exception — the engine's stand-in for the reference's ValidationError
     retry (follower.py:66-69).
     """
-    types = PAYMENT_TYPES + RECEIPT_TYPES
-    stubs = explode_txn_stubs(blocks).filter(F.col("txn_type").isin(*types))
-    envelopes = txns.filter(F.col("type").isin(*types))
-    joined = stubs.join(
-        envelopes,
-        (stubs["txn_hash"] == envelopes["hash"]) & (stubs["txn_type"] == envelopes["type"]),
-    )
-    return joined.select(
-        "block",
-        "block_time",
-        "txn_hash",
-        "type",
-        F.when(F.col("type") == "payment_v1", F.from_json("json", PAYMENT_V1_SCHEMA)).alias("pay1"),
-        F.when(F.col("type") == "payment_v2", F.from_json("json", PAYMENT_V2_SCHEMA)).alias("pay2"),
-        F.when(F.col("type").isin(*RECEIPT_TYPES), F.from_json("json", POC_RECEIPTS_SCHEMA)).alias("poc"),
-    )
+    stubs = blocks.selectExpr(*STUB_COLS).where(f"txn_type {_HANDLED}")
+    envelopes = txns.where(f"type {_HANDLED}")
+    joined = stubs.join(envelopes, F.expr("txn_hash = hash AND txn_type = type"))
+    return joined.selectExpr(*IN_BLOCK_COLS)
 
 
 @contextmanager
@@ -93,107 +154,19 @@ def graph_documents(blocks: DataFrame, txns: DataFrame) -> Iterator[tuple[DataFr
     """Yield one batch's ``(payment edges, witness edges, account
     vertices)``, all derived from one :func:`_in_block_txns` frame that
     stays persisted until the block exits, so the stub-envelope join and
-    the payload parse run once for the three sinks."""
+    the payload parse run once for the three sinks.
+
+    Output shapes are in the module docstring. Edges are keyed and
+    deduplicated by key — the onDuplicate=ignore contract of
+    follower.py:205-207 — and account vertices are distinct."""
     in_block = _in_block_txns(blocks, txns).persist()
     try:
-        yield _payment_edges(in_block), _witness_edges(in_block), _account_vertices(in_block)
+        payments = in_block.selectExpr(*PAYMENT_ROWS).selectExpr(*PAYMENT_COLS)
+        witnesses = in_block.selectExpr(*WITNESS_ROWS).selectExpr(*WITNESS_COLS)
+        yield (
+            payments.withColumn("_key", canonical_md5_key(*PAYMENT_KEY_COLS)).dropDuplicates(["_key"]),
+            witnesses.withColumn("_key", canonical_md5_key(*RECEIPT_KEY_COLS)).dropDuplicates(["_key"]),
+            in_block.selectExpr(ACCOUNT_KEYS).distinct(),
+        )
     finally:
         in_block.unpersist()
-
-
-def _payment_edges(txns: DataFrame) -> DataFrame:
-    """payment_v1 -> one edge per txn (follower.py:145-159); payment_v2 ->
-    one edge per element of its ``payments`` array (follower.py:160-176).
-    Keyed and deduplicated — the onDuplicate=ignore contract of
-    follower.py:205-207."""
-    v1 = txns.filter(F.col("type") == "payment_v1").select(
-        F.col("pay1.payer").alias("payer"),
-        F.col("pay1.payee").alias("payee"),
-        F.col("pay1.hash").alias("hash"),
-        F.col("pay1.amount").alias("amount"),
-        "block",
-        "block_time",
-    )
-    v2 = txns.filter(F.col("type") == "payment_v2").select(
-        F.col("pay2.payer").alias("payer"),
-        F.col("pay2.hash").alias("hash"),
-        "block",
-        "block_time",
-        F.explode("pay2.payments").alias("p"),
-    ).select(
-        "payer",
-        F.col("p.payee").alias("payee"),
-        "hash",
-        F.col("p.amount").alias("amount"),
-        "block",
-        "block_time",
-    )
-    edges = v1.unionByName(v2).select(
-        F.concat(F.lit("accounts/"), F.col("payer")).alias("_from"),
-        F.concat(F.lit("accounts/"), F.col("payee")).alias("_to"),
-        "hash",
-        "amount",
-        "block",
-        F.col("block_time").alias("timestamp"),
-    )
-    return edges.withColumn("_key", canonical_md5_key(*PAYMENT_KEY_COLS)).dropDuplicates(["_key"])
-
-
-def _witness_edges(txns: DataFrame) -> DataFrame:
-    """poc_receipts v1/v2 -> one edge per witness (follower.py:177-202).
-
-    Only ``path[0]`` is read, as in the reference (follower.py:180).
-
-    Null-receipt handling: ``tx_power`` / ``processing_time_s`` are NULL when
-    the path element has no receipt struct — the columnar equivalent of the
-    reference's try/except AttributeError (follower.py:194-198).
-    """
-    exploded = txns.filter(F.col("type").isin(*RECEIPT_TYPES)).select(
-        "block",
-        "txn_hash",
-        F.col("poc.path").getItem(0).alias("pe"),
-    ).select(
-        "block",
-        "txn_hash",
-        F.col("pe.challengee").alias("challengee"),
-        F.col("pe.receipt").alias("receipt"),
-        F.explode("pe.witnesses").alias("w"),
-    )
-    edges = exploded.select(
-        F.concat(F.lit("hotspots/"), F.col("challengee")).alias("_from"),
-        F.concat(F.lit("hotspots/"), F.col("w.gateway")).alias("_to"),
-        F.col("w.frequency").alias("frequency"),
-        F.col("w.datarate").alias("datarate"),
-        F.col("w.is_valid").alias("is_valid"),
-        F.col("w.signal").alias("signal"),
-        F.col("w.snr").alias("snr"),
-        F.col("w.timestamp").alias("timestamp"),
-        F.col("txn_hash").alias("hash"),
-        F.col("block"),
-        # null-tolerant struct access: NULL receipt -> NULL fields
-        F.col("receipt.tx_power").alias("tx_power"),
-        F.when(
-            F.col("receipt").isNotNull(),
-            (F.col("w.timestamp") - F.col("receipt.timestamp")) / F.lit(1e9),
-        ).alias("processing_time_s"),
-    )
-    return edges.withColumn("_key", canonical_md5_key(*RECEIPT_KEY_COLS)).dropDuplicates(["_key"])
-
-
-def _account_vertices(txns: DataFrame) -> DataFrame:
-    """Distinct account vertices: payer union payee across payment types
-    (follower.py:147,156,162,173 + duplicate-ignore import :206). A
-    payment_v2 payer counts even when its ``payments`` array is empty."""
-    v1 = txns.filter(F.col("type") == "payment_v1")
-    v2 = txns.filter(F.col("type") == "payment_v2")
-    keys = (
-        v1.select(F.col("pay1.payer").alias("_key"))
-        .unionByName(v1.select(F.col("pay1.payee").alias("_key")))
-        .unionByName(v2.select(F.col("pay2.payer").alias("_key")))
-        .unionByName(
-            v2.select(F.explode("pay2.payments").alias("p")).select(
-                F.col("p.payee").alias("_key")
-            )
-        )
-    )
-    return keys.distinct()

@@ -815,15 +815,28 @@ def pq_quantize(
     e = _embeddings(emb)
     if dim is None:
         dim = _infer_dim(e)
-    if dim % n_blocks != 0:
-        raise ValueError(f"dim={dim} not divisible by n_blocks={n_blocks}")
-    sub = dim // n_blocks
-    cb_rows = e.orderBy(F.col(ID_COL)).limit(n_codes).collect()
+    return _pq_assign(e, _pq_codebook(e, n_codes), n_blocks, dim)
+
+
+def _pq_codebook(e: DataFrame, n_codes: int) -> list:
+    """The first ``n_codes`` corpus rows by id (``ORDER BY id LIMIT
+    n_codes``), collected in id order: :func:`pq_quantize`'s codebook."""
+    cb_rows = sorted(e.orderBy(F.col(ID_COL)).limit(n_codes).collect(), key=lambda r: r[ID_COL])
     if len(cb_rows) < n_codes:
         raise ValueError(
             f"corpus has {len(cb_rows)} rows < n_codes={n_codes}"
         )
-    cb = [list(r["v"]) for r in sorted(cb_rows, key=lambda r: r[ID_COL])]
+    return cb_rows
+
+
+def _pq_assign(e: DataFrame, cb_rows: list, n_blocks: int, dim: int) -> DataFrame:
+    """``(id, code_0..code_{B-1}, mse)`` of every vector of ``e`` against
+    the collected codebook ``cb_rows`` (see :func:`pq_quantize`)."""
+    if dim % n_blocks != 0:
+        raise ValueError(f"dim={dim} not divisible by n_blocks={n_blocks}")
+    sub = dim // n_blocks
+    n_codes = len(cb_rows)
+    cb = [list(r["v"]) for r in cb_rows]
     cols: list[Column] = [F.col(ID_COL)]
     min_dists: list[Column] = []
     for bi in range(n_blocks):
@@ -872,15 +885,15 @@ def pq_adc_topk(
     e = _embeddings(emb)
     dim = _infer_dim(e)
     sub = dim // n_blocks
-    cb_rows = e.orderBy(F.col(ID_COL)).limit(n_codes).collect()
-    cb = [list(r["v"]) for r in sorted(cb_rows, key=lambda r: r[ID_COL])]
+    cb_rows = _pq_codebook(e, n_codes)
+    cb = [list(r["v"]) for r in cb_rows]
     if query_id is None:
-        query_id = min(r[ID_COL] for r in cb_rows)
+        query_id = cb_rows[0][ID_COL]
     q_rows = e.filter(F.col(ID_COL) == query_id).limit(1).collect()
     if not q_rows:
         raise ValueError(f"query_id={query_id} not found")
     q = list(q_rows[0]["v"])
-    codes = pq_quantize(emb, n_blocks=n_blocks, n_codes=n_codes, dim=dim)
+    codes = _pq_assign(e, cb_rows, n_blocks, dim)
     dist = F.lit(0.0)
     for bi in range(n_blocks):
         lut = [

@@ -22,9 +22,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import scoped_conf
 from ..sources.datasource import HeliumChainDataSource
 from ..sources.inventory import enrich_inventory, read_gateway_inventory
-from .follow import PAYMENTS, RECEIPTS, process_batch, sync_state
+from .follow import PAYMENTS, RECEIPTS, SMALL_BATCH_PROFILE, process_batch, sync_state
 from .sink import RETENTION_BLOCKS, apply_retention
 
 #: dimension staleness bound (reference follower.py:61-62): refresh the
@@ -102,18 +103,25 @@ def run_service(
 
     def batch_fn(batch_blocks: DataFrame, epoch_id: int) -> None:
         nonlocal inv_height
-        lo, hi = batch_blocks.agg(F.min("height"), F.max("height")).collect()[0]
-        if lo is None:  # an empty batch
-            return
-        txns = (
-            spark.read.format("helium_chain")
-            .option("endpoint", endpoint)
-            .option("what", "txns")
-            .option("start", str(lo))
-            .option("end", str(hi))
-            .load()
-        )
-        process_batch(spark, batch_blocks, txns, out_dir)
+        # persisted here, so the bounds below and process_batch read the
+        # stream's blocks once
+        batch_blocks = batch_blocks.persist()
+        try:
+            with scoped_conf(batch_blocks.sparkSession, SMALL_BATCH_PROFILE):
+                lo, hi = batch_blocks.selectExpr("min(height)", "max(height)").collect()[0]
+            if lo is None:  # an empty batch
+                return
+            txns = (
+                spark.read.format("helium_chain")
+                .option("endpoint", endpoint)
+                .option("what", "txns")
+                .option("start", str(lo))
+                .option("end", str(hi))
+                .load()
+            )
+            process_batch(spark, batch_blocks, txns, out_dir)
+        finally:
+            batch_blocks.unpersist()
         if inventory_glob is not None:
             inv_height = refresh_inventory_if_stale(
                 spark, inventory_glob, out_dir, hi, inv_height

@@ -26,15 +26,27 @@ by block bucket:
 
 The account table has no ``block`` column: it is unpartitioned and probed
 by ``_key`` alone.
+
+**Overlapped writes.** :func:`idempotent_append` builds the write on the
+calling thread and runs it on a thread of its own, returning a
+``concurrent.futures.Future`` that resolves when the write has committed
+(or raises what the write raised). The caller must wait for it while the
+frame it wrote, and any conf its plan depends on, are still in place. In
+PySpark's default pinned-thread mode the write thread gets a copy of the
+caller's Spark local properties, taken when the write starts, so its jobs
+run under the caller's job group — a streaming query's, which ``stop()``
+cancels, or one the caller set. With ``PYSPARK_PIN_THREAD=false`` it is a
+plain thread, and every thread shares the JVM's local properties.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from concurrent.futures import Future
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.util import InheritableThread
 
 #: Reference retention window: 7200 blocks (~5 days), .env.template:13-14.
 RETENTION_BLOCKS = 7200
@@ -45,9 +57,7 @@ BUCKET_COL = "block_bucket"
 def with_block_bucket(df: DataFrame, blocks_per_bucket: int = RETENTION_BLOCKS) -> DataFrame:
     """Add the partition column ``block_bucket = block // N``. Sized to the
     retention window so retention is exactly one partition boundary."""
-    return df.withColumn(
-        BUCKET_COL, F.floor(F.col("block") / blocks_per_bucket).cast("long")
-    )
+    return df.selectExpr("*", f"CAST(floor(block / {blocks_per_bucket}) AS BIGINT) AS {BUCKET_COL}")
 
 
 def has_data_files(path: str) -> bool:
@@ -65,9 +75,9 @@ def _existing_keys(spark: SparkSession, path: str, span: tuple[int, int] | None)
         return spark.read.schema("_key string").parquet(path)
     lo, hi = span
     existing = spark.read.schema(f"_key string, block long, {BUCKET_COL} long").parquet(path)
-    return existing.filter(
-        F.col(BUCKET_COL).between(lo // RETENTION_BLOCKS, hi // RETENTION_BLOCKS)
-        & F.col("block").between(lo, hi)
+    return existing.where(
+        f"{BUCKET_COL} BETWEEN {lo // RETENTION_BLOCKS} AND {hi // RETENTION_BLOCKS}"
+        f" AND block BETWEEN {lo} AND {hi}"
     ).select("_key")
 
 
@@ -87,9 +97,12 @@ def _new_rows(
 
 def idempotent_append(
     spark: SparkSession, df: DataFrame, path: str, span: tuple[int, int] | None = None
-) -> None:
-    """Append rows whose ``_key`` is not already present — the engine's
-    ``onDuplicate="ignore"`` (follower.py:205-207).
+) -> Future:
+    """Start appending the rows whose ``_key`` is not already present — the
+    engine's ``onDuplicate="ignore"`` (follower.py:205-207) — and return the
+    write's future (see the module docstring). The rows are committed, and a
+    failed write raises, only through the future: a caller must call its
+    ``.result()``.
 
     ``df`` must already be deduplicated within itself (the graph operators
     end in ``dropDuplicates(["_key"])``). A frame with a ``block`` column is
@@ -101,7 +114,21 @@ def idempotent_append(
     writer = _new_rows(spark, df, path, span).write.mode("append")
     if "block" in df.columns:
         writer = writer.partitionBy(BUCKET_COL)
-    writer.parquet(path)
+    written: Future = Future()
+    written.set_running_or_notify_cancel()
+
+    def write() -> None:
+        try:
+            writer.parquet(path)
+        except BaseException as exc:
+            written.set_exception(exc)
+        else:
+            written.set_result(None)
+
+    # one thread per write; in pinned-thread mode it starts with a copy of
+    # the caller's local properties, taken here, and a plain thread otherwise
+    InheritableThread(write, session=df.sparkSession, name="sink-write").start()
+    return written
 
 
 def apply_retention(

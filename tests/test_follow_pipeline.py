@@ -10,6 +10,7 @@ from __future__ import annotations
 import json
 import os
 
+import py4j.clientserver
 import pytest
 from hypothesis import Phase, example, given, settings
 from hypothesis import strategies as st
@@ -229,7 +230,7 @@ def test_retention_partition_drop(spark, tmp_path):
     df = spark.createDataFrame(
         [("k1", 100), ("k2", 15_000), ("k3", 16_000)], ["_key", "block"]
     )
-    idempotent_append(spark, df, out, (100, 16_000))
+    idempotent_append(spark, df, out, (100, 16_000)).result()
     buckets = {n for n in os.listdir(out) if n.startswith("block_bucket=")}
     assert buckets == {"block_bucket=0", "block_bucket=2"}
     dropped = apply_retention(spark, out, tip_height=17_000)
@@ -241,14 +242,27 @@ def test_retention_partition_drop(spark, tmp_path):
 def test_idempotent_append_antijoin(spark, tmp_path):
     out = str(tmp_path / "t")
     a = spark.createDataFrame([("k1", 10), ("k2", 20)], ["_key", "block"])
-    idempotent_append(spark, a, out, (10, 20))
+    idempotent_append(spark, a, out, (10, 20)).result()
     b = spark.createDataFrame([("k2", 20), ("k3", 30)], ["_key", "block"])
-    idempotent_append(spark, b, out, (20, 30))
+    idempotent_append(spark, b, out, (20, 30)).result()
     got = sorted(r["_key"] for r in spark.read.parquet(out).collect())
     assert got == ["k1", "k2", "k3"]
     # one probe path: an edge frame without its block span is refused
     with pytest.raises(ValueError, match="block span"):
         idempotent_append(spark, b, out)
+
+
+def test_idempotent_append_with_pinned_thread_mode_off(spark, tmp_path, monkeypatch):
+    """Under ``PYSPARK_PIN_THREAD=false`` the py4j gateway is not a
+    ``ClientServer`` and PySpark's thread helpers fall back to plain
+    threads; the write still runs on its own thread and commits."""
+    out = str(tmp_path / "t")
+    df = spark.createDataFrame([("k1", 10), ("k2", 20)], ["_key", "block"])
+    monkeypatch.setattr(py4j.clientserver, "ClientServer", type("NotTheGateway", (), {}))
+    written = idempotent_append(spark, df, out, (10, 20))
+    monkeypatch.undo()
+    written.result()
+    assert sorted(r["_key"] for r in spark.read.parquet(out).collect()) == ["k1", "k2"]
 
 
 def test_gateway_inventory_source(spark, tmp_path):
@@ -310,23 +324,85 @@ def _mixed_batch(spark, lo, hi):
     return read("blocks"), read("txns")
 
 
-def test_warm_batch_runs_four_spark_jobs(spark, tmp_path):
+def test_warm_batch_runs_four_spark_jobs(spark, tmp_path, monkeypatch):
     """A warm batch over a seeded store, replaying part of it: the span
     aggregate and one write per sink, counted by Spark's status tracker
-    under a job group, and the store still equals the chain."""
+    under a job group — which the overlapped writes inherit from the
+    caller's thread — and the store still equals the chain. Building the
+    batch makes at most 1,000 py4j round trips to the JVM, counted on
+    every thread (it made about 3,400 when each column was its own call)."""
     out = tmp_path / "graph"
     process_batch(spark, *_mixed_batch(spark, 1, 64), str(out))
+    blocks, txns = _mixed_batch(spark, 49, 96)
     sc = spark.sparkContext
     group = "warm-follower-batch"
+    round_trips = []
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counted_send(self, command):
+        round_trips.append(1)
+        return send(self, command)
+
     sc.setJobGroup(group, "one warm follower batch")
     try:
-        process_batch(spark, *_mixed_batch(spark, 49, 96), str(out))
+        monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counted_send)
+        process_batch(spark, blocks, txns, str(out))
+        monkeypatch.undo()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+    assert 0 < len(round_trips) <= 1000
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
     _assert_mixed_store(spark, out, range(1, 97))
+
+
+def test_failed_write_is_raised_after_the_others_finish(spark, tmp_path, monkeypatch):
+    """The three sink writes overlap. When one fails — here a regular file
+    stands where the ``poc_receipts`` table goes — ``process_batch``
+    raises only once the payments and accounts writes have finished, no
+    Spark job is left running, and a rerun after the obstacle is gone
+    gives the chain. A later sink that cannot even start its write does
+    not hide the earlier failure."""
+    out = tmp_path / "graph"
+    out.mkdir()
+    obstacle = out / follow.RECEIPTS
+    obstacle.write_text("not a table")
+    original = follow.idempotent_append
+    writes = {}
+
+    def recording_append(spark, df, path, *args):
+        writes[os.path.basename(path)] = future = original(spark, df, path, *args)
+        return future
+
+    monkeypatch.setattr(follow, "idempotent_append", recording_append)
+    with pytest.raises(Exception, match=follow.RECEIPTS):
+        process_batch(spark, *_mixed_batch(spark, 1, 32), str(out))
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    assert list(writes) == [follow.PAYMENTS, follow.RECEIPTS, follow.ACCOUNTS]
+    assert all(w.done() for w in writes.values())
+    assert writes[follow.RECEIPTS].exception() is not None
+    writes[follow.PAYMENTS].result()
+    writes[follow.ACCOUNTS].result()
+    assert has_data_files(str(out / follow.PAYMENTS)) and has_data_files(str(out / follow.ACCOUNTS))
+
+    # a sink that cannot start its write does not hide the failed write
+    # before it: that write's error is raised, chained to the sink's
+    def accounts_cannot_start(spark, df, path, *args):
+        if os.path.basename(path) == follow.ACCOUNTS:
+            raise RuntimeError("accounts write not started")
+        return recording_append(spark, df, path, *args)
+
+    monkeypatch.setattr(follow, "idempotent_append", accounts_cannot_start)
+    with pytest.raises(Exception, match=follow.RECEIPTS) as raised:
+        process_batch(spark, *_mixed_batch(spark, 1, 32), str(out))
+    assert isinstance(raised.value.__context__, RuntimeError)
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+
+    monkeypatch.undo()
+    obstacle.unlink()
+    process_batch(spark, *_mixed_batch(spark, 1, 32), str(out))
+    _assert_mixed_store(spark, out, range(1, 33))
 
 
 # No shrink phase: a failing example is reported as found. Shrinking
@@ -393,7 +469,7 @@ def test_run_service_crash_restart_from_checkpoint(spark, tmp_path, monkeypatch)
             receipt_appends.append(path)
             if len(receipt_appends) == 2:
                 raise RuntimeError("injected crash before receipts commit")
-        original(spark, df, path, *args)
+        return original(spark, df, path, *args)
 
     monkeypatch.setattr(follow, "idempotent_append", crash_on_second_receipts)
     with pytest.raises(Exception, match="injected crash"):
@@ -418,7 +494,7 @@ def test_small_batch_profile_reaches_the_stream_batch(spark, tmp_path, monkeypat
 
     def recording_append(spark, df, path, *args):
         seen.append({k: df.sparkSession.conf.get(k) for k in keys})
-        original(spark, df, path, *args)
+        return original(spark, df, path, *args)
 
     monkeypatch.setattr(follow, "idempotent_append", recording_append)
     _mixed_drain(spark, tmp_path)
@@ -464,7 +540,7 @@ def test_sync_state_none_only_for_missing_tables(spark, tmp_path):
 
     idempotent_append(
         spark, spark.createDataFrame([("k1", 10)], ["_key", "block"]), str(out / "payments"), (10, 10)
-    )
+    ).result()
     assert sync_state(spark, str(out)) == {"payments": 10, "poc_receipts": None}
 
     part = next(

@@ -116,7 +116,7 @@ def test_sink_layout_prunes_block_buckets(spark, tmp_path):
     df = spark.createDataFrame(
         [("k1", 100), ("k2", 8_000), ("k3", 15_000)], ["_key", "block"]
     )
-    idempotent_append(spark, df, out, (100, 15_000))
+    idempotent_append(spark, df, out, (100, 15_000)).result()
 
     from pyspark.sql import functions as F
 
