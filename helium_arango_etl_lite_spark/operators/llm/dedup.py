@@ -1,10 +1,40 @@
 """Deduplication operators for LLM data pipelines (SURVEY.md section 2.8):
-exact, MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine near-dup.
+exact, MinHash+LSH, SimHash, n-gram Jaccard and containment, repeated
+windows and spans.
+
+Every operator is assembled from one copy of each kernel:
+
+===============================  ================================  ==============================
+kernel                           helper                            operators that use it
+===============================  ================================  ==============================
+whitespace tokens                :func:`tokens`                    every word-level operator here
+                                                                   and in text.py
+word n-gram shingles (zip_with   :func:`array_shingles`            word_shingles(_all),
+over shifted slices)                                               repeated_span_scrub,
+                                                                   text.decontaminate,
+                                                                   text.repetition_score,
+                                                                   the catalog's bigram entries
+MinHash signature (Arrow)        :func:`minhash_signature_df`      _minhash_bands,
+                                                                   the signature entries
+LSH band keys, checkpointed      ``_minhash_bands``                minhash_candidate_pairs,
+                                                                   minhash_star_pairs
+exact Jaccard on candidates      :func:`exact_jaccard_on_pairs`    minhash_verified_pairs,
+                                                                   star-candidate consumers
+shingle-overlap self-join        ``_shingle_overlap``              ngram_jaccard_pairs,
+                                                                   containment_pairs
+===============================  ================================  ==============================
+
+``_minhash_signature_expr`` and ``_simhash_expr`` are the pure-JVM
+expression forms of the two Arrow kernels, kept as the references the
+agreement tests compare against.
+
+Every document frame carries ``ID_COL`` and ``TEXT_COL``; shingles are
+word ``SHINGLE_N``-grams.
 
 Scale design (100 TB):
  * exact dedup — one hash-shuffle on a 16-byte key; map-side partial agg.
  * MinHash/LSH — signature computation is embarrassingly parallel
-   (per-row JVM expressions, zero shuffle); the LSH band join shuffles
+   (per-partition Arrow batches, zero shuffle); the LSH band join shuffles
    only (band_id, doc_id) pairs — tiny vs the corpus.
  * n-gram Jaccard — exploded-shingle self-join; at scale, frequency-cap
    shingles first (drop shingles appearing in > F docs) to kill the
@@ -17,6 +47,8 @@ Scale design (100 TB):
 from __future__ import annotations
 
 import hashlib
+import operator
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -24,49 +56,58 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from ...functions.hashing import MERSENNE_31, hash64, minhash_params, minhash_signature
 
+TEXT_COL = "text"  # text column of every document frame
+ID_COL = "doc_id"  # id column of every document frame
+SHINGLE_N = 3  # word n-gram length of the dedup shingles
+#: dup_clusters stops after this many label-propagation rounds
+CC_MAX_ITERATIONS = 20
 
-def exact_dedup(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
+
+def tokens(text_col: Column | str) -> Column:
+    """Whitespace tokens (single-space split, matching the oracle)."""
+    return F.split(text_col, " ")
+
+
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Exact duplicate groups by content hash: keeper = min id, plus
     multiplicity. groupBy on md5 — partial-aggregated, single shuffle."""
     return (
-        df.select(F.md5(F.col(text)).alias("fp"), F.col(id_col))
+        df.select(F.md5(F.col(TEXT_COL)).alias("fp"), F.col(ID_COL))
         .groupBy("fp")
-        .agg(F.min(id_col).alias("keeper_doc_id"), F.count(F.lit(1)).alias("n_copies"))
+        .agg(F.min(ID_COL).alias("keeper_doc_id"), F.count(F.lit(1)).alias("n_copies"))
     )
 
 
 def word_shingles(text_col: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles. Pure JVM array expressions: split,
-    then a chain of ``zip_with`` over ``n`` shifted slices — shingle i is
-    ``t[i] .. t[i+n-1]`` joined by spaces, in index order, so the output
-    (order included) is identical to the older transform/element_at form
-    and to the oracle's ``generate_series(1, len-n+1)``. Empty array when
-    the doc has < n tokens.
-
-    Why zip_with and not ``transform(sequence(...), i -> element_at ...)``:
-    both are interpreted higher-order functions, but the per-element work
-    differs wildly — the transform form re-resolves ``n`` element_at
-    lookups plus index arithmetic per shingle through the interpreter,
-    measured 27x slower (58.1 s vs 2.1 s exploding 26M shingles from
-    500k docs, SCALE_SOAK round 7) than zipping pre-shifted slices,
-    which the codegen'd slice kernel materialises once."""
+    """Distinct word n-gram shingles: :func:`word_shingles_all`, order-
+    preserving dedup. Empty array when the doc has < n tokens."""
     return F.array_distinct(word_shingles_all(text_col, n))
 
 
 def word_shingles_all(text_col: Column | str, n: int = 3) -> Column:
     """Word n-gram shingles WITH multiplicity, in occurrence order — the
-    counting form behind :func:`word_shingles` (which distincts it) and
-    the n-gram language-model trainer (plans/catalog_round7.py), where
-    each occurrence must contribute to the count. Same zip_with-over-
-    shifted-slices kernel; empty array when the doc has < n tokens."""
-    t = F.split(text_col if isinstance(text_col, str) else text_col, " ")
-    return array_shingles(t, n)
+    counting form behind :func:`word_shingles` (which distincts it), the
+    n-gram language-model trainers and text.py's decontamination and
+    repetition scores, where each occurrence must contribute to the
+    count. Empty array when the doc has < n tokens."""
+    return array_shingles(tokens(text_col), n)
 
 
 def array_shingles(t: Column, n: int = 3) -> Column:
     """The shingle kernel over an ALREADY-SPLIT token array — callers
     that also need the tokens themselves (e.g. span scrubbing) split
-    once and share the array instead of paying a second split."""
+    once and share the array instead of paying a second split.
+
+    Pure JVM array expressions: a chain of ``zip_with`` over ``n``
+    shifted slices — shingle i is ``t[i] .. t[i+n-1]`` joined by spaces,
+    in index order, identical to the oracle's ``generate_series(1,
+    len-n+1)``. Why zip_with and not ``transform(sequence(...), i ->
+    element_at ...)``: both are interpreted higher-order functions, but
+    the transform form re-resolves ``n`` element_at lookups plus index
+    arithmetic per shingle through the interpreter, measured 27x slower
+    (58.1 s vs 2.1 s exploding 26M shingles from 500k docs, SCALE_SOAK
+    round 7) than zipping pre-shifted slices, which the codegen'd slice
+    kernel materialises once."""
     length = F.greatest(F.size(t) - (n - 1), F.lit(0))
 
     def shifted(j: int) -> Column:
@@ -83,35 +124,21 @@ def array_shingles(t: Column, n: int = 3) -> Column:
 
 
 def minhash_signature_df(
-    df: DataFrame, text: str = "text", id_col: str = "doc_id",
-    num_hashes: int = 6, seed: int = 42, shingle_n: int = 3,
-    engine: str = "arrow",
+    df: DataFrame, num_hashes: int = 6, seed: int = 42
 ) -> DataFrame:
     """Per-doc MinHash signature as ``sig_0..sig_{K-1}`` columns:
-    min over shingles of ``(a_i * hash32(shingle) + b_i) mod (2^31-1)``.
+    min over distinct word shingles of
+    ``(a_i * hash32(shingle) + b_i) mod (2^31-1)``.
 
-    Two physically different plans, identical values (tested equal):
-
-    * ``engine="arrow"`` (default) — Arrow-batched ``mapInPandas``: md5
-      per shingle via hashlib (C speed), the K permuted mins as one
-      vectorized numpy broadcast. Measured 3-10x faster AND far lower
-      variance than the expression form at sf0.1 — Catalyst evaluates
-      higher-order functions interpreted (outside whole-stage codegen),
-      and the per-token K-slot accumulator arrays churn the JVM heap.
-      Still zero shuffle: per-partition map work, linear scale-out.
-    * ``engine="expr"`` — pure JVM array expressions (one fold with a
-      K-slot accumulator; md5 once per shingle). No Python workers —
-      the right form where a Python runtime is unavailable.
+    Arrow-batched ``mapInPandas``: md5 per shingle via hashlib (C speed),
+    the K permuted mins as one vectorized numpy broadcast. Measured 3-10x
+    faster AND far lower variance than the expression form
+    (:func:`_minhash_signature_expr`, bit-identical by test) at sf0.1 —
+    Catalyst evaluates higher-order functions interpreted (outside
+    whole-stage codegen), and the per-token K-slot accumulator arrays
+    churn the JVM heap. Zero shuffle: per-partition map work, linear
+    scale-out.
     """
-    if engine == "expr":
-        sh = word_shingles(F.col(text), shingle_n)
-        sig = minhash_signature(sh, num_hashes, seed)
-        with_sig = df.select(F.col(id_col), sig.alias("sig"))
-        return with_sig.select(
-            id_col,
-            *[F.col("sig").getItem(i).alias(f"sig_{i}") for i in range(num_hashes)],
-        )
-
     import numpy as np
     import pandas as pd
 
@@ -119,7 +146,7 @@ def minhash_signature_df(
     a_vec = np.array([a for a, _ in params], dtype=np.int64)
     b_vec = np.array([b for _, b in params], dtype=np.int64)
     out_schema = StructType(
-        [StructField(id_col, df.schema[id_col].dataType)]
+        [StructField(ID_COL, df.schema[ID_COL].dataType)]
         + [StructField(f"sig_{i}", LongType()) for i in range(num_hashes)]
     )
     empty_sig = np.full(num_hashes, MERSENNE_31, dtype=np.int64)
@@ -127,12 +154,12 @@ def minhash_signature_df(
     def batches(it):
         for pdf in it:
             rows = []
-            for did, txt in zip(pdf[id_col].values, pdf[text].values):
+            for did, txt in zip(pdf[ID_COL].values, pdf[TEXT_COL].values):
                 toks = txt.split(" ")
-                if len(toks) >= shingle_n:
+                if len(toks) >= SHINGLE_N:
                     shingles = {
-                        " ".join(toks[i : i + shingle_n])
-                        for i in range(len(toks) - shingle_n + 1)
+                        " ".join(toks[i : i + SHINGLE_N])
+                        for i in range(len(toks) - SHINGLE_N + 1)
                     }
                     hs = np.fromiter(
                         (
@@ -149,46 +176,65 @@ def minhash_signature_df(
                 rows.append((did, *sig))
             yield pd.DataFrame(rows, columns=out_schema.fieldNames())
 
-    return df.select(F.col(id_col), F.col(text)).mapInPandas(batches, out_schema)
+    return df.select(F.col(ID_COL), F.col(TEXT_COL)).mapInPandas(batches, out_schema)
 
 
-def minhash_candidate_pairs(
-    df: DataFrame, text: str = "text", id_col: str = "doc_id",
-    num_hashes: int = 6, bands: int = 3, seed: int = 42, shingle_n: int = 3,
+def _minhash_signature_expr(
+    df: DataFrame, num_hashes: int = 6, seed: int = 42
 ) -> DataFrame:
-    """LSH banding: signature split into ``bands`` bands of r = K/bands rows;
-    docs sharing any band hash are candidate duplicates.
+    """:func:`minhash_signature_df` as pure JVM array expressions (one
+    fold with a K-slot accumulator; md5 once per shingle) — the
+    reference the Arrow kernel is tested bit-identical against."""
+    sig = minhash_signature(word_shingles(F.col(TEXT_COL), SHINGLE_N), num_hashes, seed)
+    return df.select(F.col(ID_COL), sig.alias("sig")).select(
+        ID_COL,
+        *[F.col("sig").getItem(i).alias(f"sig_{i}") for i in range(num_hashes)],
+    )
 
-    The self-join shuffles only (band_key, doc_id) — the full text never
-    moves. Output: distinct (doc_a, doc_b) with doc_a < doc_b.
-    """
+
+def _minhash_bands(
+    df: DataFrame, num_hashes: int, bands: int, seed: int
+) -> DataFrame:
+    """LSH banding: the signature split into ``bands`` bands of
+    r = K/bands rows, one ``(doc_id, band_key)`` row per band. Both
+    consumers read it twice, so it is checkpointed and the signature
+    computation (the expensive map stage) runs once."""
     if num_hashes % bands != 0:
         raise ValueError(
             f"num_hashes={num_hashes} must be divisible by bands={bands}"
         )
     r = num_hashes // bands
-    sig = minhash_signature_df(df, text, id_col, num_hashes, seed, shingle_n)
+    sig = minhash_signature_df(df, num_hashes, seed)
     band_cols = [
         F.concat_ws("_", F.lit(b), *[F.col(f"sig_{b * r + j}") for j in range(r)]).alias(f"band_{b}")
         for b in range(bands)
     ]
-    banded = sig.select(F.col(id_col), F.explode(F.array(*band_cols)).alias("band_key"))
-    # both self-join sides consume `banded`; checkpoint so the signature
-    # computation (the expensive map stage) runs once, not per side
-    banded = banded.localCheckpoint(eager=False)
+    banded = sig.select(F.col(ID_COL), F.explode(F.array(*band_cols)).alias("band_key"))
+    return banded.localCheckpoint(eager=False)
+
+
+def minhash_candidate_pairs(
+    df: DataFrame, num_hashes: int = 6, bands: int = 3, seed: int = 42
+) -> DataFrame:
+    """Docs sharing any LSH band key (:func:`_minhash_bands`) are
+    candidate duplicates.
+
+    The self-join shuffles only (band_key, doc_id) — the full text never
+    moves. Output: distinct (doc_a, doc_b) with doc_a < doc_b.
+    """
+    banded = _minhash_bands(df, num_hashes, bands, seed)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
         a.join(b, (F.col("a.band_key") == F.col("b.band_key"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b"))
+               & (F.col(f"a.{ID_COL}") < F.col(f"b.{ID_COL}")))
+        .select(F.col(f"a.{ID_COL}").alias("doc_a"), F.col(f"b.{ID_COL}").alias("doc_b"))
         .distinct()
     )
 
 
 def minhash_star_pairs(
-    df: DataFrame, text: str = "text", id_col: str = "doc_id",
-    num_hashes: int = 6, bands: int = 3, seed: int = 42, shingle_n: int = 3,
+    df: DataFrame, num_hashes: int = 6, bands: int = 3, seed: int = 42
 ) -> DataFrame:
     """STAR-topology LSH candidates: within each band bucket, every doc
     pairs with the bucket's MINIMUM doc id (the hub) instead of with
@@ -211,36 +257,18 @@ def minhash_star_pairs(
     Output: distinct (doc_a, doc_b) with doc_a < doc_b (the hub is the
     bucket min, so hub < member always holds).
     """
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes={num_hashes} must be divisible by bands={bands}"
-        )
-    r = num_hashes // bands
-    sig = minhash_signature_df(df, text, id_col, num_hashes, seed, shingle_n)
-    band_cols = [
-        F.concat_ws(
-            "_", F.lit(b), *[F.col(f"sig_{b * r + j}") for j in range(r)]
-        ).alias(f"band_{b}")
-        for b in range(bands)
-    ]
-    banded = sig.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("band_key")
-    )
-    # both the hub aggregate and the member probe consume `banded`;
-    # checkpoint so the signature map stage runs once
-    banded = banded.localCheckpoint(eager=False)
-    hub = banded.groupBy("band_key").agg(F.min(id_col).alias("hub"))
+    banded = _minhash_bands(df, num_hashes, bands, seed)
+    hub = banded.groupBy("band_key").agg(F.min(ID_COL).alias("hub"))
     return (
         banded.join(hub, "band_key")
-        .filter(F.col(id_col) != F.col("hub"))
-        .select(F.col("hub").alias("doc_a"), F.col(id_col).alias("doc_b"))
+        .filter(F.col(ID_COL) != F.col("hub"))
+        .select(F.col("hub").alias("doc_a"), F.col(ID_COL).alias("doc_b"))
         .distinct()
     )
 
 
 def exact_jaccard_on_pairs(
-    df: DataFrame, cands: DataFrame, text: str = "text",
-    id_col: str = "doc_id", threshold: float = 0.8, shingle_n: int = 3,
+    df: DataFrame, cands: DataFrame, threshold: float = 0.8
 ) -> DataFrame:
     """The exact-Jaccard PRECISION stage over an arbitrary candidate-pair
     DataFrame (columns ``doc_a``, ``doc_b`` + optional pass-through
@@ -254,18 +282,18 @@ def exact_jaccard_on_pairs(
     """
     extra_cols = [c for c in cands.columns if c not in ("doc_a", "doc_b")]
     cand_docs = (
-        cands.select(F.col("doc_a").alias(id_col))
-        .union(cands.select(F.col("doc_b").alias(id_col)))
+        cands.select(F.col("doc_a").alias(ID_COL))
+        .union(cands.select(F.col("doc_b").alias(ID_COL)))
         .distinct()
     )
     sh = (
         df.select(
-            F.col(id_col), word_shingles(F.col(text), shingle_n).alias("shd")
+            F.col(ID_COL), word_shingles(F.col(TEXT_COL), SHINGLE_N).alias("shd")
         )
-        .join(cand_docs, id_col, "left_semi")
+        .join(cand_docs, ID_COL, "left_semi")
     )
-    a = sh.select(F.col(id_col).alias("doc_a"), F.col("shd").alias("sh_a"))
-    b = sh.select(F.col(id_col).alias("doc_b"), F.col("shd").alias("sh_b"))
+    a = sh.select(F.col(ID_COL).alias("doc_a"), F.col("shd").alias("sh_a"))
+    b = sh.select(F.col(ID_COL).alias("doc_b"), F.col("shd").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
     jac = F.when(
@@ -283,42 +311,25 @@ def exact_jaccard_on_pairs(
     )
 
 
-def simhash(
-    df: DataFrame, text: str = "text", id_col: str = "doc_id", bits: int = 16,
-    engine: str = "arrow",
-) -> DataFrame:
+def simhash(df: DataFrame, bits: int = 16) -> DataFrame:
     """SimHash over distinct whitespace tokens.
 
     bit_j = sign of sum over tokens of (2*((hash64(token) >> j) & 1) - 1);
     near-duplicates have small Hamming distance between simhash values.
-    Zero shuffle either way.
+    Zero shuffle.
 
-    ``engine="arrow"`` (default): one md5 per distinct token via hashlib,
-    the per-bit votes as a single numpy broadcast — the ``bits``
-    interpreted aggregate folds of the expression form each re-walk the
-    token array outside codegen, which measured slower and GC-noisy.
-    ``engine="expr"``: pure JVM expressions; pinned bit-identical by test.
+    One md5 per distinct token via hashlib, the per-bit votes as a single
+    numpy broadcast — the ``bits`` interpreted aggregate folds of the
+    expression form (:func:`_simhash_expr`, bit-identical by test) each
+    re-walk the token array outside codegen, which measured slower and
+    GC-noisy.
     """
-    if engine == "expr":
-        t = F.array_distinct(F.split(F.col(text), " "))
-        hs = F.transform(t, hash64)
-
-        def _vote(j: int):
-            # close over j: PySpark infers HOF arity from the lambda signature
-            return lambda s, h: s + F.shiftright(h, j).bitwiseAND(F.lit(1)) * 2 - 1
-
-        acc = F.lit(0).cast("long")
-        for j in range(bits):
-            vote = F.aggregate(hs, F.lit(0).cast("long"), _vote(j))
-            acc = acc + F.shiftleft((vote >= 0).cast("long"), j)
-        return df.select(F.col(id_col), acc.alias("simhash"))
-
     import numpy as np
     import pandas as pd
 
     out_schema = StructType(
         [
-            StructField(id_col, df.schema[id_col].dataType),
+            StructField(ID_COL, df.schema[ID_COL].dataType),
             StructField("simhash", LongType()),
         ]
     )
@@ -330,7 +341,7 @@ def simhash(
             shifts = np.arange(bits, dtype=np.int64)
         for pdf in it:
             out = np.empty(len(pdf), dtype=np.int64)
-            for i, txt in enumerate(pdf[text].values):
+            for i, txt in enumerate(pdf[TEXT_COL].values):
                 toks = dict.fromkeys(txt.split(" "))  # distinct, order-free
                 hs = np.fromiter(
                     (
@@ -342,21 +353,33 @@ def simhash(
                 )
                 votes = (((hs[:, None] >> shifts[None, :]) & 1) * 2 - 1).sum(axis=0)
                 out[i] = ((votes >= 0).astype(np.int64) << shifts).sum()
-            yield pd.DataFrame({id_col: pdf[id_col].values, "simhash": out})
+            yield pd.DataFrame({ID_COL: pdf[ID_COL].values, "simhash": out})
 
-    return df.select(F.col(id_col), F.col(text)).mapInPandas(batches, out_schema)
+    return df.select(F.col(ID_COL), F.col(TEXT_COL)).mapInPandas(batches, out_schema)
 
 
-def dup_clusters(
-    pairs: DataFrame,
-    doc_a: str = "doc_a",
-    doc_b: str = "doc_b",
-    max_iterations: int = 20,
-) -> DataFrame:
-    """Connected components over candidate duplicate pairs: every document
-    gets ``cluster_id`` = the minimum doc id reachable through pair edges —
-    the step that turns pairwise candidates (MinHash/LSH/Jaccard) into
-    dedup groups with one keeper each.
+def _simhash_expr(df: DataFrame, bits: int = 16) -> DataFrame:
+    """:func:`simhash` as pure JVM expressions — the reference the Arrow
+    kernel is tested bit-identical against."""
+    hs = F.transform(F.array_distinct(tokens(F.col(TEXT_COL))), hash64)
+
+    def _vote(j: int):
+        # close over j: PySpark infers HOF arity from the lambda signature
+        return lambda s, h: s + F.shiftright(h, j).bitwiseAND(F.lit(1)) * 2 - 1
+
+    acc = F.lit(0).cast("long")
+    for j in range(bits):
+        vote = F.aggregate(hs, F.lit(0).cast("long"), _vote(j))
+        acc = acc + F.shiftleft((vote >= 0).cast("long"), j)
+    return df.select(F.col(ID_COL), acc.alias("simhash"))
+
+
+def dup_clusters(pairs: DataFrame) -> DataFrame:
+    """Connected components over candidate duplicate pairs ``(doc_a,
+    doc_b)``: every document gets ``cluster_id`` = the minimum doc id
+    reachable through pair edges — the step that turns pairwise
+    candidates (MinHash/LSH/Jaccard) into dedup groups with one keeper
+    each.
 
     Iterative min-label propagation WITH pointer jumping: each round,
     every node takes the min of its own label, its neighbors' labels,
@@ -364,11 +387,11 @@ def dup_clusters(
     The jump halves remaining chain lengths each round, so convergence
     is O(log diameter) rounds, not O(diameter) — chain-shaped graphs
     (e.g. mutual-kNN chains through embedding space) converge within
-    the iteration budget where plain propagation would silently stop
-    early and emit split clusters. Each round is two (node, label)-sized
-    shuffles; ``localCheckpoint`` truncates the growing plan lineage so
-    round N doesn't replay rounds 1..N-1; the loop exits early on
-    convergence.
+    the ``CC_MAX_ITERATIONS`` budget where plain propagation would
+    silently stop early and emit split clusters. Each round is two
+    (node, label)-sized shuffles; ``localCheckpoint`` truncates the
+    growing plan lineage so round N doesn't replay rounds 1..N-1; the
+    loop exits early on convergence.
     """
     # EAGER checkpoint of the pair edges: `pairs` is typically the tail
     # of an expensive lineage (LSH candidates -> shingle semi-join ->
@@ -379,11 +402,11 @@ def dup_clusters(
     # near-dup where its sequentially-materialized stages sum to ~112 s;
     # the loop's own eager checkpoints already run at construction time,
     # so this adds no new eagerness, only ordering).
-    pairs = pairs.select(doc_a, doc_b).localCheckpoint(eager=True)
+    pairs = pairs.select("doc_a", "doc_b").localCheckpoint(eager=True)
     edges = (
-        pairs.select(F.col(doc_a).alias("src"), F.col(doc_b).alias("dst"))
+        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(
-            pairs.select(F.col(doc_b).alias("src"), F.col(doc_a).alias("dst"))
+            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
         )
         .distinct()
         .localCheckpoint(eager=False)
@@ -393,7 +416,7 @@ def dup_clusters(
         .distinct()
         .withColumn("label", F.col("node"))
     )
-    for _ in range(max_iterations):
+    for _ in range(CC_MAX_ITERATIONS):
         neighbor_min = (
             edges.join(labels, edges["dst"] == labels["node"])
             .groupBy("src")
@@ -445,19 +468,18 @@ def dup_clusters(
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame, text: str = "text", id_col: str = "doc_id",
-    shingle_n: int = 3, threshold: float = 0.8, max_shingle_freq: int | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard similarity for document pairs sharing >= 1 shingle.
-
-    Exploded-shingle self-join: |A intersect B| via groupBy(pair), sizes via
-    per-doc counts, jaccard = inter / (|A| + |B| - inter). At 100 TB set
-    ``max_shingle_freq`` to drop ubiquitous shingles (quadratic hot keys);
-    left None at oracle scale for exactness.
-    """
+def _shingle_overlap(
+    df: DataFrame, max_shingle_freq: int | None,
+    pair: Callable[[Column, Column], Column],
+) -> tuple[DataFrame, DataFrame]:
+    """The exploded-shingle self-join behind both overlap scores:
+    ``inter`` = |A intersect B| per doc pair ``(doc_a, doc_b)`` kept by
+    ``pair(a.doc_id, b.doc_id)``, joined to ``na`` = |A|, plus the
+    per-doc shingle counts ``(doc_id, n_sh)``. With
+    ``max_shingle_freq`` the shingles in more docs than that are dropped
+    first (the quadratic hot keys at 100 TB)."""
     sh = df.select(
-        F.col(id_col), F.explode(word_shingles(F.col(text), shingle_n)).alias("s")
+        F.col(ID_COL), F.explode(word_shingles(F.col(TEXT_COL), SHINGLE_N)).alias("s")
     )
     if max_shingle_freq is not None:
         # drop ubiquitous shingles via a broadcast ANTI join against the
@@ -469,27 +491,39 @@ def ngram_jaccard_pairs(
     # three consumers (per-doc sizes + both self-join sides) would each
     # re-run the shingle explode; checkpoint so it is evaluated once
     sh = sh.localCheckpoint(eager=False)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
+    sizes = sh.groupBy(ID_COL).agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b"))
+        a.join(b, (F.col("a.s") == F.col("b.s")) & pair(F.col(f"a.{ID_COL}"), F.col(f"b.{ID_COL}")))
+        .groupBy(F.col(f"a.{ID_COL}").alias("doc_a"), F.col(f"b.{ID_COL}").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("nb"))
+    sa = sizes.select(F.col(ID_COL).alias("doc_a"), F.col("n_sh").alias("na"))
+    return inter.join(sa, "doc_a"), sizes
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame, threshold: float = 0.8, max_shingle_freq: int | None = None,
+) -> DataFrame:
+    """Exact n-gram Jaccard similarity for document pairs (doc_a < doc_b)
+    sharing >= 1 shingle: jaccard = inter / (|A| + |B| - inter) over
+    :func:`_shingle_overlap`. At 100 TB set ``max_shingle_freq`` to drop
+    ubiquitous shingles (quadratic hot keys); left None at oracle scale
+    for exactness.
+    """
+    inter, sizes = _shingle_overlap(df, max_shingle_freq, operator.lt)
+    sb = sizes.select(F.col(ID_COL).alias("doc_b"), F.col("n_sh").alias("nb"))
     jacc = F.col("inter").cast("double") / (F.col("na") + F.col("nb") - F.col("inter")).cast("double")
     return (
-        inter.join(sa, "doc_a").join(sb, "doc_b")
+        inter.join(sb, "doc_b")
         .select("doc_a", "doc_b", jacc.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
 
 def minhash_verified_pairs(
-    df: DataFrame, text: str = "text", id_col: str = "doc_id",
-    threshold: float = 0.8, num_hashes: int = 6, bands: int = 3,
-    seed: int = 42, shingle_n: int = 3, per_doc_cap: int | None = None,
+    df: DataFrame, threshold: float = 0.8, num_hashes: int = 6,
+    bands: int = 3, seed: int = 42, per_doc_cap: int | None = None,
     report_fanout: bool = True,
 ) -> DataFrame:
     """Two-stage dedup: MinHash-LSH candidate generation (recall stage)
@@ -526,9 +560,7 @@ def minhash_verified_pairs(
     candidates survive with ``verified = false``, making the precision of
     the sketch stage directly observable.
     """
-    cands = minhash_candidate_pairs(
-        df, text, id_col, num_hashes, bands, seed, shingle_n
-    )
+    cands = minhash_candidate_pairs(df, num_hashes, bands, seed)
     # both join sides consume cands; checkpoint so the LSH band join and
     # the signature map stage run once, not three times
     cands = cands.localCheckpoint(eager=False)
@@ -545,14 +577,11 @@ def minhash_verified_pairs(
             .drop("_rk")
             .localCheckpoint(eager=False)
         )
-    return exact_jaccard_on_pairs(
-        df, cands, text, id_col, threshold, shingle_n
-    )
+    return exact_jaccard_on_pairs(df, cands, threshold)
 
 
 def window_dup_stats(
-    df: DataFrame, text: str = "text", id_col: str = "doc_id",
-    window: int = 32, stride: int = 8,
+    df: DataFrame, window: int = 32, stride: int = 8
 ) -> DataFrame:
     """Exact repeated-substring detection via fixed sliding character
     windows (the scalable stand-in for suffix-array substring dedup, cf.
@@ -570,7 +599,7 @@ def window_dup_stats(
     Output per doc: total windows, windows shared with another doc, and
     the duplicated-window ratio.
     """
-    t = F.col(text)
+    t = F.col(TEXT_COL)
     starts = F.when(
         F.length(t) >= window,
         F.sequence(F.lit(1), F.length(t) - (window - 1), F.lit(stride)),
@@ -578,24 +607,24 @@ def window_dup_stats(
     wins = F.array_distinct(
         F.transform(starts, lambda i: F.md5(t.substr(i, F.lit(window))))
     )
-    base = df.select(F.col(id_col), wins.alias("ws")).localCheckpoint(eager=False)
-    ex = base.select(F.col(id_col), F.explode("ws").alias("wh"))
+    base = df.select(F.col(ID_COL), wins.alias("ws")).localCheckpoint(eager=False)
+    ex = base.select(F.col(ID_COL), F.explode("ws").alias("wh"))
     dupw = (
         ex.groupBy("wh")
-        .agg(F.count_distinct(F.col(id_col)).alias("nd"))
+        .agg(F.count_distinct(F.col(ID_COL)).alias("nd"))
         .filter(F.col("nd") > 1)
         .select("wh")
     )
     shared = (
         ex.join(dupw, "wh")
-        .groupBy(id_col)
+        .groupBy(ID_COL)
         .agg(F.count(F.lit(1)).alias("n_shared_windows"))
     )
     return (
-        base.select(F.col(id_col), F.size("ws").alias("n_windows"))
-        .join(shared, id_col, "left")
+        base.select(F.col(ID_COL), F.size("ws").alias("n_windows"))
+        .join(shared, ID_COL, "left")
         .select(
-            id_col,
+            ID_COL,
             "n_windows",
             F.coalesce("n_shared_windows", F.lit(0)).alias("n_shared_windows"),
             F.round(
@@ -607,11 +636,7 @@ def window_dup_stats(
     )
 
 
-def containment_pairs(
-    df: DataFrame, text: str = "text", id_col: str = "doc_id",
-    shingle_n: int = 3, threshold: float = 0.9,
-    max_shingle_freq: int | None = None,
-) -> DataFrame:
+def containment_pairs(df: DataFrame, threshold: float = 0.9) -> DataFrame:
     """Shingle CONTAINMENT |A intersect B| / |A| for ordered pairs — the
     asymmetric cousin of :func:`ngram_jaccard_pairs`, and the right
     score for quote/inclusion detection: a short document embedded
@@ -622,40 +647,13 @@ def containment_pairs(
 
     Emits BOTH directions (doc_a contained-in doc_b is not doc_b
     contained-in doc_a); ``doc_a`` is the contained side. Same scale
-    posture as the Jaccard form: the explode is linear, the self-join
-    keys on the shingle, and ubiquitous shingles are the quadratic risk
-    — ``max_shingle_freq`` drops them via a broadcast anti join
-    (containment against a frequency-capped set is then a documented
-    under-estimate, exactly like the capped Jaccard entry).
+    posture and self-join as the Jaccard form (:func:`_shingle_overlap`);
+    no frequency cap, so the score is exact.
     """
-    sh = df.select(
-        F.col(id_col),
-        F.explode(word_shingles(F.col(text), shingle_n)).alias("s"),
-    )
-    if max_shingle_freq is not None:
-        freq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("f"))
-        hot = freq.filter(F.col("f") > max_shingle_freq).select("s")
-        sh = sh.join(F.broadcast(hot), "s", "left_anti")
-    sh = sh.localCheckpoint(eager=False)  # sizes + both join sides
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col(f"a.{id_col}") != F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("na"))
+    inter, _ = _shingle_overlap(df, None, operator.ne)
     cont = F.round(F.col("inter").cast("double") / F.col("na").cast("double"), 6)
     return (
-        inter.join(sa, "doc_a")
-        .select("doc_a", "doc_b", cont.alias("containment"))
+        inter.select("doc_a", "doc_b", cont.alias("containment"))
         .filter(F.col("containment") >= threshold)
     )
 
@@ -663,10 +661,7 @@ def containment_pairs(
 SPAN_OKEY_SHIFT = 1 << 20  # packs (doc_id, position) into one BIGINT
 
 
-def repeated_span_scrub(
-    df: DataFrame, text: str = "text", id_col: str = "doc_id",
-    span_w: int = 5,
-) -> DataFrame:
+def repeated_span_scrub(df: DataFrame, span_w: int = 5) -> DataFrame:
     """Exact repeated-SPAN removal — the rewrite stage of suffix-style
     substring dedup (Lee et al., "Deduplicating Training Data Makes
     Language Models Better"): every word ``span_w``-gram occurring more
@@ -694,11 +689,11 @@ def repeated_span_scrub(
     at 100 TB frequency-cap them exactly as ngram_jaccard_pairs does.
     """
     d = df.select(
-        F.col(id_col), F.split(F.col(text), " ").alias("ws")
+        F.col(ID_COL), tokens(F.col(TEXT_COL)).alias("ws")
     ).localCheckpoint(eager=False)  # occurrence branch + rewrite branch
     occ = (
         d.select(
-            F.col(id_col),
+            F.col(ID_COL),
             F.posexplode(array_shingles(F.col("ws"), span_w)).alias(
                 "p0", "gram"
             ),
@@ -708,12 +703,12 @@ def repeated_span_scrub(
         # makes a >2^20-token doc FAIL LOUDLY instead of silently
         # corrupting keeper selection via key overlap.
         .select(
-            F.col(id_col),
+            F.col(ID_COL),
             (F.col("p0") + 1).alias("i"),
             "gram",
             F.when(
                 F.assert_true(F.col("p0") + 1 < SPAN_OKEY_SHIFT).isNull(),
-                F.col(id_col) * SPAN_OKEY_SHIFT + F.col("p0") + 1,
+                F.col(ID_COL) * SPAN_OKEY_SHIFT + F.col("p0") + 1,
             ).alias("okey"),
         )
     )
@@ -723,20 +718,20 @@ def repeated_span_scrub(
     masked = (
         occ.join(keep.filter(F.col("n_occ") >= 2), "gram")
         .filter(F.col("okey") != F.col("first_okey"))
-        .select(F.col(id_col), "i")
+        .select(F.col(ID_COL), "i")
     )
     cov = (
         masked.select(
-            F.col(id_col),
+            F.col(ID_COL),
             F.explode(
                 F.sequence(F.col("i"), F.col("i") + (span_w - 1))
             ).alias("idx"),
         )
-        .groupBy(id_col)
+        .groupBy(ID_COL)
         .agg(F.array_sort(F.collect_set("idx")).alias("cov"))
     )
-    j = d.join(cov, id_col, "left").select(
-        F.col(id_col),
+    j = d.join(cov, ID_COL, "left").select(
+        F.col(ID_COL),
         "ws",
         F.coalesce("cov", F.array().cast("array<int>")).alias("cov"),
     )
@@ -749,7 +744,7 @@ def repeated_span_scrub(
     # positions), so masked count == |cov|
     n_masked = F.size("cov").cast("long")
     return j.select(
-        F.col(id_col),
+        F.col(ID_COL),
         n_tok.alias("n_tokens"),
         n_masked.alias("n_masked"),
         F.round(n_masked.cast("double") / n_tok.cast("double"), 6).alias(

@@ -11,6 +11,12 @@ unfilters incl. Paeth), and :func:`real_decode` dispatches on the
 container magic. Codecs that genuinely need external libraries
 (JPEG/MP3/H.264) still raise ``NotImplementedError`` honestly.
 
+Every decode stage here and every shard reader in shards.py runs one row
+loop, ``_payload_rows`` (mapInPandas, a function from one payload to its
+output rows), and every ``*_quarantine`` operator is ``_parse_or_quarantine``
+over it with a per-format stats function and reason table; the media
+formats share ``_MEDIA_REASONS`` and fall back to ``decode_error``.
+
 Scale notes: binary payloads make row groups huge — the readers of such
 tables must drop ``spark.sql.files.maxPartitionBytes`` and use
 ``mapInPandas`` (streamed Arrow batches, bounded memory) rather than
@@ -26,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType, BinaryType, DoubleType, FloatType, LongType, StringType,
+    ArrayType, BinaryType, DoubleType, LongType, StringType,
     StructField, StructType,
 )
 
@@ -43,15 +49,6 @@ MEDIA_SCHEMA = StructType(
         ]), True),
     ]
 )
-
-FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("n_bytes", LongType(), True),
-        StructField("feature", ArrayType(FloatType()), True),
-    ]
-)
-
 
 def real_decode(payload: bytes, kind: str):
     """Decode a media payload to (metadata dict, sample/pixel ndarray).
@@ -168,24 +165,23 @@ def parse_wav(buf: bytes) -> tuple[dict, np.ndarray]:
     return meta, samples
 
 
-def fake_feature(payload: bytes, dim: int = 8) -> list[float]:
-    """Deterministic stand-in feature extractor: byte-histogram folded into
-    ``dim`` buckets, normalised. Lets the full pipeline (batch shapes, Arrow
-    round-trip, schema) be exercised and asserted without media libs.
-
-    Per-payload form, kept as the semantic spec; the batch path below
-    (:func:`_batch_features`) computes the same histogram for a whole Arrow
-    chunk in one ``bincount`` and is what the mapInPandas stages use.
-    """
-    if payload is None:
-        return [0.0] * dim
-    arr = np.frombuffer(payload, dtype=np.uint8) % dim
-    counts = np.bincount(arr, minlength=dim)
-    return (counts / max(1, len(payload))).tolist()
+def _wav_samples(buf: bytes) -> tuple[dict, np.ndarray]:
+    """:func:`parse_wav` for the stats stages: a zero-length data chunk is
+    container-valid but has no amplitude stats (``s.max()`` would raise an
+    opaque numpy ValueError), so it raises the typed error the quarantine
+    split classifies."""
+    meta, s = parse_wav(buf)
+    if len(s) == 0:
+        raise ValueError("empty data chunk")
+    return meta, s
 
 
 def _batch_features(contents: pd.Series, dim: int) -> tuple[np.ndarray, np.ndarray]:
-    """Whole-batch histogram: one pass, no per-row Python.
+    """Deterministic stand-in feature extractor: each payload's byte
+    histogram folded into ``dim`` buckets and normalised by its length.
+    Lets the full pipeline (batch shapes, Arrow round-trip, schema) be
+    exercised and asserted without media libs. Whole-batch: one pass, no
+    per-row Python.
 
     Concatenates every payload in the chunk into a single byte buffer and
     scatter-counts ``row_index * dim + byte % dim`` with one ``bincount``
@@ -209,29 +205,6 @@ def _batch_features(contents: pd.Series, dim: int) -> tuple[np.ndarray, np.ndarr
     return lens, feat
 
 
-def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads.
-
-    Arrow-batched: each pandas chunk holds a bounded slice of rows, so
-    executor memory stays flat regardless of table size, and the Python
-    stage is one vectorised histogram per chunk (no per-row loop). This is
-    the canonical shape for any decode/resize/frame-sample stage.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            lens, feat = _batch_features(pdf["content"], dim)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_bytes": lens,
-                    "feature": list(feat.astype(np.float32)),
-                }
-            )
-
-    return media.mapInPandas(batches, FEATURE_SCHEMA)
-
-
 CHECKED_FEATURE_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -242,10 +215,15 @@ CHECKED_FEATURE_SCHEMA = StructType(
 
 
 def extract_features_checked(media: DataFrame, dim: int = 8) -> DataFrame:
-    """Oracle-checkable twin of :func:`extract_features`: same mapInPandas
-    plumbing, but features emitted as array<double> rounded to 6dp so an
-    ANSI-SQL oracle can reproduce the values exactly (the payloads under
-    test are ASCII, so byte == codepoint on the SQL side).
+    """mapInPandas feature extraction over binary payloads
+    (:func:`_batch_features`), emitted as array<double> rounded to 6dp so
+    an ANSI-SQL oracle can reproduce the values exactly (the payloads
+    under test are ASCII, so byte == codepoint on the SQL side).
+
+    Arrow-batched: each pandas chunk holds a bounded slice of rows, so
+    executor memory stays flat regardless of table size, and the Python
+    stage is one vectorised histogram per chunk (no per-row loop). This is
+    the canonical shape for any decode/resize/frame-sample stage.
 
     Rounding is half-away-from-zero, NOT Python's half-to-even ``round`` —
     SQL engines round half away, and power-of-two payload lengths hit
@@ -302,36 +280,33 @@ _WAV_MID = (
 )
 
 
-def encode_ppm_from_text(
-    docs: DataFrame, width: int = PPM_WIDTH, max_h: int = PPM_MAX_H
-) -> DataFrame:
+def encode_ppm_from_text(docs: DataFrame) -> DataFrame:
     """Build a REAL binary PPM (P6) per document, entirely JVM-side: the
     ASCII header plus the first width*h*3 text bytes as the RGB raster
     (documents are pure ASCII, so utf-8 encode is byte-exact — asserted
-    by the oracle's ord() reproduction). h = min(max_h, len/3w); docs
+    by the oracle's ord() reproduction), width = ``PPM_WIDTH`` and
+    h = min(``PPM_MAX_H``, len/3w); docs
     shorter than one pixel row are dropped (none exist in the driver
     data, min doc length 44 >= 24). The deterministic synthetic fixture
     for :func:`decode_ppm` — a real media lake would read binary columns
     straight from parquet."""
-    h = F.least(F.lit(max_h), F.floor(F.length("text") / (3 * width))).cast(
+    h = F.least(F.lit(PPM_MAX_H), F.floor(F.length("text") / (3 * PPM_WIDTH))).cast(
         "int"
     )
-    body = F.col("text").substr(F.lit(1), (h * (3 * width)).cast("int"))
+    body = F.col("text").substr(F.lit(1), (h * (3 * PPM_WIDTH)).cast("int"))
     header = F.concat(
-        F.lit(f"P6\n{width} "), h.cast("string"), F.lit("\n255\n")
+        F.lit(f"P6\n{PPM_WIDTH} "), h.cast("string"), F.lit("\n255\n")
     )
-    return docs.filter(F.length("text") >= 3 * width).select(
+    return docs.filter(F.length("text") >= 3 * PPM_WIDTH).select(
         F.col("doc_id").alias("media_id"),
         F.encode(F.concat(header, body), "utf-8").alias("content"),
     )
 
 
-def encode_wav_from_text(
-    docs: DataFrame, max_samples: int = WAV_MAX_SAMPLES
-) -> DataFrame:
+def encode_wav_from_text(docs: DataFrame) -> DataFrame:
     """Build a REAL RIFF/WAVE 8-bit-PCM file per document, JVM-side: the
-    first min(max_samples, len) text bytes are the unsigned samples.
-    With max_samples <= 64 every variable header byte (RIFF size 36+n,
+    first min(``WAV_MAX_SAMPLES``, len) text bytes are the unsigned samples.
+    With WAV_MAX_SAMPLES <= 64 every variable header byte (RIFF size 36+n,
     data size n) stays < 0x80, so chr()+utf-8 encode is byte-exact.
 
     Empty documents are dropped (like the PPM encoder drops sub-row docs):
@@ -339,7 +314,7 @@ def encode_wav_from_text(
     generate_series(1, 0) emits no row for it, and decode_wav raises a
     typed error on it — filtering keeps both engines aligned (round-8
     ADVICE fix; no such doc exists in the driver data, min length 44)."""
-    n = F.least(F.lit(max_samples), F.length("text")).cast("int")
+    n = F.least(F.lit(WAV_MAX_SAMPLES), F.length("text")).cast("int")
     content = F.concat(
         F.lit("RIFF"),
         F.chr((n + 36).cast("long")),
@@ -370,6 +345,40 @@ PPM_STATS_SCHEMA = StructType(
 )
 
 
+def _payload_rows(
+    frame: DataFrame, key: str, blob: str, rows, schema: StructType
+) -> DataFrame:
+    """The row loop of every payload stage: mapInPandas over ``frame``,
+    ``rows(key value, payload bytes)`` giving each payload's output rows.
+    Arrow batches bound memory, map-only, no shuffle."""
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            out = []
+            for k, buf in zip(pdf[key], pdf[blob]):
+                out.extend(rows(k, bytes(buf)))
+            yield pd.DataFrame(out, columns=schema.fieldNames())
+
+    return frame.mapInPandas(batches, schema)
+
+
+def _channel_sums(px: np.ndarray) -> list[int]:
+    """R, G, B sums of an (h, w, ch) raster. Grayscale has one channel;
+    its sum fills all three slots (sum_r == sum_g == sum_b holds for a
+    gray raster expanded to RGB, so the contract stays oracle-checkable)."""
+    csum = px.sum(axis=(0, 1), dtype=np.int64)
+    if px.shape[2] == 1:
+        csum = np.repeat(csum, 3)
+    return [int(c) for c in csum]
+
+
+def _raster_row(meta: dict, px: np.ndarray, third) -> tuple:
+    """(width, height, ``third``, n_pixels, sum_r, sum_g, sum_b, min_byte,
+    max_byte) of a decoded raster — the PPM and PNG stats rows."""
+    w, h = meta["width"], meta["height"]
+    return (w, h, third, w * h, *_channel_sums(px), int(px.min()), int(px.max()))
+
+
 def decode_ppm(media: DataFrame) -> DataFrame:
     """mapInPandas over binary payloads -> per-image stats via the REAL
     PPM parser (:func:`parse_ppm`): dimensions come from the parsed
@@ -380,23 +389,11 @@ def decode_ppm(media: DataFrame) -> DataFrame:
     (MBs) the vectorized pixel work dominates the per-row overhead,
     the same cost shape as any decoder. Arrow batches bound memory."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                meta, px = parse_ppm(bytes(buf))
-                csum = px.sum(axis=(0, 1), dtype=np.int64)
-                rows.append(
-                    (
-                        int(mid), meta["width"], meta["height"],
-                        meta["maxval"], meta["width"] * meta["height"],
-                        int(csum[0]), int(csum[1]), int(csum[2]),
-                        int(px.min()), int(px.max()),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=PPM_STATS_SCHEMA.fieldNames())
+    def rows(mid, buf: bytes) -> list[tuple]:
+        meta, px = parse_ppm(buf)
+        return [(mid, *_raster_row(meta, px, meta["maxval"]))]
 
-    return media.mapInPandas(batches, PPM_STATS_SCHEMA)
+    return _payload_rows(media, "media_id", "content", rows, PPM_STATS_SCHEMA)
 
 
 WAV_STATS_SCHEMA = StructType(
@@ -420,39 +417,25 @@ def decode_wav(media: DataFrame) -> DataFrame:
     misreads offsets mismatches immediately), amplitude stats from the
     decoded PCM. Integer-exact like the PPM twin."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                meta, s = parse_wav(bytes(buf))
-                if len(s) == 0:
-                    # a zero-length data chunk is container-valid but has
-                    # no amplitude stats; s.max() would raise an opaque
-                    # numpy ValueError — raise the typed error instead so
-                    # the quarantine wrapper can classify it (round-8
-                    # ADVICE fix).
-                    raise ValueError("empty data chunk")
-                rows.append(
-                    (
-                        int(mid), meta["sample_rate"], meta["n_channels"],
-                        meta["bits"], len(s),
-                        int(s.sum(dtype=np.int64)),
-                        int(s.max()), int(s.min()),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=WAV_STATS_SCHEMA.fieldNames())
+    def rows(mid, buf: bytes) -> list[tuple]:
+        meta, s = _wav_samples(buf)
+        return [(
+            mid, meta["sample_rate"], meta["n_channels"], meta["bits"],
+            len(s), int(s.sum(dtype=np.int64)), int(s.max()), int(s.min()),
+        )]
 
-    return media.mapInPandas(batches, WAV_STATS_SCHEMA)
+    return _payload_rows(media, "media_id", "content", rows, WAV_STATS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
 # quarantine decode (round 8): malformed containers split, not crashed
 # ---------------------------------------------------------------------------
 
-# stable reason codes, classified from the typed errors the parsers raise;
-# mirrors the PERMISSIVE-mode corrupt-record split of quarantine_replay
-# (sources/jsonl.py) applied to binary media
-_REASON_PREFIXES: list[tuple[str, str]] = [
+# stable reason codes: the first entry whose text occurs in the error a
+# parser raised names the guard that fired; mirrors the PERMISSIVE-mode
+# corrupt-record split of quarantine_replay (sources/jsonl.py) applied to
+# binary media
+_MEDIA_REASONS = (
     ("bad_magic", "not a P6 PPM"),
     ("bad_maxval", "PPM maxval"),
     ("truncated", "truncated"),  # PPM header/raster, WAV chunk, PNG chunk
@@ -465,19 +448,43 @@ _REASON_PREFIXES: list[tuple[str, str]] = [
     ("interlaced", "PNG interlace"),
     ("unsupported", "PNG bit depth"),
     ("unsupported", "PNG color type"),
-]
+)
+
+
+def _reason(e: Exception, reasons, fallback: str) -> str:
+    msg = str(e)
+    return next((code for code, text in reasons if text in msg), fallback)
 
 
 def quarantine_reason(e: Exception) -> str:
-    """Map a parser error to a stable reason code. Each code corresponds to
-    a distinct guard in parse_ppm/parse_wav/decode, so the oracle pinning a
-    code per corruption class verifies WHICH error path fired, not just
-    that something failed."""
-    msg = str(e)
-    for code, prefix in _REASON_PREFIXES:
-        if msg.startswith(prefix):
-            return code
-    return "decode_error"
+    """Map a media parser error to a stable reason code. Each code
+    corresponds to a distinct guard in parse_ppm/parse_wav/parse_png, so
+    the oracle pinning a code per corruption class verifies WHICH error
+    path fired, not just that something failed."""
+    return _reason(e, _MEDIA_REASONS, "decode_error")
+
+
+def _parse_or_quarantine(
+    frame: DataFrame, key: str, blob: str, stats, reasons, fallback: str,
+    schema: StructType,
+) -> DataFrame:
+    """The parse-or-quarantine split every ``*_quarantine`` operator runs:
+    one row per payload of ``frame`` — ``(key, 'ok', 'ok', *stats(payload))``,
+    or, when ``stats`` raises a parser's ValueError/NotImplementedError,
+    ``(key, 'quarantined', reason, NULL...)`` with the code of the first
+    ``reasons`` entry whose text occurs in the error, else ``fallback``.
+    At 100 TB a single corrupt object must never kill a decode stage; this
+    is the media twin of the PERMISSIVE corrupt-record path the JSONL
+    source uses (quarantine_replay). Map-only Arrow batches, no shuffle."""
+    nulls = (None,) * (len(schema.fields) - 3)
+
+    def rows(k, buf: bytes) -> list[tuple]:
+        try:
+            return [(k, "ok", "ok", *stats(buf))]
+        except (ValueError, NotImplementedError) as e:
+            return [(k, "quarantined", _reason(e, reasons, fallback), *nulls)]
+
+    return _payload_rows(frame, key, blob, rows, schema)
 
 
 QUARANTINE_PPM_SCHEMA = StructType(
@@ -491,38 +498,25 @@ QUARANTINE_PPM_SCHEMA = StructType(
 )
 
 
+def _raster_stats(parse):
+    """(n_pixels, sum of every channel byte) of the raster ``parse`` decodes."""
+
+    def stats(buf: bytes) -> tuple[int, int]:
+        meta, px = parse(buf)
+        return meta["width"] * meta["height"], int(px.sum(dtype=np.int64))
+
+    return stats
+
+
 def decode_ppm_quarantine(media: DataFrame) -> DataFrame:
     """PPM decode that SPLITS malformed containers into quarantine rows
-    instead of failing the job: every payload yields exactly one row —
-    status 'ok' with integer-exact raster stats, or status 'quarantined'
-    with a reason code naming the guard that rejected it. At 100 TB a
-    single corrupt object must never kill a decode stage; this is the
-    media twin of the PERMISSIVE corrupt-record path the JSONL source
-    uses (quarantine_replay). Map-only Arrow batches, no shuffle."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    meta, px = parse_ppm(bytes(buf))
-                    rows.append(
-                        (
-                            int(mid), "ok", "ok",
-                            meta["width"] * meta["height"],
-                            int(px.sum(dtype=np.int64)),
-                        )
-                    )
-                except (ValueError, NotImplementedError) as e:
-                    rows.append(
-                        (int(mid), "quarantined", quarantine_reason(e),
-                         None, None)
-                    )
-            yield pd.DataFrame(
-                rows, columns=QUARANTINE_PPM_SCHEMA.fieldNames()
-            )
-
-    return media.mapInPandas(batches, QUARANTINE_PPM_SCHEMA)
+    instead of failing the job (:func:`_parse_or_quarantine`): status 'ok'
+    with integer-exact raster stats, or status 'quarantined' with a reason
+    code naming the guard that rejected it."""
+    return _parse_or_quarantine(
+        media, "media_id", "content", _raster_stats(parse_ppm),
+        _MEDIA_REASONS, "decode_error", QUARANTINE_PPM_SCHEMA,
+    )
 
 
 QUARANTINE_WAV_SCHEMA = StructType(
@@ -570,29 +564,22 @@ def audio_features(media: DataFrame, window: int = 16) -> DataFrame:
     are computed in one numpy pass, clips are embarrassingly parallel —
     the same scale shape as every decode_* operator."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                meta, s = parse_wav(bytes(buf))
-                if len(s) == 0:
-                    raise ValueError("empty data chunk")
-                raw = s.astype(np.int64)
-                v = raw - 128 if meta["bits"] == 8 else raw
-                sg = raw * len(raw) >= raw.sum()  # DC-removed sign
-                for wi in range(0, len(v), window):
-                    seg = v[wi: wi + window]
-                    sseg = sg[wi: wi + window]
-                    rows.append(
-                        (
-                            int(mid), wi // window, len(seg),
-                            int((seg * seg).sum()),
-                            int((sseg[:-1] != sseg[1:]).sum()),
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=AUDIO_FEAT_SCHEMA.fieldNames())
+    def rows(mid, buf: bytes) -> list[tuple]:
+        meta, s = _wav_samples(buf)
+        raw = s.astype(np.int64)
+        v = raw - 128 if meta["bits"] == 8 else raw
+        sg = raw * len(raw) >= raw.sum()  # DC-removed sign
+        out = []
+        for wi in range(0, len(v), window):
+            seg = v[wi: wi + window]
+            sseg = sg[wi: wi + window]
+            out.append((
+                mid, wi // window, len(seg), int((seg * seg).sum()),
+                int((sseg[:-1] != sseg[1:]).sum()),
+            ))
+        return out
 
-    return media.mapInPandas(batches, AUDIO_FEAT_SCHEMA)
+    return _payload_rows(media, "media_id", "content", rows, AUDIO_FEAT_SCHEMA)
 
 
 def decode_wav_quarantine(media: DataFrame) -> DataFrame:
@@ -602,33 +589,17 @@ def decode_wav_quarantine(media: DataFrame) -> DataFrame:
     non-PCM format code (honest NotImplementedError) as quarantine rows
     rather than job failures."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    meta, s = parse_wav(bytes(buf))
-                    if len(s) == 0:
-                        raise ValueError("empty data chunk")
-                    rows.append(
-                        (int(mid), "ok", "ok", len(s),
-                         int(s.sum(dtype=np.int64)))
-                    )
-                except (ValueError, NotImplementedError) as e:
-                    rows.append(
-                        (int(mid), "quarantined", quarantine_reason(e),
-                         None, None)
-                    )
-            yield pd.DataFrame(
-                rows, columns=QUARANTINE_WAV_SCHEMA.fieldNames()
-            )
+    def stats(buf: bytes) -> tuple[int, int]:
+        _, s = _wav_samples(buf)
+        return len(s), int(s.sum(dtype=np.int64))
 
-    return media.mapInPandas(batches, QUARANTINE_WAV_SCHEMA)
+    return _parse_or_quarantine(
+        media, "media_id", "content", stats,
+        _MEDIA_REASONS, "decode_error", QUARANTINE_WAV_SCHEMA,
+    )
 
 
-def encode_ppm_corrupted(
-    docs: DataFrame, width: int = PPM_WIDTH, max_h: int = PPM_MAX_H
-) -> DataFrame:
+def encode_ppm_corrupted(docs: DataFrame) -> DataFrame:
     """The PPM fixture with DETERMINISTIC corruption classes keyed on
     doc_id % 10, built entirely JVM-side: 3 -> wrong magic ('Q6'),
     5 -> header maxval 999 (spec-valid 2-byte-per-sample form the parser
@@ -636,14 +607,14 @@ def encode_ppm_corrupted(
     short of the header's promise; every other doc encodes cleanly.
     Each class exercises a different parse_ppm guard."""
     cls = F.col("doc_id") % 10
-    h = F.least(F.lit(max_h), F.floor(F.length("text") / (3 * width))).cast(
+    h = F.least(F.lit(PPM_MAX_H), F.floor(F.length("text") / (3 * PPM_WIDTH))).cast(
         "int"
     )
-    row = 3 * width
+    row = 3 * PPM_WIDTH
     body = F.col("text").substr(F.lit(1), (h * row).cast("int"))
     body_short = F.col("text").substr(F.lit(1), (h * row - 10).cast("int"))
     hdr = lambda magic, maxval: F.concat(  # noqa: E731
-        F.lit(f"{magic}\n{width} "), h.cast("string"), F.lit(f"\n{maxval}\n")
+        F.lit(f"{magic}\n{PPM_WIDTH} "), h.cast("string"), F.lit(f"\n{maxval}\n")
     )
     content = (
         F.when(cls == 3, F.concat(hdr("Q6", 255), body))
@@ -661,9 +632,7 @@ def encode_ppm_corrupted(
 _WAV_MID_NONPCM = _WAV_MID[:15] + "\x02" + _WAV_MID[16:]
 
 
-def encode_wav_corrupted(
-    docs: DataFrame, max_samples: int = WAV_MAX_SAMPLES
-) -> DataFrame:
+def encode_wav_corrupted(docs: DataFrame) -> DataFrame:
     """The WAV fixture with deterministic corruption classes keyed on
     doc_id % 10: 3 -> wrong magic ('RIFX'), 5 -> non-PCM format code
     (ADPCM) in the fmt chunk, 7 -> data chunk declares n samples but the
@@ -672,7 +641,7 @@ def encode_wav_corrupted(
     every other doc encodes cleanly. All JVM-side string builds — every
     variable byte stays < 0x80 so utf-8 encode is byte-exact."""
     cls = F.col("doc_id") % 10
-    n = F.least(F.lit(max_samples), F.length("text")).cast("int")
+    n = F.least(F.lit(WAV_MAX_SAMPLES), F.length("text")).cast("int")
     zeros = F.lit("\x00\x00\x00")
 
     def wav(magic: str, mid: str, data_n, body) -> F.Column:
@@ -772,6 +741,18 @@ def frame_sample(
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 PNG_WIDTH = 8
 PNG_MAX_H = 8
+
+
+def _text_raster(text) -> np.ndarray | None:
+    """The PNG fixtures' (h, PNG_WIDTH, 3) raster: the first 3*w*h utf-8
+    bytes of ``text``, h = min(PNG_MAX_H, len/3w); None below one row."""
+    data = str(text).encode("utf-8")
+    h = min(PNG_MAX_H, len(data) // (3 * PNG_WIDTH))
+    if h < 1:
+        return None
+    return np.frombuffer(
+        data, dtype=np.uint8, count=3 * PNG_WIDTH * h
+    ).reshape(h, PNG_WIDTH, 3)
 
 
 def _png_chunk(ctype: bytes, data: bytes) -> bytes:
@@ -956,12 +937,11 @@ def parse_png(buf: bytes) -> tuple[dict, np.ndarray]:
     return meta, px.reshape(h, w, ch)
 
 
-def encode_png_from_text(
-    docs: DataFrame, width: int = PNG_WIDTH, max_h: int = PNG_MAX_H
-) -> DataFrame:
+def encode_png_from_text(docs: DataFrame) -> DataFrame:
     """Build a REAL PNG per document: the first width*h*3 text bytes are
-    the RGB raster (documents are pure ASCII, so utf-8 bytes == the
-    ord() values the oracle computes), scanlines filtered row%5 through
+    the RGB raster (:func:`_text_raster`; documents are pure ASCII, so
+    utf-8 bytes == the ord() values the oracle computes), scanlines
+    filtered row%5 through
     all five PNG filter types, zlib-deflated, CRC'd. Runs in
     mapInPandas (zlib + CRC need Python — unlike the PPM/WAV fixtures
     there is no JVM string-build form of deflate); the oracle never
@@ -971,14 +951,9 @@ def encode_png_from_text(
         for pdf in it:
             rows = []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                data = str(text).encode("utf-8")
-                h = min(max_h, len(data) // (3 * width))
-                if h < 1:
-                    continue
-                px = np.frombuffer(
-                    data, dtype=np.uint8, count=3 * width * h
-                ).reshape(h, width, 3)
-                rows.append((int(doc_id), build_png(px)))
+                px = _text_raster(text)
+                if px is not None:
+                    rows.append((int(doc_id), build_png(px)))
             yield pd.DataFrame(rows, columns=["media_id", "content"])
 
     return docs.select("doc_id", "text").mapInPandas(
@@ -1020,38 +995,17 @@ def decode_png(media: DataFrame) -> DataFrame:
     map-only Arrow batches, embarrassing parallelism across images,
     same as every production PNG pipeline."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                meta, px = parse_png(bytes(buf))
-                csum = px.sum(axis=(0, 1), dtype=np.int64)
-                # grayscale (color type 0) has one channel; report its
-                # sum in all three slots so a gray PNG never indexes
-                # past the end of csum (sum_r == sum_g == sum_b holds
-                # for a gray raster expanded to RGB, so the contract
-                # stays oracle-checkable)
-                if meta["channels"] == 1:
-                    csum = np.repeat(csum, 3)
-                rows.append(
-                    (
-                        int(mid), meta["width"], meta["height"],
-                        meta["depth"], meta["width"] * meta["height"],
-                        int(csum[0]), int(csum[1]), int(csum[2]),
-                        int(px.min()), int(px.max()),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=PNG_STATS_SCHEMA.fieldNames())
+    def rows(mid, buf: bytes) -> list[tuple]:
+        meta, px = parse_png(buf)
+        return [(mid, *_raster_row(meta, px, meta["depth"]))]
 
-    return media.mapInPandas(batches, PNG_STATS_SCHEMA)
+    return _payload_rows(media, "media_id", "content", rows, PNG_STATS_SCHEMA)
 
 
 QUARANTINE_PNG_SCHEMA = QUARANTINE_PPM_SCHEMA
 
 
-def encode_png_corrupted(
-    docs: DataFrame, width: int = PNG_WIDTH, max_h: int = PNG_MAX_H
-) -> DataFrame:
+def encode_png_corrupted(docs: DataFrame) -> DataFrame:
     """The PNG fixture with DETERMINISTIC corruption classes keyed on
     doc_id % 10: 3 -> first signature byte flipped (signature guard),
     5 -> IHDR declares Adam7 interlace WITH a recomputed CRC (the
@@ -1067,20 +1021,17 @@ def encode_png_corrupted(
         for pdf in it:
             rows = []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                data = str(text).encode("utf-8")
-                h = min(max_h, len(data) // (3 * width))
-                if h < 1:
+                px = _text_raster(text)
+                if px is None:
                     continue
-                px = np.frombuffer(
-                    data, dtype=np.uint8, count=3 * width * h
-                ).reshape(h, width, 3)
+                h = px.shape[0]
                 png = bytearray(build_png(px))
                 cls = int(doc_id) % 10
                 if cls == 3:
                     png[0] ^= 0x01
                 elif cls == 5:
                     ihdr = struct.pack(
-                        ">IIBBBBB", width, h, 8, 2, 0, 0, 1  # interlace=1
+                        ">IIBBBBB", PNG_WIDTH, h, 8, 2, 0, 0, 1  # interlace=1
                     )
                     png = bytearray(
                         PNG_SIG + _png_chunk(b"IHDR", ihdr)
@@ -1111,30 +1062,10 @@ def decode_png_quarantine(media: DataFrame) -> DataFrame:
     payload — 'ok' with integer-exact raster stats, or 'quarantined'
     with the reason code of the guard that rejected it (signature, crc,
     truncation, or the honest unsupported-feature refusal)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    meta, px = parse_png(bytes(buf))
-                    rows.append(
-                        (
-                            int(mid), "ok", "ok",
-                            meta["width"] * meta["height"],
-                            int(px.sum(dtype=np.int64)),
-                        )
-                    )
-                except (ValueError, NotImplementedError) as e:
-                    rows.append(
-                        (int(mid), "quarantined", quarantine_reason(e),
-                         None, None)
-                    )
-            yield pd.DataFrame(
-                rows, columns=QUARANTINE_PNG_SCHEMA.fieldNames()
-            )
-
-    return media.mapInPandas(batches, QUARANTINE_PNG_SCHEMA)
+    return _parse_or_quarantine(
+        media, "media_id", "content", _raster_stats(parse_png),
+        _MEDIA_REASONS, "decode_error", QUARANTINE_PNG_SCHEMA,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1178,22 +1109,11 @@ def png_resize_stats(
     decode stage (rows of one image are sequential by PNG spec;
     images are embarrassingly parallel)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                meta, px = parse_png(bytes(buf))
-                small = resize_nn(px, out_h, out_w)
-                csum = small.sum(axis=(0, 1), dtype=np.int64)
-                if meta["channels"] == 1:
-                    csum = np.repeat(csum, 3)
-                rows.append(
-                    (
-                        int(mid), meta["width"], meta["height"],
-                        out_w, out_h,
-                        int(csum[0]), int(csum[1]), int(csum[2]),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=PNG_RESIZE_SCHEMA.fieldNames())
+    def rows(mid, buf: bytes) -> list[tuple]:
+        meta, px = parse_png(buf)
+        return [(
+            mid, meta["width"], meta["height"], out_w, out_h,
+            *_channel_sums(resize_nn(px, out_h, out_w)),
+        )]
 
-    return media.mapInPandas(batches, PNG_RESIZE_SCHEMA)
+    return _payload_rows(media, "media_id", "content", rows, PNG_RESIZE_SCHEMA)

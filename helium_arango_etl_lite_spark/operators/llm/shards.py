@@ -20,6 +20,14 @@ implementation, and the payload md5 certifies byte-exact extraction —
 the SQL oracle recomputes the SAME offsets from pure arithmetic
 (512-block spans cumulated in member order) and the SAME md5 from the
 source text without ever seeing a tar byte.
+
+The three containers (tar, .jsonl.gz, zip) share their plumbing: ``_pack``
+builds one blob per ``key_col`` group with members in doc_id order,
+``_index`` and the readers walk blobs through multimodal's
+``_payload_rows``, ``_corrupt`` applies the deterministic corruption
+classes, and each ``*_quarantine`` reader is multimodal's
+``_parse_or_quarantine`` with a per-format reason table falling back to
+``parse_error``.
 """
 
 from __future__ import annotations
@@ -34,6 +42,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType, LongType, StringType, StructField, StructType,
 )
+
+from .multimodal import _parse_or_quarantine, _payload_rows
 
 SHARD_SCHEMA = StructType(
     [
@@ -53,24 +63,91 @@ INDEX_SCHEMA = StructType(
     ]
 )
 
+QUARANTINE_SHARD_SCHEMA = StructType(
+    [
+        StructField("source", StringType(), False),
+        StructField("status", StringType(), False),
+        StructField("reason", StringType(), False),
+        StructField("n_members", LongType(), True),
+    ]
+)
+
+
+def _pack(docs: DataFrame, key_col: str, write, schema: StructType) -> DataFrame:
+    """One blob per ``key_col`` group under ``applyInPandas``:
+    ``write(doc_ids, texts)`` builds it from the group's documents in
+    doc_id order. Group = shard is the real sharding dataflow — the
+    group key IS the shard assignment."""
+    if key_col != "source":
+        docs = docs.withColumnRenamed(key_col, "source")
+    blob = schema.fieldNames()[1]
+
+    def build(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("doc_id")
+        return pd.DataFrame(
+            [
+                {
+                    "source": pdf["source"].iloc[0],
+                    blob: write(pdf["doc_id"], pdf["text"]),
+                    "n_members": len(pdf),
+                }
+            ]
+        )
+
+    return docs.select("source", "doc_id", "text").groupBy(
+        "source"
+    ).applyInPandas(build, schema)
+
+
+def _index(shards: DataFrame, parse) -> DataFrame:
+    """One row per member that ``parse`` walks in each shard blob, with
+    the md5 of the bytes it SLICED OUT of the shard (not of any side
+    channel) — hash agreement with a text-side oracle certifies the whole
+    offset walk byte-for-byte."""
+
+    def rows(src, buf: bytes) -> list[tuple]:
+        return [
+            (src, name, off, size, hashlib.md5(payload).hexdigest())
+            for name, off, size, payload in parse(buf)
+        ]
+
+    return _payload_rows(shards, "source", "shard", rows, INDEX_SCHEMA)
+
+
+def _corrupt(shards: DataFrame, blob: str, cls_col: str, damage) -> DataFrame:
+    """``damage(bytearray, cls)`` applied to every ``blob`` of ``shards``,
+    ``cls_col`` holding the corruption class per row (0 = intact)."""
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            out = []
+            for src, buf, cls in zip(pdf["source"], pdf[blob], pdf[cls_col]):
+                out.append((src, bytes(damage(bytearray(bytes(buf)), cls))))
+            yield pd.DataFrame(out, columns=["source", blob])
+
+    return shards.mapInPandas(
+        batches,
+        StructType(
+            [
+                StructField("source", StringType(), False),
+                StructField(blob, BinaryType(), False),
+            ]
+        ),
+    )
+
 
 def pack_tar_shards(docs: DataFrame, key_col: str = "source") -> DataFrame:
     """One USTAR tar per ``key_col`` group: members are ``{doc_id}.txt``
     in doc_id order with zeroed metadata (mtime/uid/gid, fixed mode) so
-    the bytes are deterministic. Group = shard is the real sharding
-    dataflow — the group key IS the shard assignment (cf.
-    llm_shard_assign, whose rendezvous output feeds this directly in
-    llm_curation_end_to_end)."""
-    if key_col != "source":
-        docs = docs.withColumnRenamed(key_col, "source")
+    the bytes are deterministic (cf. llm_shard_assign, whose rendezvous
+    output feeds this directly in llm_curation_end_to_end)."""
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
+    def write(doc_ids, texts) -> bytes:
         bio = io.BytesIO()
         with tarfile.open(
             fileobj=bio, mode="w", format=tarfile.USTAR_FORMAT
         ) as tf:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+            for doc_id, text in zip(doc_ids, texts):
                 data = str(text).encode("utf-8")
                 ti = tarfile.TarInfo(name=f"{int(doc_id)}.txt")
                 ti.size = len(data)
@@ -79,19 +156,9 @@ def pack_tar_shards(docs: DataFrame, key_col: str = "source") -> DataFrame:
                 ti.uid = ti.gid = 0
                 ti.uname = ti.gname = ""
                 tf.addfile(ti, io.BytesIO(data))
-        return pd.DataFrame(
-            [
-                {
-                    "source": pdf["source"].iloc[0],
-                    "shard": bio.getvalue(),
-                    "n_members": len(pdf),
-                }
-            ]
-        )
+        return bio.getvalue()
 
-    return docs.select("source", "doc_id", "text").groupBy(
-        "source"
-    ).applyInPandas(build, SHARD_SCHEMA)
+    return _pack(docs, key_col, write, SHARD_SCHEMA)
 
 
 def parse_tar_index(buf: bytes) -> list[tuple[str, int, int, bytes]]:
@@ -147,39 +214,16 @@ def parse_tar_index(buf: bytes) -> list[tuple[str, int, int, bytes]]:
 
 
 def index_tar_shards(shards: DataFrame) -> DataFrame:
-    """mapInPandas over shard blobs -> one row per member with the md5
-    of the bytes the parser SLICED OUT of the shard (not of any side
-    channel) — hash agreement with a text-side oracle certifies the
-    whole offset walk byte-for-byte."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for src, buf in zip(pdf["source"], pdf["shard"]):
-                for name, off, size, payload in parse_tar_index(bytes(buf)):
-                    rows.append(
-                        (
-                            src, name, off, size,
-                            hashlib.md5(payload).hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=INDEX_SCHEMA.fieldNames())
-
-    return shards.mapInPandas(batches, INDEX_SCHEMA)
+    """One row per tar member (:func:`parse_tar_index`) with the md5 of
+    its payload bytes (``_index``)."""
+    return _index(shards, parse_tar_index)
 
 
 # ---------------------------------------------------------------------------
 # corrupt-shard quarantine (the archive twin of decode_ppm_quarantine)
 # ---------------------------------------------------------------------------
 
-QUARANTINE_SHARD_SCHEMA = StructType(
-    [
-        StructField("source", StringType(), False),
-        StructField("status", StringType(), False),
-        StructField("reason", StringType(), False),
-        StructField("n_members", LongType(), True),
-    ]
-)
+_TAR_REASONS = (("checksum", "checksum"), ("truncated", "truncated"))
 
 
 def corrupt_shards(shards: DataFrame, cls_col: str) -> DataFrame:
@@ -191,33 +235,18 @@ def corrupt_shards(shards: DataFrame, cls_col: str) -> DataFrame:
     a tiny (or empty) first member cannot slip through as 'ok'
     (truncation guard). ``cls_col`` holds the class per row."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for src, buf, cls in zip(
-                pdf["source"], pdf["shard"], pdf[cls_col]
-            ):
-                b = bytearray(bytes(buf))
-                if cls == 1:
-                    b[1] ^= 0xFF
-                elif cls == 2:
-                    # cut one byte before the first member's payload end
-                    # (or into the header itself for an empty member) so
-                    # the cut ALWAYS lands mid-member regardless of size
-                    size = int(b[124:136].split(b"\0")[0].strip(), 8)
-                    b = b[: 512 + size - 1] if size >= 1 else b[:511]
-                out.append((src, bytes(b)))
-            yield pd.DataFrame(out, columns=["source", "shard"])
+    def damage(b: bytearray, cls) -> bytearray:
+        if cls == 1:
+            b[1] ^= 0xFF
+        elif cls == 2:
+            # cut one byte before the first member's payload end (or into
+            # the header itself for an empty member) so the cut ALWAYS
+            # lands mid-member regardless of size
+            size = int(b[124:136].split(b"\0")[0].strip(), 8)
+            b = b[: 512 + size - 1] if size >= 1 else b[:511]
+        return b
 
-    return shards.mapInPandas(
-        batches,
-        StructType(
-            [
-                StructField("source", StringType(), False),
-                StructField("shard", BinaryType(), False),
-            ]
-        ),
-    )
+    return _corrupt(shards, "shard", cls_col, damage)
 
 
 def index_tar_shards_quarantine(shards: DataFrame) -> DataFrame:
@@ -226,29 +255,10 @@ def index_tar_shards_quarantine(shards: DataFrame) -> DataFrame:
     count, or 'quarantined' with a reason naming the parser guard that
     fired ('checksum' / 'truncated'). At fleet scale one rotted shard
     must cost one quarantine row, never the nightly indexing job."""
-
-    def reason(e: Exception) -> str:
-        msg = str(e)
-        if "checksum" in msg:
-            return "checksum"
-        if "truncated" in msg:
-            return "truncated"
-        return "parse_error"
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for src, buf in zip(pdf["source"], pdf["shard"]):
-                try:
-                    members = parse_tar_index(bytes(buf))
-                    rows.append((src, "ok", "ok", len(members)))
-                except ValueError as e:
-                    rows.append((src, "quarantined", reason(e), None))
-            yield pd.DataFrame(
-                rows, columns=QUARANTINE_SHARD_SCHEMA.fieldNames()
-            )
-
-    return shards.mapInPandas(batches, QUARANTINE_SHARD_SCHEMA)
+    return _parse_or_quarantine(
+        shards, "source", "shard", lambda buf: (len(parse_tar_index(buf)),),
+        _TAR_REASONS, "parse_error", QUARANTINE_SHARD_SCHEMA,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -273,42 +283,33 @@ GZ_DOC_SCHEMA = StructType(
     ]
 )
 
+_GZIP_REASONS = (
+    ("truncated", "truncated gzip member"),
+    ("corrupt", "corrupt gzip member"),
+)
+
 
 def pack_gzip_jsonl(docs: DataFrame, key_col: str = "source") -> DataFrame:
-    """One ``.jsonl.gz`` blob per group, built under ``applyInPandas``:
-    each document is its OWN gzip member (one JSON line, ``mtime=0`` for
-    byte determinism), members concatenated — the multi-member form the
-    gzip spec guarantees readers must accept, and the layout parallel
-    writers actually produce (every worker gzips its slice, the blobs
-    concatenate without recompression). Members in doc_id order."""
+    """One ``.jsonl.gz`` blob per group: each document is its OWN gzip
+    member (one JSON line, ``mtime=0`` for byte determinism), members
+    concatenated — the multi-member form the gzip spec guarantees readers
+    must accept, and the layout parallel writers actually produce (every
+    worker gzips its slice, the blobs concatenate without recompression).
+    Members in doc_id order."""
     import gzip
     import json
 
-    if key_col != "source":
-        docs = docs.withColumnRenamed(key_col, "source")
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
+    def write(doc_ids, texts) -> bytes:
         parts = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+        for doc_id, text in zip(doc_ids, texts):
             line = json.dumps(
                 {"doc_id": int(doc_id), "text": str(text)},
                 ensure_ascii=False, separators=(", ", ": "),
             ) + "\n"
             parts.append(gzip.compress(line.encode("utf-8"), mtime=0))
-        return pd.DataFrame(
-            [
-                {
-                    "source": pdf["source"].iloc[0],
-                    "blob": b"".join(parts),
-                    "n_members": len(parts),
-                }
-            ]
-        )
+        return b"".join(parts)
 
-    return docs.select("source", "doc_id", "text").groupBy(
-        "source"
-    ).applyInPandas(build, GZ_SHARD_SCHEMA)
+    return _pack(docs, key_col, write, GZ_SHARD_SCHEMA)
 
 
 def parse_gzip_members(buf: bytes) -> list[bytes]:
@@ -343,25 +344,20 @@ def read_gzip_jsonl(shards: DataFrame) -> DataFrame:
     """mapInPandas over ``.jsonl.gz`` blobs -> one row per document with
     the md5 and byte length of the PARSED text (json-decoded, so the
     check is container -> member -> line -> field, end to end)."""
-    import hashlib
     import json
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for src, buf in zip(pdf["source"], pdf["blob"]):
-                for i, member in enumerate(parse_gzip_members(bytes(buf))):
-                    rec = json.loads(member)
-                    data = rec["text"].encode("utf-8")
-                    rows.append(
-                        (
-                            src, i, int(rec["doc_id"]), len(data),
-                            hashlib.md5(data).hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=GZ_DOC_SCHEMA.fieldNames())
+    def rows(src, buf: bytes) -> list[tuple]:
+        out = []
+        for i, member in enumerate(parse_gzip_members(buf)):
+            rec = json.loads(member)
+            data = rec["text"].encode("utf-8")
+            out.append((
+                src, i, int(rec["doc_id"]), len(data),
+                hashlib.md5(data).hexdigest(),
+            ))
+        return out
 
-    return shards.mapInPandas(batches, GZ_DOC_SCHEMA)
+    return _payload_rows(shards, "source", "blob", rows, GZ_DOC_SCHEMA)
 
 
 def corrupt_gzip_shards(shards: DataFrame, cls_col: str) -> DataFrame:
@@ -372,29 +368,14 @@ def corrupt_gzip_shards(shards: DataFrame, cls_col: str) -> DataFrame:
     check — bit rot), 2 = blob cut 5 bytes short (truncated final
     member)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for src, buf, cls in zip(
-                pdf["source"], pdf["blob"], pdf[cls_col]
-            ):
-                b = bytearray(bytes(buf))
-                if cls == 1:
-                    b[15] ^= 0xFF  # past the 10-byte member header
-                elif cls == 2:
-                    b = b[:-5]
-                out.append((src, bytes(b)))
-            yield pd.DataFrame(out, columns=["source", "blob"])
+    def damage(b: bytearray, cls) -> bytearray:
+        if cls == 1:
+            b[15] ^= 0xFF  # past the 10-byte member header
+        elif cls == 2:
+            b = b[:-5]
+        return b
 
-    return shards.mapInPandas(
-        batches,
-        StructType(
-            [
-                StructField("source", StringType(), False),
-                StructField("blob", BinaryType(), False),
-            ]
-        ),
-    )
+    return _corrupt(shards, "blob", cls_col, damage)
 
 
 def read_gzip_jsonl_quarantine(shards: DataFrame) -> DataFrame:
@@ -411,29 +392,10 @@ def read_gzip_jsonl_quarantine(shards: DataFrame) -> DataFrame:
     completeness check is the EXPECTED member count per blob, which the
     capped shard index provides (pack with ``key_col`` and compare
     ``n_members`` against the index — see llm_gzip_quarantine_capped)."""
-
-    def reason(e: Exception) -> str:
-        msg = str(e)
-        if msg.startswith("truncated gzip member"):
-            return "truncated"
-        if msg.startswith("corrupt gzip member"):
-            return "corrupt"
-        return "parse_error"
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for src, buf in zip(pdf["source"], pdf["blob"]):
-                try:
-                    members = parse_gzip_members(bytes(buf))
-                    rows.append((src, "ok", "ok", len(members)))
-                except ValueError as e:
-                    rows.append((src, "quarantined", reason(e), None))
-            yield pd.DataFrame(
-                rows, columns=QUARANTINE_SHARD_SCHEMA.fieldNames()
-            )
-
-    return shards.mapInPandas(batches, QUARANTINE_SHARD_SCHEMA)
+    return _parse_or_quarantine(
+        shards, "source", "blob", lambda buf: (len(parse_gzip_members(buf)),),
+        _GZIP_REASONS, "parse_error", QUARANTINE_SHARD_SCHEMA,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -452,12 +414,16 @@ def read_gzip_jsonl_quarantine(shards: DataFrame) -> DataFrame:
 # shorter archive. Accidental truncation detection is structural;
 # tamper detection still needs the external shard index, same as tar.)
 
-ZIP_SHARD_SCHEMA = StructType(
-    [
-        StructField("source", StringType(), False),
-        StructField("shard", BinaryType(), False),
-        StructField("n_members", LongType(), False),
-    ]
+ZIP_SHARD_SCHEMA = SHARD_SCHEMA
+
+_ZIP_REASONS = (
+    ("crc", "CRC32"),
+    ("truncated", "end-of-central-directory"),
+    ("truncated", "span mismatch"),
+    ("truncated", "count mismatch"),
+    ("truncated", "overruns"),
+    ("truncated", "bad local header"),
+    ("truncated", "bad signature"),
 )
 
 
@@ -478,16 +444,12 @@ def pack_zip_shards(docs: DataFrame, key_col: str = "source") -> DataFrame:
     keeps every shard far inside both limits."""
     import zipfile
 
-    if key_col != "source":
-        docs = docs.withColumnRenamed(key_col, "source")
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
+    def write(doc_ids, texts) -> bytes:
         bio = io.BytesIO()
         with zipfile.ZipFile(
             bio, "w", compression=zipfile.ZIP_STORED, allowZip64=False
         ) as zf:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+            for doc_id, text in zip(doc_ids, texts):
                 zi = zipfile.ZipInfo(
                     filename=f"{int(doc_id)}.txt",
                     date_time=(1980, 1, 1, 0, 0, 0),
@@ -495,19 +457,9 @@ def pack_zip_shards(docs: DataFrame, key_col: str = "source") -> DataFrame:
                 zi.create_system = 3
                 zi.external_attr = 0o644 << 16
                 zf.writestr(zi, str(text).encode("utf-8"))
-        return pd.DataFrame(
-            [
-                {
-                    "source": pdf["source"].iloc[0],
-                    "shard": bio.getvalue(),
-                    "n_members": len(pdf),
-                }
-            ]
-        )
+        return bio.getvalue()
 
-    return docs.select("source", "doc_id", "text").groupBy(
-        "source"
-    ).applyInPandas(build, ZIP_SHARD_SCHEMA)
+    return _pack(docs, key_col, write, ZIP_SHARD_SCHEMA)
 
 
 def parse_zip_index(buf: bytes) -> list[tuple[str, int, int, bytes]]:
@@ -596,24 +548,10 @@ def parse_zip_index(buf: bytes) -> list[tuple[str, int, int, bytes]]:
 
 
 def index_zip_shards(shards: DataFrame) -> DataFrame:
-    """mapInPandas over zip shard blobs -> one row per member with the
-    md5 of the bytes the parser sliced out by offset arithmetic — the
+    """One row per zip member (:func:`parse_zip_index`) with the md5 of
+    the payload bytes it sliced out by offset arithmetic — the
     index_tar_shards contract over the zip container."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for src, buf in zip(pdf["source"], pdf["shard"]):
-                for name, off, size, payload in parse_zip_index(bytes(buf)):
-                    rows.append(
-                        (
-                            src, name, off, size,
-                            hashlib.md5(payload).hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=INDEX_SCHEMA.fieldNames())
-
-    return shards.mapInPandas(batches, INDEX_SCHEMA)
+    return _index(shards, parse_zip_index)
 
 
 def corrupt_zip_shards(shards: DataFrame, cls_col: str) -> DataFrame:
@@ -628,46 +566,28 @@ def corrupt_zip_shards(shards: DataFrame, cls_col: str) -> DataFrame:
     EOCD, which is the point of the format)."""
     import struct
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for src, buf, cls in zip(
-                pdf["source"], pdf["shard"], pdf[cls_col]
-            ):
-                b = bytearray(bytes(buf))
-                if cls == 1:
-                    # central entry 0's CRC32 field sits 16 bytes into
-                    # the record (sig 4 + versions 4 + flags/method 4 +
-                    # time/date 4)
-                    cd_off = struct.unpack("<I", bytes(b[-6:-2]))[0]
-                    b[cd_off + 16] ^= 0xFF
-                elif cls == 2:
-                    b = b[:-5]
-                elif cls == 3:
-                    cd_off = struct.unpack("<I", bytes(b[-6:-2]))[0]
-                    # last central entry's local-header offset
-                    pos, lho = cd_off, 0
-                    while pos < len(b) - 22:
-                        lho = struct.unpack(
-                            "<I", bytes(b[pos + 42: pos + 46])
-                        )[0]
-                        nlen, elen, clen = struct.unpack(
-                            "<HHH", bytes(b[pos + 28: pos + 34])
-                        )
-                        pos += 46 + nlen + elen + clen
-                    b = b[:lho]
-                out.append((src, bytes(b)))
-            yield pd.DataFrame(out, columns=["source", "shard"])
+    def damage(b: bytearray, cls) -> bytearray:
+        if cls == 1:
+            # central entry 0's CRC32 field sits 16 bytes into the record
+            # (sig 4 + versions 4 + flags/method 4 + time/date 4)
+            cd_off = struct.unpack("<I", bytes(b[-6:-2]))[0]
+            b[cd_off + 16] ^= 0xFF
+        elif cls == 2:
+            b = b[:-5]
+        elif cls == 3:
+            cd_off = struct.unpack("<I", bytes(b[-6:-2]))[0]
+            # last central entry's local-header offset
+            pos, lho = cd_off, 0
+            while pos < len(b) - 22:
+                lho = struct.unpack("<I", bytes(b[pos + 42: pos + 46]))[0]
+                nlen, elen, clen = struct.unpack(
+                    "<HHH", bytes(b[pos + 28: pos + 34])
+                )
+                pos += 46 + nlen + elen + clen
+            b = b[:lho]
+        return b
 
-    return shards.mapInPandas(
-        batches,
-        StructType(
-            [
-                StructField("source", StringType(), False),
-                StructField("shard", BinaryType(), False),
-            ]
-        ),
-    )
+    return _corrupt(shards, "shard", cls_col, damage)
 
 
 def index_zip_shards_quarantine(shards: DataFrame) -> DataFrame:
@@ -677,33 +597,7 @@ def index_zip_shards_quarantine(shards: DataFrame) -> DataFrame:
     'truncated' = EOCD/directory framing destroyed). Unlike the gzip
     walker, a member-boundary cut lands in 'truncated' here — the
     structural completeness check the container itself provides."""
-
-    def reason(e: Exception) -> str:
-        msg = str(e)
-        if "CRC32" in msg:
-            return "crc"
-        if (
-            "end-of-central-directory" in msg
-            or "span mismatch" in msg
-            or "count mismatch" in msg
-            or "overruns" in msg
-            or "bad local header" in msg
-            or "bad signature" in msg
-        ):
-            return "truncated"
-        return "parse_error"
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for src, buf in zip(pdf["source"], pdf["shard"]):
-                try:
-                    members = parse_zip_index(bytes(buf))
-                    rows.append((src, "ok", "ok", len(members)))
-                except ValueError as e:
-                    rows.append((src, "quarantined", reason(e), None))
-            yield pd.DataFrame(
-                rows, columns=QUARANTINE_SHARD_SCHEMA.fieldNames()
-            )
-
-    return shards.mapInPandas(batches, QUARANTINE_SHARD_SCHEMA)
+    return _parse_or_quarantine(
+        shards, "source", "shard", lambda buf: (len(parse_zip_index(buf)),),
+        _ZIP_REASONS, "parse_error", QUARANTINE_SHARD_SCHEMA,
+    )

@@ -1,9 +1,43 @@
 """Text-analysis operators for LLM data pipelines (north-star extensions,
 SURVEY.md section 2.8): language-ID, quality scoring, token counting,
-document fingerprinting.
+fingerprints, decontamination, search, tokenizer training and sketches.
 
-All hot-path logic is built-in pyspark.sql.functions (JVM, whole-stage
-codegen) — per-row string work at 100 TB must never drop into Python.
+Every operator is assembled from one copy of each kernel:
+
+===============================  ================================  ============================
+kernel                           helper                            operators that use it
+===============================  ================================  ============================
+whitespace tokens                ``dedup.tokens``                  lang_id, token_stats,
+                                                                   quality_score, token_count,
+                                                                   bm25_search, inverted_index,
+                                                                   bpe_pair_counts,
+                                                                   blocklist_filter,
+                                                                   tfidf_top_terms,
+                                                                   cms_token_buckets,
+                                                                   _bpe_loop, _unigram_build
+word n-grams, with multiplicity  ``dedup.word_shingles_all``       decontaminate,
+                                                                   repetition_score
+stopword occurrence count        :func:`stopword_score`            lang_id, quality_score
+winnowing fingerprints (Arrow)   :func:`winnow_fingerprints`       the winnowing entries
+BPE merge loop                   ``_bpe_loop``                     bpe_train, bpe_encode,
+                                                                   bpe_compression_curve,
+                                                                   bpe_fertility
+BPE pieces of an encoding        ``_bpe_pieces``                   the same four
+Count-Min cells                  :func:`cms_token_buckets`,        cms_heavy_hitters and the
+                                 :func:`cms_cell_increments`,      streaming sketch replay
+                                 :func:`cms_estimate_topk`
+unigram-LM Viterbi + EM          ``_unigram_build``                unigram_segment_counts,
+                                                                   unigram_corpus_nll,
+                                                                   unigram_em_counts
+===============================  ================================  ============================
+
+``_winnow_expr`` is the pure-JVM expression form of the winnowing
+kernel, kept as the reference the agreement test compares against.
+Document frames carry ``dedup.ID_COL`` and ``dedup.TEXT_COL``.
+
+Apart from the vectorized Arrow winnowing kernel, all hot-path logic is
+built-in pyspark.sql.functions (JVM, whole-stage codegen) — per-row string
+work at 100 TB must not drop into row-at-a-time Python.
 """
 
 from __future__ import annotations
@@ -11,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
+
+from .dedup import ID_COL, TEXT_COL, tokens, word_shingles_all
 
 # Tiny deterministic stopword lists for the n-gram/stopword language
 # heuristic. Real deployments swap in fastText/CLD3 via mapInPandas; the
@@ -26,20 +62,15 @@ STOPWORDS = {
 BPE_ISH_PATTERN = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]"
 
 
-def tokens(text_col: Column | str) -> Column:
-    """Whitespace tokens (single-space split, matching the oracle)."""
-    return F.split(text_col if isinstance(text_col, str) else text_col, " ")
-
-
 def stopword_score(tok: Column, lang: str) -> Column:
     """Occurrence count (duplicates included) of ``lang`` stopwords."""
     words = STOPWORDS[lang]
     return F.size(F.filter(tok, lambda t: t.isin(*words)))
 
 
-def lang_id(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Stopword-vote language ID with a deterministic tie-break (en>de>fr)."""
-    tok = tokens(text)
+    tok = tokens(TEXT_COL)
     s_en, s_de, s_fr = (stopword_score(tok, l) for l in ("en", "de", "fr"))
     pred = (
         F.when((s_en >= s_de) & (s_en >= s_fr), F.lit("en"))
@@ -47,7 +78,7 @@ def lang_id(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFr
         .otherwise(F.lit("fr"))
     )
     return df.select(
-        id_col,
+        ID_COL,
         s_en.alias("s_en"),
         s_de.alias("s_de"),
         s_fr.alias("s_fr"),
@@ -55,28 +86,28 @@ def lang_id(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFr
     )
 
 
-def token_stats(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
+def token_stats(df: DataFrame) -> DataFrame:
     """Per-document token statistics: counts, distinct counts, char length."""
-    tok = tokens(text)
+    tok = tokens(TEXT_COL)
     return df.select(
-        id_col,
+        ID_COL,
         F.size(tok).alias("n_tokens"),
         F.size(F.array_distinct(tok)).alias("n_distinct_tokens"),
-        F.length(text).alias("n_chars_measured"),
+        F.length(TEXT_COL).alias("n_chars_measured"),
     )
 
 
-def quality_score(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Heuristic quality features: length, stopword ratio, punctuation ratio,
     and a boolean keep/drop verdict. Per-row double division — bit-identical
     across engines, no rounding needed."""
-    tok = tokens(text)
+    tok = tokens(TEXT_COL)
     n_tokens = F.size(tok)
     stop_ratio = stopword_score(tok, "en").cast("double") / n_tokens.cast("double")
-    punct_n = F.size(F.regexp_extract_all(F.col(text), F.lit("[^a-zA-Z0-9 ]"), F.lit(0)))
-    punct_ratio = punct_n.cast("double") / F.length(text).cast("double")
+    punct_n = F.size(F.regexp_extract_all(F.col(TEXT_COL), F.lit("[^a-zA-Z0-9 ]"), F.lit(0)))
+    punct_ratio = punct_n.cast("double") / F.length(TEXT_COL).cast("double")
     return df.select(
-        id_col,
+        ID_COL,
         n_tokens.alias("n_tokens"),
         stop_ratio.alias("stop_ratio"),
         punct_ratio.alias("punct_ratio"),
@@ -84,20 +115,20 @@ def quality_score(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> 
     )
 
 
-def token_count(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
+def token_count(df: DataFrame) -> DataFrame:
     """Whitespace token count + BPE-ish regex token count (SURVEY 2.8)."""
     return df.select(
-        id_col,
-        F.size(tokens(text)).alias("ws_tokens"),
-        F.size(F.regexp_extract_all(F.col(text), F.lit(BPE_ISH_PATTERN), F.lit(0))).alias("bpe_ish_tokens"),
+        ID_COL,
+        F.size(tokens(TEXT_COL)).alias("ws_tokens"),
+        F.size(F.regexp_extract_all(F.col(TEXT_COL), F.lit(BPE_ISH_PATTERN), F.lit(0))).alias("bpe_ish_tokens"),
     )
 
 
-def fingerprint(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Normalised-content fingerprint: md5 of lowercase, whitespace-collapsed
     text. The exact-dedup key for content-equivalent documents."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text)), r"\s+", " "))
-    return df.select(id_col, F.md5(norm).alias("fp"))
+    norm = F.trim(F.regexp_replace(F.lower(F.col(TEXT_COL)), r"\s+", " "))
+    return df.select(ID_COL, F.md5(norm).alias("fp"))
 
 
 #: polynomial rolling-hash parameters (Rabin-Karp family): hash of a
@@ -107,14 +138,7 @@ ROLL_BASE = 131
 ROLL_MOD = (1 << 31) - 1
 
 
-def winnow_fingerprints(
-    df: DataFrame,
-    text: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    window: int = 4,
-    engine: str = "arrow",
-) -> DataFrame:
+def winnow_fingerprints(df: DataFrame, k: int = 5, window: int = 4) -> DataFrame:
     """Winnowing document fingerprints (the rolling-hash sketch of
     Schleimer/Wilkerson/Aiken's MOSS): hash every character ``k``-gram with
     a polynomial rolling hash, then keep the minimum hash of each sliding
@@ -123,66 +147,68 @@ def winnow_fingerprints(
     >= ``window + k - 1`` contributes at least one common fingerprint —
     the local-similarity dual to MinHash's global Jaccard sketch.
 
-    ``engine="arrow"`` (default): Arrow-batched mapInPandas — the k-gram
-    polynomial is one strided numpy sum, the sliding minimum one
-    ``sliding_window_view``. Catalyst runs higher-order array expressions
-    interpreted (not codegen), and the expression form's per-position
-    zip_with chains showed erratic multi-second GC stalls at sf0.1; the
-    vectorized path is faster and stable. Still zero shuffle.
-
-    ``engine="expr"``: built-in array expressions (sequence / transform /
-    slice / zip_with folds) — no Python workers. Both engines are pinned
-    bit-identical by test. Output: one row per (doc, fingerprint).
+    Arrow-batched mapInPandas — the k-gram polynomial is one strided
+    numpy sum, the sliding minimum one ``sliding_window_view``. Catalyst
+    runs higher-order array expressions interpreted (not codegen), and the
+    expression form's (:func:`_winnow_expr`, bit-identical by test)
+    per-position zip_with chains showed erratic multi-second GC stalls at
+    sf0.1; the vectorized path is faster and stable. Zero shuffle.
+    Output: one row per (doc, fingerprint).
     """
-    if engine == "arrow":
-        import numpy as np
-        import pandas as pd
-        from numpy.lib.stride_tricks import sliding_window_view
+    import numpy as np
+    import pandas as pd
+    from numpy.lib.stride_tricks import sliding_window_view
 
-        weights = np.array([ROLL_BASE**j for j in range(k)], dtype=np.int64)
-        out_schema = StructType(
-            [
-                StructField(id_col, df.schema[id_col].dataType),
-                StructField("fp_hash", LongType()),
-            ]
-        )
+    weights = np.array([ROLL_BASE**j for j in range(k)], dtype=np.int64)
+    out_schema = StructType(
+        [
+            StructField(ID_COL, df.schema[ID_COL].dataType),
+            StructField("fp_hash", LongType()),
+        ]
+    )
 
-        def batches(it):
-            for pdf in it:
-                ids: list = []
-                fps: list = []
-                for did, txt in zip(pdf[id_col].values, pdf[text].values):
-                    codes = np.fromiter(
-                        (ord(c) for c in txt), dtype=np.int64, count=len(txt)
-                    )
-                    n = codes.size
-                    if n < k:
-                        continue
-                    m = n - k + 1
-                    acc = np.zeros(m, dtype=np.int64)
-                    for j in range(k):
-                        acc += codes[j : j + m] * weights[j]
-                    grams = acc % ROLL_MOD
-                    if m >= window:
-                        mins = sliding_window_view(grams, window).min(axis=1)
-                    else:
-                        mins = grams.min(keepdims=True)
-                    sel = np.unique(mins)
-                    ids.extend([did] * sel.size)
-                    fps.extend(sel.tolist())
-                # explicit dtypes: an all-empty batch must still carry
-                # Arrow-mappable columns, not object/float64 defaults
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series(ids, dtype=pdf[id_col].dtype),
-                        "fp_hash": pd.Series(fps, dtype="int64"),
-                    }
+    def batches(it):
+        for pdf in it:
+            ids: list = []
+            fps: list = []
+            for did, txt in zip(pdf[ID_COL].values, pdf[TEXT_COL].values):
+                codes = np.fromiter(
+                    (ord(c) for c in txt), dtype=np.int64, count=len(txt)
                 )
+                n = codes.size
+                if n < k:
+                    continue
+                m = n - k + 1
+                acc = np.zeros(m, dtype=np.int64)
+                for j in range(k):
+                    acc += codes[j : j + m] * weights[j]
+                grams = acc % ROLL_MOD
+                if m >= window:
+                    mins = sliding_window_view(grams, window).min(axis=1)
+                else:
+                    mins = grams.min(keepdims=True)
+                sel = np.unique(mins)
+                ids.extend([did] * sel.size)
+                fps.extend(sel.tolist())
+            # explicit dtypes: an all-empty batch must still carry
+            # Arrow-mappable columns, not object/float64 defaults
+            yield pd.DataFrame(
+                {
+                    ID_COL: pd.Series(ids, dtype=pdf[ID_COL].dtype),
+                    "fp_hash": pd.Series(fps, dtype="int64"),
+                }
+            )
 
-        return df.select(F.col(id_col), F.col(text)).mapInPandas(
-            batches, out_schema
-        )
-    t = F.col(text)
+    return df.select(F.col(ID_COL), F.col(TEXT_COL)).mapInPandas(
+        batches, out_schema
+    )
+
+
+def _winnow_expr(df: DataFrame, k: int = 5, window: int = 4) -> DataFrame:
+    """:func:`winnow_fingerprints` as built-in array expressions
+    (sequence / transform / slice / zip_with folds), no Python workers —
+    the reference the Arrow kernel is tested bit-identical against."""
+    t = F.col(TEXT_COL)
     n = F.length(t)
     # char codes once per row; the k-gram polynomial is assembled from k
     # SHIFTED SLICES zip_with-ed together — pure array-to-array kernels
@@ -212,31 +238,11 @@ def winnow_fingerprints(
         .otherwise(F.array().cast("array<long>"))
     )
     return df.select(
-        F.col(id_col), F.explode(F.array_distinct(mins)).alias("fp_hash")
+        F.col(ID_COL), F.explode(F.array_distinct(mins)).alias("fp_hash")
     )
 
 
-def word_ngrams(text_col: Column | str, n: int) -> Column:
-    """Whitespace-token ``n``-grams as space-joined strings, built with
-    array expressions only (sequence/transform/slice — JVM-side): the
-    shared kernel for decontamination and repetition scoring. A document
-    with fewer than ``n`` tokens yields an empty array."""
-    t = tokens(text_col)
-    starts = F.when(
-        F.size(t) >= n, F.sequence(F.lit(1), F.size(t) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    return F.transform(
-        starts, lambda i: F.concat_ws(" ", F.slice(t, i, n))
-    )
-
-
-def decontaminate(
-    train: DataFrame,
-    benchmark: DataFrame,
-    n: int = 5,
-    text: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def decontaminate(train: DataFrame, benchmark: DataFrame, n: int = 5) -> DataFrame:
     """Benchmark decontamination: flag training documents sharing at least
     one word ``n``-gram with the benchmark/eval set (the train-test overlap
     scrub every LLM pipeline runs before training; GPT-3 appendix C /
@@ -249,19 +255,17 @@ def decontaminate(
     no shuffle of the 100 TB side. Returns one row per contaminated train
     doc: (id, n_hit_grams).
     """
-    grams = F.explode(word_ngrams(text, n))
-    train_g = train.select(F.col(id_col), grams.alias("g")).distinct()
+    grams = F.explode(word_shingles_all(TEXT_COL, n))
+    train_g = train.select(F.col(ID_COL), grams.alias("g")).distinct()
     bench_g = benchmark.select(grams.alias("g")).distinct()
     return (
         train_g.join(F.broadcast(bench_g), "g")
-        .groupBy(id_col)
+        .groupBy(ID_COL)
         .agg(F.count(F.lit(1)).alias("n_hit_grams"))
     )
 
 
-def repetition_score(
-    df: DataFrame, n: int = 3, text: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def repetition_score(df: DataFrame, n: int = 3) -> DataFrame:
     """Intra-document repetition: fraction of word ``n``-grams that are
     repeats of an earlier one (1 - distinct/total). The within-doc twin of
     corpus-level dedup — high scores mark boilerplate/spam/low-entropy
@@ -271,11 +275,11 @@ def repetition_score(
     total and distinct counts come from the in-row gram array, so at any
     scale this is a map-only pass.
     """
-    g = word_ngrams(text, n)
+    g = word_shingles_all(TEXT_COL, n)
     total = F.size(g)
     distinct = F.size(F.array_distinct(g))
     return df.select(
-        F.col(id_col),
+        F.col(ID_COL),
         total.cast("long").alias("n_grams"),
         F.round(
             (total - distinct) / F.greatest(F.lit(1), total), 6
@@ -283,28 +287,26 @@ def repetition_score(
     )
 
 
-def regex_scrub(
-    df: DataFrame,
-    patterns: dict[str, str],
-    text: str = "text",
-    id_col: str = "doc_id",
-    replacement: str = "<redacted>",
-) -> DataFrame:
+#: what regex_scrub replaces every pattern occurrence with
+REDACTION = "<redacted>"
+
+
+def regex_scrub(df: DataFrame, patterns: dict[str, str]) -> DataFrame:
     """Pattern-based scrubbing (PII redaction shape): for each named regex,
     count its matches; also report the length of the text after replacing
-    every pattern occurrence with ``replacement``.
+    every pattern occurrence with ``REDACTION``.
 
     regexp_count / regexp_replace are JVM codegen expressions — one linear
     scan per row per pattern, zero shuffle, embarrassingly parallel at
     100 TB. Patterns must stay in the Java-regex/RE2 common subset so the
     DuckDB oracle matches byte-for-byte.
     """
-    cols: list[Column] = [F.col(id_col)]
+    cols: list[Column] = [F.col(ID_COL)]
     for name, pat in patterns.items():
-        cols.append(F.regexp_count(F.col(text), F.lit(pat)).cast("long").alias(f"n_{name}"))
-    redacted = F.col(text)
+        cols.append(F.regexp_count(F.col(TEXT_COL), F.lit(pat)).cast("long").alias(f"n_{name}"))
+    redacted = F.col(TEXT_COL)
     for pat in patterns.values():
-        redacted = F.regexp_replace(redacted, pat, replacement)
+        redacted = F.regexp_replace(redacted, pat, REDACTION)
     cols.append(F.length(redacted).cast("long").alias("redacted_len"))
     return df.select(*cols)
 
@@ -334,13 +336,13 @@ def sentence_split_udtf():
     return SentenceSplit
 
 
-def sentence_split(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
+def sentence_split(df: DataFrame) -> DataFrame:
     """Apply :func:`sentence_split_udtf` via a lateral join — one
     (doc_id, sent_idx, sentence) row per segment. Input id column is
     renamed before the join (the UDTF emits its own ``doc_id``)."""
     fn = sentence_split_udtf()
     return (
-        df.select(F.col(id_col).alias("_in_id"), F.col(text).alias("_in_text"))
+        df.select(F.col(ID_COL).alias("_in_id"), F.col(TEXT_COL).alias("_in_text"))
         .lateralJoin(fn(F.col("_in_id").outer(), F.col("_in_text").outer()))
         .select("doc_id", "sent_idx", "sentence")
     )
@@ -351,13 +353,7 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
-def bm25_search(
-    df: DataFrame,
-    query_terms: list[str],
-    text: str = "text",
-    id_col: str = "doc_id",
-    k: int = 10,
-) -> DataFrame:
+def bm25_search(df: DataFrame, query_terms: list[str], k: int = 10) -> DataFrame:
     """BM25 ranking of documents against a bag of query terms.
 
     Spark-first plan: per-term tf comes from JVM array expressions over the
@@ -371,7 +367,7 @@ def bm25_search(
     stats pass (or a maintained stats table), one map-side scoring scan,
     TakeOrderedAndProject for the top-k — zero wide shuffles.
     """
-    tok = tokens(text)
+    tok = tokens(TEXT_COL)
     dl = F.size(tok).cast("double")
 
     def _tf(w: str) -> Column:
@@ -381,7 +377,7 @@ def bm25_search(
         return F.size(F.filter(tok, lambda t: t == lit_w)).cast("double")
 
     scored = df.select(
-        id_col,
+        ID_COL,
         dl.alias("dl"),
         *[_tf(w).alias(f"tf{i}") for i, w in enumerate(query_terms)],
     )
@@ -408,16 +404,14 @@ def bm25_search(
         score = score + term_score(i)
     return (
         scored.crossJoin(F.broadcast(stats))
-        .select(id_col, F.round(score, 4).alias("bm25"))
+        .select(ID_COL, F.round(score, 4).alias("bm25"))
         .filter(F.col("bm25") > 0)
-        .orderBy(F.desc("bm25"), F.asc(id_col))
+        .orderBy(F.desc("bm25"), F.asc(ID_COL))
         .limit(k)
     )
 
 
-def inverted_index(
-    df: DataFrame, text: str = "text", id_col: str = "doc_id", min_df: int = 1
-) -> DataFrame:
+def inverted_index(df: DataFrame) -> DataFrame:
     """Posting-list construction: term -> document frequency + sorted doc-id
     list — the index behind keyword search and n-gram contamination probes.
 
@@ -426,22 +420,19 @@ def inverted_index(
     ``collect_list`` makes the posting order deterministic regardless of
     task arrival order. At 100 TB, hot-term posting lists outgrow a single
     row: segment them (term, shard) with a doc-id range per shard, write
-    delta-encoded to a term-bucketed table, and keep `min_df` > 1 to drop
-    the hapax tail that dominates vocabulary size.
+    delta-encoded to a term-bucketed table, and filter on a minimum ``df``
+    to drop the hapax tail that dominates vocabulary size.
     """
     ex = df.select(
-        F.col(id_col), F.explode(F.array_distinct(tokens(text))).alias("term")
+        F.col(ID_COL), F.explode(F.array_distinct(tokens(TEXT_COL))).alias("term")
     )
-    inv = ex.groupBy("term").agg(
+    return ex.groupBy("term").agg(
         F.count(F.lit(1)).alias("df"),
-        F.sort_array(F.collect_list(id_col)).alias("postings"),
+        F.sort_array(F.collect_list(ID_COL)).alias("postings"),
     )
-    return inv.filter(F.col("df") >= min_df) if min_df > 1 else inv
 
 
-def bpe_pair_counts(
-    df: DataFrame, text: str = "text", k: int = 20
-) -> DataFrame:
+def bpe_pair_counts(df: DataFrame, k: int = 20) -> DataFrame:
     """One merge round of BPE-style tokenizer training: frequency of
     adjacent character pairs within whitespace words, top-k.
 
@@ -454,13 +445,13 @@ def bpe_pair_counts(
     one trivial reduce, and the real implementation just re-runs this with
     the current merge table applied.
     """
-    pairs = F.expr(
-        f"""flatten(transform(split({text}, ' '),
-              w -> CASE WHEN length(w) >= 2
-                        THEN transform(sequence(1, length(w) - 1),
-                                       i -> substring(w, i, 2))
-                        ELSE array() END))"""
-    )
+    pairs = F.flatten(F.transform(tokens(TEXT_COL), lambda w: F.when(
+        F.length(w) >= 2,
+        F.transform(
+            F.sequence(F.lit(1), F.length(w) - 1),
+            lambda i: F.substring(w, i, F.lit(2)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))))
     return (
         df.select(F.explode(pairs).alias("pair"))
         .groupBy("pair")
@@ -470,9 +461,7 @@ def bpe_pair_counts(
     )
 
 
-def bpe_train(
-    df: DataFrame, rounds: int = 5, text: str = "text"
-) -> DataFrame:
+def bpe_train(df: DataFrame, rounds: int = 5) -> DataFrame:
     """FULL iterative BPE tokenizer training for ``rounds`` merge
     rounds — the loop :func:`bpe_pair_counts` is one round of, run to
     completion over the word-TYPE table (the classic Sennrich recipe:
@@ -504,14 +493,19 @@ def bpe_train(
     word-type table never grows with corpus size beyond vocabulary, so
     100 TB of text trains at the cost of its distinct-word dictionary
     (reference has no tokenizer surface — north-star extension)."""
-    merges, _ = _bpe_loop(df, rounds, text)
+    merges, _ = _bpe_loop(df, rounds)
     return df.sparkSession.createDataFrame(
         merges, "round int, lt string, rt string, merged string, cnt long"
     )
 
 
+def _bpe_pieces() -> Column:
+    """The token array of a BPE word encoding ``enc`` (``|c||h|...``)."""
+    return F.split(F.expr("trim(BOTH '|' FROM enc)"), r"\|\|")
+
+
 def _bpe_loop(
-    df: DataFrame, rounds: int, text: str = "text", on_round=None
+    df: DataFrame, rounds: int, on_round=None
 ) -> tuple[list, DataFrame]:
     """The shared BPE training loop: returns (merge rows, the word-type
     table with all merges applied) — :func:`bpe_train` reports the
@@ -519,7 +513,7 @@ def _bpe_loop(
     :func:`bpe_compression_curve` passes ``on_round(r, wt)`` to read
     the table out after round 0 (chars) and each merge."""
     words = (
-        df.select(F.explode(F.split(F.col(text), " ")).alias("w"))
+        df.select(F.explode(tokens(F.col(TEXT_COL))).alias("w"))
         .filter(F.col("w").rlike("^[a-z]+$"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -536,9 +530,8 @@ def _bpe_loop(
 
     merges = []
     for r in range(rounds):
-        ts = F.split(F.expr("trim(BOTH '|' FROM enc)"), r"\|\|")
         pairs = (
-            wt.select("freq", ts.alias("ts"))
+            wt.select("freq", _bpe_pieces().alias("ts"))
             .filter(F.size("ts") >= 2)
             .select(
                 "freq",
@@ -571,9 +564,7 @@ def _bpe_loop(
     return merges, wt
 
 
-def bpe_compression_curve(
-    df: DataFrame, rounds: int = 5, text: str = "text"
-) -> DataFrame:
+def bpe_compression_curve(df: DataFrame, rounds: int = 5) -> DataFrame:
     """Tokenizer-training PROGRESS measurement: corpus token count
     after EACH merge round (round 0 = character tokenization) — the
     compression curve a tokenizer job monitors to decide when more
@@ -583,26 +574,22 @@ def bpe_compression_curve(
     per-round readout (a second tiny agg per round, nothing
     corpus-sized)."""
     def n_tokens(frame: DataFrame) -> int:
-        ts = F.split(F.expr("trim(BOTH '|' FROM enc)"), r"\|\|")
         return int(
             frame.select(
-                F.sum(F.size(ts) * F.col("freq")).alias("n")
+                F.sum(F.size(_bpe_pieces()) * F.col("freq")).alias("n")
             ).first()["n"]
         )
 
     points: list[tuple[int, int]] = []
     _bpe_loop(
-        df, rounds, text,
-        on_round=lambda r, wt: points.append((r, n_tokens(wt))),
+        df, rounds, on_round=lambda r, wt: points.append((r, n_tokens(wt)))
     )
     return df.sparkSession.createDataFrame(
         points, "round int, total_tokens long"
     )
 
 
-def bpe_encode(
-    df: DataFrame, rounds: int = 5, k: int = 20, text: str = "text"
-) -> DataFrame:
+def bpe_encode(df: DataFrame, rounds: int = 5, k: int = 20) -> DataFrame:
     """The SCORING side of BPE: train ``rounds`` merges
     (:func:`_bpe_loop`), tokenize the corpus with the final merge
     table, and report the top-``k`` tokens by corpus frequency — the
@@ -611,10 +598,9 @@ def bpe_encode(
     splitting the final encodings and weighting by word frequency — no
     second corpus pass (the dictionary trick again). Same scale shape
     as :func:`bpe_train` plus one token-keyed partial agg."""
-    _, wt = _bpe_loop(df, rounds, text)
-    ts = F.split(F.expr("trim(BOTH '|' FROM enc)"), r"\|\|")
+    _, wt = _bpe_loop(df, rounds)
     return (
-        wt.select("freq", F.explode(ts).alias("token"))
+        wt.select("freq", F.explode(_bpe_pieces()).alias("token"))
         .groupBy("token")
         .agg(F.sum("freq").alias("cnt"))
         .orderBy(F.desc("cnt"), "token")
@@ -627,14 +613,9 @@ def bpe_encode(
 BLOCKLIST = ["dup", "slow", "drop"]
 
 
-def blocklist_filter(
-    df: DataFrame,
-    words: list[str] | None = None,
-    text: str = "text",
-    source: str = "source",
-) -> DataFrame:
+def blocklist_filter(df: DataFrame) -> DataFrame:
     """C4-style blocklist audit: per-source document counts vs. documents
-    containing any blocklisted term, plus the flagged share.
+    containing any ``BLOCKLIST`` term, plus the flagged share.
 
     The membership test is ``F.exists`` over the token array — pure JVM,
     inside whole-stage codegen, no explode — so the scan emits one boolean
@@ -643,10 +624,9 @@ def blocklist_filter(
     literals; a large curated list would swap to a broadcast join against
     exploded tokens instead. At 100 TB this is a single map-heavy pass.
     """
-    words = BLOCKLIST if words is None else words
-    flagged = F.exists(tokens(text), lambda t: t.isin(*words))
+    flagged = F.exists(tokens(TEXT_COL), lambda t: t.isin(*BLOCKLIST))
     return (
-        df.groupBy(source)
+        df.groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(flagged.cast("long")).alias("n_flagged"),
@@ -658,9 +638,7 @@ def blocklist_filter(
     )
 
 
-def tfidf_top_terms(
-    df: DataFrame, k: int = 3, text: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
     """Per-document top-k keywords by TF-IDF (keyword extraction).
 
     Plan: explode tokens -> groupBy(doc, term) for tf -> groupBy(term) for
@@ -674,8 +652,8 @@ def tfidf_top_terms(
     score rounds to 8 dp so the one cross-engine float op (ln) compares
     exactly, and ties break on term ASC for a deterministic top-k.
     """
-    tok = df.select(id_col, F.explode(tokens(text)).alias("term"))
-    tf = tok.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    tok = df.select(ID_COL, F.explode(tokens(TEXT_COL)).alias("term"))
+    tf = tok.groupBy(ID_COL, "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = df.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (
@@ -690,17 +668,16 @@ def tfidf_top_terms(
             ),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("tfidf"), F.asc("term"))
+    w = Window.partitionBy(ID_COL).orderBy(F.desc("tfidf"), F.asc("term"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
-        .select(id_col, "term", "tf", "df", "tfidf")
+        .select(ID_COL, "term", "tf", "df", "tfidf")
     )
 
 
 def cms_heavy_hitters(
-    df: DataFrame, text: str = "text", depth: int = 3, width: int = 1024,
-    k: int = 20,
+    df: DataFrame, depth: int = 3, width: int = 1024, k: int = 20
 ) -> DataFrame:
     """Heavy-hitter tokens via a Count-Min Sketch (Cormode & Muthukrishnan):
     ``depth`` hash rows x ``width`` buckets; every token increments one
@@ -719,7 +696,7 @@ def cms_heavy_hitters(
     (``functions/hashing.py``), so the oracle reproduces the sketch
     exactly; ties at the top-k boundary break on ascending token.
     """
-    tb = cms_token_buckets(df, text=text, depth=depth, width=width)
+    tb = cms_token_buckets(df, depth=depth, width=width)
     tb = tb.localCheckpoint(eager=False)
     # sketch build: one explode to (row, bucket), one partial-agg'd
     # shuffle whose output is <= depth*width rows — corpus-size-free
@@ -732,9 +709,7 @@ def cms_heavy_hitters(
     return cms_estimate_topk(tb, cells, depth=depth, k=k)
 
 
-def cms_token_buckets(
-    df: DataFrame, text: str = "text", depth: int = 3, width: int = 1024
-) -> DataFrame:
+def cms_token_buckets(df: DataFrame, depth: int = 3, width: int = 1024) -> DataFrame:
     """Tokenize and bucket: ``(t, b0..b{depth-1})`` — one row per token
     OCCURRENCE, bucket per hash row from the cross-engine md5 hash32.
     Shared by the one-shot sketch build (:func:`cms_heavy_hitters`) and
@@ -742,7 +717,7 @@ def cms_token_buckets(
     so both paths count the exact same cells."""
     from ...functions.hashing import hash32
 
-    tok = df.select(F.explode(F.split(F.col(text), " ")).alias("t"))
+    tok = df.select(F.explode(tokens(F.col(TEXT_COL))).alias("t"))
     buckets = [
         (hash32(F.concat(F.lit(f"{d}_"), F.col("t"))) % width)
         .cast("int")
@@ -797,7 +772,7 @@ UNI_TOP_PIECES = 2048  # multi-char piece cap (all single chars retained)
 UNI_SENT = -(10 ** 12) # integer sentinel for "piece not in vocabulary"
 
 
-def _unigram_build(df: DataFrame, text: str = "text"):
+def _unigram_build(df: DataFrame):
     """Shared build for the unigram family. Returns a namespace with the
     word-type table, the raw window tables, the capped piece vocabulary,
     the round-1 scored windows and DP tables, and the reusable pieces
@@ -806,7 +781,7 @@ def _unigram_build(df: DataFrame, text: str = "text"):
     the algorithm and scale notes."""
     from types import SimpleNamespace
 
-    tok = F.explode(F.split(F.col(text), " ")).alias("w")
+    tok = F.explode(tokens(F.col(TEXT_COL))).alias("w")
     wt = (
         df.select(tok)
         .filter(
@@ -951,9 +926,7 @@ def _unigram_build(df: DataFrame, text: str = "text"):
     )
 
 
-def unigram_segment_counts(
-    df: DataFrame, text: str = "text", k: int = 20
-) -> DataFrame:
+def unigram_segment_counts(df: DataFrame, k: int = 20) -> DataFrame:
     """Unigram-LM subword segmentation with on-optimal-path piece counts
     — the OTHER major subword algorithm next to BPE (SentencePiece's
     default): score candidate pieces by corpus substring statistics,
@@ -991,7 +964,7 @@ def unigram_segment_counts(
     excluded here; production raises the unroll or pre-chunks rare long
     words), UNI_TOP_PIECES bounds the broadcast.
     """
-    b = _unigram_build(df, text)
+    b = _unigram_build(df)
     return (
         b.mem_counts(b.sw, b.dpf, b.dpr)
         .orderBy(F.desc("cnt"), F.asc("piece"))
@@ -999,7 +972,7 @@ def unigram_segment_counts(
     )
 
 
-def unigram_corpus_nll(df: DataFrame, text: str = "text") -> DataFrame:
+def unigram_corpus_nll(df: DataFrame) -> DataFrame:
     """Corpus negative log-likelihood under the unigram segmentation —
     the progress metric a tokenizer-training job monitors (the
     bpe_compression_curve readout for the unigram family): NLL6 =
@@ -1009,7 +982,7 @@ def unigram_corpus_nll(df: DataFrame, text: str = "text") -> DataFrame:
     covered. Same vocabulary-sized machinery as
     unigram_segment_counts; one extra word-keyed join, one 1-row agg.
     """
-    b = _unigram_build(df, text)
+    b = _unigram_build(df)
     per_word = (
         b.wt.select("w", "freq", F.length("w").alias("L"))
         .join(b.dpf, "w")
@@ -1022,9 +995,7 @@ def unigram_corpus_nll(df: DataFrame, text: str = "text") -> DataFrame:
     )
 
 
-def unigram_em_counts(
-    df: DataFrame, text: str = "text", k: int = 20
-) -> DataFrame:
+def unigram_em_counts(df: DataFrame, k: int = 20) -> DataFrame:
     """ONE full hard-EM round on top of the unigram segmentation — the
     M-step + re-segmentation that turns the substring-statistics
     initialization into actual unigram-LM training (Kudo 2018's loop,
@@ -1041,7 +1012,7 @@ def unigram_em_counts(
     EM round adds one vocabulary-sized count join, a re-broadcast of
     the score table, and a second unrolled DP — no new corpus scan.
     """
-    b = _unigram_build(df, text)
+    b = _unigram_build(df)
     m1 = b.mem_counts(b.sw, b.dpf, b.dpr)
     m1 = m1.localCheckpoint(eager=False)  # readout + M-step
     c2 = (
@@ -1065,9 +1036,7 @@ def unigram_em_counts(
     return top(m1, 1).unionByName(top(m2, 2))
 
 
-def bpe_fertility(
-    df: DataFrame, rounds: int, text: str = "text"
-) -> DataFrame:
+def bpe_fertility(df: DataFrame, rounds: int) -> DataFrame:
     """Tokenizer FERTILITY distribution — tokens-per-word after the
     learned BPE merges, the standard readout for comparing tokenizers
     (lower fertility = fewer pieces per word = cheaper training): for
@@ -1075,10 +1044,8 @@ def bpe_fertility(
     and how many corpus words they cover. Rides :func:`_bpe_loop`
     unchanged, so the readout is one vocabulary-sized aggregate over
     the final word-type encodings — no extra corpus pass."""
-    _, wt = _bpe_loop(df, rounds, text)
-    n_pieces = F.size(
-        F.split(F.expr("trim(BOTH '|' FROM enc)"), r"\|\|")
-    ).cast("long")
+    _, wt = _bpe_loop(df, rounds)
+    n_pieces = F.size(_bpe_pieces()).cast("long")
     return (
         wt.select(n_pieces.alias("n_pieces"), "freq")
         .groupBy("n_pieces")

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash32, hash32_oracle_sql
+from ..operators.llm.dedup import word_shingles_all
 from .registry import EVENTS_NORM, load_events, load_table, register
 
 
@@ -481,15 +482,7 @@ def llm_doc_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def llm_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    bigrams = d.select(
-        F.explode(
-            F.expr(
-                "zip_with(slice(split(text, ' '), 1, size(split(text, ' ')) - 1), "
-                "slice(split(text, ' '), 2, size(split(text, ' ')) - 1), "
-                "(x, y) -> concat(x, ' ', y))"
-            )
-        ).alias("bigram")
-    )
+    bigrams = d.select(F.explode(word_shingles_all("text", 2)).alias("bigram"))
     freq = bigrams.groupBy("bigram").agg(F.count(F.lit(1)).alias("freq"))
     return freq.orderBy(F.desc("freq"), F.asc("bigram")).limit(50)
 

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import hash32, hash32_oracle_sql
 from ..operators.llm import similarity
+from ..operators.llm.dedup import array_shingles
 from .catalog_llm import IVF_K
 from .registry import EVENTS_NORM, load_events, load_table, register
 
@@ -580,13 +581,8 @@ def llm_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     ucnt = uni.groupBy("w").agg(F.count(F.lit(1)).alias("cu"))
     vocab_size = ucnt.count()  # tiny scalar (|V|), like the corpus-size
     # scalars in llm_tfidf_topk; computed once driver-side
-    bigram = F.zip_with(
-        F.slice(F.col("a"), 1, F.greatest(F.size("a") - 1, F.lit(0))),
-        F.slice(F.col("a"), 2, F.greatest(F.size("a") - 1, F.lit(0))),
-        lambda x, y: F.concat_ws(" ", x, y),
-    )
     bg = tok.select(
-        "doc_id", F.explode(bigram).alias("b")
+        "doc_id", F.explode(array_shingles(F.col("a"), 2)).alias("b")
     ).withColumn("w1", F.split("b", " ")[0])
     bcnt = bg.groupBy("b").agg(F.count(F.lit(1)).alias("cb"))
     scored = (

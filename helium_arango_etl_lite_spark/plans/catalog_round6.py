@@ -26,6 +26,7 @@ from decimal import ROUND_HALF_UP, Decimal
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.llm.dedup import array_shingles
 from .registry import load_table, register
 
 
@@ -96,13 +97,7 @@ def llm_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.array_distinct("a")).alias("n_distinct"),
     )
     bigrams = tok.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "zip_with(slice(a, 1, size(a) - 1), "
-                "slice(a, 2, size(a) - 1), (x, y) -> concat(x, ' ', y))"
-            )
-        ).alias("b"),
+        "doc_id", F.explode(array_shingles(F.col("a"), 2)).alias("b")
     )
     bgm = (
         bigrams.groupBy("doc_id", "b")

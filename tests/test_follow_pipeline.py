@@ -482,6 +482,42 @@ def test_run_service_crash_restart_from_checkpoint(spark, tmp_path, monkeypatch)
     _assert_mixed_store(spark, tmp_path / "graph", range(1, 65))
 
 
+def test_failed_write_task_leaves_no_rows_and_reruns_to_the_chain(spark, tmp_path, monkeypatch):
+    """A task of the payments write job fails on an executor: a Python UDF
+    in the written frame raises for one marked height while a marker file
+    exists. The service re-raises, the aborted job left no payments row of
+    the failed batch's heights, and once the fault is gone a rerun on the
+    same checkpoint gives the chain."""
+    marked = 40  # in the third 16-height batch, 33..48
+    marker = tmp_path / "fail-once"
+    marker.touch()
+    marker_path = str(marker)
+
+    def passes(block):
+        if block == marked and os.path.exists(marker_path):
+            raise RuntimeError(f"injected task failure at height {block}")
+        return True
+
+    check = F.udf(passes, "boolean")
+    original = follow.idempotent_append
+
+    def checked_payments(spark, df, path, *args):
+        if os.path.basename(path) == follow.PAYMENTS:
+            df = df.filter(check("block"))
+        return original(spark, df, path, *args)
+
+    monkeypatch.setattr(follow, "idempotent_append", checked_payments)
+    with pytest.raises(Exception, match="injected task failure at height 40"):
+        _mixed_drain(spark, tmp_path)
+    payments = spark.read.parquet(str(tmp_path / "graph" / follow.PAYMENTS))
+    assert sorted(r["block"] for r in payments.collect()) == list(range(1, 33))
+
+    marker.unlink()
+    state = _mixed_drain(spark, tmp_path)
+    assert state == {"payments": 64, "poc_receipts": 63}
+    _assert_mixed_store(spark, tmp_path / "graph", range(1, 65))
+
+
 def test_small_batch_profile_reaches_the_stream_batch(spark, tmp_path, monkeypatch):
     """``foreachBatch`` runs the body on a clone of the stream's session, so
     the profile is set on the batch's own session: every sink of every

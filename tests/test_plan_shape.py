@@ -77,6 +77,53 @@ def test_topk_cosine_scans_against_one_broadcast_query(spark, sf_dir):
     assert proj.count("zip_with(") == 1
 
 
+def test_dedup_minhash_broadcast_joins_the_checkpointed_bands(spark, sf_dir):
+    """llm_dedup_minhash (a query_mix query): both sides of the band
+    self-join scan the one checkpointed (doc_id, band_key) frame, the join
+    is a BroadcastHashJoin on band_key with the doc_id < doc_id
+    condition, and the distinct is the plan's only hash shuffle."""
+    plan = plan_of(spark, sf_dir, "llm_dedup_minhash")
+    assert re.search(
+        r"\(\d+\) BroadcastHashJoin\n"
+        r"Left keys \[1\]: \[band_key#\d+\]\n"
+        r"Right keys \[1\]: \[band_key#\d+\]\n"
+        r"Join type: Inner\n"
+        r"Join condition: \(doc_id#\d+L < doc_id#\d+L\)\n",
+        plan,
+    ), plan
+    scans = re.findall(
+        r"^\(\d+\) Scan ExistingRDD\n"
+        r"Output \[2\]: \[doc_id#\d+L, band_key#\d+\]\n"
+        r"Arguments: [^\n]*?(\w+RDD\[\d+\]) at localCheckpoint ",
+        plan, re.M,
+    )
+    assert len(scans) == 2 and len(set(scans)) == 1, plan
+    assert len(re.findall(r"^\(\d+\) Exchange$", plan, re.M)) == 1
+    assert len(re.findall(r"hashpartitioning\(", plan)) == 1
+    assert re.search(r"hashpartitioning\(doc_a#\d+L, doc_b#\d+L, ", plan)
+
+
+def test_bm25_search_broadcasts_one_stats_row(spark, sf_dir):
+    """llm_bm25_search (a query_mix query): the top-10 is a
+    TakeOrderedAndProject, the single-row corpus-stats aggregate is the
+    plan's one BroadcastExchange, and nothing is hash-partitioned."""
+    plan = plan_of(spark, sf_dir, "llm_bm25_search")
+    assert re.search(
+        r"\(\d+\) TakeOrderedAndProject\nInput [^\n]*\nArguments: 10, ", plan
+    )
+    assert len(re.findall(r"^\(\d+\) BroadcastExchange$", plan, re.M)) == 1
+    assert re.search(
+        r"\(\d+\) BroadcastExchange\n"
+        r"Input \[5\]: \[n_docs#\d+, avgdl#\d+, df0#\d+, df1#\d+, df2#\d+\]",
+        plan,
+    ), plan
+    below = re.search(r"BroadcastExchange \(\d+\)\n\s*\+- HashAggregate \((\d+)\)", plan)
+    assert below, plan
+    agg = re.search(rf"\n\({below.group(1)}\) HashAggregate\nInput [^\n]*\nKeys: \[\]\n", plan)
+    assert agg, plan
+    assert "hashpartitioning" not in plan
+
+
 def test_aggregation_is_partial_then_final(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "agg_payment_volume")
     # map-side partial agg before the shuffle, final after: two HashAggregates

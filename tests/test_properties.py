@@ -86,34 +86,38 @@ def test_reference_key_matches_cpython_json(d):
 
 
 def test_minhash_arrow_and_expr_engines_agree(spark, sf_dir):
-    """The Arrow (mapInPandas) and pure-expression signature plans are
-    physically different programs; their values must be bit-identical."""
-    from helium_arango_etl_lite_spark.operators.llm.dedup import minhash_signature_df
+    """The Arrow (mapInPandas) signature and its pure-expression reference
+    are physically different programs; their values must be bit-identical."""
+    from helium_arango_etl_lite_spark.operators.llm.dedup import (
+        _minhash_signature_expr, minhash_signature_df,
+    )
     from helium_arango_etl_lite_spark.plans.registry import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    a = minhash_signature_df(docs, engine="arrow").orderBy("doc_id").collect()
-    b = minhash_signature_df(docs, engine="expr").orderBy("doc_id").collect()
+    a = minhash_signature_df(docs).orderBy("doc_id").collect()
+    b = _minhash_signature_expr(docs).orderBy("doc_id").collect()
     assert a == b
 
 
 def test_winnow_arrow_and_expr_engines_agree(spark, sf_dir):
-    from helium_arango_etl_lite_spark.operators.llm.text import winnow_fingerprints
+    from helium_arango_etl_lite_spark.operators.llm.text import (
+        _winnow_expr, winnow_fingerprints,
+    )
     from helium_arango_etl_lite_spark.plans.registry import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    a = winnow_fingerprints(docs, engine="arrow").orderBy("doc_id", "fp_hash").collect()
-    b = winnow_fingerprints(docs, engine="expr").orderBy("doc_id", "fp_hash").collect()
+    a = winnow_fingerprints(docs).orderBy("doc_id", "fp_hash").collect()
+    b = _winnow_expr(docs).orderBy("doc_id", "fp_hash").collect()
     assert a == b
 
 
 def test_simhash_arrow_and_expr_engines_agree(spark, sf_dir):
-    from helium_arango_etl_lite_spark.operators.llm.dedup import simhash
+    from helium_arango_etl_lite_spark.operators.llm.dedup import _simhash_expr, simhash
     from helium_arango_etl_lite_spark.plans.registry import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    a = simhash(docs, engine="arrow").orderBy("doc_id").collect()
-    b = simhash(docs, engine="expr").orderBy("doc_id").collect()
+    a = simhash(docs).orderBy("doc_id").collect()
+    b = _simhash_expr(docs).orderBy("doc_id").collect()
     assert a == b
 
 
