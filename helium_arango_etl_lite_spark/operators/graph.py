@@ -1,20 +1,26 @@
 """Graph-document transforms: the reference's per-block dataflow
 (follower.py:135-207) re-expressed as DataFrame operators.
 
-Input shapes (see ``schemas.py``):
- * ``blocks``  — BLOCK_SCHEMA rows (one per block, txn stubs nested)
- * ``txns``    — TXN_ENVELOPE_SCHEMA rows (hash, type, json payload),
-   standing in for the reference's N+1 ``transaction_get`` RPC
-   (client.py:39-51); in Spark the "N+1 fetch" becomes one join of the
-   blocks' txn stubs onto a columnar txn table — one scan, zero RPCs.
+Input shapes (see ``schemas.py``) and the two paths to the txns a block
+references — the reference's ``for txn in block.transactions`` loop over
+one ``transaction_get`` RPC per stub (follower.py:143, client.py:39-51):
 
-:func:`graph_documents` does that join once per batch, parses each
-payload once, keeps the result persisted while the batch's sinks run, and
-derives all three outputs from it, each with one generator (``inline`` or
-``explode``) over the persisted frame, so each sink's plan scans it once.
-It carries no broadcast hint: a follower batch plans its joins under its
-own execution profile (``streaming/follow.py``), and any other caller
-leaves the choice to AQE.
+ * **envelopes nested** — ``blocks`` are CHAIN_BLOCK_SCHEMA rows, each txn
+   stub carrying its payload in ``json`` (the ``helium_chain`` reader,
+   batch and stream). The txns come straight off the blocks with one
+   ``inline``: no join, and no second read of the chain.
+ * **envelopes apart** — ``blocks`` are BLOCK_SCHEMA rows (stubs only: a
+   JSON-lines dump, or frames built in SQL), and ``txns`` holds
+   TXN_ENVELOPE_SCHEMA rows (hash, type, json); the stubs are joined to
+   their envelopes once per batch.
+
+The path is chosen at plan time from the stub struct's schema.
+:func:`graph_documents` parses each payload once, keeps the result
+persisted while the batch's sinks run, and derives all three outputs from
+it, each with one generator (``inline`` or ``explode``) over the persisted
+frame, so each sink's plan scans it once. It carries no broadcast hint: a
+follower batch plans its joins under its own execution profile
+(``streaming/follow.py``), and any other caller leaves the choice to AQE.
 
 Every projection is constant SQL text built at import. A follower batch is
 small enough that building its plans on the driver costs as much as
@@ -60,7 +66,9 @@ _HANDLED = f"IN ({_in(PAYMENT_TYPES + RECEIPT_TYPES)})"
 #: in block.transactions`` loop (follower.py:143); block height and time
 #: ride along so no later join is needed (follower.py:153-154).
 STUB_COLS = ("height AS block", "time AS block_time", "inline(transactions) AS (txn_hash, txn_type)")
-#: The joined stub and envelope, payload parsed once by its type's schema.
+#: The same, when each stub carries its envelope.
+ENVELOPE_STUB_COLS = ("height AS block", "time AS block_time", "inline(transactions) AS (txn_hash, type, json)")
+#: A stub and its envelope, payload parsed once by its type's schema.
 IN_BLOCK_COLS = (
     "block",
     "block_time",
@@ -122,7 +130,9 @@ WITNESS_COLS = (
 
 #: Payer and payees of every payment (follower.py:147,156,162,173). A
 #: payment_v2 payer counts even when its ``payments`` array is empty or
-#: unreadable.
+#: unreadable. A payload that does not parse names no account: the sink
+#: anti-joins on ``_key``, and a NULL never matches, so each replay would
+#: append it again.
 ACCOUNT_KEYS = """explode(CASE type
     WHEN 'payment_v1' THEN array(pay1.payer, pay1.payee)
     WHEN 'payment_v2' THEN concat(
@@ -130,19 +140,26 @@ ACCOUNT_KEYS = """explode(CASE type
 END) AS _key"""
 
 
-def _in_block_txns(blocks: DataFrame, txns: DataFrame) -> DataFrame:
+def _in_block_txns(blocks: DataFrame, txns: DataFrame | None) -> DataFrame:
     """The payment and receipt txns a stub in ``blocks`` references, with
     the stub's block and time and the payload parsed once by its type's
     schema: ``pay1`` (payment_v1), ``pay2`` (payment_v2) or ``poc``
     (poc_receipts v1/v2), NULL for the other types.
 
     Only referenced txns count — the reference walks
-    ``block.transactions`` (follower.py:143), never the txn store at large
-    — and an envelope counts only under the type its stub declares.
+    ``block.transactions`` (follower.py:143), never the txn store at large.
+    Nested envelopes are read off the stubs, and a stub whose txn the node
+    did not have (``json`` NULL) is skipped. Otherwise ``txns`` is joined
+    on, and an envelope counts only under the type its stub declares.
     PERMISSIVE parse: a malformed payload yields NULL fields rather than an
     exception — the engine's stand-in for the reference's ValidationError
     retry (follower.py:66-69).
     """
+    if "json" in blocks.schema["transactions"].dataType.elementType.names:
+        stubs = blocks.selectExpr(*ENVELOPE_STUB_COLS)
+        return stubs.where(f"type {_HANDLED} AND json IS NOT NULL").selectExpr(*IN_BLOCK_COLS)
+    if txns is None:
+        raise ValueError("blocks without nested txn envelopes need their txns frame")
     stubs = blocks.selectExpr(*STUB_COLS).where(f"txn_type {_HANDLED}")
     envelopes = txns.where(f"type {_HANDLED}")
     joined = stubs.join(envelopes, F.expr("txn_hash = hash AND txn_type = type"))
@@ -150,15 +167,20 @@ def _in_block_txns(blocks: DataFrame, txns: DataFrame) -> DataFrame:
 
 
 @contextmanager
-def graph_documents(blocks: DataFrame, txns: DataFrame) -> Iterator[tuple[DataFrame, DataFrame, DataFrame]]:
+def graph_documents(
+    blocks: DataFrame, txns: DataFrame | None = None
+) -> Iterator[tuple[DataFrame, DataFrame, DataFrame]]:
     """Yield one batch's ``(payment edges, witness edges, account
     vertices)``, all derived from one :func:`_in_block_txns` frame that
-    stays persisted until the block exits, so the stub-envelope join and
-    the payload parse run once for the three sinks.
+    stays persisted until the block exits, so the payload parse (and, for
+    stub-only blocks, the stub-envelope join) runs once for the three
+    sinks. ``txns`` is needed only when ``blocks`` carry no envelopes, and
+    is never evaluated when they do.
 
     Output shapes are in the module docstring. Edges are keyed and
     deduplicated by key — the onDuplicate=ignore contract of
-    follower.py:205-207 — and account vertices are distinct."""
+    follower.py:205-207 — and account vertices are distinct and never
+    NULL."""
     in_block = _in_block_txns(blocks, txns).persist()
     try:
         payments = in_block.selectExpr(*PAYMENT_ROWS).selectExpr(*PAYMENT_COLS)
@@ -166,7 +188,7 @@ def graph_documents(blocks: DataFrame, txns: DataFrame) -> Iterator[tuple[DataFr
         yield (
             payments.withColumn("_key", canonical_md5_key(*PAYMENT_KEY_COLS)).dropDuplicates(["_key"]),
             witnesses.withColumn("_key", canonical_md5_key(*RECEIPT_KEY_COLS)).dropDuplicates(["_key"]),
-            in_block.selectExpr(ACCOUNT_KEYS).distinct(),
+            in_block.selectExpr(ACCOUNT_KEYS).where("_key IS NOT NULL").distinct(),
         )
     finally:
         in_block.unpersist()

@@ -788,26 +788,21 @@ def dq_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FOLLOW_N = 120
 
 
-def _chain_frames(
+def _chain_blocks(
     spark: SparkSession, endpoint: str, start: int, end: int, heights_per_partition: int = 16
-) -> tuple[DataFrame, DataFrame]:
-    """(blocks, txns) of heights ``start..end`` from the ``helium_chain``
-    batch reader: the inputs of one follower batch."""
+) -> DataFrame:
+    """Blocks of heights ``start..end``, txn envelopes nested, from the
+    ``helium_chain`` batch reader: the input of one follower batch."""
     from ..sources.datasource import HeliumChainDataSource
 
     spark.dataSource.register(HeliumChainDataSource)
-
-    def read(what: str) -> DataFrame:
-        return (
-            spark.read.format("helium_chain")
-            .option("endpoint", endpoint)
-            .option("start", start).option("end", end)
-            .option("what", what)
-            .option("heights_per_partition", heights_per_partition)
-            .load()
-        )
-
-    return read("blocks"), read("txns")
+    return (
+        spark.read.format("helium_chain")
+        .option("endpoint", endpoint)
+        .option("start", start).option("end", end)
+        .option("heights_per_partition", heights_per_partition)
+        .load()
+    )
 
 
 _FOLLOW_SQL = f"""WITH h AS (SELECT i.i AS h FROM generate_series(1, {_FOLLOW_N}) i(i)),
@@ -848,9 +843,9 @@ def follow_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = scratch_dir("follow_replay")
 
-    process_batch(spark, *_chain_frames(spark, "mock://replay", 1, _FOLLOW_N), out)
+    process_batch(spark, _chain_blocks(spark, "mock://replay", 1, _FOLLOW_N), None, out)
     # replay the identical batch: the anti-join sink must add zero rows
-    process_batch(spark, *_chain_frames(spark, "mock://replay", 1, _FOLLOW_N), out)
+    process_batch(spark, _chain_blocks(spark, "mock://replay", 1, _FOLLOW_N), None, out)
     pay = spark.read.parquet(f"{out}/{PAYMENTS}")
     return pay.select(
         "_from", "_to", "hash", "amount", "block", "timestamp", "_key",
@@ -909,8 +904,8 @@ def follow_replay_receipts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = scratch_dir("follow_replay_rx")
 
-    process_batch(spark, *_chain_frames(spark, "mock://mixed", 1, _FOLLOW_N), out)
-    process_batch(spark, *_chain_frames(spark, "mock://mixed", 1, _FOLLOW_N), out)
+    process_batch(spark, _chain_blocks(spark, "mock://mixed", 1, _FOLLOW_N), None, out)
+    process_batch(spark, _chain_blocks(spark, "mock://mixed", 1, _FOLLOW_N), None, out)
     rec = spark.read.parquet(f"{out}/{RECEIPTS}")
     return rec.select(
         "_from", "_to", "frequency", "datarate", "is_valid", "signal",
@@ -940,8 +935,8 @@ def follow_replay_accounts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = scratch_dir("follow_replay_ac")
 
-    process_batch(spark, *_chain_frames(spark, "mock://replay", 1, _FOLLOW_N), out)
-    process_batch(spark, *_chain_frames(spark, "mock://replay", 1, _FOLLOW_N), out)
+    process_batch(spark, _chain_blocks(spark, "mock://replay", 1, _FOLLOW_N), None, out)
+    process_batch(spark, _chain_blocks(spark, "mock://replay", 1, _FOLLOW_N), None, out)
     return spark.read.parquet(f"{out}/{ACCOUNTS}").select("_key")
 
 
@@ -1078,7 +1073,7 @@ def follow_retention_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = scratch_dir("follow_retention")
 
-    process_batch(spark, *_chain_frames(spark, "mock://replay", _RET_START, _RET_END, 512), out)
+    process_batch(spark, _chain_blocks(spark, "mock://replay", _RET_START, _RET_END, 512), None, out)
     dropped = apply_retention(
         spark, f"{out}/{PAYMENTS}", tip_height=_RET_END, window=_RET_WINDOW
     )

@@ -43,6 +43,22 @@ BLOCK_SCHEMA = StructType(
     ]
 )
 
+# --- a block as the helium_chain reader yields it ----------------------------
+# BLOCK_SCHEMA with each stub's txn envelope nested: ``json`` is the
+# stub's ``transaction_get`` payload (client.py:39-51), NULL when the node
+# has no such txn yet. A JSON-lines dump keeps BLOCK_SCHEMA, its txns apart.
+
+CHAIN_BLOCK_SCHEMA = StructType(
+    [
+        *BLOCK_SCHEMA.fields[:-1],
+        _f(
+            "transactions",
+            ArrayType(StructType([*BLOCK_TRANSACTION_SCHEMA.fields, _f("json", StringType())])),
+            False,
+        ),
+    ]
+)
+
 # --- payment_v1 (models/transactions/payment_v1.py:4-11) --------------------
 
 PAYMENT_V1_SCHEMA = StructType(

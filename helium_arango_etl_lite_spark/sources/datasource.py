@@ -18,14 +18,17 @@ Usage::
               .option("endpoint", "http://node:4467")
               .option("start", 1_000_000).option("end", 1_000_512)
               .load())
-    txns = (spark.read.format("helium_chain")
-            .option("endpoint", "http://node:4467").option("what", "txns")
-            .option("start", 1_000_000).option("end", 1_000_512)
-            .load())
 
-``what=blocks`` yields BLOCK_SCHEMA rows; ``what=txns`` yields
-TXN_ENVELOPE_SCHEMA rows (raw JSON payload preserved — each type branch
-applies its own schema downstream, operators/graph.py:graph_documents).
+``what=blocks`` (the default, batch and stream) yields CHAIN_BLOCK_SCHEMA
+rows: one per block, each txn stub carrying its envelope. A stub's
+``json`` is the raw ``transaction_get`` payload (client.py:39-51), NULL
+when the node has no such txn yet, so one pass fetches each height once
+and each txn once: one ``block_get`` per height and one
+``transaction_get`` per stub. ``what=txns`` yields the same payloads
+apart, as TXN_ENVELOPE_SCHEMA rows (hash, type, json) — the shape of a
+JSON-lines txn dump, which a reader of stub-only blocks joins back
+(operators/graph.py). Each type branch applies its own schema to the
+payload downstream.
 
 Endpoints with the ``mock://`` scheme serve a deterministic synthetic
 chain (seeded per height) so the full distributed path is testable —
@@ -44,8 +47,9 @@ from pyspark.sql.datasource import (
     InputPartition,
     SimpleDataSourceStreamReader,
 )
+from pyspark.sql.types import StructType
 
-from ..schemas import BLOCK_SCHEMA, TXN_ENVELOPE_SCHEMA
+from ..schemas import CHAIN_BLOCK_SCHEMA, TXN_ENVELOPE_SCHEMA
 from .rpc import Transport, rpc_call
 
 DEFAULT_HEIGHTS_PER_PARTITION = 64
@@ -161,6 +165,10 @@ def _transport_for(endpoint: str) -> Transport | None:
     return mock_transport if endpoint.startswith("mock://") else None
 
 
+def _schema_of(what: str) -> StructType:
+    return CHAIN_BLOCK_SCHEMA if what == "blocks" else TXN_ENVELOPE_SCHEMA
+
+
 class ChainReader(DataSourceReader):
     def __init__(self, options: dict):
         self.endpoint = options.get("endpoint", "mock://chain")
@@ -182,66 +190,33 @@ class ChainReader(DataSourceReader):
 
     def _rows(self, partition: HeightRange) -> Iterator[tuple]:
         transport = _transport_for(self.endpoint)
+
+        def envelope(stub: dict) -> str | None:
+            txn = rpc_call(
+                self.endpoint, "transaction_get", {"hash": stub["hash"]}, transport=transport
+            )
+            return None if txn is None else json.dumps(txn, sort_keys=True)
+
         for h in range(partition.lo, partition.hi + 1):
             block = rpc_call(
                 self.endpoint, "block_get", {"height": h}, transport=transport
             )
             if block is None:  # not gossiped yet: next read retries (=-100)
                 continue
+            stubs = block.get("transactions", [])
             if self.what == "blocks":
                 yield (
                     block["hash"],
                     block["height"],
                     block.get("prev_hash"),
                     block["time"],
-                    [(t["hash"], t["type"]) for t in block.get("transactions", [])],
+                    [(t["hash"], t["type"], envelope(t)) for t in stubs],
                 )
             else:
-                for stub in block.get("transactions", []):
-                    txn = rpc_call(
-                        self.endpoint,
-                        "transaction_get",
-                        {"hash": stub["hash"]},
-                        transport=transport,
-                    )
-                    if txn is not None:
-                        yield (
-                            stub["hash"],
-                            stub["type"],
-                            json.dumps(txn, sort_keys=True),
-                        )
-
-    def _arrow_schema(self):
-        import pyarrow as pa
-
-        if self.what == "blocks":
-            return pa.schema(
-                [
-                    pa.field("hash", pa.string(), nullable=False),
-                    pa.field("height", pa.int64(), nullable=False),
-                    pa.field("prev_hash", pa.string()),
-                    pa.field("time", pa.int64(), nullable=False),
-                    pa.field(
-                        "transactions",
-                        pa.list_(
-                            pa.struct(
-                                [
-                                    pa.field("hash", pa.string(), nullable=False),
-                                    pa.field("type", pa.string(), nullable=False),
-                                ]
-                            )
-                        ),
-                        nullable=False,
-                    ),
-                ]
-            )
-        return pa.schema(
-            [
-                pa.field("hash", pa.string(), nullable=False),
-                pa.field("type", pa.string(), nullable=False),
-                pa.field("json", pa.string(), nullable=False),
-            ]
-        )
+                for stub in stubs:
+                    payload = envelope(stub)
+                    if payload is not None:
+                        yield (stub["hash"], stub["type"], payload)
 
     def read(self, partition: HeightRange) -> Iterator:
         """Yield pyarrow.RecordBatch (columnar Python->JVM transfer; the
@@ -249,22 +224,14 @@ class ChainReader(DataSourceReader):
         buffered ARROW_BATCH_ROWS at a time so task memory stays bounded
         no matter the height range."""
         import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        schema = self._arrow_schema()
-        names = schema.names
+        schema = to_arrow_schema(_schema_of(self.what))
 
         def to_batch(buf: list[tuple]):
-            cols = list(zip(*buf))
-            if self.what == "blocks":
-                # list<struct> column: pa infers struct fields from dicts
-                cols = list(cols)
-                cols[4] = [
-                    [{"hash": h, "type": t} for h, t in txns] for txns in cols[4]
-                ]
-            arrays = [
-                pa.array(c, type=schema.field(i).type) for i, c in enumerate(cols)
-            ]
-            return pa.RecordBatch.from_arrays(arrays, names=names)
+            # a nested stub struct goes in as its row tuple
+            arrays = [pa.array(c, type=f.type) for c, f in zip(zip(*buf), schema)]
+            return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
         buf: list[tuple] = []
         for row in self._rows(partition):
@@ -344,8 +311,7 @@ class HeliumChainDataSource(DataSource):
         return "helium_chain"
 
     def schema(self):
-        what = self.options.get("what", "blocks")
-        return BLOCK_SCHEMA if what == "blocks" else TXN_ENVELOPE_SCHEMA
+        return _schema_of(self.options.get("what", "blocks"))
 
     def reader(self, schema) -> ChainReader:
         return ChainReader(dict(self.options))

@@ -16,14 +16,17 @@ heights, replacing ``while True: process_block(sync_height)``:
   hand-rolled ``follower_info`` state doc (follower.py:100-103, 116-128).
 
 Cost: a warm batch runs four Spark jobs — the ``min/max(height)``
-aggregate that gives the sinks the batch's block span, and one parquet
-write per sink. The stub-envelope join and the payload parse run once
-(``operators.graph.graph_documents``), and nothing is collected to the
-driver but the span. The sinks run under :data:`SMALL_BATCH_PROFILE`, set
-on the batch's own session: ``foreachBatch`` hands the body a DataFrame of
-a *clone* of the stream's session, and only the session a plan belongs to
-decides how it executes, so a conf set on the outer ``spark`` never
-reaches a streaming batch.
+aggregate that gives the sinks the batch's block span (and is returned to
+the caller, so the service needs no span of its own), and one parquet
+write per sink. Blocks from the ``helium_chain`` reader carry their txn
+envelopes, so the batch reads the chain once: no second read of the
+heights for their txns, and no stub-envelope join in the write jobs'
+plans. The payload parse runs once (``operators.graph.graph_documents``),
+and nothing is collected to the driver but the span. The sinks run under
+:data:`SMALL_BATCH_PROFILE`, set on the batch's own session:
+``foreachBatch`` hands the body a DataFrame of a *clone* of the stream's
+session, and only the session a plan belongs to decides how it executes,
+so a conf set on the outer ``spark`` never reaches a streaming batch.
 
 At about a hundred rows per sink, the jobs are not most of a batch's
 wall. The rest is driver-side: building the plans, at one py4j round trip
@@ -71,19 +74,22 @@ SMALL_BATCH_PROFILE = {
 def process_batch(
     spark: SparkSession,
     blocks: DataFrame,
-    txns: DataFrame,
+    txns: DataFrame | None,
     out_dir: str,
-) -> None:
+) -> tuple[int, int] | None:
     """One micro-batch of the follower dataflow (follower.py:135-207).
 
+    ``txns`` is read only when ``blocks`` carry no nested txn envelopes
+    (``operators.graph``); pass ``None`` for blocks that do.
     ``blocks``/``txns`` may still carry a ``_corrupt_record`` column from a
     PERMISSIVE read; bad rows are quarantined (the engine's ValidationError
     path, follower.py:58-69) and good rows flow on.
 
-    Returns once every write it started has finished. If one of them
-    failed, the first failed write in sink order raises; if a sink could
-    not start its write, that error is chained to it, or raised as it is
-    when the writes already started all succeeded.
+    Returns the batch's ``(lo, hi)`` block span, or ``None`` for a batch
+    with no blocks, once every write it started has finished. If one of
+    them failed, the first failed write in sink order raises; if a sink
+    could not start its write, that error is chained to it, or raised as it
+    is when the writes already started all succeeded.
     """
     raw_blocks = None
     if CORRUPT_COL in blocks.columns:
@@ -94,16 +100,16 @@ def process_batch(
         if not bad.isEmpty():
             bad.write.mode("append").parquet(f"{out_dir}/{QUARANTINE}")
         blocks = raw_blocks.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-    if CORRUPT_COL in txns.columns:
+    if txns is not None and CORRUPT_COL in txns.columns:
         txns = txns.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
 
-    # the span aggregate and the stub join both read the batch's blocks
+    # the span aggregate and the graph documents both read the batch's blocks
     blocks = blocks.persist()
     try:
         with scoped_conf(blocks.sparkSession, SMALL_BATCH_PROFILE):
             lo, hi = blocks.selectExpr("min(height)", "max(height)").collect()[0]
             if lo is None:
-                return
+                return None
             with graph_documents(blocks, txns) as (payments, witnesses, accounts):
                 writes: list[Future] = []
                 try:
@@ -114,6 +120,7 @@ def process_batch(
                     wait(writes)
                     for write in writes:
                         write.result()
+            return lo, hi
     finally:
         blocks.unpersist()
         if raw_blocks is not None:

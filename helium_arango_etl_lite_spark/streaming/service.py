@@ -1,15 +1,18 @@
 """The follower service (reference etl.py:3-5 + Follower.run,
 follower.py:55-75) — the engine's one way to follow the chain:
 
-    chain (JSON-RPC / mock) --readStream--> blocks micro-batches
-        -> per-batch txn-envelope fetch (distributed DataSource read)
+    chain (JSON-RPC / mock) --readStream--> blocks micro-batches, each
+            block fetched once with its txn envelopes nested
         -> graph transforms (operators/graph.py)
         -> idempotent block-bucketed sink (streaming/sink.py)
         -> stale-inventory refresh (follower.py:61-62 analog)
         -> retention partition drop (follower.py:210-214 analog)
 
 Every step after the read runs inside the batch, keyed by the batch's
-highest height, so the driver never polls the store.
+highest height, which ``process_batch`` returns with the span it gave the
+sinks, so the driver never polls the store. A batch makes one
+``block_get`` RPC per height and one ``transaction_get`` per txn, all in
+the stream reader.
 
 Run offline/demo: ``python -m helium_arango_etl_lite_spark --start 100
 --end 160`` (mock chain); point ``--endpoint`` at a real node for live
@@ -22,10 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import scoped_conf
 from ..sources.datasource import HeliumChainDataSource
 from ..sources.inventory import enrich_inventory, read_gateway_inventory
-from .follow import PAYMENTS, RECEIPTS, SMALL_BATCH_PROFILE, process_batch, sync_state
+from .follow import PAYMENTS, RECEIPTS, process_batch, sync_state
 from .sink import RETENTION_BLOCKS, apply_retention
 
 #: dimension staleness bound (reference follower.py:61-62): refresh the
@@ -103,25 +105,11 @@ def run_service(
 
     def batch_fn(batch_blocks: DataFrame, epoch_id: int) -> None:
         nonlocal inv_height
-        # persisted here, so the bounds below and process_batch read the
-        # stream's blocks once
-        batch_blocks = batch_blocks.persist()
-        try:
-            with scoped_conf(batch_blocks.sparkSession, SMALL_BATCH_PROFILE):
-                lo, hi = batch_blocks.selectExpr("min(height)", "max(height)").collect()[0]
-            if lo is None:  # an empty batch
-                return
-            txns = (
-                spark.read.format("helium_chain")
-                .option("endpoint", endpoint)
-                .option("what", "txns")
-                .option("start", str(lo))
-                .option("end", str(hi))
-                .load()
-            )
-            process_batch(spark, batch_blocks, txns, out_dir)
-        finally:
-            batch_blocks.unpersist()
+        # the stream's blocks carry their txn envelopes: no second read
+        span = process_batch(spark, batch_blocks, None, out_dir)
+        if span is None:  # an empty batch
+            return
+        hi = span[1]
         if inventory_glob is not None:
             inv_height = refresh_inventory_if_stale(
                 spark, inventory_glob, out_dir, hi, inv_height

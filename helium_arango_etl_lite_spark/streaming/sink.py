@@ -85,14 +85,21 @@ def _new_rows(
     spark: SparkSession, df: DataFrame, path: str, span: tuple[int, int] | None
 ) -> DataFrame:
     """The rows of ``df`` whose ``_key`` is not in ``path`` yet, with the
-    bucket column added to an edge frame."""
+    bucket column added to an edge frame. A NULL ``_key`` fails the write's
+    own job: it never matches the anti-join, so every replay would append
+    it again. The check projects the anti-join's output, so it costs the
+    plan no shuffle."""
     edges = "block" in df.columns
     if edges:
         if span is None:
             raise ValueError(f"{path}: an edge frame needs its batch's (lo, hi) block span")
         df = with_block_bucket(df)
     existing = _existing_keys(spark, path, span if edges else None)
-    return df if existing is None else df.join(existing, "_key", "left_anti")
+    new = df if existing is None else df.join(existing, "_key", "left_anti")
+    refused = f"{path}: a NULL _key breaks idempotence".replace("\\", "\\\\").replace("'", "\\'")
+    return new.selectExpr(
+        *(f"coalesce(_key, raise_error('{refused}')) AS _key" if c == "_key" else f"`{c}`" for c in new.columns)
+    )
 
 
 def idempotent_append(
@@ -105,11 +112,12 @@ def idempotent_append(
     ``.result()``.
 
     ``df`` must already be deduplicated within itself (the graph operators
-    end in ``dropDuplicates(["_key"])``). A frame with a ``block`` column is
-    an edge frame: ``span`` must give its lowest and highest block, the
-    table is written partitioned by ``block_bucket`` and the probe of
-    existing keys reads only that span. A frame without one (the account
-    vertices) is probed by ``_key`` alone and ``span`` is not used.
+    end in ``dropDuplicates(["_key"])``), and a NULL ``_key`` fails the
+    write. A frame with a ``block`` column is an edge frame: ``span`` must
+    give its lowest and highest block, the table is written partitioned by
+    ``block_bucket`` and the probe of existing keys reads only that span.
+    A frame without one (the account vertices) is probed by ``_key`` alone
+    and ``span`` is not used.
     """
     writer = _new_rows(spark, df, path, span).write.mode("append")
     if "block" in df.columns:

@@ -4,6 +4,8 @@ including partitioning and end-to-end flow into the graph operators."""
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import functions as F
 
 from helium_arango_etl_lite_spark.operators.graph import graph_documents
@@ -174,6 +176,8 @@ def test_batch_read_yields_bounded_arrow_batches():
 
 
 def test_arrow_block_batches_preserve_nested_transactions():
+    """Each stub of a ``what=blocks`` row carries its txn envelope: the raw
+    ``transaction_get`` payload, as the ``what=txns`` read yields it."""
     import pyarrow as pa
 
     from helium_arango_etl_lite_spark.sources import datasource as ds
@@ -185,4 +189,56 @@ def test_arrow_block_batches_preserve_nested_transactions():
     assert isinstance(batch, pa.RecordBatch)
     rows = batch.to_pylist()
     assert [r["height"] for r in rows] == [7, 8, 9]
-    assert rows[0]["transactions"] == [{"hash": "tx000000000007", "type": "payment_v1"}]
+    payload = ds.mock_transport("mock://chain", {"method": "transaction_get", "params": {"hash": "tx000000000007"}})
+    assert rows[0]["transactions"] == [
+        {"hash": "tx000000000007", "type": "payment_v1", "json": json.dumps(payload["result"], sort_keys=True)}
+    ]
+    txns = ds.ChainReader({"endpoint": "mock://chain", "start": "7", "end": "9", "what": "txns"})
+    assert [(t["hash"], t["type"], t["json"]) for r in rows for t in r["transactions"]] == list(
+        txns._rows(ds.HeightRange(7, 9))
+    )
+
+
+def test_stub_of_a_missing_txn_carries_no_envelope(monkeypatch):
+    """A stub whose txn the node does not have yet (-100) keeps its place
+    in the block with a NULL ``json``; the ``what=txns`` read skips it."""
+    from helium_arango_etl_lite_spark.sources import datasource as ds
+
+    def no_receipts(endpoint, payload):
+        if payload["params"].get("hash", "").startswith("pr"):
+            return {"error": {"code": -100, "message": "no such txn"}}
+        return ds.mock_transport(endpoint, payload)
+
+    monkeypatch.setattr(ds, "_transport_for", lambda endpoint: no_receipts)
+    (block,) = ds.ChainReader({"endpoint": "mock://mixed", "start": "3", "end": "3"})._rows(ds.HeightRange(3, 3))
+    assert [(h, t, j is None) for h, t, j in block[4]] == [
+        ("tx000000000003", "payment_v1", False),
+        ("pr000000000003", "poc_receipts_v1", True),
+    ]
+    txns = ds.ChainReader({"endpoint": "mock://mixed", "start": "3", "end": "3", "what": "txns"})
+    assert [r[0] for r in txns._rows(ds.HeightRange(3, 3))] == ["tx000000000003"]
+
+
+def test_stream_read_makes_one_rpc_per_block_and_per_txn(monkeypatch):
+    """One ``ChainStreamReader.read`` of 32 mixed heights fetches each
+    block once and each txn its stubs name once — the reference's N+1
+    (client.py:39-51) and nothing more — besides its one tip probe."""
+    from collections import Counter
+
+    from helium_arango_etl_lite_spark.sources import datasource as ds
+
+    calls = Counter()
+
+    def counting(endpoint, payload):
+        calls[payload["method"]] += 1
+        return ds.mock_transport(endpoint, payload)
+
+    monkeypatch.setattr(ds, "_transport_for", lambda endpoint: counting)
+    reader = ds.ChainStreamReader({"endpoint": "mock://mixed", "start": "100", "max_heights_per_batch": "32"})
+    rows, end = reader.read(reader.initialOffset())
+    rows = list(rows)
+    assert end == {"height": 132}
+    stubs = [t for r in rows for t in r[4]]
+    assert len(rows) == 32 and len(stubs) == 32 + len(range(102, 132, 3))
+    assert all(t[2] is not None for t in stubs)
+    assert calls == {"block_height": 1, "block_get": 32, "transaction_get": len(stubs)}

@@ -36,6 +36,11 @@ from helium_arango_etl_lite_spark.streaming.service import run_service
 from helium_arango_etl_lite_spark.streaming.sink import has_data_files
 
 NS = 1_000_000_000
+#: Stages of each Spark job of a warm batch: the span aggregate (partial
+#: and final), then the three writes, in whichever order they start. A
+#: write reads the batch's documents up to its key dedup's shuffle, the
+#: probe of existing keys up to its own, then anti-joins and writes.
+STAGES_PER_WARM_BATCH_JOB = [2, 3, 3, 3]
 
 
 def _witness(gateway: str, ts_ns: int, is_valid=True, signal=-90, snr=5.5):
@@ -252,6 +257,20 @@ def test_idempotent_append_antijoin(spark, tmp_path):
         idempotent_append(spark, b, out)
 
 
+def test_idempotent_append_refuses_a_null_key(spark, tmp_path):
+    """A NULL ``_key`` never matches the anti-join, so it would be appended
+    again on every replay: the write's own job fails on it and commits
+    nothing, for an edge and for a vertex frame alike."""
+    edges = spark.createDataFrame([("k1", 10), (None, 20)], "_key string, block long")
+    with pytest.raises(Exception, match="NULL _key"):
+        idempotent_append(spark, edges, str(tmp_path / "edges"), (10, 20)).result()
+    vertices = spark.createDataFrame([("a",), (None,)], "_key string")
+    with pytest.raises(Exception, match="NULL _key"):
+        idempotent_append(spark, vertices, str(tmp_path / "vertices")).result()
+    assert not has_data_files(str(tmp_path / "edges"))
+    assert not has_data_files(str(tmp_path / "vertices"))
+
+
 def test_idempotent_append_with_pinned_thread_mode_off(spark, tmp_path, monkeypatch):
     """Under ``PYSPARK_PIN_THREAD=false`` the py4j gateway is not a
     ``ClientServer`` and PySpark's thread helpers fall back to plain
@@ -307,33 +326,42 @@ def _assert_mixed_store(spark, out, heights):
     )
 
 
-def _mixed_batch(spark, lo, hi):
-    """(blocks, txns) of heights ``lo..hi`` of the mixed mock chain, as the
-    service's batch reader delivers them."""
+def _mixed_read(spark, what, lo, hi):
+    """The ``helium_chain`` batch read of heights ``lo..hi`` of the mixed
+    mock chain."""
     spark.dataSource.register(HeliumChainDataSource)
+    return (
+        spark.read.format("helium_chain")
+        .option("endpoint", "mock://mixed")
+        .option("what", what)
+        .option("start", lo).option("end", hi)
+        .load()
+    )
 
-    def read(what):
-        return (
-            spark.read.format("helium_chain")
-            .option("endpoint", "mock://mixed")
-            .option("what", what)
-            .option("start", lo).option("end", hi)
-            .load()
-        )
 
-    return read("blocks"), read("txns")
+def _mixed_batch(spark, lo, hi):
+    """``process_batch``'s (blocks, txns) for heights ``lo..hi`` of the
+    mixed mock chain, as the service's stream delivers them: the blocks
+    carry their txn envelopes, so there is no txns frame."""
+    return _mixed_read(spark, "blocks", lo, hi), None
 
 
 def test_warm_batch_runs_four_spark_jobs(spark, tmp_path, monkeypatch):
     """A warm batch over a seeded store, replaying part of it: the span
     aggregate and one write per sink, counted by Spark's status tracker
     under a job group — which the overlapped writes inherit from the
-    caller's thread — and the store still equals the chain. Building the
-    batch makes at most 1,000 py4j round trips to the JVM, counted on
-    every thread (it made about 3,400 when each column was its own call)."""
+    caller's thread — and the store still equals the chain. The blocks
+    carry their txn envelopes, so the txns frame given alongside is never
+    evaluated (evaluating it raises), and each write job runs 3 stages (the
+    stub-envelope join made it 5). Building the batch makes at most 1,000
+    py4j round trips to the JVM, counted on every thread (it made about
+    3,400 when each column was its own call)."""
     out = tmp_path / "graph"
-    process_batch(spark, *_mixed_batch(spark, 1, 64), str(out))
-    blocks, txns = _mixed_batch(spark, 49, 96)
+    assert process_batch(spark, *_mixed_batch(spark, 1, 64), str(out)) == (1, 64)
+    blocks = _mixed_read(spark, "blocks", 49, 96)
+    txns = spark.range(1).selectExpr(
+        "CAST(raise_error('the txns frame was evaluated') AS STRING) AS hash", "'payment_v1' AS type", "'{}' AS json"
+    )
     sc = spark.sparkContext
     group = "warm-follower-batch"
     round_trips = []
@@ -346,15 +374,62 @@ def test_warm_batch_runs_four_spark_jobs(spark, tmp_path, monkeypatch):
     sc.setJobGroup(group, "one warm follower batch")
     try:
         monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counted_send)
-        process_batch(spark, blocks, txns, str(out))
+        span = process_batch(spark, blocks, txns, str(out))
         monkeypatch.undo()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+    assert span == (49, 96)
     assert 0 < len(round_trips) <= 1000
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+    tracker = sc.statusTracker()
+    jobs = sorted(tracker.getJobIdsForGroup(group))
+    assert len(jobs) == 4
+    assert [len(tracker.getJobInfo(j).stageIds) for j in jobs] == STAGES_PER_WARM_BATCH_JOB
     _assert_mixed_store(spark, out, range(1, 97))
+
+
+def test_nested_envelopes_give_the_joined_documents(spark):
+    """``graph_documents`` over the reader's envelope-carrying blocks equals
+    ``graph_documents`` over the same blocks with ``json`` dropped plus the
+    ``what=txns`` read, for heights that straddle a bucket boundary."""
+    from helium_arango_etl_lite_spark.operators.graph import graph_documents
+
+    lo, hi = 7200 - 20, 7200 + 20
+    nested = _mixed_read(spark, "blocks", lo, hi)
+    stubs = nested.selectExpr(
+        "hash", "height", "prev_hash", "time",
+        "transform(transactions, t -> named_struct('hash', t.hash, 'type', t.type)) AS transactions",
+    )
+
+    def documents(blocks, txns):
+        with graph_documents(blocks, txns) as frames:
+            return [sorted(tuple(r) for r in f.collect()) for f in frames]
+
+    got = documents(nested, None)
+    assert got == documents(stubs, _mixed_read(spark, "txns", lo, hi))
+    payments, witnesses, accounts = got
+    assert len(payments) == hi - lo + 1
+    assert len(witnesses) == 2 * len(range(7182, hi + 1, 3))
+    assert accounts
+
+
+def test_malformed_payment_never_adds_a_null_account(spark, tmp_path):
+    """A ``payment_v1`` whose payload is not JSON names no account, so
+    replaying its batch appends nothing to ``accounts``: three runs leave
+    the good payment's two accounts and no NULL ``_key``."""
+    from helium_arango_etl_lite_spark.schemas import CHAIN_BLOCK_SCHEMA
+
+    good = json.dumps({"hash": "p1", "amount": 10, "fee": 1, "nonce": 1, "payer": "A", "payee": "B"})
+    blocks = spark.createDataFrame(
+        [("bh100", 100, "bh099", 1_600_000_000, [("p1", "payment_v1", good), ("bad", "payment_v1", "{not json")])],
+        CHAIN_BLOCK_SCHEMA,
+    )
+    out = tmp_path / "graph"
+    for _ in range(3):
+        assert process_batch(spark, blocks, None, str(out)) == (100, 100)
+    accounts = [r["_key"] for r in spark.read.parquet(str(out / follow.ACCOUNTS)).collect()]
+    assert sorted(accounts, key=str) == ["A", "B"]
 
 
 def test_failed_write_is_raised_after_the_others_finish(spark, tmp_path, monkeypatch):

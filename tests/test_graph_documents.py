@@ -2,7 +2,9 @@
 covers every branch of the follower dataflow (follower.py:135-207): both
 payment versions, an empty and a malformed payload of each type, receipts
 with and without their receipt struct, a receipt with no witnesses, a stub
-whose type differs from its envelope's, and one stub in two blocks.
+whose type differs from its envelope's, and one stub in two blocks — once
+as stub-only blocks joined to their envelopes, once with the envelopes
+nested in the stubs.
 
 Every row is compared whole, ``_key`` included, and every column by name,
 type and nullability, so a rewrite of the operators must reproduce them exactly."""
@@ -13,7 +15,7 @@ import hashlib
 import json
 
 from helium_arango_etl_lite_spark.operators.graph import graph_documents
-from helium_arango_etl_lite_spark.schemas import BLOCK_SCHEMA, TXN_ENVELOPE_SCHEMA
+from helium_arango_etl_lite_spark.schemas import BLOCK_SCHEMA, CHAIN_BLOCK_SCHEMA, TXN_ENVELOPE_SCHEMA
 
 NS = 1_000_000_000
 T0 = 1_600_000_000
@@ -120,9 +122,9 @@ WITNESSES = [
     ("hotspots/G1", "hotspots/W2", 904.3, "SF9BW125", None, -80, 5.5, 56 * NS, "rr", 201, 27, 6.0),
     ("hotspots/G2", "hotspots/W3", 904.3, "SF9BW125", False, -80, 5.5, 77 * NS, "rn", 201, None, None),
 ]
-# the unparseable payment_v1 adds a NULL account; the empty and the
+# the unparseable payment_v1 names no account; the empty and the
 # malformed payment_v2 still add their payers
-ACCOUNTS = [None, "A", "B", "C", "D", "E", "F"]
+ACCOUNTS = ["A", "B", "C", "D", "E", "F"]
 
 
 def _fields(df):
@@ -133,9 +135,7 @@ def _sorted(rows):
     return sorted(rows, key=lambda r: tuple((v is None, str(v)) for v in r))
 
 
-def test_graph_documents_rows_are_pinned(spark):
-    blocks = spark.createDataFrame(BLOCKS, BLOCK_SCHEMA)
-    txns = spark.createDataFrame(TXNS, TXN_ENVELOPE_SCHEMA)
+def _assert_pinned(blocks, txns=None):
     with graph_documents(blocks, txns) as (payments, witnesses, accounts):
         assert _fields(payments) == PAYMENT_FIELDS
         assert _fields(witnesses) == WITNESS_FIELDS
@@ -145,4 +145,24 @@ def test_graph_documents_rows_are_pinned(spark):
         got_accounts = [r["_key"] for r in accounts.collect()]
     assert _sorted(got_payments) == _sorted([(*r, _key(*r)) for r in PAYMENTS])
     assert _sorted(got_witnesses) == _sorted([(*r, _key(*r)) for r in WITNESSES])
-    assert sorted(got_accounts, key=lambda k: (k is not None, k)) == ACCOUNTS
+    assert sorted(got_accounts) == ACCOUNTS
+
+
+def test_graph_documents_rows_are_pinned(spark):
+    """Stub-only blocks (a dump's shape), joined to their envelopes."""
+    blocks = spark.createDataFrame(BLOCKS, BLOCK_SCHEMA)
+    txns = spark.createDataFrame(TXNS, TXN_ENVELOPE_SCHEMA)
+    _assert_pinned(blocks, txns)
+
+
+def test_graph_documents_from_nested_envelopes_are_pinned(spark):
+    """The same blocks as the ``helium_chain`` reader yields them: each stub
+    carries the envelope of its hash and type, or NULL when there is none
+    (the mistyped ``mis`` stub), and no txns frame is given. The rows are
+    the joined path's."""
+    envelopes = {(h, t): j for h, t, j in TXNS}
+    nested = [
+        {**b, "transactions": [{**t, "json": envelopes.get((t["hash"], t["type"]))} for t in b["transactions"]]}
+        for b in BLOCKS
+    ]
+    _assert_pinned(spark.createDataFrame(nested, CHAIN_BLOCK_SCHEMA))

@@ -11,6 +11,10 @@ entry (no execution) and flag the 100 TB anti-patterns:
 * per-plan Exchange count above a loud threshold (joins legitimately
   need several; this is a smell ranking, not a gate).
 
+It also reports each plan's whole-stage codegen spans (distinct codegen
+ids), counted in the plan as planned with AQE off (no flag; a record for
+comparing plans).
+
 Usage:  python tools/plan_audit.py [--json PLAN_AUDIT.json] [name ...]
 
 It audits the checkout it lives in, from any working directory: the repo
@@ -39,7 +43,7 @@ os.environ["PYTHONPATH"] = os.pathsep.join(
 )
 
 from helium_arango_etl_lite_spark.plans.queries import QUERIES  # noqa: E402
-from helium_arango_etl_lite_spark.session import get_spark  # noqa: E402
+from helium_arango_etl_lite_spark.session import get_spark, scoped_conf  # noqa: E402
 
 # Entries whose GLOBAL (unpartitioned) window is over a DOMAIN-BOUNDED
 # aggregate, with the bound — reviewed by hand; keep the justification
@@ -136,13 +140,23 @@ REPLAY_OK_PREFIXES = ("stream_", "follow_", "rollup_", "inventory_",
                       "quarantine_")
 
 
-def audit_one(spark, name: str, sf_dir: str) -> dict:
-    fn = QUERIES[name].spark_fn
-    df = fn(spark, sf_dir)
+def _formatted(df) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
-    plan = buf.getvalue()
+    return buf.getvalue()
+
+
+def audit_one(spark, name: str, sf_dir: str) -> dict:
+    fn = QUERIES[name].spark_fn
+    df = fn(spark, sf_dir)
+    plan = _formatted(df)
+    # Under AQE an unexecuted plan prints as its initial AdaptiveSparkPlan,
+    # which has no codegen stages yet; a fresh Dataset over the same
+    # logical plan, planned with AQE off, tags each operator of a
+    # whole-stage codegen span with the span's "[codegen id : N]".
+    with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+        codegen_plan = _formatted(df.select("*"))
     tree_exchanges = (
         plan.count("+- Exchange") + plan.count(":- Exchange")
         - plan.count("RoundRobinPartitioning")
@@ -157,7 +171,7 @@ def audit_one(spark, name: str, sf_dir: str) -> dict:
         "bnlj": plan.count("- BroadcastNestedLoopJoin"),
         "global_windows": global_windows,
         "exchanges": tree_exchanges,
-        "codegen_spans": plan.count("WholeStageCodegen"),
+        "codegen_spans": len(set(re.findall(r"\[codegen id : (\d+)\]", codegen_plan))),
     }
 
 
