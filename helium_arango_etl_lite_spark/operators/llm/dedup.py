@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ...functions.hashing import MERSENNE_31, hash64, minhash_params, minhash_signature
+from ..graph_algorithms import undirected
 
 TEXT_COL = "text"  # text column of every document frame
 ID_COL = "doc_id"  # id column of every document frame
@@ -402,15 +403,10 @@ def dup_clusters(pairs: DataFrame) -> DataFrame:
     # near-dup where its sequentially-materialized stages sum to ~112 s;
     # the loop's own eager checkpoints already run at construction time,
     # so this adds no new eagerness, only ordering).
-    pairs = pairs.select("doc_a", "doc_b").localCheckpoint(eager=True)
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    pairs = pairs.select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+    ).localCheckpoint(eager=True)
+    edges = undirected(pairs)
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()

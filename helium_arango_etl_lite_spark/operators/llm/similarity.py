@@ -69,6 +69,7 @@ from pyspark.sql.types import (
 )
 
 from ...functions.hashing import hash32
+from ..graph_algorithms import undirected
 
 _LOG = logging.getLogger(__name__)
 
@@ -1128,10 +1129,7 @@ def append_route_graph(
         old, edge_k=edge_k, seeds=seeds, num_planes=num_planes, dim=dim,
     )
     new_out = _lsh_edges(new, edge_k, seeds, num_planes, dim, corpus=emb)
-    back = new_out.select(
-        F.col("dst").alias("src"), F.col("src").alias("dst")
-    )
-    return old_edges.unionByName(new_out).unionByName(back).distinct()
+    return old_edges.unionByName(undirected(new_out)).distinct()
 
 
 #: rows of walk state one checkpoint partition holds before a second is

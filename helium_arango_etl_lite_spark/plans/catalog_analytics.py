@@ -1,18 +1,14 @@
-"""Analytics catalog: graph algorithms, funnels, cumulative windows, and
-sampling surfaces layered over the reference's property-graph schema.
+"""Analytics catalog: funnels, cumulative windows, and sampling surfaces
+layered over the reference's property-graph schema.
 
-The reference materializes a payment/witness graph precisely so that
-downstream AQL can run adjacency analytics (reference README.md:2); this
-module supplies those consumer-side queries as first-class Spark plans —
-PageRank over the money-flow graph, triangle counting on the co-supply
-graph, funnel conversion over event streams, running balances, CUBE
-summaries, semi-join activity filters, and stratified hash sampling.
+The consumer-side queries over the reference's payment/witness graph as
+first-class Spark plans: funnel conversion over event streams, running
+balances, CUBE summaries, semi-join activity filters, and stratified
+hash sampling. The graph algorithms themselves are in catalog_graph.py.
 
 Cross-engine exactness notes (the driver hashes values):
 - Running sums accumulate in INTEGER cents (exact, order-independent);
   the final ``/100.0`` is a single IEEE division both engines agree on.
-- PageRank rounds each iteration's contribution sum to 12 dp — the only
-  order-dependent float reduction — then the final rank to 8 dp.
 - Everything else is integer counts, min/max on timestamps, or 2/6 dp
   rounded terminal aggregates (the established catalog convention).
 """
@@ -198,123 +194,6 @@ def llm_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _money_flow_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Directed nation-level money-flow graph: customer nation -> supplier
-    nation, one distinct edge per observed pair (the nation-rollup of the
-    reference's account->account payment edges, follower.py:148-155)."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    return (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(c), F.col("o_custkey") == c["c_custkey"])
-        .join(F.broadcast(s), F.col("l_suppkey") == s["s_suppkey"])
-        .select(
-            c["c_nationkey"].alias("src").cast("int"),
-            s["s_nationkey"].alias("dst").cast("int"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-
-
-_PR_EDGES_SQL = """edges AS (
-         SELECT DISTINCT c.c_nationkey::INTEGER AS src,
-                         s.s_nationkey::INTEGER AS dst
-         FROM lineitem l
-         JOIN orders o ON l.l_orderkey = o.o_orderkey
-         JOIN customer c ON o.o_custkey = c.c_custkey
-         JOIN supplier s ON l.l_suppkey = s.s_suppkey
-         WHERE c.c_nationkey <> s.s_nationkey)"""
-
-
-def _pagerank_oracle() -> str:
-    """Three unrolled PageRank iterations as chained CTEs (the DuckDB twin
-    of the Spark loop in graph_pagerank; same 12-dp per-iteration round)."""
-    parts = [
-        "WITH " + _PR_EDGES_SQL,
-        "nodes AS (SELECT n_nationkey::INTEGER AS id FROM nation)",
-        "nn AS (SELECT count(*) AS n FROM nodes)",
-        "deg AS (SELECT src, count(*) AS outd FROM edges GROUP BY 1)",
-        "r0 AS (SELECT id, 1.0 / (SELECT n FROM nn) AS r FROM nodes)",
-    ]
-    prev = "r0"
-    for i in (1, 2, 3):
-        parts.append(
-            f"c{i} AS (SELECT e.dst AS id, "
-            f"round(sum({prev}.r / deg.outd), 12) AS contrib "
-            f"FROM edges e JOIN {prev} ON e.src = {prev}.id "
-            "JOIN deg ON e.src = deg.src GROUP BY e.dst)"
-        )
-        parts.append(
-            f"r{i} AS (SELECT n.id, "
-            f"round(0.15 / (SELECT n FROM nn) + 0.85 * coalesce(c{i}.contrib, 0.0), 12) AS r "
-            f"FROM nodes n LEFT JOIN c{i} ON n.id = c{i}.id)"
-        )
-        prev = f"r{i}"
-    return (
-        ",\n".join(parts)
-        + "\nSELECT id AS nation_id, round(r, 8) AS pagerank FROM r3"
-    )
-
-
-@register(
-    "graph_pagerank",
-    _pagerank_oracle(),
-    doc="PageRank (3 iterations, d=0.85) over the nation-level money-flow "
-        "graph — the centrality analytic the reference's payment graph "
-        "exists to feed (reference README.md:2). The expensive stage is "
-        "the distinct-edge extraction over the fact tables (scales with "
-        "data); the iteration joins the rank vector against the edge "
-        "list with no broadcast hint — AQE broadcasts it while V is "
-        "tiny, shuffle-joins on the node id at a 100x-vertex graph "
-        "(the scale-safe shape). Contribution "
-        "sums round to 12 dp per iteration (the one order-dependent "
-        "float reduction), final rank to 8 dp.",
-    tags=("graph", "iterative"),
-)
-def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nodes = (
-        load_table(spark, sf_dir, "nation")
-        .select(F.col("n_nationkey").cast("int").alias("id"))
-    )
-    n = nodes.count()  # tiny dimension; a driver-side scalar like the
-    # reference's chain-tip probe (client.py:21-23)
-    edges = _money_flow_edges(spark, sf_dir)
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outd"))
-    # materialize the (<= |nations|^2 rows) degree-annotated edge list
-    # once: each iteration's broadcast job would otherwise replay the
-    # 4-table distinct-edge extraction — the only stage that scales with
-    # the fact data
-    ed = edges.join(deg, "src").localCheckpoint(eager=False)
-    ranks = nodes.select("id", (F.lit(1.0) / F.lit(float(n))).alias("r"))
-    # no broadcast hint on the rank vector: at nation granularity AQE
-    # broadcasts it anyway, while at a 100x-vertex graph the scale-safe
-    # shape is a shuffle join on the node id — forcing an O(V) broadcast
-    # per iteration would make the driver the bottleneck
-    for _ in range(3):
-        contrib = (
-            ed.join(ranks, ed["src"] == ranks["id"])
-            .groupBy("dst")
-            .agg(F.round(F.sum(F.col("r") / F.col("outd")), 12).alias("contrib"))
-        )
-        ranks = (
-            nodes.join(contrib, nodes["id"] == contrib["dst"], "left")
-            .select(
-                "id",
-                F.round(
-                    F.lit(0.15) / F.lit(float(n))
-                    + F.lit(0.85) * F.coalesce(F.col("contrib"), F.lit(0.0)),
-                    12,
-                ).alias("r"),
-            )
-        )
-    return ranks.select(
-        F.col("id").alias("nation_id"), F.round("r", 8).alias("pagerank")
-    )
-
-
 @register(
     "window_moving_avg",
     """WITH daily AS (
@@ -485,52 +364,6 @@ def llm_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigrams = d.select(F.explode(word_shingles_all("text", 2)).alias("bigram"))
     freq = bigrams.groupBy("bigram").agg(F.count(F.lit(1)).alias("freq"))
     return freq.orderBy(F.desc("freq"), F.asc("bigram")).limit(50)
-
-
-@register(
-    "graph_triangle_count",
-    """WITH ps AS (SELECT DISTINCT l_partkey AS pk, l_suppkey AS sk FROM lineitem),
-       pairs AS (SELECT a.sk AS src, b.sk AS dst, count(*) AS shared
-                 FROM ps a JOIN ps b ON a.pk = b.pk AND a.sk < b.sk
-                 GROUP BY 1, 2),
-       top_e AS (SELECT src, dst FROM pairs
-                 ORDER BY shared DESC, src, dst LIMIT 200)
-       SELECT count(*) AS n_triangles
-       FROM top_e e1
-       JOIN top_e e2 ON e1.dst = e2.src
-       JOIN top_e e3 ON e3.src = e1.src AND e3.dst = e2.dst""",
-    doc="Triangle count on the strongest co-supply edges (suppliers "
-        "linked by shared parts, canonical src<dst so each triangle "
-        "counts once) — the clustering-coefficient analytic over the "
-        "graph the reference materializes. The scale-bearing stage is "
-        "the shared-part pair aggregation (one shuffle on part); the "
-        "top-200 edge set broadcasts into both triangle joins. At full "
-        "scale, swap LIMIT for a weight threshold and order each join "
-        "by degree (node-iterator) to bound intermediate size.",
-    tags=("graph", "join"),
-)
-def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    ps = li.select(
-        F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("sk")
-    ).distinct()
-    a, b = ps.alias("a"), ps.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.pk") == F.col("b.pk")) & (F.col("a.sk") < F.col("b.sk")))
-        .groupBy(F.col("a.sk").alias("src"), F.col("b.sk").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    top = pairs.orderBy(F.desc("shared"), F.asc("src"), F.asc("dst")).limit(200)
-    e1, e2, e3 = top.alias("e1"), top.alias("e2"), top.alias("e3")
-    return (
-        e1.join(e2, F.col("e1.dst") == F.col("e2.src"))
-        .join(
-            e3,
-            (F.col("e3.src") == F.col("e1.src"))
-            & (F.col("e3.dst") == F.col("e2.dst")),
-        )
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
-    )
 
 
 @register(
@@ -1118,38 +951,4 @@ def llm_doc_pack_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "n_tokens",
         F.floor((F.col("_run") - F.lit(1)) / F.lit(4096)).cast("long").alias("pack_id"),
-    )
-
-
-@register(
-    "graph_degree_distribution",
-    """WITH deg AS (SELECT o_custkey AS account, count(*) AS degree
-                    FROM orders GROUP BY 1)
-       SELECT length(bin(degree)) - 1 AS deg_bucket,
-              count(*) AS n_accounts,
-              min(degree) AS min_degree,
-              max(degree) AS max_degree
-       FROM deg GROUP BY 1""",
-    doc="Degree distribution of the payment graph (log2-bucketed histogram "
-        "over per-account edge counts) — the first skew diagnostic to run "
-        "before joining or salting a power-law graph like the reference's "
-        "payment network (follower.py:149-152 edge endpoints). Two "
-        "partial-agg shuffles, the second over ~64 bucket keys. The bucket "
-        "is bit-length (length(bin(n)) - 1), never floor(log2(n)): log2 "
-        "computed as log(n)/log(2) can land 1 ulp under an exact power of "
-        "two and floor into the wrong bucket, and the two engines would "
-        "disagree; integer bit-length is exact in both.",
-    tags=("graph", "agg"),
-)
-def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    deg = o.groupBy(F.col("o_custkey").alias("account")).agg(
-        F.count(F.lit(1)).alias("degree")
-    )
-    return deg.groupBy(
-        (F.length(F.bin("degree")) - 1).cast("long").alias("deg_bucket")
-    ).agg(
-        F.count(F.lit(1)).alias("n_accounts"),
-        F.min("degree").alias("min_degree"),
-        F.max("degree").alias("max_degree"),
     )

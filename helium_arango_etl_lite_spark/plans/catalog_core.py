@@ -567,43 +567,6 @@ def agg_payment_volume_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "graph_two_hop",
-    """WITH vol AS (
-         SELECT l_suppkey AS src, l_partkey AS dst,
-                round(sum(l_extendedprice), 2) AS amt
-         FROM lineitem GROUP BY 1, 2),
-       top_edges AS (SELECT * FROM vol ORDER BY amt DESC, src, dst LIMIT 200)
-       SELECT a.src AS hop0, a.dst AS hop1, b.dst AS hop2,
-              round(a.amt + b.amt, 2) AS path_volume
-       FROM top_edges a JOIN top_edges b ON a.dst = b.src AND a.src <> b.dst""",
-    doc="Two-hop graph traversal (money flow A->B->C) — the adjacency "
-        "analytics the reference's graph schema exists to serve "
-        "(reference README.md:2, AQL traversals). Aggregate the edge "
-        "volumes, keep the top slice (deterministic tie-break), self-join "
-        "hop1=hop2-src; both hop sides broadcast at this selectivity, and "
-        "at 100 TB the same plan co-partitions on the hop key.",
-    tags=("graph", "join"),
-)
-def graph_two_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    vol = (
-        li.groupBy(F.col("l_suppkey").alias("src"), F.col("l_partkey").alias("dst"))
-        .agg(F.round(F.sum("l_extendedprice"), 2).alias("amt"))
-    )
-    top = vol.orderBy(F.desc("amt"), F.asc("src"), F.asc("dst")).limit(200)
-    a, b = top.alias("a"), top.alias("b")
-    return (
-        a.join(b, (F.col("a.dst") == F.col("b.src")) & (F.col("a.src") != F.col("b.dst")))
-        .select(
-            F.col("a.src").alias("hop0"),
-            F.col("a.dst").alias("hop1"),
-            F.col("b.dst").alias("hop2"),
-            F.round(F.col("a.amt") + F.col("b.amt"), 2).alias("path_volume"),
-        )
-    )
-
-
-@register(
     "agg_percentiles",
     """SELECT l_returnflag,
               quantile_cont(l_quantity, 0.5) AS p50_qty,

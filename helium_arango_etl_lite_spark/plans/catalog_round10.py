@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash32, hash32_oracle_sql
+from ..operators.graph_algorithms import undirected
 from .catalog_round9 import (
     _CAP_MEMBERS, _GR_BEAM, _GR_EDGE_K, _GR_EMOD, _GR_ENTRIES, _GR_HOPS,
     _GR_K, _GR_QMOD, _GR_SEEDS, _gr_final_select, _gr_shared_ctes,
@@ -280,10 +281,7 @@ def stream_ann_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = per[0]
         for t in per[1:]:
             out = out.unionByName(t)
-        back = out.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst")
-        )
-        return out.unionByName(back)
+        return undirected(out)
 
     outs = run_replay(
         spark,

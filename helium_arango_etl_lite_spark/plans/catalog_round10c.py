@@ -1,5 +1,5 @@
 """Round-10 widening (session 3): CDC merge, spatial radius join,
-physical co-location via bucketing, and two window/graph gaps.
+physical co-location via bucketing, and a rolling-window gap.
 
 * ``cdc_apply`` — change-data-capture log replay with COLUMN-level
   patches and tombstone resets: an update op carries only the columns
@@ -20,11 +20,6 @@ physical co-location via bucketing, and two window/graph gaps.
   readout is an exact BIGINT on both engines. The array is at most 7
   elements regardless of corpus size, so the "collect into a window"
   step is O(1) per row.
-* ``graph_resource_allocation`` — Resource-Allocation link-prediction
-  index RA(a,b) = sum over common neighbors w of 1/deg(w) (Zhou/Lu/
-  Zhang 2009), the degree-penalized refinement of
-  graph_common_neighbors: hub neighbors contribute less. Scores are
-  exact integers (1e6 // deg summed — integer division, no floats).
 * ``join_spatial_radius`` — 2D radius self-join via grid blocking: the
   spatial analog of join_interval_overlap. Cell width = radius, so
   every qualifying pair lands in one of the 9 cells around a point;
@@ -247,73 +242,6 @@ def window_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cents",
         n.cast("long").alias("n_win"),
         med.cast("long").alias("med_cents"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Resource-Allocation link prediction: degree-penalized common neighbors
-# ---------------------------------------------------------------------------
-
-_RA_SQL = """WITH edges0 AS (
-         SELECT DISTINCT c.c_nationkey::INTEGER AS src,
-                         s.s_nationkey::INTEGER AS dst
-         FROM lineitem l
-         JOIN orders o ON l.l_orderkey = o.o_orderkey
-         JOIN customer c ON o.o_custkey = c.c_custkey
-         JOIN supplier s ON l.l_suppkey = s.s_suppkey
-         WHERE c.c_nationkey <> s.s_nationkey),
-       nbr AS (SELECT src AS id, dst AS n FROM edges0
-               UNION SELECT dst AS id, src AS n FROM edges0),
-       deg AS (SELECT id, count(*) AS d FROM nbr GROUP BY 1)
-SELECT a.id AS id_a, b.id AS id_b, count(*)::BIGINT AS n_common,
-       sum(1000000 // dn.d)::BIGINT AS ra6
-FROM nbr a
-JOIN nbr b ON a.n = b.n AND a.id < b.id
-JOIN deg dn ON dn.id = a.n
-GROUP BY 1, 2
-HAVING count(*) >= 20"""
-
-
-@register(
-    "graph_resource_allocation",
-    _RA_SQL,
-    doc="Resource-Allocation link-prediction index over the undirected "
-        "money-flow graph: RA(a,b) = sum over common neighbors w of "
-        "1/deg(w) (Zhou, Lu & Zhang 2009) — the degree-penalized "
-        "refinement of graph_common_neighbors, where a shared hub "
-        "contributes almost nothing but a shared low-degree neighbor "
-        "is strong evidence. Each neighbor's contribution is the exact "
-        "integer 1e6 // deg (integer division on both engines — no "
-        "transcendental, which is also why RA is implemented instead "
-        "of Adamic-Adar's 1/ln(deg)). Same exploded-adjacency "
-        "self-join + broadcast degree join as the Jaccard entry; the "
-        "shared n_common >= 20 output cap is the hub-key dial.",
-    tags=("graph", "similarity"),
-)
-def graph_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .catalog_analytics import _money_flow_edges
-
-    e0 = _money_flow_edges(spark, sf_dir)
-    nbr = (
-        e0.select(F.col("src").alias("id"), F.col("dst").alias("n"))
-        .union(e0.select(F.col("dst").alias("id"), F.col("src").alias("n")))
-        .distinct()
-        .localCheckpoint(eager=False)  # feeds degrees + both join sides
-    )
-    deg = nbr.groupBy("id").agg(F.count(F.lit(1)).alias("d"))
-    a, b = nbr.alias("a"), nbr.alias("b")
-    dn = F.broadcast(
-        deg.select(F.col("id").alias("n"), F.col("d").alias("dn"))
-    )
-    return (
-        a.join(b, (F.col("a.n") == F.col("b.n")) & (F.col("a.id") < F.col("b.id")))
-        .join(dn, F.col("a.n") == dn["n"])
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_common"),
-            F.sum(F.expr("1000000 div dn")).cast("long").alias("ra6"),
-        )
-        .filter(F.col("n_common") >= 20)
     )
 
 

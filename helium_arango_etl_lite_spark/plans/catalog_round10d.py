@@ -1,14 +1,6 @@
-"""Round-10 widening (session 3, second wave): HITS, l-diversity,
-marketing attribution, Zipf's-law fit, and classifier evaluation.
+"""Round-10 widening (session 3, second wave): l-diversity, marketing
+attribution, Zipf's-law fit, and classifier evaluation.
 
-* ``graph_hits`` — Kleinberg's HITS hub/authority scores over the
-  DIRECTED money-flow graph, two full mutual-reinforcement rounds
-  UNNORMALIZED so every score is an exact BIGINT (normalization only
-  rescales the ranking; the readout pins the raw sums, which no
-  aggregation order can move). The eigenvector-family complement to
-  graph_pagerank: PageRank ranks by incoming endorsement flow, HITS
-  separates "sends to good receivers" (hub) from "receives from good
-  senders" (authority) — on a payment graph, distributors vs sinks.
 * ``dq_l_diversity`` — the privacy readout k-anonymity cannot see:
   a class of 1000 identical quasi-identifiers is still a disclosure
   if all 1000 share one sensitive value. Counts distinct sensitive
@@ -45,87 +37,6 @@ from pyspark.sql import functions as F
 
 from ..functions.detln import ln_u6_select_items, with_ln_u6
 from .registry import EVENTS_NORM, load_events, load_table, register
-
-# ---------------------------------------------------------------------------
-# HITS: two unnormalized mutual-reinforcement rounds, exact integers
-# ---------------------------------------------------------------------------
-
-_HITS_EDGES_SQL = """edges AS (
-         SELECT DISTINCT c.c_nationkey::INTEGER AS src,
-                         s.s_nationkey::INTEGER AS dst
-         FROM lineitem l
-         JOIN orders o ON l.l_orderkey = o.o_orderkey
-         JOIN customer c ON o.o_custkey = c.c_custkey
-         JOIN supplier s ON l.l_suppkey = s.s_suppkey
-         WHERE c.c_nationkey <> s.s_nationkey)"""
-
-_HITS_SQL = f"""WITH {_HITS_EDGES_SQL},
-h1 AS (SELECT src AS id, count(*)::BIGINT AS h FROM edges GROUP BY 1),
-a1 AS (SELECT e.dst AS id, sum(h1.h)::BIGINT AS a
-       FROM edges e JOIN h1 ON h1.id = e.src GROUP BY 1),
-h2 AS (SELECT e.src AS id, sum(a1.a)::BIGINT AS h
-       FROM edges e JOIN a1 ON a1.id = e.dst GROUP BY 1),
-a2 AS (SELECT e.dst AS id, sum(h2.h)::BIGINT AS a
-       FROM edges e JOIN h2 ON h2.id = e.src GROUP BY 1),
-nodes AS (SELECT src AS id FROM edges UNION SELECT dst FROM edges)
-SELECT n.id, coalesce(h2.h, 0)::BIGINT AS hub2,
-       coalesce(a2.a, 0)::BIGINT AS auth2
-FROM nodes n
-LEFT JOIN h2 ON h2.id = n.id
-LEFT JOIN a2 ON a2.id = n.id"""
-
-
-@register(
-    "graph_hits",
-    _HITS_SQL,
-    doc="Kleinberg HITS over the directed money-flow graph: hub(u) = "
-        "sum of auth over u's out-neighbors, auth(v) = sum of hub over "
-        "v's in-neighbors, TWO full rounds from the all-ones start, "
-        "UNNORMALIZED so every score is an exact BIGINT (the usual "
-        "L2 normalization only rescales — rank order is identical — "
-        "and would put a cross-engine sqrt inside the iteration). "
-        "Each half-round is one edges-scan joined to the broadcast "
-        "node-score vector (25 nations), the same "
-        "iterate-by-broadcast shape as graph_pagerank: at 100 TB the "
-        "edge list streams, only the O(nodes) score vector "
-        "round-trips. The oracle unrolls both rounds.",
-    tags=("graph", "analytics"),
-)
-def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .catalog_analytics import _money_flow_edges
-
-    e = _money_flow_edges(spark, sf_dir).localCheckpoint(eager=False)
-    h1 = e.groupBy("src").agg(F.count(F.lit(1)).alias("h"))
-    a1 = (
-        e.join(F.broadcast(h1), "src")
-        .groupBy("dst")
-        .agg(F.sum("h").alias("a"))
-    )
-    h2 = (
-        e.join(F.broadcast(a1), "dst")
-        .groupBy("src")
-        .agg(F.sum("a").alias("h"))
-    )
-    a2 = (
-        e.join(F.broadcast(h2), "src")
-        .groupBy("dst")
-        .agg(F.sum("h").alias("a"))
-    )
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    return (
-        nodes.join(F.broadcast(h2.withColumnRenamed("src", "id")), "id", "left")
-        .join(F.broadcast(a2.withColumnRenamed("dst", "id")), "id", "left")
-        .select(
-            "id",
-            F.coalesce("h", F.lit(0)).cast("long").alias("hub2"),
-            F.coalesce("a", F.lit(0)).cast("long").alias("auth2"),
-        )
-    )
-
 
 # ---------------------------------------------------------------------------
 # l-diversity: distinct sensitive values per QI class, threshold sweep

@@ -1,5 +1,5 @@
-"""Round-10 widening (session 3, sixth wave): random projection,
-timed funnels, and bounded-depth graph traversal.
+"""Round-10 widening (session 3, sixth wave): random projection, timed
+funnels, uncertainty sampling, thumbnail resize and k-center coresets.
 
 * ``llm_random_projection`` — Johnson-Lindenstrauss dimensionality
   reduction: project 64-d embeddings onto 16 seeded random hyperplanes
@@ -17,12 +17,6 @@ timed funnels, and bounded-depth graph traversal.
   signup time into clicks to mark QUALIFIED clicks, carry the
   qualified-click time into purchases) — no self-join, no per-user
   UDF, one shuffle.
-* ``graph_bfs_distance`` — multi-source BFS distance (hop count to the
-  nearest seed nation, depth <= 3) over the undirected money-flow
-  graph: three unrolled frontier-expansion rounds, each one edges-scan
-  joined to the broadcast distance vector — the bounded-depth form of
-  the iterate-by-broadcast discipline pagerank/HITS use, and the
-  traversal primitive two_hop generalizes from.
 * ``llm_uncertainty_sample`` — margin-based uncertainty sampling over
   the shared per-(doc, class) NB score table: the active-learning rule
   for spending a labeling budget where the model is least sure; the
@@ -241,91 +235,6 @@ def events_funnel_timed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(
             n_conv.select(F.col("n").cast("long").alias("n_converted"))
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# multi-source BFS distance, depth <= 3, iterate-by-broadcast
-# ---------------------------------------------------------------------------
-
-_BFS_DEPTH = 3
-
-_BFS_SQL = """WITH edges0 AS (
-         SELECT DISTINCT c.c_nationkey::INTEGER AS src,
-                         s.s_nationkey::INTEGER AS dst
-         FROM lineitem l
-         JOIN orders o ON l.l_orderkey = o.o_orderkey
-         JOIN customer c ON o.o_custkey = c.c_custkey
-         JOIN supplier s ON l.l_suppkey = s.s_suppkey
-         WHERE c.c_nationkey <> s.s_nationkey),
-nbr AS (SELECT src AS a, dst AS b FROM edges0
-        UNION SELECT dst AS a, src AS b FROM edges0),
-nodes AS (SELECT DISTINCT a AS id FROM nbr),
-d0 AS (SELECT id, 0 AS dist FROM nodes WHERE id % 7 = 0),
-d1 AS (SELECT id, min(dist) AS dist FROM (
-         SELECT id, dist FROM d0
-         UNION ALL
-         SELECT n.b AS id, d0.dist + 1 FROM nbr n JOIN d0 ON d0.id = n.a
-       ) GROUP BY id),
-d2 AS (SELECT id, min(dist) AS dist FROM (
-         SELECT id, dist FROM d1
-         UNION ALL
-         SELECT n.b AS id, d1.dist + 1 FROM nbr n JOIN d1 ON d1.id = n.a
-       ) GROUP BY id),
-d3 AS (SELECT id, min(dist) AS dist FROM (
-         SELECT id, dist FROM d2
-         UNION ALL
-         SELECT n.b AS id, d2.dist + 1 FROM nbr n JOIN d2 ON d2.id = n.a
-       ) GROUP BY id)
-SELECT id::BIGINT AS id, dist::BIGINT AS dist FROM d3"""
-
-
-@register(
-    "graph_bfs_distance",
-    _BFS_SQL,
-    doc=f"Multi-source BFS distance (hop count to the nearest seed "
-        "nation, seeds = id % 7 == 0, depth <= {0}) over the "
-        "undirected money-flow graph: each round unions the current "
-        "distance vector with its one-hop relaxation and keeps the "
-        "min per node — three unrolled rounds of ONE edges-scan "
-        "joined to the broadcast O(nodes) distance vector, the "
-        "bounded-depth form of the iterate-by-broadcast discipline "
-        "pagerank and HITS use (and the general traversal primitive "
-        "graph_two_hop special-cases). Unreached-within-depth nodes "
-        "are absent, not NULL — the readout is exactly the reached "
-        "set. At 100 TB the edge list streams each round; only the "
-        "distance vector round-trips.".format(_BFS_DEPTH),
-    tags=("graph", "iterative"),
-)
-def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .catalog_analytics import _money_flow_edges
-
-    e0 = _money_flow_edges(spark, sf_dir)
-    nbr = (
-        e0.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .union(e0.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=False)  # scanned once per round
-    )
-    d = (
-        nbr.select(F.col("a").alias("id"))
-        .distinct()
-        .filter(F.col("id") % 7 == 0)
-        .withColumn("dist", F.lit(0))
-    )
-    for _ in range(_BFS_DEPTH):
-        relax = (
-            nbr.join(F.broadcast(d), nbr["a"] == d["id"])
-            .select(F.col("b").alias("id"), (F.col("dist") + 1).alias("dist"))
-        )
-        d = (
-            d.unionByName(relax)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-        )
-    return d.select(
-        F.col("id").cast("long").alias("id"),
-        F.col("dist").cast("long").alias("dist"),
     )
 
 

@@ -51,6 +51,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.graph_algorithms import undirected
 from .catalog_round9 import (
     _GR_BEAM, _GR_EDGE_K, _GR_EMOD, _GR_ENTRIES, _GR_HOPS, _GR_K,
     _GR_QMOD, _GR_SEEDS, _gr_final_select, _gr_walk_ctes,
@@ -227,9 +228,7 @@ def llm_ann_graph_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_out = per_seed[0]
     for t in per_seed[1:]:
         new_out = new_out.unionByName(t)
-    increment = new_out.unionByName(
-        new_out.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
+    increment = undirected(new_out)
     write_bucketed(
         increment, "sg_ann_edges", ["src"], num_buckets=_PERSIST_BUCKETS,
         sort_cols=["src"], mode="append",
@@ -445,128 +444,6 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.select(
         "event_id", "user_id", "ts", "event_type",
         "purchase_value", "purchase_event",
-    )
-
-
-# ---------------------------------------------------------------------------
-# personalized PageRank: restart mass on a seed set, bounded iterations
-# ---------------------------------------------------------------------------
-
-_PPR_ITERS = 3
-_PPR_D = "0.85"
-_PPR_SEED_REGION = 0  # seeds = nations of region 0 (deterministic set)
-
-
-def _ppr_oracle() -> str:
-    from .catalog_analytics import _PR_EDGES_SQL
-
-    parts = [
-        "WITH " + _PR_EDGES_SQL,
-        "nodes AS (SELECT n_nationkey::INTEGER AS id, n_regionkey FROM nation)",
-        f"seeds AS (SELECT id FROM nodes WHERE n_regionkey = {_PPR_SEED_REGION})",
-        "ns AS (SELECT count(*) AS n FROM seeds)",
-        "deg AS (SELECT src, count(*) AS outd FROM edges GROUP BY 1)",
-        "r0 AS (SELECT n.id, CASE WHEN s.id IS NOT NULL "
-        "THEN 1.0 / (SELECT n FROM ns) ELSE 0.0 END AS r "
-        "FROM nodes n LEFT JOIN seeds s ON n.id = s.id)",
-    ]
-    prev = "r0"
-    for i in range(1, _PPR_ITERS + 1):
-        parts.append(
-            f"c{i} AS (SELECT e.dst AS id, "
-            f"round(sum({prev}.r / deg.outd), 12) AS contrib "
-            f"FROM edges e JOIN {prev} ON e.src = {prev}.id "
-            "JOIN deg ON e.src = deg.src GROUP BY e.dst)"
-        )
-        parts.append(
-            f"r{i} AS (SELECT n.id, round("
-            f"CASE WHEN s.id IS NOT NULL THEN 0.15 / (SELECT n FROM ns) "
-            f"ELSE 0.0 END + {_PPR_D} * coalesce(c{i}.contrib, 0.0), 12) AS r "
-            f"FROM nodes n LEFT JOIN seeds s ON n.id = s.id "
-            f"LEFT JOIN c{i} ON n.id = c{i}.id)"
-        )
-        prev = f"r{i}"
-    return (
-        ",\n".join(parts)
-        + f"\nSELECT id AS nation_id, round(r, 8) AS ppr FROM r{_PPR_ITERS}"
-    )
-
-
-@register(
-    "graph_personalized_pagerank",
-    _ppr_oracle(),
-    doc=f"Personalized PageRank ({_PPR_ITERS} iterations, d={_PPR_D}) "
-        "over the nation-level money-flow graph, restart mass "
-        f"concentrated on the region-{_PPR_SEED_REGION} nations — "
-        "'centrality AS SEEN FROM this seed set', the "
-        "related-accounts / local-community analytic the reference's "
-        "payment graph exists to feed (reference README.md:2), vs "
-        "graph_pagerank's global stationary view. Identical "
-        "scale shape to graph_pagerank: the fact-table distinct-edge "
-        "extraction is the only data-sized stage (checkpointed once); "
-        "each iteration joins the rank vector to the edge list with no "
-        "broadcast hint (AQE broadcasts while V is tiny; shuffle-join "
-        "at a 100x-vertex graph). Teleport hits ONLY seeds — "
-        "non-seed nodes keep pure propagated mass, so rank leaks "
-        "outward from the seed region through trade edges. Per-"
-        "iteration contribution sums round at 12 dp (the one order-"
-        "dependent float reduction), final at 8 dp; the oracle unrolls "
-        "every iteration.",
-    tags=("graph", "iterative"),
-)
-def graph_personalized_pagerank(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from .catalog_analytics import _money_flow_edges
-
-    nat = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").cast("int").alias("id"), "n_regionkey"
-    )
-    seeds = nat.filter(
-        F.col("n_regionkey") == _PPR_SEED_REGION
-    ).select("id")
-    n_seeds = seeds.count()  # tiny dimension scalar, like pagerank's |V|
-    is_seed = F.col("seed_id").isNotNull()
-    nodes = nat.select("id").join(
-        seeds.withColumnRenamed("id", "seed_id"),
-        F.col("id") == F.col("seed_id"),
-        "left",
-    )
-    edges = _money_flow_edges(spark, sf_dir)
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outd"))
-    ed = edges.join(deg, "src").localCheckpoint(eager=False)
-    ranks = nodes.select(
-        "id",
-        F.when(is_seed, F.lit(1.0) / F.lit(float(n_seeds)))
-        .otherwise(F.lit(0.0))
-        .alias("r"),
-    )
-    teleport = (
-        F.when(is_seed, F.lit(0.15) / F.lit(float(n_seeds)))
-        .otherwise(F.lit(0.0))
-    )
-    for _ in range(_PPR_ITERS):
-        contrib = (
-            ed.join(ranks, ed["src"] == ranks["id"])
-            .groupBy("dst")
-            .agg(
-                F.round(F.sum(F.col("r") / F.col("outd")), 12).alias(
-                    "contrib"
-                )
-            )
-        )
-        ranks = nodes.join(
-            contrib, nodes["id"] == contrib["dst"], "left"
-        ).select(
-            nodes["id"],
-            F.round(
-                teleport
-                + F.lit(0.85) * F.coalesce(F.col("contrib"), F.lit(0.0)),
-                12,
-            ).alias("r"),
-        )
-    return ranks.select(
-        F.col("id").alias("nation_id"), F.round("r", 8).alias("ppr")
     )
 
 

@@ -854,89 +854,6 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _label_prop_oracle() -> str:
-    """Two unrolled label-propagation iterations (min-label tie-break) on
-    the undirected nation money-flow graph — DuckDB twin of the Spark
-    loop in graph_label_propagation."""
-    return """WITH edges0 AS (
-         SELECT DISTINCT c.c_nationkey::INTEGER AS src,
-                         s.s_nationkey::INTEGER AS dst
-         FROM lineitem l
-         JOIN orders o ON l.l_orderkey = o.o_orderkey
-         JOIN customer c ON o.o_custkey = c.c_custkey
-         JOIN supplier s ON l.l_suppkey = s.s_suppkey
-         WHERE c.c_nationkey <> s.s_nationkey),
-       edges AS (SELECT src, dst FROM edges0
-                 UNION SELECT dst, src FROM edges0),
-       nodes AS (SELECT n_nationkey::INTEGER AS id FROM nation),
-       l0 AS (SELECT id, id AS lbl FROM nodes),
-       n1 AS (SELECT e.src AS id, min(l0.lbl) AS new_lbl
-              FROM edges e JOIN l0 ON e.dst = l0.id GROUP BY 1),
-       l1 AS (SELECT nodes.id, coalesce(n1.new_lbl, l0.lbl) AS lbl
-              FROM nodes JOIN l0 USING (id)
-              LEFT JOIN n1 ON nodes.id = n1.id),
-       n2 AS (SELECT e.src AS id, min(l1.lbl) AS new_lbl
-              FROM edges e JOIN l1 ON e.dst = l1.id GROUP BY 1),
-       l2 AS (SELECT nodes.id, coalesce(n2.new_lbl, l1.lbl) AS lbl
-              FROM nodes JOIN l1 USING (id)
-              LEFT JOIN n2 ON nodes.id = n2.id)
-       SELECT id AS nation_id, lbl AS community FROM l2"""
-
-
-@register(
-    "graph_label_propagation",
-    _label_prop_oracle(),
-    doc="Community detection by label propagation (2 synchronous "
-        "iterations, min-label rule — deterministic, unlike the "
-        "frequency rule whose ties are engine-order dependent) over the "
-        "undirected nation money-flow graph. Same iterative shape as "
-        "graph_pagerank: the edge extraction scales with the fact data "
-        "and is materialized once; each iteration joins the label "
-        "vector to the edge list (no broadcast hint — AQE picks "
-        "broadcast at nation scale, node-id shuffle join at 100x) and "
-        "takes a min per node — shuffle keys are node ids, O(V) rows.",
-    tags=("graph", "iterative"),
-)
-def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .catalog_analytics import _money_flow_edges
-
-    nodes = (
-        load_table(spark, sf_dir, "nation")
-        .select(F.col("n_nationkey").cast("int").alias("id"))
-    )
-    e0 = _money_flow_edges(spark, sf_dir)
-    edges = (
-        e0.select("src", "dst")
-        .union(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    labels = nodes.select("id", F.col("id").alias("lbl"))
-    # like graph_pagerank: no broadcast hint on the per-vertex label
-    # vector — AQE broadcasts it while V is tiny, shuffle-joins on the
-    # node id when it isn't (the O(V)-per-iteration broadcast would be
-    # the bottleneck at a 100x-vertex graph)
-    for _ in range(2):
-        nbr = (
-            edges.join(
-                labels.select(F.col("id").alias("nid"), "lbl"),
-                edges["dst"] == F.col("nid"),
-            )
-            .groupBy("src")
-            .agg(F.min("lbl").alias("new_lbl"))
-        )
-        labels = (
-            nodes.join(labels, "id")
-            .join(nbr, nodes["id"] == nbr["src"], "left")
-            .select(
-                "id", F.coalesce("new_lbl", F.col("lbl")).alias("lbl")
-            )
-        )
-    return labels.select(
-        F.col("id").alias("nation_id"), F.col("lbl").alias("community")
-    )
-
-
 @register(
     "llm_ccnet_buckets",
     """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS a FROM documents),
@@ -991,71 +908,6 @@ def llm_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_doc.crossJoin(F.broadcast(cuts))
         .groupBy(bucket.alias("bucket"))
         .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-
-
-@register(
-    "graph_common_neighbors",
-    """WITH edges0 AS (
-         SELECT DISTINCT c.c_nationkey::INTEGER AS src,
-                         s.s_nationkey::INTEGER AS dst
-         FROM lineitem l
-         JOIN orders o ON l.l_orderkey = o.o_orderkey
-         JOIN customer c ON o.o_custkey = c.c_custkey
-         JOIN supplier s ON l.l_suppkey = s.s_suppkey
-         WHERE c.c_nationkey <> s.s_nationkey),
-       nbr AS (SELECT src AS id, dst AS n FROM edges0
-               UNION SELECT dst AS id, src AS n FROM edges0),
-       deg AS (SELECT id, count(*) AS d FROM nbr GROUP BY 1),
-       common AS (SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_common
-                  FROM nbr a JOIN nbr b ON a.n = b.n AND a.id < b.id
-                  GROUP BY 1, 2)
-       SELECT id_a, id_b, n_common,
-              round(n_common::DOUBLE
-                    / (da.d + db.d - n_common), 6) AS jaccard
-       FROM common
-       JOIN deg da ON da.id = id_a
-       JOIN deg db ON db.id = id_b
-       WHERE n_common >= 20""",
-    doc="Structural node similarity: common-neighbor count and neighbor "
-        "Jaccard for nation pairs in the undirected money-flow graph — "
-        "link prediction / entity-resolution shape on the reference's "
-        "payment graph (README.md:2 adjacency analytics). Same "
-        "exploded-adjacency self-join pattern as the shingle Jaccard "
-        "(dedup.ngram_jaccard_pairs), so the same hot-key cap applies "
-        "when a hub vertex appears: the n_common >= 20 filter here is "
-        "that dial's output-side twin.",
-    tags=("graph", "similarity"),
-)
-def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .catalog_analytics import _money_flow_edges
-
-    e0 = _money_flow_edges(spark, sf_dir)
-    nbr = (
-        e0.select(F.col("src").alias("id"), F.col("dst").alias("n"))
-        .union(e0.select(F.col("dst").alias("id"), F.col("src").alias("n")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = nbr.groupBy("id").agg(F.count(F.lit(1)).alias("d"))
-    a, b = nbr.alias("a"), nbr.alias("b")
-    common = (
-        a.join(b, (F.col("a.n") == F.col("b.n")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-        .filter(F.col("n_common") >= 20)
-    )
-    da = deg.select(F.col("id").alias("id_a"), F.col("d").alias("da"))
-    db = deg.select(F.col("id").alias("id_b"), F.col("d").alias("db"))
-    jacc = F.col("n_common").cast("double") / (
-        F.col("da") + F.col("db") - F.col("n_common")
-    )
-    return (
-        common.join(F.broadcast(da), "id_a")
-        .join(F.broadcast(db), "id_b")
-        .select("id_a", "id_b", "n_common", F.round(jacc, 6).alias("jaccard"))
     )
 
 

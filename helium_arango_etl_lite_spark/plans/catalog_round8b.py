@@ -1,16 +1,10 @@
-"""Round-8 late catalog: robust stats, graph density, fuzzy verify, and
-distributed training shapes.
+"""Round-8 late catalog: robust stats, fuzzy verify, and distributed
+training shapes.
 
 * ``events_mad_outliers`` — median/MAD robust outlier detection per user,
   all in exact integer half/quarter-cents so the cross-engine hash is
   meaningful (the robust complement to ``events_anomaly_zscore``, whose
   mean/stddev both move with the outliers they are trying to flag).
-* ``graph_k_core`` — bounded-round k-core peeling of the mutual-kNN
-  embedding graph: the density filter a curation pipeline runs to find
-  vectors embedded in genuinely dense semantic regions (vs the chance
-  pairings mutual-kNN alone admits). Both engines run the SAME fixed
-  number of peel rounds, so the comparison needs no convergence
-  argument.
 * ``llm_dedup_edit_verify`` — the MinHash-LSH candidate stage verified
   by CHARACTER-level banded Levenshtein instead of token Jaccard: the
   detector for small-edit plagiarism/near-dup that token shingles
@@ -112,125 +106,6 @@ def events_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).otherwise(0)
             ).cast("long").alias("n_outliers"),
             F.max("dev2").cast("long").alias("max_dev2_c"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# k-core peel of the mutual-kNN embedding graph (bounded rounds)
-# ---------------------------------------------------------------------------
-
-_KCORE_K = 2        # minimum degree to survive a peel round
-_KCORE_ROUNDS = 16  # fixed round count — both engines run exactly this; 16
-                    # covers fixpoint with margin on the driver data (12
-                    # rounds at sf0.001, 7 at sf0.01 — pinned by test)
-
-# mutual-kNN edge list (same construction as llm_semantic_clusters'
-# oracle, k=3): both orientations of every mutual pair are present, so
-# degree = count(*) grouped by src. Every CTE in the unrolled peel chain
-# is MATERIALIZED: DuckDB inlines single-reference CTEs, and an inlined
-# e{i} -> e{i-1} -> ... chain re-evaluates the all-pairs similarity join
-# a number of times exponential in the round count (observed: OOM).
-_MUTUAL_CTE = """
-ev_ AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-p_ AS (SELECT a.vec_id AS qid, b.vec_id AS nid,
-              round(list_dot_product(a.v, b.v)
-                    / (sqrt(list_dot_product(a.v, a.v))
-                       * sqrt(list_dot_product(b.v, b.v))), 4) AS cos_sim
-       FROM ev_ a JOIN ev_ b ON a.vec_id <> b.vec_id),
-r_ AS (SELECT qid, nid,
-              row_number() OVER (PARTITION BY qid
-                                 ORDER BY cos_sim DESC, nid) AS rank
-       FROM p_),
-knn_ AS MATERIALIZED (SELECT qid, nid FROM r_ WHERE rank <= 3),
-e0 AS MATERIALIZED (SELECT a.qid AS src, a.nid AS dst
-       FROM knn_ a JOIN knn_ b ON a.qid = b.nid AND a.nid = b.qid)"""
-
-
-def _kcore_sql() -> str:
-    parts = ["WITH " + _MUTUAL_CTE]
-    prev = "e0"
-    for i in range(1, _KCORE_ROUNDS + 1):
-        parts.append(
-            f""",
-a{i} AS MATERIALIZED (SELECT src AS v FROM {prev} GROUP BY src
-         HAVING count(*) >= {_KCORE_K}),
-e{i} AS MATERIALIZED (SELECT e.src, e.dst FROM {prev} e
-         JOIN a{i} x ON e.src = x.v JOIN a{i} y ON e.dst = y.v)"""
-        )
-        prev = f"e{i}"
-    parts.append(
-        f""",
-df_ AS (SELECT src, count(*)::BIGINT AS c FROM {prev} GROUP BY src)
-SELECT ev_.vec_id,
-       coalesce(df_.c, 0)::BIGINT AS core_degree,
-       (df_.c IS NOT NULL) AS in_core
-FROM ev_ LEFT JOIN df_ ON ev_.vec_id = df_.src"""
-    )
-    return "".join(parts)
-
-
-@register(
-    "graph_k_core",
-    _kcore_sql(),
-    doc=f"k-core peel (k={_KCORE_K}, {_KCORE_ROUNDS} fixed rounds) of the "
-        "mutual-3-NN embedding graph: repeatedly remove vertices of "
-        "degree < k, reporting who survives and their residual degree. "
-        "Mutual-kNN already guards against hub chaining; the k-core on "
-        "top is the standard density filter — vectors that survive sit "
-        "in regions dense enough that several neighbours ALSO rank each "
-        "other highly, the population worth semantic clustering or "
-        "curriculum up-weighting (chains and isolated pairs peel away). "
-        "DETERMINISM: both engines run exactly the same bounded round "
-        "count — no fixpoint-detection asymmetry can diverge them; a "
-        "round that removes nothing makes the rest no-ops, so bounded "
-        "rounds EQUAL the fixpoint whenever the peel converges early "
-        "(pinned by test on the driver data). PLAN: each round is one "
-        "degree partial-agg plus two semi-joins against a vertex set "
-        "that only SHRINKS, on eagerly-checkpointed edges (the "
-        "dup_clusters lesson: multi-consumer first jobs re-derive lazy "
-        "lineage); at 100 TB the kNN stage routes through the bucketed "
-        "LSH join exactly as llm_semantic_clusters argues.",
-    tags=("graph", "iterative", "llm"),
-)
-def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.llm import similarity
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    kn = similarity.knn_join(emb, k=3).select("qid", "nid")
-    kn = kn.localCheckpoint(eager=False)  # consumed by both mutual sides
-    edges = (
-        kn.alias("a")
-        .join(
-            kn.alias("b"),
-            (F.col("a.qid") == F.col("b.nid"))
-            & (F.col("a.nid") == F.col("b.qid")),
-        )
-        .select(F.col("a.qid").alias("src"), F.col("a.nid").alias("dst"))
-    )
-    edges = edges.localCheckpoint(eager=True)
-    for _ in range(_KCORE_ROUNDS):
-        alive = (
-            edges.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .filter(F.col("c") >= _KCORE_K)
-            .select(F.col("src").alias("v"))
-        )
-        edges = (
-            edges.join(alive, edges.src == alive.v, "left_semi")
-            .join(alive, edges.dst == alive.v, "left_semi")
-        )
-        # each round's edge set feeds a degree agg + two semi-joins next
-        # round — eager, or every round re-derives the full peel lineage
-        edges = edges.localCheckpoint(eager=True)
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    return (
-        emb.select("vec_id")
-        .join(deg, emb.vec_id == deg.src, "left")
-        .select(
-            "vec_id",
-            F.coalesce(F.col("c"), F.lit(0)).cast("long").alias("core_degree"),
-            F.col("c").isNotNull().alias("in_core"),
         )
     )
 

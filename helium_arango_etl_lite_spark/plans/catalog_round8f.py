@@ -1,5 +1,5 @@
-"""Round-8 session-2 catalog, part 4: temporal-dimension lookup, graph
-quality, and a second inequality index.
+"""Round-8 session-2 catalog, part 4: temporal-dimension lookup and a
+second inequality index.
 
 * ``join_scd2_lookup`` — the point-in-time dimension join every
   warehouse runs against an SCD2 table: each event resolves to the
@@ -8,11 +8,6 @@ quality, and a second inequality index.
   union-sort-backfill form (one sorted pass, no range join) — the
   join_asof pattern applied to the dimension scd2_build constructs,
   closing the build->consume loop.
-* ``graph_modularity`` — Newman modularity Q of the label-propagation
-  communities on the nation money-flow graph: the quality score that
-  tells you whether a community structure is real or noise. Per-
-  community terms from integer edge/degree counts, fixed-pointed
-  before the sum.
 * ``agg_theil_index`` — Theil inequality index per event type,
   computed (like the rewritten Gini) from the (type, value) COUNT
   table: the distinct-value grid bounds all post-shuffle work by the
@@ -104,157 +99,6 @@ def join_scd2_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return filled.filter(F.col("is_dim") == 0).select(
         "event_id", "user_id", "ts", "attr", "version"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Newman modularity of the label-propagation communities
-# ---------------------------------------------------------------------------
-
-_MOD_ITERS = 1  # ONE min-label iteration: two iterations collapse the
-# driver graph to a single community (Q identically 0 — a trivial hash
-# surface); one keeps 2 communities, so the oracle actually pins the
-# modularity arithmetic. graph_label_propagation keeps its 2-iteration
-# contract separately.
-
-_MODULARITY_SQL = """
-WITH edges0 AS (
-     SELECT DISTINCT c.c_nationkey::INTEGER AS src,
-                     s.s_nationkey::INTEGER AS dst
-     FROM lineitem l
-     JOIN orders o ON l.l_orderkey = o.o_orderkey
-     JOIN customer c ON o.o_custkey = c.c_custkey
-     JOIN supplier s ON l.l_suppkey = s.s_suppkey
-     WHERE c.c_nationkey <> s.s_nationkey),
-edges AS (SELECT src, dst FROM edges0
-          UNION SELECT dst, src FROM edges0),
-nodes AS (SELECT n_nationkey::INTEGER AS id FROM nation),
-l0 AS (SELECT id, id AS lbl FROM nodes),
-n1 AS (SELECT e.src AS id, min(l0.lbl) AS new_lbl
-       FROM edges e JOIN l0 ON e.dst = l0.id GROUP BY 1),
-l1 AS (SELECT nodes.id, coalesce(n1.new_lbl, l0.lbl) AS lbl
-       FROM nodes JOIN l0 USING (id)
-       LEFT JOIN n1 ON nodes.id = n1.id),
-m AS (SELECT (count(*) / 2)::BIGINT AS m FROM edges),
-deg AS (SELECT src AS id, count(*)::BIGINT AS d FROM edges GROUP BY 1),
-comm AS (SELECT l1.id, l1.lbl AS community,
-                coalesce(deg.d, 0)::BIGINT AS d
-         FROM l1 LEFT JOIN deg USING (id)),
-intra AS (SELECT a.community, (count(*) / 2)::BIGINT AS e_intra
-          FROM edges
-          JOIN comm a ON edges.src = a.id
-          JOIN comm b ON edges.dst = b.id AND a.community = b.community
-          GROUP BY 1)
-SELECT comm.community,
-       count(*)::BIGINT AS n_nodes,
-       coalesce(min(intra.e_intra), 0)::BIGINT AS e_intra,
-       sum(comm.d)::BIGINT AS d_tot,
-       floor((coalesce(min(intra.e_intra), 0) / m.m::DOUBLE
-              - (sum(comm.d) / (2.0 * m.m))
-                * (sum(comm.d) / (2.0 * m.m))) * 1000000
-             + 0.5)::BIGINT AS q_term6
-FROM comm
-CROSS JOIN m
-LEFT JOIN intra ON comm.community = intra.community
-GROUP BY comm.community, m.m"""
-
-
-@register(
-    "graph_modularity",
-    _MODULARITY_SQL,
-    doc="Newman modularity of the 1-iteration min-label communities "
-        "(graph_label_propagation's deterministic rule, one round — two "
-        "rounds collapse this graph to one community and Q degenerates "
-        "to 0, a trivial verification surface): "
-        "per community, Q_c = e_c/m - (d_c/2m)^2 over the undirected "
-        "distinct money-flow edge set — sum(q_term6)/1e6 is the global "
-        "Q that says whether detected structure beats the random-graph "
-        "null model. All inputs (intra-edge counts, degree sums, m) "
-        "are BIGINTs from edge-keyed partial aggs; each community's "
-        "term is fixed-pointed, so the readout sum is order-free. The "
-        "intra-edge count joins the label vector to the edge list "
-        "twice on node ids — O(V)-row join sides, the "
-        "graph_pagerank/label-prop shuffle discipline.",
-    tags=("graph", "analytics"),
-)
-def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .catalog_analytics import _money_flow_edges
-    from .registry import load_table
-
-    nodes = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").cast("int").alias("id")
-    )
-    e0 = _money_flow_edges(spark, sf_dir)
-    edges = (
-        e0.select("src", "dst")
-        .union(
-            e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)  # feeds labels, m, deg, intra
-    )
-    labels = nodes.select("id", F.col("id").alias("lbl"))
-    for _ in range(_MOD_ITERS):
-        nbr = (
-            edges.join(labels, edges["dst"] == labels["id"])
-            .groupBy(edges["src"].alias("nid"))
-            .agg(F.min("lbl").alias("new_lbl"))
-        )
-        labels = (
-            nodes.join(labels, "id")
-            .join(nbr, nodes["id"] == nbr["nid"], "left")
-            .select(
-                "id",
-                F.coalesce("new_lbl", "lbl").alias("lbl"),
-            )
-        )
-    comm = labels.select("id", F.col("lbl").alias("community"))
-    m_df = edges.agg(
-        (F.count(F.lit(1)) / 2).cast("long").alias("m")
-    )
-    deg = edges.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("d")
-    )
-    cd = comm.join(deg, "id", "left").select(
-        "id", "community", F.coalesce("d", F.lit(0)).alias("d")
-    )
-    a = cd.select(F.col("id").alias("src"), F.col("community").alias("ca"))
-    b = cd.select(F.col("id").alias("dst"), F.col("community").alias("cb"))
-    intra = (
-        edges.join(a, "src")
-        .join(b, "dst")
-        .filter(F.col("ca") == F.col("cb"))
-        .groupBy(F.col("ca").alias("community"))
-        .agg((F.count(F.lit(1)) / 2).cast("long").alias("e_intra"))
-    )
-    per = (
-        cd.groupBy("community")
-        .agg(
-            F.count(F.lit(1)).alias("n_nodes"),
-            F.sum("d").alias("d_tot"),
-        )
-        .join(F.broadcast(intra), "community", "left")
-        .crossJoin(F.broadcast(m_df))
-        .select(
-            "community",
-            "n_nodes",
-            F.coalesce("e_intra", F.lit(0)).cast("long").alias("e_intra"),
-            F.col("d_tot").cast("long").alias("d_tot"),
-            "m",
-        )
-    )
-    frac = F.col("d_tot") / (2.0 * F.col("m"))
-    q_term = (
-        F.col("e_intra") / F.col("m").cast("double") - frac * frac
-    )
-    return per.select(
-        "community",
-        "n_nodes",
-        "e_intra",
-        "d_tot",
-        F.floor(q_term * F.lit(1_000_000.0) + F.lit(0.5))
-        .cast("long")
-        .alias("q_term6"),
     )
 
 

@@ -22,6 +22,10 @@ resume doc; stop/restart continues where the last committed batch ended.
 
 from __future__ import annotations
 
+import os
+import shutil
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,9 +53,10 @@ def refresh_inventory_if_stale(
     geo-enrich it, and bulk-replace the ``hotspots`` dimension table.
 
     Returns the new inventory height (or the old one when fresh enough /
-    no files). The replace is a parquet overwrite — the slowly-refreshed
-    dimension pattern where downstream joins re-broadcast the new
-    snapshot on their next micro-batch.
+    no files). The replace publishes a new snapshot (:func:`_publish_snapshot`)
+    — the slowly-refreshed dimension pattern where downstream joins
+    re-broadcast the new snapshot on their next micro-batch — so a failed
+    refresh leaves the previous snapshot readable.
     """
     fresh_floor = sync_height - INVENTORY_STALENESS_BLOCKS
     if inventory_height is not None and inventory_height >= fresh_floor:
@@ -61,10 +66,38 @@ def refresh_inventory_if_stale(
     if top is None or (inventory_height is not None and top <= inventory_height):
         return inventory_height  # nothing newer landed
     latest = inv.filter(F.col("inventory_height") == top)
-    enrich_inventory(latest).write.mode("overwrite").parquet(
-        f"{out_dir}/hotspots"
-    )
+    _publish_snapshot(enrich_inventory(latest), out_dir, "hotspots", int(top))
     return int(top)
+
+
+def _publish_snapshot(df: DataFrame, out_dir: str, table: str, version: int) -> None:
+    """Replace the local table ``<out_dir>/<table>`` with ``df`` in one
+    atomic step. ``df`` is written to a directory of its own under
+    ``<out_dir>/_<table>``, and ``<out_dir>/<table>`` is a symlink that
+    one rename repoints to it, so a reader sees the old snapshot or the
+    new one, never an empty or partial table. An overwrite in place would
+    empty the directory before its job runs, and a failed job would leave
+    the table unreadable until the next refresh. The snapshot just
+    replaced is kept for readers still scanning it; older ones are
+    deleted."""
+    link = os.path.join(out_dir, table)
+    snaps = os.path.join(out_dir, f"_{table}")
+    name = f"{version}-{uuid.uuid4().hex[:8]}"
+    df.write.parquet(os.path.join(snaps, name))
+    previous = None
+    if os.path.islink(link):
+        previous = os.path.basename(os.readlink(link))
+    elif os.path.isdir(link):
+        # a table an earlier version overwrote in place becomes the
+        # previous snapshot (the one swap that is not atomic)
+        previous = f"0-{uuid.uuid4().hex[:8]}"
+        os.rename(link, os.path.join(snaps, previous))
+    tmp = f"{link}.{name}.tmp"
+    os.symlink(os.path.join(f"_{table}", name), tmp)
+    os.replace(tmp, link)
+    for old in os.listdir(snaps):
+        if old not in (name, previous):
+            shutil.rmtree(os.path.join(snaps, old))
 
 
 def run_service(

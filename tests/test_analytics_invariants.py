@@ -1,7 +1,7 @@
 """Semantic invariants for the analytics catalog (catalog_analytics.py) —
 properties the oracle hash-match can't express: funnel monotonicity,
-packing feasibility, PageRank mass conservation, reconciliation
-completeness. Run on the sf0.001 tables like the parity suite."""
+packing feasibility, reconciliation completeness. Run on the sf0.001
+tables like the parity suite."""
 
 from __future__ import annotations
 
@@ -37,17 +37,6 @@ def test_doc_pack_ids_contiguous_and_bounded(spark, sf_dir):
     max_doc = max(r["n_tokens"] for r in rows)
     for pid in ids[:-1]:
         assert packs[pid] > 4096 - max_doc
-
-
-def test_pagerank_is_a_distribution_up_to_dangling(spark, sf_dir):
-    """Ranks are positive and total mass stays in (0, 1]: dangling nodes
-    leak mass but nothing is created."""
-    rows = run(spark, sf_dir, "graph_pagerank").collect()
-    total = sum(r["pagerank"] for r in rows)
-    assert all(r["pagerank"] > 0 for r in rows)
-    assert 0 < total <= 1 + 1e-6
-    # every nation appears exactly once
-    assert len({r["nation_id"] for r in rows}) == len(rows)
 
 
 def test_reconcile_partitions_the_union(spark, sf_dir):

@@ -707,3 +707,43 @@ def test_service_refreshes_stale_inventory(spark, tmp_path):
     assert h == 110
     keys = {r["_key"] for r in spark.read.parquet(str(out / "hotspots")).collect()}
     assert keys == {"hs2"}
+
+
+def test_failed_hotspots_refresh_keeps_the_previous_snapshot(spark, tmp_path, monkeypatch):
+    """A refresh whose write job fails leaves the hotspots table readable
+    with the snapshot it was replacing, before any restart: the new
+    snapshot is published only once it is fully written."""
+    inv_dir = tmp_path / "inv"
+    inv_dir.mkdir()
+    (inv_dir / "gateway_inventory_100.csv").write_text(
+        "address,owner,location,name\nhs1,own1,8c2a100acc5ffff,alpha\n"
+    )
+    out = tmp_path / "graph"
+    assert service.refresh_inventory_if_stale(
+        spark, str(inv_dir), str(out), sync_height=700, inventory_height=None
+    ) == 100
+    (inv_dir / "gateway_inventory_110.csv").write_text(
+        "address,owner,location,name\nhs2,own2,8c2a100acc5ffff,beta\n"
+    )
+
+    def failing_enrich(inv):
+        # fails inside the write job, after the job has started
+        boom = F.when(F.col("_key").isNotNull(), F.raise_error(F.lit("refresh boom")))
+        return enrich_inventory(inv).withColumn("boom", boom.cast("int"))
+
+    monkeypatch.setattr(service, "enrich_inventory", failing_enrich)
+    with pytest.raises(Exception, match="refresh boom"):
+        service.refresh_inventory_if_stale(
+            spark, str(inv_dir), str(out), sync_height=700, inventory_height=100
+        )
+    keys = {r["_key"] for r in spark.read.parquet(str(out / "hotspots")).collect()}
+    assert keys == {"hs1"}
+
+    # the next refresh publishes the new drop and drops the failed write
+    monkeypatch.undo()
+    assert service.refresh_inventory_if_stale(
+        spark, str(inv_dir), str(out), sync_height=700, inventory_height=100
+    ) == 110
+    keys = {r["_key"] for r in spark.read.parquet(str(out / "hotspots")).collect()}
+    assert keys == {"hs2"}
+    assert len(os.listdir(out / "_hotspots")) == 2  # the new and the replaced

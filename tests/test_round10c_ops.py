@@ -202,35 +202,6 @@ def test_attribution_conserves_purchases(spark, sf_dir):
     }
 
 
-def test_hits_round1_matches_degree_identity(spark, sf_dir):
-    """After one unnormalized round, auth1(v) = sum of out-degrees of
-    v's in-neighbors; the entry reports round 2, so recompute round 1
-    locally from the edge list and cross-check the recurrence."""
-    from helium_arango_etl_lite_spark.plans.catalog_analytics import (
-        _money_flow_edges,
-    )
-    from helium_arango_etl_lite_spark.plans.catalog_round10d import graph_hits
-
-    edges = [(r["src"], r["dst"]) for r in _money_flow_edges(spark, sf_dir).collect()]
-    outdeg: dict = {}
-    for s, _ in edges:
-        outdeg[s] = outdeg.get(s, 0) + 1
-    a1: dict = {}
-    for s, d in edges:
-        a1[d] = a1.get(d, 0) + outdeg[s]
-    h2: dict = {}
-    for s, d in edges:
-        h2[s] = h2.get(s, 0) + a1.get(d, 0)
-    a2: dict = {}
-    for s, d in edges:
-        a2[d] = a2.get(d, 0) + h2.get(s, 0)
-    got = {r["id"]: (r["hub2"], r["auth2"]) for r in graph_hits(spark, sf_dir).collect()}
-    nodes = {s for s, _ in edges} | {d for _, d in edges}
-    assert set(got) == nodes
-    for n in nodes:
-        assert got[n] == (h2.get(n, 0), a2.get(n, 0))
-
-
 def test_partition_prune_reads_only_surviving_dirs(spark, sf_dir):
     """The two-type predicate must prune at the DIRECTORY level: the
     scan plan carries PartitionFilters and every file actually read
@@ -460,27 +431,6 @@ def test_funnel_timed_counts_are_monotone(spark, sf_dir):
     r = r10h.events_funnel_timed(spark, sf_dir).collect()[0]
     assert r["n_signup"] >= r["n_qualified_click"] >= r["n_converted"] >= 0
     assert r["n_signup"] > 0
-
-
-def test_bfs_distances_satisfy_edge_relaxation(spark, sf_dir):
-    """dist(seed) == 0 and |dist(u) - dist(v)| <= 1 across every edge
-    where both ends are reached (BFS layers differ by at most one)."""
-    import helium_arango_etl_lite_spark.plans.catalog_round10h as r10h
-    from helium_arango_etl_lite_spark.plans.catalog_analytics import (
-        _money_flow_edges,
-    )
-
-    dist = {
-        r["id"]: r["dist"]
-        for r in r10h.graph_bfs_distance(spark, sf_dir).collect()
-    }
-    assert dist and all(v >= 0 for v in dist.values())
-    for n, d in dist.items():
-        assert (d == 0) == (n % 7 == 0)
-    for r in _money_flow_edges(spark, sf_dir).collect():
-        a, b = r["src"], r["dst"]
-        if a in dist and b in dist:
-            assert abs(dist[a] - dist[b]) <= 1, (a, b)
 
 
 def test_random_projection_errors_are_bounded(spark, sf_dir):

@@ -180,37 +180,6 @@ def test_asof_tolerance_masks_only_stale_matches(spark, sf_dir):
     }
 
 
-def test_ppr_mass_conserved_and_seed_biased(spark, sf_dir):
-    """Personalized PageRank invariants the oracle compare can't state:
-    total mass stays ~1 (teleport + damping conserve it on this
-    strongly-connected trade graph), and the average seed-region rank
-    exceeds the average non-seed rank — the whole point of
-    personalization."""
-    from pyspark.sql import functions as F
-
-    from helium_arango_etl_lite_spark.plans.catalog_round11 import (
-        _PPR_SEED_REGION,
-        graph_personalized_pagerank,
-    )
-    from helium_arango_etl_lite_spark.plans.registry import load_table
-
-    r = graph_personalized_pagerank(spark, sf_dir)
-    total = r.agg(F.sum("ppr")).collect()[0][0]
-    assert abs(total - 1.0) < 1e-4, total
-
-    nat = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").cast("int").alias("nation_id"), "n_regionkey"
-    )
-    avg = {
-        bool(row["is_seed"]): row["a"]
-        for row in r.join(nat, "nation_id")
-        .groupBy((F.col("n_regionkey") == _PPR_SEED_REGION).alias("is_seed"))
-        .agg(F.avg("ppr").alias("a"))
-        .collect()
-    }
-    assert avg[True] > avg[False], avg
-
-
 def test_cuped_reduces_between_user_variance(spark, sf_dir):
     """CUPED's contract: theta is the pooled OLS slope, rho^2 in [0,1],
     and the adjustment preserves the OVERALL mean (sum over arms of

@@ -1,5 +1,5 @@
 """Tests for the round-8 late operators (plans/catalog_round8b.py):
-MAD outliers, k-core peel, edit-distance verify, logistic-regression
+MAD outliers, edit-distance verify, logistic-regression
 training, streaming sessionization."""
 from __future__ import annotations
 
@@ -65,47 +65,6 @@ def test_mad_plan_single_shuffle_no_joins(spark, sf_dir):
     assert "Join" not in plan, plan
     hash_ex = re.findall(r"hashpartitioning\(user_id", plan)
     assert len(hash_ex) == 1, plan
-
-
-# ---------------------------------------------------------------------------
-# graph_k_core
-# ---------------------------------------------------------------------------
-
-def test_k_core_matches_fixpoint_peel(spark, sf_dir):
-    """The bounded-round entry must equal the true k-core fixpoint on the
-    driver data (i.e. the peel converges within the round budget), with
-    the fixpoint computed by a naive Python peel over the same mutual
-    edge set."""
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM '{sf_dir}/embeddings.parquet'"
-    )
-    edges = con.execute(
-        "WITH " + r8b._MUTUAL_CTE + " SELECT src, dst FROM e0"
-    ).fetchall()
-    adj: dict[int, set[int]] = {}
-    for s, d in edges:
-        adj.setdefault(s, set()).add(d)
-    # fixpoint peel
-    alive = set(adj)
-    while True:
-        dead = {v for v in alive
-                if len(adj[v] & alive) < r8b._KCORE_K}
-        if not dead:
-            break
-        alive -= dead
-    expect = {
-        v: len(adj[v] & alive) for v in alive
-    }
-    out = (
-        QUERIES["graph_k_core"].spark_fn(spark, sf_dir)
-        .toPandas().set_index("vec_id")
-    )
-    got_core = set(out.index[out["in_core"]])
-    assert got_core == set(expect)
-    for v, deg in expect.items():
-        assert out.loc[v, "core_degree"] == deg
-    assert (out.loc[~out["in_core"], "core_degree"] == 0).all()
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,6 @@
 """Tests for the round-8 session-2 part-4 operators
-(plans/catalog_round8f.py): SCD2 point-in-time lookup, modularity,
-Theil index."""
+(plans/catalog_round8f.py): SCD2 point-in-time lookup, Theil
+index."""
 from __future__ import annotations
 
 import io
@@ -57,60 +57,6 @@ def test_scd2_lookup_avoids_range_join(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "Window" in plan
-
-
-# ---------------------------------------------------------------------------
-# graph_modularity
-# ---------------------------------------------------------------------------
-
-def test_modularity_terms_match_naive(spark, sf_dir):
-    out = QUERIES["graph_modularity"].spark_fn(spark, sf_dir).toPandas()
-    con = duckdb.connect()
-    for t in ["lineitem", "orders", "customer", "supplier", "nation"]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    e0 = con.execute(
-        """SELECT DISTINCT c.c_nationkey::INTEGER AS src,
-                  s.s_nationkey::INTEGER AS dst
-           FROM lineitem l
-           JOIN orders o ON l.l_orderkey = o.o_orderkey
-           JOIN customer c ON o.o_custkey = c.c_custkey
-           JOIN supplier s ON l.l_suppkey = s.s_suppkey
-           WHERE c.c_nationkey <> s.s_nationkey"""
-    ).df()
-    und = {(r["src"], r["dst"]) for _, r in e0.iterrows()}
-    und |= {(b, a) for a, b in und}
-    nodes = sorted(
-        con.execute("SELECT n_nationkey::INTEGER AS id FROM nation").df()["id"]
-    )
-    lbl = {n: n for n in nodes}
-    for _ in range(1):
-        new = dict(lbl)
-        for n in nodes:
-            nb = [lbl[b] for (a, b) in und if a == n]
-            if nb:
-                new[n] = min(nb)
-        lbl = new
-    m = len(und) // 2
-    deg = {n: sum(1 for (a, _) in und if a == n) for n in nodes}
-    comms = sorted(set(lbl.values()))
-    assert sorted(out["community"]) == comms
-    q_total = 0.0
-    for c in comms:
-        members = {n for n in nodes if lbl[n] == c}
-        e_intra = sum(1 for (a, b) in und if a in members and b in members) // 2
-        d_tot = sum(deg[n] for n in members)
-        term = e_intra / m - (d_tot / (2 * m)) ** 2
-        row = out[out["community"] == c].iloc[0]
-        assert row["n_nodes"] == len(members)
-        assert row["e_intra"] == e_intra
-        assert row["d_tot"] == d_tot
-        assert row["q_term6"] == math.floor(term * 1e6 + 0.5)
-        q_total += term
-    # single-community degenerate case: Q must be ~0 (e_c=m, d_c=2m)
-    if len(comms) == 1:
-        assert abs(q_total) < 1e-9
 
 
 # ---------------------------------------------------------------------------
