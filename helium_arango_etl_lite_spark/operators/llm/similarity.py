@@ -32,8 +32,10 @@ IVF probe order                 ``_probe_ranks``            ivf_pq_adc_search,
                                                             llm_ann_ivf_pq_recall_sweep
 ADC LUT and per-block lookup    ``_pq_luts``, ``_adc``      ivf_pq_adc_search,
                                                             llm_ann_ivf_pq_recall_sweep
-LSH neighbour edges per seed    ``_lsh_edges``              build_route_graph,
-                                                            append_route_graph
+LSH neighbour edges per seed    :func:`lsh_edges`          build_route_graph,
+                                                            append_route_graph,
+                                                            llm_ann_graph_persist,
+                                                            stream_ann_ingest_replay
 ==============================  ==========================  =============================
 
 The index paths: exact (:func:`cosine_topk`, :func:`knn_join`,
@@ -1058,7 +1060,7 @@ def graph_route_topk(
     )
 
 
-def _lsh_edges(
+def lsh_edges(
     emb: DataFrame, edge_k: int, seeds: tuple[int, ...],
     num_planes: int | None, dim: int | None, corpus: DataFrame | None = None,
 ) -> DataFrame:
@@ -1090,7 +1092,7 @@ def build_route_graph(
     :func:`route_on_graph` — the second batch pays search cost only
     (the amortization the r9 verdict asked for; certified by
     llm_ann_graph_route_reuse)."""
-    edges = _lsh_edges(emb, edge_k, seeds, num_planes, dim).distinct()
+    edges = lsh_edges(emb, edge_k, seeds, num_planes, dim).distinct()
     return edges.localCheckpoint(eager=False)  # scanned once per hop
 
 
@@ -1128,7 +1130,7 @@ def append_route_graph(
     old_edges = build_route_graph(
         old, edge_k=edge_k, seeds=seeds, num_planes=num_planes, dim=dim,
     )
-    new_out = _lsh_edges(new, edge_k, seeds, num_planes, dim, corpus=emb)
+    new_out = lsh_edges(new, edge_k, seeds, num_planes, dim, corpus=emb)
     return old_edges.unionByName(undirected(new_out)).distinct()
 
 

@@ -21,7 +21,7 @@ from ..functions.geo import geo_index_udf
 from ..operators import aggregates as agg
 from ..operators import relational as rel
 from .registry import EVENTS_NORM, load_events, load_table, register
-from .replay import last_emission, run_replay, scratch_dir
+from .replay import scratch_dir
 
 
 # --------------------------------------------------------------------------
@@ -946,55 +946,6 @@ def rollup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_events").cast("long").alias("n_events"),
         F.col("sum_value").cast("long").alias("sum_value"),
         F.col("bucket_day").alias("bucket_day"),
-    )
-
-
-@register(
-    "stream_totals_replay",
-    f"""WITH {EVENTS_NORM}
-       SELECT user_id, count(*)::BIGINT AS n_events_total,
-              sum(CAST(round(coalesce(value, 0) * 100) AS BIGINT))::BIGINT
-                AS total_value_c
-       FROM events_norm GROUP BY 1""",
-    doc="The custom stateful operator (streaming/stateful.py "
-        "running_totals, applyInPandasWithState) under the driver's "
-        "value hash: events replay as three parquet micro-batches "
-        "(event_id mod 3, one file per trigger, availableNow; "
-        "plans/replay.py), per-user state carries "
-        "across batches, and each user's LAST update-mode emission must "
-        "equal a one-shot GROUP BY over the whole table. Values are "
-        "integer cents so state accumulation is exact; state lives in "
-        "the state store partitioned by user, so batch cost tracks the "
-        "batch's key set, not the table.",
-    tags=("streaming", "stateful", "agg"),
-)
-def stream_totals_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.stateful import running_totals
-
-    ev = load_events(spark, sf_dir).select(
-        "event_id",
-        "user_id",
-        F.round(F.coalesce(F.col("value"), F.lit(0.0)) * 100)
-        .cast("double")
-        .alias("value"),
-    )
-    ev = ev.persist()  # one execution for all three batch slices
-    outs = run_replay(
-        spark,
-        "stream_totals",
-        running_totals,
-        [
-            ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == i).select(
-                "user_id", "value"
-            )
-            for i in range(3)
-        ],
-    )
-    ev.unpersist()
-    return last_emission(outs, "user_id").select(
-        "user_id",
-        "n_events_total",
-        F.col("total_value").cast("long").alias("total_value_c"),
     )
 
 

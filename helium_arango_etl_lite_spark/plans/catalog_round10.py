@@ -34,7 +34,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash32, hash32_oracle_sql
-from ..operators.graph_algorithms import undirected
 from .catalog_round9 import (
     _CAP_MEMBERS, _GR_BEAM, _GR_EDGE_K, _GR_EMOD, _GR_ENTRIES, _GR_HOPS,
     _GR_K, _GR_QMOD, _GR_SEEDS, _gr_final_select, _gr_shared_ctes,
@@ -195,106 +194,6 @@ def llm_ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         num_planes=NEAR_DUP_PLANES, dim=EMB_DIM,
     )
 
-
-# ---------------------------------------------------------------------------
-# streaming ANN ingest: the append path as a real multi-batch stream
-# ---------------------------------------------------------------------------
-
-_INGEST_BATCHES = 3
-
-
-def _stream_ann_sql() -> str:
-    from .catalog_round9 import _gr_bucket_expr
-
-    cos = ("round(list_dot_product(a.v, c.v)"
-           " / (sqrt(list_dot_product(a.v, a.v))"
-           " * sqrt(list_dot_product(c.v, c.v))), 4)")
-    parts, sels = [], []
-    for t, seed in enumerate(_GR_SEEDS):
-        b = _gr_bucket_expr(seed)
-        for bt in range(_INGEST_BATCHES):
-            parts.append(f"""
-q{t}_{bt} AS (SELECT vec_id, v, ({b})::BIGINT AS bucket FROM e
-        WHERE vec_id % {_INGEST_BATCHES} = {bt}),
-c{t}_{bt} AS (SELECT vec_id, v, ({b})::BIGINT AS bucket FROM e
-        WHERE vec_id % {_INGEST_BATCHES} <= {bt}),
-p{t}_{bt} AS (SELECT a.vec_id AS src, c.vec_id AS dst, {cos} AS cs
-        FROM q{t}_{bt} a JOIN c{t}_{bt} c
-          ON a.bucket = c.bucket AND a.vec_id <> c.vec_id),
-k{t}_{bt} AS (SELECT src, dst FROM (
-           SELECT src, dst, row_number() OVER (
-               PARTITION BY src ORDER BY cs DESC, dst) AS rk
-           FROM p{t}_{bt}) WHERE rk <= {_GR_EDGE_K})""")
-            sels.append(f"SELECT src, dst FROM k{t}_{bt}")
-            sels.append(f"SELECT dst AS src, src AS dst FROM k{t}_{bt}")
-    return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),{",".join(parts)}
-SELECT DISTINCT src, dst FROM ({" UNION ALL ".join(sels)})"""
-
-
-@register(
-    "stream_ann_ingest_replay",
-    _stream_ann_sql(),
-    doc="CONTINUOUS ANN index maintenance as a REAL stream — the "
-        "llm_ann_index_append contract run through Structured "
-        "Streaming: embeddings arrive in "
-        f"{_INGEST_BATCHES} micro-batches (vec_id % {_INGEST_BATCHES}, "
-        "one file per trigger, availableNow), and each batch's "
-        "foreachBatch (1) appends its vectors to the corpus state "
-        "table, (2) computes the batch's bucketed top-k out-edges "
-        "against the corpus SO FAR (same pinned planes, the asymmetric "
-        "knn_join_bucketed), and (3) appends out-edges + back-links to "
-        "the edges state table — every vector gets linked AT ARRIVAL "
-        "TIME, which is how a production index stays routable during "
-        "ingest instead of waiting for a nightly rebuild. The oracle "
-        "unrolls ALL batches: per plane table and per batch it rebuilds "
-        "the corpus-so-far, replays the asymmetric top-k and the "
-        "back-link insertion, so the driver hash certifies the "
-        "arrival-order semantics end to end. Arrival order is pinned "
-        "by file mtimes (plans/replay.py: slice i is batch i). SCALE: "
-        "per batch O(|batch| x bucket density) — the streaming twin of "
-        "the append soak's economics "
-        "(operators/llm/similarity.py:knn_join_bucketed corpus= form; "
-        "plans/catalog_round10.py).",
-    tags=("streaming", "similarity", "graph", "state", "scale"),
-)
-def stream_ann_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.llm.similarity import knn_join_bucketed
-    from .catalog_llm import EMB_DIM, NEAR_DUP_PLANES
-    from .replay import run_replay, scratch_dir
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    corpus = scratch_dir("stream_ann/corpus")
-
-    def link(df: DataFrame, bid: int) -> DataFrame:
-        df.write.mode("append").parquet(corpus)
-        full = spark.read.parquet(corpus)
-        per = [
-            knn_join_bucketed(
-                df, k=_GR_EDGE_K, seed=s, num_planes=NEAR_DUP_PLANES,
-                dim=EMB_DIM, corpus=full,
-            ).select(F.col("qid").alias("src"), F.col("nid").alias("dst"))
-            for s in _GR_SEEDS
-        ]
-        out = per[0]
-        for t in per[1:]:
-            out = out.unionByName(t)
-        return undirected(out)
-
-    outs = run_replay(
-        spark,
-        "stream_ann",
-        lambda s: s,
-        [
-            emb.filter(F.pmod(F.col("vec_id"), F.lit(_INGEST_BATCHES)) == b)
-            for b in range(_INGEST_BATCHES)
-        ],
-        output_mode="append",
-        per_batch=link,
-    )
-    return outs.select("src", "dst").distinct()
 
 
 # ---------------------------------------------------------------------------

@@ -8,11 +8,6 @@ physical co-location via bucketing, and a rolling-window gap.
   ops after the last tombstone. The MERGE-INTO shape every lakehouse
   ingest needs, expressed as one window + one grouped max-by-struct —
   no per-key iteration.
-* ``stream_cdc_replay`` — the same merge as a STATEFUL STREAM
-  (applyInPandasWithState, four scalars of state per key, tombstone =
-  state reset), hash-verified against the identical batch oracle: the
-  fourth member of the batch=stream equivalence family (totals, CUSUM,
-  sessions, SCD2, now CDC).
 * ``window_rolling_median`` — exact rolling median over a centered
   7-row window per series: Spark has no percentile-over-sliding-window,
   so the window is materialized as a sorted bounded array and the
@@ -141,43 +136,6 @@ def cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         last_non_null("attr").alias("last_attr"),
         F.max("seq").cast("long").alias("last_seq"),
         F.count(F.lit(1)).cast("long").alias("n_live"),
-    )
-
-
-@register(
-    "stream_cdc_replay",
-    _CDC_SQL,
-    doc="The CDC merge as a STATEFUL STREAM, verified against the "
-        "IDENTICAL batch oracle: the change log replays as three "
-        "event-time-split micro-batches; applyInPandasWithState "
-        "carries four scalars per key (current valc/attr patch state, "
-        "last seq, live-op count), a tombstone resets them, and the "
-        "reader keeps the last emission per key, dropping keys whose "
-        "final n_live is 0. Joins the batch=stream equivalence family "
-        "(totals, CUSUM, sessions, SCD2) — this member adds the DELETE "
-        "path, which none of the others exercise. State is O(1) per "
-        "key and never retains closed history "
-        "(streaming/stateful.py:cdc_stream).",
-    tags=("streaming", "stateful", "cdc"),
-)
-def stream_cdc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.stateful import cdc_stream
-    from .replay import last_emission, run_replay, time_thirds
-
-    log = _cdc_log(spark, sf_dir)
-    # one execution for min/max + all three slices (see catalog_round8)
-    log = log.persist()
-    outs = run_replay(
-        spark,
-        "stream_cdc",
-        cdc_stream,
-        [s.drop("ts_us") for s in time_thirds(log, "ts_us")],
-    )
-    log.unpersist()
-    return (
-        last_emission(outs, "user_id")
-        .filter(F.col("n_live") > 0)
-        .select("user_id", "last_valc", "last_attr", "last_seq", "n_live")
     )
 
 

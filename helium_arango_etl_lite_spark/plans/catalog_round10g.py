@@ -19,11 +19,6 @@ conversion-latency readouts.
   agg_event_funnel (which counts stage reach, not time-to-convert).
   One user-keyed window shuffle; the histogram is 26 rows at any
   corpus size.
-* ``stream_attribution_replay`` — last-touch attribution as a STATEFUL
-  STREAM verified against the identical batch oracle: one nullable
-  string of state per user, purchases emit credit rows append-style,
-  and the family gains its cross-batch-carry member (a touch in
-  micro-batch 1 must credit a purchase in micro-batch 3).
 
 Reference parity note: the reference ETL (helium-arango-etl-lite) has
 none of these; they extend the north-star eval/analytics families
@@ -36,7 +31,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog_llm import _BM25_TERMS, _bm25_sql
-from .catalog_round10d import _ATTR_SQL
 from .registry import EVENTS_NORM, load_events, load_table, register
 
 # ---------------------------------------------------------------------------
@@ -216,54 +210,4 @@ def events_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least(lat_h, F.lit(_LAT_CAP_H)).cast("long").alias("hours")
         )
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# attribution as a stateful stream, verified against the batch oracle
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "stream_attribution_replay",
-    _ATTR_SQL,
-    doc="Last-touch attribution as a STATEFUL STREAM, hash-verified "
-        "against the IDENTICAL batch oracle (events_attribution's "
-        "SQL): events replay as three event-time-split micro-batches; "
-        "applyInPandasWithState carries ONE nullable string per user "
-        "(the most recent touch type), and each purchase emits one "
-        "credit row the moment it is seen — append semantics, so the "
-        "reader is a plain channel rollup with no last-wins dedup. "
-        "The sixth member of the batch=stream equivalence family "
-        "(totals, CUSUM, sessions, SCD2, CDC): this one pins "
-        "CROSS-BATCH carry — a touch in batch 1 must still credit a "
-        "purchase in batch 3 "
-        "(streaming/stateful.py:attribution_stream).",
-    tags=("streaming", "stateful", "analytics"),
-)
-def stream_attribution_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.stateful import attribution_stream
-    from .replay import run_replay, time_thirds
-
-    ev = load_events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    base = ev.select(
-        "user_id",
-        F.unix_micros(F.col("ts")).alias("ts_us"),
-        F.row_number().over(w).cast("long").alias("seq"),
-        "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    # one execution for min/max + all three slices (see catalog_round8)
-    base = base.persist()
-    outs = run_replay(
-        spark,
-        "stream_attr",
-        attribution_stream,
-        [s.drop("ts_us") for s in time_thirds(base, "ts_us")],
-    )
-    base.unpersist()
-    return outs.groupBy("channel").agg(
-        F.count(F.lit(1)).cast("long").alias("conversions"),
-        F.sum("cents").cast("long").alias("cents"),
     )

@@ -189,7 +189,7 @@ ent AS (SELECT vec_id AS nid FROM e WHERE vec_id % {_GR_EMOD} = 0),"""
 )
 def llm_ann_graph_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.llm.similarity import (
-        build_route_graph, knn_join_bucketed, route_on_graph,
+        build_route_graph, lsh_edges, route_on_graph,
     )
     from ..operators.storage import write_bucketed
     from .replay import scratch_dir
@@ -218,17 +218,9 @@ def llm_ann_graph_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (3) APPEND the ingest batch's incremental edges (new out-edges +
     # back-links; disjoint from the old-old edges by construction, so
     # append + per-increment distinct == the oracle's global DISTINCT)
-    per_seed = [
-        knn_join_bucketed(
-            new, k=_GR_EDGE_K, num_planes=NEAR_DUP_PLANES, seed=s,
-            dim=EMB_DIM, corpus=emb,
-        ).select(F.col("qid").alias("src"), F.col("nid").alias("dst"))
-        for s in _GR_SEEDS
-    ]
-    new_out = per_seed[0]
-    for t in per_seed[1:]:
-        new_out = new_out.unionByName(t)
-    increment = undirected(new_out)
+    increment = undirected(lsh_edges(
+        new, _GR_EDGE_K, _GR_SEEDS, NEAR_DUP_PLANES, EMB_DIM, corpus=emb,
+    ))
     write_bucketed(
         increment, "sg_ann_edges", ["src"], num_buckets=_PERSIST_BUCKETS,
         sort_cols=["src"], mode="append",

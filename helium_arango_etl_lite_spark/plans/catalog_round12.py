@@ -1,6 +1,6 @@
-"""Round-12 catalog: the two operator items the r11 verdict named
-(items 7 and 8; its other asks were batch rotation, bench baseline
-selection, and adjudication — done in-place, not operators).
+"""Round-12 catalog: the persisted IVF-PQ index (r11 verdict item 7; its
+item 8, the streaming Count-Min Sketch, is ``stream_heavy_hitters_replay``
+in catalog_stream.py).
 
 * ``llm_ann_ivf_pq_persist`` — the persisted-index lifecycle for the
   IVF-PQ family (r11 verdict item 7): ``llm_ann_ivf_pq`` re-derives its
@@ -23,32 +23,8 @@ selection, and adjudication — done in-place, not operators).
   SQL (block/LUT generators shared with ``llm_ann_ivf_pq``), so one
   driver hash certifies the whole lifecycle.
 
-* ``stream_heavy_hitters_replay`` — stateful streaming top-k (r11
-  verdict item 8): ``llm_heavy_hitters_cms``'s docstring claims the
-  sketch is "mergeable cell-wise across executors/micro-batches"; this
-  entry uses that literally. Token-occurrence cell increments replay as
-  three parquet micro-batches through ``applyInPandasWithState``
-  grouped BY CELL — the state store holds exactly the depth*width
-  sketch cells (bounded regardless of stream volume; an exact streaming
-  top-k would hold the whole Zipf-tailed vocabulary). The latest
-  update-mode emission per cell is the sketch; estimation + top-k run
-  batch-side over it, and the result must hash-equal the one-shot batch
-  sketch — the oracle IS the batch entry's SQL, extending the
-  batch=stream equivalence family from sums/CUSUM/CDC to sketches.
-
-* ``stream_session_ooo_replay`` — OUT-OF-ORDER sessionization: the
-  existing ``stream_session_replay`` (round 8b) replays event-time-split
-  batches, so its state can be just the open session. This entry splits
-  by ``event_id % 3`` instead — every batch spans the whole timeline,
-  late events land BETWEEN existing sessions and must FUSE them — and
-  the stateful operator keeps the user's full interval list (bounded by
-  session count) with a classic interval merge. Same gap semantics,
-  same gaps-and-islands oracle, now certified under adversarial
-  arrival order — the late-data case a watermarked ``session_window``
-  only handles within its horizon.
-
 Reference parity note: the reference ETL (follower.py:55-294) maintains
-no indexes, sketches, or sessions; all three entries are scale-path
+no indexes, sketches, or sessions; these entries are scale-path
 operators the 100 TB deployment needs beyond the reference's surface.
 """
 
@@ -56,16 +32,15 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog_llm import EMB_DIM, IVF_K
 from .catalog_round5 import (
-    _adc_lut_sql, _CMS_D, _CMS_K, _CMS_SQL, _CMS_W, _pq_block_sql,
-    _PQ_BLOCKS, _PQ_CODES,
+    _adc_lut_sql, _pq_block_sql, _PQ_BLOCKS, _PQ_CODES,
 )
 from .registry import load_table, register
-from .replay import last_emission, run_replay, scratch_dir
+from .replay import scratch_dir
 
 # ---------------------------------------------------------------------------
 # persisted IVF-PQ index: train -> persist -> load -> search
@@ -247,141 +222,6 @@ def llm_ann_ivf_pq_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.parquet(os.path.join(scratch, "codebook")),
         dim=EMB_DIM, n_blocks=_PQ_BLOCKS, nprobe=_IPQ_NPROBE,
         topk=_IPQ_TOPK,
-    )
-
-
-# ---------------------------------------------------------------------------
-# streaming heavy hitters: CMS maintained in per-cell state
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "stream_heavy_hitters_replay",
-    _CMS_SQL,
-    doc="Stateful streaming top-k via a Count-Min Sketch maintained in "
-        "per-cell state (r11 verdict item 8): documents replay as three "
-        "parquet micro-batches; each batch's cell increments (same "
-        "hash32 buckets as the batch sketch — shared cms_token_buckets) "
-        "are MAP-SIDE COMBINED to per-cell partial counts before the "
-        "state store (exact — CMS cells are additive), so the shuffle "
-        "into applyInPandasWithState and the Arrow transfer are both "
-        f"bounded at {_CMS_D}x{_CMS_W} rows per batch regardless of "
-        "token volume, and the state store holds exactly the sketch "
-        "cells — the CMS's cell-wise mergeability used literally (an "
-        "exact streaming top-k would keep the full Zipf vocabulary in "
-        "state). "
-        "The last update-mode emission per cell is the sketch; "
-        "candidate estimation + top-k run batch-side over it "
-        "(shared cms_estimate_topk), and the oracle IS the batch "
-        "entry's SQL — the batch=stream equivalence family (totals, "
-        "CUSUM, CDC, rollup) extended to sketches.",
-    tags=("streaming", "stateful", "sketch", "llm"),
-)
-def stream_heavy_hitters_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.llm.text import (
-        cms_cell_increments, cms_estimate_topk, cms_token_buckets,
-    )
-    from ..streaming.stateful import cms_cells_stream
-
-    docs = load_table(spark, sf_dir, "documents")
-    outs = run_replay(
-        spark,
-        "stream_cms",
-        cms_cells_stream,
-        [
-            cms_cell_increments(
-                cms_token_buckets(
-                    docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i),
-                    depth=_CMS_D, width=_CMS_W,
-                ),
-                depth=_CMS_D,
-            )
-            # map-side combine BEFORE the state store: each batch ships
-            # <= depth*width pre-summed cells instead of one row per
-            # token occurrence (exact — CMS cells are additive)
-            .groupBy(F.col("d").cast("int").alias("d"),
-                     F.col("b").cast("int").alias("b"))
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-            for i in range(3)
-        ],
-    )
-    cells = last_emission(outs, "d", "b").select(
-        "d", "b", F.col("c").cast("long").alias("c")
-    )
-    tb = cms_token_buckets(docs, depth=_CMS_D, width=_CMS_W).localCheckpoint(
-        eager=False
-    )
-    return cms_estimate_topk(tb, cells, depth=_CMS_D, k=_CMS_K)
-
-
-# ---------------------------------------------------------------------------
-# out-of-order sessionization: late events FUSE sessions, exactly
-# ---------------------------------------------------------------------------
-
-
-def _sess_ooo_sql() -> str:
-    from .catalog_round8b import _SESS_SQL
-
-    return _SESS_SQL
-
-
-@register(
-    "stream_session_ooo_replay",
-    _sess_ooo_sql(),
-    doc="OUT-OF-ORDER streaming sessionization: the same gap semantics "
-        "as stream_session_replay, but the three micro-batches split by "
-        "event_id % 3 instead of event time — every batch spans the "
-        "whole timeline, so events routinely arrive BETWEEN already-"
-        "formed sessions and must FUSE them (the failure mode the "
-        "in-order entry's open-session state cannot express, and that "
-        "the native session_window handles only within its watermark "
-        "horizon). State per user is the full interval list [(start, "
-        "end, n, cents)] — bounded by SESSION count, not event count; "
-        "each batch a user appears in re-emits their whole current "
-        "session list and the reader keeps the last emission batch per "
-        "user, making the final rows a pure function of the complete "
-        "event set. The oracle is the identical gaps-and-islands SQL "
-        "as the in-order entry — one semantics, now certified under "
-        "adversarial arrival (streaming/stateful.py:sessionize_ooo).",
-    tags=("streaming", "stateful", "temporal"),
-)
-def stream_session_ooo_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.stateful import sessionize_ooo
-    from .registry import load_events
-
-    ev = load_events(spark, sf_dir)
-    base = ev.select(
-        "user_id",
-        F.unix_micros(F.col("ts")).alias("ts_us"),
-        "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("value_c"),
-    )
-    base = base.persist()  # one execution for all three batch slices
-    outs = run_replay(
-        spark,
-        "stream_sess_ooo",
-        sessionize_ooo,
-        [
-            base.filter(F.pmod(F.col("event_id"), F.lit(3)) == i).select(
-                "user_id", "ts_us", "value_c"
-            )
-            for i in range(3)
-        ],
-    )
-    base.unpersist()
-    # a user's whole last batch is their session list, so keep all of it
-    last_b = outs.groupBy("user_id").agg(F.max("batch_id").alias("mb"))
-    return (
-        outs.join(last_b, "user_id")
-        .filter(F.col("batch_id") == F.col("mb"))
-        .select(
-            "user_id",
-            F.timestamp_micros(F.col("session_start_us")).alias(
-                "session_start"
-            ),
-            "n_events",
-            F.col("total_value_c").alias("total_cents"),
-        )
     )
 
 

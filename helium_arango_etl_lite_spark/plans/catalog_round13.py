@@ -1,5 +1,5 @@
 """Round-13 catalog: recall evaluation for the persisted quantized ANN
-path + the batch=stream quantile sketch (r12 verdict items 2 and 5).
+path (r12 verdict item 2).
 
 * ``llm_ann_ivf_pq_recall`` — recall@k of the IVF-PQ ADC search against
   the exact brute-force top-k, per query (r12 verdict item 2): the
@@ -15,24 +15,6 @@ path + the batch=stream quantile sketch (r12 verdict items 2 and 5).
   linear in corpus size). The recall floor is pinned by test
   (tests/test_round13_ops.py) so a regression in the quantizer or the
   probe policy fails the suite, not just drifts a number.
-
-* ``stream_quantiles_replay`` — the mergeable 128-bin histogram sketch
-  (``agg_histogram_quantiles``) maintained in ``applyInPandasWithState``
-  per-bin state across three micro-batches (r12 verdict item 5): the
-  CMS heavy-hitters pattern (catalog_round12) applied to quantiles —
-  bin increments are MAP-SIDE COMBINED before the state store so the
-  stateful input is bounded at the bin count per batch, state holds
-  exactly the bin table, and the replayed sketch must hash-equal the
-  one-shot batch sketch. The oracle IS the batch entry's SQL —
-  batch=stream equivalence extended from sums/CUSUM/CDC/CMS to
-  quantile sketches.
-
-* ``stream_hll_replay`` — the from-first-principles HLL registers of
-  ``agg_hll_distinct`` maintained in per-register state: the CMS/
-  histogram twins certify SUM-mergeable state; HLL registers merge by
-  MAX — idempotent and order-free (duplicate batch delivery cannot
-  corrupt the sketch, pinned by test), extending batch=stream along a
-  second merge-algebra axis.
 
 * ``llm_ivf_cell_stats`` — the Lloyd cell-balance claim driver-hashed:
   max/median/total cell sizes of the seed assignment vs the refined
@@ -66,13 +48,12 @@ from .catalog_llm import EMB_DIM, IVF_K
 from .catalog_round5 import (
     _adc_lut_sql, _pq_block_sql, _PQ_BLOCKS, _PQ_CODES,
 )
-from .catalog_round5b import _HQ_BINS, _HQ_QUANTILES, _HQ_SQL, _recall_overlay
+from .catalog_round5b import _recall_overlay
 from .catalog_round12 import (
     _COS6, _IPQ_LLOYD_ITERS, _IPQ_NPROBE, _IPQ_QMOD, _IPQ_TOPK,
     _ivf_pq_cand_sql, _lloyd_c_sql,
 )
 from .registry import load_table, register
-from .replay import last_emission, run_replay
 
 # ---------------------------------------------------------------------------
 # recall@k for the quantized index (r12 verdict item 2)
@@ -166,162 +147,6 @@ def llm_ann_ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, k=_IPQ_TOPK, sample_mod=_IPQ_QMOD
     ).select("qid", "nid")
     return _recall_overlay(exact, approx)
-
-
-# ---------------------------------------------------------------------------
-# batch=stream for quantile sketches (r12 verdict item 5)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "stream_quantiles_replay",
-    _HQ_SQL,
-    doc="Streaming quantile sketch (r12 verdict item 5): the mergeable "
-        f"{_HQ_BINS}-bin histogram of agg_histogram_quantiles maintained "
-        "in applyInPandasWithState per-bin state across three parquet "
-        "micro-batches (l_orderkey % 3). A fixed-edge histogram IS a "
-        "depth-1 Count-Min Sketch whose 'hash' is the bin function, so "
-        "the stream reuses cms_cells_stream literally (d=0, b=bin) — "
-        "the same state operator now certifies two sketch families. "
-        "Each batch's rows are MAP-SIDE COMBINED to per-bin partial "
-        f"counts before the state store (<= {_HQ_BINS} rows per batch "
-        "regardless of row volume; exact — bin counts are additive), "
-        "state holds exactly the touched bins, and the last update-mode "
-        "emission per bin is the sketch. Bin edges are the train-time "
-        "min/max (the production contract for a streaming histogram: "
-        "edges are configuration, counts are state); the p50/90/95/99 "
-        "readout is the batch entry's bounded <=128-row cumulative "
-        "window, and the oracle IS the batch entry's SQL — the "
-        "batch=stream equivalence family (totals, CUSUM, CDC, rollup, "
-        "CMS) extended to quantile sketches "
-        "(streaming/stateful.py:cms_cells_stream).",
-    tags=("streaming", "stateful", "sketch", "agg", "quantiles"),
-)
-def stream_quantiles_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.stateful import cms_cells_stream
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("pc"),
-    )
-    # train-time edges: one bounded 1-row aggregate, pinned so the
-    # producer and the readout share identical arithmetic
-    st = li.agg(
-        F.min("pc").alias("minc"), F.max("pc").alias("maxc"),
-        F.count("*").cast("long").alias("n"),
-    ).localCheckpoint(eager=True)
-
-    binned = li.crossJoin(F.broadcast(st)).withColumn(
-        "bin", F.expr(f"((pc - minc) * {_HQ_BINS}) div (maxc - minc + 1)")
-    ).persist()  # one execution for all three batch slices
-    outs = run_replay(
-        spark,
-        "stream_hq",
-        cms_cells_stream,
-        [
-            binned.filter(F.pmod(F.col("l_orderkey"), F.lit(3)) == i)
-            # map-side combine BEFORE the state store: each batch ships
-            # <= _HQ_BINS pre-summed bin counts, never one row per line
-            .groupBy(
-                F.lit(0).cast("int").alias("d"),
-                F.col("bin").cast("int").alias("b"),
-            )
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-            for i in range(3)
-        ],
-    )
-    binned.unpersist()
-    bins = last_emission(outs, "d", "b").select(
-        F.col("b").cast("long").alias("bin"),
-        F.col("c").cast("long").alias("cnt"),
-    )
-    # bounded readout: <= _HQ_BINS rows ever enter this window
-    w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
-    cum = bins.crossJoin(F.broadcast(st)).withColumn(
-        "cum", F.sum("cnt").over(w).cast("long")
-    )
-    qv = spark.createDataFrame([(qq,) for qq in _HQ_QUANTILES], "q int")
-    hits = cum.crossJoin(F.broadcast(qv)).filter(
-        100 * F.col("cum") >= F.col("q") * F.col("n")
-    )
-    return hits.groupBy("q").agg(
-        F.min("bin").cast("long").alias("bin"),
-        F.round(
-            (
-                F.first("minc")
-                + F.expr(
-                    f"(min(bin) * (first(maxc) - first(minc) + 1)) div {_HQ_BINS}"
-                )
-            )
-            / 100.0,
-            2,
-        ).alias("est_price"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# batch=stream for HLL registers (max-mergeable sketch state)
-# ---------------------------------------------------------------------------
-
-
-def _hll_replay_sql() -> str:
-    from .catalog_round5 import _HLL_SQL
-
-    return _HLL_SQL
-
-
-@register(
-    "stream_hll_replay",
-    _hll_replay_sql(),
-    doc="Streaming HyperLogLog distinct counts: the from-first-"
-        "principles m=64 HLL of agg_hll_distinct maintained in "
-        "applyInPandasWithState per-REGISTER state across three parquet "
-        "micro-batches (event_id % 3). This extends the batch=stream "
-        "sketch family along a new axis: CMS cells and histogram bins "
-        "merge by SUM; HLL registers merge by MAX — idempotent and "
-        "order-free, so replaying or reordering batches can never "
-        "change the converged register (a strictly stronger merge "
-        "contract, pinned by test). Each batch is pre-reduced to per-"
-        "register partial maxima before the state store (<= groups x 64 "
-        "rows per batch regardless of event volume — the map-side-"
-        "combine discipline), state holds exactly the touched "
-        "registers, and the distinct-count readout (integer-exact Z "
-        "sum, small-range correction) runs batch-side over the last "
-        "emission per register via the SAME hll_estimate kernel the "
-        "batch entry uses. Oracle IS the batch entry's SQL "
-        "(streaming/stateful.py:hll_registers_stream, "
-        "operators/aggregates.py:hll_registers,hll_estimate).",
-    tags=("streaming", "stateful", "sketch", "agg"),
-)
-def stream_hll_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.aggregates import hll_estimate, hll_registers
-    from ..streaming.stateful import hll_registers_stream
-    from .registry import load_events
-
-    en = load_events(spark, sf_dir)
-    outs = run_replay(
-        spark,
-        "stream_hll",
-        hll_registers_stream,
-        [
-            # map-side combine BEFORE the state store: each batch ships
-            # <= groups x m partial register maxima, never one row per
-            # event (max-merge makes the pre-reduction exact)
-            hll_registers(
-                en.filter(F.pmod(F.col("event_id"), F.lit(3)) == i),
-                group="event_type", value="user_id",
-            ).select(
-                F.col("event_type").alias("g"),
-                F.col("b").cast("long").alias("b"),
-                F.col("r").cast("long").alias("r"),
-            )
-            for i in range(3)
-        ],
-    )
-    regs = last_emission(outs, "g", "b").select(
-        F.col("g").alias("event_type"), "b", "r"
-    )
-    return hll_estimate(regs, en, group="event_type", value="user_id")
 
 
 # ---------------------------------------------------------------------------

@@ -1,18 +1,10 @@
-"""Round-5 late additions: evaluation + layout + watermark semantics.
+"""Round-5 late additions: evaluation + layout.
 
 * ``llm_ann_recall`` — recall@k of the LSH-bucketed k-NN against the
   exact brute-force top-k, per query vector. The "measure, don't guess"
   companion to ``llm_knn_join_bucketed``: every approximate operator in
   the catalog should ship with the query that quantifies what the
   approximation costs.
-* ``stream_late_replay`` — event-time watermark semantics (late-row
-  drop + window eviction) under the driver's value hash: the events
-  table replays as three deterministic micro-batches through a REAL
-  ``withWatermark + window`` streaming aggregation, and the oracle
-  recomputes Spark's documented watermark rule (global watermark =
-  millisecond-floored max event time of all PRIOR batches minus the
-  delay; a row is dropped iff its window end <= current watermark) in
-  pure SQL.
 * ``zorder_layout_stats`` — Morton (Z-order) interleave of two
   dimensions as a clustering key, contrasted with a linear time layout:
   per-"file" min/max span fractions show Z-order bounding BOTH
@@ -28,7 +20,6 @@ from pyspark.sql import functions as F
 from ..operators.llm import similarity
 from .catalog_llm import EMB_DIM, LSH_SEED, NEAR_DUP_PLANES
 from .registry import EVENTS_NORM, load_events, load_table, register
-from .replay import last_emission, run_replay
 
 # ---------------------------------------------------------------------------
 # ANN recall@k evaluation
@@ -173,104 +164,6 @@ def _recall_overlay(exact: DataFrame, approx: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# watermark / late-data semantics under the driver hash
-# ---------------------------------------------------------------------------
-
-_WM_DELAY = "7 days"
-_WM_BATCHES = 3
-
-_LATE_SQL = f"""WITH {EVENTS_NORM},
-e AS (SELECT event_id, ts,
-             CAST(round(coalesce(value, 0) * 100) AS BIGINT) AS value_c,
-             event_id % {_WM_BATCHES} AS b,
-             date_trunc('hour', ts) AS ws,
-             date_trunc('hour', ts) + INTERVAL 1 HOUR AS we
-      FROM events_norm),
-m AS (SELECT date_trunc('milliseconds', max(CASE WHEN b = 0 THEN ts END))
-               - INTERVAL {_WM_DELAY} AS wm_late2
-      FROM e),
-kept AS (SELECT e.* FROM e, m
-         WHERE b <= 1
-            OR (b = 2 AND we > wm_late2))
-SELECT ws AS window_start, count(*)::BIGINT AS n_events,
-       sum(value_c)::BIGINT AS sum_value_c
-FROM kept GROUP BY 1"""
-
-
-@register(
-    "stream_late_replay",
-    _LATE_SQL,
-    doc="Event-time watermark semantics, driver-value-hashed: the events "
-        "table replays as three DETERMINISTIC micro-batches (event_id "
-        "mod 3; one parquet file per batch with controlled mtimes so the "
-        "file source's batch order is fixed) through a real "
-        "withWatermark('7 days') + 1-hour tumbling-window aggregation in "
-        "update mode. The oracle re-derives Spark's watermark contract "
-        "in SQL — including the SPARK-40925 late-filter/eviction "
-        "watermark split (shipped in Spark 3.4; on older Sparks the "
-        "late filter uses the CURRENT watermark and this oracle would "
-        "mismatch — the entry requires Spark >= 3.4) "
-        "verified against the checkpoint offset log: LATE-EVENT "
-        "FILTERING in batch b uses the watermark as of batch b-1 "
-        "(millisecond-floored max event time over batches < b-1 minus "
-        "the delay; late rows still ADVANCE it), while state EVICTION "
-        "uses the current one, so with three batches only batch 2 drops "
-        "(window end <= msfloor(max ts of batch 0) - delay) and batch "
-        "1's late rows are accepted. Final table = last update-"
-        "mode emission per window = aggregate over accepted rows. State "
-        "is bounded by the delay horizon, so executor memory tracks the "
-        "watermark window, never the stream length — the property that "
-        "makes this run on an unbounded stream at cluster scale. (The "
-        "REPLAY HARNESS collects the test-scale table driver-side to "
-        "stamp deterministically-ordered batch files — that is the "
-        "fixture construction, not the operator: a production stream "
-        "arrives already batched by the source.)",
-    tags=("streaming", "watermark", "agg"),
-)
-def stream_late_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_events(spark, sf_dir).select(
-        "event_id",
-        "ts",
-        F.round(F.coalesce(F.col("value"), F.lit(0.0)) * 100)
-        .cast("long")
-        .alias("value_c"),
-    )
-
-    def windowed(stream: DataFrame) -> DataFrame:
-        return (
-            stream.withWatermark("ts", _WM_DELAY)
-            .groupBy(F.window("ts", "1 hour").alias("w"))
-            .agg(
-                F.count("*").cast("long").alias("n_events"),
-                F.sum("value_c").cast("long").alias("sum_value_c"),
-            )
-            .select(
-                F.col("w.start").alias("window_start"),
-                "n_events",
-                "sum_value_c",
-            )
-        )
-
-    # one execution for all three mod-slices; the runner pins slice i to
-    # micro-batch i, so the watermark progression is deterministic
-    ev = ev.persist()
-    outs = run_replay(
-        spark,
-        "stream_late",
-        windowed,
-        [
-            ev.filter(F.pmod(F.col("event_id"), F.lit(_WM_BATCHES)) == i)
-            .select("ts", "value_c")
-            for i in range(_WM_BATCHES)
-        ],
-    )
-    ev.unpersist()
-    return last_emission(outs, "window_start").select(
-        "window_start", "n_events", "sum_value_c"
-    )
-
-
-# ---------------------------------------------------------------------------
 # Z-order clustering key vs linear layout
 # ---------------------------------------------------------------------------
 
@@ -380,112 +273,6 @@ def zorder_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spans(b, "zorder", F.expr(f"zkey div {_ZFILES_SHIFT}")).unionAll(
         spans(b, "time", F.col("hbk"))
     )
-
-
-# ---------------------------------------------------------------------------
-# streaming state dedup + stream-stream join under the driver hash
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "stream_dedup_replay",
-    f"""WITH {EVENTS_NORM}
-       SELECT DISTINCT user_id, event_type FROM events_norm""",
-    doc="Streaming exact dedup at ingest (dropDuplicatesWithinWatermark "
-        "over a real multi-batch stream) under the driver's value hash: "
-        "events replay as three micro-batches (event_id mod 3, one "
-        "file per trigger); "
-        "per-key state dedups ACROSS batches, append mode emits each "
-        "key exactly once on first arrival, and the materialized table "
-        "must equal a one-shot DISTINCT. The watermark delay (40 days) "
-        "exceeds the corpus span, so no state expires and the result is "
-        "batch-order-independent — what is being hashed is the state "
-        "plumbing (store, cross-batch lookup, exactly-once emission), "
-        "the contract an ingest-time dedup needs before the corpus ever "
-        "reaches the batch dedup passes. State is keyed and bounded by "
-        "the watermark horizon, so memory tracks the dedup window at "
-        "cluster scale, not the stream length.",
-    tags=("streaming", "dedup", "state"),
-)
-def stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_events(spark, sf_dir)
-    outs = run_replay(
-        spark,
-        "stream_dedup",
-        lambda s: s.withWatermark("ts", "40 days").dropDuplicatesWithinWatermark(
-            ["user_id", "event_type"]
-        ),
-        [
-            ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == i).select(
-                "user_id", "event_type", "ts"
-            )
-            for i in range(3)
-        ],
-        output_mode="append",
-    )
-    return outs.select("user_id", "event_type")
-
-
-@register(
-    "stream_join_replay",
-    """SELECT l.l_orderkey, l.l_linenumber, o.o_orderdate, l.l_shipdate
-       FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-       WHERE l.l_shipdate >= o.o_orderdate
-         AND l.l_shipdate < o.o_orderdate + INTERVAL 180 DAY""",
-    doc="Stream-stream inner interval join under the driver's value "
-        "hash: orders and lineitem each replay as independent file "
-        "streams (three micro-batches per side: orders by orderkey mod "
-        "3, lineitem by (orderkey + linenumber) mod 3, so an order's "
-        "lines arrive before, with and after it), joined on orderkey "
-        "with an event-time range (ship within 180 days of order) and "
-        "watermarks on BOTH sides — the symmetric-hash-join state shape "
-        "Spark uses for stream/stream correlation. Each matching pair "
-        "is emitted exactly once whenever its partner arrives, across "
-        "any batch interleave, so the materialized table must equal the "
-        "one-shot interval join — what is being hashed is the two-sided "
-        "join state (buffering, cross-batch matching, exactly-once "
-        "emission). The delay is chosen above the corpus span so no "
-        "state evicts before its partner arrives; in production the "
-        "delay bounds BOTH state sides by the watermark horizon — the "
-        "property that makes the join runnable on unbounded streams.",
-    tags=("streaming", "join", "state"),
-)
-def stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", F.col("o_orderdate").cast("timestamp").alias("o_orderdate")
-    )
-    items = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        "l_linenumber",
-        F.col("l_shipdate").cast("timestamp").alias("l_shipdate"),
-    )
-
-    def interval_join(so: DataFrame, sl: DataFrame) -> DataFrame:
-        return sl.withWatermark("l_shipdate", "3000 days").join(
-            so.withWatermark("o_orderdate", "3000 days"),
-            F.expr(
-                "l_orderkey = o_orderkey AND "
-                "l_shipdate >= o_orderdate AND "
-                "l_shipdate < o_orderdate + INTERVAL 180 DAYS"
-            ),
-        )
-
-    # an order's lines are spread over all three batches (mod 3 of
-    # orderkey + linenumber), so partners arrive before, with and after it
-    outs = run_replay(
-        spark,
-        "stream_join",
-        interval_join,
-        [orders.filter(F.pmod(F.col("o_orderkey"), F.lit(3)) == i) for i in range(3)],
-        [
-            items.filter(
-                F.pmod(F.col("l_orderkey") + F.col("l_linenumber"), F.lit(3)) == i
-            )
-            for i in range(3)
-        ],
-        output_mode="append",
-    )
-    return outs.select("l_orderkey", "l_linenumber", "o_orderdate", "l_shipdate")
 
 
 # ---------------------------------------------------------------------------

@@ -765,61 +765,3 @@ def events_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("cusum").cast("long").alias("max_cusum"),
         F.min(F.when(alarm, F.col("ts"))).alias("first_alarm_ts"),
     )
-
-
-@register(
-    "stream_cusum_replay",
-    _CUSUM_SQL,
-    doc="The CUSUM monitor as a STREAMING stateful operator, hash-"
-        "verified against the batch identity: per-user mean_c is "
-        "calibrated batch-side (the history table), events replay as "
-        "three EVENT-TIME-split micro-batches (the thirds of the time "
-        "range, one file each with a pinned mtime so the file source's "
-        "batch order is the time order), and applyInPandasWithState runs the "
-        "literal Page recursion s = max(0, s + dev) with five integers "
-        "of state per user — O(keys) forever, no timeline retained. "
-        "The oracle is the SAME SQL as events_cusum_alarm: the "
-        "recursion over micro-batch state and the two-window prefix-min "
-        "identity must produce byte-identical per-user rows, the "
-        "strongest cross-form equivalence check in the catalog "
-        "(streaming/stateful.py:cusum_monitor).",
-    tags=("streaming", "stateful", "temporal"),
-)
-def stream_cusum_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.stateful import cusum_monitor
-    from .replay import last_emission, run_replay, time_thirds
-
-    ev = load_events(spark, sf_dir)
-    base = ev.select(
-        "user_id",
-        F.unix_micros(F.col("ts")).alias("ts_us"),
-        "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("xc"),
-    )
-    w_all = Window.partitionBy("user_id")
-    cal = base.withColumn(
-        "mean_c",
-        F.floor(
-            F.sum("xc").over(w_all) / F.count(F.lit(1)).over(w_all)
-        ).cast("long"),
-    )
-
-    # One execution of the windowed calibration plan: the min/max pass and
-    # the three batch slices all read the cache instead of recomputing the
-    # full-table window 4x (guide §1.2 "don't compute things you throw
-    # away").
-    cal = cal.persist()
-    outs = run_replay(
-        spark,
-        "stream_cusum",
-        lambda s: cusum_monitor(s, _CUSUM_MULT, _CUSUM_H),
-        time_thirds(cal, "ts_us"),
-    )
-    cal.unpersist()
-    return last_emission(outs, "user_id").select(
-        "user_id",
-        F.col("n_events").cast("long").alias("n_events"),
-        F.col("n_alarms").cast("long").alias("n_alarms"),
-        F.col("max_cusum").cast("long").alias("max_cusum"),
-        F.timestamp_micros(F.col("first_alarm_us")).alias("first_alarm_ts"),
-    )

@@ -344,77 +344,3 @@ def llm_logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     for r in rows[1:]:
         out = out.unionAll(r)
     return out.unionAll(acc_row)
-
-
-# ---------------------------------------------------------------------------
-# streaming sessionization replay: stateful recursion vs gaps-and-islands
-# ---------------------------------------------------------------------------
-
-_SESS_GAP_US = 30 * 60 * 1_000_000  # 30 minutes, matching agg_session_window
-
-_SESS_SQL = f"""
-WITH {EVENTS_NORM},
-e AS (SELECT user_id, ts, event_id, round(value * 100)::BIGINT AS xc
-      FROM events_norm),
-x AS (SELECT user_id, ts, xc,
-             CASE WHEN lag(ts) OVER w IS NULL
-                  OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE
-                  THEN 1 ELSE 0 END AS new_s
-      FROM e
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-y AS (SELECT *, sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                                 ROWS UNBOUNDED PRECEDING) AS sid
-      FROM x)
-SELECT user_id, min(ts) AS session_start,
-       count(*)::BIGINT AS n_events,
-       sum(xc)::BIGINT AS total_cents
-FROM y GROUP BY user_id, sid"""
-
-
-@register(
-    "stream_session_replay",
-    _SESS_SQL,
-    doc="Gap-based sessionization as a STREAMING stateful operator, "
-        "hash-verified against the batch gaps-and-islands identity: "
-        "events replay as three event-time-split micro-batches (the "
-        "thirds of the time range, plans/replay.py), "
-        "applyInPandasWithState carries "
-        "ONLY the open session — four integers per user — and each "
-        "batch emits its closed sessions finally plus the open one "
-        "provisionally; the reader keeps the last emission per "
-        "(user, session_start). The oracle is the classic lag()-based "
-        "session rewrite with the SAME >= gap boundary the native "
-        "session_window operator uses (agg_session_window), in integer "
-        "cents so the hash cannot flip on float summation order. "
-        "Cross-form triangle: native session_window (agg_session_window) "
-        "= declarative windows (this oracle) = stateful recursion (this "
-        "entry) — three independent expressions of one semantics "
-        "(streaming/stateful.py:sessionize).",
-    tags=("streaming", "stateful", "temporal"),
-)
-def stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.stateful import sessionize
-    from .replay import last_emission, run_replay, time_thirds
-
-    ev = load_events(spark, sf_dir)
-    base = ev.select(
-        "user_id",
-        F.unix_micros(F.col("ts")).alias("ts_us"),
-        "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("xc"),
-    )
-    # one execution for min/max + all three slices (see catalog_round8)
-    base = base.persist()
-    outs = run_replay(
-        spark,
-        "stream_session",
-        lambda s: sessionize(s, _SESS_GAP_US),
-        time_thirds(base, "ts_us"),
-    )
-    base.unpersist()
-    return last_emission(outs, "user_id", "session_start_us").select(
-        "user_id",
-        F.timestamp_micros(F.col("session_start_us")).alias("session_start"),
-        F.col("n_events").cast("long").alias("n_events"),
-        F.col("total_cents").cast("long").alias("total_cents"),
-    )

@@ -167,57 +167,6 @@ def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# SCD2 build as a stateful stream, hash-verified against the batch form
-# ---------------------------------------------------------------------------
-
-@register(
-    "stream_scd2_replay",
-    _SCD2_SQL,
-    doc="SCD2 dimension maintenance as a STREAMING stateful operator, "
-        "hash-verified against the batch change-point build: events "
-        "replay as three event-time-split micro-batches (the thirds "
-        "of the time range, plans/replay.py), applyInPandasWithState carries "
-        "THREE fields per user (current attr, version counter, current "
-        "valid_from), a change point closes the previous version "
-        "finally and opens the new one provisionally, and the reader "
-        "keeps the last emission per (user, version). The oracle is "
-        "the IDENTICAL SQL as scd2_build, so the streaming recursion "
-        "and the declarative lag/lead form are verified byte-identical "
-        "— the CDC-ingest shape (every warehouse's dimension feed) "
-        "joining the batch=stream equivalence triangle family "
-        "(sessions, CUSUM, running totals). State is O(1) per user; "
-        "closed versions are never retained.",
-    tags=("streaming", "stateful", "etl"),
-)
-def stream_scd2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.stateful import scd2_stream
-    from .replay import last_emission, run_replay, time_thirds
-
-    ev = load_events(spark, sf_dir)
-    base = ev.select(
-        "user_id",
-        F.unix_micros(F.col("ts")).alias("ts_us"),
-        "event_id",
-        F.col("event_type").alias("attr"),
-    )
-    # one execution for min/max + all three slices (see catalog_round8)
-    base = base.persist()
-    outs = run_replay(spark, "stream_scd2", scd2_stream, time_thirds(base, "ts_us"))
-    base.unpersist()
-    return (
-        last_emission(outs, "user_id", "version")
-        .select(
-            "user_id",
-            "attr",
-            F.timestamp_micros(F.col("valid_from_us")).alias("valid_from"),
-            F.timestamp_micros(F.col("valid_to_us")).alias("valid_to"),
-            F.col("version").cast("long").alias("version"),
-        )
-        .withColumn("is_current", F.col("valid_to").isNull())
-    )
-
-
-# ---------------------------------------------------------------------------
 # hyperparameter sweep: R models trained concurrently, one scan per step
 # ---------------------------------------------------------------------------
 

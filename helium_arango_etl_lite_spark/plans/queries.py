@@ -12,10 +12,11 @@ from . import catalog_core  # noqa: F401  (registers core queries)
 from . import catalog_llm  # noqa: F401  (registers LLM queries)
 from . import catalog_analytics  # noqa: F401  (registers analytics queries)
 from . import catalog_graph  # noqa: F401  (graph family: centrality, communities, links, traversal)
+from . import catalog_stream  # noqa: F401  (streaming family: stateful folds, sketches, watermarks, ANN ingest)
 from . import catalog_tpch  # noqa: F401  (registers extended TPC-H shapes)
 from . import catalog_round3  # noqa: F401  (set ops, range windows, LLM passes)
 from . import catalog_round5  # noqa: F401  (two-stage verify, window dedup, PQ, funnel)
-from . import catalog_round5b  # noqa: F401  (ANN recall, watermark replay, Z-order layout)
+from . import catalog_round5b  # noqa: F401  (ANN recall, Z-order layout, histogram quantiles)
 from . import catalog_round6  # noqa: F401  (repetition rules, reservoir sample, power iteration)
 from . import catalog_round7  # noqa: F401  (real PPM/WAV decode, top-2 spectral directions)
 from . import catalog_round8  # noqa: F401  (quarantine decode for malformed media)
@@ -34,8 +35,8 @@ from . import catalog_round10f  # noqa: F401  (snapshot diff, schema evolution)
 from . import catalog_round10g  # noqa: F401  (RBO agreement, conversion latency)
 from . import catalog_round10h  # noqa: F401  (JL projection, timed funnel)
 from . import catalog_round11  # noqa: F401  (batched k-center, persisted ANN graph)
-from . import catalog_round12  # noqa: F401  (persisted IVF-PQ, streaming CMS)
-from . import catalog_round13  # noqa: F401  (IVF-PQ recall@k, streaming quantiles)
+from . import catalog_round12  # noqa: F401  (persisted IVF-PQ, as-of nearest join, RFM)
+from . import catalog_round13  # noqa: F401  (IVF-PQ recall@k, Lloyd cell balance)
 
 __all__ = [
     "QUERIES",

@@ -1,30 +1,130 @@
-"""Custom stateful streaming operator via ``applyInPandasWithState``
-(SURVEY.md section 2.6 — the engine's extension point for semantics the
-built-in windowed aggregates can't express).
+"""Stateful streaming kernels: the state the catalog's stream replays
+carry across micro-batches (SURVEY.md section 2.6), one copy each.
 
-Example operator: per-key running totals that survive across micro-batches
-— the streaming analog of the reference's ever-growing follower state, but
-partitioned by key across executors with explicit, schema-declared state.
+Every operator emits in update mode and never times state out. The two
+mergeable sketches fold with Spark's built-in streaming aggregation,
+which keeps one row per key in the state store; the other seven fold
+through one ``applyInPandasWithState`` helper (:func:`_fold` builds the
+per-key update, :func:`_fold_by_user` makes the one call), because each
+is an order-dependent recursion or emits per batch rather than per key.
 
-Scale notes: state lives in the state store partitioned by group key; each
-micro-batch touches only the keys present in that batch (plus timeouts).
-The per-group pandas iteration is Arrow-batched. This is the pattern to
-extend for sessionization with custom emission rules, CDC-style merge, or
-online sketch maintenance.
+Kernel map (operator: state per key; rows emitted per batch; engine):
+
+* ``cms_cells_stream``: a ``(d, b)`` cell's count; each touched cell's
+  running count; native ``sum``, since cells merge by sum.
+* ``hll_registers_stream``: a ``(g, b)`` register's max rho; each
+  touched register's running max; native ``max``, since registers merge
+  by max.
+* ``running_totals``: event count and value sum; the user's totals and
+  the batch's own row count; Python, since ``batch_rows`` is per batch.
+* ``cusum_monitor``: Page statistic, its max, alarm count, first alarm,
+  row count; the user's counters; Python, since ``s = max(0, s + d)``
+  runs in time order.
+* ``sessionize``: the open session (start, last, n, cents); the sessions
+  the batch closed (final) and the open one (provisional); Python, since
+  each gap is tested against the previous event.
+* ``scd2_stream``: current attr, version and its valid_from; the versions
+  the batch closed (final) and the open one; Python, since change points
+  are found in time order.
+* ``cdc_stream``: patched valc/attr, last seq, live-op count; the key's
+  materialized row; Python, since patches and tombstones apply in seq
+  order.
+* ``attribution_stream``: the last touch type; one credit row per
+  purchase; Python, since the touch carries in seq order and the output
+  is append-only.
+* ``sessionize_ooo``: the user's full interval list; the user's whole
+  session list; Python, since the interval merge takes any arrival
+  order.
+
+A reader keeps the last emission per key (``plans/replay.last_emission``),
+except for attribution, whose rows are all final. The in-order operators
+take their cross-batch order from the replay harness (time-split batches,
+pinned file mtimes) and sort each batch's rows themselves; Arrow delivers
+a key's rows in no particular order.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
+from typing import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    ArrayType, DoubleType, IntegerType, LongType, StringType, StructField,
-    StructType,
+    ArrayType, DoubleType, LongType, StringType, StructField, StructType,
 )
+
+def _fold(
+    step: Callable[[object, tuple, pd.DataFrame], tuple[tuple, list]],
+    init: tuple,
+    out: StructType,
+    order: str | list[str] | None = None,
+):
+    """The ``applyInPandasWithState`` update function of a fold by key.
+
+    ``step(key, state, rows)`` gets the key, the key's carried state
+    (``init`` for a key not seen before) and its rows of one micro-batch,
+    sorted by ``order`` when given, and returns the new state and the
+    rows to emit, as tuples in ``out``'s column order.
+    """
+
+    def update(key, pdfs, state: GroupState):
+        pdf = pd.concat(list(pdfs), ignore_index=True)
+        if order:
+            pdf = pdf.sort_values(order, kind="mergesort")
+        new, rows = step(key[0], state.get if state.exists else init, pdf)
+        state.update(new)
+        yield pd.DataFrame(rows, columns=out.fieldNames())
+
+    return update
+
+
+def _fold_by_user(
+    events: DataFrame, update, out: StructType, state: StructType
+) -> DataFrame:
+    """Run ``update`` per ``user_id`` over a stream, in update mode with
+    no state timeout."""
+    return events.groupBy("user_id").applyInPandasWithState(
+        update,
+        outputStructType=out,
+        stateStructType=state,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+# ---------------------------------------------------------------------------
+# mergeable sketches: Spark's streaming aggregation holds the state
+# ---------------------------------------------------------------------------
+
+
+def cms_cells_stream(increments: DataFrame) -> DataFrame:
+    """Maintain a Count-Min Sketch over a stream of ``(d, b, c)`` cell
+    increments: a cell's count is the sum of its increments, in any
+    order, so the state is one running sum per ``(d, b)`` cell, bounded
+    at depth x width keys. The producer pre-sums each batch per cell,
+    which bounds the shuffle into the state store at depth x width rows
+    per batch whatever the token volume. The latest emission per cell is
+    the sketch; estimation and top-k run batch-side
+    (``cms_estimate_topk``)."""
+    return increments.groupBy("d", "b").agg(F.sum("c").alias("c"))
+
+
+def hll_registers_stream(partials: DataFrame) -> DataFrame:
+    """Maintain per-group HyperLogLog registers over a stream of
+    ``(g, b, r)`` partial maxima: a register is the max rho ever seen for
+    its bucket, and max is idempotent and order-free, so replaying or
+    reordering batches cannot change a converged register. State is
+    bounded at groups x m registers; the distinct-count readout
+    (``operators/aggregates.hll_estimate``) runs batch-side over the
+    latest emission per register."""
+    return partials.groupBy("g", "b").agg(F.max("r").alias("r"))
+
+
+# ---------------------------------------------------------------------------
+# per-user folds in Python
+# ---------------------------------------------------------------------------
 
 RUNNING_TOTALS_SCHEMA = StructType(
     [
@@ -43,47 +143,21 @@ RUNNING_TOTALS_STATE = StructType(
 )
 
 
-def _update_running_totals(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Accumulate (count, sum(value)) per key across micro-batches; emit the
-    running totals once per key per batch it appears in."""
-    n, v = state.get if state.exists else (0, 0.0)
-    batch_rows = 0
-    for pdf in pdfs:  # Arrow-batched chunks of this key's rows in the batch
-        batch_rows += len(pdf)
-        n += len(pdf)
-        v += float(pdf["value"].fillna(0.0).sum())
-    state.update((n, v))
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "n_events_total": [n],
-            "total_value": [round(v, 6)],
-            "batch_rows": [batch_rows],
-        }
-    )
+def _running_totals_step(k, state, pdf):
+    n = state[0] + len(pdf)
+    v = state[1] + float(pdf["value"].fillna(0.0).sum())
+    return (n, v), [(k, n, round(v, 6), len(pdf))]
 
 
-def running_totals(
-    events: DataFrame, key_col: str = "user_id", value_col: str = "value"
-) -> DataFrame:
-    """Per-key running totals over an unbounded stream.
-
-    Built-in windowed aggregation cannot emit a *cumulative* (all-time)
-    value per key in update mode with bounded state semantics under the
-    engine's control — this operator can, and is the template for any
-    custom state machine.
-    """
-    sel = events.select(
-        events[key_col].alias("user_id"), events[value_col].alias("value")
-    )
-    return sel.groupBy("user_id").applyInPandasWithState(
-        _update_running_totals,
-        outputStructType=RUNNING_TOTALS_SCHEMA,
-        stateStructType=RUNNING_TOTALS_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+def running_totals(events: DataFrame) -> DataFrame:
+    """Per-user running event count and ``value`` sum over an unbounded
+    stream, emitted once per user per batch the user appears in, with
+    that batch's row count."""
+    return _fold_by_user(
+        events.select("user_id", "value"),
+        _fold(_running_totals_step, (0, 0.0), RUNNING_TOTALS_SCHEMA),
+        RUNNING_TOTALS_SCHEMA,
+        RUNNING_TOTALS_STATE,
     )
 
 
@@ -115,24 +189,17 @@ def make_cusum_update(mult: int, h: int):
     row-by-row in event-time order — the stateful computation the batch
     entry ``events_cusum_alarm`` expresses declaratively via the
     prefix-min identity. The two are verified HASH-IDENTICAL by the
-    replay entry (plans/catalog_round8.py:stream_cusum_replay), which is
+    replay entry (plans/catalog_stream.py:stream_cusum_replay), which is
     the strongest cross-form check the repo has: same numbers from a
     recursion over micro-batch state and from two window functions.
 
-    Rows inside a micro-batch arrive unordered (Arrow chunks); the fn
-    sorts each batch's group by (ts_us, event_id). Cross-batch order is
-    the replay harness's contract (time-split batches, controlled
-    mtimes). A null deviation contributes nothing to the state but the
-    row still counts and the CURRENT s is still alarm-evaluated —
-    matching how window sums skip nulls batch-side.
+    A null deviation contributes nothing to the state but the row still
+    counts and the CURRENT s is still alarm-evaluated — matching how
+    window sums skip nulls batch-side.
     """
 
-    def update(key, pdfs, state: GroupState):
-        s, mx, alarms, first_us, n = (
-            state.get if state.exists else (0, 0, 0, None, 0)
-        )
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["ts_us", "event_id"], kind="mergesort")
+    def step(k, state, pdf):
+        s, mx, alarms, first_us, n = state
         for ts_us, xc, mean_c in zip(
             pdf["ts_us"].values, pdf["xc"].values, pdf["mean_c"].values
         ):
@@ -144,18 +211,10 @@ def make_cusum_update(mult: int, h: int):
                 alarms += 1
                 if first_us is None:
                     first_us = int(ts_us)
-        state.update((int(s), int(mx), int(alarms), first_us, int(n)))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "n_alarms": [alarms],
-                "max_cusum": [mx],
-                "first_alarm_us": [first_us],
-            }
-        )
+        new = (int(s), int(mx), int(alarms), first_us, int(n))
+        return new, [(k, n, alarms, mx, first_us)]
 
-    return update
+    return _fold(step, (0, 0, 0, None, 0), CUSUM_SCHEMA, ["ts_us", "event_id"])
 
 
 def cusum_monitor(events: DataFrame, mult: int, h: int) -> DataFrame:
@@ -165,13 +224,7 @@ def cusum_monitor(events: DataFrame, mult: int, h: int) -> DataFrame:
     history table). State per user is five integers — O(keys), bounded
     forever, no timeline retained."""
     sel = events.select("user_id", "ts_us", "event_id", "xc", "mean_c")
-    return sel.groupBy("user_id").applyInPandasWithState(
-        make_cusum_update(mult, h),
-        outputStructType=CUSUM_SCHEMA,
-        stateStructType=CUSUM_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _fold_by_user(sel, make_cusum_update(mult, h), CUSUM_SCHEMA, CUSUM_STATE)
 
 
 SESSION_SCHEMA = StructType(
@@ -207,38 +260,28 @@ def make_session_update(gap_us: int):
     be touched again) plus the still-OPEN session provisionally; a later
     batch that extends the open session re-emits the same
     (user_id, session_start_us) key with larger n_events, so readers
-    keep the LAST emission per key (plans/catalog_round8b.py:
+    keep the LAST emission per key (plans/catalog_stream.py:
     stream_session_replay takes max batch_id). State per user is four
     integers — the open session only; closed timelines are never
     retained.
     """
 
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            start, last, n, cents = state.get
-        else:
-            start = None
-            last = n = cents = 0
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["ts_us", "event_id"], kind="mergesort")
-        out = []
+    def step(k, state, pdf):
+        start, last, n, cents = state
+        rows = []
         for ts_us, xc in zip(pdf["ts_us"].values, pdf["xc"].values):
             ts_us = int(ts_us)
             if start is None:
                 start, last, n, cents = ts_us, ts_us, 1, int(xc)
             elif ts_us - last >= gap_us:
-                out.append((key[0], start, n, cents))  # closed: final
+                rows.append((k, start, n, cents))  # closed: final
                 start, last, n, cents = ts_us, ts_us, 1, int(xc)
             else:
                 last, n, cents = ts_us, n + 1, cents + int(xc)
-        state.update((int(start), int(last), int(n), int(cents)))
-        out.append((key[0], start, n, cents))  # open: provisional
-        yield pd.DataFrame(
-            out,
-            columns=["user_id", "session_start_us", "n_events", "total_cents"],
-        )
+        rows.append((k, start, n, cents))  # open: provisional
+        return (int(start), int(last), int(n), int(cents)), rows
 
-    return update
+    return _fold(step, (None, 0, 0, 0), SESSION_SCHEMA, ["ts_us", "event_id"])
 
 
 def sessionize(events: DataFrame, gap_us: int) -> DataFrame:
@@ -246,18 +289,8 @@ def sessionize(events: DataFrame, gap_us: int) -> DataFrame:
     user (the OPEN session only); ``events`` carries ``ts_us`` micros and
     ``xc`` integer cents."""
     sel = events.select("user_id", "ts_us", "event_id", "xc")
-    return sel.groupBy("user_id").applyInPandasWithState(
-        make_session_update(gap_us),
-        outputStructType=SESSION_SCHEMA,
-        stateStructType=SESSION_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _fold_by_user(sel, make_session_update(gap_us), SESSION_SCHEMA, SESSION_STATE)
 
-
-# ---------------------------------------------------------------------------
-# SCD2 dimension maintenance as a stateful stream (CDC-style versioning)
-# ---------------------------------------------------------------------------
 
 SCD2_SCHEMA = StructType(
     [
@@ -278,56 +311,34 @@ SCD2_STATE = StructType(
 )
 
 
-def _scd2_update(key, pdfs, state: GroupState):
-    """Per-user SCD2 maintenance: three fields of state (current attr,
-    version counter, current valid_from). A change point CLOSES the
-    previous version (final — its valid_to can never move again) and
-    opens a new one (provisional, valid_to NULL); readers keep the last
-    emission per (user_id, version). Within a batch, later dispositions
-    of the same version overwrite earlier ones, so each batch emits at
-    most one row per touched version — the streaming dual of
+def _scd2_step(k, state, pdf):
+    """A change point CLOSES the previous version (final — its valid_to
+    can never move again) and opens a new one (provisional, valid_to
+    NULL). Within a batch, later dispositions of the same version
+    overwrite earlier ones, so each batch emits at most one row per
+    touched version — the streaming dual of
     plans/catalog_round8c.py:scd2_build's change-point compression."""
-    if state.exists:
-        last_attr, version, cur_from = state.get
-    else:
-        last_attr, version, cur_from = None, 0, 0
-    pdf = pd.concat(list(pdfs), ignore_index=True)
-    pdf = pdf.sort_values(["ts_us", "event_id"], kind="mergesort")
+    last_attr, version, cur_from = state
     rows: dict[int, tuple] = {}
     for ts_us, attr in zip(pdf["ts_us"].values, pdf["attr"].values):
         ts_us = int(ts_us)
         if last_attr is None or attr != last_attr:
             if last_attr is not None:
-                rows[version] = (
-                    key[0], last_attr, cur_from, ts_us, version
-                )
+                rows[version] = (k, last_attr, cur_from, ts_us, version)
             version += 1
             cur_from = ts_us
             last_attr = attr
-    state.update((last_attr, int(version), int(cur_from)))
-    rows[version] = (key[0], last_attr, cur_from, None, version)
-    yield pd.DataFrame(
-        list(rows.values()),
-        columns=["user_id", "attr", "valid_from_us", "valid_to_us", "version"],
-    )
+    rows[version] = (k, last_attr, cur_from, None, version)
+    return (last_attr, int(version), int(cur_from)), list(rows.values())
 
 
 def scd2_stream(events: DataFrame) -> DataFrame:
     """Streaming SCD2 build; ``events`` carries ``ts_us`` micros and the
     tracked attribute in ``attr``."""
     sel = events.select("user_id", "ts_us", "event_id", "attr")
-    return sel.groupBy("user_id").applyInPandasWithState(
-        _scd2_update,
-        outputStructType=SCD2_SCHEMA,
-        stateStructType=SCD2_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    update = _fold(_scd2_step, (None, 0, 0), SCD2_SCHEMA, ["ts_us", "event_id"])
+    return _fold_by_user(sel, update, SCD2_SCHEMA, SCD2_STATE)
 
-
-# ---------------------------------------------------------------------------
-# CDC merge: column-patch upserts + tombstone deletes, replayed as a stream
-# ---------------------------------------------------------------------------
 
 CDC_SCHEMA = StructType(
     [
@@ -349,21 +360,14 @@ CDC_STATE = StructType(
 )
 
 
-def _cdc_update(key, pdfs, state: GroupState):
-    """Per-key CDC merge: an 'U' op patches only the columns it carries
-    (NULL columns leave prior state intact — column-level change
-    capture, not whole-row replace); a 'D' tombstone resets the key to
-    empty so later upserts rebuild from scratch. State is four scalars
-    per key; each batch emits the key's current materialized row and
-    readers keep the LAST emission per key, dropping keys whose final
-    state has n == 0 (deleted and never rebuilt) — the streaming dual
-    of plans/catalog_round10c.py:cdc_apply."""
-    if state.exists:
-        valc, attr, seq, n = state.get
-    else:
-        valc, attr, seq, n = None, None, 0, 0
-    pdf = pd.concat(list(pdfs), ignore_index=True)
-    pdf = pdf.sort_values("seq", kind="mergesort")
+def _cdc_step(k, state, pdf):
+    """An 'U' op patches only the columns it carries (NULL columns leave
+    prior state intact — column-level change capture, not whole-row
+    replace); a 'D' tombstone resets the key to empty so later upserts
+    rebuild from scratch. Readers drop keys whose final n is 0 (deleted
+    and never rebuilt) — the streaming dual of
+    plans/catalog_round10c.py:cdc_apply."""
+    valc, attr, seq, n = state
     for op, row_seq, row_valc, row_attr in zip(
         pdf["op"].values, pdf["seq"].values,
         pdf["valc"].values, pdf["attr"].values,
@@ -377,29 +381,16 @@ def _cdc_update(key, pdfs, state: GroupState):
             if not (row_attr is None or row_attr != row_attr):  # NaN-safe
                 attr = row_attr
         seq = int(row_seq)
-    state.update((valc, attr, int(seq), int(n)))
-    yield pd.DataFrame(
-        [(key[0], valc, attr, int(seq), int(n))],
-        columns=["user_id", "last_valc", "last_attr", "last_seq", "n_live"],
-    )
+    return (valc, attr, int(seq), int(n)), [(k, valc, attr, int(seq), int(n))]
 
 
 def cdc_stream(changes: DataFrame) -> DataFrame:
     """Streaming CDC merge; ``changes`` carries per-key monotone ``seq``,
     ``op`` in {'U','D'}, and nullable patch columns ``valc``/``attr``."""
     sel = changes.select("user_id", "seq", "op", "valc", "attr")
-    return sel.groupBy("user_id").applyInPandasWithState(
-        _cdc_update,
-        outputStructType=CDC_SCHEMA,
-        stateStructType=CDC_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    update = _fold(_cdc_step, (None, None, 0, 0), CDC_SCHEMA, "seq")
+    return _fold_by_user(sel, update, CDC_SCHEMA, CDC_STATE)
 
-
-# ---------------------------------------------------------------------------
-# last-touch attribution as a stream: one string of state per user
-# ---------------------------------------------------------------------------
 
 ATTR_SCHEMA = StructType(
     [
@@ -415,115 +406,31 @@ ATTR_STATE = StructType([StructField("last_touch", StringType(), True)])
 _ATTR_TOUCHES = ("click", "view", "signup")
 
 
-def _attr_update(key, pdfs, state: GroupState):
-    """Carry the user's most recent touch type across micro-batches;
-    every purchase emits ONE credit row (channel = carried touch or
-    'direct') the moment it is seen — append semantics, so the reader
-    aggregates all emissions without last-wins dedup. State is one
-    nullable string per user; the batch twin is
+def _attr_step(k, state, pdf):
+    """Every purchase emits ONE credit row (channel = carried touch or
+    'direct') the moment it is seen; the batch twin is
     plans/catalog_round10d.py:events_attribution."""
-    (last,) = state.get if state.exists else (None,)
-    pdf = pd.concat(list(pdfs), ignore_index=True)
-    pdf = pdf.sort_values("seq", kind="mergesort")
-    out = []
+    (last,) = state
+    rows = []
     for et, seq, cents in zip(
         pdf["event_type"].values, pdf["seq"].values, pdf["cents"].values
     ):
         if et in _ATTR_TOUCHES:
             last = et
         elif et == "purchase":
-            out.append(
-                (key[0], last if last is not None else "direct",
-                 int(cents), int(seq))
+            rows.append(
+                (k, last if last is not None else "direct", int(cents), int(seq))
             )
-    state.update((last,))
-    yield pd.DataFrame(
-        out, columns=["user_id", "channel", "cents", "seq"]
-    )
+    return (last,), rows
 
 
 def attribution_stream(events: DataFrame) -> DataFrame:
     """Streaming last-touch attribution; ``events`` carries per-user
     monotone ``seq``, ``event_type`` and integer ``cents``."""
     sel = events.select("user_id", "seq", "event_type", "cents")
-    return sel.groupBy("user_id").applyInPandasWithState(
-        _attr_update,
-        outputStructType=ATTR_SCHEMA,
-        stateStructType=ATTR_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    update = _fold(_attr_step, (None,), ATTR_SCHEMA, "seq")
+    return _fold_by_user(sel, update, ATTR_SCHEMA, ATTR_STATE)
 
-
-# ---------------------------------------------------------------------------
-# streaming Count-Min Sketch maintenance (round 12 — r11 verdict item 8)
-# ---------------------------------------------------------------------------
-
-CMS_CELLS_SCHEMA = StructType(
-    [
-        StructField("d", IntegerType(), False),
-        StructField("b", IntegerType(), False),
-        StructField("c", LongType(), False),
-    ]
-)
-
-CMS_CELLS_STATE = StructType([StructField("c", LongType(), False)])
-
-
-def _update_cms_cell(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Accumulate one CMS cell's count across micro-batches. Each input
-    row carries a PARTIAL count ``c`` for this ``(d, b)`` cell (the
-    producer pre-aggregates per batch — map-side combine for the state
-    store, so at most depth*width rows cross Arrow per batch no matter
-    how many tokens the batch held); the state is the running cell
-    value — the sketch's cell-wise mergeability
-    (``llm_heavy_hitters_cms``'s docstring claim) used literally: the
-    state store IS the sketch, bounded at depth*width cells no matter
-    how much text streams through."""
-    c = state.get[0] if state.exists else 0
-    for pdf in pdfs:
-        c += int(pdf["c"].sum())
-    state.update((c,))
-    yield pd.DataFrame({"d": [key[0]], "b": [key[1]], "c": [c]})
-
-
-def cms_cells_stream(increments: DataFrame) -> DataFrame:
-    """Maintain a Count-Min Sketch over an unbounded increment stream.
-
-    ``increments`` is a stream of ``(d, b, c)`` PRE-AGGREGATED cell
-    increments — the producer groups each micro-batch's token
-    occurrences down to per-cell partial counts before they reach the
-    state store (exact by the sketch's additive mergeability; the
-    counts sum in any order), so both the shuffle INTO the stateful
-    operator and the Arrow transfer are bounded at depth*width rows
-    per batch regardless of token volume. Emits each touched cell's
-    RUNNING count per micro-batch in update mode; the latest emission
-    per cell is the sketch, and estimation/top-k runs batch-side over
-    it (``cms_estimate_topk``). State is bounded by construction at
-    depth*width keys — the whole point of sketching the stream instead
-    of keeping per-token counts (an exact streaming top-k would hold
-    the full Zipf-tailed vocabulary in state)."""
-    return increments.groupBy("d", "b").applyInPandasWithState(
-        _update_cms_cell,
-        outputStructType=CMS_CELLS_SCHEMA,
-        stateStructType=CMS_CELLS_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# OUT-OF-ORDER sessionization via interval merge (round 12)
-#
-# make_session_update above requires time-ordered micro-batches (its
-# state is the single OPEN session; a closed session is final). This
-# variant drops that contract entirely: events may arrive in ANY order
-# across batches — a late event landing between two existing sessions
-# FUSES them — at the price of keeping the user's full interval list in
-# state (bounded by session count, not event count).
-# ---------------------------------------------------------------------------
 
 SESSIONIZE_OOO_SCHEMA = StructType(
     [
@@ -566,19 +473,11 @@ def make_ooo_session_update(gap_us: int):
     the batch equivalence is exact.
     """
 
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            starts, ends, ns, sums = state.get
-            items = list(zip(starts, ends, ns, sums))
-        else:
-            items = []
-        for pdf in pdfs:
-            items.extend(
-                (int(t), int(t), 1, int(v))
-                for t, v in zip(pdf["ts_us"], pdf["value_c"])
-            )
+    def step(k, state, pdf):
+        items = list(zip(*state)) + [
+            (int(t), int(t), 1, int(v))
+            for t, v in zip(pdf["ts_us"], pdf["value_c"])
+        ]
         items.sort()
         merged: list[tuple[int, int, int, int]] = []
         for s, e, n, v in items:
@@ -587,91 +486,19 @@ def make_ooo_session_update(gap_us: int):
                 merged[-1] = (ls, max(le, e), ln + n, lv + v)
             else:
                 merged.append((s, e, n, v))
-        state.update(
-            (
-                [m[0] for m in merged],
-                [m[1] for m in merged],
-                [m[2] for m in merged],
-                [m[3] for m in merged],
-            )
-        )
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]] * len(merged),
-                "session_start_us": [m[0] for m in merged],
-                "session_end_us": [m[1] for m in merged],
-                "n_events": [m[2] for m in merged],
-                "total_value_c": [m[3] for m in merged],
-            }
-        )
+        new = tuple([m[i] for m in merged] for i in range(4))
+        return new, [(k, *m) for m in merged]
 
-    return update
+    return _fold(step, ([], [], [], []), SESSIONIZE_OOO_SCHEMA)
 
 
-def sessionize_ooo(
-    events: DataFrame, gap_us: int = 30 * 60 * 1_000_000
-) -> DataFrame:
+def sessionize_ooo(events: DataFrame, gap_us: int) -> DataFrame:
     """Per-user session windows over an unbounded stream, exact under
     out-of-order arrival (see :func:`make_ooo_session_update`). Input
     must provide ``user_id, ts_us, value_c``."""
-    return events.groupBy("user_id").applyInPandasWithState(
+    return _fold_by_user(
+        events,
         make_ooo_session_update(gap_us),
-        outputStructType=SESSIONIZE_OOO_SCHEMA,
-        stateStructType=SESSIONIZE_OOO_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# streaming HyperLogLog maintenance (round 13 — max-mergeable registers)
-#
-# The CMS above certifies SUM-mergeable sketch state; HLL registers are
-# the MAX-mergeable family (a register is the max rho ever seen for its
-# bucket — operators/aggregates.hll_registers). Same discipline: the
-# producer pre-reduces each micro-batch to per-register partial maxima
-# (<= m rows per group per batch — map-side combine for the state
-# store), the state holds exactly one value per touched register, and
-# the latest update-mode emission per register is the sketch.
-# ---------------------------------------------------------------------------
-
-HLL_REGS_SCHEMA = StructType(
-    [
-        StructField("g", StringType(), False),
-        StructField("b", LongType(), False),
-        StructField("r", LongType(), False),
-    ]
-)
-
-HLL_REGS_STATE = StructType([StructField("r", LongType(), False)])
-
-
-def _update_hll_register(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Fold one HLL register's running maximum across micro-batches.
-    Each input row carries the batch's partial max rho for this
-    ``(g, b)`` register; max is idempotent and order-free, so replaying
-    or reordering batches can never change the converged register —
-    an even stronger merge contract than the CMS sum."""
-    r = state.get[0] if state.exists else 0
-    for pdf in pdfs:
-        if len(pdf):
-            r = max(r, int(pdf["r"].max()))
-    state.update((r,))
-    yield pd.DataFrame({"g": [key[0]], "b": [key[1]], "r": [r]})
-
-
-def hll_registers_stream(partials: DataFrame) -> DataFrame:
-    """Maintain per-group HyperLogLog registers over an unbounded
-    stream of ``(g, b, r)`` PRE-REDUCED partial maxima. State is
-    bounded at groups x m registers by construction; the distinct-count
-    readout (``operators/aggregates.hll_estimate``) runs batch-side
-    over the latest emission per register."""
-    return partials.groupBy("g", "b").applyInPandasWithState(
-        _update_hll_register,
-        outputStructType=HLL_REGS_SCHEMA,
-        stateStructType=HLL_REGS_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        SESSIONIZE_OOO_SCHEMA,
+        SESSIONIZE_OOO_STATE,
     )

@@ -1,8 +1,9 @@
 """Static guards that keep one copy of each text, dedup and payload kernel
 in the LLM operators: the shifted-slice zip_with n-gram construction lives
 only in ``dedup.array_shingles``, text.py builds no n-gram as a
-``transform`` over an index sequence, and the quarantine row is written
-by one parse-or-quarantine loop."""
+``transform`` over an index sequence, the quarantine row is written by one
+parse-or-quarantine loop, and the per-seed LSH edge union is built only by
+``similarity.lsh_edges``."""
 
 from __future__ import annotations
 
@@ -102,3 +103,20 @@ def test_quarantined_row_written_by_one_function():
         if _text(node) == "quarantined"
     }
     assert writers == {("operators/llm/multimodal.py", "_parse_or_quarantine")}, sorted(writers)
+
+
+def test_lsh_edge_union_only_in_lsh_edges():
+    """A function that both calls knn_join_bucketed and unions frames is
+    building the per-seed LSH neighbour-edge union: only
+    ``similarity.lsh_edges`` may, in operators/ and in the catalog."""
+    seen: dict[tuple[str, str], set[str]] = {}
+    for pattern in ("operators/**/*.py", "plans/*.py"):
+        for path, tree in _modules(pattern):
+            for fn, node in _function_nodes(tree):
+                name = _call_name(node) or getattr(node, "attr", None)
+                if name == "knn_join_bucketed":
+                    seen.setdefault((path, fn), set()).add("knn")
+                elif name in ("union", "unionAll", "unionByName"):
+                    seen.setdefault((path, fn), set()).add("union")
+    sites = {site for site, kinds in seen.items() if kinds == {"knn", "union"}}
+    assert sites == {("operators/llm/similarity.py", "lsh_edges")}, sorted(sites)

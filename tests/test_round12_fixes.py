@@ -38,20 +38,6 @@ def test_no_non_ascii_letters_in_source():
     assert not offenders, "\n".join(offenders)
 
 
-def test_stream_drivers_only_in_the_replay_runner():
-    """Every catalog stream replay goes through plans/replay.py: no other
-    module under plans/ builds its own stream query."""
-    banned = ("readStream", "writeStream", "trigger(availableNow",
-              'option("maxFilesPerTrigger"')
-    offenders = []
-    for p in glob.glob(os.path.join(REPO, "helium_arango_etl_lite_spark/plans/*.py")):
-        if os.path.basename(p) == "replay.py":
-            continue
-        for lineno, line in enumerate(open(p, encoding="utf-8"), 1):
-            offenders += [f"{p}:{lineno}: {b}" for b in banned if b in line]
-    assert not offenders, "\n".join(offenders)
-
-
 def test_kcenter_missing_seed_raises_descriptive_error(spark):
     from helium_arango_etl_lite_spark.operators.llm.similarity import (
         kcenter_coreset,

@@ -12,6 +12,8 @@ from helium_arango_etl_lite_spark.plans.catalog_round12 import (
     _IPQ_QMOD,
     _IPQ_TOPK,
     llm_ann_ivf_pq_persist,
+)
+from helium_arango_etl_lite_spark.plans.catalog_stream import (
     stream_heavy_hitters_replay,
 )
 
@@ -180,95 +182,6 @@ def test_stream_cms_estimates_dominate_truth(spark, sf_dir):
     }
     for tok, e in est.items():
         assert e >= truth.get(tok, 0), (tok, e, truth.get(tok))
-
-
-def test_ooo_update_fuses_sessions_across_batches():
-    """The semantics the in-order operator cannot express: a late event
-    landing BETWEEN two existing sessions fuses them into one."""
-    import pandas as pd
-
-    from helium_arango_etl_lite_spark.streaming.stateful import (
-        make_ooo_session_update,
-    )
-
-    class FakeState:
-        def __init__(self):
-            self.exists = False
-            self._v = None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-            self.exists = True
-
-    gap = 30 * 60 * 1_000_000
-    upd = make_ooo_session_update(gap)
-    st = FakeState()
-    m = 60 * 1_000_000
-
-    # batch 0: two events 50 min apart -> TWO sessions
-    out0 = list(
-        upd(
-            (7,),
-            iter([pd.DataFrame({"ts_us": [0, 50 * m], "value_c": [10, 20]})]),
-            st,
-        )
-    )[0]
-    assert len(out0) == 2
-
-    # batch 1: one LATE event at 25 min -> the two sessions FUSE
-    out1 = list(
-        upd(
-            (7,),
-            iter([pd.DataFrame({"ts_us": [25 * m], "value_c": [5]})]),
-            st,
-        )
-    )[0]
-    assert len(out1) == 1
-    row = out1.iloc[0]
-    assert row["session_start_us"] == 0
-    assert row["session_end_us"] == 50 * m
-    assert row["n_events"] == 3
-    assert row["total_value_c"] == 35
-    # state holds exactly one interval now
-    starts, ends, ns, sums = st.get
-    assert list(ns) == [3] and list(sums) == [35]
-
-
-def test_ooo_replay_matches_native_session_window(spark, sf_dir):
-    """Final OOO-replay rows == the native session_window batch answer
-    (counts and starts; values in exact integer cents)."""
-    from helium_arango_etl_lite_spark.plans.catalog_round12 import (
-        stream_session_ooo_replay,
-    )
-    from helium_arango_etl_lite_spark.plans.registry import load_events
-
-    got = {
-        (r["user_id"], r["session_start"]): (r["n_events"], r["total_cents"])
-        for r in stream_session_ooo_replay(spark, sf_dir).collect()
-    }
-    ev = load_events(spark, sf_dir)
-    want = {
-        (r["user_id"], r["session_start"]): (r["n"], r["cents"])
-        for r in ev.groupBy(
-            "user_id", F.session_window("ts", "30 minutes")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
-        )
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            "n",
-            "cents",
-        )
-        .collect()
-    }
-    assert got == want
 
 
 def test_asof_nearest_picks_closest_with_backward_ties(spark):

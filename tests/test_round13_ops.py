@@ -120,7 +120,7 @@ def test_stream_quantiles_equals_batch_sketch(spark, sf_dir):
     from helium_arango_etl_lite_spark.plans.catalog_round5b import (
         agg_histogram_quantiles,
     )
-    from helium_arango_etl_lite_spark.plans.catalog_round13 import (
+    from helium_arango_etl_lite_spark.plans.catalog_stream import (
         stream_quantiles_replay,
     )
 
@@ -194,7 +194,7 @@ def test_stream_hll_equals_batch_sketch(spark, sf_dir):
     from helium_arango_etl_lite_spark.plans.catalog_round5 import (
         agg_hll_distinct,
     )
-    from helium_arango_etl_lite_spark.plans.catalog_round13 import (
+    from helium_arango_etl_lite_spark.plans.catalog_stream import (
         stream_hll_replay,
     )
 

@@ -429,58 +429,3 @@ def test_cusum_plan_single_shuffle(spark, sf_dir):
     # tiny test parquet is not the operator's doing)
     hash_ex = re.findall(r"hashpartitioning\(user_id", plan)
     assert len(hash_ex) == 1, plan
-
-
-def test_stream_cusum_update_sorts_and_accumulates():
-    """The stateful update closure must (a) sort a micro-batch's rows by
-    (ts_us, event_id) before running the recursion, (b) carry state
-    across calls, and (c) match the naive recursion over the
-    concatenated ordered rows. Pure-pandas check with a stub GroupState
-    — no streaming harness needed."""
-    import pandas as pd
-
-    from helium_arango_etl_lite_spark.streaming.stateful import (
-        make_cusum_update,
-    )
-
-    class StubState:
-        def __init__(self):
-            self.exists = False
-            self._v = None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-            self.exists = True
-
-    mult, h = 3, 50
-    upd = make_cusum_update(mult, h)
-    mean_c = 10
-    # batch 1 delivered UNSORTED; batch 2 continues the timeline
-    b1 = pd.DataFrame(
-        {"ts_us": [30, 10, 20], "event_id": [3, 1, 2],
-         "xc": [100, 5, 5], "mean_c": [mean_c] * 3}
-    )
-    b2 = pd.DataFrame(
-        {"ts_us": [40, 50], "event_id": [4, 5],
-         "xc": [100, 0], "mean_c": [mean_c] * 2}
-    )
-    st = StubState()
-    out1 = list(upd((7,), iter([b1]), st))[0]
-    out2 = list(upd((7,), iter([b2]), st))[0]
-
-    s, mx, alarms, first = 0, 0, 0, None
-    for ts, x in [(10, 5), (20, 5), (30, 100), (40, 100), (50, 0)]:
-        s = max(0, s + x - mult * mean_c)
-        mx = max(mx, s)
-        if s > h:
-            alarms += 1
-            first = first if first is not None else ts
-    r = out2.iloc[0]
-    assert out1.iloc[0]["n_events"] == 3 and r["n_events"] == 5
-    assert r["n_alarms"] == alarms and alarms >= 1
-    assert r["max_cusum"] == mx
-    assert r["first_alarm_us"] == first

@@ -1,6 +1,6 @@
 """Tests for the round-8 late operators (plans/catalog_round8b.py):
 MAD outliers, edit-distance verify, logistic-regression
-training, streaming sessionization."""
+training."""
 from __future__ import annotations
 
 import io
@@ -8,7 +8,6 @@ from contextlib import redirect_stdout
 
 import duckdb
 import numpy as np
-import pandas as pd
 import pytest
 
 from helium_arango_etl_lite_spark.plans.registry import QUERIES
@@ -150,59 +149,3 @@ def test_logreg_learns_nonzero_weights(spark, sf_dir):
         .toPandas().set_index("dim")
     )
     assert np.abs(out.loc[0:3, "value"].values).sum() > 0
-
-
-# ---------------------------------------------------------------------------
-# stream_session_replay: the stateful update closure
-# ---------------------------------------------------------------------------
-
-class _StubState:
-    def __init__(self):
-        self.exists = False
-        self._v = None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-        self.exists = True
-
-
-def test_session_update_closes_and_carries_state():
-    from helium_arango_etl_lite_spark.streaming.stateful import (
-        make_session_update,
-    )
-
-    gap = 100
-    upd = make_session_update(gap)
-    st = _StubState()
-    # batch 1 UNSORTED: sessions [10,20] then [200] opens
-    b1 = pd.DataFrame(
-        {"ts_us": [200, 10, 20], "event_id": [3, 1, 2], "xc": [7, 1, 2]}
-    )
-    out1 = list(upd((9,), iter([b1]), st))[0]
-    # closed session (10: n=2, cents=3) + provisional open (200: n=1, 7)
-    assert out1.values.tolist() == [[9, 10, 2, 3], [9, 200, 1, 7]]
-    # batch 2: extends the open session (gap 99 < 100), then a new one
-    b2 = pd.DataFrame(
-        {"ts_us": [299, 500], "event_id": [4, 5], "xc": [5, 11]}
-    )
-    out2 = list(upd((9,), iter([b2]), st))[0]
-    assert out2.values.tolist() == [[9, 200, 2, 12], [9, 500, 1, 11]]
-    # exact-gap boundary: ts - last == gap starts a NEW session
-    b3 = pd.DataFrame({"ts_us": [600], "event_id": [6], "xc": [1]})
-    out3 = list(upd((9,), iter([b3]), st))[0]
-    assert out3.values.tolist() == [[9, 500, 1, 11], [9, 600, 1, 1]]
-
-
-def test_session_replay_counts_match_native_operator(spark, sf_dir):
-    """Cross-form triangle closure: the stateful replay's session count
-    must equal the native session_window operator's (agg_session_window
-    uses the same 30-min gap)."""
-    n_stateful = QUERIES["stream_session_replay"].spark_fn(
-        spark, sf_dir
-    ).count()
-    n_native = QUERIES["agg_session_window"].spark_fn(spark, sf_dir).count()
-    assert n_stateful == n_native

@@ -13,7 +13,10 @@ entry (no execution) and flag the 100 TB anti-patterns:
 
 It also reports each plan's whole-stage codegen spans (distinct codegen
 ids), counted in the plan as planned with AQE off (no flag; a record for
-comparing plans).
+comparing plans), and its checkpoint scans: a checkpointed frame prints as
+one ``Scan ExistingRDD``, so the shuffles that built it are not in the
+plan. An entry with checkpoint scans has at least the exchanges counted,
+and the exchange ranking prints its count as ``>=N``.
 
 Usage:  python tools/plan_audit.py [--json PLAN_AUDIT.json] [name ...]
 
@@ -172,6 +175,8 @@ def audit_one(spark, name: str, sf_dir: str) -> dict:
         "global_windows": global_windows,
         "exchanges": tree_exchanges,
         "codegen_spans": len(set(re.findall(r"\[codegen id : (\d+)\]", codegen_plan))),
+        # a scan's details name the call that made its RDD
+        "checkpoint_scans": len(re.findall(r"RDD\[\d+\] at (?:localCheckpoint|checkpoint) at ", plan)),
     }
 
 
@@ -219,16 +224,16 @@ def main() -> int:
                 f, indent=1, sort_keys=True,
             )
     exch_rank = sorted(
-        ((v.get("exchanges", 0), k) for k, v in report.items()
-         if "error" not in v),
+        ((v["exchanges"], k) for k, v in report.items() if "error" not in v),
         reverse=True,
     )[:10]
     print(f"audited {len(report)} plans; flags: {len(flags)}")
     for name, why in flags:
         print(f"  FLAG {name}: {why}")
-    print("top exchange counts:")
+    print("top exchange counts (>=N: shuffles behind a checkpoint are not counted):")
     for n, k in exch_rank:
-        print(f"  {n:3d}  {k}")
+        shown = f">={n}" if report[k]["checkpoint_scans"] else str(n)
+        print(f"  {shown:>5}  {k}")
     return 1 if flags else 0
 
 
