@@ -1166,7 +1166,7 @@ def route_on_graph(
     table — the build-nightly/route-all-day deployment persists BOTH
     halves of the index (edges + entry sample) and this is how the
     reader hands them back (r10 verdict item 6; see
-    plans/catalog_round11.py:llm_ann_graph_persist); when None the
+    plans/catalog_similarity.py:llm_ann_graph_persist); when None the
     sample is derived from ``emb`` by ``id % entry_mod == 0`` as
     before.
 

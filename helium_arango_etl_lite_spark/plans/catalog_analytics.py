@@ -537,75 +537,6 @@ def tpch_q5_region_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CENTROID_SQL = """WITH e AS (
-    SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-  pos AS (SELECT unnest(range(1, 65)) AS i),
-  cent AS (SELECT label AS clabel, i, round(avg(v[i]), 6) AS cx
-           FROM e, pos GROUP BY 1, 2),
-  cvec AS (SELECT clabel, list(cx ORDER BY i) AS cv FROM cent GROUP BY 1),
-  scored AS (SELECT e.vec_id, e.label, c.clabel,
-               round(list_dot_product(e.v, c.cv)
-                     / (sqrt(list_dot_product(e.v, e.v))
-                        * sqrt(list_dot_product(c.cv, c.cv))), 4) AS cos
-             FROM e CROSS JOIN cvec c),
-  best AS (SELECT vec_id, label, clabel,
-             row_number() OVER (PARTITION BY vec_id
-                                ORDER BY cos DESC, clabel) AS rn
-           FROM scored)
-  SELECT label, clabel AS assigned, count(*) AS n
-  FROM best WHERE rn = 1 GROUP BY 1, 2"""
-
-
-@register(
-    "llm_centroid_assign",
-    _CENTROID_SQL,
-    doc="Per-label centroid (element-wise mean, one avg aggregate per "
-        "position — single pass, no posexplode shuffle blow-up) + "
-        "nearest-centroid assignment by cosine: the k-means E-step / "
-        "embedding-space label-purity check of a curation pipeline. The "
-        "k x dim centroid table broadcasts; each vector scores against k "
-        "centroids in one map stage, so corpus scale only widens the "
-        "scan. Centroids round to 6 dp (the order-dependent reduction), "
-        "similarity to 4 dp with a label tie-break before argmax.",
-    tags=("llm", "similarity", "clustering"),
-)
-def llm_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.llm.similarity import _cos, norm
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select(
-        "vec_id",
-        "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    ).withColumn("nrm", norm(F.col("v")))  # once per row, not per centroid
-    dim = 64
-    cent = (
-        e.groupBy(F.col("label").alias("clabel"))
-        .agg(
-            *[
-                F.round(F.avg(F.col("v")[i]), 6).alias(f"c{i}")
-                for i in range(dim)
-            ]
-        )
-        .select(
-            "clabel", F.array(*[F.col(f"c{i}") for i in range(dim)]).alias("cv")
-        )
-    )
-    scored = e.crossJoin(F.broadcast(cent.withColumn("ncv", norm(F.col("cv"))))).select(
-        "vec_id",
-        "label",
-        "clabel",
-        _cos("v", "cv", "nrm", "ncv").alias("cos"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cos"), F.asc("clabel"))
-    best = scored.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") == 1
-    )
-    return best.groupBy(
-        "label", F.col("clabel").alias("assigned")
-    ).agg(F.count(F.lit(1)).alias("n"))
-
-
 @register(
     "tpch_q4_order_priority",
     """SELECT o_orderpriority, count(*) AS n_orders

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..operators import graph_algorithms as ga
 from ..operators.llm import similarity
+from .catalog_similarity import _pairs_sql, _ranked_sql
 from .registry import load_table, register
 
 #: personalized PageRank's restart set: the nations of this region
@@ -504,17 +505,10 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is MATERIALIZED: DuckDB inlines single-reference CTEs, and an inlined
 # e{i} -> e{i-1} -> ... chain re-evaluates the all-pairs similarity join
 # a number of times exponential in the round count (observed: OOM).
-_MUTUAL_CTE = """
+_MUTUAL_CTE = f"""
 ev_ AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-p_ AS (SELECT a.vec_id AS qid, b.vec_id AS nid,
-              round(list_dot_product(a.v, b.v)
-                    / (sqrt(list_dot_product(a.v, a.v))
-                       * sqrt(list_dot_product(b.v, b.v))), 4) AS cos_sim
-       FROM ev_ a JOIN ev_ b ON a.vec_id <> b.vec_id),
-r_ AS (SELECT qid, nid,
-              row_number() OVER (PARTITION BY qid
-                                 ORDER BY cos_sim DESC, nid) AS rank
-       FROM p_),
+p_ AS ({_pairs_sql('ev_')}),
+r_ AS ({_ranked_sql('p_')}),
 knn_ AS MATERIALIZED (SELECT qid, nid FROM r_ WHERE rank <= 3),
 e0 AS MATERIALIZED (SELECT a.qid AS src, a.nid AS dst
        FROM knn_ a JOIN knn_ b ON a.qid = b.nid AND a.nid = b.qid)"""

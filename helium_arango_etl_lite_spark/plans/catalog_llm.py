@@ -1,8 +1,8 @@
 """LLM-data-pipeline query catalog (SURVEY.md section 2.8, north star).
 
-Dedup (exact / MinHash+LSH / SimHash / n-gram Jaccard / embedding-cosine),
-similarity search (brute-force + LSH ANN), text analysis (lang-ID, quality,
-token counting, fingerprint), multimodal metadata.
+Dedup (exact / MinHash+LSH / SimHash / n-gram Jaccard), text analysis
+(lang-ID, quality, token counting, fingerprint), multimodal metadata. The
+embedding similarity entries are in catalog_similarity.py.
 
 Oracle strategy: the MinHash/SimHash/LSH oracles are generated
 programmatically from the SAME seeded parameters as the Spark operators,
@@ -18,16 +18,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import MERSENNE_31, minhash_params
-from ..operators.llm import dedup, similarity, text
+from ..operators.llm import dedup, text
 from .registry import load_table, register
 
 M31 = MERSENNE_31
 NUM_HASHES = 6
 BANDS = 3
 SEED = 42
-LSH_PLANES = 6
-LSH_SEED = 7
-EMB_DIM = 64
 
 
 # --------------------------------------------------------------------------
@@ -274,132 +271,8 @@ def llm_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# similarity search
+# multimodal features, near-dup clusters, fingerprints and sampling
 # --------------------------------------------------------------------------
-
-_COS_SQL = """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
-SELECT e.vec_id,
-       round(list_dot_product(e.v, q.qv)
-             / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(q.qv, q.qv))), 4) AS cos_sim
-FROM e, q WHERE e.vec_id <> 0
-ORDER BY cos_sim DESC, e.vec_id LIMIT 10"""
-
-
-@register(
-    "llm_topk_cosine",
-    _COS_SQL,
-    doc="Brute-force exact cosine top-k to a query vector: broadcast the "
-        "query, linear scan, TakeOrderedAndProject — no corpus shuffle. "
-        "Similarity rounded to 4dp before ranking so summation order can't "
-        "flip the boundary.",
-    tags=("llm", "similarity"),
-)
-def llm_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return similarity.cosine_topk(load_table(spark, sf_dir, "embeddings"), query_id=0, k=10)
-
-
-def _planes_sql() -> list[str]:
-    planes = similarity.hyperplanes(LSH_PLANES, EMB_DIM, LSH_SEED)
-    return ["[" + ", ".join(repr(x) for x in p) + "]" for p in planes]
-
-
-_ANN_SQL = (
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-b AS (SELECT vec_id, v, ("""
-    + " + ".join(
-        f"(CASE WHEN list_dot_product(v, {p}) >= 0 THEN {1 << j} ELSE 0 END)"
-        for j, p in enumerate(_planes_sql())
-    )
-    + """)::BIGINT AS bucket FROM e),
-q AS (SELECT v AS qv, bucket AS qbucket FROM b WHERE vec_id = 0)
-SELECT b.vec_id, b.bucket,
-       round(list_dot_product(b.v, q.qv)
-             / (sqrt(list_dot_product(b.v, b.v)) * sqrt(list_dot_product(q.qv, q.qv))), 4) AS cos_sim
-FROM b, q WHERE b.vec_id <> 0 AND b.bucket = q.qbucket
-ORDER BY cos_sim DESC, b.vec_id LIMIT 5"""
-)
-
-
-@register(
-    "llm_ann_lsh",
-    _ANN_SQL,
-    doc="ANN via random-hyperplane LSH (6 sign bits -> 64 buckets): "
-        "candidates restricted to the query's bucket; at scale the bucket "
-        "is a precomputed partition column, so the scan prunes to ~1/64.",
-    tags=("llm", "similarity", "sketch"),
-)
-def llm_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return similarity.lsh_bucket_topk(
-        load_table(spark, sf_dir, "embeddings"),
-        query_id=0, k=5, num_planes=LSH_PLANES, seed=LSH_SEED, dim=EMB_DIM,
-    )
-
-
-@register(
-    "llm_dedup_embedding",
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
-       SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-              round(list_dot_product(a.v, b.v)
-                    / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 4) AS cos_sim
-       FROM e a JOIN e b ON a.vec_id < b.vec_id
-       WHERE round(list_dot_product(a.v, b.v)
-                   / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 4) >= 0.45""",
-    doc="Embedding-cosine near-dup pairs (threshold 0.45): brute-force "
-        "O(n^2) as the oracle baseline; LSH-bucket join is the scale path.",
-    tags=("llm", "dedup", "similarity"),
-)
-def llm_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return similarity.embedding_near_dup_pairs(
-        load_table(spark, sf_dir, "embeddings"), threshold=0.45
-    )
-
-
-_COS6 = (
-    "round(list_dot_product({a}, {b}) / "
-    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
-)
-
-# Fixed-K centroid seed set — size independent of the corpus (the old
-# `vec_id % 37` form grew with n; see similarity.fixed_centroids).
-IVF_K = 32
-
-_IVF_SQL = f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-c AS (SELECT vec_id AS cid, v AS cv FROM e
-      ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT {IVF_K}),
-asg AS (SELECT vec_id, cell FROM (
-    SELECT e.vec_id, c.cid AS cell,
-           row_number() OVER (PARTITION BY e.vec_id
-               ORDER BY {_COS6.format(a='e.v', b='c.cv')} DESC, c.cid DESC) AS rn
-    FROM e, c) WHERE rn = 1),
-q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-probe AS (SELECT cid FROM c, q
-          ORDER BY {_COS6.format(a='cv', b='qv')} DESC, cid DESC LIMIT 2)
-SELECT e.vec_id, asg.cell,
-       round(list_dot_product(e.v, q.qv)
-             / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(q.qv, q.qv))), 4) AS cos_sim
-FROM e JOIN asg USING (vec_id), q
-WHERE asg.cell IN (SELECT cid FROM probe) AND e.vec_id <> 0
-ORDER BY cos_sim DESC, e.vec_id LIMIT 5"""
-
-
-@register(
-    "llm_ann_ivf",
-    _IVF_SQL,
-    doc="ANN via IVF: FIXED-K deterministic centroid subset (order by "
-        "md5(id), take 32 — size independent of the corpus, so "
-        "assignment is O(n*K) at any scale; the corpus-growing id%37 "
-        "form is a test fixture only), broadcast argmax assignment, "
-        "probe the 2 nearest cells, exact cosine within. At scale the "
-        "cell id is a partition column -> a query scans ~nprobe/K of "
-        "the corpus (operators/llm/similarity.py ivf_topk).",
-    tags=("llm", "similarity", "ann"),
-)
-def llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return similarity.ivf_topk(
-        load_table(spark, sf_dir, "embeddings"),
-        query_id=0, k=5, nprobe=2, num_centroids=IVF_K,
-    )
 
 
 @register(
@@ -437,51 +310,6 @@ def llm_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_bytes",
         F.posexplode("feature").alias("bin", "frac"),
     ).withColumn("bin", F.col("bin").cast("long"))
-
-
-# fewer planes than the ANN query: near-dup recall needs coarser buckets
-# (6 planes / 64 buckets split every true pair at this corpus size; 3
-# planes / 8 buckets retain a usable candidate set — the standard LSH
-# recall/candidate-volume dial)
-NEAR_DUP_PLANES = 3
-
-
-def _near_dup_planes_sql() -> list[str]:
-    planes = similarity.hyperplanes(NEAR_DUP_PLANES, EMB_DIM, LSH_SEED)
-    return ["[" + ", ".join(repr(x) for x in p) + "]" for p in planes]
-
-
-_NEAR_DUP_LSH_SQL = (
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-b AS (SELECT vec_id, v, ("""
-    + " + ".join(
-        f"(CASE WHEN list_dot_product(v, {p}) >= 0 THEN {1 << j} ELSE 0 END)"
-        for j, p in enumerate(_near_dup_planes_sql())
-    )
-    + """)::BIGINT AS bucket FROM e)
-SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       round(list_dot_product(a.v, b.v)
-             / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 4) AS cos_sim
-FROM b a JOIN b b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-WHERE round(list_dot_product(a.v, b.v)
-            / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 4) >= 0.45"""
-)
-
-
-@register(
-    "llm_dedup_embedding_lsh",
-    _NEAR_DUP_LSH_SQL,
-    doc="Embedding near-dup via LSH bucket equality join (the 100 TB path "
-        "for llm_dedup_embedding): shuffle on (bucket, id) instead of an "
-        "O(n^2) cross product; exact-precision (cosine-verified), "
-        "approximate-recall (same-bucket candidates only).",
-    tags=("llm", "dedup", "similarity", "sketch"),
-)
-def llm_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return similarity.embedding_near_dup_lsh(
-        load_table(spark, sf_dir, "embeddings"),
-        threshold=0.45, num_planes=NEAR_DUP_PLANES, seed=LSH_SEED, dim=EMB_DIM,
-    )
 
 
 _CLUSTERS_SQL = (
@@ -750,74 +578,6 @@ def llm_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.repetition_score(load_table(spark, sf_dir, "documents"), n=3)
 
 
-@register(
-    "llm_knn_join",
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        p AS (SELECT a.vec_id AS qid, b.vec_id AS nid,
-                     round(list_dot_product(a.v, b.v)
-                           / (sqrt(list_dot_product(a.v, a.v))
-                              * sqrt(list_dot_product(b.v, b.v))), 4) AS cos_sim
-              FROM e a JOIN e b ON a.vec_id <> b.vec_id),
-        r AS (SELECT qid, nid, cos_sim,
-                     row_number() OVER (PARTITION BY qid
-                                        ORDER BY cos_sim DESC, nid) AS rank
-              FROM p)
-       SELECT qid, nid, cos_sim, rank FROM r WHERE rank <= 3""",
-    doc="All-pairs k-NN self-join (k=3): every vector's nearest "
-        "neighbours by cosine — the neighbourhood pass behind near-dup "
-        "clustering and diversity sampling. engine='auto' (the default) "
-        "runs the exact arrow GEMM while the corpus matrix is "
-        "broadcastable and routes to the LSH-candidate bucketed form "
-        "(llm_knn_join_bucketed) past 10M rows, so the operator never "
-        "collects an unbounded corpus to the driver "
-        "(operators/llm/similarity.py:knn_join).",
-    tags=("llm", "similarity", "topk"),
-)
-def llm_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return similarity.knn_join(load_table(spark, sf_dir, "embeddings"), k=3)
-
-
-def _knn_bucketed_sql() -> str:
-    planes = similarity.hyperplanes(NEAR_DUP_PLANES, EMB_DIM, LSH_SEED)
-    plane_lits = ["[" + ", ".join(repr(x) for x in p) + "]" for p in planes]
-    bucket = " + ".join(
-        f"(CASE WHEN list_dot_product(v, {p}) >= 0 THEN {1 << j} ELSE 0 END)"
-        for j, p in enumerate(plane_lits)
-    )
-    return f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-b AS (SELECT vec_id, v, ({bucket})::BIGINT AS bucket FROM e),
-p AS (SELECT a.vec_id AS qid, c.vec_id AS nid,
-             round(list_dot_product(a.v, c.v)
-                   / (sqrt(list_dot_product(a.v, a.v))
-                      * sqrt(list_dot_product(c.v, c.v))), 4) AS cos_sim
-      FROM b a JOIN b c ON a.bucket = c.bucket AND a.vec_id <> c.vec_id),
-r AS (SELECT qid, nid, cos_sim,
-             row_number() OVER (PARTITION BY qid
-                                ORDER BY cos_sim DESC, nid) AS rank
-      FROM p)
-SELECT qid, nid, cos_sim, rank FROM r WHERE rank <= 3"""
-
-
-@register(
-    "llm_knn_join_bucketed",
-    _knn_bucketed_sql(),
-    doc="The 100 TB shape of llm_knn_join: LSH-candidate approximate "
-        "k-NN. Candidates = same sign-bit bucket (3 planes / 8 buckets), "
-        "so the only joins are bucket equi-joins shuffled on (bucket, "
-        "id) — no cross join, no driver collect — and the per-query "
-        "top-k is a qid-partitioned row_number. Approximate recall by "
-        "construction (neighbour lists may be shorter than k); exact "
-        "precision (every emitted pair is cosine-verified) "
-        "(operators/llm/similarity.py:knn_join_bucketed).",
-    tags=("llm", "similarity", "topk", "sketch"),
-)
-def llm_knn_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return similarity.knn_join_bucketed(
-        load_table(spark, sf_dir, "embeddings"),
-        k=3, num_planes=NEAR_DUP_PLANES, seed=LSH_SEED, dim=EMB_DIM,
-    )
-
-
 _BM25_TERMS = ("vector", "stream", "merge")
 
 
@@ -863,38 +623,6 @@ def llm_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.bm25_search(
         load_table(spark, sf_dir, "documents"), list(_BM25_TERMS), k=10
     )
-
-
-@register(
-    "llm_quantize_int8",
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, len(embedding) AS dim
-                 FROM embeddings),
-       q AS (SELECT vec_id, v, dim,
-                    list_max(list_transform(v, x -> abs(x))) / 127.0 AS scale
-             FROM e),
-       r AS (SELECT vec_id, dim, scale,
-                    list_transform(v, x -> CASE WHEN scale = 0 THEN 0.0
-                                                ELSE round(x / scale) END) AS qv,
-                    v
-             FROM q)
-       SELECT vec_id, round(scale, 6) AS scale,
-              round(CASE WHEN scale = 0 THEN 0.0
-                         ELSE sqrt(list_sum(list_transform(
-                                  list_zip(v, qv),
-                                  p -> pow(p[1] - p[2] * scale, 2.0)))
-                              / dim::DOUBLE) END, 6) AS rmse,
-              len(list_filter(qv, x -> abs(x) = 127)) AS n_saturated""" + """
-       FROM r""",
-    doc="Symmetric int8 embedding quantization with per-vector "
-        "reconstruction RMSE and saturation count: the 4x index-compression "
-        "pass before ANN serving. Pure map-side array math (transform / "
-        "zip_with / sequential aggregate fold) — no shuffle at any scale; "
-        "the fold order is index order in both engines "
-        "(operators/llm/similarity.py:quantize_int8).",
-    tags=("llm", "similarity", "multimodal"),
-)
-def llm_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return similarity.quantize_int8(load_table(spark, sf_dir, "embeddings"))
 
 
 @register(

@@ -1,14 +1,6 @@
-"""Round-10 catalog: the three scale dials the r9 verdict named.
+"""Round-10 catalog: the scale dials the r9 verdict named (its graph-ANN
+build-reuse and index-append entries are in catalog_similarity.py).
 
-* ``llm_ann_graph_route_reuse`` — the graph-ANN BUILD/SEARCH split:
-  the r9 soak measured the neighbour-graph build at ~412 s for 500k
-  vectors while the beam search itself was nearly free, so the build
-  must be paid ONCE and amortized across query batches. The operator
-  is split into :func:`build_route_graph` + :func:`route_on_graph`
-  (operators/llm/similarity.py); this entry materializes ONE graph and
-  routes TWO query batches over it. The oracle unrolls BOTH walks over
-  one shared edge CTE — the same certify-the-traversal discipline as
-  llm_ann_graph_route.
 * ``llm_gzip_jsonl_capped`` / ``llm_gzip_quarantine_capped`` — the
   member-capped shard key applied to the gzip-JSONL container: the r9
   soak's one remaining uncapped fixture packed 20 x 25k-member blobs
@@ -24,7 +16,7 @@
   SemDeDup makes, mirrored exactly by the oracle.
 
 Reference parity note: the reference ETL (helium-arango-etl-lite) has
-none of these; they extend the north-star similarity + storage + join
+none of these; they extend the north-star storage + join
 families (SURVEY.md section 2.8).
 """
 
@@ -34,167 +26,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash32, hash32_oracle_sql
-from .catalog_round9 import (
-    _CAP_MEMBERS, _GR_BEAM, _GR_EDGE_K, _GR_EMOD, _GR_ENTRIES, _GR_HOPS,
-    _GR_K, _GR_QMOD, _GR_SEEDS, _gr_final_select, _gr_shared_ctes,
-    _gr_walk_ctes,
-)
+from .catalog_round9 import _CAP_MEMBERS
 from .registry import EVENTS_NORM, load_events, load_table, register
-
-# ---------------------------------------------------------------------------
-# graph-ANN build/search split: one build, many query batches
-# ---------------------------------------------------------------------------
-
-_GRR_SQL = (
-    _gr_shared_ctes()
-    + ","
-    + _gr_walk_ctes(0, "a")
-    + ","
-    + _gr_walk_ctes(1, "b")
-    + _gr_final_select("a", "0 AS batch, ")
-    + "\nUNION ALL"
-    + _gr_final_select("b", "1 AS batch, ")
-)
-
-
-@register(
-    "llm_ann_graph_route_reuse",
-    _GRR_SQL,
-    doc="Graph-ANN BUILD AMORTIZATION — the r9 soak pinned the cost "
-        "split: the neighbour-graph build is ~412 s at 500k vectors "
-        "while routing is nearly free, so a production index must be "
-        "built ONCE and serve many query batches. The operator is now "
-        "split (similarity.py:build_route_graph / route_on_graph): "
-        "this entry materializes one edge graph (eager localCheckpoint "
-        "— the persist a real deployment writes to storage) and routes "
-        f"TWO query batches over it (vec_id % {_GR_QMOD} == 0 and "
-        "== 1), unioned with a batch tag. The second batch re-plans "
-        "from the CHECKPOINTED edges RDD — zero LSH/bucket/top-k "
-        "re-computation (the measured x100 behaviour is in "
-        "SCALE_SOAK.md: second batch ~= search-only). The oracle "
-        "unrolls BOTH beam walks over ONE shared edge CTE, so the "
-        "driver hash certifies that both batches routed over the SAME "
-        "graph. SCALE: per-hop state is (Q0+Q1) x beam broadcast rows; "
-        "the build's 2 corpus scans happen once, not per batch "
-        "(operators/llm/similarity.py:build_route_graph).",
-    tags=("llm", "similarity", "topk", "graph", "scale"),
-)
-def llm_ann_graph_route_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.llm.similarity import build_route_graph, route_on_graph
-    from .catalog_llm import EMB_DIM, NEAR_DUP_PLANES
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    edges = build_route_graph(
-        emb, edge_k=_GR_EDGE_K, seeds=_GR_SEEDS,
-        num_planes=NEAR_DUP_PLANES, dim=EMB_DIM,
-    ).localCheckpoint(eager=True)  # the one materialized build
-    kw = dict(
-        k=_GR_K, hops=_GR_HOPS, beam=_GR_BEAM, n_entries=_GR_ENTRIES,
-        entry_mod=_GR_EMOD, query_mod=_GR_QMOD,
-    )
-    # Both query batches share ONE walk: every step of route_on_graph is
-    # partitioned by query_id, so routing {rem 0} u {rem 1} together is
-    # row-identical to two separate calls while paying the per-hop
-    # checkpoint/job overhead once (this entry was job-count-bound:
-    # 143 jobs for ~1k tiny tasks). The batch tag is recovered from the
-    # id: batch = query_id % QMOD, which is 0/1 exactly for the two rems.
-    b = route_on_graph(emb, edges, query_rem=(0, 1), **kw)
-    return b.select(
-        F.pmod(F.col("query_id"), F.lit(_GR_QMOD)).cast("int").alias("batch"),
-        "*",
-    )
-
-
-# ---------------------------------------------------------------------------
-# incremental graph-ANN index maintenance: append a batch, no rebuild
-# ---------------------------------------------------------------------------
-
-_APPEND_MOD = 10  # new batch = vec_id % 10 == 0 (10% ingest)
-
-
-def _ann_append_graph_parts() -> tuple[str, str]:
-    """(CTE head, union-select body) of the append-graph oracle —
-    shared between llm_ann_index_append (whose final select is the
-    edge list itself) and round 11's llm_ann_graph_persist (which
-    names the same union ``edges`` and unrolls a beam walk over it)."""
-    from .catalog_round9 import _gr_bucket_expr
-
-    cos = ("round(list_dot_product(a.v, c.v)"
-           " / (sqrt(list_dot_product(a.v, a.v))"
-           " * sqrt(list_dot_product(c.v, c.v))), 4)")
-    parts, sels = [], []
-    for t, seed in enumerate(_GR_SEEDS):
-        b = _gr_bucket_expr(seed)
-        parts.append(f"""
-bo{t} AS (SELECT vec_id, v, ({b})::BIGINT AS bucket FROM eo),
-ba{t} AS (SELECT vec_id, v, ({b})::BIGINT AS bucket FROM e),
-bn{t} AS (SELECT vec_id, v, ({b})::BIGINT AS bucket FROM en),
-op{t} AS (SELECT a.vec_id AS src, c.vec_id AS dst, {cos} AS cs
-        FROM bo{t} a JOIN bo{t} c
-          ON a.bucket = c.bucket AND a.vec_id <> c.vec_id),
-ok{t} AS (SELECT src, dst FROM (
-           SELECT src, dst, row_number() OVER (
-               PARTITION BY src ORDER BY cs DESC, dst) AS rk
-           FROM op{t}) WHERE rk <= {_GR_EDGE_K}),
-np{t} AS (SELECT a.vec_id AS src, c.vec_id AS dst, {cos} AS cs
-        FROM bn{t} a JOIN ba{t} c
-          ON a.bucket = c.bucket AND a.vec_id <> c.vec_id),
-nk{t} AS (SELECT src, dst FROM (
-           SELECT src, dst, row_number() OVER (
-               PARTITION BY src ORDER BY cs DESC, dst) AS rk
-           FROM np{t}) WHERE rk <= {_GR_EDGE_K})""")
-        sels.append(f"SELECT src, dst FROM ok{t}")
-        sels.append(f"SELECT src, dst FROM nk{t}")
-        sels.append(f"SELECT dst AS src, src AS dst FROM nk{t}")
-    head = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-eo AS (SELECT * FROM e WHERE vec_id % {_APPEND_MOD} != 0),
-en AS (SELECT * FROM e WHERE vec_id % {_APPEND_MOD} = 0),{",".join(parts)}"""
-    return head, " UNION ALL ".join(sels)
-
-
-def _ann_append_sql() -> str:
-    head, union_sel = _ann_append_graph_parts()
-    return f"""{head}
-SELECT DISTINCT src, dst FROM ({union_sel})"""
-
-
-@register(
-    "llm_ann_index_append",
-    _ann_append_sql(),
-    doc="INCREMENTAL ANN index maintenance — the ingest path a "
-        "production graph index runs, vs build_route_graph's full "
-        f"rebuild: a new batch (vec_id % {_APPEND_MOD} == 0, 10% of "
-        "the corpus) is linked into the OLD corpus's graph without "
-        "recomputing a single old-old edge. Contract: old edges = the "
-        "bucketed top-k build over the old subset; new out-edges = "
-        "each new vector's bucketed top-k among the FULL corpus (same "
-        "pinned planes — the asymmetric corpus= form of "
-        "knn_join_bucketed); back-links = their reverses, which is "
-        "what makes the new batch REACHABLE by later walks rather "
-        "than only able to leave. Intentionally differs from a "
-        "rebuild: old vectors keep their original neighbour lists (a "
-        "rebuild might evict an old neighbour for a closer new one) — "
-        "the standard freshness/cost trade of incremental index "
-        "maintenance, stated rather than hidden. COST: O(|new| x "
-        "bucket density) per ingest, never O(|old|^2) — continuous "
-        "ingest amortizes like build-once/route-many does for queries. "
-        "The oracle replays old build, asymmetric append, and "
-        "back-link insertion per plane table in pure SQL "
-        "(operators/llm/similarity.py:append_route_graph).",
-    tags=("llm", "similarity", "graph", "scale"),
-)
-def llm_ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.llm.similarity import append_route_graph
-    from .catalog_llm import EMB_DIM, NEAR_DUP_PLANES
-
-    return append_route_graph(
-        load_table(spark, sf_dir, "embeddings"), new_mod=_APPEND_MOD,
-        edge_k=_GR_EDGE_K, seeds=_GR_SEEDS,
-        num_planes=NEAR_DUP_PLANES, dim=EMB_DIM,
-    )
-
-
 
 # ---------------------------------------------------------------------------
 # member-capped gzip-JSONL shards (the r9 soak's last uncapped fixture)

@@ -1,5 +1,6 @@
-"""Round-10 widening: the ZIP container family, hybrid-retrieval rank
-fusion, and a retrieval-evaluation sweep.
+"""Round-10 widening: the ZIP container family, data-quality suites,
+unigram-LM segmentation and event readouts (its hybrid-retrieval rank
+fusion and retrieval-evaluation entries are in catalog_similarity.py).
 
 * ``llm_zip_shard_index`` / ``llm_zip_fetch`` / ``llm_zip_quarantine``
   — the THIRD shard container (after USTAR tar and concatenated-member
@@ -10,15 +11,6 @@ fusion, and a retrieval-evaluation sweep.
   limit) is rejected here by the container itself. STORED members keep
   payloads byte-addressable, so the tar family's range-read discipline
   carries over unchanged.
-* ``llm_rrf_fusion`` — reciprocal-rank fusion of a lexical (BM25) and a
-  vector (cosine) ranking: the score-calibration-free merge hybrid
-  retrieval actually ships, with contributions fixed-pointed per rank
-  so the fused score is an exact integer.
-* ``llm_eval_pr_at_k`` / ``llm_eval_ndcg`` — the eval readouts that
-  close the retrieval loop (rank -> fuse -> MEASURE): a binary
-  precision/recall@K sweep and a graded-relevance nDCG@K sweep whose
-  discount table is injected as identical literals into both engines
-  (no cross-engine transcendental).
 * ``dq_expectations`` — a declarative expectation suite (rule table ->
   pass/fail counts) folding all row-level rules for a table into ONE
   partial-aggregatable scan; complements dq_profile (stats) with
@@ -61,8 +53,8 @@ fusion, and a retrieval-evaluation sweep.
   the exact-match gate; windows partition by (type, hour).
 
 Reference parity note: the reference ETL (helium-arango-etl-lite) has
-none of these; they extend the north-star storage + similarity +
-evaluation + data-quality families (SURVEY.md section 2.8).
+none of these; they extend the north-star storage + evaluation +
+data-quality families (SURVEY.md section 2.8).
 """
 
 from __future__ import annotations
@@ -71,7 +63,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash32, hash32_oracle_sql
-from .catalog_llm import _BM25_TERMS, _bm25_sql
 from .catalog_round9 import _CAP_MEMBERS as _ZIP_CAP
 from .registry import load_table, register
 
@@ -228,161 +219,6 @@ def llm_zip_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# hybrid retrieval: reciprocal-rank fusion of BM25 and cosine rankings
-# ---------------------------------------------------------------------------
-
-_RRF_N = 30   # per-system candidate depth
-_RRF_K0 = 60  # the standard RRF dampening constant
-_RRF_K = 10
-
-
-def _rrf_sql() -> str:
-    cos = """
-SELECT e.vec_id AS doc_id,
-       round(list_dot_product(e.v, q.qv)
-             / (sqrt(list_dot_product(e.v, e.v))
-                * sqrt(list_dot_product(q.qv, q.qv))), 4) AS cos_sim
-FROM (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings) e,
-     (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0) q
-WHERE e.vec_id <> 0
-ORDER BY cos_sim DESC, e.vec_id LIMIT {n}""".format(n=_RRF_N)
-    return f"""
-WITH lexs AS ({_bm25_sql(_RRF_N)}),
-lex AS (SELECT doc_id,
-               row_number() OVER (ORDER BY bm25 DESC, doc_id) AS rank
-        FROM lexs),
-vecs AS ({cos}),
-vec AS (SELECT doc_id,
-               row_number() OVER (ORDER BY cos_sim DESC, doc_id) AS rank
-        FROM vecs),
-allc AS (SELECT doc_id, (1000000000 // ({_RRF_K0} + rank))::BIGINT
-                  AS contrib FROM lex
-         UNION ALL
-         SELECT doc_id, (1000000000 // ({_RRF_K0} + rank))::BIGINT
-                  AS contrib FROM vec)
-SELECT doc_id, count(*)::BIGINT AS n_systems, sum(contrib)::BIGINT AS rrf9
-FROM allc GROUP BY doc_id
-ORDER BY rrf9 DESC, doc_id LIMIT {_RRF_K}"""
-
-
-@register(
-    "llm_rrf_fusion",
-    _rrf_sql(),
-    doc="Hybrid retrieval by reciprocal-rank fusion: the BM25 top-30 "
-        "(lexical) and the cosine top-30 to query vector 0 (dense) "
-        "merge WITHOUT score calibration as sum of 1/(60 + rank) — "
-        "the fusion step a hybrid search or hard-negative-mining "
-        "pipeline runs over its candidate generators. Contributions "
-        "are fixed-pointed per (system, rank) as floor(1e9/(60+rank)) "
-        "BEFORE summing, so the fused score is an exact integer on "
-        "both engines. SCALE: each ranker is the already-certified "
-        "shuffle-free scan + TakeOrdered (llm_bm25_search / "
-        "llm_topk_cosine); fusion itself touches only the top-N lists "
-        "— broadcast-sized at ANY corpus size, rank windows run on 30 "
-        "rows, never the corpus. The oracle replays both rankers and "
-        "the integer fusion in one chain "
-        "(operators/llm/similarity.py:rrf_fuse).",
-    tags=("llm", "similarity", "text", "topk"),
-)
-def llm_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.llm import similarity, text
-
-    docs = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings")
-    lex = text.bm25_search(docs, list(_BM25_TERMS), k=_RRF_N)
-    # rank windows run over the top-N result (<= 30 rows), not the corpus
-    lexr = lex.select(
-        "doc_id",
-        F.row_number()
-        .over(Window.orderBy(F.desc("bm25"), F.asc("doc_id")))
-        .alias("rank"),
-    )
-    vec = similarity.cosine_topk(emb, query_id=0, k=_RRF_N)
-    vecr = vec.select(
-        F.col("vec_id").alias("doc_id"),
-        F.row_number()
-        .over(Window.orderBy(F.desc("cos_sim"), F.asc("vec_id")))
-        .alias("rank"),
-    )
-    return similarity.rrf_fuse([lexr, vecr], k0=_RRF_K0, k=_RRF_K)
-
-
-# ---------------------------------------------------------------------------
-# retrieval evaluation: precision@K / recall@K sweep
-# ---------------------------------------------------------------------------
-
-_PR_MAX_K = 100
-_PR_STEP = 10
-_PR_LABEL = 1  # "relevant" = embedding label 1
-
-
-def _pr_at_k_sql() -> str:
-    return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-s AS (SELECT e.vec_id,
-             round(list_dot_product(e.v, q.qv)
-                   / (sqrt(list_dot_product(e.v, e.v))
-                      * sqrt(list_dot_product(q.qv, q.qv))), 4) AS cos_sim
-      FROM e, q WHERE e.vec_id <> 0),
-r AS (SELECT vec_id,
-             row_number() OVER (ORDER BY cos_sim DESC, vec_id) AS rank
-      FROM s),
-m AS (SELECT r.rank,
-             CASE WHEN l.label = {_PR_LABEL} THEN 1 ELSE 0 END AS rel
-      FROM r JOIN embeddings l USING (vec_id)
-      WHERE r.rank <= {_PR_MAX_K}),
-run AS (SELECT rank, sum(rel) OVER (ORDER BY rank)::BIGINT AS tp FROM m),
-np AS (SELECT count(*)::BIGINT AS n_pos FROM embeddings
-       WHERE label = {_PR_LABEL} AND vec_id <> 0)
-SELECT rank AS k, tp,
-       floor(tp * 1000000.0 / rank + 0.5)::BIGINT AS precision6,
-       floor(tp * 1000000.0 / n_pos + 0.5)::BIGINT AS recall6
-FROM run, np
-WHERE rank % {_PR_STEP} = 0
-ORDER BY k"""
-
-
-@register(
-    "llm_eval_pr_at_k",
-    _pr_at_k_sql(),
-    doc=f"Precision@K / recall@K sweep (K = {_PR_STEP}..{_PR_MAX_K}) of "
-        "the cosine ranking to query vector 0 against the embedding "
-        f"labels (relevant = label {_PR_LABEL}) — the eval readout that "
-        "closes the retrieval loop: rank (llm_topk_cosine), fuse "
-        "(llm_rrf_fusion), MEASURE. tp@K is a running sum over the "
-        f"top-{_PR_MAX_K} list only — the window runs on "
-        f"{_PR_MAX_K} rows by construction, never the corpus (the "
-        "ranked list is a TakeOrdered output), and the positive total "
-        "is one global aggregate broadcast back. Ratios are "
-        "fixed-pointed to 1e-6 AFTER the integer counts, so both "
-        "engines agree exactly "
-        "(operators/llm/similarity.py:precision_recall_at_k).",
-    tags=("llm", "similarity", "evaluation", "quality"),
-)
-def llm_eval_pr_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.llm import similarity
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    ranked = similarity.cosine_topk(
-        emb, query_id=0, k=_PR_MAX_K
-    ).select(
-        "vec_id",
-        F.row_number()
-        .over(Window.orderBy(F.desc("cos_sim"), F.asc("vec_id")))
-        .alias("rank"),
-    )
-    # exclude the query vector: it can never be retrieved, so counting
-    # it in the recall denominator would cap recall below 1 (mirrors
-    # llm_eval_ndcg's gain-pool handling)
-    positives = emb.filter(
-        (F.col("label") == _PR_LABEL) & (F.col("vec_id") != 0)
-    ).select("vec_id")
-    cutoffs = list(range(_PR_STEP, _PR_MAX_K + 1, _PR_STEP))
-    return similarity.precision_recall_at_k(ranked, positives, cutoffs)
-
-
-# ---------------------------------------------------------------------------
 # declarative data-quality expectations: rules evaluated in ONE scan/table
 # ---------------------------------------------------------------------------
 
@@ -497,100 +333,6 @@ def dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
         ") AS (rule_id, n_checked, n_failed)"
     )
     return d_rows.unionByName(o_rows)
-
-
-# ---------------------------------------------------------------------------
-# graded ranking quality: nDCG@K with an injected-literal discount table
-# ---------------------------------------------------------------------------
-
-_NDCG_MAX_K = 100
-_NDCG_STEP = 10
-
-
-def _ndcg_discounts() -> list[tuple[int, float]]:
-    """rank -> 1/log2(rank+1), computed ONCE in Python and injected as
-    literals into BOTH engines: repr() round-trips doubles exactly, so
-    Spark and DuckDB multiply by bit-identical constants — no
-    cross-engine transcendental (JVM log vs libm log) in either plan,
-    the boundary-flip class the weighted-sample advice flagged removed
-    at the source rather than 'made unlikely'."""
-    import math
-
-    return [
-        (r, 1.0 / math.log2(r + 1)) for r in range(1, _NDCG_MAX_K + 1)
-    ]
-
-
-def _ndcg_sql() -> str:
-    disc_rows = ", ".join(f"({r}, {d!r})" for r, d in _ndcg_discounts())
-    return f"""
-WITH disc(rank, disc) AS (VALUES {disc_rows}),
-e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-s AS (SELECT e.vec_id, e.label,
-             round(list_dot_product(e.v, q.qv)
-                   / (sqrt(list_dot_product(e.v, e.v))
-                      * sqrt(list_dot_product(q.qv, q.qv))), 4) AS cos_sim
-      FROM e, q WHERE e.vec_id <> 0),
-r AS (SELECT label,
-             row_number() OVER (ORDER BY cos_sim DESC, vec_id) AS rank
-      FROM s),
-a AS (SELECT r.rank,
-             floor(1000000.0 * r.label * d.disc + 0.5)::BIGINT AS c6
-      FROM r JOIN disc d ON d.rank = r.rank
-      WHERE r.rank <= {_NDCG_MAX_K}),
-i0 AS (SELECT label,
-              row_number() OVER (ORDER BY label DESC, vec_id) AS rank
-       FROM e WHERE vec_id <> 0),
-i AS (SELECT i0.rank,
-             floor(1000000.0 * i0.label * d.disc + 0.5)::BIGINT AS c6
-      FROM i0 JOIN disc d ON d.rank = i0.rank
-      WHERE i0.rank <= {_NDCG_MAX_K}),
-run AS (SELECT a.rank,
-               sum(a.c6) OVER (ORDER BY a.rank)::BIGINT AS dcg6,
-               sum(i.c6) OVER (ORDER BY a.rank)::BIGINT AS idcg6
-        FROM a JOIN i ON i.rank = a.rank)
-SELECT rank AS k, dcg6, idcg6,
-       floor(1000000.0 * dcg6 / idcg6 + 0.5)::BIGINT AS ndcg6
-FROM run WHERE rank % {_NDCG_STEP} = 0 ORDER BY k"""
-
-
-@register(
-    "llm_eval_ndcg",
-    _ndcg_sql(),
-    doc=f"nDCG@K sweep (K = {_NDCG_STEP}..{_NDCG_MAX_K}) of the cosine "
-        "ranking to query vector 0 with GRADED relevance (the 0-9 "
-        "embedding labels as gains) — the ranking-quality readout "
-        "P/R@K can't give (llm_eval_pr_at_k sees only binary hits). "
-        "DETERMINISM: the 1/log2(rank+1) discount table is computed "
-        "once in Python and injected as repr-round-tripped literals "
-        "into BOTH engines, so neither plan evaluates a transcendental "
-        "— the JVM-vs-libm 1-ulp boundary-flip class is removed at the "
-        "source; per-rank contributions are fixed-pointed BEFORE "
-        "summing, making DCG/IDCG exact integer sums and nDCG an "
-        "integer-ratio readout. SCALE: actual and ideal rankings are "
-        f"both TakeOrdered top-{_NDCG_MAX_K}; the discount join is a "
-        "100-row broadcast; running sums window over 100 rows, never "
-        "the corpus (operators/llm/similarity.py:ndcg_at_k).",
-    tags=("llm", "similarity", "evaluation", "quality"),
-)
-def llm_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.llm import similarity
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    ranked = similarity.cosine_topk(
-        emb, query_id=0, k=_NDCG_MAX_K
-    ).select(
-        "vec_id",
-        F.row_number()
-        .over(Window.orderBy(F.desc("cos_sim"), F.asc("vec_id")))
-        .alias("rank"),
-    )
-    # exclude the query vector from the gain pool, mirroring the oracle's
-    # ideal ranking (the query can't be its own retrieval result)
-    labels = emb.filter(F.col("vec_id") != 0).select("vec_id", "label")
-    cutoffs = list(range(_NDCG_STEP, _NDCG_MAX_K + 1, _NDCG_STEP))
-    return similarity.ndcg_at_k(ranked, labels, _ndcg_discounts(), cutoffs)
 
 
 # ---------------------------------------------------------------------------

@@ -1,14 +1,7 @@
-"""Round-10 widening (session 3, sixth wave): random projection, timed
-funnels, uncertainty sampling, thumbnail resize and k-center coresets.
+"""Round-10 widening (session 3, sixth wave): timed funnels, uncertainty
+sampling and thumbnail resize (its random-projection and k-center entries
+are in catalog_similarity.py).
 
-* ``llm_random_projection`` — Johnson-Lindenstrauss dimensionality
-  reduction: project 64-d embeddings onto 16 seeded random hyperplanes
-  (the SAME 6dp-literal matrix discipline as the LSH entries, so both
-  engines fold identical doubles in identical order) and MEASURE the
-  cosine distortion over a deterministic pair sample — the
-  cost-reduction step before ANN at scale, shipped with its own error
-  readout instead of a trust-me. Map-only: no shuffle anywhere except
-  the 100-pair sample join.
 * ``events_funnel_timed`` — STRICT ordered funnel with per-step time
   bounds (signup -> click within 1h -> purchase within 1h): the
   MATCH_RECOGNIZE-style sequential pattern agg_event_funnel's
@@ -26,13 +19,9 @@ funnels, uncertainty sampling, thumbnail resize and k-center coresets.
   REAL decoded PNGs, with the oracle predicting the resized
   per-channel sums straight from the source text at the sampled
   pixel indices.
-* ``llm_kcenter_coreset`` — Gonzalez farthest-point k-center
-  selection: each round one corpus scan against the broadcast
-  selected set; the maxsim column is the coverage-radius curve and
-  the oracle unrolls every greedy round.
 
 Reference parity note: the reference ETL (helium-arango-etl-lite) has
-none of these; they extend the north-star similarity/analytics/graph
+none of these; they extend the north-star analytics/multimodal
 families (SURVEY.md section 2.8).
 """
 
@@ -41,98 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.llm.similarity import cosine, dot, hyperplanes
 from .registry import EVENTS_NORM, load_events, load_table, register
-
-# ---------------------------------------------------------------------------
-# Johnson-Lindenstrauss projection + distortion readout
-# ---------------------------------------------------------------------------
-
-_JL_OUT_DIM = 16
-_JL_IN_DIM = 64
-_JL_SEED = 23
-_JL_PAIRS = 100  # deterministic sample: (2i, 2i+1) for i < 100
-
-_JL_COS4 = (
-    "round(list_dot_product({a}, {b}) / "
-    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 4)"
-)
-
-
-def _jl_planes() -> list[list[float]]:
-    return hyperplanes(_JL_OUT_DIM, _JL_IN_DIM, _JL_SEED)
-
-
-def _jl_sql() -> str:
-    planes = _jl_planes()
-    proj = ", ".join(
-        "list_dot_product(v, ["
-        + ", ".join(repr(x) for x in p)
-        + "])"
-        for p in planes
-    )
-    return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-p AS (SELECT vec_id, v, [{proj}] AS pv FROM e
-      WHERE vec_id < {2 * _JL_PAIRS})
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       {_JL_COS4.format(a="a.v", b="b.v")} AS cos_orig,
-       {_JL_COS4.format(a="a.pv", b="b.pv")} AS cos_proj,
-       round(abs({_JL_COS4.format(a="a.v", b="b.v")}
-                 - {_JL_COS4.format(a="a.pv", b="b.pv")}), 4) AS err
-FROM p a JOIN p b ON b.vec_id = a.vec_id + 1 AND a.vec_id % 2 = 0"""
-
-
-@register(
-    "llm_random_projection",
-    _jl_sql(),
-    doc=f"Johnson-Lindenstrauss random projection: {_JL_IN_DIM}-d "
-        f"embeddings project onto {_JL_OUT_DIM} seeded hyperplanes "
-        "(6dp literals injected identically into both engines — the "
-        "LSH-planes discipline — so each projected coordinate is the "
-        "same sequential fold of the same doubles), and the entry "
-        "MEASURES what the reduction costs: cosine before vs after "
-        f"over {_JL_PAIRS} deterministic (2i, 2i+1) pairs, with the "
-        "absolute error as a column. The compute-reduction step "
-        "before ANN at 100 TB (a 4x narrower vector is 4x less "
-        "scan/shuffle in every downstream similarity op) shipped "
-        "with its error budget instead of a trust-me. The projection "
-        "itself is MAP-ONLY whole-stage-codegen arithmetic; only the "
-        "pair sample joins.",
-    tags=("llm", "similarity", "eval"),
-)
-def llm_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    planes = _jl_planes()
-    v = F.col("embedding").cast("array<double>")
-    pv = F.array(
-        *[
-            dot(v, F.array(*[F.lit(x) for x in p]))
-            for p in planes
-        ]
-    )
-    p = emb.filter(F.col("vec_id") < 2 * _JL_PAIRS).select(
-        "vec_id", v.alias("v"), pv.alias("pv")
-    )
-    a = p.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("v").alias("va"), F.col("pv").alias("pa"),
-    ).filter(F.col("id_a") % 2 == 0)
-    b = p.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("v").alias("vb"), F.col("pv").alias("pb"),
-    )
-    co = F.round(cosine(F.col("va"), F.col("vb")), 4)
-    cp = F.round(cosine(F.col("pa"), F.col("pb")), 4)
-    return (
-        a.join(b, F.col("id_b") == F.col("id_a") + 1)
-        .select(
-            "id_a", "id_b",
-            co.alias("cos_orig"), cp.alias("cos_proj"),
-            F.round(F.abs(co - cp), 4).alias("err"),
-        )
-    )
-
 
 # ---------------------------------------------------------------------------
 # strict ordered funnel with per-step time bounds (two stacked carries)
@@ -359,78 +257,4 @@ def llm_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return mm.png_resize_stats(
         mm.encode_png_from_text(docs), out_h=_RSZ_OUT, out_w=_RSZ_OUT
-    )
-
-
-# ---------------------------------------------------------------------------
-# k-center coreset: Gonzalez farthest-point traversal
-# ---------------------------------------------------------------------------
-
-_KC_K = 6
-
-_KC_COS4 = (
-    "round(list_dot_product({a}, {b}) / "
-    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 4)"
-)
-
-
-def _kcenter_sql() -> str:
-    head = f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-s1 AS (SELECT vec_id, v, 1.0 AS ms FROM e WHERE vec_id = 0)"""
-    parts = [head]
-    prev = "s1"
-    for r in range(2, _KC_K + 1):
-        parts.append(f""",
-r{r} AS (SELECT e.vec_id, e.v,
-               max({_KC_COS4.format(a="e.v", b="s.v")}) AS ms
-        FROM e JOIN {prev} s ON e.vec_id <> s.vec_id
-        WHERE e.vec_id NOT IN (SELECT vec_id FROM {prev})
-        GROUP BY e.vec_id, e.v
-        ORDER BY ms, e.vec_id LIMIT 1),
-s{r} AS (SELECT vec_id, v, ms FROM {prev}
-         UNION ALL SELECT vec_id, v, ms FROM r{r})""")
-        prev = f"s{r}"
-    ranked = " UNION ALL ".join(
-        [f"SELECT 1 AS rank, vec_id, round(ms, 4) AS maxsim FROM s1"]
-        + [
-            f"SELECT {r} AS rank, vec_id, round(ms, 4) AS maxsim FROM r{r}"
-            for r in range(2, _KC_K + 1)
-        ]
-    )
-    return "".join(parts) + "\n" + ranked
-
-
-@register(
-    "llm_kcenter_coreset",
-    _kcenter_sql(),
-    doc=f"k-center coreset selection by farthest-point traversal "
-        "(Gonzalez 1985; the geometric data-selection rule modern "
-        "embedding-coverage samplers build on): starting from vector "
-        f"0, each of {_KC_K - 1} rounds adds the point whose maximum "
-        "cosine to the already-selected set is SMALLEST — the point "
-        "the current coreset covers worst — so the selected set "
-        "spreads to cover the embedding space and the final maxsim "
-        "column IS the coverage radius curve. The geometry-based "
-        "complement to llm_uncertainty_sample's model-based picks. "
-        "Each round is ONE corpus scan joined to the broadcast "
-        "selected set (<= 6 rows) with a TakeOrdered(1) — the scan "
-        "count is k, never k*n pairs materialized. Similarities "
-        "round to 4dp before the argmin on both engines; ties break "
-        "on vec_id. The oracle unrolls every round, so the greedy "
-        "recursion is verified, not just the final membership. For "
-        "large k, the scan count is the dial — delivered in round 11 "
-        "as llm_kcenter_coreset_batched (m picks per scan, "
-        "ceil((k-1)/m) scans; operators/llm/similarity.py:"
-        "kcenter_coreset is the shared traversal, this entry is its "
-        "m=1 form).",
-    tags=("llm", "similarity", "sampling"),
-)
-def llm_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.llm.similarity import kcenter_coreset
-
-    # m=1 IS pure Gonzalez — the traversal loop lives in similarity.py
-    # since round 11 so the batched entry (llm_kcenter_coreset_batched,
-    # catalog_round11.py) and this one share one implementation
-    return kcenter_coreset(
-        load_table(spark, sf_dir, "embeddings"), k=_KC_K, m=1
     )

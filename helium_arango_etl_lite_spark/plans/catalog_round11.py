@@ -1,18 +1,6 @@
-"""Round-11 catalog: the two engineering items the r10 verdict named
-(its other asks were re-verification, bench re-baselining, and
-bookkeeping — not operators).
-
-* ``llm_kcenter_coreset_batched`` — the batching dial
-  ``llm_kcenter_coreset``'s own docstring named: Gonzalez farthest-point
-  traversal costs exactly one corpus scan per selected point, so a
-  k=1024 coreset is 1024 scans; picking the m most-uncovered points per
-  scan (maximin against the PRE-scan selected set, recomputed between
-  scans) cuts that to ceil((k-1)/m) scans. The price is the standard
-  batched-farthest-point relaxation: members of one batch are chosen
-  without seeing each other, so within-batch picks can be mutually
-  close where pure Gonzalez would have spread them — stated, not
-  hidden; the oracle unrolls every scan so the exact batched recursion
-  is certified, not just the final membership.
+"""Round-11 catalog: vocabulary drift, the tolerant as-of join and the
+CUPED readout (its batched k-center and persisted graph-ANN entries are
+in catalog_similarity.py).
 
 * ``llm_vocab_kl_drift`` — the first new consumer of
   ``functions/detln.py`` (built this round for the zipf fix): per-lang
@@ -23,219 +11,17 @@ bookkeeping — not operators).
   pipeline runs before trusting a split, complementing llm_psi_drift's
   binned-metric form with a vocabulary-level one.
 
-* ``llm_ann_graph_persist`` — the deployment story for the graph-ANN
-  index (r10 verdict item 6): ``llm_ann_graph_route_reuse`` amortizes
-  the build within one session via an eager checkpoint, but a real
-  pipeline builds nightly and routes all day, which requires the index
-  to live in STORAGE. This entry (1) BUILDS the neighbour graph over
-  the old corpus, (2) PERSISTS it through ``operators/storage.py`` as
-  a src-bucketed sorted table plus the entry-point sample as a second
-  table, (3) APPENDS an ingest batch's incremental edges (new
-  out-edges + back-links only — the ``llm_ann_index_append`` contract,
-  written with ``mode="append"`` into the same bucketed table), then
-  (4) READS THE TABLES BACK and routes a query batch over the read
-  edges via ``route_on_graph(entries=...)``. The oracle rebuilds the
-  identical appended graph in SQL (shared generator with
-  ``llm_ann_index_append``) and unrolls the full beam walk over it, so
-  the driver hash certifies build→persist→append→route end to end.
-
 Reference parity note: the reference ETL (helium-arango-etl-lite) has
-none of these; they extend the north-star similarity family
+none of these; they extend the north-star text and analytics families
 (SURVEY.md section 2.8, BASELINE.json north star).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.graph_algorithms import undirected
-from .catalog_round9 import (
-    _GR_BEAM, _GR_EDGE_K, _GR_EMOD, _GR_ENTRIES, _GR_HOPS, _GR_K,
-    _GR_QMOD, _GR_SEEDS, _gr_final_select, _gr_walk_ctes,
-)
-from .catalog_round10 import _APPEND_MOD, _ann_append_graph_parts
 from .registry import load_table, register
-
-# ---------------------------------------------------------------------------
-# batched k-center coreset: m farthest points per corpus scan
-# ---------------------------------------------------------------------------
-
-_KCB_K = 7   # total coreset size: 1 seed + _KCB_SCANS * _KCB_M picks
-_KCB_M = 3   # picks per scan
-_KCB_SCANS = (_KCB_K - 1) // _KCB_M  # 2 scans (vs 6 for unbatched k=7)
-
-_KCB_COS4 = (
-    "round(list_dot_product({a}, {b}) / "
-    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 4)"
-)
-
-
-def _kcenter_batched_sql() -> str:
-    """Every scan unrolled: batch b selects the _KCB_M unselected
-    points with the smallest max-cosine to the selected set AS OF the
-    scan start (ties on vec_id); ranks within a batch follow the same
-    (ms, vec_id) order, offset by the prior selection count."""
-    head = """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-s1 AS (SELECT vec_id, v, 1.0 AS ms FROM e WHERE vec_id = 0)"""
-    parts = [head]
-    prev = "s1"
-    for b in range(1, _KCB_SCANS + 1):
-        parts.append(f""",
-r{b} AS (SELECT e.vec_id, e.v,
-               max({_KCB_COS4.format(a="e.v", b="s.v")}) AS ms
-        FROM e JOIN {prev} s ON e.vec_id <> s.vec_id
-        WHERE e.vec_id NOT IN (SELECT vec_id FROM {prev})
-        GROUP BY e.vec_id, e.v
-        ORDER BY ms, e.vec_id LIMIT {_KCB_M}),
-s{b + 1} AS (SELECT vec_id, v, ms FROM {prev}
-         UNION ALL SELECT vec_id, v, ms FROM r{b})""")
-        prev = f"s{b + 1}"
-    ranked = " UNION ALL ".join(
-        ["SELECT 1 AS rank, vec_id, round(ms, 4) AS maxsim FROM s1"]
-        + [
-            f"SELECT ({1 + (b - 1) * _KCB_M} + row_number() OVER "
-            f"(ORDER BY ms, vec_id))::INTEGER AS rank, vec_id, "
-            f"round(ms, 4) AS maxsim FROM r{b}"
-            for b in range(1, _KCB_SCANS + 1)
-        ]
-    )
-    return "".join(parts) + "\n" + ranked
-
-
-@register(
-    "llm_kcenter_coreset_batched",
-    _kcenter_batched_sql(),
-    doc=f"BATCHED k-center coreset — the scan-count dial "
-        "llm_kcenter_coreset's docstring reserved: instead of one "
-        f"corpus scan per selected point, each of {_KCB_SCANS} scans "
-        f"selects the {_KCB_M} unselected points whose maximum cosine "
-        "to the selected-set-at-scan-start is smallest (ties on "
-        f"vec_id), so a {_KCB_K}-point coreset costs "
-        f"ceil(({_KCB_K}-1)/{_KCB_M}) = {_KCB_SCANS} scans instead of "
-        f"{_KCB_K - 1} — at k=1024, m=32 that is 32 scans, not 1023. "
-        "Relaxation stated plainly: batch members are chosen blind to "
-        "each other (pure Gonzalez would re-score after every pick), "
-        "so one batch can contain mutually-close points; coverage "
-        "radius is >= the unbatched curve's. Each scan is one corpus "
-        "pass joined to the broadcast selected set (<= k rows) ending "
-        "in a TakeOrdered(m); never a k*n materialization. The oracle "
-        "unrolls every scan and every within-batch rank, so the exact "
-        "batched recursion is what the driver hash certifies "
-        "(plans/catalog_round11.py).",
-    tags=("llm", "similarity", "sampling", "scale"),
-)
-def llm_kcenter_coreset_batched(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from ..operators.llm.similarity import kcenter_coreset
-
-    return kcenter_coreset(
-        load_table(spark, sf_dir, "embeddings"), k=_KCB_K, m=_KCB_M
-    )
-
-
-# ---------------------------------------------------------------------------
-# persisted graph-ANN index: build -> storage -> append -> read -> route
-# ---------------------------------------------------------------------------
-
-_PERSIST_BUCKETS = 8
-
-
-def _ann_persist_sql() -> str:
-    head, union_sel = _ann_append_graph_parts()
-    return (
-        head
-        + f""",
-edges AS (SELECT DISTINCT src, dst FROM ({union_sel})),
-nodes AS (SELECT vec_id AS nid, v AS nv,
-                 sqrt(list_dot_product(v, v)) AS nn FROM e),
-ent AS (SELECT vec_id AS nid FROM e WHERE vec_id % {_GR_EMOD} = 0),"""
-        + _gr_walk_ctes(0, "p")
-        + _gr_final_select("p")
-    )
-
-
-@register(
-    "llm_ann_graph_persist",
-    _ann_persist_sql(),
-    doc="PERSISTED graph-ANN index — the build-nightly/route-all-day "
-        "deployment (r10 verdict item 6), extending "
-        "llm_ann_graph_route_reuse's within-session checkpoint to real "
-        "storage: (1) build the neighbour graph over the old corpus "
-        f"(vec_id % {_APPEND_MOD} != 0); (2) persist it via "
-        "operators/storage.write_bucketed as a src-bucketed sorted "
-        "external table (bucketing pre-hashes the per-hop frontier "
-        "equi-join key; sorting buys row-group skipping on src) plus "
-        "the entry-point sample as a second persisted table; (3) link "
-        "an ingest batch with INCREMENTAL edges only — each new "
-        "vector's bucketed top-k over the full corpus plus back-links, "
-        "never an old-old edge, the llm_ann_index_append contract — "
-        "appended into the SAME bucketed table with mode='append'; "
-        "(4) read both tables back and beam-route a query batch "
-        "(vec_id % "
-        f"{_GR_QMOD} == 0) over the READ edges via "
-        "route_on_graph(entries=...). The oracle rebuilds the "
-        "identical appended graph (generator shared with "
-        "llm_ann_index_append) and unrolls the full walk over it, so "
-        "one driver hash certifies build->persist->append->route. "
-        "SCALE: the persisted table is O(corpus x edge_k) rows written "
-        "once per build + O(batch) per ingest; routing reads it "
-        "bucket-pruned per hop instead of recomputing "
-        f"(~412 s build vs ~free search at 500k vectors, r9 soak).",
-    tags=("llm", "similarity", "graph", "storage", "scale"),
-)
-def llm_ann_graph_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.llm.similarity import (
-        build_route_graph, lsh_edges, route_on_graph,
-    )
-    from ..operators.storage import write_bucketed
-    from .replay import scratch_dir
-    from .catalog_llm import EMB_DIM, NEAR_DUP_PLANES
-
-    scratch = scratch_dir("ann_graph_persist")
-    emb = load_table(spark, sf_dir, "embeddings")
-    old = emb.filter(F.col("vec_id") % _APPEND_MOD != 0)
-    new = emb.filter(F.col("vec_id") % _APPEND_MOD == 0)
-
-    # (1) BUILD over the old corpus, (2) PERSIST edges + entry sample
-    built = build_route_graph(
-        old, edge_k=_GR_EDGE_K, seeds=_GR_SEEDS,
-        num_planes=NEAR_DUP_PLANES, dim=EMB_DIM,
-    )
-    write_bucketed(
-        built, "sg_ann_edges", ["src"], num_buckets=_PERSIST_BUCKETS,
-        sort_cols=["src"], mode="overwrite",
-        path=os.path.join(scratch, "edges"),
-    )
-    ent = emb.filter(F.col("vec_id") % _GR_EMOD == 0).select(
-        F.col("vec_id").alias("nid")
-    )
-    ent.write.mode("overwrite").parquet(os.path.join(scratch, "entries"))
-
-    # (3) APPEND the ingest batch's incremental edges (new out-edges +
-    # back-links; disjoint from the old-old edges by construction, so
-    # append + per-increment distinct == the oracle's global DISTINCT)
-    increment = undirected(lsh_edges(
-        new, _GR_EDGE_K, _GR_SEEDS, NEAR_DUP_PLANES, EMB_DIM, corpus=emb,
-    ))
-    write_bucketed(
-        increment, "sg_ann_edges", ["src"], num_buckets=_PERSIST_BUCKETS,
-        sort_cols=["src"], mode="append",
-        path=os.path.join(scratch, "edges"),
-    )
-
-    # (4) READ BACK + ROUTE: the walk plans against the stored table
-    edges_read = spark.table("sg_ann_edges")
-    ent_read = spark.read.parquet(os.path.join(scratch, "entries"))
-    return route_on_graph(
-        emb, edges_read, k=_GR_K, hops=_GR_HOPS, beam=_GR_BEAM,
-        n_entries=_GR_ENTRIES, query_mod=_GR_QMOD, query_rem=0,
-        entries=ent_read,
-    )
-
 
 # ---------------------------------------------------------------------------
 # vocabulary KL drift between splits: exact integer KL via shared detln

@@ -1,27 +1,7 @@
-"""Round-12 catalog: the persisted IVF-PQ index (r11 verdict item 7; its
-item 8, the streaming Count-Min Sketch, is ``stream_heavy_hitters_replay``
-in catalog_stream.py).
-
-* ``llm_ann_ivf_pq_persist`` — the persisted-index lifecycle for the
-  IVF-PQ family (r11 verdict item 7): ``llm_ann_ivf_pq`` re-derives its
-  centroids and codebook on every call, which is fine for one query but
-  wrong for the build-nightly/search-all-day deployment the graph-ANN
-  family already certifies (``llm_ann_graph_persist``). This entry
-  (1) TRAINS the IVF centroids (deterministic md5-ordered fixed-K seed
-  set, Lloyd-refined since round 13 — r12 verdict item 3 — so cell
-  sizes are balanced, not sample-luck) and the PQ codebook,
-  and ENCODES the corpus to ``(vec_id, cell, code_0..3)``; (2) PERSISTS
-  the encoded corpus through ``operators/storage.write_bucketed``
-  PARTITIONED BY cell (probe filters prune whole cell directories at
-  plan time) and BUCKETED BY vec_id (fetch/rerank joins stay
-  shuffle-free), plus the centroids and codebook as small side tables;
-  (3) LOADS everything back; (4) SEARCHES a query batch using ONLY the
-  read-back artifacts: probe the nprobe nearest cells per query against
-  the read centroids, build per-query ADC lookup tables from the read
-  codebook, scan only the probed partitions, and rank by asymmetric
-  distance. The oracle recomputes train->encode->probe->ADC-search in
-  SQL (block/LUT generators shared with ``llm_ann_ivf_pq``), so one
-  driver hash certifies the whole lifecycle.
+"""Round-12 catalog: the nearest-direction as-of join and RFM segments
+(its persisted IVF-PQ entries are in catalog_similarity.py; the
+streaming Count-Min Sketch, ``stream_heavy_hitters_replay``, is in
+catalog_stream.py).
 
 Reference parity note: the reference ETL (follower.py:55-294) maintains
 no indexes, sketches, or sessions; these entries are scale-path
@@ -30,200 +10,10 @@ operators the 100 TB deployment needs beyond the reference's surface.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog_llm import EMB_DIM, IVF_K
-from .catalog_round5 import (
-    _adc_lut_sql, _pq_block_sql, _PQ_BLOCKS, _PQ_CODES,
-)
-from .registry import load_table, register
-from .replay import scratch_dir
-
-# ---------------------------------------------------------------------------
-# persisted IVF-PQ index: train -> persist -> load -> search
-# ---------------------------------------------------------------------------
-
-_IPQ_NPROBE = 2
-_IPQ_QMOD = 50     # query batch: vec_id % 50 == 0 (10 queries at sf0.01)
-_IPQ_TOPK = 5
-_IPQ_BUCKETS = 4
-
-_COS6 = (
-    "round(list_dot_product({a}, {b}) / "
-    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
-)
-
-_IPQ_LLOYD_ITERS = 1  # k-means refinement rounds inside ivf_pq_build
-
-
-def _lloyd_c_sql(corpus: str) -> str:
-    """CTE chain producing the Lloyd-refined centroid relation ``c``
-    from the md5-ordered seed set over ``corpus`` — the SQL unroll of
-    one operators/llm/similarity.lloyd_refine iteration (r12 verdict
-    item 3): E-step = rounded-cosine argmax (tie larger cid, the shared
-    IVF rule), M-step = per-(cell, dim) mean rounded to 6dp before
-    reuse (the same round(avg, 6) llm_kmeans_iter hashes), empty cells
-    keep their seed centroid via the LEFT JOIN + coalesce.
-    """
-    return f"""c0 AS (SELECT vec_id AS cid, v AS cv FROM {corpus}
-      ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT {IVF_K}),
-asg0 AS (SELECT vec_id, cell FROM (
-    SELECT t.vec_id, c0.cid AS cell,
-           row_number() OVER (PARTITION BY t.vec_id
-               ORDER BY {_COS6.format(a='t.v', b='c0.cv')} DESC, c0.cid DESC) AS rn
-    FROM {corpus} t, c0) WHERE rn = 1),
-mstep AS (SELECT cell, dim, round(avg(x), 6) AS m FROM (
-    SELECT asg0.cell, unnest(t.v) AS x,
-           unnest(generate_series(1, len(t.v))) AS dim
-    FROM {corpus} t JOIN asg0 USING (vec_id)) GROUP BY 1, 2),
-refined AS (SELECT cell AS cid, list(m ORDER BY dim) AS cv
-            FROM mstep GROUP BY 1),
-c AS (SELECT c0.cid, coalesce(refined.cv, c0.cv) AS cv
-      FROM c0 LEFT JOIN refined USING (cid))"""
-
-
-def _ivf_pq_cand_sql(corpus: str, cb_sql: str | None = None) -> str:
-    """CTE chain from the refined centroid relation ``c`` (produced by
-    :func:`_lloyd_c_sql`) through the ADC candidate relation ``cand``
-    (qid, vec_id, adc_dist). ``corpus`` is the TRAINING relation —
-    'e' for the full-corpus build, 'old' for the append lifecycle —
-    and feeds only the codebook; encode (``asg``/``codes``) and the
-    query/probe/LUT chain always run over ``e``, matching
-    ivf_pq_encode's frozen-artifact contract. ``cb_sql`` overrides the
-    default md5-seed codebook CTE body (round 13: the TRAINED codebook
-    recall twin injects ``list(cv ORDER BY code) FROM tcb``). Shared by
-    the persist, append, and recall oracles.
-    """
-    blocks = range(_PQ_BLOCKS)
-    if cb_sql is None:
-        cb_sql = (
-            f"SELECT list(v ORDER BY vec_id) AS cbs\n"
-            f"       FROM (SELECT vec_id, v FROM {corpus} "
-            f"ORDER BY vec_id LIMIT {_PQ_CODES})"
-        )
-    return (
-        f"""asg AS (SELECT vec_id, cell FROM (
-    SELECT e.vec_id, c.cid AS cell,
-           row_number() OVER (PARTITION BY e.vec_id
-               ORDER BY {_COS6.format(a='e.v', b='c.cv')} DESC, c.cid DESC) AS rn
-    FROM e, c) WHERE rn = 1),
-cb AS ({cb_sql}),
-d AS (SELECT vec_id, """
-        + ", ".join(f"{_pq_block_sql(bi)} AS db_{bi}" for bi in blocks)
-        + """ FROM e, cb),
-codes AS (SELECT vec_id, """
-        + ", ".join(
-            f"list_position(db_{bi}, list_min(db_{bi})) AS code_{bi}"
-            for bi in blocks
-        )
-        + f""" FROM d),
-qs AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id % {_IPQ_QMOD} = 0),
-probe AS (SELECT qid, cid FROM (
-    SELECT qs.qid, c.cid,
-           row_number() OVER (PARTITION BY qs.qid
-               ORDER BY {_COS6.format(a='c.cv', b='qs.qv')} DESC, c.cid DESC) AS rn
-    FROM qs, c) WHERE rn <= {_IPQ_NPROBE}),
-luts AS (SELECT qid, """
-        + ", ".join(f"{_adc_lut_sql(bi)} AS lut_{bi}" for bi in blocks)
-        + """ FROM qs, cb),
-cand AS (SELECT p.qid, a.vec_id,
-                round("""
-        + " + ".join(f"l.lut_{bi}[co.code_{bi}]" for bi in blocks)
-        + """, 6) AS adc_dist
-         FROM probe p
-              JOIN asg a ON a.cell = p.cid
-              JOIN codes co ON co.vec_id = a.vec_id
-              JOIN luts l ON l.qid = p.qid
-         WHERE a.vec_id <> p.qid)"""
-    )
-
-
-_IPQ_RANK_SQL = f"""SELECT qid, vec_id, rnk, adc_dist FROM (
-    SELECT qid, vec_id, adc_dist,
-           row_number() OVER (PARTITION BY qid
-               ORDER BY adc_dist ASC, vec_id ASC)::INT AS rnk
-    FROM cand) WHERE rnk <= {_IPQ_TOPK}"""
-
-
-def _ivf_pq_persist_sql() -> str:
-    return (
-        f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-{_lloyd_c_sql('e')},
-{_ivf_pq_cand_sql('e')}
-{_IPQ_RANK_SQL}"""
-    )
-
-
-@register(
-    "llm_ann_ivf_pq_persist",
-    _ivf_pq_persist_sql(),
-    doc="PERSISTED IVF-PQ index (r11 verdict item 7): train the "
-        f"{IVF_K}-cell IVF centroid set (md5-ordered fixed-K seeds + "
-        f"{_IPQ_LLOYD_ITERS} Lloyd iteration — r12 verdict item 3: the "
-        "k-means M-step balances cell sizes, which is what makes the "
-        "nprobe/K scan fraction hold on skewed corpora; means round to "
-        "6dp before reuse so both engines carry identical centroids) "
-        "and the "
-        f"{_PQ_CODES}-entry/{_PQ_BLOCKS}-block PQ codebook; encode the "
-        "corpus to (vec_id, cell, codes); persist the encoded corpus "
-        "via storage.write_bucketed PARTITIONED BY cell + BUCKETED BY "
-        "vec_id (probe filters prune cell directories at plan time — "
-        "PartitionFilters in the scan — and id joins stay pre-hashed), "
-        "with the centroids/codebook as side tables; then LOAD "
-        "everything back and ADC-search a query batch "
-        f"(vec_id % {_IPQ_QMOD} == 0, top-{_IPQ_TOPK}, "
-        f"nprobe={_IPQ_NPROBE}) using only read-back artifacts: the "
-        "per-query LUT build touches the 8-row codebook, the scan "
-        "reads ~nprobe/K of the corpus as 4-byte codes, never floats. "
-        "All similarities/distances round before every argmax/argmin "
-        "(ties: larger cid for cells, lower code for PQ, lower vec_id "
-        "for rank) so both engines pick identical cells, codes, and "
-        "ranks. SCALE: train is one O(n*K) broadcast pass + O(n*codes) "
-        "encode; search cost is independent of build (probed "
-        "partitions only) — the economics the persisted graph index "
-        "already certifies, now for the quantized family.",
-    tags=("llm", "similarity", "ann", "storage", "scale"),
-)
-def llm_ann_ivf_pq_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.llm.similarity import (
-        _as_double, ivf_pq_adc_search, ivf_pq_build,
-    )
-    from ..operators.storage import write_bucketed
-
-    scratch = scratch_dir("ivf_pq_persist")
-    emb = load_table(spark, sf_dir, "embeddings")
-
-    # ---- TRAIN + ENCODE (shared kernel with the round-12 soak) ---------
-    index, cents, cb = ivf_pq_build(
-        emb, num_centroids=IVF_K, n_blocks=_PQ_BLOCKS, n_codes=_PQ_CODES,
-        dim=EMB_DIM, lloyd_iters=_IPQ_LLOYD_ITERS,
-    )
-
-    # ---- PERSIST: partition-pruned + pre-hashed layout ------------------
-    write_bucketed(
-        index, "sg_ivfpq_codes", ["vec_id"], num_buckets=_IPQ_BUCKETS,
-        sort_cols=["vec_id"], mode="overwrite",
-        path=os.path.join(scratch, "codes"), partition_cols=["cell"],
-    )
-    cents.write.mode("overwrite").parquet(os.path.join(scratch, "centroids"))
-    cb.write.mode("overwrite").parquet(os.path.join(scratch, "codebook"))
-
-    # ---- LOAD + SEARCH against the stored index only ---------------------
-    qs = emb.select(
-        F.col("vec_id").alias("qid"), _as_double("embedding").alias("qv")
-    ).filter(F.col("qid") % _IPQ_QMOD == 0)
-    return ivf_pq_adc_search(
-        qs,
-        spark.table("sg_ivfpq_codes"),
-        spark.read.parquet(os.path.join(scratch, "centroids")),
-        spark.read.parquet(os.path.join(scratch, "codebook")),
-        dim=EMB_DIM, n_blocks=_PQ_BLOCKS, nprobe=_IPQ_NPROBE,
-        topk=_IPQ_TOPK,
-    )
-
+from .registry import register
 
 # ---------------------------------------------------------------------------
 # nearest-direction as-of join: closest match either side, tie backward
@@ -371,95 +161,4 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             F.col("r_score") * 100 + F.col("f_score") * 10 + F.col("m_score")
         ).cast("int").alias("segment"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# IVF-PQ incremental ingest: encode against FROZEN artifacts, append
-# ---------------------------------------------------------------------------
-
-_IPQ_APP_MOD = 10  # ingest batch: vec_id % 10 == 0 (the graph-family split)
-
-
-def _ivf_pq_append_sql() -> str:
-    return (
-        f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-old AS (SELECT * FROM e WHERE vec_id % {_IPQ_APP_MOD} != 0),
-{_lloyd_c_sql('old')},
-{_ivf_pq_cand_sql('old')}
-{_IPQ_RANK_SQL}"""
-    )
-
-
-@register(
-    "llm_ann_ivf_pq_append",
-    _ivf_pq_append_sql(),
-    doc="IVF-PQ INCREMENTAL INGEST — the daily half of the persisted-"
-        "index lifecycle (llm_ann_ivf_pq_persist is the nightly half): "
-        f"train centroids+codebook on the OLD corpus (vec_id % "
-        f"{_IPQ_APP_MOD} != 0; seeds + {_IPQ_LLOYD_ITERS} Lloyd "
-        "iteration over that corpus only) and persist its encoded "
-        "codes; then "
-        "encode the ingest batch against the FROZEN artifacts READ "
-        "BACK from storage — never a codebook re-derived from the "
-        "batch, which would silently make old and new codes "
-        "incomparable (operators/llm/similarity.py:ivf_pq_encode, the "
-        "kernel both halves share) — and APPEND it into the same "
-        "cell-partitioned vec_id-bucketed table with mode='append'; "
-        "finally ADC-search the query batch over the read-back UNION. "
-        "Ingest cost is O(batch x K) encode + an append write touching "
-        "only the batch's cell partitions — never a rebuild (the "
-        "llm_ann_index_append economics, now for the quantized "
-        "family). Oracle: centroids/codebook from the old subset, "
-        "every vector encoded against them, identical probe/LUT/rank "
-        "chain.",
-    tags=("llm", "similarity", "ann", "storage", "scale"),
-)
-def llm_ann_ivf_pq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.llm.similarity import (
-        _as_double, ivf_pq_adc_search, ivf_pq_build, ivf_pq_encode,
-    )
-    from ..operators.storage import write_bucketed
-
-    scratch = scratch_dir("ivf_pq_append")
-    emb = load_table(spark, sf_dir, "embeddings")
-    old = emb.filter(F.col("vec_id") % _IPQ_APP_MOD != 0)
-    new = emb.filter(F.col("vec_id") % _IPQ_APP_MOD == 0)
-
-    # ---- NIGHTLY: train on the old corpus, persist index + artifacts ---
-    index_old, cents, cb = ivf_pq_build(
-        old, num_centroids=IVF_K, n_blocks=_PQ_BLOCKS, n_codes=_PQ_CODES,
-        dim=EMB_DIM, lloyd_iters=_IPQ_LLOYD_ITERS,
-    )
-    write_bucketed(
-        index_old, "sg_ivfpq_codes_app", ["vec_id"],
-        num_buckets=_IPQ_BUCKETS, sort_cols=["vec_id"], mode="overwrite",
-        path=os.path.join(scratch, "codes"), partition_cols=["cell"],
-    )
-    cents.write.mode("overwrite").parquet(os.path.join(scratch, "centroids"))
-    cb.write.mode("overwrite").parquet(os.path.join(scratch, "codebook"))
-
-    # ---- DAILY: encode the ingest batch against READ-BACK artifacts ----
-    cents_r = spark.read.parquet(os.path.join(scratch, "centroids"))
-    cb_r = spark.read.parquet(os.path.join(scratch, "codebook"))
-    increment = ivf_pq_encode(
-        new.select("vec_id", _as_double("embedding").alias("v")),
-        cents_r, cb_r, n_blocks=_PQ_BLOCKS, dim=EMB_DIM,
-    )
-    write_bucketed(
-        increment, "sg_ivfpq_codes_app", ["vec_id"],
-        num_buckets=_IPQ_BUCKETS, sort_cols=["vec_id"], mode="append",
-        path=os.path.join(scratch, "codes"), partition_cols=["cell"],
-    )
-
-    # ---- SEARCH the appended table ---------------------------------------
-    qs = emb.select(
-        F.col("vec_id").alias("qid"), _as_double("embedding").alias("qv")
-    ).filter(F.col("qid") % _IPQ_QMOD == 0)
-    return ivf_pq_adc_search(
-        qs,
-        spark.table("sg_ivfpq_codes_app"),
-        cents_r, cb_r,
-        dim=EMB_DIM, n_blocks=_PQ_BLOCKS, nprobe=_IPQ_NPROBE,
-        topk=_IPQ_TOPK,
     )

@@ -1,7 +1,8 @@
 """Round-3 catalog: set operations, grouping sets, time-range windows,
 rank distributions, string aggregation, and the remaining LLM
 training-data-pipeline passes (char entropy, sequence-length buckets,
-importance sampling, semantic dedup).
+importance sampling). Its semantic-dedup and k-means entries are in
+catalog_similarity.py.
 
 Same contract as every catalog module: each entry pairs a Spark DataFrame
 program with the DuckDB oracle SQL the driver runs side-by-side; aliases
@@ -15,19 +16,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash32, hash32_oracle_sql
-from ..operators.llm import similarity
 from ..operators.llm.dedup import array_shingles
-from .catalog_llm import IVF_K
 from .registry import EVENTS_NORM, load_events, load_table, register
-
-_COS4 = (
-    "round(list_dot_product({a}, {b}) / "
-    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 4)"
-)
-_COS6 = (
-    "round(list_dot_product({a}, {b}) / "
-    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
-)
 
 
 # ---------------------------------------------------------------------------
@@ -358,104 +348,6 @@ def llm_importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SEMDEDUP_SQL = f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-c AS (SELECT vec_id AS cid, v AS cv FROM e
-      ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT {IVF_K}),
-asg AS (SELECT vec_id, cell FROM (
-    SELECT e.vec_id, c.cid AS cell,
-           row_number() OVER (PARTITION BY e.vec_id
-               ORDER BY {_COS6.format(a='e.v', b='c.cv')} DESC, c.cid DESC) AS rn
-    FROM e, c) WHERE rn = 1),
-cells AS (SELECT e.vec_id, e.v, asg.cell FROM e JOIN asg USING (vec_id)),
-dup AS (SELECT DISTINCT b.vec_id
-        FROM cells a JOIN cells b
-          ON a.cell = b.cell AND a.vec_id < b.vec_id
-        WHERE {_COS4.format(a='a.v', b='b.v')} >= 0.5)
-SELECT cells.vec_id, cells.cell,
-       CASE WHEN dup.vec_id IS NULL THEN 1 ELSE 0 END AS keep
-FROM cells LEFT JOIN dup ON cells.vec_id = dup.vec_id"""
-
-
-@register(
-    "llm_semdedup",
-    _SEMDEDUP_SQL,
-    doc="SemDeDup-style semantic dedup: IVF-cell clustering (same FIXED-K "
-        "deterministic centroid assignment as llm_ann_ivf — the centroid "
-        "count does not grow with the corpus), then within each cell drop "
-        "every vector with a lower-id cell-mate at cosine >= 0.5 "
-        "(operators/llm/similarity.py:semdedup). The pair search is "
-        "cell-local, so the cross product is n/K-sized per cell and the "
-        "shuffle keys are (cell, id) — the published SemDeDup recipe "
-        "expressed as two joins and an argmax.",
-    tags=("llm", "dedup", "similarity"),
-)
-def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return similarity.semdedup(
-        load_table(spark, sf_dir, "embeddings"),
-        threshold=0.5, num_centroids=IVF_K,
-    )
-
-
-SEMDEDUP_CAP = 16  # binds at sf0.01 (500 rows / 32 cells), so the driver
-# value-hashes the salt-split path itself; at scale it bounds the pair
-# stage at O(n * cap) regardless of cell skew
-
-
-def _semdedup_capped_sql(cap: int, threshold: float = 0.35) -> str:
-    """DuckDB mirror of ``semdedup(..., max_cell_size=cap)``: same
-    fixed-K assignment as ``_SEMDEDUP_SQL`` plus the salt-split CTEs —
-    salt = hash32(vec_id || ':sd') % ceil(cell_size / cap), exactly the
-    Spark operator's arithmetic (similarity.py:semdedup). Threshold
-    0.35 (vs the uncapped entry's 0.5) so dup pairs EXIST at sf0.01 —
-    the capped result (39 dups) differs from uncapped (52), making the
-    salt split value-visible to the driver hash, not just plan-visible."""
-    salt = hash32_oracle_sql("vec_id::VARCHAR || ':sd'")
-    return f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-c AS (SELECT vec_id AS cid, v AS cv FROM e
-      ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT {IVF_K}),
-asg AS (SELECT vec_id, cell FROM (
-    SELECT e.vec_id, c.cid AS cell,
-           row_number() OVER (PARTITION BY e.vec_id
-               ORDER BY {_COS6.format(a='e.v', b='c.cv')} DESC, c.cid DESC) AS rn
-    FROM e, c) WHERE rn = 1),
-cells0 AS (SELECT e.vec_id, e.v, asg.cell FROM e JOIN asg USING (vec_id)),
-sz AS (SELECT cell, count(*) AS cn FROM cells0 GROUP BY cell),
-cells AS (SELECT cells0.vec_id, cells0.v, cells0.cell,
-                 {salt} % greatest(1, ceil(sz.cn / {cap}.0)::BIGINT) AS salt
-          FROM cells0 JOIN sz USING (cell)),
-dup AS (SELECT DISTINCT b.vec_id
-        FROM cells a JOIN cells b
-          ON a.cell = b.cell AND a.salt = b.salt AND a.vec_id < b.vec_id
-        WHERE {_COS4.format(a='a.v', b='b.v')} >= {threshold})
-SELECT cells.vec_id, cells.cell,
-       CASE WHEN dup.vec_id IS NULL THEN 1 ELSE 0 END AS keep
-FROM cells LEFT JOIN dup ON cells.vec_id = dup.vec_id"""
-
-
-@register(
-    "llm_semdedup_capped",
-    _semdedup_capped_sql(SEMDEDUP_CAP),
-    doc="llm_semdedup with the production cell-size cap: cells larger "
-        f"than {SEMDEDUP_CAP} are salt-split into ceil(size/cap) "
-        "sub-cells by an md5-derived hash of the id (oracle-expressible "
-        "— the DuckDB mirror reproduces the split exactly), and pairing "
-        "runs within a sub-cell only. Bounds the quadratic pair stage at "
-        "O(n * cap) TOTAL regardless of cell skew — one mega-cell can no "
-        "longer go quadratic (SCALE_SOAK.md: uncapped killed >580 s at "
-        "100x, capped ~linear). Recall-only approximation: cross-salt "
-        "pairs are missed, every emitted duplicate is still cosine-"
-        "verified. The cap binds at sf0.01 (500 rows / 32 cells), so "
-        "the driver hash covers the salt arithmetic itself "
-        "(operators/llm/similarity.py:semdedup, max_cell_size).",
-    tags=("llm", "dedup", "similarity", "scale"),
-)
-def llm_semdedup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return similarity.semdedup(
-        load_table(spark, sf_dir, "embeddings"),
-        threshold=0.35, num_centroids=IVF_K, max_cell_size=SEMDEDUP_CAP,
-    )
-
-
 @register(
     "window_first_last",
     f"""WITH {EVENTS_NORM}
@@ -640,48 +532,6 @@ def llm_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(dup).cast("long").alias("n_dup"),
             F.round(F.sum(dup) / F.count(F.lit(1)), 6).alias("dup_ratio"),
         )
-    )
-
-
-_KMEANS_SQL = f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-c AS (SELECT vec_id AS cid, v AS cv FROM e
-      ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT {IVF_K}),
-asg AS (SELECT vec_id, cell FROM (
-    SELECT e.vec_id, c.cid AS cell,
-           row_number() OVER (PARTITION BY e.vec_id
-               ORDER BY {_COS6.format(a='e.v', b='c.cv')} DESC, c.cid DESC) AS rn
-    FROM e, c) WHERE rn = 1),
-cells AS (SELECT e.vec_id, e.v, asg.cell FROM e JOIN asg USING (vec_id)),
-comp AS (SELECT cell, unnest(v) AS x,
-                unnest(generate_series(1, len(v))) AS dim
-         FROM cells)
-SELECT cell, dim, round(avg(x), 6) AS mean_val
-FROM comp
-GROUP BY 1, 2"""
-
-
-@register(
-    "llm_kmeans_iter",
-    _KMEANS_SQL,
-    doc="One k-means M-step: recompute each centroid as the per-dimension "
-        "mean of its assigned vectors (E-step = the same broadcast argmax "
-        "assignment as llm_ann_ivf / llm_centroid_assign). The vector "
-        "mean is a posexplode to (cell, dim, component) + one partial-agg "
-        "shuffle keyed on (cell, dim) — O(K*d) output rows at any corpus "
-        "size, so iterating to convergence is a fixed number of linear "
-        "passes. Completes the IVF/semdedup story: this is how the "
-        "injected fixed-K centroid set (SCALE_SOAK.md) gets learned.",
-    tags=("llm", "similarity", "iterative"),
-)
-def llm_kmeans_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.llm.similarity import _component_means, _embeddings
-
-    e = _embeddings(load_table(spark, sf_dir, "embeddings"))
-    cents = similarity.fixed_centroids(e, IVF_K)
-    assigned = similarity.ivf_assign_cells(e, cents)
-    return _component_means(e.join(assigned, "vec_id"), "cell").select(
-        "cell", (F.col("pos") + 1).cast("long").alias("dim"),
-        F.col("m").alias("mean_val"),
     )
 
 

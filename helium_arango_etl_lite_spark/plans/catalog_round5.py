@@ -6,14 +6,13 @@
 * ``llm_window_dedup`` — exact repeated-substring detection via sliding
   character-window hashes (scalable stand-in for suffix-array substring
   dedup, cf. Lee et al. 2022).
-* ``llm_quantize_pq`` — product quantization codes + reconstruction MSE
-  (the IVF-PQ memory-compression step: 64 floats -> 4 byte-codes).
 * ``llm_pipeline_funnel`` — staged quality-filter funnel with per-stage
   row accounting (the report every corpus-curation run ships with).
 
-All four reuse the cross-engine hash/shingle fragments from
+All three reuse the cross-engine hash/shingle fragments from
 ``catalog_llm`` so the sketch math is value-hash verified, not
-rows-only.
+rows-only. The product-quantization entries and
+``llm_semantic_clusters`` are in catalog_similarity.py.
 """
 
 from __future__ import annotations
@@ -21,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.llm import dedup, similarity
+from ..operators.llm import dedup
 from .catalog_llm import (
     BANDS,
     NUM_HASHES,
@@ -145,62 +144,6 @@ def llm_window_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# product quantization
-# ---------------------------------------------------------------------------
-
-_PQ_BLOCKS = 4
-_PQ_CODES = 8
-# block width derives from the data in BOTH engines (len(v)/blocks) so a
-# testdata-refresh dim change cannot desynchronize the oracle from the
-# Spark side's _infer_dim
-_PQ_SUB_SQL = f"(len(v) // {_PQ_BLOCKS})"
-
-
-def _pq_block_sql(bi: int) -> str:
-    off = f"({bi} * {_PQ_SUB_SQL})"
-    return (
-        f"list_transform(generate_series(1, {_PQ_CODES}), c -> "
-        f"round(list_sum(list_transform(generate_series(1, {_PQ_SUB_SQL}), "
-        f"i -> (v[{off} + i] - cbs[c][{off} + i]) * (v[{off} + i] - cbs[c][{off} + i]))), 6))"
-    )
-
-
-_PQ_SQL = (
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-cb AS (SELECT list(v ORDER BY vec_id) AS cbs
-       FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT """ + str(_PQ_CODES) + """)),
-d AS (SELECT vec_id, len(v) AS dim, """
-    + ", ".join(f"{_pq_block_sql(bi)} AS db_{bi}" for bi in range(_PQ_BLOCKS))
-    + """ FROM e, cb)
-SELECT vec_id, """
-    + ", ".join(
-        f"list_position(db_{bi}, list_min(db_{bi}))::BIGINT AS code_{bi}"
-        for bi in range(_PQ_BLOCKS)
-    )
-    + ", round(("
-    + " + ".join(f"list_min(db_{bi})" for bi in range(_PQ_BLOCKS))
-    + ") / dim::DOUBLE, 4) AS mse FROM d"
-)
-
-
-@register(
-    "llm_quantize_pq",
-    _PQ_SQL,
-    doc="Product quantization (IVF-PQ compression step): 64-dim vector -> "
-        "4 sub-blocks, each snapped to the nearest of 8 codebook slices by "
-        "L2; 256 bytes/vector becomes 4. Codebook = first-8-by-id (the "
-        "deterministic seed a production index k-means-refines); assignment "
-        "is map-only JVM expressions over literal arrays — zero shuffle.",
-    tags=("llm", "similarity"),
-)
-def llm_quantize_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return similarity.pq_quantize(
-        load_table(spark, sf_dir, "embeddings"),
-        n_blocks=_PQ_BLOCKS, n_codes=_PQ_CODES,
-    )
-
-
-# ---------------------------------------------------------------------------
 # staged quality-filter funnel
 # ---------------------------------------------------------------------------
 
@@ -275,65 +218,6 @@ def llm_pipeline_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stages.select(
         "stage_idx", "stage", "rows_in", "rows_out",
         (F.col("rows_in") - F.col("rows_out")).alias("dropped"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# PQ + ADC search (the IVF-PQ query path)
-# ---------------------------------------------------------------------------
-
-def _adc_lut_sql(bi: int) -> str:
-    # block width from len(qv): keeps the LUT aligned with _pq_block_sql
-    # under any embedding dim the testdata ships
-    sub = f"(len(qv) // {_PQ_BLOCKS})"
-    off = f"({bi} * {sub})"
-    return (
-        f"list_transform(generate_series(1, {_PQ_CODES}), c -> "
-        f"round(list_sum(list_transform(generate_series(1, {sub}), "
-        f"i -> (qv[{off} + i] - cbs[c][{off} + i]) * (qv[{off} + i] - cbs[c][{off} + i]))), 6))"
-    )
-
-
-_ADC_SQL = (
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-cb AS (SELECT list(v ORDER BY vec_id) AS cbs
-       FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT """ + str(_PQ_CODES) + """)),
-q AS (SELECT v AS qv FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 1)),
-luts AS (SELECT """
-    + ", ".join(f"{_adc_lut_sql(bi)} AS lut_{bi}" for bi in range(_PQ_BLOCKS))
-    + """ FROM cb, q),
-d AS (SELECT vec_id, """
-    + ", ".join(f"{_pq_block_sql(bi)} AS db_{bi}" for bi in range(_PQ_BLOCKS))
-    + """ FROM e, cb),
-codes AS (SELECT vec_id, """
-    + ", ".join(
-        f"list_position(db_{bi}, list_min(db_{bi})) AS code_{bi}"
-        for bi in range(_PQ_BLOCKS)
-    )
-    + """ FROM d)
-SELECT vec_id, round("""
-    + " + ".join(f"lut_{bi}[code_{bi}]" for bi in range(_PQ_BLOCKS))
-    + """, 6) AS adc_dist
-FROM codes, luts
-WHERE vec_id <> (SELECT min(vec_id) FROM e)
-ORDER BY adc_dist ASC, vec_id ASC LIMIT 10"""
-)
-
-
-@register(
-    "llm_ann_ivf_pq",
-    _ADC_SQL,
-    doc="Asymmetric Distance Computation over PQ codes (the FAISS IVF-PQ "
-        "query path): per block an 8-entry LUT of query-to-codebook L2 "
-        "distances is built once driver-side; the corpus scan is 4 table "
-        "lookups per vector over the 4-byte codes — never the floats — "
-        "and top-k compiles to TakeOrderedAndProject (no global sort).",
-    tags=("llm", "similarity"),
-)
-def llm_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return similarity.pq_adc_topk(
-        load_table(spark, sf_dir, "embeddings"),
-        k=10, n_blocks=_PQ_BLOCKS, n_codes=_PQ_CODES,
     )
 
 
@@ -826,80 +710,3 @@ def llm_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def llm_dedup_pipeline_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _collapsed_pipeline(spark, sf_dir, None)
-
-
-# ---------------------------------------------------------------------------
-# semantic clustering: mutual-kNN graph -> connected components
-# ---------------------------------------------------------------------------
-
-_MKNN_K = 3
-
-_MKNN_SQL = f"""
-WITH RECURSIVE e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-p AS (SELECT a.vec_id AS qid, b.vec_id AS nid,
-             round(list_dot_product(a.v, b.v)
-                   / (sqrt(list_dot_product(a.v, a.v))
-                      * sqrt(list_dot_product(b.v, b.v))), 4) AS cos_sim
-      FROM e a JOIN e b ON a.vec_id <> b.vec_id),
-r AS (SELECT qid, nid,
-             row_number() OVER (PARTITION BY qid
-                                ORDER BY cos_sim DESC, nid) AS rank
-      FROM p),
-knn AS (SELECT qid, nid FROM r WHERE rank <= {_MKNN_K}),
-mutual AS (SELECT a.qid AS src, a.nid AS dst
-           FROM knn a JOIN knn b ON a.qid = b.nid AND a.nid = b.qid),
-reach(src, dst) AS (
-    SELECT src, src FROM mutual
-    UNION
-    SELECT r2.src, m.dst FROM reach r2 JOIN mutual m ON r2.dst = m.src),
-lab AS (SELECT src AS vec_id, min(dst) AS cluster_id FROM reach GROUP BY src)
-SELECT e.vec_id,
-       coalesce(l.cluster_id, e.vec_id) AS cluster_id,
-       (coalesce(l.cluster_id, e.vec_id) = e.vec_id) AS is_representative
-FROM e LEFT JOIN lab l ON l.vec_id = e.vec_id
-"""
-
-
-@register(
-    "llm_semantic_clusters",
-    _MKNN_SQL,
-    doc=f"Semantic clustering of embeddings: mutual-{_MKNN_K}-NN graph "
-        "(an edge only when BOTH endpoints rank each other top-k — the "
-        "standard guard against hub vectors chaining unrelated clusters) "
-        "-> connected components -> min-id representative. The embedding "
-        "counterpart of llm_dedup_pipeline; at scale the kNN stage is the "
-        "auto-routed knn_join (bucketed LSH past the broadcast bound) and "
-        "the mutual filter is a self-join on the (qid,nid) pair — tiny vs "
-        "the corpus. The full pipeline is soaked THROUGH the bucketed "
-        "route at x100 vectors (SCALE_SOAK round-6 stretch: 216.9 s at "
-        "200k, sub-linear x10->x100, recall@3 = 1.0 on the duplicated "
-        "fixture — organic-data recall is whatever llm_ann_recall "
-        "measures for the plane configuration).",
-    tags=("llm", "similarity", "pipeline", "iterative"),
-)
-def llm_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    kn = similarity.knn_join(emb, k=_MKNN_K).select("qid", "nid")
-    kn = kn.localCheckpoint(eager=False)  # consumed by both mutual sides
-    mutual = kn.alias("a").join(
-        kn.alias("b"),
-        (F.col("a.qid") == F.col("b.nid")) & (F.col("a.nid") == F.col("b.qid")),
-    ).select(F.col("a.qid").alias("doc_a"), F.col("a.nid").alias("doc_b"))
-    labels = dedup.dup_clusters(mutual)
-    return (
-        emb.select("vec_id")
-        .join(
-            labels.withColumnRenamed("doc_id", "vec_id").withColumnRenamed(
-                "cluster_id", "_cl"
-            ),
-            "vec_id",
-            "left",
-        )
-        .select(
-            "vec_id",
-            F.coalesce(F.col("_cl"), F.col("vec_id")).alias("cluster_id"),
-            (
-                F.coalesce(F.col("_cl"), F.col("vec_id")) == F.col("vec_id")
-            ).alias("is_representative"),
-        )
-    )

@@ -1,10 +1,7 @@
-"""Round-5 late additions: evaluation + layout.
+"""Round-5 late additions: layout, sketches and robust statistics (its
+ANN-recall, kNN-label and embedding-drift entries are in
+catalog_similarity.py).
 
-* ``llm_ann_recall`` — recall@k of the LSH-bucketed k-NN against the
-  exact brute-force top-k, per query vector. The "measure, don't guess"
-  companion to ``llm_knn_join_bucketed``: every approximate operator in
-  the catalog should ship with the query that quantifies what the
-  approximation costs.
 * ``zorder_layout_stats`` — Morton (Z-order) interleave of two
   dimensions as a clustering key, contrasted with a linear time layout:
   per-"file" min/max span fractions show Z-order bounding BOTH
@@ -17,151 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.llm import similarity
-from .catalog_llm import EMB_DIM, LSH_SEED, NEAR_DUP_PLANES
 from .registry import EVENTS_NORM, load_events, load_table, register
-
-# ---------------------------------------------------------------------------
-# ANN recall@k evaluation
-# ---------------------------------------------------------------------------
-
-ANN_RECALL_K = 3
-
-
-def _ann_recall_sql(sample_mod: int | None = None) -> str:
-    planes = similarity.hyperplanes(NEAR_DUP_PLANES, EMB_DIM, LSH_SEED)
-    plane_lits = ["[" + ", ".join(repr(x) for x in p) + "]" for p in planes]
-    bucket = " + ".join(
-        f"(CASE WHEN list_dot_product(v, {p}) >= 0 THEN {1 << j} ELSE 0 END)"
-        for j, p in enumerate(plane_lits)
-    )
-    k = ANN_RECALL_K
-    qfilter = "" if sample_mod is None else f" AND a.vec_id % {sample_mod} = 0"
-    return f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-p AS (SELECT a.vec_id AS qid, b.vec_id AS nid,
-             round(list_dot_product(a.v, b.v)
-                   / (sqrt(list_dot_product(a.v, a.v))
-                      * sqrt(list_dot_product(b.v, b.v))), 4) AS cos_sim
-      FROM e a JOIN e b ON a.vec_id <> b.vec_id{qfilter}),
-r AS (SELECT qid, nid,
-             row_number() OVER (PARTITION BY qid
-                                ORDER BY cos_sim DESC, nid) AS rank
-      FROM p),
-ex AS (SELECT qid, nid FROM r WHERE rank <= {k}),
-bk AS (SELECT vec_id, v, ({bucket})::BIGINT AS bucket FROM e),
-pb AS (SELECT a.vec_id AS qid, c.vec_id AS nid,
-              round(list_dot_product(a.v, c.v)
-                    / (sqrt(list_dot_product(a.v, a.v))
-                       * sqrt(list_dot_product(c.v, c.v))), 4) AS cos_sim
-       FROM bk a JOIN bk c ON a.bucket = c.bucket AND a.vec_id <> c.vec_id{qfilter}),
-rb AS (SELECT qid, nid,
-              row_number() OVER (PARTITION BY qid
-                                 ORDER BY cos_sim DESC, nid) AS rank
-       FROM pb),
-ap AS (SELECT qid, nid FROM rb WHERE rank <= {k}),
-cex AS (SELECT qid, count(*)::BIGINT AS n_exact FROM ex GROUP BY 1),
-cap AS (SELECT qid, count(*)::BIGINT AS n_approx FROM ap GROUP BY 1),
-hit AS (SELECT ex.qid, count(*)::BIGINT AS n_hit
-        FROM ex JOIN ap ON ex.qid = ap.qid AND ex.nid = ap.nid
-        GROUP BY 1)
-SELECT cex.qid, cex.n_exact,
-       coalesce(cap.n_approx, 0)::BIGINT AS n_approx,
-       coalesce(hit.n_hit, 0)::BIGINT AS n_hit,
-       round(coalesce(hit.n_hit, 0)::DOUBLE / cex.n_exact, 4) AS recall_at_k
-FROM cex
-LEFT JOIN cap ON cap.qid = cex.qid
-LEFT JOIN hit ON hit.qid = cex.qid"""
-
-
-@register(
-    "llm_ann_recall",
-    _ann_recall_sql(),
-    doc="Recall@k of the LSH-bucketed approximate k-NN "
-        "(llm_knn_join_bucketed) against the exact brute-force top-k "
-        "(llm_knn_join), per query vector: n_hit / n_exact over the "
-        "(qid, nid) pair sets. This is the evaluation harness every "
-        "approximate index needs before it replaces the exact path at "
-        "scale — recall is a corpus property, not a constant. Both "
-        "sides are the already-verified catalog operators; the overlay "
-        "is three key-partitioned aggregations and two left joins on "
-        "qid — no new shuffle shapes "
-        "(operators/llm/similarity.py:knn_join,knn_join_bucketed).",
-    tags=("llm", "similarity", "evaluation"),
-)
-def llm_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "embeddings")
-    exact = similarity.knn_join(e, k=ANN_RECALL_K).select("qid", "nid")
-    approx = similarity.knn_join_bucketed(
-        e, k=ANN_RECALL_K,
-        num_planes=NEAR_DUP_PLANES, seed=LSH_SEED, dim=EMB_DIM,
-    ).select("qid", "nid")
-    return _recall_overlay(exact, approx)
-
-
-ANN_SAMPLE_MOD = 4
-
-
-@register(
-    "llm_ann_recall_sampled",
-    _ann_recall_sql(sample_mod=ANN_SAMPLE_MOD),
-    doc="The 100 TB shape of llm_ann_recall: recall@k measured on a "
-        "deterministic hash-sample of queries (vec_id % 4 == 0) scored "
-        "EXACTLY against the FULL corpus. The exact side is "
-        "knn_join_sampled, which inverts knn_join's broadcast — the "
-        "small query-sample matrix broadcasts, each corpus partition "
-        "GEMMs its rows against it and keeps a per-partition top-k per "
-        "query, and a bounded candidate merge (|sample|*k*partitions "
-        "rows) finishes exactly. Cost is LINEAR in corpus size and "
-        "never collects the corpus, so the evaluation harness itself "
-        "survives the scale it is meant to certify "
-        "(operators/llm/similarity.py:knn_join_sampled).",
-    tags=("llm", "similarity", "evaluation"),
-)
-def llm_ann_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "embeddings")
-    exact = similarity.knn_join_sampled(
-        e, k=ANN_RECALL_K, sample_mod=ANN_SAMPLE_MOD
-    ).select("qid", "nid")
-    approx = (
-        similarity.knn_join_bucketed(
-            e, k=ANN_RECALL_K,
-            num_planes=NEAR_DUP_PLANES, seed=LSH_SEED, dim=EMB_DIM,
-        )
-        .filter(F.pmod(F.col("qid"), F.lit(ANN_SAMPLE_MOD)) == 0)
-        .select("qid", "nid")
-    )
-    return _recall_overlay(exact, approx)
-
-
-def _recall_overlay(exact: DataFrame, approx: DataFrame) -> DataFrame:
-    # Both sides are consumed twice (per-query count + the hit join) and
-    # both arrive as expensive lazy plans (exact kNN / ADC search) —
-    # pin each so the overlay reads one materialization instead of
-    # executing the full search twice (opt round 13; the frames are
-    # queries x k rows, control-plane-sized).
-    exact = exact.localCheckpoint(eager=False)
-    approx = approx.localCheckpoint(eager=False)
-    n_ex = exact.groupBy("qid").agg(F.count("*").cast("long").alias("n_exact"))
-    n_ap = approx.groupBy("qid").agg(F.count("*").cast("long").alias("n_approx"))
-    hit = (
-        exact.join(approx, ["qid", "nid"])
-        .groupBy("qid")
-        .agg(F.count("*").cast("long").alias("n_hit"))
-    )
-    return (
-        n_ex.join(n_ap, "qid", "left")
-        .join(hit, "qid", "left")
-        .select(
-            "qid",
-            "n_exact",
-            F.coalesce(F.col("n_approx"), F.lit(0)).cast("long").alias("n_approx"),
-            F.coalesce(F.col("n_hit"), F.lit(0)).cast("long").alias("n_hit"),
-            F.round(
-                F.coalesce(F.col("n_hit"), F.lit(0)) / F.col("n_exact"), 4
-            ).alias("recall_at_k"),
-        )
-    )
-
 
 # ---------------------------------------------------------------------------
 # Z-order clustering key vs linear layout
@@ -507,90 +360,6 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# embedding-quality probe: kNN label agreement
-# ---------------------------------------------------------------------------
-
-_KNN_ACC_SQL = f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label
-                             FROM embeddings),
-p AS (SELECT a.vec_id AS qid, b.vec_id AS nid,
-             round(list_dot_product(a.v, b.v)
-                   / (sqrt(list_dot_product(a.v, a.v))
-                      * sqrt(list_dot_product(b.v, b.v))), 4) AS cos_sim
-      FROM e a JOIN e b ON a.vec_id <> b.vec_id),
-r AS (SELECT qid, nid,
-             row_number() OVER (PARTITION BY qid
-                                ORDER BY cos_sim DESC, nid) AS rank
-      FROM p),
-nb AS (SELECT r.qid, e.label AS nlabel
-       FROM r JOIN e ON e.vec_id = r.nid
-       WHERE r.rank <= {ANN_RECALL_K}),
-votes AS (SELECT qid, nlabel, count(*)::BIGINT AS cnt FROM nb GROUP BY 1, 2),
-pred AS (SELECT qid, nlabel AS pred_label
-         FROM (SELECT qid, nlabel,
-                      row_number() OVER (PARTITION BY qid
-                                         ORDER BY cnt DESC, nlabel) AS rn
-               FROM votes)
-         WHERE rn = 1)
-SELECT e.label,
-       count(*)::BIGINT AS n,
-       sum(CASE WHEN p.pred_label = e.label THEN 1 ELSE 0 END)::BIGINT
-         AS n_correct,
-       round(sum(CASE WHEN p.pred_label = e.label THEN 1 ELSE 0 END)::DOUBLE
-             / count(*), 4) AS acc
-FROM pred p JOIN e ON e.vec_id = p.qid
-GROUP BY 1"""
-
-
-@register(
-    "llm_knn_label_accuracy",
-    _KNN_ACC_SQL,
-    doc="Embedding-quality probe: leave-one-out k-NN label agreement — "
-        "each vector's label predicted by majority vote of its 3 exact "
-        "nearest neighbours (ties break on smallest label), scored per "
-        "class. The standard cheap proxy for 'do these embeddings "
-        "encode the thing we care about' before they gate dedup or "
-        "sampling decisions. Reuses the verified knn_join output; the "
-        "overlay is a label join, a (qid, label) vote count, and a "
-        "qid-partitioned argmax — every shuffle keyed and bounded by "
-        "k*n rows (operators/llm/similarity.py:knn_join).",
-    tags=("llm", "similarity", "evaluation"),
-)
-def llm_knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "embeddings")
-    labels = e.select("vec_id", "label")
-    knn = similarity.knn_join(e, k=ANN_RECALL_K).select("qid", "nid")
-    nb = knn.join(
-        labels.withColumnRenamed("vec_id", "nid").withColumnRenamed(
-            "label", "nlabel"
-        ),
-        "nid",
-    )
-    votes = nb.groupBy("qid", "nlabel").agg(F.count("*").cast("long").alias("cnt"))
-    w = Window.partitionBy("qid").orderBy(F.desc("cnt"), F.asc("nlabel"))
-    pred = (
-        votes.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("qid", F.col("nlabel").alias("pred_label"))
-    )
-    own = labels.withColumnRenamed("vec_id", "qid")
-    return (
-        pred.join(own, "qid")
-        .groupBy("label")
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum((F.col("pred_label") == F.col("label")).cast("long"))
-            .cast("long")
-            .alias("n_correct"),
-            F.round(
-                F.sum((F.col("pred_label") == F.col("label")).cast("long"))
-                / F.count("*"),
-                4,
-            ).alias("acc"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
 # HLL set algebra: union by register max, intersection by inclusion-exclusion
 # ---------------------------------------------------------------------------
 
@@ -838,90 +607,4 @@ def agg_exact_median_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit((n + 1) // 2).cast("long").alias("k"),
         F.col("median_c"),
         F.round(F.col("median_c") / 100.0, 2).alias("median_price"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# dataset-shift monitor: embedding drift between two corpus snapshots
-# ---------------------------------------------------------------------------
-
-_DRIFT_SQL = """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v,
-                                 CASE WHEN vec_id % 2 = 0 THEN 'a' ELSE 'b' END AS half
-                          FROM embeddings),
-d AS (SELECT half, dim, sum(x) AS s, count(*)::BIGINT AS n
-      FROM (SELECT half, unnest(v) AS x,
-                   unnest(range(1, len(v) + 1)) AS dim
-            FROM e)
-      GROUP BY 1, 2),
-m AS (SELECT dim,
-             max(CASE WHEN half = 'a' THEN s END) AS sa,
-             max(CASE WHEN half = 'b' THEN s END) AS sb,
-             max(CASE WHEN half = 'a' THEN n END) AS na,
-             max(CASE WHEN half = 'b' THEN n END) AS nb
-      FROM d GROUP BY 1),
-agg AS (SELECT any_value(na) AS n_a, any_value(nb) AS n_b,
-               sum((sa / na) * (sb / nb)) AS dot,
-               sqrt(sum(pow(sa / na, 2.0))) AS norm_a,
-               sqrt(sum(pow(sb / nb, 2.0))) AS norm_b,
-               sqrt(sum(pow(sa / na - sb / nb, 2.0))) AS l2,
-               max(abs(sa / na - sb / nb)) AS max_shift
-        FROM m)
-SELECT n_a, n_b,
-       round(dot / (norm_a * norm_b), 4) AS centroid_cosine,
-       round(l2, 4) AS centroid_l2,
-       round(max_shift, 4) AS max_dim_shift
-FROM agg"""
-
-
-@register(
-    "llm_embedding_drift",
-    _DRIFT_SQL,
-    doc="Dataset-shift monitor: the two corpus halves (vec_id parity "
-        "stands in for consecutive snapshots) reduced to per-dimension "
-        "centroid sums, compared by centroid cosine, centroid L2, and "
-        "the largest single-dimension mean shift — the cheap alarm a "
-        "training-data pipeline runs between crawls before it trusts an "
-        "embedding-gated dedup/sampling policy tuned on the previous "
-        "snapshot. Shuffle shape is the kmeans M-step's: posexplode to "
-        "(half, dim), ONE partial-aggregated shuffle whose output is "
-        "2*dim rows regardless of corpus size, then an O(dim) scalar "
-        "fold. Map-side combine does the heavy lifting; nothing "
-        "corpus-sized moves.",
-    tags=("llm", "similarity", "monitoring"),
-)
-def llm_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "embeddings").select(
-        F.when(F.pmod(F.col("vec_id"), F.lit(2)) == 0, F.lit("a"))
-        .otherwise(F.lit("b"))
-        .alias("half"),
-        F.col("embedding").cast("array<double>").alias("v"),
-    )
-    d = (
-        e.select("half", F.posexplode("v").alias("dim0", "x"))
-        .groupBy("half", (F.col("dim0") + 1).alias("dim"))
-        .agg(F.sum("x").alias("s"), F.count("*").cast("long").alias("n"))
-    )
-    m = d.groupBy("dim").agg(
-        F.max(F.when(F.col("half") == "a", F.col("s"))).alias("sa"),
-        F.max(F.when(F.col("half") == "b", F.col("s"))).alias("sb"),
-        F.max(F.when(F.col("half") == "a", F.col("n"))).alias("na"),
-        F.max(F.when(F.col("half") == "b", F.col("n"))).alias("nb"),
-    )
-    ma, mb = F.col("sa") / F.col("na"), F.col("sb") / F.col("nb")
-    agg = m.agg(
-        F.first("na").alias("n_a"),
-        F.first("nb").alias("n_b"),
-        F.sum(ma * mb).alias("dot"),
-        F.sqrt(F.sum(F.pow(ma, F.lit(2.0)))).alias("norm_a"),
-        F.sqrt(F.sum(F.pow(mb, F.lit(2.0)))).alias("norm_b"),
-        F.sqrt(F.sum(F.pow(ma - mb, F.lit(2.0)))).alias("l2"),
-        F.max(F.abs(ma - mb)).alias("max_shift"),
-    )
-    return agg.select(
-        "n_a", "n_b",
-        F.round(F.col("dot") / (F.col("norm_a") * F.col("norm_b")), 4).alias(
-            "centroid_cosine"
-        ),
-        F.round(F.col("l2"), 4).alias("centroid_l2"),
-        F.round(F.col("max_shift"), 4).alias("max_dim_shift"),
     )

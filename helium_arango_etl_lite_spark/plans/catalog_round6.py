@@ -1,6 +1,6 @@
-"""Round-6 catalog: corpus-quality repetition rules, distributed
-deterministic reservoir sampling, and spectral structure via power
-iteration.
+"""Round-6 catalog: corpus-quality repetition rules and distributed
+deterministic reservoir sampling (its power-iteration entry is in
+catalog_similarity.py).
 
 * ``llm_repetition_stats`` — the Gopher-style within-document repetition
   quality signals (duplicate-word fraction, top-bigram fraction) that
@@ -9,10 +9,6 @@ iteration.
 * ``agg_reservoir_per_group`` — fixed-size deterministic per-group
   sample with a map-side partial top-k combine, the sampling primitive
   behind eval-set carving and per-source inspection pulls.
-* ``llm_power_iteration`` — top principal direction of the embedding
-  cloud by two distributed power-iteration steps; O(dim) driver state
-  per step, the spectral complement to llm_embedding_drift's centroid
-  monitor.
 
 Reference parity note: the reference ETL (helium-arango-etl-lite) has no
 analytics of this kind at all — these are north-star training-data
@@ -228,98 +224,3 @@ def agg_reservoir_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sample.join(totals, "priority").select(
         "priority", "o_orderkey", "rk", "n_group"
     )
-
-
-# ---------------------------------------------------------------------------
-# top principal direction by distributed power iteration
-# ---------------------------------------------------------------------------
-
-_PI_ITERS = 2
-_PI_DP = 6
-
-_POWER_SQL = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-comp AS (SELECT vec_id, unnest(generate_series(1, len(v))) AS dim,
-                unnest(v) AS x
-         FROM e),
-s1 AS (SELECT vec_id, round(sum(x), {_PI_DP}) AS s FROM comp GROUP BY 1),
-u1 AS (SELECT dim, round(sum(s1.s * comp.x), {_PI_DP}) AS u
-       FROM comp JOIN s1 USING (vec_id) GROUP BY dim),
-n1 AS (SELECT sqrt(sum(u * u)) AS nrm FROM u1),
-v1 AS (SELECT dim, round(u / nrm, {_PI_DP}) AS vd FROM u1, n1),
-s2 AS (SELECT vec_id, round(sum(comp.x * v1.vd), {_PI_DP}) AS s
-       FROM comp JOIN v1 USING (dim) GROUP BY vec_id),
-u2 AS (SELECT dim, round(sum(s2.s * comp.x), {_PI_DP}) AS u
-       FROM comp JOIN s2 USING (vec_id) GROUP BY dim),
-n2 AS (SELECT sqrt(sum(u * u)) AS nrm FROM u2)
-SELECT dim::BIGINT AS dim, round(u / nrm, {_PI_DP}) AS loading
-FROM u2, n2"""
-
-
-@register(
-    "llm_power_iteration",
-    _POWER_SQL,
-    doc="Top principal direction of the embedding cloud by "
-        f"{_PI_ITERS} distributed power-iteration steps (uncentered; "
-        "init = all-ones so the sign and trajectory are deterministic): "
-        "each step is score_i = <x_i, v> (vec-keyed partial-agg "
-        "shuffle) then u_d = sum_i score_i * x_id (dim-keyed "
-        "partial-agg shuffle) then an O(dim) renormalisation — the "
-        "matrix A^T A is never materialised, state between steps is "
-        "dim doubles on the driver (bounded control plane, same "
-        "contract as the k-means centroid collect), and every "
-        "data-sized stage is a linear scan. Intermediate scores and "
-        "loadings round at 6dp on BOTH engines so partial-agg "
-        "summation order cannot diverge the trajectories; the driver-"
-        "side norm sums the collected dims in sorted-dim order so the "
-        "Python reduction is order-deterministic too. Residual caveat "
-        "(advisor, r6): rounding happens AFTER a float sum, so a value "
-        "within ~5e-7 of a 6dp rounding tie could still land on "
-        "different sides in the two engines and amplify through the "
-        "second step — none of the driver fixtures sit near a tie, and "
-        "a divergence would surface as a hash mismatch, not silent "
-        "corruption. The spectral "
-        "complement to llm_embedding_drift: a rotating top direction "
-        "between snapshots flags representation drift that centroid "
-        "deltas miss.",
-    tags=("llm", "similarity", "iterative"),
-)
-def llm_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.llm.similarity import _as_double
-
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double("embedding").alias("v")
-    )
-    comp = e.select(
-        "vec_id", F.posexplode("v").alias("pos", "x")
-    ).select("vec_id", (F.col("pos") + 1).cast("long").alias("dim"), "x")
-    comp = comp.localCheckpoint(eager=False)  # consumed 2x per iteration
-
-    # iteration 1: v0 = all-ones, so <x_i, v0> is just the component sum
-    s = comp.groupBy("vec_id").agg(F.round(F.sum("x"), _PI_DP).alias("s"))
-    u = (
-        comp.join(s, "vec_id")
-        .groupBy("dim")
-        .agg(F.round(F.sum(F.col("s") * F.col("x")), _PI_DP).alias("u"))
-    )
-    for _ in range(_PI_ITERS - 1):
-        # O(dim) rows: bounded driver-side collect, like the k-means /
-        # PQ codebook control plane
-        rows = sorted(u.collect(), key=lambda r: r["dim"])
-        nrm = float(sum(r["u"] * r["u"] for r in rows)) ** 0.5
-        vd = [(int(r["dim"]), _round_half_up(r["u"] / nrm, _PI_DP)) for r in rows]
-        v_df = e.sparkSession.createDataFrame(vd, "dim long, vd double")
-        s = (
-            comp.join(F.broadcast(v_df), "dim")
-            .groupBy("vec_id")
-            .agg(F.round(F.sum(F.col("x") * F.col("vd")), _PI_DP).alias("s"))
-        )
-        u = (
-            comp.join(s, "vec_id")
-            .groupBy("dim")
-            .agg(F.round(F.sum(F.col("s") * F.col("x")), _PI_DP).alias("u"))
-        )
-    rows = u.collect()
-    nrm = float(sum(r["u"] * r["u"] for r in rows)) ** 0.5
-    out = [(int(r["dim"]), _round_half_up(r["u"] / nrm, _PI_DP)) for r in rows]
-    return e.sparkSession.createDataFrame(out, "dim long, loading double")

@@ -1,4 +1,5 @@
-"""Round-7 catalog: real multimodal decode and top-2 spectral directions.
+"""Round-7 catalog: real multimodal decode, sharding, vocabulary and LM
+passes (its top-2 spectral-directions entry is in catalog_similarity.py).
 
 * ``llm_multimodal_decode_ppm`` / ``llm_multimodal_decode_wav`` — the
   multimodal decode interior made REAL (verdict round-6 task 4): a pure
@@ -6,13 +7,9 @@
   inside the existing ``mapInPandas`` plumbing, over container files
   built deterministically from the documents table, with integer-exact
   stats the DuckDB oracle reproduces byte-for-byte from the text.
-* ``llm_power_iteration_2`` — top TWO principal directions via power
-  iteration + one rank-1 deflation (verdict round-6 stretch task 8):
-  drift monitoring sees a plane, not a line; same O(dim) driver-state
-  contract as ``llm_power_iteration``.
 
 Reference parity note: the reference ETL (helium-arango-etl-lite) has no
-multimodal or spectral analytics — north-star training-data operators,
+multimodal analytics — north-star training-data operators,
 same family as plans/catalog_llm.py.
 """
 
@@ -22,7 +19,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.llm import multimodal as mm
-from .catalog_round6 import _round_half_up
 from .registry import EVENTS_NORM, load_events, load_table, register
 
 # ---------------------------------------------------------------------------
@@ -113,132 +109,6 @@ FROM s GROUP BY doc_id, n"""
 def llm_multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return mm.decode_wav(mm.encode_wav_from_text(docs))
-
-
-# ---------------------------------------------------------------------------
-# top-2 spectral directions: power iteration + rank-1 deflation
-# ---------------------------------------------------------------------------
-
-_PI_DP = 6
-
-_POWER2_SQL = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-comp AS (SELECT vec_id, unnest(generate_series(1, len(v))) AS dim,
-                unnest(v) AS x
-         FROM e),
-s1 AS (SELECT vec_id, round(sum(x), {_PI_DP}) AS s FROM comp GROUP BY 1),
-u1 AS (SELECT dim, round(sum(s1.s * comp.x), {_PI_DP}) AS u
-       FROM comp JOIN s1 USING (vec_id) GROUP BY dim),
-n1 AS (SELECT sqrt(sum(u * u)) AS nrm FROM u1),
-v1 AS (SELECT dim, round(u / nrm, {_PI_DP}) AS vd FROM u1, n1),
-s2 AS (SELECT vec_id, round(sum(comp.x * v1.vd), {_PI_DP}) AS s
-       FROM comp JOIN v1 USING (dim) GROUP BY vec_id),
-u2 AS (SELECT dim, round(sum(s2.s * comp.x), {_PI_DP}) AS u
-       FROM comp JOIN s2 USING (vec_id) GROUP BY dim),
-n2 AS (SELECT sqrt(sum(u * u)) AS nrm FROM u2),
-vf AS (SELECT dim, round(u / nrm, {_PI_DP}) AS vd FROM u2, n2),
-proj AS (SELECT vec_id, round(sum(comp.x * vf.vd), {_PI_DP}) AS p
-         FROM comp JOIN vf USING (dim) GROUP BY vec_id),
-comp2 AS (SELECT comp.vec_id, comp.dim,
-                 round(comp.x - proj.p * vf.vd, {_PI_DP}) AS x
-          FROM comp JOIN proj USING (vec_id) JOIN vf USING (dim)),
-s1b AS (SELECT vec_id, round(sum(x), {_PI_DP}) AS s FROM comp2 GROUP BY 1),
-u1b AS (SELECT dim, round(sum(s1b.s * comp2.x), {_PI_DP}) AS u
-        FROM comp2 JOIN s1b USING (vec_id) GROUP BY dim),
-n1b AS (SELECT sqrt(sum(u * u)) AS nrm FROM u1b),
-v1b AS (SELECT dim, round(u / nrm, {_PI_DP}) AS vd FROM u1b, n1b),
-s2b AS (SELECT vec_id, round(sum(comp2.x * v1b.vd), {_PI_DP}) AS s
-        FROM comp2 JOIN v1b USING (dim) GROUP BY vec_id),
-u2b AS (SELECT dim, round(sum(s2b.s * comp2.x), {_PI_DP}) AS u
-        FROM comp2 JOIN s2b USING (vec_id) GROUP BY dim),
-n2b AS (SELECT sqrt(sum(u * u)) AS nrm FROM u2b)
-SELECT 1::BIGINT AS component, dim::BIGINT AS dim,
-       round(u / nrm, {_PI_DP}) AS loading
-FROM u2, n2
-UNION ALL
-SELECT 2::BIGINT, dim::BIGINT, round(u / nrm, {_PI_DP})
-FROM u2b, n2b"""
-
-
-def _pi_two_steps(comp: DataFrame) -> list[tuple[int, float]]:
-    """Two distributed power-iteration steps over (vec_id, dim, x) rows
-    starting from the all-ones vector; returns the normalised direction
-    as [(dim, loading)]. Every data-sized stage is a partial-agg'd
-    shuffle rounded at 6dp (cross-engine determinism); driver state is
-    O(dim) and summed in sorted-dim order."""
-    spark = comp.sparkSession
-    s = comp.groupBy("vec_id").agg(F.round(F.sum("x"), _PI_DP).alias("s"))
-    u = (
-        comp.join(s, "vec_id")
-        .groupBy("dim")
-        .agg(F.round(F.sum(F.col("s") * F.col("x")), _PI_DP).alias("u"))
-    )
-    rows = sorted(u.collect(), key=lambda r: r["dim"])
-    nrm = float(sum(r["u"] * r["u"] for r in rows)) ** 0.5
-    vd = [(int(r["dim"]), _round_half_up(r["u"] / nrm, _PI_DP)) for r in rows]
-    v_df = spark.createDataFrame(vd, "dim long, vd double")
-    s = (
-        comp.join(F.broadcast(v_df), "dim")
-        .groupBy("vec_id")
-        .agg(F.round(F.sum(F.col("x") * F.col("vd")), _PI_DP).alias("s"))
-    )
-    u = (
-        comp.join(s, "vec_id")
-        .groupBy("dim")
-        .agg(F.round(F.sum(F.col("s") * F.col("x")), _PI_DP).alias("u"))
-    )
-    rows = sorted(u.collect(), key=lambda r: r["dim"])
-    nrm = float(sum(r["u"] * r["u"] for r in rows)) ** 0.5
-    return [(int(r["dim"]), _round_half_up(r["u"] / nrm, _PI_DP)) for r in rows]
-
-
-@register(
-    "llm_power_iteration_2",
-    _POWER2_SQL,
-    doc="Top TWO principal directions of the embedding cloud: the same "
-        "2-step distributed power iteration as llm_power_iteration, "
-        "then ONE rank-1 deflation (x' = x - <x, v1> v1 — a vec-keyed "
-        "projection shuffle plus a broadcast of the O(dim) direction) "
-        "and a second 2-step iteration on the deflated components. "
-        "Drift monitoring over a PLANE catches rotations within the "
-        "dominant subspace that the single-direction entry is blind "
-        "to. Same scale contract: A^T A never materialises, driver "
-        "state is 2 x dim doubles (sorted-dim deterministic sums), "
-        "every data-sized stage is a linear partial-agg'd scan, and "
-        "all intermediates round at 6dp on both engines (same residual "
-        "tie caveat as llm_power_iteration).",
-    tags=("llm", "similarity", "iterative"),
-)
-def llm_power_iteration_2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.llm.similarity import _as_double
-
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double("embedding").alias("v")
-    )
-    comp = e.select(
-        "vec_id", F.posexplode("v").alias("pos", "x")
-    ).select("vec_id", (F.col("pos") + 1).cast("long").alias("dim"), "x")
-    comp = comp.localCheckpoint(eager=False)  # consumed by both components
-
-    l1 = _pi_two_steps(comp)
-    v1_df = spark.createDataFrame(l1, "dim long, vd double")
-    proj = (
-        comp.join(F.broadcast(v1_df), "dim")
-        .groupBy("vec_id")
-        .agg(F.round(F.sum(F.col("x") * F.col("vd")), _PI_DP).alias("p"))
-    )
-    comp2 = (
-        comp.join(proj, "vec_id")
-        .join(F.broadcast(v1_df), "dim")
-        .select(
-            "vec_id", "dim",
-            F.round(F.col("x") - F.col("p") * F.col("vd"), _PI_DP).alias("x"),
-        )
-        .localCheckpoint(eager=False)  # consumed twice per iteration
-    )
-    l2 = _pi_two_steps(comp2)
-    out = [(1, d, v) for d, v in l1] + [(2, d, v) for d, v in l2]
-    return spark.createDataFrame(out, "component long, dim long, loading double")
 
 
 # ---------------------------------------------------------------------------

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.llm import multimodal as mm
-from ..operators.llm import similarity, text
+from ..operators.llm import text
 from .registry import EVENTS_NORM, load_events, load_table, register
 
 _PPM_ROW = 3 * mm.PPM_WIDTH
@@ -267,72 +267,6 @@ def llm_quality_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             (F.col("below") + 0.5 * F.col("cnt")) / F.col("total"), 6
         ).alias("pct_in_source"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# hard-negative mining from the exact sampled k-NN shortlist
-# ---------------------------------------------------------------------------
-
-_HN_SHORTLIST = 10   # ANN shortlist depth per query
-_HN_K = 3            # hard negatives kept per query
-_HN_DUP_T = 0.98     # cosine at/above this = positive/duplicate, excluded
-_HN_MOD = 4          # deterministic query sample: vec_id % 4 == 0
-
-_HN_SQL = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-p AS (SELECT a.vec_id AS qid, c.vec_id AS nid,
-             round(list_dot_product(a.v, c.v)
-                   / (sqrt(list_dot_product(a.v, a.v))
-                      * sqrt(list_dot_product(c.v, c.v))), 4) AS cos_sim
-      FROM e a JOIN e c ON a.vec_id <> c.vec_id
-      WHERE a.vec_id % {_HN_MOD} = 0),
-r AS (SELECT qid, nid, cos_sim,
-             row_number() OVER (PARTITION BY qid
-                                ORDER BY cos_sim DESC, nid) AS rank
-      FROM p),
-s AS (SELECT * FROM r WHERE rank <= {_HN_SHORTLIST}),
-n AS (SELECT qid, nid, cos_sim,
-             row_number() OVER (PARTITION BY qid
-                                ORDER BY cos_sim DESC, nid) AS neg_rank
-      FROM s WHERE cos_sim < {_HN_DUP_T})
-SELECT qid, nid, cos_sim, neg_rank FROM n WHERE neg_rank <= {_HN_K}"""
-
-
-@register(
-    "llm_hard_negatives",
-    _HN_SQL,
-    doc=f"Hard-negative mining for embedding/retrieval training: for a "
-        f"deterministic query sample (vec_id % {_HN_MOD}), take the "
-        f"exact top-{_HN_SHORTLIST} neighbour shortlist, drop "
-        f"positives/near-dups (cos >= {_HN_DUP_T}), keep the "
-        f"{_HN_K} hardest remaining — the highest-similarity TRUE "
-        "negatives that make contrastive batches informative. Mining "
-        "from the shortlist (not the full ranking) is the production "
-        "contract: at 100 TB the shortlist comes from the same sampled "
-        "GEMM scan knn_join_sampled uses (query sample broadcasts, one "
-        "corpus scan, per-partition top-k, bounded merge — never "
-        "corpus x corpus), and the dedup filter + rerank run on "
-        f"<= {_HN_SHORTLIST} rows per query. Same 4dp half-away "
-        "rounding and ascending-id tie-break as every kNN entry "
-        "(operators/llm/similarity.py:knn_join_sampled).",
-    tags=("llm", "similarity", "sampling"),
-)
-def llm_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    short = similarity.knn_join_sampled(
-        emb, k=_HN_SHORTLIST, sample_mod=_HN_MOD
-    )
-    neg = short.filter(F.col("cos_sim") < _HN_DUP_T)
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cos_sim").desc(), F.col("nid")
-    )
-    return (
-        neg.select(
-            "qid", "nid", "cos_sim",
-            F.row_number().over(w).alias("neg_rank"),
-        )
-        .filter(F.col("neg_rank") <= _HN_K)
     )
 
 

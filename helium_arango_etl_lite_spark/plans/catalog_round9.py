@@ -25,16 +25,14 @@ policy the round-8 scale soak called for.
   under the uncapped per-source policy; this is the policy a real
   100 TB packing job ships. Certified by the same never-sees-a-tar-
   byte offset/md5 oracle as llm_webdataset_index.
-* ``llm_ann_graph_route`` — graph-routed (HNSW-class) ANN: beam search
-  over a two-table bucketed-LSH neighbour graph with a coarse entry
-  layer and visited exclusion; the oracle unrolls the whole walk.
 * ``llm_gzip_jsonl_roundtrip`` — multi-member ``.jsonl.gz`` pack +
   member-walking read (zlib.decompressobj framing, per-member CRC),
   certifying the compressed-JSONL container end to end.
 
 Reference parity note: the reference ETL (helium-arango-etl-lite) has
-none of these; they extend the north-star multimodal + storage +
-similarity families (SURVEY.md section 2.8).
+none of these; they extend the north-star multimodal + storage
+families (SURVEY.md section 2.8). The graph-routed ANN entry of this
+round is in catalog_similarity.py.
 """
 
 from __future__ import annotations
@@ -231,169 +229,6 @@ def llm_webdataset_index_capped(
     )
     idx = index_tar_shards(pack_tar_shards(capped, key_col="shard_key"))
     return idx.withColumnRenamed("source", "shard_key")
-
-
-# ---------------------------------------------------------------------------
-# graph-routed ANN: beam search over a kNN graph (the HNSW-class member)
-# ---------------------------------------------------------------------------
-
-_GR_K = 5         # final neighbours per query
-_GR_HOPS = 4      # fixed beam-search rounds (unrolled in the oracle)
-_GR_BEAM = 12     # frontier width per query
-_GR_ENTRIES = 6   # per-query entry points kept from the coarse layer
-_GR_EMOD = 16     # coarse routing layer = vec_id % _GR_EMOD == 0
-_GR_QMOD = 25     # queries = vec_id % _GR_QMOD == 0
-_GR_EDGE_K = 8    # graph out-degree per plane table (bucketed top-k)
-_GR_SEEDS = (7, 11)  # two independent LSH plane tables (see docstring)
-
-
-def _gr_bucket_expr(seed: int) -> str:
-    """DuckDB rendering of the pinned-plane LSH bucket id over a
-    DOUBLE[] column ``v`` (the catalog dials: NEAR_DUP_PLANES planes,
-    EMB_DIM dims) — shared by every oracle that replays the bucketed
-    graph build (round 9 walks, round 10 incremental append)."""
-    from ..operators.llm.similarity import hyperplanes
-    from .catalog_llm import EMB_DIM, NEAR_DUP_PLANES
-
-    planes = hyperplanes(NEAR_DUP_PLANES, EMB_DIM, seed)
-    lits = ["[" + ", ".join(repr(x) for x in p) + "]" for p in planes]
-    return " + ".join(
-        f"(CASE WHEN list_dot_product(v, {p}) >= 0 "
-        f"THEN {1 << j} ELSE 0 END)"
-        for j, p in enumerate(lits)
-    )
-
-
-def _gr_shared_ctes() -> str:
-    """The CTEs every walk shares: embeddings, the two LSH plane
-    tables, the union-distinct edge graph, the node table, and the
-    coarse-layer sample."""
-    bucket_expr = _gr_bucket_expr
-
-    table_ctes, table_sels = [], []
-    for t, seed in enumerate(_GR_SEEDS):
-        table_ctes.append(f"""
-b{t} AS (SELECT vec_id, v, ({bucket_expr(seed)})::BIGINT AS bucket FROM e),
-ep{t} AS (SELECT a.vec_id AS src, c.vec_id AS dst,
-               round(list_dot_product(a.v, c.v)
-                     / (sqrt(list_dot_product(a.v, a.v))
-                        * sqrt(list_dot_product(c.v, c.v))), 4) AS cs
-        FROM b{t} a JOIN b{t} c
-          ON a.bucket = c.bucket AND a.vec_id <> c.vec_id),
-ek{t} AS (SELECT src, dst FROM (
-           SELECT src, dst, row_number() OVER (
-               PARTITION BY src ORDER BY cs DESC, dst) AS rk
-           FROM ep{t}) WHERE rk <= {_GR_EDGE_K})""")
-        table_sels.append(f"SELECT src, dst FROM ek{t}")
-    return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),{",".join(table_ctes)},
-edges AS (SELECT DISTINCT src, dst FROM (
-           {" UNION ALL ".join(table_sels)})),
-nodes AS (SELECT vec_id AS nid, v AS nv,
-                 sqrt(list_dot_product(v, v)) AS nn FROM e),
-ent AS (SELECT vec_id AS nid FROM e WHERE vec_id % {_GR_EMOD} = 0)"""
-
-
-def _gr_walk_ctes(rem: int, p: str) -> str:
-    """One batch's walk unrolled as CTEs (prefix ``p``): query table
-    (vec_id % _GR_QMOD == rem), coarse entry layer, _GR_HOPS rounds of
-    beam cut / visited exclusion / expansion / scoring / merge. The
-    final merged-seen CTE is ``{p}s{_GR_HOPS}``."""
-    cos = (f"round(list_dot_product({p}q.qv, n.nv) / ({p}q.qn * n.nn), 4)")
-    hop_ctes = []
-    for i in range(_GR_HOPS):
-        # frontier = best unexpanded nodes: excluding already-expanded
-        # nodes is what makes each hop explore new ground (see the
-        # Spark twin's comment — without it the walk stalls one hop out)
-        excl = "" if i == 0 else f"""
-          WHERE NOT EXISTS (SELECT 1 FROM {p}ex{i - 1} e
-                            WHERE e.query_id = {p}s{i}.query_id
-                              AND e.nid = {p}s{i}.nid)"""
-        ex = (
-            f"{p}ex{i} AS (SELECT query_id, nid FROM {p}f{i})" if i == 0
-            else
-            f"{p}ex{i} AS (SELECT query_id, nid FROM {p}ex{i - 1}\n"
-            f"           UNION ALL SELECT query_id, nid FROM {p}f{i})"
-        )
-        hop_ctes.append(f"""
-{p}f{i} AS (SELECT query_id, nid FROM (
-          SELECT query_id, nid, row_number() OVER (
-              PARTITION BY query_id ORDER BY cos_sim DESC, nid) AS rk
-          FROM {p}s{i}{excl}) WHERE rk <= {_GR_BEAM}),
-{ex},
-{p}x{i} AS (SELECT DISTINCT f.query_id, ed.dst AS nid
-         FROM {p}f{i} f JOIN edges ed ON ed.src = f.nid),
-{p}c{i} AS (SELECT x.query_id, x.nid, {cos} AS cos_sim
-         FROM {p}x{i} x JOIN nodes n ON n.nid = x.nid
-                     JOIN {p}q ON {p}q.query_id = x.query_id
-         WHERE x.nid <> x.query_id),
-{p}s{i + 1} AS (SELECT DISTINCT query_id, nid, cos_sim FROM (
-              SELECT * FROM {p}s{i} UNION ALL SELECT * FROM {p}c{i}))""")
-    return f"""
-{p}q AS (SELECT vec_id AS query_id, v AS qv,
-             sqrt(list_dot_product(v, v)) AS qn
-      FROM e WHERE vec_id % {_GR_QMOD} = {rem}),
-{p}sp AS (SELECT {p}q.query_id, ent.nid, {cos} AS cos_sim
-       FROM {p}q CROSS JOIN ent JOIN nodes n ON n.nid = ent.nid
-       WHERE ent.nid <> {p}q.query_id),
-{p}s0 AS (SELECT query_id, nid, cos_sim FROM (
-        SELECT query_id, nid, cos_sim, row_number() OVER (
-            PARTITION BY query_id ORDER BY cos_sim DESC, nid) AS rk
-        FROM {p}sp) WHERE rk <= {_GR_ENTRIES}),{",".join(hop_ctes)}"""
-
-
-def _gr_final_select(p: str, extra_cols: str = "") -> str:
-    return f"""
-SELECT {extra_cols}query_id, nid, cos_sim, rank FROM (
-  SELECT query_id, nid, cos_sim, row_number() OVER (
-      PARTITION BY query_id ORDER BY cos_sim DESC, nid) AS rank
-  FROM {p}s{_GR_HOPS})
-WHERE rank <= {_GR_K}"""
-
-
-def _graph_route_sql() -> str:
-    return _gr_shared_ctes() + "," + _gr_walk_ctes(0, "") + _gr_final_select("")
-
-
-@register(
-    "llm_ann_graph_route",
-    _graph_route_sql(),
-    doc=f"Graph-ROUTED ANN — the HNSW-class family member the LSH / IVF "
-        "/ PQ entries don't cover (named an open gap by the r8 "
-        "verdict). Three measured design decisions: (1) edges = the "
-        f"UNION of {len(_GR_SEEDS)} independent bucketed-LSH top-"
-        f"{_GR_EDGE_K} tables — one table is bucket-CONSTRAINED and "
-        "caps even unbounded-BFS reachability of true neighbours at "
-        "0.52, two tables lift it to 1.00 (the diversity role of "
-        "NN-descent's random links); (2) per-query entry points from a "
-        f"coarse routing layer (exact-score the id%{_GR_EMOD} sample, "
-        f"keep the best {_GR_ENTRIES}) — HNSW's upper layers' role, "
-        "without it the walk strands in the entry points' clusters; "
-        f"(3) {_GR_HOPS} beam-search rounds (beam {_GR_BEAM}) that "
-        "expand only NOT-YET-EXPANDED nodes — without the visited "
-        "exclusion the beam re-expands the same top nodes and stalls "
-        "one hop out. Final recall@5 vs exact kNN: 0.98 on an "
-        "8-cluster fixture (tests pin >= 0.9). The ORACLE UNROLLS THE "
-        "WALK: graph build, every hop's beam cut, visited exclusion, "
-        "expansion, scoring, and merge are replayed in pure SQL, so "
-        "the driver hash certifies the traversal itself, not just the "
-        "output shape. SCALE: per-hop state is queries x beam "
-        "(broadcast side); each hop costs one edges scan + one "
-        "node-table equi-join — 2 x hops corpus scans TOTAL regardless "
-        "of corpus size, vs per-query bucket/cell scans for LSH/IVF "
-        "(operators/llm/similarity.py:graph_route_topk).",
-    tags=("llm", "similarity", "topk", "graph", "scale"),
-)
-def llm_ann_graph_route(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.llm.similarity import graph_route_topk
-    from .catalog_llm import EMB_DIM, NEAR_DUP_PLANES
-
-    return graph_route_topk(
-        load_table(spark, sf_dir, "embeddings"),
-        k=_GR_K, hops=_GR_HOPS, beam=_GR_BEAM, n_entries=_GR_ENTRIES,
-        entry_mod=_GR_EMOD, query_mod=_GR_QMOD, edge_k=_GR_EDGE_K,
-        num_planes=NEAR_DUP_PLANES, seeds=_GR_SEEDS, dim=EMB_DIM,
-    )
 
 
 # ---------------------------------------------------------------------------

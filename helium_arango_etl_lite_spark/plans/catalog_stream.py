@@ -43,14 +43,16 @@ from ..streaming.stateful import (
     hll_registers_stream, running_totals, scd2_stream, sessionize,
     sessionize_ooo,
 )
-from .catalog_llm import EMB_DIM, NEAR_DUP_PLANES
 from .catalog_round5 import _CMS_D, _CMS_K, _CMS_SQL, _CMS_W, _HLL_SQL
 from .catalog_round5b import _HQ_BINS, _HQ_QUANTILES, _HQ_SQL
 from .catalog_round8 import _CUSUM_H, _CUSUM_MULT, _CUSUM_SQL
 from .catalog_round8c import _SCD2_SQL
-from .catalog_round9 import _GR_EDGE_K, _GR_SEEDS, _gr_bucket_expr
 from .catalog_round10c import _CDC_SQL, _cdc_log
 from .catalog_round10d import _ATTR_SQL
+from .catalog_similarity import (
+    EMB_DIM, NEAR_DUP_PLANES, _GR_EDGE_K, _GR_SEEDS, _bucketed_sql,
+    _edge_topk_sql,
+)
 from .registry import EVENTS_NORM, load_events, load_table, register
 from .replay import last_emission, run_replay, scratch_dir, time_thirds
 
@@ -812,25 +814,16 @@ _INGEST_BATCHES = 3
 
 
 def _stream_ann_sql() -> str:
-    cos = ("round(list_dot_product(a.v, c.v)"
-           " / (sqrt(list_dot_product(a.v, a.v))"
-           " * sqrt(list_dot_product(c.v, c.v))), 4)")
     parts, sels = [], []
     for t, seed in enumerate(_GR_SEEDS):
-        b = _gr_bucket_expr(seed)
+        b = _bucketed_sql("e", seed=seed)
         for bt in range(_INGEST_BATCHES):
             parts.append(f"""
-q{t}_{bt} AS (SELECT vec_id, v, ({b})::BIGINT AS bucket FROM e
+q{t}_{bt} AS ({b}
         WHERE vec_id % {_INGEST_BATCHES} = {bt}),
-c{t}_{bt} AS (SELECT vec_id, v, ({b})::BIGINT AS bucket FROM e
+c{t}_{bt} AS ({b}
         WHERE vec_id % {_INGEST_BATCHES} <= {bt}),
-p{t}_{bt} AS (SELECT a.vec_id AS src, c.vec_id AS dst, {cos} AS cs
-        FROM q{t}_{bt} a JOIN c{t}_{bt} c
-          ON a.bucket = c.bucket AND a.vec_id <> c.vec_id),
-k{t}_{bt} AS (SELECT src, dst FROM (
-           SELECT src, dst, row_number() OVER (
-               PARTITION BY src ORDER BY cs DESC, dst) AS rk
-           FROM p{t}_{bt}) WHERE rk <= {_GR_EDGE_K})""")
+{_edge_topk_sql(f"p{t}_{bt}", f"k{t}_{bt}", f"q{t}_{bt}", f"c{t}_{bt}")}""")
             sels.append(f"SELECT src, dst FROM k{t}_{bt}")
             sels.append(f"SELECT dst AS src, src AS dst FROM k{t}_{bt}")
     return f"""
@@ -861,7 +854,7 @@ SELECT DISTINCT src, dst FROM ({" UNION ALL ".join(sels)})"""
         "per batch O(|batch| x bucket density) — the streaming twin of "
         "the append soak's economics "
         "(operators/llm/similarity.py:knn_join_bucketed corpus= form; "
-        "plans/catalog_round10.py).",
+        "plans/catalog_similarity.py).",
     tags=("streaming", "similarity", "graph", "state", "scale"),
 )
 def stream_ann_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -54,10 +54,11 @@ RETENTION_BLOCKS = 7200
 BUCKET_COL = "block_bucket"
 
 
-def with_block_bucket(df: DataFrame, blocks_per_bucket: int = RETENTION_BLOCKS) -> DataFrame:
-    """Add the partition column ``block_bucket = block // N``. Sized to the
-    retention window so retention is exactly one partition boundary."""
-    return df.selectExpr("*", f"CAST(floor(block / {blocks_per_bucket}) AS BIGINT) AS {BUCKET_COL}")
+def with_block_bucket(df: DataFrame) -> DataFrame:
+    """Add the partition column ``block_bucket = block // RETENTION_BLOCKS``.
+    Sized to the retention window so retention is exactly one partition
+    boundary; ``_existing_keys`` prunes its probe with the same divisor."""
+    return df.selectExpr("*", f"CAST(floor(block / {RETENTION_BLOCKS}) AS BIGINT) AS {BUCKET_COL}")
 
 
 def has_data_files(path: str) -> bool:
@@ -144,15 +145,14 @@ def apply_retention(
     path: str,
     tip_height: int,
     window: int = RETENTION_BLOCKS,
-    blocks_per_bucket: int = RETENTION_BLOCKS,
 ) -> list[int]:
     """Drop every bucket whose entire block range is below
     ``tip_height - window`` (follower.py:210-214 made metadata-only).
 
-    A bucket B covers blocks [B*N, (B+1)*N); it is droppable iff
-    ``(B+1)*N <= floor``. Returns the dropped bucket ids. Local-FS
-    implementation removes partition directories; on Delta/Iceberg this is
-    the same decision feeding ``DELETE WHERE``/``DROP PARTITION``.
+    A bucket B covers blocks [B*N, (B+1)*N) with N = RETENTION_BLOCKS; it
+    is droppable iff ``(B+1)*N <= floor``. Returns the dropped bucket ids.
+    Local-FS implementation removes partition directories; on Delta/Iceberg
+    this is the same decision feeding ``DELETE WHERE``/``DROP PARTITION``.
     """
     floor = tip_height - window
     dropped: list[int] = []
@@ -162,7 +162,7 @@ def apply_retention(
         if not name.startswith(f"{BUCKET_COL}="):
             continue
         bucket = int(name.split("=", 1)[1])
-        if (bucket + 1) * blocks_per_bucket <= floor:
+        if (bucket + 1) * RETENTION_BLOCKS <= floor:
             shutil.rmtree(os.path.join(path, name))
             dropped.append(bucket)
     return sorted(dropped)

@@ -283,7 +283,7 @@ def test_ann_index_append_invariants(spark, sf_dir):
     from helium_arango_etl_lite_spark.operators.llm.similarity import (
         build_route_graph,
     )
-    from helium_arango_etl_lite_spark.plans.catalog_llm import (
+    from helium_arango_etl_lite_spark.plans.catalog_similarity import (
         EMB_DIM, NEAR_DUP_PLANES,
     )
     from helium_arango_etl_lite_spark.plans.registry import load_table

@@ -231,7 +231,7 @@ def test_mmr_greedy_is_locally_optimal(spark, sf_dir):
     lambda*rel - (1-lambda)*max-sim-to-selected over the remaining
     candidates, with the (mmr desc, vec_id) tie-break."""
     from helium_arango_etl_lite_spark.operators.llm.similarity import cosine
-    from helium_arango_etl_lite_spark.plans.catalog_round10e import (
+    from helium_arango_etl_lite_spark.plans.catalog_similarity import (
         _MMR_LAMBDA,
         _MMR_N,
         llm_mmr_diversify,
@@ -410,7 +410,7 @@ def test_conversion_latency_conserves_eligible_purchases(spark, sf_dir):
 def test_rbo_overlap_is_monotone_and_bounded(spark, sf_dir):
     """overlap@d is non-decreasing, bounded by d, and rbo is a
     non-decreasing partial sum bounded by 1."""
-    import helium_arango_etl_lite_spark.plans.catalog_round10g as r10g
+    import helium_arango_etl_lite_spark.plans.catalog_similarity as r10g
 
     rows = sorted(
         r10g.llm_eval_rbo(spark, sf_dir).collect(), key=lambda r: r["d"]
@@ -437,7 +437,7 @@ def test_random_projection_errors_are_bounded(spark, sf_dir):
     """Cosines stay in [-1, 1] on both sides and err == |orig - proj|
     to 4dp; the mean distortion should be small but nonzero (the
     projection genuinely loses information at 16 of 64 dims)."""
-    import helium_arango_etl_lite_spark.plans.catalog_round10h as r10h
+    import helium_arango_etl_lite_spark.plans.catalog_similarity as r10h
 
     rows = r10h.llm_random_projection(spark, sf_dir).collect()
     assert len(rows) > 0
@@ -475,7 +475,7 @@ def test_kcenter_recursion_is_locally_greedy(spark, sf_dir):
     rank-r pick must have the SMALLEST max-cosine-to-selected among
     the remaining vectors ((ms, vec_id) tie-break), and the coverage
     curve (rank >= 2) must be non-decreasing."""
-    import helium_arango_etl_lite_spark.plans.catalog_round10h as r10h
+    import helium_arango_etl_lite_spark.plans.catalog_similarity as r10h
     from helium_arango_etl_lite_spark.plans.registry import load_table
 
     got = sorted(

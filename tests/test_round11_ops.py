@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from helium_arango_etl_lite_spark.plans.catalog_round11 import (
+from helium_arango_etl_lite_spark.plans.catalog_similarity import (
     _KCB_K,
     _KCB_M,
     _KCB_SCANS,
@@ -22,7 +22,7 @@ def test_kcenter_batched_shape_and_first_pick(spark, sf_dir):
     batch relaxation can locally reorder), but the FIRST pick of scan
     one must equal pure Gonzalez's rank-2 pick — both are the argmin
     of max-cos against the seed alone."""
-    from helium_arango_etl_lite_spark.plans.catalog_round10h import (
+    from helium_arango_etl_lite_spark.plans.catalog_similarity import (
         llm_kcenter_coreset,
     )
 
@@ -54,15 +54,15 @@ def test_ann_persist_writes_bucketed_table_and_matches_memory(
         append_route_graph,
         route_on_graph,
     )
-    from helium_arango_etl_lite_spark.plans.catalog_llm import (
+    from helium_arango_etl_lite_spark.plans.catalog_similarity import (
         EMB_DIM,
         NEAR_DUP_PLANES,
     )
-    from helium_arango_etl_lite_spark.plans.catalog_round9 import (
+    from helium_arango_etl_lite_spark.plans.catalog_similarity import (
         _GR_BEAM, _GR_EDGE_K, _GR_EMOD, _GR_ENTRIES, _GR_HOPS, _GR_K,
         _GR_QMOD, _GR_SEEDS,
     )
-    from helium_arango_etl_lite_spark.plans.catalog_round10 import (
+    from helium_arango_etl_lite_spark.plans.catalog_similarity import (
         _APPEND_MOD,
     )
     from helium_arango_etl_lite_spark.plans.registry import load_table

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from helium_arango_etl_lite_spark.plans.catalog_round12 import (
+from helium_arango_etl_lite_spark.plans.catalog_similarity import (
     _IPQ_QMOD,
     _IPQ_TOPK,
     llm_ann_ivf_pq_persist,
@@ -75,7 +75,7 @@ def test_ivf_pq_persist_search_matches_unpersisted_adc(spark, sf_dir):
     from helium_arango_etl_lite_spark.operators.llm.similarity import (
         pq_adc_topk,
     )
-    from helium_arango_etl_lite_spark.plans.catalog_round5 import (
+    from helium_arango_etl_lite_spark.plans.catalog_similarity import (
         _PQ_BLOCKS, _PQ_CODES,
     )
     from helium_arango_etl_lite_spark.plans.registry import load_table
@@ -257,10 +257,10 @@ def test_ivf_pq_append_encodes_against_frozen_artifacts(spark, sf_dir):
     from helium_arango_etl_lite_spark.operators.llm.similarity import (
         _as_double, ivf_pq_build, ivf_pq_encode,
     )
-    from helium_arango_etl_lite_spark.plans.catalog_round12 import (
+    from helium_arango_etl_lite_spark.plans.catalog_similarity import (
         _IPQ_APP_MOD, _IPQ_LLOYD_ITERS, llm_ann_ivf_pq_append,
     )
-    from helium_arango_etl_lite_spark.plans.catalog_llm import EMB_DIM, IVF_K
+    from helium_arango_etl_lite_spark.plans.catalog_similarity import EMB_DIM, IVF_K
     from helium_arango_etl_lite_spark.plans.registry import load_table
 
     llm_ann_ivf_pq_append(spark, sf_dir).collect()  # builds the table

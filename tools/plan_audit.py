@@ -1,5 +1,5 @@
 """Catalog-wide physical-plan audit: explain("formatted") every catalog
-entry (no execution) and flag the 100 TB anti-patterns:
+entry and flag the 100 TB anti-patterns:
 
 * CartesianProduct anywhere;
 * BroadcastNestedLoopJoin that is NOT a 1-row scalar cross join
@@ -17,6 +17,14 @@ comparing plans), and its checkpoint scans: a checkpointed frame prints as
 one ``Scan ExistingRDD``, so the shuffles that built it are not in the
 plan. An entry with checkpoint scans has at least the exchanges counted,
 and the exchange ranking prints its count as ``>=N``.
+
+The final plans are explained, not collected, but building an entry's
+DataFrame runs whatever the entry computes eagerly: its
+``localCheckpoint(eager=True)`` frames, its driver-side collects (the
+power-iteration loadings, the MMR and k-center picks) and the table
+writes of the persisted-index entries. A whole-catalog audit therefore
+executes a large part of the catalog; name entries to keep it short.
+Streaming replays (``REPLAY_OK_PREFIXES``) are skipped.
 
 Usage:  python tools/plan_audit.py [--json PLAN_AUDIT.json] [name ...]
 
