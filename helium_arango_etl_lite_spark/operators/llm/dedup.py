@@ -29,7 +29,21 @@ expression forms of the two Arrow kernels, kept as the references the
 agreement tests compare against.
 
 Every document frame carries ``ID_COL`` and ``TEXT_COL``; shingles are
-word ``SHINGLE_N``-grams.
+word ``SHINGLE_N``-grams. The settings no caller varies are module
+constants, and the catalog's DuckDB oracles (plans/catalog_dedup.py)
+read the same ones:
+
+=========================  =====  ==========================================
+constant                   value  what it sets
+=========================  =====  ==========================================
+``NUM_HASHES``             6      MinHash signature length K
+``BANDS``, ``BAND_ROWS``   3, 2   LSH bands, signature rows per band
+``SEED``                   42     seed of the (a, b) MinHash family
+``JACCARD_THRESHOLD``      0.8    exact shingle Jaccard that verifies a pair
+``CONTAINMENT_THRESHOLD``  0.9    shingle containment that flags a pair
+``SIMHASH_BITS``           16     SimHash width
+``SPAN_W``                 5      word length of a scrubbed repeated span
+=========================  =====  ==========================================
 
 Scale design (100 TB):
  * exact dedup — one hash-shuffle on a 16-byte key; map-side partial agg.
@@ -60,6 +74,14 @@ from ..graph_algorithms import undirected
 TEXT_COL = "text"  # text column of every document frame
 ID_COL = "doc_id"  # id column of every document frame
 SHINGLE_N = 3  # word n-gram length of the dedup shingles
+NUM_HASHES = 6
+BANDS = 3
+BAND_ROWS = NUM_HASHES // BANDS
+SEED = 42
+JACCARD_THRESHOLD = 0.8
+CONTAINMENT_THRESHOLD = 0.9
+SIMHASH_BITS = 16
+SPAN_W = 5
 #: dup_clusters stops after this many label-propagation rounds
 CC_MAX_ITERATIONS = 20
 
@@ -124,10 +146,9 @@ def array_shingles(t: Column, n: int = 3) -> Column:
     )
 
 
-def minhash_signature_df(
-    df: DataFrame, num_hashes: int = 6, seed: int = 42
-) -> DataFrame:
-    """Per-doc MinHash signature as ``sig_0..sig_{K-1}`` columns:
+def minhash_signature_df(df: DataFrame) -> DataFrame:
+    """Per-doc MinHash signature as ``sig_0..sig_{K-1}`` columns
+    (K = ``NUM_HASHES``, family seeded by ``SEED``):
     min over distinct word shingles of
     ``(a_i * hash32(shingle) + b_i) mod (2^31-1)``.
 
@@ -143,14 +164,14 @@ def minhash_signature_df(
     import numpy as np
     import pandas as pd
 
-    params = minhash_params(num_hashes, seed)
+    params = minhash_params(NUM_HASHES, SEED)
     a_vec = np.array([a for a, _ in params], dtype=np.int64)
     b_vec = np.array([b for _, b in params], dtype=np.int64)
     out_schema = StructType(
         [StructField(ID_COL, df.schema[ID_COL].dataType)]
-        + [StructField(f"sig_{i}", LongType()) for i in range(num_hashes)]
+        + [StructField(f"sig_{i}", LongType()) for i in range(NUM_HASHES)]
     )
-    empty_sig = np.full(num_hashes, MERSENNE_31, dtype=np.int64)
+    empty_sig = np.full(NUM_HASHES, MERSENNE_31, dtype=np.int64)
 
     def batches(it):
         for pdf in it:
@@ -180,50 +201,42 @@ def minhash_signature_df(
     return df.select(F.col(ID_COL), F.col(TEXT_COL)).mapInPandas(batches, out_schema)
 
 
-def _minhash_signature_expr(
-    df: DataFrame, num_hashes: int = 6, seed: int = 42
-) -> DataFrame:
+def _minhash_signature_expr(df: DataFrame) -> DataFrame:
     """:func:`minhash_signature_df` as pure JVM array expressions (one
     fold with a K-slot accumulator; md5 once per shingle) — the
     reference the Arrow kernel is tested bit-identical against."""
-    sig = minhash_signature(word_shingles(F.col(TEXT_COL), SHINGLE_N), num_hashes, seed)
+    sig = minhash_signature(word_shingles(F.col(TEXT_COL), SHINGLE_N), NUM_HASHES, SEED)
     return df.select(F.col(ID_COL), sig.alias("sig")).select(
         ID_COL,
-        *[F.col("sig").getItem(i).alias(f"sig_{i}") for i in range(num_hashes)],
+        *[F.col("sig").getItem(i).alias(f"sig_{i}") for i in range(NUM_HASHES)],
     )
 
 
-def _minhash_bands(
-    df: DataFrame, num_hashes: int, bands: int, seed: int
-) -> DataFrame:
-    """LSH banding: the signature split into ``bands`` bands of
-    r = K/bands rows, one ``(doc_id, band_key)`` row per band. Both
+def _minhash_bands(df: DataFrame) -> DataFrame:
+    """LSH banding: the signature split into ``BANDS`` bands of
+    ``BAND_ROWS`` rows, one ``(doc_id, band_key)`` row per band. Both
     consumers read it twice, so it is checkpointed and the signature
     computation (the expensive map stage) runs once."""
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes={num_hashes} must be divisible by bands={bands}"
-        )
-    r = num_hashes // bands
-    sig = minhash_signature_df(df, num_hashes, seed)
+    sig = minhash_signature_df(df)
     band_cols = [
-        F.concat_ws("_", F.lit(b), *[F.col(f"sig_{b * r + j}") for j in range(r)]).alias(f"band_{b}")
-        for b in range(bands)
+        F.concat_ws(
+            "_", F.lit(b),
+            *[F.col(f"sig_{b * BAND_ROWS + j}") for j in range(BAND_ROWS)],
+        ).alias(f"band_{b}")
+        for b in range(BANDS)
     ]
     banded = sig.select(F.col(ID_COL), F.explode(F.array(*band_cols)).alias("band_key"))
     return banded.localCheckpoint(eager=False)
 
 
-def minhash_candidate_pairs(
-    df: DataFrame, num_hashes: int = 6, bands: int = 3, seed: int = 42
-) -> DataFrame:
+def minhash_candidate_pairs(df: DataFrame) -> DataFrame:
     """Docs sharing any LSH band key (:func:`_minhash_bands`) are
     candidate duplicates.
 
     The self-join shuffles only (band_key, doc_id) — the full text never
     moves. Output: distinct (doc_a, doc_b) with doc_a < doc_b.
     """
-    banded = _minhash_bands(df, num_hashes, bands, seed)
+    banded = _minhash_bands(df)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -234,12 +247,10 @@ def minhash_candidate_pairs(
     )
 
 
-def minhash_star_pairs(
-    df: DataFrame, num_hashes: int = 6, bands: int = 3, seed: int = 42
-) -> DataFrame:
+def minhash_star_pairs(df: DataFrame) -> DataFrame:
     """STAR-topology LSH candidates: within each band bucket, every doc
     pairs with the bucket's MINIMUM doc id (the hub) instead of with
-    every other member — O(bands * n) candidate pairs with NO window
+    every other member — O(BANDS * n) candidate pairs with NO window
     pass, versus O(sum bucket^2) for all-pairs banding or a
     row_number-capped subset of it.
 
@@ -252,13 +263,13 @@ def minhash_star_pairs(
     candidate count stays linear. The trade: a member whose exact
     Jaccard to the HUB falls below threshold loses its link even when it
     would have verified against a nearer sibling — each band's
-    independent hub gives it ``bands`` chances. Deterministic: hub =
+    independent hub gives it ``BANDS`` chances. Deterministic: hub =
     min id, so a given corpus always stars the same way.
 
     Output: distinct (doc_a, doc_b) with doc_a < doc_b (the hub is the
     bucket min, so hub < member always holds).
     """
-    banded = _minhash_bands(df, num_hashes, bands, seed)
+    banded = _minhash_bands(df)
     hub = banded.groupBy("band_key").agg(F.min(ID_COL).alias("hub"))
     return (
         banded.join(hub, "band_key")
@@ -268,9 +279,7 @@ def minhash_star_pairs(
     )
 
 
-def exact_jaccard_on_pairs(
-    df: DataFrame, cands: DataFrame, threshold: float = 0.8
-) -> DataFrame:
+def exact_jaccard_on_pairs(df: DataFrame, cands: DataFrame) -> DataFrame:
     """The exact-Jaccard PRECISION stage over an arbitrary candidate-pair
     DataFrame (columns ``doc_a``, ``doc_b`` + optional pass-through
     columns): shingle arrays are materialised only for docs appearing in
@@ -306,21 +315,21 @@ def exact_jaccard_on_pairs(
         .select(
             "doc_a", "doc_b",
             F.round(jac, 4).alias("jaccard"),
-            (jac >= threshold).alias("verified"),
+            (jac >= JACCARD_THRESHOLD).alias("verified"),
             *extra_cols,
         )
     )
 
 
-def simhash(df: DataFrame, bits: int = 16) -> DataFrame:
-    """SimHash over distinct whitespace tokens.
+def simhash(df: DataFrame) -> DataFrame:
+    """``SIMHASH_BITS``-wide SimHash over distinct whitespace tokens.
 
     bit_j = sign of sum over tokens of (2*((hash64(token) >> j) & 1) - 1);
     near-duplicates have small Hamming distance between simhash values.
     Zero shuffle.
 
     One md5 per distinct token via hashlib, the per-bit votes as a single
-    numpy broadcast — the ``bits`` interpreted aggregate folds of the
+    numpy broadcast — the ``SIMHASH_BITS`` interpreted aggregate folds of the
     expression form (:func:`_simhash_expr`, bit-identical by test) each
     re-walk the token array outside codegen, which measured slower and
     GC-noisy.
@@ -339,7 +348,7 @@ def simhash(df: DataFrame, bits: int = 16) -> DataFrame:
     def batches(it):
         nonlocal shifts
         if shifts is None:
-            shifts = np.arange(bits, dtype=np.int64)
+            shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
         for pdf in it:
             out = np.empty(len(pdf), dtype=np.int64)
             for i, txt in enumerate(pdf[TEXT_COL].values):
@@ -359,7 +368,7 @@ def simhash(df: DataFrame, bits: int = 16) -> DataFrame:
     return df.select(F.col(ID_COL), F.col(TEXT_COL)).mapInPandas(batches, out_schema)
 
 
-def _simhash_expr(df: DataFrame, bits: int = 16) -> DataFrame:
+def _simhash_expr(df: DataFrame) -> DataFrame:
     """:func:`simhash` as pure JVM expressions — the reference the Arrow
     kernel is tested bit-identical against."""
     hs = F.transform(F.array_distinct(tokens(F.col(TEXT_COL))), hash64)
@@ -369,7 +378,7 @@ def _simhash_expr(df: DataFrame, bits: int = 16) -> DataFrame:
         return lambda s, h: s + F.shiftright(h, j).bitwiseAND(F.lit(1)) * 2 - 1
 
     acc = F.lit(0).cast("long")
-    for j in range(bits):
+    for j in range(SIMHASH_BITS):
         vote = F.aggregate(hs, F.lit(0).cast("long"), _vote(j))
         acc = acc + F.shiftleft((vote >= 0).cast("long"), j)
     return df.select(F.col(ID_COL), acc.alias("simhash"))
@@ -499,7 +508,7 @@ def _shingle_overlap(
 
 
 def ngram_jaccard_pairs(
-    df: DataFrame, threshold: float = 0.8, max_shingle_freq: int | None = None,
+    df: DataFrame, max_shingle_freq: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for document pairs (doc_a < doc_b)
     sharing >= 1 shingle: jaccard = inter / (|A| + |B| - inter) over
@@ -513,14 +522,12 @@ def ngram_jaccard_pairs(
     return (
         inter.join(sb, "doc_b")
         .select("doc_a", "doc_b", jacc.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
 
 
 def minhash_verified_pairs(
-    df: DataFrame, threshold: float = 0.8, num_hashes: int = 6,
-    bands: int = 3, seed: int = 42, per_doc_cap: int | None = None,
-    report_fanout: bool = True,
+    df: DataFrame, per_doc_cap: int | None = None, report_fanout: bool = True,
 ) -> DataFrame:
     """Two-stage dedup: MinHash-LSH candidate generation (recall stage)
     followed by EXACT n-gram Jaccard computed only on the candidate pairs
@@ -556,7 +563,7 @@ def minhash_verified_pairs(
     candidates survive with ``verified = false``, making the precision of
     the sketch stage directly observable.
     """
-    cands = minhash_candidate_pairs(df, num_hashes, bands, seed)
+    cands = minhash_candidate_pairs(df)
     # both join sides consume cands; checkpoint so the LSH band join and
     # the signature map stage run once, not three times
     cands = cands.localCheckpoint(eager=False)
@@ -573,7 +580,7 @@ def minhash_verified_pairs(
             .drop("_rk")
             .localCheckpoint(eager=False)
         )
-    return exact_jaccard_on_pairs(df, cands, threshold)
+    return exact_jaccard_on_pairs(df, cands)
 
 
 def window_dup_stats(
@@ -632,7 +639,7 @@ def window_dup_stats(
     )
 
 
-def containment_pairs(df: DataFrame, threshold: float = 0.9) -> DataFrame:
+def containment_pairs(df: DataFrame) -> DataFrame:
     """Shingle CONTAINMENT |A intersect B| / |A| for ordered pairs — the
     asymmetric cousin of :func:`ngram_jaccard_pairs`, and the right
     score for quote/inclusion detection: a short document embedded
@@ -650,17 +657,17 @@ def containment_pairs(df: DataFrame, threshold: float = 0.9) -> DataFrame:
     cont = F.round(F.col("inter").cast("double") / F.col("na").cast("double"), 6)
     return (
         inter.select("doc_a", "doc_b", cont.alias("containment"))
-        .filter(F.col("containment") >= threshold)
+        .filter(F.col("containment") >= CONTAINMENT_THRESHOLD)
     )
 
 
 SPAN_OKEY_SHIFT = 1 << 20  # packs (doc_id, position) into one BIGINT
 
 
-def repeated_span_scrub(df: DataFrame, span_w: int = 5) -> DataFrame:
+def repeated_span_scrub(df: DataFrame) -> DataFrame:
     """Exact repeated-SPAN removal — the rewrite stage of suffix-style
     substring dedup (Lee et al., "Deduplicating Training Data Makes
-    Language Models Better"): every word ``span_w``-gram occurring more
+    Language Models Better"): every word ``SPAN_W``-gram occurring more
     than once in the corpus keeps its FIRST occurrence (min packed
     (doc_id, position) key) and every other occurrence is masked; a
     token is dropped when any masked span covers it. Detection-only
@@ -690,7 +697,7 @@ def repeated_span_scrub(df: DataFrame, span_w: int = 5) -> DataFrame:
     occ = (
         d.select(
             F.col(ID_COL),
-            F.posexplode(array_shingles(F.col("ws"), span_w)).alias(
+            F.posexplode(array_shingles(F.col("ws"), SPAN_W)).alias(
                 "p0", "gram"
             ),
         )
@@ -720,7 +727,7 @@ def repeated_span_scrub(df: DataFrame, span_w: int = 5) -> DataFrame:
         masked.select(
             F.col(ID_COL),
             F.explode(
-                F.sequence(F.col("i"), F.col("i") + (span_w - 1))
+                F.sequence(F.col("i"), F.col("i") + (SPAN_W - 1))
             ).alias("idx"),
         )
         .groupBy(ID_COL)

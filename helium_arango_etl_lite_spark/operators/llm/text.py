@@ -18,6 +18,9 @@ whitespace tokens                ``dedup.tokens``                  lang_id, toke
 word n-grams, with multiplicity  ``dedup.word_shingles_all``       decontaminate,
                                                                    repetition_score
 stopword occurrence count        :func:`stopword_score`            lang_id, quality_score
+normalized-content md5           ``_normalized_md5``               fingerprint, the catalog's
+                                                                   cross-corpus dedup and
+                                                                   dataset card
 winnowing fingerprints (Arrow)   :func:`winnow_fingerprints`       the winnowing entries
 BPE merge loop                   ``_bpe_loop``                     bpe_train, bpe_encode,
                                                                    bpe_compression_curve,
@@ -124,11 +127,16 @@ def token_count(df: DataFrame) -> DataFrame:
     )
 
 
+def _normalized_md5() -> Column:
+    """md5 of the lowercased text with every whitespace run collapsed
+    to one space and the ends trimmed."""
+    return F.md5(F.trim(F.regexp_replace(F.lower(F.col(TEXT_COL)), r"\s+", " ")))
+
+
 def fingerprint(df: DataFrame) -> DataFrame:
     """Normalised-content fingerprint: md5 of lowercase, whitespace-collapsed
     text. The exact-dedup key for content-equivalent documents."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col(TEXT_COL)), r"\s+", " "))
-    return df.select(ID_COL, F.md5(norm).alias("fp"))
+    return df.select(ID_COL, _normalized_md5().alias("fp"))
 
 
 #: polynomial rolling-hash parameters (Rabin-Karp family): hash of a

@@ -1,15 +1,8 @@
 """LLM-data-pipeline query catalog (SURVEY.md section 2.8, north star).
 
-Dedup (exact / MinHash+LSH / SimHash / n-gram Jaccard), text analysis
-(lang-ID, quality, token counting, fingerprint), multimodal metadata. The
-embedding similarity entries are in catalog_similarity.py.
-
-Oracle strategy: the MinHash/SimHash/LSH oracles are generated
-programmatically from the SAME seeded parameters as the Spark operators,
-using the shared cross-engine base hash
-  Spark  conv(substr(md5(s),1,15),16,10)
-  DuckDB ('0x' || substr(md5(s),1,15))::BIGINT
-so even the sketch-based operators are value-hash verified, not rows-only.
+Text analysis (lang-ID, quality, token counting, fingerprint), multimodal
+metadata, corpus passes. The dedup entries are in catalog_dedup.py, the
+embedding similarity entries in catalog_similarity.py.
 """
 
 from __future__ import annotations
@@ -17,29 +10,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.hashing import MERSENNE_31, minhash_params
-from ..operators.llm import dedup, text
+from ..operators.llm import text
+from .catalog_dedup import _NGRAMS_SQL, _NORM_FP_SQL
 from .registry import load_table, register
-
-M31 = MERSENNE_31
-NUM_HASHES = 6
-BANDS = 3
-SEED = 42
 
 
 # --------------------------------------------------------------------------
 # text analysis
 # --------------------------------------------------------------------------
-
-@register(
-    "llm_dedup_exact",
-    """SELECT md5(text) AS fp, min(doc_id) AS keeper_doc_id, count(*) AS n_copies
-       FROM documents GROUP BY 1""",
-    doc="Exact dedup by content hash: one 16-byte-key shuffle, partial agg.",
-    tags=("llm", "dedup"),
-)
-def llm_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.exact_dedup(load_table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -113,7 +91,7 @@ def llm_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "llm_fingerprint",
-    r"""SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
+    f"""SELECT doc_id, {_NORM_FP_SQL} AS fp
         FROM documents""",
     doc="Normalised-content fingerprint (lower + whitespace-collapse + md5).",
     tags=("llm", "text"),
@@ -143,135 +121,7 @@ def llm_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# sketch-based dedup: shared SQL fragments
-# --------------------------------------------------------------------------
-
-_SHINGLES_CTE = """
-tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-sh AS (SELECT doc_id,
-              list_distinct(CASE WHEN len(t) >= 3
-                   THEN list_transform(generate_series(1, len(t)-2),
-                                       i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-                   ELSE []::VARCHAR[] END) AS shd
-       FROM tok)
-"""
-
-_BASE_HASH_CTE = _SHINGLES_CTE + """,
-hs AS (SELECT doc_id,
-              list_transform(shd, s -> ('0x' || substr(md5(s), 1, 8))::BIGINT) AS h
-       FROM sh)
-"""
-
-
-def _sig_exprs() -> list[str]:
-    # same seeded family as minhash_signature: (a*x + b) mod (2^31-1), all
-    # operands < 2^32 so BIGINT arithmetic is exact in both engines
-    exprs = []
-    for i, (a, b) in enumerate(minhash_params(NUM_HASHES, SEED)):
-        exprs.append(
-            f"coalesce(list_min(list_transform(h, x -> (x * {a} + {b}) % {M31})), {M31}) AS sig_{i}"
-        )
-    return exprs
-
-
-_MINHASH_SIG_SQL = (
-    "WITH " + _BASE_HASH_CTE + "SELECT doc_id, " + ", ".join(_sig_exprs()) + " FROM hs"
-)
-
-_R = NUM_HASHES // BANDS
-_BAND_EXPRS = [
-    f"({b}::VARCHAR || '_' || sig_{b*_R}::VARCHAR || '_' || sig_{b*_R+1}::VARCHAR)"
-    for b in range(BANDS)
-]
-
-_MINHASH_PAIRS_SQL = (
-    "WITH " + _BASE_HASH_CTE
-    + ", sig AS (SELECT doc_id, " + ", ".join(_sig_exprs()) + " FROM hs)"
-    + ", bands AS (SELECT doc_id, unnest([" + ", ".join(_BAND_EXPRS) + "]) AS band_key FROM sig) "
-    + """SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         FROM bands a JOIN bands b ON a.band_key = b.band_key AND a.doc_id < b.doc_id"""
-)
-
-
-@register(
-    "llm_minhash_signature",
-    _MINHASH_SIG_SQL,
-    doc="MinHash signatures (K=6, word-3-gram shingles, universal hash family "
-        "mod 2^61-1): per-row JVM expressions, zero shuffle; the oracle "
-        "recomputes the identical family in DuckDB HUGEINT arithmetic.",
-    tags=("llm", "dedup", "sketch"),
-)
-def llm_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.minhash_signature_df(
-        load_table(spark, sf_dir, "documents"), num_hashes=NUM_HASHES, seed=SEED
-    )
-
-
-@register(
-    "llm_dedup_minhash",
-    _MINHASH_PAIRS_SQL,
-    doc="MinHash LSH candidate pairs (3 bands x 2 rows): the band join "
-        "shuffles only (band_key, doc_id) — the corpus never moves.",
-    tags=("llm", "dedup", "sketch"),
-)
-def llm_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.minhash_candidate_pairs(
-        load_table(spark, sf_dir, "documents"),
-        num_hashes=NUM_HASHES, bands=BANDS, seed=SEED,
-    )
-
-
-_SIMHASH_BITS = 16
-_SIMHASH_SQL = (
-    """WITH tok AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS t FROM documents),
-hs AS (SELECT doc_id, list_transform(t, x -> ('0x' || substr(md5(x), 1, 15))::BIGINT) AS h FROM tok)
-SELECT doc_id, ("""
-    + " + ".join(
-        f"(CASE WHEN coalesce(list_sum(list_transform(h, x -> ((x >> {j}) & 1) * 2 - 1)), 0) >= 0 THEN {1 << j} ELSE 0 END)"
-        for j in range(_SIMHASH_BITS)
-    )
-    + ")::BIGINT AS simhash FROM hs"
-)
-
-
-@register(
-    "llm_dedup_simhash",
-    _SIMHASH_SQL,
-    doc="16-bit SimHash over distinct tokens (sign of per-bit vote sums); "
-        "near-dups have small Hamming distance. Zero-shuffle per-row work.",
-    tags=("llm", "dedup", "sketch"),
-)
-def llm_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.simhash(load_table(spark, sf_dir, "documents"), bits=_SIMHASH_BITS)
-
-
-@register(
-    "llm_dedup_ngram_jaccard",
-    "WITH " + _SHINGLES_CTE + """,
-       ex AS (SELECT doc_id, unnest(shd) AS s FROM sh),
-       sizes AS (SELECT doc_id, count(*) AS n_sh FROM ex GROUP BY 1),
-       pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-                 FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-                 GROUP BY 1, 2)
-       SELECT doc_a, doc_b,
-              inter::DOUBLE / (sa.n_sh + sb.n_sh - inter)::DOUBLE AS jaccard
-       FROM pairs
-       JOIN sizes sa ON sa.doc_id = doc_a
-       JOIN sizes sb ON sb.doc_id = doc_b
-       WHERE inter::DOUBLE / (sa.n_sh + sb.n_sh - inter)::DOUBLE >= 0.8""",
-    doc="Exact word-3-gram Jaccard >= 0.8 via exploded-shingle self-join; "
-        "at scale, frequency-cap ubiquitous shingles (max_shingle_freq) "
-        "and use MinHash-LSH as the candidate generator.",
-    tags=("llm", "dedup"),
-)
-def llm_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.ngram_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"), threshold=0.8
-    )
-
-
-# --------------------------------------------------------------------------
-# multimodal features, near-dup clusters, fingerprints and sampling
+# multimodal features, fingerprints and sampling
 # --------------------------------------------------------------------------
 
 
@@ -310,42 +160,6 @@ def llm_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_bytes",
         F.posexplode("feature").alias("bin", "frac"),
     ).withColumn("bin", F.col("bin").cast("long"))
-
-
-_CLUSTERS_SQL = (
-    "WITH RECURSIVE " + _BASE_HASH_CTE
-    + ", sig AS (SELECT doc_id, " + ", ".join(_sig_exprs()) + " FROM hs)"
-    + ", bands AS (SELECT doc_id, unnest([" + ", ".join(_BAND_EXPRS) + "]) AS band_key FROM sig)"
-    + """, cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                    FROM bands a JOIN bands b
-                    ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-edges AS (SELECT doc_a AS src, doc_b AS dst FROM cand
-          UNION SELECT doc_b, doc_a FROM cand),
-reach(src, dst) AS (
-    SELECT src, src FROM edges
-    UNION
-    SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
-SELECT src AS doc_id, min(dst) AS cluster_id FROM reach GROUP BY src"""
-)
-
-
-@register(
-    "llm_dup_clusters",
-    _CLUSTERS_SQL,
-    doc="Duplicate clusters: connected components over the MinHash LSH "
-        "candidate pairs via iterative min-label propagation (driver-"
-        "coordinated loop, one (node,label) shuffle per round, lineage "
-        "truncated per iteration). Turns pairwise candidates into dedup "
-        "groups with one keeper (min id). Oracle: recursive-CTE transitive "
-        "closure.",
-    tags=("llm", "dedup", "graph", "iterative"),
-)
-def llm_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = dedup.minhash_candidate_pairs(
-        load_table(spark, sf_dir, "documents"),
-        num_hashes=NUM_HASHES, bands=BANDS, seed=SEED,
-    )
-    return dedup.dup_clusters(pairs)
 
 
 _WK, _WWIN = 5, 4
@@ -497,72 +311,10 @@ def llm_regex_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "llm_dedup_exact_norm",
-    """SELECT md5(trim(regexp_replace(lower(text), ' +', ' ', 'g'))) AS fp,
-              min(doc_id) AS keeper_doc_id, count(*) AS n_copies
-       FROM documents GROUP BY 1""",
-    doc="Normalization-aware exact dedup: lowercase, collapse runs of "
-        "spaces, trim, THEN content-hash — catches the trivial-variant "
-        "duplicates byte-exact dedup misses. Same single 16-byte-key "
-        "shuffle as llm_dedup_exact; normalization is codegen string "
-        "work at the scan.",
-    tags=("llm", "dedup"),
-)
-def llm_dedup_exact_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), " +", " "))
-    return (
-        d.select(F.md5(norm).alias("fp"), F.col("doc_id"))
-        .groupBy("fp")
-        .agg(
-            F.min("doc_id").alias("keeper_doc_id"),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# train/eval decontamination + intra-doc repetition
-# --------------------------------------------------------------------------
-
-_NGRAM_SQL = (
-    "list_transform(generate_series(1, len(t) - {m}), "
-    "i -> array_to_string(t[i:i+{m}], ' '))"
-)
-
-
-@register(
-    "llm_decontaminate",
-    f"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
-                     FROM documents),
-        g0 AS (SELECT doc_id, unnest({_NGRAM_SQL.format(m=2)}) AS g
-               FROM toks),
-        g AS (SELECT DISTINCT doc_id, g FROM g0),
-        bench AS (SELECT DISTINCT g FROM g WHERE doc_id % 50 = 0)
-       SELECT g.doc_id, count(*) AS n_hit_grams
-       FROM g JOIN bench USING (g)
-       WHERE g.doc_id % 50 <> 0
-       GROUP BY 1""",
-    doc="Benchmark decontamination (GPT-3 appendix-C style n-gram "
-        "overlap): training docs sharing any word 3-gram with the "
-        "held-out eval slice (doc_id % 50 == 0 stands in for the "
-        "benchmark set). The eval side's distinct gram set broadcasts — "
-        "the probe is a map-side hash join over the train scan, no "
-        "shuffle of the big side (operators/llm/text.py:decontaminate).",
-    tags=("llm", "text", "dedup"),
-)
-def llm_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    train = d.filter(F.col("doc_id") % 50 != 0)
-    bench = d.filter(F.col("doc_id") % 50 == 0)
-    return text.decontaminate(train, bench, n=3)
-
-
-@register(
     "llm_repetition_score",
     f"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
                      FROM documents),
-        g AS (SELECT doc_id, {_NGRAM_SQL.format(m=2)} AS gs FROM toks)
+        g AS (SELECT doc_id, {_NGRAMS_SQL} AS gs FROM toks)
        SELECT doc_id, len(gs)::BIGINT AS n_grams,
               round((len(gs) - len(list_distinct(gs)))
                     / greatest(1, len(gs))::DOUBLE, 6) AS rep_ratio
@@ -623,36 +375,6 @@ def llm_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.bm25_search(
         load_table(spark, sf_dir, "documents"), list(_BM25_TERMS), k=10
     )
-
-
-@register(
-    "llm_cross_dedup",
-    """WITH fp AS (SELECT doc_id, source,
-                         md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
-                  FROM documents),
-       corpus AS (SELECT DISTINCT fp FROM fp
-                  WHERE CAST(substr(source, 4) AS BIGINT) < 10),
-       batch AS (SELECT doc_id, fp FROM fp
-                 WHERE CAST(substr(source, 4) AS BIGINT) >= 10)
-       SELECT b.doc_id FROM batch b
-       WHERE b.fp NOT IN (SELECT fp FROM corpus)""",
-    doc="Cross-corpus exact dedup: the new-crawl-vs-existing-corpus gate "
-        "every ingestion pipeline runs — normalized-content fingerprints "
-        "(same md5 key as llm_dedup_exact_norm) for the incoming batch "
-        "(src10+) anti-joined against the already-ingested corpus "
-        "(src0-9). Compiles to a left-anti hash join on a 32-char key; at "
-        "100 TB the corpus side is a bloom-filtered bucketed table so the "
-        "probe never shuffles the batch.",
-    tags=("llm", "dedup"),
-)
-def llm_cross_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    src_n = F.substring("source", 4, 10).cast("long")
-    fp = docs.select("doc_id", src_n.alias("src_n"), F.md5(norm).alias("fp"))
-    corpus = fp.filter(F.col("src_n") < 10).select("fp").distinct()
-    batch = fp.filter(F.col("src_n") >= 10)
-    return batch.join(corpus, "fp", "left_anti").select("doc_id")
 
 
 @register(

@@ -63,6 +63,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash32, hash32_oracle_sql
+from ..operators.llm.text import _normalized_md5
+from .catalog_dedup import _NORM_FP_SQL
 from .catalog_round9 import _CAP_MEMBERS as _ZIP_CAP
 from .registry import load_table, register
 
@@ -1048,10 +1050,10 @@ def dq_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dataset card: the one-scan release summary for the document corpus
 # ---------------------------------------------------------------------------
 
-_CARD_SQL = """
+_CARD_SQL = f"""
 WITH d AS (SELECT doc_id, lang, source, n_chars,
                   len(string_split(text, ' '))::BIGINT AS n_tok,
-                  md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))
+                  {_NORM_FP_SQL}
                     AS fp
            FROM documents)
 SELECT count(*)::BIGINT AS n_docs,
@@ -1085,13 +1087,10 @@ FROM d"""
 )
 def llm_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    norm = F.trim(
-        F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")
-    )
     d = docs.select(
         "lang", "source", "n_chars",
         F.size(F.split("text", " ")).cast("long").alias("n_tok"),
-        F.md5(norm).alias("fp"),
+        _normalized_md5().alias("fp"),
     )
     return d.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),

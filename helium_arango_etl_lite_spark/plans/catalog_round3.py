@@ -2,7 +2,8 @@
 rank distributions, string aggregation, and the remaining LLM
 training-data-pipeline passes (char entropy, sequence-length buckets,
 importance sampling). Its semantic-dedup and k-means entries are in
-catalog_similarity.py.
+catalog_similarity.py, its paragraph-dedup and capped-Jaccard entries in
+catalog_dedup.py.
 
 Same contract as every catalog module: each entry pairs a Spark DataFrame
 program with the DuckDB oracle SQL the driver runs side-by-side; aliases
@@ -495,47 +496,6 @@ def llm_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "llm_paragraph_dedup",
-    """WITH s AS (SELECT doc_id, unnest(string_split(text, '. ')) AS sent
-                  FROM documents),
-       f AS (SELECT doc_id, md5(sent) AS h FROM s WHERE strlen(sent) > 0),
-       d AS (SELECT h, count(DISTINCT doc_id) AS nd FROM f GROUP BY 1)
-       SELECT f.doc_id, count(*) AS n_sents,
-              sum(CASE WHEN d.nd > 1 THEN 1 ELSE 0 END)::BIGINT AS n_dup,
-              round(sum(CASE WHEN d.nd > 1 THEN 1 ELSE 0 END)::DOUBLE
-                    / count(*), 6) AS dup_ratio
-       FROM f JOIN d USING (h) GROUP BY 1""",
-    doc="Cross-document paragraph/sentence dedup signal (Dolma-style): "
-        "fraction of each document's sentences that also appear verbatim "
-        "in at least one OTHER document — the sub-document complement of "
-        "llm_repetition_score (intra-doc) and llm_dedup_exact (whole-doc). "
-        "Sentences travel as md5 hashes, so the shuffle key is 16 bytes "
-        "regardless of sentence length; the distinct-doc count "
-        "partial-aggregates map-side. At 100 TB add a frequency cap on "
-        "ubiquitous boilerplate hashes (same dial as "
-        "ngram_jaccard_pairs.max_shingle_freq).",
-    tags=("llm", "dedup", "text"),
-)
-def llm_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    sents = d.select(
-        "doc_id", F.explode(F.split("text", "\\. ")).alias("sent")
-    ).filter(F.length("sent") > 0)
-    f = sents.select("doc_id", F.md5("sent").alias("h"))
-    nd = f.groupBy("h").agg(F.countDistinct("doc_id").alias("nd"))
-    dup = F.when(F.col("nd") > 1, 1).otherwise(0)
-    return (
-        f.join(nd, "h")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_sents"),
-            F.sum(dup).cast("long").alias("n_dup"),
-            F.round(F.sum(dup) / F.count(F.lit(1)), 6).alias("dup_ratio"),
-        )
-    )
-
-
-@register(
     "window_sliding_time",
     f"""WITH {EVENTS_NORM},
        slid AS (SELECT make_timestamp((epoch_us(ts) // 900000000) * 900000000
@@ -617,52 +577,6 @@ def llm_mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("rate", 6).alias("rate"),
             F.coalesce("n_kept", F.lit(0)).cast("long").alias("n_kept"),
         )
-    )
-
-
-_SHINGLES_CTE_R3 = """
-tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-sh AS (SELECT doc_id,
-              list_distinct(CASE WHEN len(t) >= 3
-                   THEN list_transform(generate_series(1, len(t)-2),
-                                       i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-                   ELSE []::VARCHAR[] END) AS shd
-       FROM tok)
-"""
-
-
-@register(
-    "llm_dedup_ngram_jaccard_capped",
-    "WITH " + _SHINGLES_CTE_R3 + """,
-       ex0 AS (SELECT doc_id, unnest(shd) AS s FROM sh),
-       hot AS (SELECT s FROM ex0 GROUP BY s HAVING count(*) > 25),
-       ex AS (SELECT ex0.* FROM ex0 ANTI JOIN hot ON ex0.s = hot.s),
-       sizes AS (SELECT doc_id, count(*) AS n_sh FROM ex GROUP BY 1),
-       pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-                 FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-                 GROUP BY 1, 2)
-       SELECT doc_a, doc_b,
-              inter::DOUBLE / (sa.n_sh + sb.n_sh - inter)::DOUBLE AS jaccard
-       FROM pairs
-       JOIN sizes sa ON sa.doc_id = doc_a
-       JOIN sizes sb ON sb.doc_id = doc_b
-       WHERE inter::DOUBLE / (sa.n_sh + sb.n_sh - inter)::DOUBLE >= 0.8""",
-    doc="The 100 TB form of llm_dedup_ngram_jaccard: ubiquitous shingles "
-        "(doc frequency > 25 here) are removed by a broadcast ANTI join "
-        "against the small hot set BEFORE the self-join, capping the "
-        "quadratic pair fan-out that boilerplate shingles cause "
-        "(SCALE_SOAK.md measured the uncapped op at 22.6 s on a "
-        "10x-duplicated corpus). Jaccard is then computed over the "
-        "surviving shingle sets on both engines, so the cap is part of "
-        "the verified semantics, not a silent approximation.",
-    tags=("llm", "dedup"),
-)
-def llm_dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.llm import dedup
-
-    return dedup.ngram_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"),
-        threshold=0.8, max_shingle_freq=25,
     )
 
 

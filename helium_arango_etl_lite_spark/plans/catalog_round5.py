@@ -1,18 +1,11 @@
 """Round-5 catalog additions (SURVEY.md section 2.8 north star):
-
-* ``llm_minhash_verify`` — the two-stage production dedup shape:
-  MinHash-LSH candidate generation followed by exact Jaccard verification
-  computed ONLY on candidate pairs (recall stage then precision stage).
-* ``llm_window_dedup`` — exact repeated-substring detection via sliding
-  character-window hashes (scalable stand-in for suffix-array substring
-  dedup, cf. Lee et al. 2022).
-* ``llm_pipeline_funnel`` — staged quality-filter funnel with per-stage
-  row accounting (the report every corpus-curation run ships with).
-
-All three reuse the cross-engine hash/shingle fragments from
-``catalog_llm`` so the sketch math is value-hash verified, not
-rows-only. The product-quantization entries and
-``llm_semantic_clusters`` are in catalog_similarity.py.
+``llm_pipeline_funnel`` — staged quality-filter funnel with per-stage
+row accounting (the report every corpus-curation run ships with) — plus
+Count-Min heavy hitters, oracle-checked HyperLogLog, overlapping
+chunking, span-corruption masks and a Python UDTF. The two-stage MinHash
+verify, window dedup and dedup pipeline entries are in catalog_dedup.py;
+the product-quantization entries and ``llm_semantic_clusters`` are in
+catalog_similarity.py.
 """
 
 from __future__ import annotations
@@ -20,127 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.llm import dedup
-from .catalog_llm import (
-    BANDS,
-    NUM_HASHES,
-    SEED,
-    _BAND_EXPRS,
-    _BASE_HASH_CTE,
-    _sig_exprs,
-)
 from .registry import load_table, register
-
-# ---------------------------------------------------------------------------
-# two-stage MinHash-LSH -> exact-Jaccard verification
-# ---------------------------------------------------------------------------
-
-VERIFY_THRESHOLD = 0.8
-VERIFY_PER_DOC_CAP = 8
-
-_VERIFY_SQL = (
-    "WITH " + _BASE_HASH_CTE
-    + ", sig AS (SELECT doc_id, " + ", ".join(_sig_exprs()) + " FROM hs)"
-    + ", bands AS (SELECT doc_id, unnest([" + ", ".join(_BAND_EXPRS) + "]) AS band_key FROM sig)"
-    + """, cand0 AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                     FROM bands a JOIN bands b
-                       ON a.band_key = b.band_key AND a.doc_id < b.doc_id)
-       , cand AS (SELECT doc_a, doc_b, n_cand_a
-                  FROM (SELECT doc_a, doc_b,
-                               row_number() OVER (PARTITION BY doc_a
-                                                  ORDER BY doc_b) AS rk,
-                               count(*) OVER (PARTITION BY doc_a)
-                                   AS n_cand_a
-                        FROM cand0)
-                  WHERE rk <= """ + repr(VERIFY_PER_DOC_CAP) + """)
-       SELECT doc_a, doc_b,
-              round(CASE WHEN un > 0 THEN inter::DOUBLE / un::DOUBLE
-                         ELSE 0.0 END, 4) AS jaccard,
-              (CASE WHEN un > 0 THEN inter::DOUBLE / un::DOUBLE
-                    ELSE 0.0 END) >= """ + repr(VERIFY_THRESHOLD) + """ AS verified,
-              n_cand_a
-       FROM (SELECT c.doc_a, c.doc_b, c.n_cand_a,
-                    len(list_intersect(sa.shd, sb.shd)) AS inter,
-                    len(sa.shd) + len(sb.shd)
-                        - len(list_intersect(sa.shd, sb.shd)) AS un
-             FROM cand c
-             JOIN sh sa ON sa.doc_id = c.doc_a
-             JOIN sh sb ON sb.doc_id = c.doc_b)"""
-)
-
-
-@register(
-    "llm_minhash_verify",
-    _VERIFY_SQL,
-    doc="Two-stage dedup: LSH band candidates, then EXACT word-3-gram "
-        "Jaccard on candidates only. The quadratic verify join never sees "
-        "the corpus — only LSH candidates; shingle arrays materialise "
-        "solely for candidate docs (left-semi prune). False-positive "
-        "candidates survive with verified=false, so the sketch stage's "
-        "precision is directly observable. Registered form caps verified "
-        "pairs at 8 smallest-id candidates per doc_a (pre-verify), "
-        "bounding output at O(8n) instead of O(D^2/2) per D-copy dup "
-        "group (SCALE_SOAK measured the uncapped contract at 27.3M "
-        "pairs / 104.8 s under x100 verbatim duplication) while keeping "
-        "every d_i-d_{i+1} chain link a downstream dup_clusters pass "
-        "needs; n_cand_a reports the pre-cap fan-out so truncation is "
-        "observable. The uncapped audit form stays available via "
-        "minhash_verified_pairs(per_doc_cap=None).",
-    tags=("llm", "dedup", "sketch"),
-)
-def llm_minhash_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.minhash_verified_pairs(
-        load_table(spark, sf_dir, "documents"),
-        threshold=VERIFY_THRESHOLD,
-        num_hashes=NUM_HASHES, bands=BANDS, seed=SEED,
-        per_doc_cap=VERIFY_PER_DOC_CAP,
-    )
-
-
-# ---------------------------------------------------------------------------
-# sliding character-window substring dedup
-# ---------------------------------------------------------------------------
-
-_WIN = 32
-_STRIDE = 8
-
-_WINDOW_SQL = f"""
-WITH w AS (SELECT doc_id,
-                  CASE WHEN length(text) >= {_WIN}
-                       THEN list_distinct(list_transform(
-                                generate_series(1, length(text) - {_WIN - 1}, {_STRIDE}),
-                                i -> md5(substr(text, i, {_WIN}))))
-                       ELSE []::VARCHAR[] END AS ws
-           FROM documents),
-ex AS (SELECT DISTINCT doc_id, wh
-       FROM (SELECT doc_id, unnest(ws) AS wh FROM w)),
-dupw AS (SELECT wh FROM ex GROUP BY wh HAVING count(DISTINCT doc_id) > 1),
-shared AS (SELECT doc_id, count(*) AS n_shared
-           FROM ex JOIN dupw USING (wh) GROUP BY doc_id)
-SELECT w.doc_id,
-       len(w.ws) AS n_windows,
-       coalesce(s.n_shared, 0) AS n_shared_windows,
-       round(coalesce(s.n_shared, 0)::DOUBLE
-             / greatest(len(w.ws), 1)::DOUBLE, 4) AS dup_ratio
-FROM w LEFT JOIN shared s ON s.doc_id = w.doc_id
-"""
-
-
-@register(
-    "llm_window_dedup",
-    _WINDOW_SQL,
-    doc=f"Exact repeated-substring detection: every {_WIN}-char window at "
-        f"stride {_STRIDE} is md5-hashed; windows seen in >= 2 distinct docs "
-        "mark cross-document duplicated text (suffix-array substring dedup "
-        "made shuffle-shaped: explode factor bounded by len/stride, one "
-        "groupBy on the 16-byte window hash). Hot boilerplate windows "
-        "frequency-cap exactly like hot shingles at 100 TB.",
-    tags=("llm", "dedup"),
-)
-def llm_window_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.window_dup_stats(
-        load_table(spark, sf_dir, "documents"), window=_WIN, stride=_STRIDE
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -244,42 +117,6 @@ def udtf_sentence_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.llm import text as text_ops
 
     return text_ops.sentence_split(load_table(spark, sf_dir, "documents"))
-
-
-# ---------------------------------------------------------------------------
-# end-to-end dedup pipeline: sketch -> verify -> cluster -> keeper
-# ---------------------------------------------------------------------------
-
-# The registered pipeline composes the exact-collapse pre-stage (below,
-# shared with the staged entry) AND the per-doc candidate cap: see
-# _STAGED_SQL / _staged_sql() after the staged entry's definition.
-
-
-def flat_dedup_pipeline(docs: DataFrame) -> DataFrame:
-    """The TRULY FLAT pipeline chain — sketch -> capped verify -> CC ->
-    keeper, with NO exact-collapse pre-stage. Kept as a TEST FIXTURE
-    only (round-7, verdict task 2): on a duplication-factor-D corpus its
-    LSH band self-join still enumerates ~D^2/2 intra-group candidate
-    pairs before the cap shears them (measured 549 s at x100 verbatim
-    duplication vs 24.9 s staged, SCALE_SOAK round-6), so the registered
-    ``llm_dedup_pipeline`` entry composes the exact-collapse pre-stage
-    instead and this form exists to pin that the composition does not
-    change the cluster partition."""
-    vp = dedup.minhash_verified_pairs(
-        docs, threshold=VERIFY_THRESHOLD,
-        num_hashes=NUM_HASHES, bands=BANDS, seed=SEED,
-        per_doc_cap=VERIFY_PER_DOC_CAP,
-    ).filter(F.col("verified"))
-    labels = dedup.dup_clusters(vp)
-    return (
-        docs.select("doc_id")
-        .join(labels.withColumnRenamed("cluster_id", "_cl"), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("_cl"), F.col("doc_id")).alias("cluster_id"),
-            (F.coalesce(F.col("_cl"), F.col("doc_id")) == F.col("doc_id")).alias("keep"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -535,178 +372,3 @@ def llm_span_corruption_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# staged dedup pipeline: exact-collapse FIRST, then sketch on representatives
-# ---------------------------------------------------------------------------
-
-_SHINGLES_R_CTE = _BASE_HASH_CTE.replace("FROM documents", "FROM docs_r")
-
-
-def _collapsed_pipeline_sql(
-    per_doc_cap: int | None, star: bool = False
-) -> str:
-    """Oracle for the exact-collapse-first dedup pipeline, with an
-    optional per-doc_a candidate cap between LSH banding and the exact
-    verify (the registered llm_dedup_pipeline sets the cap; the staged
-    entry verifies every candidate; llm_dedup_pipeline_star replaces
-    the all-pairs candidate CTE with hub->member star pairs)."""
-    if star:
-        cand = """, hub AS (SELECT band_key, min(doc_id) AS hub
-                   FROM bands GROUP BY 1),
-cand AS (SELECT DISTINCT h.hub AS doc_a, b.doc_id AS doc_b
-         FROM bands b JOIN hub h ON b.band_key = h.band_key
-         WHERE b.doc_id <> h.hub),"""
-    elif per_doc_cap is None:
-        cand = """, cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                    FROM bands a JOIN bands b
-                      ON a.band_key = b.band_key AND a.doc_id < b.doc_id),"""
-    else:
-        cand = """, cand0 AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                     FROM bands a JOIN bands b
-                       ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-cand AS (SELECT doc_a, doc_b
-         FROM (SELECT doc_a, doc_b,
-                      row_number() OVER (PARTITION BY doc_a
-                                         ORDER BY doc_b) AS rk
-               FROM cand0)
-         WHERE rk <= """ + repr(per_doc_cap) + """),"""
-    return (
-        "WITH RECURSIVE exmap AS (SELECT doc_id, "
-        "min(doc_id) OVER (PARTITION BY md5(text)) AS rep FROM documents),\n"
-        "docs_r AS (SELECT d.doc_id, d.text FROM documents d "
-        "JOIN exmap m ON m.doc_id = d.doc_id WHERE d.doc_id = m.rep),\n"
-        + _SHINGLES_R_CTE
-        + ", sig AS (SELECT doc_id, " + ", ".join(_sig_exprs()) + " FROM hs)"
-        + ", bands AS (SELECT doc_id, unnest([" + ", ".join(_BAND_EXPRS) + "]) AS band_key FROM sig)"
-        + cand
-        + """
-vp AS (SELECT doc_a, doc_b
-       FROM (SELECT c.doc_a, c.doc_b,
-                    len(list_intersect(sa.shd, sb.shd)) AS inter,
-                    len(sa.shd) + len(sb.shd)
-                        - len(list_intersect(sa.shd, sb.shd)) AS un
-             FROM cand c
-             JOIN sh sa ON sa.doc_id = c.doc_a
-             JOIN sh sb ON sb.doc_id = c.doc_b)
-       WHERE un > 0 AND inter::DOUBLE / un::DOUBLE >= """ + repr(VERIFY_THRESHOLD) + """),
-edges AS (SELECT doc_a AS src, doc_b AS dst FROM vp
-          UNION SELECT doc_b, doc_a FROM vp),
-reach(src, dst) AS (
-    SELECT src, src FROM edges
-    UNION
-    SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-lab AS (SELECT src AS doc_id, min(dst) AS cluster_id FROM reach GROUP BY src)
-SELECT m.doc_id,
-       coalesce(l.cluster_id, m.rep) AS cluster_id,
-       (m.doc_id = coalesce(l.cluster_id, m.rep)) AS keep
-FROM exmap m LEFT JOIN lab l ON l.doc_id = m.rep"""
-    )
-
-
-_STAGED_SQL = _collapsed_pipeline_sql(None)
-
-
-def _collapsed_pipeline(
-    spark: SparkSession, sf_dir: str, per_doc_cap: int | None,
-    star: bool = False,
-) -> DataFrame:
-    """Shared Spark body of llm_dedup_pipeline / llm_dedup_pipeline_staged
-    / llm_dedup_pipeline_star: exact-collapse to md5-representatives,
-    MinHash-LSH + exact-Jaccard verify (candidate-capped, all-pairs, or
-    star hub->member) on representatives only, connected components,
-    then map every doc through its rep."""
-    docs = load_table(spark, sf_dir, "documents")
-    rep = F.min("doc_id").over(Window.partitionBy(F.md5(F.col("text"))))
-    # ONE checkpoint of the exact-collapse window: the doc->rep map and
-    # the representative set both derive from it, and
-    # minhash_verified_pairs consumes the representatives on several
-    # branches (signature path, shingle path, candidate-doc prune) —
-    # without this every branch re-pays the md5-window shuffle
-    base = docs.select("doc_id", "text", rep.alias("rep")).localCheckpoint(
-        eager=False
-    )
-    mapped = base.select("doc_id", "rep")
-    reps_docs = base.filter(F.col("doc_id") == F.col("rep")).select(
-        "doc_id", "text"
-    )
-    if star:
-        cands = dedup.minhash_star_pairs(
-            reps_docs, num_hashes=NUM_HASHES, bands=BANDS, seed=SEED,
-        ).localCheckpoint(eager=False)  # consumed by prune + verify join
-        vp = dedup.exact_jaccard_on_pairs(
-            reps_docs, cands, threshold=VERIFY_THRESHOLD
-        ).filter(F.col("verified"))
-    else:
-        vp = dedup.minhash_verified_pairs(
-            reps_docs, threshold=VERIFY_THRESHOLD,
-            num_hashes=NUM_HASHES, bands=BANDS, seed=SEED,
-            per_doc_cap=per_doc_cap,
-            report_fanout=False,  # column unused here
-        ).filter(F.col("verified"))
-    labels = dedup.dup_clusters(vp)
-    return (
-        mapped.join(
-            labels.withColumnRenamed("doc_id", "rep").withColumnRenamed(
-                "cluster_id", "_cl"
-            ),
-            "rep",
-            "left",
-        )
-        .select(
-            "doc_id",
-            F.coalesce(F.col("_cl"), F.col("rep")).alias("cluster_id"),
-            (
-                F.col("doc_id") == F.coalesce(F.col("_cl"), F.col("rep"))
-            ).alias("keep"),
-        )
-    )
-
-
-@register(
-    "llm_dedup_pipeline",
-    _collapsed_pipeline_sql(VERIFY_PER_DOC_CAP),
-    doc="End-to-end dedup pipeline, production shape (round-7: the "
-        "formerly-flat registered form now composes the exact-collapse "
-        "pre-stage, retiring the last perf-weak entry): EXACT dedup "
-        "collapses verbatim copies first (one md5-window shuffle), then "
-        "MinHash-LSH candidates -> per-doc_a cap of 8 smallest-id "
-        "candidates -> exact-Jaccard verification -> connected "
-        "components over VERIFIED edges -> keeper decision, all on the "
-        "collapsed REPRESENTATIVES, with every doc mapped to its final "
-        "cluster through its exact-group rep. Both quadratic killers "
-        "are now bounded: duplication-factor-D corpora collapse before "
-        "the sketch (no D^2/2 intra-group candidate enumeration — the "
-        "measured 549 s vs 24.9 s gap at x100 duplication, SCALE_SOAK "
-        "round-6), and near-dup-heavy corpora that survive exact "
-        "collapse are sheared by the candidate cap (O(8n) verify "
-        "input; can split a cluster whose only true link ranks past "
-        "the cap under band-collision false positives — see "
-        "minhash_verified_pairs). The staged sibling entry is the "
-        "cap-free audit form; the truly-flat chain lives on as the "
-        "flat_dedup_pipeline test fixture.",
-    tags=("llm", "dedup", "pipeline", "iterative"),
-)
-def llm_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _collapsed_pipeline(spark, sf_dir, VERIFY_PER_DOC_CAP)
-
-
-@register(
-    "llm_dedup_pipeline_staged",
-    _STAGED_SQL,
-    doc="Cap-free audit form of llm_dedup_pipeline (same exact-collapse "
-        "pre-stage, shared body): EXACT dedup collapses verbatim copies "
-        "first (one md5-window shuffle), then MinHash-LSH + Jaccard "
-        "verify + connected components run on the collapsed "
-        "REPRESENTATIVES only — every candidate pair verified, no "
-        "per-doc cap — and every doc maps to its final cluster through "
-        "its exact-group rep. Identical cluster partition to the flat "
-        "chain (verbatim copies always share signatures — pinned by "
-        "test), but the candidate-pair stage sees |distinct texts| "
-        "docs, not |corpus|: a corpus with duplication factor D "
-        "generates D^2/2 fewer intra-group pairs — the difference "
-        "between finishing and GC death at 100x verbatim duplication "
-        "(SCALE_SOAK round-5 pipeline rows).",
-    tags=("llm", "dedup", "pipeline", "iterative"),
-)
-def llm_dedup_pipeline_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _collapsed_pipeline(spark, sf_dir, None)

@@ -1,5 +1,6 @@
 """Round-7 catalog: real multimodal decode, sharding, vocabulary and LM
-passes (its top-2 spectral-directions entry is in catalog_similarity.py).
+passes (its top-2 spectral-directions entry is in catalog_similarity.py,
+its split-leakage guard and incremental Bloom dedup in catalog_dedup.py).
 
 * ``llm_multimodal_decode_ppm`` / ``llm_multimodal_decode_wav`` — the
   multimodal decode interior made REAL (verdict round-6 task 4): a pure
@@ -248,87 +249,6 @@ def llm_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# train/val/test split leakage guard
-# ---------------------------------------------------------------------------
-
-from .catalog_llm import _BASE_HASH_CTE, _sig_exprs  # noqa: E402
-
-_LEAK_SIG_KEY = " || ':' || ".join(f"sig_{i}" for i in range(6))
-
-_LEAKAGE_SQL = (
-    "WITH " + _BASE_HASH_CTE
-    + ", sig AS (SELECT doc_id, " + ", ".join(_sig_exprs()) + " FROM hs),"
-    + f"""
-b AS (SELECT doc_id, {_LEAK_SIG_KEY} AS fp,
-             ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 100
-                 AS bucket
-      FROM sig),
-s AS (SELECT doc_id, fp,
-             CASE WHEN bucket < 80 THEN 'train'
-                  WHEN bucket < 90 THEN 'val'
-                  ELSE 'test' END AS split
-      FROM b),
-g AS (SELECT fp,
-             array_to_string(list_sort(list_distinct(list(split))), ',')
-                 AS splits_key,
-             count(DISTINCT split) AS ns,
-             count(*) AS n_docs
-      FROM s GROUP BY fp)
-SELECT splits_key, count(*)::BIGINT AS n_groups,
-       sum(n_docs)::BIGINT AS n_docs_leaked
-FROM g WHERE ns > 1 GROUP BY splits_key"""
-)
-
-
-@register(
-    "llm_split_leakage_check",
-    _LEAKAGE_SQL,
-    doc="Train/val/test contamination guard: after the hash-bucket split "
-        "(same 80/10/10 rule as llm_dataset_split), any MinHash-"
-        "signature-identical duplicate group whose members straddle "
-        "splits is leaked evaluation data — the signature key catches "
-        "near-verbatim duplicates that an md5-exact key misses (on this "
-        "corpus md5-level leakage is zero at sf<=0.01 while signature-"
-        "level leakage exists at every sf, which is the point of "
-        "checking). Reports, per combination of splits touched, the "
-        "leaked group and document counts; remediation is to re-home "
-        "whole groups (split by the GROUP's min-id hash, not the "
-        "doc's). Scale shape: the signature is the per-row zero-shuffle "
-        "map stage shared with the dedup entries, then ONE fp-keyed "
-        "partial-agg shuffle and a <= 4-row readout — a linear guard "
-        "cheap enough to run on every corpus build.",
-    tags=("llm", "sampling", "dedup"),
-)
-def llm_split_leakage_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.hashing import hash32 as _h32
-    from ..operators.llm.dedup import minhash_signature_df
-    from .catalog_llm import NUM_HASHES, SEED
-
-    docs = load_table(spark, sf_dir, "documents")
-    sig = minhash_signature_df(docs, num_hashes=NUM_HASHES, seed=SEED)
-    fp = F.concat_ws(":", *[F.col(f"sig_{i}") for i in range(6)])
-    bucket = _h32(F.col("doc_id").cast("string")) % 100
-    split = (
-        F.when(bucket < 80, F.lit("train"))
-        .when(bucket < 90, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
-    s = sig.select(fp.alias("fp"), split.alias("split"))
-    g = s.groupBy("fp").agg(
-        F.collect_set("split").alias("cs"),
-        F.count(F.lit(1)).alias("n_docs"),
-    )
-    return (
-        g.filter(F.size("cs") > 1)
-        .groupBy(F.array_join(F.array_sort("cs"), ",").alias("splits_key"))
-        .agg(
-            F.count(F.lit(1)).alias("n_groups"),
-            F.sum("n_docs").alias("n_docs_leaked"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
 # word-trigram language-model quality score (CCNet-style perplexity proxy)
 # ---------------------------------------------------------------------------
 
@@ -436,201 +356,6 @@ def llm_trigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_trigrams"),
             F.round(F.avg(logp), 6).alias("avg_logprob"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# incremental corpus dedup: new batch vs history through a broadcast Bloom
-# ---------------------------------------------------------------------------
-
-_IBF_HASHES = 3
-# filter size ADAPTS to history cardinality: bits = max(1024,
-# 2^bitlength(2*n_keys - 1)) where n_keys counts DISTINCT history keys —
-# the Bloom inserts distinct keys, so sizing on rows would oversize the
-# filter whenever history carries internal duplicates (the x100 soak
-# fixture showed exactly that: 400k rows but 5k distinct keys made a
-# row-sized filter 200x too big and fp_rate degenerate-zero).
-# ~2-4 bits per key is deliberately tight so
-# the measured fp_rate stays non-trivial (~0.3) at EVERY scale while the
-# packed word table stays ~n_hist/16 longs; production turns the same
-# dial the other way (10 bits/key -> fp ~1%). The formula is exact
-# integer arithmetic both engines reproduce: Python bit_length() ==
-# DuckDB length(bin(x)) for x >= 1.
-_IBF_BITS_SQL = "(SELECT greatest(1024, 1 << length(bin(greatest(2 * count(DISTINCT fp) - 1, 1)))) FROM hist)"
-
-
-def _ibf_bits_py(n_hist: int) -> int:
-    return max(1024, 1 << max(2 * n_hist - 1, 1).bit_length())
-
-
-def _ibf_hash_sql(expr: str, i: int) -> str:
-    from ..functions.hashing import hash32_oracle_sql
-
-    salted = expr + " || ':ibf" + str(i) + "'"
-    return f"({hash32_oracle_sql(salted)} % {_IBF_BITS_SQL})"
-
-
-def _ibloom_sql() -> str:
-    from .catalog_llm import _BASE_HASH_CTE, _sig_exprs
-
-    build_hashes = ", ".join(
-        _ibf_hash_sql("fp", i) for i in range(_IBF_HASHES)
-    )
-    probe_hashes = ", ".join(
-        f"{_ibf_hash_sql('n.fp', i)} AS h{i}" for i in range(_IBF_HASHES)
-    )
-    word_joins = " ".join(
-        f"LEFT JOIN words w{i} ON w{i}.widx = pr.h{i} // 32"
-        for i in range(_IBF_HASHES)
-    )
-    probe_pass = " AND ".join(
-        f"(coalesce(w{i}.wv, 0) & (1::BIGINT << (pr.h{i} % 32))) <> 0"
-        for i in range(_IBF_HASHES)
-    )
-    return (
-        "WITH " + _BASE_HASH_CTE
-        + ", sig AS (SELECT doc_id, " + ", ".join(_sig_exprs()) + " FROM hs),"
-        + f"""
-keyed AS (SELECT doc_id, {_LEAK_SIG_KEY} AS fp FROM sig),
-hist AS (SELECT fp FROM keyed WHERE doc_id % 5 <> 0),
-newb AS (SELECT doc_id, fp FROM keyed WHERE doc_id % 5 = 0),
-bits_t AS (SELECT DISTINCT unnest([{build_hashes}]) AS bit FROM hist),
-words AS (SELECT bit // 32 AS widx,
-                 bit_or(1::BIGINT << (bit % 32)) AS wv
-          FROM bits_t GROUP BY 1),
-truth AS (SELECT DISTINCT fp FROM hist),
-pr AS (SELECT n.doc_id, n.fp, {probe_hashes} FROM newb n),
-probe AS (SELECT pr.doc_id,
-                 ({probe_pass}) AS bloom_pass,
-                 t.fp IS NOT NULL AS is_dup
-          FROM pr
-          {word_joins}
-          LEFT JOIN truth t ON t.fp = pr.fp)
-SELECT count(*)::BIGINT AS n_new,
-       sum(CASE WHEN is_dup THEN 1 ELSE 0 END)::BIGINT AS n_true_dup,
-       sum(CASE WHEN bloom_pass THEN 1 ELSE 0 END)::BIGINT AS n_pass,
-       sum(CASE WHEN NOT bloom_pass THEN 1 ELSE 0 END)::BIGINT
-         AS n_definitely_new,
-       sum(CASE WHEN bloom_pass AND NOT is_dup THEN 1 ELSE 0 END)::BIGINT
-         AS n_false_pos,
-       round(sum(CASE WHEN bloom_pass AND NOT is_dup THEN 1 ELSE 0 END)
-             / greatest(1, sum(CASE WHEN NOT is_dup THEN 1 ELSE 0 END))::DOUBLE,
-             6) AS fp_rate
-FROM probe"""
-    )
-
-
-@register(
-    "llm_incremental_dedup_bloom",
-    _ibloom_sql(),
-    doc="Incremental corpus dedup, the shape every continuously-crawled "
-        "training corpus needs: dedup a NEW batch (doc_id % 5 = 0) "
-        "against the HISTORY corpus (the other 80%) WITHOUT joining the "
-        "new batch to all of history. History's MinHash-signature keys "
-        "(near-verbatim duplicate identity — signature-level duplicates "
-        "straddle any split at every sf, so the true-dup path is "
-        "exercised where an md5-exact key would measure zero) build a "
-        "Bloom sized to the DISTINCT history keys (bits = "
-        "2^ceil(log2(2*n_keys)), one bounded count action) packed into <= bits/32 (widx, word) "
-        "rows, broadcast everywhere; each new doc tests "
-        f"{_IBF_HASHES} positions with O(1) word lookups. "
-        "Bloom-negative docs are DEFINITELY new (no false negatives by "
-        "construction — pinned by n_pass >= n_true_dup) and skip the "
-        "verify join entirely in the production shape "
-        "(filter(bloom_pass) before the join), which therefore "
-        "processes n_true_dup + fp_rate * n_new rows instead of n_new. "
-        "This REGISTERED entry instruments BOTH paths — it joins every "
-        "new doc to truth so the false-positive rate is measurable; "
-        "the monitoring row it reports (batch size, true dups, bloom "
-        "passes, definite-news, false positives, fp_rate) is what a "
-        "deployment watches to know the shear is still paying. The "
-        "2-4-bits-per-key sizing is deliberately tight so the FP path "
-        "stays exercised (measured 0.30 at sf0.01, 0.43 at sf0.1 and "
-        "x100 — SCALE_SOAK.md); production picks ~10 bits/key for ~1%. "
-        "Same "
-        "packed-word kernel as join_bloom_prefilter (13.6x vs "
-        "array-scan probing, SCALE_SOAK.md); hashes are md5-derived so "
-        "DuckDB reproduces every bit.",
-    tags=("llm", "dedup", "sketch", "streaming"),
-)
-def llm_incremental_dedup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.hashing import hash32
-    from ..operators.llm.dedup import minhash_signature_df
-    from .catalog_llm import NUM_HASHES, SEED
-
-    docs = load_table(spark, sf_dir, "documents")
-    sig = minhash_signature_df(docs, num_hashes=NUM_HASHES, seed=SEED)
-    # (doc_id, fp) is consumed by three plan branches (bloom build,
-    # truth, probe) — checkpoint so the signature map stage (the entry's
-    # only corpus-sized work) runs ONCE, not once per consumer
-    keyed = sig.select(
-        "doc_id",
-        F.concat_ws(":", *[F.col(f"sig_{i}") for i in range(NUM_HASHES)]).alias("fp"),
-    ).localCheckpoint(eager=False)
-    hist = keyed.filter(F.col("doc_id") % 5 != 0).select("fp")
-    newb = keyed.filter(F.col("doc_id") % 5 == 0)
-
-    # bounded control plane: ONE distinct-count (a single long to the
-    # driver) sizes the filter; the oracle mirrors it with a scalar
-    # subquery over DISTINCT fp
-    n_keys = hist.select(F.count_distinct("fp")).collect()[0][0]
-    bits = _ibf_bits_py(n_keys)
-
-    def ibf_hash(col, i: int):
-        return hash32(F.concat(col, F.lit(f":ibf{i}"))) % bits
-
-    bits_t = hist.select(
-        F.explode(
-            F.array(*[ibf_hash(F.col("fp"), i) for i in range(_IBF_HASHES)])
-        ).alias("bit")
-    ).distinct()
-    words = bits_t.groupBy(F.expr("bit div 32").alias("widx")).agg(
-        F.bit_or(F.expr("shiftleft(CAST(1 AS BIGINT), CAST(bit % 32 AS INT))"))
-        .alias("wv")
-    )
-    truth = hist.distinct().withColumnRenamed("fp", "t_fp")
-
-    pr = newb.select(
-        "doc_id", "fp",
-        *[ibf_hash(F.col("fp"), i).alias(f"h{i}") for i in range(_IBF_HASHES)],
-    )
-    for i in range(_IBF_HASHES):
-        wi = words.select(
-            F.col("widx").alias(f"widx{i}"), F.col("wv").alias(f"wv{i}")
-        )
-        pr = pr.join(
-            F.broadcast(wi),
-            F.expr(f"h{i} div 32") == F.col(f"widx{i}"),
-            "left",
-        )
-    pass_expr = None
-    for i in range(_IBF_HASHES):
-        bit_set = (
-            F.coalesce(F.col(f"wv{i}"), F.lit(0)).bitwiseAND(
-                F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST(h{i} % 32 AS INT))")
-            )
-            != 0
-        )
-        pass_expr = bit_set if pass_expr is None else (pass_expr & bit_set)
-    probe = pr.join(truth, F.col("fp") == F.col("t_fp"), "left").select(
-        "doc_id",
-        pass_expr.alias("bloom_pass"),
-        F.col("t_fp").isNotNull().alias("is_dup"),
-    )
-    return probe.agg(
-        F.count("*").cast("long").alias("n_new"),
-        F.sum(F.col("is_dup").cast("long")).cast("long").alias("n_true_dup"),
-        F.sum(F.col("bloom_pass").cast("long")).cast("long").alias("n_pass"),
-        F.sum((~F.col("bloom_pass")).cast("long")).cast("long")
-        .alias("n_definitely_new"),
-        F.sum((F.col("bloom_pass") & ~F.col("is_dup")).cast("long"))
-        .cast("long")
-        .alias("n_false_pos"),
-        F.round(
-            F.sum((F.col("bloom_pass") & ~F.col("is_dup")).cast("long"))
-            / F.greatest(F.lit(1), F.sum((~F.col("is_dup")).cast("long"))),
-            6,
-        ).alias("fp_rate"),
     )
 
 

@@ -338,143 +338,7 @@ def storage_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# star-candidate dedup pipeline (the round-8 soak's answer)
-# ---------------------------------------------------------------------------
-
-from .catalog_round5 import _collapsed_pipeline, _collapsed_pipeline_sql  # noqa: E402
-
-
-@register(
-    "llm_dedup_pipeline_star",
-    _collapsed_pipeline_sql(None, star=True),
-    doc="The dedup pipeline with STAR-topology LSH candidates: inside "
-        "each band bucket every member pairs only with the bucket's "
-        "min-id hub — O(bands x n) candidate pairs with no window pass, "
-        "where all-pairs banding pays O(sum bucket^2) and the per-doc "
-        "cap pays a row_number window plus SEVERED group connectivity. "
-        "Born from the round-8 near-dup soak (SCALE_SOAK.md): at x100 "
-        "non-verbatim duplication the capped pipeline under-merged 1.53x "
-        "(145k vs 95k keepers) because cap eviction cut edges inside "
-        "100-member groups; the star keeps every member linked to its "
-        "hub, so bucket-coherent groups stay one component while the "
-        "verify join stays linear. Trade-off: a member verifies against "
-        "the HUB only (bands chances), so a group whose hub drifted "
-        "past the Jaccard threshold can still split — precision is "
-        "unchanged (every merge is an exactly-verified pair). Same "
-        "exact-collapse pre-stage, verify threshold, CC, and doc->rep "
-        "mapping as llm_dedup_pipeline "
-        "(operators/llm/dedup.py:minhash_star_pairs).",
-    tags=("llm", "dedup", "scale"),
-)
-def llm_dedup_pipeline_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _collapsed_pipeline(spark, sf_dir, None, star=True)
-
-
-# ---------------------------------------------------------------------------
-# repeated-span scrub: the rewrite stage of substring dedup
-# ---------------------------------------------------------------------------
-
-from ..operators.llm import dedup as _dedup  # noqa: E402
 from ..functions.hashing import hash32 as _hash32  # noqa: E402
-
-_SPAN_W = 5
-
-_SPAN_SCRUB_SQL = f"""
-WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-occ AS (SELECT doc_id, i, array_to_string(ws[i:i+{_SPAN_W - 1}], ' ') AS gram,
-               doc_id * {_dedup.SPAN_OKEY_SHIFT} + i AS okey
-        FROM (SELECT doc_id, ws,
-                     unnest(generate_series(1, len(ws) - {_SPAN_W - 1})) AS i
-              FROM d WHERE len(ws) >= {_SPAN_W})),
-keep AS (SELECT gram, min(okey) AS first_okey, count(*) AS n_occ
-         FROM occ GROUP BY 1),
-masked AS (SELECT o.doc_id, o.i
-           FROM occ o JOIN keep k ON o.gram = k.gram
-           WHERE k.n_occ >= 2 AND o.okey <> k.first_okey),
-cov AS (SELECT DISTINCT doc_id, idx
-        FROM (SELECT doc_id,
-                     unnest(generate_series(i, i + {_SPAN_W - 1})) AS idx
-              FROM masked)),
-tok AS (SELECT doc_id, idx, ws[idx] AS tk
-        FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws))) AS idx
-              FROM d)),
-j AS (SELECT t.doc_id, t.idx, t.tk, (c.idx IS NOT NULL) AS m
-      FROM tok t LEFT JOIN cov c ON t.doc_id = c.doc_id AND t.idx = c.idx)
-SELECT doc_id,
-       count(*)::BIGINT AS n_tokens,
-       sum(CASE WHEN m THEN 1 ELSE 0 END)::BIGINT AS n_masked,
-       round(sum(CASE WHEN m THEN 1 ELSE 0 END)::DOUBLE / count(*), 6)
-           AS masked_frac,
-       md5(coalesce(string_agg(tk, ' ' ORDER BY idx) FILTER (WHERE NOT m),
-                    '')) AS clean_md5
-FROM j GROUP BY doc_id"""
-
-
-@register(
-    "llm_repeated_span_scrub",
-    _SPAN_SCRUB_SQL,
-    doc=f"Exact repeated-span REMOVAL (word {_SPAN_W}-grams): every span "
-        "occurring >1x corpus-wide keeps only its first occurrence (min "
-        "packed (doc_id,pos) key) and covered tokens are dropped — the "
-        "rewrite stage of suffix-style substring dedup (Lee et al. 2022) "
-        "where the fingerprint/window siblings only detect. The oracle "
-        "value-hashes the md5 of each SCRUBBED document (order-exact "
-        "string_agg reconstruction), so keeper choice, span coverage "
-        "merging, and the rewrite itself are all pinned cross-engine. "
-        "Plan: one shingle explode, a gram-keyed partial-agg (count + "
-        "min key), a gram join that only repeated grams survive, and a "
-        "per-doc coverage array join — the corpus re-shuffles zero "
-        "times; the rewrite is per-row JVM filter-by-index + concat_ws "
-        "(operators/llm/dedup.py:repeated_span_scrub).",
-    tags=("llm", "dedup", "scale"),
-)
-def llm_repeated_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _dedup.repeated_span_scrub(
-        load_table(spark, sf_dir, "documents"), span_w=_SPAN_W
-    )
-
-
-# ---------------------------------------------------------------------------
-# shingle containment: asymmetric near-dup (quote / inclusion detection)
-# ---------------------------------------------------------------------------
-
-_CONT_T = 0.9
-
-_CONTAINMENT_SQL = f"""
-WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-pos AS (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 2)) AS i
-        FROM w WHERE len(ws) >= 3),
-ex AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s
-       FROM pos),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM ex GROUP BY 1),
-pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-          FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id <> b.doc_id
-          GROUP BY 1, 2)
-SELECT doc_a, doc_b,
-       round(inter::DOUBLE / sa.n_sh::DOUBLE, 6) AS containment
-FROM pairs JOIN sizes sa ON sa.doc_id = doc_a
-WHERE round(inter::DOUBLE / sa.n_sh::DOUBLE, 6) >= {_CONT_T}"""
-
-
-@register(
-    "llm_dedup_containment",
-    _CONTAINMENT_SQL,
-    doc=f"Shingle CONTAINMENT |A n B|/|A| >= {_CONT_T} for ordered pairs "
-        "(doc_a = the contained side, both directions emitted) — "
-        "Broder's asymmetric resemblance, the score Jaccard-thresholded "
-        "dedup is blind to: a short doc quoted verbatim inside a long "
-        "one has containment ~1.0 but Jaccard ~|A|/|B|. Same linear "
-        "explode + shingle-keyed self-join shape as "
-        "llm_dedup_ngram_jaccard; at 100 TB frequency-cap hot shingles "
-        "(max_shingle_freq) exactly as the capped Jaccard entry does "
-        "(operators/llm/dedup.py:containment_pairs).",
-    tags=("llm", "dedup"),
-)
-def llm_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _dedup.containment_pairs(
-        load_table(spark, sf_dir, "documents"), threshold=_CONT_T
-    )
 
 
 # ---------------------------------------------------------------------------

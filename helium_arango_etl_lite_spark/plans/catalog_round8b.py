@@ -5,19 +5,15 @@ training shapes.
   all in exact integer half/quarter-cents so the cross-engine hash is
   meaningful (the robust complement to ``events_anomaly_zscore``, whose
   mean/stddev both move with the outliers they are trying to flag).
-* ``llm_dedup_edit_verify`` — the MinHash-LSH candidate stage verified
-  by CHARACTER-level banded Levenshtein instead of token Jaccard: the
-  detector for small-edit plagiarism/near-dup that token shingles
-  under-score (reordered tokens score high Jaccard; character edits
-  score low). Spark evaluates the banded O(L*t) threshold form; the
-  oracle computes the full O(L^2) distance and applies the cap —
-  cross-engine agreement certifies the banded algorithm itself.
 * ``llm_logreg_train`` — full-batch gradient-descent logistic
   regression trained ON the cluster: each step is ONE partial-agg
   shuffle producing a (dim+1)-row gradient, the model lives driver-side
   as O(dim) literals (the ``llm_power_iteration`` contract applied to
   supervised training). The oracle unrolls the identical trajectory in
   SQL with the same 6dp per-step rounding.
+
+Its banded-Levenshtein dedup verify (``llm_dedup_edit_verify``) is in
+catalog_dedup.py.
 
 Reference parity note: the reference ETL (helium-arango-etl-lite) has
 none of these; they extend the north-star LLM-curation and analytics
@@ -29,8 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.llm import dedup
-from .catalog_llm import _MINHASH_PAIRS_SQL
 from .registry import EVENTS_NORM, load_events, load_table, register
 
 # ---------------------------------------------------------------------------
@@ -107,88 +101,6 @@ def events_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long").alias("n_outliers"),
             F.max("dev2").cast("long").alias("max_dev2_c"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# character-level near-dup verify: banded Levenshtein over LSH candidates
-# ---------------------------------------------------------------------------
-
-# dup when lev(a,b) <= floor(0.2 * max(len_a, len_b))
-# cap = floor(0.2 * maxlen) via INTEGER floordiv on both sides: DuckDB's
-# ::BIGINT cast ROUNDS doubles ((0.2*449)::BIGINT = 90, floor = 89), so a
-# float cap would diverge the engines on every length ending in 5-9
-_EDIT_SQL = (
-    "WITH cands AS (" + _MINHASH_PAIRS_SQL + """),
-j AS (SELECT c.doc_a, c.doc_b, da.text AS ta, db.text AS tb,
-             greatest(length(da.text), length(db.text)) * 2 // 10 AS cap
-      FROM cands c
-      JOIN documents da ON c.doc_a = da.doc_id
-      JOIN documents db ON c.doc_b = db.doc_id)
-SELECT doc_a, doc_b,
-       length(ta)::BIGINT AS len_a,
-       length(tb)::BIGINT AS len_b,
-       CASE WHEN levenshtein(ta, tb) <= cap
-            THEN levenshtein(ta, tb) ELSE -1 END::BIGINT AS lev_capped,
-       (levenshtein(ta, tb) <= cap) AS is_dup
-FROM j"""
-)
-
-
-@register(
-    "llm_dedup_edit_verify",
-    _EDIT_SQL,
-    doc="MinHash-LSH candidates verified by CHARACTER-level edit "
-        "distance: dup when lev(a,b) <= 0.2*max(len). Token-level "
-        "Jaccard (llm_minhash_verify) is order-blind — a doc with the "
-        "same vocabulary reshuffled scores ~1.0 Jaccard but a huge edit "
-        "distance; character edits (typos, OCR noise, template fills) "
-        "score low Jaccard impact but small edit distance. This entry is "
-        "the second lens. COST CONTRACT: Spark evaluates the BANDED "
-        "threshold form levenshtein(a, b, t) — O(L*t) per pair, "
-        "returning -1 past the cap, so a pair of 1 MB docs costs "
-        "0.2 MB*1 MB band cells, not the full quadratic — while the "
-        "oracle computes the full O(L^2) distance and applies the cap "
-        "afterwards: cross-engine hash agreement certifies the banded "
-        "algorithm against the textbook definition, not just the "
-        "pipeline plumbing. Candidate volume is LSH-bounded (band-keyed "
-        "shuffle of (band_key, doc_id) only); texts join in once, by "
-        "doc_id, co-partitioned.",
-    tags=("llm", "dedup"),
-)
-def llm_dedup_edit_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .catalog_llm import BANDS, NUM_HASHES, SEED
-
-    docs = load_table(spark, sf_dir, "documents")
-    cands = dedup.minhash_candidate_pairs(
-        docs, num_hashes=NUM_HASHES, bands=BANDS, seed=SEED
-    )
-    da = docs.select(
-        F.col("doc_id").alias("doc_a"), F.col("text").alias("ta")
-    )
-    db = docs.select(
-        F.col("doc_id").alias("doc_b"), F.col("text").alias("tb")
-    )
-    j = (
-        cands.join(da, "doc_a")
-        .join(db, "doc_b")
-        .withColumn(
-            "cap",
-            F.floor(
-                F.greatest(F.length("ta"), F.length("tb")) * 2 / 10
-            ).cast("int"),
-        )
-    )
-    # per-row threshold needs the SQL form — the Python wrapper only
-    # accepts an int literal; -1 means "past the cap" (banded early-out)
-    lev = F.expr("levenshtein(ta, tb, cap)")
-    return j.select(
-        "doc_a",
-        "doc_b",
-        F.length("ta").cast("long").alias("len_a"),
-        F.length("tb").cast("long").alias("len_b"),
-        lev.cast("long").alias("lev_capped"),
-        (lev >= 0).alias("is_dup"),
     )
 
 

@@ -14,7 +14,8 @@ second inequality index.
   value domain, not the corpus.
 
 Reference parity note: the reference ETL has none of these; they
-extend the analytics families (SURVEY.md section 2.8).
+extend the analytics families (SURVEY.md section 2.8). The end-to-end
+curation entry (``llm_curation_end_to_end``) is in catalog_dedup.py.
 """
 
 from __future__ import annotations
@@ -574,100 +575,6 @@ def llm_webdataset_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("payload_md5"),
     )
     return fetched
-
-
-# ---------------------------------------------------------------------------
-# end-to-end curation: filter -> exact dedup -> rendezvous shard -> pack
-# ---------------------------------------------------------------------------
-
-_E2E_MIN_TOKENS = 25
-
-
-def _e2e_sql() -> str:
-    from .catalog_round7 import _SHARD_HS
-
-    return f"""
-WITH f AS (SELECT doc_id, text FROM documents
-           WHERE len(string_split(text, ' ')) >= {_E2E_MIN_TOKENS}),
-fp AS (SELECT doc_id, text, md5(text) AS fp FROM f),
-k AS (SELECT fp, min(doc_id) AS doc_id FROM fp GROUP BY 1),
-u AS (SELECT fp.doc_id, fp.text FROM fp JOIN k USING (fp, doc_id)),
-h AS (SELECT doc_id, text, {_SHARD_HS} AS hs FROM u),
-s AS (SELECT doc_id, text,
-             (list_position(hs, list_max(hs)) - 1)::BIGINT AS shard
-      FROM h),
-per AS (SELECT shard, count(*)::BIGINT AS n_members,
-               sum(strlen(text))::BIGINT AS payload_bytes,
-               sum(512 + 512 * ((strlen(text) + 511) // 512))::BIGINT
-                 AS content
-        FROM s GROUP BY 1)
-SELECT shard, n_members, payload_bytes,
-       (((content + 1024 + 10239) // 10240) * 10240)::BIGINT
-         AS shard_bytes
-FROM per"""
-
-
-@register(
-    "llm_curation_end_to_end",
-    _e2e_sql(),
-    doc="The whole curation chain in one plan: token-count quality "
-        "filter -> exact-dedup (md5 collapse, min-doc_id keeper) -> "
-        "rendezvous shard assignment (llm_shard_assign's argmax "
-        "weights) -> pack each shard into a REAL USTAR tar "
-        "(pack_tar_shards) -> report per-shard members / payload "
-        "bytes / BLOB SIZE. The last column is the strongest check in "
-        "the chain: Spark MEASURES length(shard blob) as written by "
-        "the stdlib tar writer, while the oracle PREDICTS it by pure "
-        "arithmetic (512-block member spans + 1024 trailer, rounded "
-        "up to the 10240 record size) — agreement certifies every "
-        "stage's row set AND the container's byte layout at once. "
-        "SCALE: filter and dedup are one md5-keyed shuffle; shard "
-        "assignment is map-only; packing is one shard-keyed group "
-        "pass. This is the job a 100 TB corpus runs nightly.",
-    tags=("llm", "dedup", "sampling", "storage", "scale"),
-)
-def llm_curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.hashing import hash32
-    from ..operators.llm.shards import pack_tar_shards
-    from .catalog_round7 import N_SHARDS
-    from .registry import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    f = docs.filter(
-        F.size(F.split("text", " ")) >= _E2E_MIN_TOKENS
-    ).select("doc_id", "text")
-    fp = f.withColumn("fp", F.md5("text"))
-    keep = fp.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
-    u = fp.join(keep, ["fp", "doc_id"]).select("doc_id", "text")
-    hs = F.array(
-        *[
-            hash32(
-                F.concat(F.lit(f"shard{s}:"), F.col("doc_id").cast("string"))
-            )
-            for s in range(N_SHARDS)
-        ]
-    )
-    assigned = u.select(
-        (F.array_position(hs, F.array_max(hs)) - 1)
-        .cast("long")
-        .cast("string")
-        .alias("shard_id"),
-        "doc_id",
-        "text",
-    )
-    shards = pack_tar_shards(assigned, key_col="shard_id")
-    payload = assigned.groupBy(
-        F.col("shard_id").alias("source")
-    ).agg(F.sum(F.octet_length("text")).alias("payload_bytes"))
-    return (
-        shards.join(payload, "source")
-        .select(
-            F.col("source").cast("long").alias("shard"),
-            F.col("n_members").cast("long").alias("n_members"),
-            F.col("payload_bytes").cast("long").alias("payload_bytes"),
-            F.length("shard").cast("long").alias("shard_bytes"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -79,6 +79,7 @@ from ..operators.llm.similarity import (
     pq_train_blocks, route_on_graph,
 )
 from ..operators.storage import write_bucketed
+from .catalog_dedup import _reach_sql
 from .catalog_llm import _BM25_TERMS, _bm25_sql
 from .catalog_round6 import _round_half_up
 from .registry import load_table, register
@@ -554,10 +555,7 @@ r AS ({_ranked_sql('p')}),
 knn AS (SELECT qid, nid FROM r WHERE rank <= {_MKNN_K}),
 mutual AS (SELECT a.qid AS src, a.nid AS dst
            FROM knn a JOIN knn b ON a.qid = b.nid AND a.nid = b.qid),
-reach(src, dst) AS (
-    SELECT src, src FROM mutual
-    UNION
-    SELECT r2.src, m.dst FROM reach r2 JOIN mutual m ON r2.dst = m.src),
+{_reach_sql("mutual", r="r2")},
 lab AS (SELECT src AS vec_id, min(dst) AS cluster_id FROM reach GROUP BY src)
 SELECT e.vec_id,
        coalesce(l.cluster_id, e.vec_id) AS cluster_id,

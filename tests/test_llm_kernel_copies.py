@@ -5,7 +5,9 @@ only in ``dedup.array_shingles``, text.py builds no n-gram as a
 parse-or-quarantine loop, and the per-seed LSH edge union is built only by
 ``similarity.lsh_edges``. Under plans/, each similarity-search building
 block of the catalog (oracle SQL fragment or Spark helper) has one copy in
-``catalog_similarity.py``."""
+``catalog_similarity.py``, and each dedup building block one copy in
+``catalog_dedup.py``; the dedup operators take no MinHash, threshold or
+width parameter that the catalog would have to repeat."""
 
 from __future__ import annotations
 
@@ -250,3 +252,87 @@ def test_power_iteration_step_exists_once():
         for _ in re.findall(r"sum\(s\S*\.s \* ", text)
     ]
     assert sql_steps == [(SIM, "_pi_sql")], sql_steps
+
+
+DEDUP = "plans/catalog_dedup.py"
+
+
+def test_minhash_signature_and_band_ctes_defined_once():
+    """The DuckDB MinHash signature (the seeded (a*x + b) mod 2^31-1
+    family over the shingle hashes), the ``sig`` and ``bands`` CTEs and
+    the all-pairs band self-join are written once each; every MinHash
+    oracle composes them."""
+    assert _sql_sites(r"coalesce\(list_min\(list_transform\(h, x ->") == {
+        (DEDUP, "_SIG_SELECT")
+    }
+    assert _sql_sites(r"\bsig AS \(") == {(DEDUP, "_SIG_CTES")}
+    assert _sql_sites(r"\bbands AS \(") == {(DEDUP, "_lsh_ctes")}
+    assert _sql_sites(r"a\.band_key = b\.band_key AND a\.doc_id < b\.doc_id") == {
+        (DEDUP, "_BAND_PAIRS_SQL")
+    }
+
+
+def test_jaccard_verify_and_closure_defined_once():
+    """The exact-Jaccard verify join over candidate pairs and the
+    recursive ``reach`` closure are written once each; the dedup
+    pipelines, ``llm_dup_clusters`` and ``llm_semantic_clusters`` take
+    them from catalog_dedup."""
+    assert _sql_sites(r"list_intersect\(sa\.shd, sb\.shd\)") == {(DEDUP, "_VERIFY_JOIN")}
+    assert _sql_sites(r"\breach\(src, dst\) AS") == {(DEDUP, "_reach_sql")}
+
+
+def test_shingle_sql_and_overlap_defined_once():
+    """The distinct word-3-gram shingle CTE, the word n-gram at index i
+    and the exploded-shingle overlap (``sizes``/``pairs``) are written
+    once each."""
+    assert _sql_sites(r"t\[i\] \|\| ' ' \|\| t\[i\+1\]") == {(DEDUP, "_SHINGLES_CTE")}
+    assert _sql_sites(r"array_to_string\([^()]*\[i:i\+") == {(DEDUP, "_gram_sql")}
+    assert _sql_sites(r"count\(\*\) AS inter\b") == {(DEDUP, "_overlap_sql")}
+
+
+def test_whitespace_fingerprint_defined_once():
+    """The ``\\s+``-collapsing md5 fingerprint is one oracle fragment
+    (``_NORM_FP_SQL``); no catalog Spark body rebuilds it, they call
+    ``text._normalized_md5``."""
+    assert _sql_sites(r"regexp_replace\(lower\(text\), '\\s\+'") == {(DEDUP, "_NORM_FP_SQL")}
+    spark_sites = {
+        (path, _scope(stmt))
+        for path, tree in _modules("plans/*.py")
+        for stmt in tree.body
+        for n in ast.walk(stmt)
+        if _call_name(n) == "regexp_replace"
+        and any(_text(a) == r"\s+" for a in n.args)
+    }
+    assert not spark_sites, sorted(spark_sites)
+
+
+def test_keeper_mapping_written_once():
+    """Mapping every doc through its representative's cluster label
+    (``coalesce(_cl, rep)``) and marking the keeper is ``_keepers``'s
+    job; the three pipelines and the flat fixture call it."""
+    sites = [
+        (path, _scope(stmt))
+        for path, tree in _modules("plans/catalog_dedup.py")
+        for stmt in tree.body
+        for n in ast.walk(stmt)
+        if _call_name(n) == "coalesce" and n.args
+        and _call_name(n.args[0]) == "col" and _text(n.args[0].args[0]) == "_cl"
+    ]
+    assert sites == [(DEDUP, "_keepers")], sites
+
+
+def test_dedup_operators_take_no_fixed_setting():
+    """MinHash K, bands and seed, the Jaccard and containment thresholds,
+    the SimHash width and the scrubbed span length are constants of
+    operators/llm/dedup.py: no public function takes them, so the
+    catalog's oracles and operators cannot disagree on them."""
+    (_, tree), = _modules("operators/llm/dedup.py")
+    fixed = {"num_hashes", "bands", "seed", "threshold", "bits", "span_w"}
+    offenders = [
+        (fn.name, a.arg)
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef) and not fn.name.startswith("_")
+        for a in fn.args.args + fn.args.kwonlyargs
+        if a.arg in fixed
+    ]
+    assert not offenders, offenders

@@ -32,7 +32,7 @@ def plan_of(spark, sf_dir, name: str) -> str:
 def test_minhash_verify_covers_exactly_the_candidate_pairs(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     cands = dedup.minhash_candidate_pairs(docs).collect()
-    verified = dedup.minhash_verified_pairs(docs, threshold=0.8).collect()
+    verified = dedup.minhash_verified_pairs(docs).collect()
     assert {(r.doc_a, r.doc_b) for r in cands} == {
         (r.doc_a, r.doc_b) for r in verified
     }
@@ -350,7 +350,7 @@ def test_flat_fixture_matches_composed_pipeline(spark, sf_dir):
     composed form agree row-for-row, because verbatim copies always
     share signatures and the per-doc cap ranks by the same doc_b order
     either way on this corpus."""
-    from helium_arango_etl_lite_spark.plans.catalog_round5 import (
+    from helium_arango_etl_lite_spark.plans.catalog_dedup import (
         flat_dedup_pipeline,
     )
 

@@ -168,32 +168,6 @@ def test_vocab_growth_is_monotone_and_totals_to_distinct_shingles(spark, sf_dir)
     assert cums[-1] == n_distinct
 
 
-def test_split_leakage_counts_are_consistent(spark, sf_dir):
-    """Every leaked group spans >= 2 splits, so n_docs_leaked >= 2 *
-    n_groups per row; and total leaked docs can never exceed the number
-    of docs in signature-duplicate groups."""
-    import pyspark.sql.functions as F
-
-    from helium_arango_etl_lite_spark.operators.llm.dedup import (
-        minhash_signature_df,
-    )
-
-    rows = QUERIES["llm_split_leakage_check"].spark_fn(spark, sf_dir).collect()
-    assert rows, "fixture should contain signature-level leakage"
-    for r in rows:
-        assert len(r.splits_key.split(",")) >= 2
-        assert r.n_docs_leaked >= 2 * r.n_groups
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    sig = minhash_signature_df(docs)
-    fp = F.concat_ws(":", *[F.col(f"sig_{i}") for i in range(6)])
-    dup_docs = (
-        sig.select(fp.alias("fp"))
-        .groupBy("fp").count().filter("count > 1")
-        .agg(F.sum("count")).collect()[0][0]
-    )
-    assert sum(r.n_docs_leaked for r in rows) <= dup_docs
-
-
 def test_power_iteration_2_components_are_consistent(spark, sf_dir):
     """Component 1 must equal the single-direction entry exactly; both
     components unit-norm; near-orthogonal after deflation (exact
@@ -219,7 +193,7 @@ def test_ibf_bits_formula_matches_duckdb_bin_length():
     divergence silently desynchronizes every hash position."""
     import duckdb
 
-    from helium_arango_etl_lite_spark.plans.catalog_round7 import _ibf_bits_py
+    from helium_arango_etl_lite_spark.plans.catalog_dedup import _ibf_bits_py
 
     for n in [0, 1, 2, 3, 400, 511, 512, 513, 4000, 5000, 400_000]:
         duck = duckdb.sql(
@@ -228,16 +202,3 @@ def test_ibf_bits_formula_matches_duckdb_bin_length():
         assert _ibf_bits_py(n) == duck, n
 
 
-def test_incremental_bloom_invariants(spark, sf_dir):
-    """No false negatives (every true dup bloom-passes), counts add up,
-    and the join-shear is real (some docs skip the verify join)."""
-    r = (
-        QUERIES["llm_incremental_dedup_bloom"]
-        .spark_fn(spark, sf_dir)
-        .collect()[0]
-    )
-    assert r.n_pass + r.n_definitely_new == r.n_new
-    assert r.n_pass >= r.n_true_dup          # no false negatives
-    assert r.n_false_pos == r.n_pass - r.n_true_dup
-    assert r.n_definitely_new > 0            # the shear pays for itself
-    assert r.n_true_dup > 0                  # signature key finds real dups

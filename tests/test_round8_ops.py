@@ -272,7 +272,7 @@ def test_span_scrub_masks_duplicate_copy_not_original(spark):
     df = spark.createDataFrame(
         [(1, base), (2, base), (3, other)], "doc_id long, text string"
     )
-    out = {r["doc_id"]: r for r in repeated_span_scrub(df, span_w=5).collect()}
+    out = {r["doc_id"]: r for r in repeated_span_scrub(df).collect()}
     assert out[1]["n_masked"] == 0
     assert out[1]["clean_md5"] == hashlib.md5(base.encode()).hexdigest()
     assert out[2]["n_masked"] == 10 and out[2]["masked_frac"] == 1.0
@@ -294,7 +294,7 @@ def test_span_scrub_partial_overlap_merges_coverage(spark):
     # tokens 1-5 and 7-11 are the same 5-gram; positions 7..11 masked
     txt = "a b c d e X a b c d e"
     df = spark.createDataFrame([(1, txt)], "doc_id long, text string")
-    row = repeated_span_scrub(df, span_w=5).collect()[0]
+    row = repeated_span_scrub(df).collect()[0]
     assert row["n_tokens"] == 11
     assert row["n_masked"] == 5
     assert row["clean_md5"] == hashlib.md5(b"a b c d e X").hexdigest()
@@ -315,10 +315,10 @@ def test_containment_detects_quote_that_jaccard_misses(spark):
         [(1, short), (2, filler + " " + short + " " + filler)],
         "doc_id long, text string",
     )
-    cont = containment_pairs(df, threshold=0.9).collect()
+    cont = containment_pairs(df).collect()
     assert [(r["doc_a"], r["doc_b"]) for r in cont] == [(1, 2)]
     assert cont[0]["containment"] == 1.0
-    assert ngram_jaccard_pairs(df, threshold=0.8).collect() == []
+    assert ngram_jaccard_pairs(df).collect() == []
 
 
 def test_interval_overlap_plan_has_no_cartesian(spark, sf_dir):

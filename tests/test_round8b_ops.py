@@ -1,6 +1,5 @@
 """Tests for the round-8 late operators (plans/catalog_round8b.py):
-MAD outliers, edit-distance verify, logistic-regression
-training."""
+MAD outliers and logistic-regression training."""
 from __future__ import annotations
 
 import io
@@ -64,49 +63,6 @@ def test_mad_plan_single_shuffle_no_joins(spark, sf_dir):
     assert "Join" not in plan, plan
     hash_ex = re.findall(r"hashpartitioning\(user_id", plan)
     assert len(hash_ex) == 1, plan
-
-
-# ---------------------------------------------------------------------------
-# llm_dedup_edit_verify
-# ---------------------------------------------------------------------------
-
-def _lev(a: str, b: str) -> int:
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(min(prev[j] + 1, cur[-1] + 1,
-                           prev[j - 1] + (ca != cb)))
-        prev = cur
-    return prev[-1]
-
-
-def test_edit_verify_banded_equals_textbook(spark, sf_dir):
-    """Spark's banded levenshtein(a, b, cap) must agree with the full
-    textbook DP on every candidate pair: the distance when <= cap, and
-    exactly -1 when the true distance exceeds the cap."""
-    out = QUERIES["llm_dedup_edit_verify"].spark_fn(spark, sf_dir)
-    rows = out.collect()
-    assert rows, "LSH produced no candidate pairs on the test corpus"
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
-    )
-    texts = dict(con.execute("SELECT doc_id, text FROM documents").fetchall())
-    for r in rows:
-        a, b = texts[r["doc_a"]], texts[r["doc_b"]]
-        cap = max(len(a), len(b)) * 2 // 10
-        true = _lev(a, b)
-        if true <= cap:
-            assert r["lev_capped"] == true and r["is_dup"]
-        else:
-            assert r["lev_capped"] == -1 and not r["is_dup"]
-
-
-def test_edit_verify_no_cartesian(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "llm_dedup_edit_verify")
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
 # ---------------------------------------------------------------------------

@@ -358,39 +358,6 @@ def test_webdataset_fetch_is_jvm_only_read_path(spark, sf_dir):
     assert "md5" in plan  # the JVM read path
 
 
-# ---------------------------------------------------------------------------
-# llm_curation_end_to_end
-# ---------------------------------------------------------------------------
-
-def test_curation_e2e_blob_size_equals_arithmetic(spark, sf_dir):
-    out = QUERIES["llm_curation_end_to_end"].spark_fn(spark, sf_dir).toPandas()
-    # every shard's measured blob size is the 10240-record prediction
-    assert (out["shard_bytes"] % 10240 == 0).all()
-    assert (out["payload_bytes"] < out["shard_bytes"]).all()
-    # all 8 rendezvous shards receive members on the driver data
-    assert sorted(out["shard"]) == list(range(8))
-
-
-def test_curation_e2e_members_match_manual_chain(spark, sf_dir):
-    import duckdb
-
-    out = (
-        QUERIES["llm_curation_end_to_end"].spark_fn(spark, sf_dir)
-        .toPandas()
-        .set_index("shard")
-    )
-    con = duckdb.connect()
-    pdf = con.execute(
-        f"SELECT doc_id, text FROM '{sf_dir}/documents.parquet'"
-    ).df()
-    pdf = pdf[pdf["text"].str.split(" ").str.len() >= 25]
-    keep = pdf.loc[pdf.groupby(pdf["text"].map(hash))["doc_id"].idxmin()]
-    # keeper count must equal total members across shards (the hash
-    # grouping here is python-hash exact-text, same equivalence classes
-    # as md5)
-    assert out["n_members"].sum() == len(keep)
-
-
 def test_shard_quarantine_reasons_match_corruption_classes(spark, sf_dir):
     import hashlib as _h
 
